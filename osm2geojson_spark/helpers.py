@@ -13,6 +13,7 @@ import codecs
 import os
 
 from .sources.overpass import (  # noqa: F401  (parity re-exports)
+    OVERPASS,
     OVERPASS_URL,
     OverpassHTTPError,
     overpass_call,

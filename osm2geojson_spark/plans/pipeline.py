@@ -16,6 +16,12 @@ reference's in-place ``ref["used"] = id`` mutation (main.py:293,318-320,529,609)
 
 The dedup filter itself is a left **anti join on id only** (not (type, id)) —
 faithfully reproducing the reference's cross-type-collision behavior.
+
+The distributed sink (``write_geojson_lines``) persists the serialized
+lines before its ``repartitionByRange``: the range partitioner's sample job,
+its skew re-sample job and the shuffle map stage each evaluate the child,
+and without the cache each would re-run the relation kernel, the element
+UDFs and the serializer.
 """
 
 from __future__ import annotations
@@ -78,6 +84,27 @@ def build_features(
     for document-sized conversions), "cache" (scale path: keeps lineage for
     the optimizer, avoids recompute across the three consumers), or None.
     """
+    features, failures, _, _ = _build_plan(
+        frames,
+        filter_used_refs=filter_used_refs,
+        area_keys=area_keys,
+        polygon_features=polygon_features,
+        materialize=materialize,
+    )
+    return features, failures
+
+
+def _build_plan(
+    frames: ElementFrames,
+    *,
+    filter_used_refs: bool,
+    area_keys: dict | None,
+    polygon_features: list | None,
+    materialize: str | None,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """``build_features``' plan plus the resolved ways and the flagged
+    relations it was built from: (features, failures, ways, rels_flagged).
+    Strict mode derives its member violations from the same two frames."""
     ways = resolve_ways(frames, area_keys, polygon_features)
     # coords_arr duplicates the packed binary `coords` — don't materialize it
     ways = ways.drop("coords_arr")
@@ -194,7 +221,7 @@ def build_features(
         )
     )
 
-    return features, failures
+    return features, failures, ways, rels_flagged
 
 
 def used_ref_ids(
@@ -287,19 +314,29 @@ def write_geojson_lines(
     exact input-order feature sequence the driver-side sink produces.
     ``num_files`` bounds output file count (defaults to Spark's chosen
     range partitioning); a planet-scale conversion writes through here
-    with no driver collect."""
-    lines = feature_json_lines(features)
-    if num_files:
-        lines = lines.repartitionByRange(num_files, "doc_id", "seq")
-    else:
-        lines = lines.repartitionByRange("doc_id", "seq")
-    (
-        lines.sortWithinPartitions("doc_id", "seq")
-        .select("doc_id", "line")
-        .write.mode(mode)
-        .partitionBy("doc_id")
-        .text(path)
-    )
+    with no driver collect.
+
+    The serialized lines are persisted before the range exchange: its
+    partitioner samples the child in one job, re-samples skewed partitions
+    in another, and the shuffle map stage reads it a third time, so an
+    unpersisted child would run the relation kernel, the element UDFs and
+    the serializer three times. The cache is released in ``finally``, also
+    when the write fails."""
+    lines = feature_json_lines(features).persist()
+    try:
+        if num_files:
+            ranged = lines.repartitionByRange(num_files, "doc_id", "seq")
+        else:
+            ranged = lines.repartitionByRange("doc_id", "seq")
+        (
+            ranged.sortWithinPartitions("doc_id", "seq")
+            .select("doc_id", "line")
+            .write.mode(mode)
+            .partitionBy("doc_id")
+            .text(path)
+        )
+    finally:
+        lines.unpersist()
 
 
 def read_geojson_lines(spark: SparkSession, path: str) -> dict[str, list[dict]]:
@@ -405,21 +442,14 @@ def convert_elements(
 ) -> list[dict]:
     """elements -> GeoJSON feature dicts (input order)."""
     frames = normalize_elements(spark, elements)
-    features, failures = build_features(
-        spark,
+    features, failures, ways, rels_flagged = _build_plan(
         frames,
         filter_used_refs=filter_used_refs,
         area_keys=area_keys,
         polygon_features=polygon_features,
+        materialize="localCheckpoint",
     )
     if raise_on_failure:
-        ways = resolve_ways(frames, area_keys, polygon_features)
-        rels_flagged = frames.relations.withColumn(
-            "is_poly",
-            polygon_flag_column(
-                F.col("tags"), F.lit(None).cast("boolean"), area_keys, polygon_features
-            ),
-        )
         viol = strict_violations(frames, ways, rels_flagged).select("seq", "id", "reason")
         bad = (
             failures.filter(F.col("reason") != "unsupported_type")

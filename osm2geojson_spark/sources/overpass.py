@@ -23,6 +23,7 @@ from time import sleep
 from typing import Any, Callable, TypeVar
 
 OVERPASS_URL = "https://overpass-api.de/api/interpreter/"
+OVERPASS = OVERPASS_URL  # the reference helpers.py name
 
 _F = TypeVar("_F", bound=Callable[..., Any])
 

@@ -43,6 +43,14 @@ def test_overpass_call_retries_then_succeeds(monkeypatch):
     )
 
 
+def test_overpass_parity_alias():
+    """The reference names the endpoint ``OVERPASS`` in its helpers."""
+    from osm2geojson_spark import helpers
+
+    assert OV.OVERPASS == OV.OVERPASS_URL
+    assert helpers.OVERPASS == OV.OVERPASS_URL
+
+
 def test_overpass_call_exhausts_retries(monkeypatch):
     slept = _patch_sleep(monkeypatch)
     t = FlakyTransport(fail_n=100)

@@ -39,6 +39,21 @@ def _corpus_features(spark):
     return features
 
 
+def _written_lines(out):
+    """{doc_id: [raw line, ...]} with each doc's part files in filename order."""
+    got = {}
+    for doc_dir in sorted(os.listdir(out)):
+        if not doc_dir.startswith("doc_id="):
+            continue
+        lines = []
+        for part in sorted(os.listdir(os.path.join(out, doc_dir))):
+            if part.startswith("part-"):
+                with open(os.path.join(out, doc_dir, part), encoding="utf-8") as fh:
+                    lines += [ln for ln in fh.read().splitlines() if ln]
+        got[doc_dir.split("=", 1)[1]] = lines
+    return got
+
+
 def test_write_geojson_lines_matches_driver_sink(spark, tmp_path):
     """Multi-document corpus written DISTRIBUTED == the driver-side
     collect_features_by_doc, byte-for-byte per feature (the JSON strings
@@ -53,23 +68,10 @@ def test_write_geojson_lines_matches_driver_sink(spark, tmp_path):
     for doc_id in want:
         assert got[doc_id] == want[doc_id], doc_id
     # byte-level: each line is the compact dump of the corresponding dict
-    for doc_dir in sorted(os.listdir(out)):
-        if not doc_dir.startswith("doc_id="):
-            continue
-        doc_id = doc_dir.split("=", 1)[1]
-        lines = []
-        for part in sorted(os.listdir(os.path.join(out, doc_dir))):
-            if part.startswith("part-"):
-                lines += [
-                    ln
-                    for ln in open(
-                        os.path.join(out, doc_dir, part), encoding="utf-8"
-                    ).read().splitlines()
-                    if ln
-                ]
-        assert lines == [
-            json.dumps(f, separators=(",", ":")) for f in want[doc_id]
-        ], doc_id
+    assert _written_lines(out) == {
+        doc_id: [json.dumps(f, separators=(",", ":")) for f in feats]
+        for doc_id, feats in want.items()
+    }
     features.unpersist()
 
 
@@ -103,3 +105,45 @@ def test_feature_json_lines_schema(spark):
     row = df.limit(1).collect()[0]
     feat = json.loads(row["line"])
     assert feat["type"] == "Feature" and "geometry" in feat and "properties" in feat
+
+
+def test_write_geojson_lines_partition_invariant(spark, tmp_path):
+    """The range-partitioned sink writes the same bytes at 7 shuffle
+    partitions with AQE on, with Spark's range count and with num_files=8,
+    as the driver-side sink at the suite's single partition."""
+    want = {
+        doc_id: [json.dumps(f, separators=(",", ":")) for f in feats]
+        for doc_id, feats in collect_features_by_doc(_corpus_features(spark)).items()
+    }
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        features = _corpus_features(spark).persist()
+        for num_files in (None, 8):
+            out = str(tmp_path / f"sink-{num_files}")
+            write_geojson_lines(features, out, num_files=num_files)
+            assert _written_lines(out) == want, num_files
+        features.unpersist()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_write_geojson_lines_releases_its_cache(spark, tmp_path):
+    """The sink's persisted lines are released after a successful write and
+    after a write that fails (mode="error" on an existing path)."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    features = _corpus_features(spark)
+    out = str(tmp_path / "once")
+    before = persistent().size()
+    write_geojson_lines(features, out)
+    assert persistent().size() == before
+    assert cache.isEmpty()
+    with pytest.raises(Exception):
+        write_geojson_lines(features, out)
+    assert persistent().size() == before
+    assert cache.isEmpty()
