@@ -6173,34 +6173,6 @@ _DENSE_GRAPH_SQL = (
 )
 
 
-def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X123 (analytics.peak_concurrency): max concurrent activity
-    intervals per user (each event claims [epoch_s, epoch_s + 600)) via
-    the +1/-1 sweep line — interval_union's sibling (height, not
-    coverage). Exact integers, earliest-peak tie-break; one explode +
-    one group window + one struct-max rollup."""
-    from osm2geojson_spark.operators import analytics as A
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_timestamp("ts").alias("s"),
-        (F.unix_timestamp("ts") + F.lit(600)).alias("e"),
-    )
-    return A.peak_concurrency(ev, "user_id", "s", "e")
-
-
-def _peak_concurrency_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.peak_concurrency_sql(
-        "SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS s,"
-        " CAST(floor(epoch(ts)) AS BIGINT) + 600 AS e FROM events",
-        "user_id",
-        "s",
-        "e",
-    )
-
-
 def q_resize_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X122 (multimodal.resize_bilinear): exact 8.8 fixed-point bilinear
     resize of 250 mixed rawz/png images (8/16/24 px -> 12 px, so both
@@ -6271,9 +6243,9 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cusum_stream_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
+    from osm2geojson_spark.streaming.ops import cusum_alarms_sql
 
-    return A.cusum_alarms_sql(
+    return cusum_alarms_sql(
         "SELECT user_id, event_id,"
         " CAST(round(value * 100) AS BIGINT) AS v_cents FROM events",
         "user_id",
@@ -6305,153 +6277,6 @@ def _profile_sql() -> str:
         "SELECT * FROM orders",
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"],
         tau=500_000,
-    )
-
-
-_TWAP_END = 1_709_251_200  # 2024-03-01 UTC, past every event
-
-
-def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X117 (analytics.twap): time-weighted average event value per user
-    (piecewise-constant hold to the next observation, clamped at a fixed
-    horizon) — the irregular-sampling average a plain AVG gets wrong.
-    One per-user lead() window + a combinable integer rollup; one float
-    divide."""
-    from osm2geojson_spark.operators import analytics as A
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_timestamp("ts").alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("v_cents"),
-    )
-    return A.twap(ev, "user_id", "t", "v_cents", _TWAP_END)
-
-
-def _twap_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.twap_sql(
-        "SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t,"
-        " CAST(round(value * 100) AS BIGINT) AS v_cents FROM events",
-        "user_id",
-        "t",
-        "v_cents",
-        _TWAP_END,
-    )
-
-
-def q_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X118 (analytics.ohlc_bars): daily OHLC candles of event values per
-    user — open/close via struct min/max over ((ts, event_id), value),
-    so first/last ride the SAME combinable groupBy as high/low (no
-    window, no second shuffle) and duplicate timestamps resolve
-    deterministically."""
-    from osm2geojson_spark.operators import analytics as A
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.unix_timestamp("ts").alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("v_cents"),
-    )
-    return A.ohlc_bars(ev, "user_id", "t", "v_cents", 86_400, "event_id")
-
-
-def _ohlc_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.ohlc_bars_sql(
-        "SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS t,"
-        " CAST(round(value * 100) AS BIGINT) AS v_cents FROM events",
-        "user_id",
-        "t",
-        "v_cents",
-        86_400,
-        "event_id",
-    )
-
-
-def q_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X119 (analytics.basket_pairs): market-basket association pairs
-    over order baskets (items = part keys folded mod 50 so
-    co-occurrence is dense enough to rank) — exact pair support + lift.
-    The self-join is BASKET-keyed: candidate volume is bounded by the
-    largest basket, never corpus-quadratic."""
-    from osm2geojson_spark.operators import analytics as A
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("bid"),
-        (F.col("l_partkey") % 50).alias("item"),
-    )
-    return A.basket_pairs(li, "bid", "item", min_support=3)
-
-
-def _basket_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.basket_pairs_sql(
-        "SELECT l_orderkey AS bid, l_partkey % 50 AS item FROM lineitem",
-        "bid",
-        "item",
-        min_support=3,
-    )
-
-
-def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X114 (analytics.cusum_alarms): Page's one-sided CUSUM drift
-    detector per user over event values quantized to cents — the
-    pipeline-quality / sensor-drift monitor. Running-min formulation =
-    the textbook max(0, ...) recursion (pinned by test) as two pure
-    per-series windows; output is alarm rows only."""
-    from osm2geojson_spark.operators import analytics as A
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("v_cents"),
-    )
-    return A.cusum_alarms(ev, "user_id", "event_id", "v_cents", 5500, 20_000)
-
-
-def _cusum_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.cusum_alarms_sql(
-        "SELECT user_id, event_id,"
-        " CAST(round(value * 100) AS BIGINT) AS v_cents FROM events",
-        "user_id",
-        "event_id",
-        "v_cents",
-        5500,
-        20_000,
-    )
-
-
-def q_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X115 (analytics.interval_union_length): union-coverage of
-    overlapping per-user activity intervals (each event claims
-    [epoch_s, epoch_s + 600)) — exact covered seconds + island count
-    without double-counting overlaps. Gaps-and-islands in pure integer
-    windows, all user-partitioned."""
-    from osm2geojson_spark.operators import analytics as A
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_timestamp("ts").alias("s"),
-        (F.unix_timestamp("ts") + F.lit(600)).alias("e"),
-    )
-    return A.interval_union_length(ev, "user_id", "s", "e")
-
-
-def _interval_union_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.interval_union_length_sql(
-        "SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS s,"
-        " CAST(floor(epoch(ts)) AS BIGINT) + 600 AS e FROM events",
-        "user_id",
-        "s",
-        "e",
     )
 
 
@@ -6495,22 +6320,6 @@ def _gram_matrix_sql() -> str:
     from osm2geojson_spark.operators.similarity import gram_matrix_sql
 
     return gram_matrix_sql("SELECT vec_id, embedding FROM embeddings")
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X113 (analytics.cohort_retention): ISO-week cohort retention over
-    the events table — users cohorted by first-event week, distinct-user
-    activity per later week. Two user-keyed combinable rollups + one
-    broadcast of cohort sizes; no window anywhere."""
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.cohort_retention(_t(spark, sf_dir, "events"))
-
-
-def _cohort_retention_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.cohort_retention_sql("SELECT user_id, ts FROM events")
 
 
 def q_cms_join_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6577,28 +6386,6 @@ def _fuzzy_join_sql() -> str:
         " FROM part WHERE p_partkey % 3 = 0"
     )
     return DD.lev1_join_sql(uni, "id", "s")
-
-
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X111 (analytics.funnel_depths): windowed funnel view -> click ->
-    purchase within 1800 s (ClickHouse windowFunnel semantics, greedy
-    earliest-next chain per anchor — provably the max depth). One
-    per-user window pass + chain joins, all user-keyed; no global
-    window, no UDF."""
-    from osm2geojson_spark.operators import analytics as A
-
-    ev = _t(spark, sf_dir, "events")
-    return A.funnel_depths(ev, ["view", "click", "purchase"], 1800)
-
-
-def _funnel_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.funnel_depths_sql(
-        "SELECT user_id, ts, event_id, event_type FROM events",
-        ["view", "click", "purchase"],
-        1800,
-    )
 
 
 def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6831,31 +6618,6 @@ SELECT printf('img%012d', spine.i) AS image_id,
        CAST(coalesce(agg.n_px, 0) AS BIGINT) AS n_px
 FROM spine LEFT JOIN agg ON agg.i = spine.i AND agg.b = spine.bin
 """
-
-
-def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X101 (analytics.skyline2d): the 2-D Pareto frontier of parts under
-    (minimize retail price, minimize size) — the multi-criteria shortlist
-    operator. Phase 1 broadcasts the skyline of a deterministic hash-
-    sample and anti-joins everything it dominates away; phase 2 runs the
-    exact sorted sweep on the thin survivor band. Oracle: the OTHER
-    classic formulation (NOT EXISTS dominance) — independent algorithms
-    agreeing value-for-value."""
-    from osm2geojson_spark.operators import analytics as A
-
-    part = _t(spark, sf_dir, "part")
-    return A.skyline2d(part, "p_retailprice", "p_size", "p_partkey")
-
-
-def _skyline_sql() -> str:
-    from osm2geojson_spark.operators import analytics as A
-
-    return A.skyline2d_sql(
-        "SELECT p_retailprice, p_size, p_partkey FROM part",
-        "p_retailprice",
-        "p_size",
-        "p_partkey",
-    )
 
 
 def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7863,38 +7625,6 @@ FROM d
 """
 
 
-def _scored_rows():
-    """Shared scored-corpus fixture: fixed-point score in [0, 1e6) from
-    the congruential hash of the order key; label drawn so P(label=1)
-    rises with the score (a second independent hash as the 'noise')."""
-    return """
-  SELECT o_orderkey AS rid,
-         ((o_orderkey % 1000003) * 2654435761 + 12345) % 1000003 % 1000000
-           AS score,
-         CASE WHEN ((o_orderkey % 999983) * 22801763489 + 7) % 999983 % 1000000
-                   < ((o_orderkey % 1000003) * 2654435761 + 12345) % 1000003 % 1000000
-              THEN 1 ELSE 0 END AS label
-  FROM orders
-"""
-
-
-def _scored_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = F.col("o_orderkey")
-    score = F.pmod(
-        F.pmod(k, F.lit(1000003)) * F.lit(2654435761) + F.lit(12345),
-        F.lit(1000003),
-    ) % F.lit(1000000)
-    noise = F.pmod(
-        F.pmod(k, F.lit(999983)) * F.lit(22801763489) + F.lit(7),
-        F.lit(999983),
-    ) % F.lit(1000000)
-    return _t(spark, sf_dir, "orders").select(
-        k.alias("rid"),
-        score.cast("long").alias("score"),
-        F.when(noise < score, F.lit(1)).otherwise(F.lit(0)).cast("long").alias("label"),
-    )
-
-
 def q_hist_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HISTOGRAM MATCHING (multimodal.histogram_match): remap each
     source tile's distribution onto an independent reference tile with
@@ -7968,39 +7698,6 @@ FROM lut GROUP BY pid
 """
 
 
-def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT PER-GROUP QUANTILES (analytics.group_quantiles): p10/p50/
-    p95/max of extended price per order-priority group — type-1 (lower)
-    quantiles so every result is an element of the data, hash-exact
-    across engines (no sketch, no interpolation). The oracle replays the
-    ceil(q*n) rank rule."""
-    from osm2geojson_spark.operators.analytics import group_quantiles
-
-    rows = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("g"),
-        F.floor(F.col("o_totalprice")).cast("long").alias("v"),
-    )
-    return group_quantiles(rows, [0.1, 0.5, 0.95, 1.0])
-
-
-_GROUP_QUANTILES_SQL = """
-WITH rows_t AS (
-  SELECT o_orderpriority AS g, CAST(floor(o_totalprice) AS BIGINT) AS v
-  FROM orders
-), ranked AS (
-  SELECT g, v,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY v ASC) AS BIGINT) AS r,
-         CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n
-  FROM rows_t
-), spine AS (
-  SELECT unnest([0.1, 0.5, 0.95, 1.0]) AS q
-)
-SELECT g, CAST(round(q * 100) AS BIGINT) AS q_pct, r AS rank, n, v AS value
-FROM ranked, spine
-WHERE r = greatest(1, CAST(ceil(q * CAST(n AS DOUBLE)) AS BIGINT))
-"""
-
-
 def q_min_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIN VERTICAL SEAM (multimodal.min_seam): seam-carving DP over the
     8x8 tiles' interior energy grid — all-integer energies and dp, so
@@ -8013,63 +7710,6 @@ def q_min_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MIN_SEAM_SQL = "\nWITH img AS (\n  SELECT p_partkey AS i FROM part WHERE p_partkey < 360 AND p_partkey % 3 = 0\n), g AS (\n  SELECT i, xs.x AS x, ys.y AS y\n  FROM img, (SELECT unnest(range(1, 7)) AS x) xs,\n       (SELECT unnest(range(1, 7)) AS y) ys\n), en AS (\n  SELECT i, x - 1 AS x, y - 1 AS y, CAST((abs((((x + 1) * 3 + (y + 0) * 7 + i * 13) % 251) - (((x + -1) * 3 + (y + 0) * 7 + i * 13) % 251)) + abs((((x + 0) * 3 + (y + 1) * 7 + i * 13) % 251) - (((x + 0) * 3 + (y + -1) * 7 + i * 13) % 251))) AS BIGINT) AS e FROM g\n), d0 AS (\n  SELECT i, x, e AS dp FROM en WHERE y = 0\n), d1 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d0 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d0 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d0 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 1\n), d2 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d1 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d1 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d1 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 2\n), d3 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d2 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d2 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d2 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 3\n), d4 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d3 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d3 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d3 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 4\n), d5 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d4 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d4 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d4 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 5\n), best AS (\n  SELECT i, dp, x,\n         row_number() OVER (PARTITION BY i ORDER BY dp ASC, x ASC) AS rn\n  FROM d5\n), et AS (\n  SELECT i, CAST(sum(e) AS BIGINT) AS energy_total FROM en GROUP BY i\n)\nSELECT printf('img%012d', best.i) AS image_id,\n       CAST(best.dp AS BIGINT) AS seam_cost,\n       CAST(best.x AS BIGINT) AS seam_end_x,\n       et.energy_total\nFROM best JOIN et ON et.i = best.i\nWHERE best.rn = 1\n"
-
-
-def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI DRIFT BINS (analytics.psi_bins): distribution drift between
-    the even-key orders snapshot (reference) and the odd-key snapshot
-    with a planted score shift (current). Laplace-smoothed shares, one
-    micro-quantized term per bin from four exact ints — the oracle
-    replays the identical float assembly."""
-    from osm2geojson_spark.operators.analytics import psi_bins
-
-    scored = _scored_df(spark, sf_dir)
-    ref = scored.filter(F.col("rid") % 2 == 0)
-    # floor-div on BOTH sides: Spark cast(double->long) truncates while
-    # DuckDB CAST rounds — the known oracle-parity trap
-    cur = scored.filter(F.col("rid") % 2 == 1).select(
-        "rid",
-        (F.floor(F.col("score") * 9 / F.lit(10)).cast("long") + 50_000).alias(
-            "score"
-        ),
-    )
-    return psi_bins(ref, cur, n_bins=10)
-
-
-def _psi_drift_sql() -> str:
-    return f"""
-WITH scored AS ({_scored_rows()}
-), ref AS (
-  SELECT least(9, CAST(floor(CAST(score AS DOUBLE) / 1000000.0 * 10.0)
-                       AS BIGINT)) AS bin
-  FROM scored WHERE rid % 2 = 0
-), cur AS (
-  SELECT least(9, CAST(floor(CAST((score * 9) // 10
-                                  + 50000 AS DOUBLE) / 1000000.0 * 10.0)
-                       AS BIGINT)) AS bin
-  FROM scored WHERE rid % 2 = 1
-), spine AS (
-  SELECT unnest(range(0, 10)) AS bin
-), j AS (
-  SELECT s.bin,
-         CAST(COALESCE(r.n, 0) AS BIGINT) AS n_ref,
-         CAST(COALESCE(c.n, 0) AS BIGINT) AS n_cur
-  FROM spine s
-  LEFT JOIN (SELECT bin, count(*) AS n FROM ref GROUP BY bin) r ON r.bin = s.bin
-  LEFT JOIN (SELECT bin, count(*) AS n FROM cur GROUP BY bin) c ON c.bin = s.bin
-), t AS (
-  SELECT CAST(sum(n_ref) AS BIGINT) AS tr, CAST(sum(n_cur) AS BIGINT) AS tc
-  FROM j
-)
-SELECT j.bin, j.n_ref, j.n_cur,
-       CAST(round(
-         ((CAST(j.n_ref + 1 AS DOUBLE) / CAST(t.tr + 10 AS DOUBLE))
-          - (CAST(j.n_cur + 1 AS DOUBLE) / CAST(t.tc + 10 AS DOUBLE)))
-         * (ln(CAST(j.n_ref + 1 AS DOUBLE) / CAST(t.tr + 10 AS DOUBLE))
-            - ln(CAST(j.n_cur + 1 AS DOUBLE) / CAST(t.tc + 10 AS DOUBLE)))
-         * 1e6) AS BIGINT) AS term_micro
-FROM j, t
-"""
 
 
 def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8140,82 +7780,6 @@ SELECT domain, tokens,
        END AS alloc,
        CASE WHEN 200000 >= total THEN FALSE ELSE tokens > tau END AS capped
 FROM ranked
-"""
-
-
-def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT ROC-AUC (analytics.roc_auc): tie-aware Mann-Whitney over the
-    hash-scored orders corpus — integer rank algebra (per tied-score
-    group pos_g*(2*r_min+n_g-1)), one float division at the end. The
-    oracle replays the identical group/rank/assembly in SQL."""
-    from osm2geojson_spark.operators.analytics import roc_auc
-
-    return roc_auc(_scored_df(spark, sf_dir))
-
-
-def _roc_auc_sql() -> str:
-    return f"""
-WITH scored AS ({_scored_rows()}
-), g AS (
-  SELECT score AS s, CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(label) AS BIGINT) AS pos_g
-  FROM scored GROUP BY score
-), r AS (
-  SELECT s, n_g, pos_g,
-         CAST(COALESCE(SUM(n_g) OVER (ORDER BY s
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + 1
-           AS BIGINT) AS r_min
-  FROM g
-), a AS (
-  SELECT CAST(sum(n_g) AS BIGINT) AS n, CAST(sum(pos_g) AS BIGINT) AS n_pos,
-         CAST(sum(pos_g * (2 * r_min + n_g - 1)) AS BIGINT) AS rank2_sum
-  FROM r
-)
-SELECT n, n_pos, CAST(n - n_pos AS BIGINT) AS n_neg,
-       CAST(rank2_sum - n_pos * (n_pos + 1) AS BIGINT) AS auc_num2,
-       CASE WHEN n_pos > 0 AND n - n_pos > 0 THEN
-         round(CAST(rank2_sum - n_pos * (n_pos + 1) AS DOUBLE)
-               / (2.0 * CAST(n_pos AS DOUBLE) * CAST(n - n_pos AS DOUBLE)), 6)
-         + 0.0
-       END AS auc
-FROM a
-"""
-
-
-def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CALIBRATION BINS (analytics.calibration_bins): per-bin reliability
-    evidence of the hash-scored orders corpus (10 bins) — exact integer
-    counts/sums plus replayable conf/acc/gap. The fixture's P(label) =
-    score makes it near-perfectly calibrated: every gap_micro is small,
-    which the oracle reproduces exactly."""
-    from osm2geojson_spark.operators.analytics import calibration_bins
-
-    return calibration_bins(_scored_df(spark, sf_dir), n_bins=10)
-
-
-def _calibration_sql() -> str:
-    return f"""
-WITH scored AS ({_scored_rows()}
-), b AS (
-  SELECT least(9, CAST(floor(CAST(score AS DOUBLE) / 1000000.0 * 10.0)
-                       AS BIGINT)) AS bin,
-         score, label
-  FROM scored
-), agg AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(label) AS BIGINT) AS n_pos,
-         CAST(sum(score) AS BIGINT) AS score_sum
-  FROM b GROUP BY bin
-)
-SELECT bin, n, n_pos, score_sum,
-       round(CAST(score_sum AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000.0), 6)
-         + 0.0 AS conf,
-       round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) + 0.0 AS acc,
-       CAST(round(abs(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)
-                      - CAST(score_sum AS DOUBLE)
-                        / (CAST(n AS DOUBLE) * 1000000.0)) * 1e6) AS BIGINT)
-         AS gap_micro
-FROM agg
 """
 
 
@@ -9157,62 +8721,6 @@ _INTEGRAL_BOXES = [
 ]
 
 
-def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X171 (analytics.scd2_build): SCD type-2 dimension build over the
-    events stream — user_id's event_type as the tracked attribute, no-op
-    updates collapsed, half-open validity intervals, one is_current row
-    per user. The oracle replays the identical lag/running-sum/lead
-    pipeline (analytics.scd2_build_sql)."""
-    from osm2geojson_spark.operators.analytics import scd2_build
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("user_id"), F.col("ts"), F.col("event_type")
-    )
-    return scd2_build(
-        ev, key_col="user_id", ts_col="ts", value_col="event_type"
-    )
-
-
-def _scd2_sql() -> str:
-    from osm2geojson_spark.operators.analytics import scd2_build_sql
-
-    return scd2_build_sql(
-        "SELECT user_id, ts, event_type FROM events",
-        key_col="user_id",
-        ts_col="ts",
-        value_col="event_type",
-    )
-
-
-def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X172 (analytics.multi_touch_attribution): multi-touch conversion
-    attribution over the events stream — purchases credited to the same
-    user's preceding non-purchase touches inside a 2 h lookback, under
-    first-touch / last-touch / linear simultaneously. Exact-integer
-    micro-credit scheme (1e6 per conversion per model, linear remainder
-    to the last touch), '(direct)' channel for untouched conversions.
-    The oracle replays the identical pair/window/rollup pipeline
-    (analytics.multi_touch_attribution_sql)."""
-    from osm2geojson_spark.operators.analytics import multi_touch_attribution
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type", "event_id"
-    )
-    return multi_touch_attribution(ev, conv_type="purchase", lookback_s=7200)
-
-
-def _attribution_sql() -> str:
-    from osm2geojson_spark.operators.analytics import (
-        multi_touch_attribution_sql,
-    )
-
-    return multi_touch_attribution_sql(
-        "SELECT user_id, ts, event_type, event_id FROM events",
-        conv_type="purchase",
-        lookback_s=7200,
-    )
-
-
 def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X226 (graph.clustering_coeff): per-node local clustering
     coefficient over the dense modular graph — 2*tri/(deg*(deg-1)) as
@@ -9228,35 +8736,6 @@ def _clustering_coeff_sql() -> str:
     from osm2geojson_spark.operators import graph as G
 
     return G.clustering_coeff_sql(_DENSE_GRAPH_SQL)
-
-
-def q_emd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X225 (analytics.wasserstein_drift): per-return-flag 1-D
-    Wasserstein (earth mover's) drift of lineitem quantity against the
-    whole-table reference distribution — exact int64 step areas over
-    the union support, one pinned division. The mass-distance drift
-    gate complementing ks_drift (sup gap) and psi_drift (binned)."""
-    from osm2geojson_spark.operators.analytics import wasserstein_drift
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.col("l_quantity").cast("long").alias("v"),
-    )
-    return wasserstein_drift(
-        li, li.select("v"), value_col="v", group_col="l_returnflag"
-    )
-
-
-def _emd_drift_sql() -> str:
-    from osm2geojson_spark.operators.analytics import wasserstein_drift_sql
-
-    return wasserstein_drift_sql(
-        "SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS v"
-        " FROM lineitem",
-        "SELECT CAST(l_quantity AS BIGINT) AS v FROM lineitem",
-        value_col="v",
-        group_col="l_returnflag",
-    )
 
 
 def q_color_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9394,61 +8873,6 @@ def _anchor_assign_sql() -> str:
     )
 
 
-def q_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X221 (analytics.cross_correlation): lead/lag detection per
-    event_type — y is the x hash series shifted by exactly 3 steps, so
-    r peaks (=1 on the overlap) at lag +3. Exact int64 sums, pinned
-    sqrt-product assembly."""
-    from osm2geojson_spark.operators.analytics import cross_correlation
-
-    e = F.col("event_id")
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        e.alias("t"),
-        ((e * 7919) % 100).alias("x"),
-        F.pmod((e - 3) * 7919, F.lit(100)).alias("y"),
-    )
-    return cross_correlation(ev, max_lag=5)
-
-
-def _xcorr_sql() -> str:
-    from osm2geojson_spark.operators.analytics import cross_correlation_sql
-
-    return cross_correlation_sql(
-        "SELECT event_type AS g, event_id AS t,"
-        " (event_id * 7919) % 100 AS x,"
-        " (((event_id - 3) * 7919) % 100 + 100) % 100 AS y FROM events",
-        max_lag=5,
-    )
-
-
-def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X220 (analytics.trimmed_mean): 10%-trimmed and winsorized means
-    of hash values-with-planted-outliers per event_type — counting
-    arithmetic over tie-collapsed cells, count-selected clamps."""
-    from osm2geojson_spark.operators.analytics import trimmed_mean
-
-    e = F.col("event_id")
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.when(e % 11 == 0, (e * 104729) % 100000).otherwise(
-            (e * 7919) % 200 + 400
-        ).alias("v"),
-    )
-    return trimmed_mean(ev, trim_micro=100_000)
-
-
-def _trimmed_mean_sql() -> str:
-    from osm2geojson_spark.operators.analytics import trimmed_mean_sql
-
-    return trimmed_mean_sql(
-        "SELECT event_type AS g,"
-        " CASE WHEN event_id % 11 = 0 THEN (event_id * 104729) % 100000"
-        " ELSE (event_id * 7919) % 200 + 400 END AS v FROM events",
-        trim_micro=100_000,
-    )
-
-
 def q_squares(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X219 (graph.square_count): exact 4-cycle census of the dense
     modular graph via the diagonal co-degree identity
@@ -9500,38 +8924,6 @@ def _viterbi_sql() -> str:
     )
 
 
-def q_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X217 (analytics.conformal_flags): split conformal prediction per
-    event_type (alpha=0.1) — calibration = 80% of events, test = the
-    event_id%5==0 slice; exact integer k = ceil(0.9(n+1)) and the
-    count-selected order statistic; covered flags per test row."""
-    from osm2geojson_spark.operators.analytics import conformal_flags
-
-    e = F.col("event_id")
-    base = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        e.alias("pid"),
-        ((e * 104729) % 10000).alias("s"),
-    )
-    cal = base.filter(F.col("pid") % 5 != 0)
-    test = base.filter(F.col("pid") % 5 == 0)
-    return conformal_flags(cal, test, alpha_micro=100_000)
-
-
-def _conformal_sql() -> str:
-    from osm2geojson_spark.operators.analytics import conformal_flags_sql
-
-    base = (
-        "SELECT event_type AS g, event_id AS pid,"
-        " (event_id * 104729) % 10000 AS s FROM events"
-    )
-    return conformal_flags_sql(
-        f"SELECT * FROM ({base}) WHERE pid % 5 <> 0",
-        f"SELECT * FROM ({base}) WHERE pid % 5 = 0",
-        alpha_micro=100_000,
-    )
-
-
 def q_demosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X216 (multimodal.demosaic_stats): bilinear RGGB demosaic over
     300 mixed rawz/png mosaics — 4x fixed-point exact channels, the
@@ -9555,29 +8947,6 @@ FROM (
 )
 """
     return demosaic_stats_sql(px)
-
-
-def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X215 (analytics.benford_digits): first-digit audit of order
-    totals (cents, floor — Spark cast truncates where DuckDB rounds)
-    per order priority — length-CASE integer digit extraction, inlined
-    micro Benford masses, micro-quantized pinned chi2 terms."""
-    from osm2geojson_spark.operators.analytics import benford_digits
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("g"),
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("v"),
-    )
-    return benford_digits(o)
-
-
-def _benford_sql() -> str:
-    from osm2geojson_spark.operators.analytics import benford_digits_sql
-
-    return benford_digits_sql(
-        "SELECT o_orderpriority AS g,"
-        " CAST(floor(o_totalprice * 100) AS BIGINT) AS v FROM orders"
-    )
 
 
 def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9720,30 +9089,6 @@ FROM part WHERE p_partkey < 10
     return iou_track_sql(dets, iou_threshold=0.3)
 
 
-def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X211 (analytics.ewma_smooth): 6-lag dyadic EWMA per event_type
-    series — exact int64 weighted sums, one IEEE division, partial
-    windows renormalized (adjusted-EWMA head semantics)."""
-    from osm2geojson_spark.operators.analytics import ewma_smooth
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.col("event_id").alias("t"),
-        ((F.col("event_id") * 7919) % 1000).alias("v"),
-    )
-    return ewma_smooth(ev, k=6)
-
-
-def _ewma_sql() -> str:
-    from osm2geojson_spark.operators.analytics import ewma_smooth_sql
-
-    return ewma_smooth_sql(
-        "SELECT event_type AS g, event_id AS t,"
-        " (event_id * 7919) % 1000 AS v FROM events",
-        k=6,
-    )
-
-
 def q_haar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X210 (multimodal.haar_energy): 2-level unnormalized Haar (the
     lossless S-transform) subband energies over 300 mixed rawz/png
@@ -9782,32 +9127,6 @@ def _assortativity_sql() -> str:
     from osm2geojson_spark.operators import graph as G
 
     return G.degree_assortativity_sql(_DENSE_GRAPH_SQL)
-
-
-def q_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X208 (analytics.kruskal_wallis): k-sample rank test per
-    event_type — 4 arms (event_id % 4) with a planted per-arm location
-    shift (+5·arm) over hash noise, heavy ties by design (values mod
-    100). Doubled midranks + 1/1024-quantized squared terms, H
-    assembled in a verbatim-replayed IEEE expression."""
-    from osm2geojson_spark.operators.analytics import kruskal_wallis
-
-    e = F.col("event_id")
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        (e % 4).alias("arm"),
-        ((e * 7919) % 100 + 5 * (e % 4)).alias("v"),
-    )
-    return kruskal_wallis(ev)
-
-
-def _kruskal_sql() -> str:
-    from osm2geojson_spark.operators.analytics import kruskal_wallis_sql
-
-    return kruskal_wallis_sql(
-        "SELECT event_type AS g, event_id % 4 AS arm,"
-        " (event_id * 7919) % 100 + 5 * (event_id % 4) AS v FROM events"
-    )
 
 
 def q_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9888,39 +9207,6 @@ def _coverage_select_sql() -> str:
 
     return coverage_select_sql(
         "SELECT doc_id, text FROM documents WHERE doc_id < 150", k=6
-    )
-
-
-def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X205 (analytics.theil_sen): robust trend per event_type — planted
-    line y = 3x - 10 + bounded noise, with every 9th point replaced by
-    a gross hash outlier; the median-of-slopes estimator must stay on
-    the line. Exact-fraction median (cross-multiplied order), residual
-    lower median intercept; doubles are single IEEE divisions."""
-    from osm2geojson_spark.operators.analytics import theil_sen
-
-    e = F.col("event_id")
-    x = e % 50
-    y = F.when(
-        e % 9 == 0, (e * 104729) % 997
-    ).otherwise(F.lit(3) * x - 10 + (e * 7919) % 21)
-    ev = _t(spark, sf_dir, "events").filter(e < 500).select(
-        F.col("event_type").alias("g"),
-        e.alias("pid"),
-        x.alias("x"),
-        y.alias("y"),
-    )
-    return theil_sen(ev)
-
-
-def _theil_sen_sql() -> str:
-    from osm2geojson_spark.operators.analytics import theil_sen_sql
-
-    return theil_sen_sql(
-        "SELECT event_type AS g, event_id AS pid, event_id % 50 AS x,"
-        " CASE WHEN event_id % 9 = 0 THEN (event_id * 104729) % 997"
-        " ELSE 3 * (event_id % 50) - 10 + (event_id * 7919) % 21 END AS y"
-        " FROM events WHERE event_id < 500"
     )
 
 
@@ -10052,36 +9338,6 @@ def _maxsim_sql() -> str:
     )
 
 
-def q_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X201 (analytics.isotonic_fit): isotonic calibration per
-    event_type — score bin x = event_id % 40, binary outcome planted
-    with success probability rising in x ((event_id*7919+13) % 100 <
-    30+x), so the fitted nondecreasing step curve is a real calibration
-    map. Kernel = exact-fraction PAVA; oracle = the independent integer
-    minimax identity (truncation commutes with max/min)."""
-    from osm2geojson_spark.operators.analytics import isotonic_fit
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        (F.col("event_id") % 40).alias("x"),
-        (
-            (F.col("event_id") * 7919 + 13) % 100
-            < 30 + F.col("event_id") % 40
-        ).cast("long").alias("y"),
-    )
-    return isotonic_fit(ev)
-
-
-def _isotonic_sql() -> str:
-    from osm2geojson_spark.operators.analytics import isotonic_fit_sql
-
-    return isotonic_fit_sql(
-        "SELECT event_type AS g, event_id % 40 AS x,"
-        " CASE WHEN (event_id * 7919 + 13) % 100 < 30 + event_id % 40"
-        " THEN 1 ELSE 0 END AS y FROM events"
-    )
-
-
 def q_dither(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X200 (multimodal.ordered_dither): Bayer 4x4 ordered-dithering
     census over 300 mixed-size (8/16/24 px) mixed-format (rawz/png)
@@ -10121,34 +9377,6 @@ FROM px JOIN {bayer4_values_sql()}
   ON bayer.my = px.my AND bayer.mx = px.mx
 GROUP BY 1, 2
 """
-
-
-def q_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X199 (analytics.kendall_tau): Kendall tau-b of event value
-    (whole dollars) against event day per event_type — the pairwise
-    concordance drift detector, tie-corrected. Rows collapse to ~1.5k
-    tie cells per group before the cell-pair join; nc/nd/tie counts are
-    exact int64, tau one pinned two-sqrt assembly. Day index uses
-    integer DIV so both engines bin identically."""
-    from osm2geojson_spark.operators.analytics import kendall_tau
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr(
-            "unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000"
-        ).alias("x"),
-        F.round(F.col("value")).cast("long").alias("y"),
-    )
-    return kendall_tau(ev)
-
-
-def _kendall_sql() -> str:
-    from osm2geojson_spark.operators.analytics import kendall_tau_sql
-
-    return kendall_tau_sql(
-        "SELECT event_type AS g, epoch_us(ts) // 86400000000 AS x,"
-        " CAST(round(value) AS BIGINT) AS y FROM events"
-    )
 
 
 def q_mask_iou(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10378,38 +9606,6 @@ FROM (SELECT {cell} AS cell_id, count(*) AS cnt FROM customer GROUP BY 1)
     return join_counts_sql(marks, res=4)
 
 
-def q_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X194 (analytics.seasonal_decompose): classical period-7 additive
-    decomposition of daily order revenue (exact cents) per order
-    status — RANGE-window centered MA (gap-honest), exact integer
-    trend/detrended components, rational seasonal indices, pinned
-    residual."""
-    from osm2geojson_spark.operators.analytics import seasonal_decompose
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderstatus").alias("g"),
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.to_date(F.lit("1992-01-01"))
-        ).cast("long").alias("t"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    daily = o.groupBy("g", "t").agg(F.sum("cents").alias("v"))
-    return seasonal_decompose(daily, period=7)
-
-
-def _seasonal_sql() -> str:
-    from osm2geojson_spark.operators.analytics import seasonal_decompose_sql
-
-    return seasonal_decompose_sql(
-        "SELECT o_orderstatus AS g,"
-        " date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))"
-        " AS t,"
-        " sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS v"
-        " FROM orders GROUP BY 1, 2",
-        period=7,
-    )
-
-
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X193 (similarity.hard_negatives): contrastive hard-negative
     mining — per sampled anchor, the top-5 highest quantized-inner-
@@ -10431,54 +9627,6 @@ def _hard_negatives_sql() -> str:
         "SELECT vec_id, label, embedding FROM embeddings",
         k=5,
         dim=64,
-    )
-
-
-def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X192 (analytics.spearman_corr): Spearman rank correlation of
-    event value (cents) against event time (micros) per event_type —
-    the monotone value-drift detector. Centered doubled midranks give
-    exact int64 num/denx/deny; rho is a pinned two-sqrt assembly."""
-    from osm2geojson_spark.operators.analytics import spearman_corr
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("x"),
-        F.round(F.col("value") * 100).cast("long").alias("y"),
-    )
-    return spearman_corr(ev)
-
-
-def _spearman_sql() -> str:
-    from osm2geojson_spark.operators.analytics import spearman_corr_sql
-
-    return spearman_corr_sql(
-        "SELECT event_type AS g, epoch_us(ts) AS x,"
-        " CAST(round(value * 100) AS BIGINT) AS y FROM events"
-    )
-
-
-def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X191 (analytics.mann_whitney_u): Mann–Whitney U rank-sum test of
-    event value (exact cents) between user-id-parity arms, per
-    event_type — doubled midranks, exact integer U statistics and tie
-    term, pinned-order normal z."""
-    from osm2geojson_spark.operators.analytics import mann_whitney_u
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        (F.col("user_id") % 2).alias("arm"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-    return mann_whitney_u(ev)
-
-
-def _mann_whitney_sql() -> str:
-    from osm2geojson_spark.operators.analytics import mann_whitney_u_sql
-
-    return mann_whitney_u_sql(
-        "SELECT event_type AS g, user_id % 2 AS arm,"
-        " CAST(round(value * 100) AS BIGINT) AS v FROM events"
     )
 
 
@@ -10524,158 +9672,6 @@ FROM customer GROUP BY 1
     return scan_stat_sql(hist, res=4, k_max=2, top=5)
 
 
-def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X189 (analytics.mad_outliers): Hampel robust outlier gate over
-    event values (exact cents) per event_type — type-1 exact medians,
-    integer deviations, dev > 3·MAD integer comparison. Two ordered
-    windows per group, the exact-median cost."""
-    from osm2geojson_spark.operators.analytics import mad_outliers
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.col("event_id").alias("id"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-    return mad_outliers(ev)
-
-
-def _mad_outliers_sql() -> str:
-    from osm2geojson_spark.operators.analytics import mad_outliers_sql
-
-    return mad_outliers_sql(
-        "SELECT event_type AS g, event_id AS id,"
-        " CAST(round(value * 100) AS BIGINT) AS v FROM events"
-    )
-
-
-def q_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X186 (analytics.survival_table): Kaplan-Meier life table of user
-    activity spans — duration = days from first to last event, event=1
-    when the user's final event (by ts, event_id) is an 'error' (a
-    deterministic churn proxy), else censored. The exact integer life
-    table is the oracle contract; the sequential product-limit column
-    is pytest-pinned and pruned here (Catalyst drops the fold under
-    column pruning)."""
-    from osm2geojson_spark.operators.analytics import survival_table
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    per_user = (
-        ev.withColumn("_rn", F.row_number().over(w))
-        .groupBy("user_id")
-        .agg(
-            F.datediff(F.max("ts"), F.min("ts")).cast("long").alias(
-                "duration"
-            ),
-            F.max(
-                F.when(
-                    F.col("_rn") == 1,
-                    F.when(F.col("event_type") == "error", 1).otherwise(0),
-                )
-            ).cast("int").alias("event"),
-        )
-    )
-    return survival_table(per_user).select(
-        "t", "d", "censored_at", "n_at_risk"
-    )
-
-
-def _survival_sql() -> str:
-    from osm2geojson_spark.operators.analytics import survival_table_sql
-
-    rows = """
-SELECT user_id,
-       CAST(date_diff('day', min(ts), max(ts)) AS BIGINT) AS duration,
-       CAST(max(CASE WHEN rn = 1 THEN
-                CASE WHEN event_type = 'error' THEN 1 ELSE 0 END
-            END) AS INTEGER) AS event
-FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-)
-GROUP BY user_id
-"""
-    return survival_table_sql(rows)
-
-
-def q_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X185 (analytics.chi2_independence): Pearson chi-square
-    independence between documents' lang and source — pinned IEEE term
-    assembly over exact int64 marginal products, micro-quantized
-    order-free total, zero-observed cells included. One contingency
-    scan + driver-size marginal joins."""
-    from osm2geojson_spark.operators.analytics import chi2_independence
-
-    return chi2_independence(
-        _t(spark, sf_dir, "documents"), "lang", "source"
-    )
-
-
-def _chi2_sql() -> str:
-    from osm2geojson_spark.operators.analytics import chi2_independence_sql
-
-    return chi2_independence_sql(
-        "SELECT lang, source FROM documents", "lang", "source"
-    )
-
-
-def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X182 (analytics.gini_coefficient): Gini concentration of order
-    revenue (exact cents) — the rank formula Σ(2r−n−1)x/(nΣx) as an
-    exact int64 rational; the global rank is the value-bucketed
-    two-level scan, never a single-partition window."""
-    from osm2geojson_spark.operators.analytics import gini_coefficient
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return gini_coefficient(o, "cents", "k")
-
-
-def _gini_sql() -> str:
-    from osm2geojson_spark.operators.analytics import gini_coefficient_sql
-
-    return gini_coefficient_sql(
-        "SELECT o_orderkey AS k, CAST(round(o_totalprice * 100) AS BIGINT)"
-        " AS cents FROM orders",
-        "cents",
-        "k",
-    )
-
-
-def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X183 (analytics.ks_test): binning-free two-sample KS drift gate
-    between purchase and view event values (exact cents) — the max ECDF
-    gap as an exact integer rational with the attaining value; the
-    complement of psi_drift (which needs bins). Support-sized cumulative
-    walk, struct-max rollup."""
-    from osm2geojson_spark.operators.analytics import ks_test
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-    a = ev.filter(F.col("event_type") == "purchase").select("v")
-    b = ev.filter(F.col("event_type") == "view").select("v")
-    return ks_test(a, b, "v")
-
-
-def _ks_drift_sql() -> str:
-    from osm2geojson_spark.operators.analytics import ks_test_sql
-
-    return ks_test_sql(
-        "SELECT CAST(round(value * 100) AS BIGINT) AS v FROM events"
-        " WHERE event_type = 'purchase'",
-        "SELECT CAST(round(value * 100) AS BIGINT) AS v FROM events"
-        " WHERE event_type = 'view'",
-        "v",
-    )
-
-
 def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X181 (functions/text.pmi_cooc): PMI collocation mining over the
     documents corpus — adjacent normalized-token pairs (canonical
@@ -10691,78 +9687,6 @@ def _pmi_sql() -> str:
     from osm2geojson_spark.functions.text import pmi_cooc_sql
 
     return pmi_cooc_sql("SELECT doc_id, text FROM documents", min_count=3)
-
-
-def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X177 (analytics.rfm_segments): RFM customer segmentation over
-    orders — recency/frequency/exact-cent monetary, each scored 1..5 by
-    exact balanced rank quantiles. No ntile, no single-partition window:
-    each rank is the value-bucketed two-level scan (<= 64 bucket counts
-    to the driver per metric); the twin replays ranks serially."""
-    from osm2geojson_spark.operators.analytics import rfm_segments
-
-    return rfm_segments(_t(spark, sf_dir, "orders"))
-
-
-def _rfm_sql() -> str:
-    from osm2geojson_spark.operators.analytics import rfm_segments_sql
-
-    return rfm_segments_sql(
-        "SELECT o_custkey, o_orderdate, o_totalprice FROM orders"
-    )
-
-
-_KAPPA_LANGS = ["de", "en", "es", "fr", "zh"]
-
-
-def q_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X174 (analytics.kappa_agreement): Cohen's kappa between two
-    annotators of the documents table — annotator A is the lang column,
-    annotator B a deterministic 75%-agree perturbation (Knuth-hash gate,
-    hash-shifted class on disagreement, replayed identically in the
-    twin). Kappa kept exact as the integer rational (n·agree − Σ na·nb)
-    / (n² − Σ na·nb); one confusion-matrix scan, driver-size marginals."""
-    from osm2geojson_spark.operators.analytics import kappa_agreement
-
-    docs = _t(spark, sf_dir, "documents")
-    idx = F.lit(0)
-    for j, lg in enumerate(_KAPPA_LANGS):
-        idx = F.when(F.col("lang") == lg, F.lit(j)).otherwise(idx)
-    gate = (F.col("doc_id") * F.lit(2654435761)) % 100
-    shift = F.lit(1) + F.col("doc_id") % 4
-    b_idx = (idx + shift) % 5
-    label_b = F.when(gate < 75, F.col("lang")).otherwise(
-        F.element_at(
-            F.array(*[F.lit(lg) for lg in _KAPPA_LANGS]),
-            (b_idx + 1).cast("int"),
-        )
-    )
-    lab = docs.select(
-        F.col("lang").alias("label_a"), label_b.alias("label_b")
-    )
-    return kappa_agreement(lab)
-
-
-def _kappa_sql() -> str:
-    from osm2geojson_spark.operators.analytics import kappa_agreement_sql
-
-    idx = (
-        "CASE "
-        + " ".join(
-            f"WHEN lang = '{lg}' THEN {j}"
-            for j, lg in enumerate(_KAPPA_LANGS)
-        )
-        + " ELSE 0 END"
-    )
-    arr = "[" + ", ".join(f"'{lg}'" for lg in _KAPPA_LANGS) + "]"
-    rows = f"""
-SELECT lang AS label_a,
-       CASE WHEN (doc_id * 2654435761) % 100 < 75 THEN lang
-            ELSE ({arr})[(({idx}) + 1 + doc_id % 4) % 5 + 1]
-       END AS label_b
-FROM documents
-"""
-    return kappa_agreement_sql(rows)
 
 
 def q_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11318,120 +10242,6 @@ FROM ha JOIN hb ON ha.i = hb.i JOIN hab ON ha.i = hab.i
 """
 
 
-def q_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X163 (analytics.union_rect_area): exact deduplicated coverage of
-    overlapping part-keyed integer footprints, 4 groups — coordinate-
-    compression slabs + per-slab gaps-and-islands y-union, every
-    quantity int64 in any order. The oracle replays the identical slab
-    and island windows."""
-    from osm2geojson_spark.operators.analytics import union_rect_area
-
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 240)
-    k = F.col("p_partkey")
-    rects = part.select(
-        (k % 4).alias("group_id"),
-        ((k * 7) % 50).cast("long").alias("x0"),
-        ((k * 11) % 40).cast("long").alias("y0"),
-        ((k * 7) % 50 + 1 + k % 9).cast("long").alias("x1"),
-        ((k * 11) % 40 + 1 + k % 6).cast("long").alias("y1"),
-    )
-    return union_rect_area(rects)
-
-
-_UNION_AREA_SQL = """
-WITH r AS (
-  SELECT p_partkey % 4 AS g,
-         (p_partkey * 7) % 50 AS x0, (p_partkey * 11) % 40 AS y0,
-         (p_partkey * 7) % 50 + 1 + p_partkey % 9 AS x1,
-         (p_partkey * 11) % 40 + 1 + p_partkey % 6 AS y1
-  FROM part WHERE p_partkey < 240
-), nr AS (SELECT g, CAST(count(*) AS BIGINT) AS n_rects FROM r GROUP BY g),
-xs AS (
-  SELECT DISTINCT g, x FROM (
-    SELECT g, x0 AS x FROM r UNION ALL SELECT g, x1 FROM r
-  )
-), slabs AS (
-  SELECT g, x AS xs, lead(x) OVER (PARTITION BY g ORDER BY x) AS xe FROM xs
-), iv AS (
-  SELECT slabs.g, slabs.xs, slabs.xe, r.y0, r.y1
-  FROM slabs JOIN r ON r.g = slabs.g
-  WHERE slabs.xe IS NOT NULL AND r.x0 <= slabs.xs AND r.x1 >= slabs.xe
-), marked AS (
-  SELECT g, xs, xe, y0, y1,
-         CASE WHEN max(y1) OVER (PARTITION BY g, xs ORDER BY y0, y1
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-               OR y0 > max(y1) OVER (PARTITION BY g, xs ORDER BY y0, y1
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              THEN 1 ELSE 0 END AS nw
-  FROM iv
-), isl AS (
-  SELECT g, xs, xe, y0, y1,
-         sum(nw) OVER (PARTITION BY g, xs ORDER BY y0, y1
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS i
-  FROM marked
-), merged AS (
-  SELECT g, xs, xe, max(y1) - min(y0) AS len
-  FROM isl GROUP BY g, xs, xe, i
-), area AS (
-  SELECT g, CAST(sum(len * (xe - xs)) AS BIGINT) AS area FROM merged GROUP BY g
-)
-SELECT nr.g AS group_id, nr.n_rects, COALESCE(area.area, 0) AS area
-FROM nr LEFT JOIN area ON area.g = nr.g
-"""
-
-
-def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X162 (analytics.ab_test_z): pooled two-proportion z-test over the
-    events table — variant = user parity, conversion = a deterministic
-    event-key gate with a planted uplift for variant B. Sufficient
-    statistics are order-free int64 counts; z is one replayed float
-    assembly over the four integers."""
-    from osm2geojson_spark.operators.analytics import ab_test_z
-
-    ev = _t(spark, sf_dir, "events").select(
-        (F.col("user_id") % 2).alias("variant"),
-        (
-            (F.col("event_id") * 37 % 100)
-            < (F.lit(20) + (F.col("user_id") % 2) * 5)
-        ).alias("converted"),
-    )
-    return ab_test_z(ev)
-
-
-_AB_TEST_SQL = """
-WITH t AS (
-  SELECT user_id % 2 AS v,
-         CASE WHEN (event_id * 37 % 100) < (20 + (user_id % 2) * 5)
-              THEN 1 ELSE 0 END AS c
-  FROM events
-), agg AS (
-  SELECT CAST(count(*) FILTER (WHERE v = 0) AS BIGINT) AS na,
-         CAST(COALESCE(sum(c) FILTER (WHERE v = 0), 0) AS BIGINT) AS xa,
-         CAST(count(*) FILTER (WHERE v = 1) AS BIGINT) AS nb,
-         CAST(COALESCE(sum(c) FILTER (WHERE v = 1), 0) AS BIGINT) AS xb
-  FROM t
-)
-SELECT na, xa, nb, xb,
-       CASE WHEN na > 0 THEN round(CAST(xa AS DOUBLE) / CAST(na AS DOUBLE), 6)
-            + 0.0 END AS rate_a,
-       CASE WHEN nb > 0 THEN round(CAST(xb AS DOUBLE) / CAST(nb AS DOUBLE), 6)
-            + 0.0 END AS rate_b,
-       CASE WHEN na > 0 AND nb > 0 AND xa + xb > 0 AND xa + xb < na + nb
-            THEN round(
-              (CAST(xb AS DOUBLE) / CAST(nb AS DOUBLE)
-               - CAST(xa AS DOUBLE) / CAST(na AS DOUBLE))
-              / sqrt(
-                  (CAST(xa AS DOUBLE) + CAST(xb AS DOUBLE))
-                    / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))
-                  * (1.0 - (CAST(xa AS DOUBLE) + CAST(xb AS DOUBLE))
-                       / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE)))
-                  * (1.0 / CAST(na AS DOUBLE) + 1.0 / CAST(nb AS DOUBLE))
-                ), 6) + 0.0
-       END AS z
-FROM agg
-"""
-
-
 def q_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X161 (geostat.watershed_basins): every cell of the shared 32x32
     DEM labeled with the sink it drains to — D8 pointers chased by
@@ -11545,77 +10355,6 @@ FROM reach r
 JOIN dims ON dims.ua = r.ua AND dims.ub = r.ub
 WHERE r.i = dims.ni AND r.j = dims.nj
 GROUP BY r.ua, r.ub, dims.ni, dims.nj
-"""
-
-
-def q_ransac_line(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X159 (analytics.ransac_line): deterministic RANSAC line fit per
-    group — 8 part-keyed groups of noisy planted lines with 1-in-11
-    gross outliers; 16 candidate hypotheses from a fixed congruential
-    rank schedule, float-free inlier gate cross^2 <= tol^2 * |AB|^2,
-    best = (max inliers, min candidate). The oracle replays ranks,
-    schedule, gate, and argmax in pure integer SQL."""
-    from osm2geojson_spark.operators.analytics import ransac_line
-
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 400)
-    k = F.col("p_partkey")
-    pts = part.select(
-        (k % 8).alias("group_id"),
-        k.alias("pid"),
-        F.floor(k / 8).cast("long").alias("x"),
-        (
-            (F.lit(2) + k % 8) * F.floor(k / 8)  # slope 2..9 per group
-            + (k % 8) * 5                        # intercept
-            + ((k * k) % 7) - 3                  # small noise
-            + F.when(k % 11 == 0, F.lit(40)).otherwise(F.lit(0))  # outliers
-        ).cast("long").alias("y"),
-    )
-    return ransac_line(pts, n_candidates=16, tol=3)
-
-
-_RANSAC_LINE_SQL = """
-WITH pts AS (
-  SELECT p_partkey % 8 AS g, p_partkey AS pid,
-         p_partkey // 8 AS x,
-         (2 + p_partkey % 8) * (p_partkey // 8) + (p_partkey % 8) * 5
-           + (p_partkey * p_partkey) % 7 - 3
-           + CASE WHEN p_partkey % 11 = 0 THEN 40 ELSE 0 END AS y
-  FROM part WHERE p_partkey < 400
-), ranked AS (
-  SELECT g, x, y,
-         row_number() OVER (PARTITION BY g ORDER BY pid) - 1 AS rk
-  FROM pts
-), nn AS (SELECT g, count(*) AS n FROM ranked GROUP BY g),
-cand AS (
-  SELECT g, j, (j * 13) % n AS r1,
-         CASE WHEN (j * 29 + 1) % n = (j * 13) % n
-              THEN (j * 29 + 2) % n ELSE (j * 29 + 1) % n END AS r2
-  FROM nn, (SELECT unnest(range(0, 16)) AS j)
-), lines AS (
-  SELECT cand.g, j, a.x AS ax, a.y AS ay, b.x AS bx, b.y AS by
-  FROM cand
-  JOIN ranked a ON a.g = cand.g AND a.rk = cand.r1
-  JOIN ranked b ON b.g = cand.g AND b.rk = cand.r2
-), inl AS (
-  SELECT l.g, l.j, l.ax, l.ay, l.bx, l.by,
-         CAST(count(*) FILTER (WHERE
-           (l.bx - l.ax) * (l.bx - l.ax) + (l.by - l.ay) * (l.by - l.ay) > 0
-           AND ((l.bx - l.ax) * (p.y - l.ay) - (l.by - l.ay) * (p.x - l.ax))
-             * ((l.bx - l.ax) * (p.y - l.ay) - (l.by - l.ay) * (p.x - l.ax))
-             <= 9 * ((l.bx - l.ax) * (l.bx - l.ax)
-                     + (l.by - l.ay) * (l.by - l.ay))
-         ) AS BIGINT) AS n_inliers
-  FROM lines l JOIN ranked p ON p.g = l.g
-  GROUP BY l.g, l.j, l.ax, l.ay, l.bx, l.by
-), best AS (
-  SELECT g, j, n_inliers, ax, ay, bx, by,
-         row_number() OVER (PARTITION BY g
-                            ORDER BY n_inliers DESC, j ASC) AS rnk
-  FROM inl
-)
-SELECT g AS group_id, CAST(j AS INTEGER) AS cand_idx, n_inliers,
-       ax, ay, bx, by
-FROM best WHERE rnk = 1
 """
 
 
@@ -12095,33 +10834,6 @@ def _winnow_sql() -> str:
     )
 
 
-def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X228 (analytics.target_encode): smoothed mean target encoding
-    (Micci-Barreca 2001) of event_type against the binary
-    high-value-event target — the standard categorical feature
-    transform for tabular training pipelines, shrunk toward the global
-    target mean with pseudo-count m. Pure int64 micro arithmetic."""
-    from osm2geojson_spark.operators.analytics import target_encode
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("cat"),
-        (F.col("value") > F.lit(50.0)).cast("int").alias("y"),
-    )
-    return target_encode(ev, cat_col="cat", target_col="y", m=20)
-
-
-def _target_encode_sql() -> str:
-    from osm2geojson_spark.operators.analytics import target_encode_sql
-
-    return target_encode_sql(
-        "SELECT event_type AS cat,"
-        " CASE WHEN value > 50.0 THEN 1 ELSE 0 END AS y FROM events",
-        cat_col="cat",
-        target_col="y",
-        m=20,
-    )
-
-
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X239 (text.bpe_encode): BPE tokenization applied — the corpus
     trains its own 8-round merge table, then every document is charged
@@ -12281,30 +10993,6 @@ def _canonical_pick_sql() -> str:
     return canonical_pick_sql(docs, _dedup_clusters_sql())
 
 
-def q_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X257 (analytics.quantile_normalize): pooled-reference quantile
-    normalization of per-event-type value distributions (cents) — the
-    batch-effect correction that forces every source onto the same
-    marginal; exact integer rank map, type-1 targets."""
-    from osm2geojson_spark.operators.analytics import quantile_normalize
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.col("event_id").alias("rid"),
-        F.round(F.col("value") * 100).cast("long").alias("v_c"),
-    )
-    return quantile_normalize(ev)
-
-
-def _quantile_norm_sql() -> str:
-    from osm2geojson_spark.operators.analytics import quantile_normalize_sql
-
-    return quantile_normalize_sql(
-        "SELECT event_type AS g, event_id AS rid,"
-        " CAST(round(value * 100) AS BIGINT) AS v_c FROM events"
-    )
-
-
 def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X256 (sampling.l_diversity): l-diversity audit over the ping
     degree-grid cells with event_type as the sensitive attribute — the
@@ -12391,39 +11079,6 @@ FROM (
     return shot_detect_sql(px, thresh=40)
 
 
-def q_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X254 (analytics.matrix_profile): unnormalized matrix profile
-    (m = 8) of per-event-type value series (event_id % 20 subsample
-    bounds the per-series quadratic dimension) — motif/discord
-    discovery with exact integer distances and the |i−j| >= m
-    exclusion zone."""
-    from pyspark.sql.window import Window as _W
-
-    from osm2geojson_spark.operators.analytics import matrix_profile
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 20 == 0).select(
-        F.col("event_type").alias("g"),
-        F.row_number().over(
-            _W.partitionBy("event_type").orderBy("ts", "event_id")
-        ).cast("long").alias("t"),
-        F.round(F.col("value")).cast("long").alias("v_c"),
-    )
-    return matrix_profile(ev, m=8)
-
-
-def _matrix_profile_sql() -> str:
-    from osm2geojson_spark.operators.analytics import matrix_profile_sql
-
-    return matrix_profile_sql(
-        "SELECT event_type AS g,"
-        " CAST(row_number() OVER (PARTITION BY event_type"
-        " ORDER BY ts, event_id) AS BIGINT) AS t,"
-        " CAST(round(value) AS BIGINT) AS v_c FROM events"
-        " WHERE event_id % 20 = 0",
-        m=8,
-    )
-
-
 def q_str_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X253 (plans.layout.str_partition): Sort-Tile-Recursive bulk-load
     partitioning of the 160-point grid into 4x4 balanced tiles — the
@@ -12452,40 +11107,6 @@ def _str_partition_sql() -> str:
     )
 
 
-def q_v_optimal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X252 (analytics.v_optimal_hist): exactly-optimal 4-segmentation
-    (v-optimal histogram) of per-event-type value series — the O(n²k)
-    DP runs in-batch per series (series subsampled by event_id % 40 to
-    keep the quadratic dimension bounded at every SF); micro-quantized
-    SSE, smallest-j ties; twin unrolls DP levels + backtrack."""
-    from osm2geojson_spark.operators.analytics import v_optimal_hist
-
-    from pyspark.sql.window import Window as _W
-
-    base = _t(spark, sf_dir, "events").filter(F.col("event_id") % 40 == 0)
-    ev = base.select(
-        F.col("event_type").alias("g"),
-        F.row_number().over(
-            _W.partitionBy("event_type").orderBy("ts", "event_id")
-        ).cast("long").alias("t"),
-        F.round(F.col("value")).cast("long").alias("v_c"),
-    )
-    return v_optimal_hist(ev, k=4)
-
-
-def _v_optimal_sql() -> str:
-    from osm2geojson_spark.operators.analytics import v_optimal_hist_sql
-
-    return v_optimal_hist_sql(
-        "SELECT event_type AS g,"
-        " CAST(row_number() OVER (PARTITION BY event_type"
-        " ORDER BY ts, event_id) AS BIGINT) AS t,"
-        " CAST(round(value) AS BIGINT) AS v_c FROM events"
-        " WHERE event_id % 40 = 0",
-        k=4,
-    )
-
-
 def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X251 (graph.rich_club): rich-club coefficient curve over the
     dense modular graph — hub-interlink density phi(k) for every degree
@@ -12500,58 +11121,6 @@ def _rich_club_sql() -> str:
     from osm2geojson_spark.operators.graph import rich_club_sql
 
     return rich_club_sql(_DENSE_GRAPH_SQL)
-
-
-def q_binary_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X250 (analytics.binary_seg): one-split binary-segmentation
-    changepoint per event_type value series (whole units — the
-    operator's int64 budget is n·Q·1e6, so the fixture pre-scales to
-    |v| <= 100 which holds to n ~ 2e4 per series) — exact
-    micro-quantized SSE argmin over every candidate split from one
-    prefix window; the level-shift evidence gate."""
-    from osm2geojson_spark.operators.analytics import binary_seg
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.struct(F.col("ts"), F.col("event_id")).alias("t"),
-        F.round(F.col("value")).cast("long").alias("v_c"),
-    )
-    return binary_seg(ev)
-
-
-def _binary_seg_sql() -> str:
-    from osm2geojson_spark.operators.analytics import binary_seg_sql
-
-    return binary_seg_sql(
-        "SELECT event_type AS g, (ts, event_id) AS t,"
-        " CAST(round(value) AS BIGINT) AS v_c FROM events"
-    )
-
-
-def q_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X249 (analytics.mase_backtest): seasonal-naive forecast backtest
-    scored by MASE over per-event-type value series (cents, ordered by
-    event time) — the scale-free forecast-quality gate, exact
-    cross-multiplied micro ratio."""
-    from osm2geojson_spark.operators.analytics import mase_backtest
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.struct(F.col("ts"), F.col("event_id")).alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("v_c"),
-    )
-    return mase_backtest(ev, season=5, horizon=10)
-
-
-def _backtest_sql() -> str:
-    from osm2geojson_spark.operators.analytics import mase_backtest_sql
-
-    return mase_backtest_sql(
-        "SELECT event_type AS g, (ts, event_id) AS t,"
-        " CAST(round(value * 100) AS BIGINT) AS v_c FROM events",
-        season=5,
-        horizon=10,
-    )
 
 
 def q_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12618,39 +11187,6 @@ def _k_centers_sql() -> str:
         " (c_custkey * 2246822519 + 7) % 1013 AS y"
         " FROM customer WHERE c_custkey < 160",
         k=6,
-    )
-
-
-def q_topsis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X245 (analytics.topsis_rank): TOPSIS supplier triage on three
-    disagreeing criteria — account balance (benefit, w3), a synthetic
-    unit cost (cost, w2), a synthetic service score (benefit, w1). Integer
-    max-scaled squared-distance variant, two-level rank."""
-    from osm2geojson_spark.operators.analytics import topsis_rank
-
-    sup = _t(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("sid"),
-        (F.round(F.col("s_acctbal") * 100).cast("long") + 100000).alias("bal_c"),
-        ((F.col("s_suppkey") * 7) % 100).cast("long").alias("unit_cost"),
-        ((F.col("s_suppkey") * 13) % 40 + F.col("s_nationkey")).cast("long").alias("verbosity"),
-    )
-    return topsis_rank(
-        sup,
-        "sid",
-        [("bal_c", True, 3), ("unit_cost", False, 2), ("verbosity", True, 1)],
-    )
-
-
-def _topsis_sql() -> str:
-    from osm2geojson_spark.operators.analytics import topsis_rank_sql
-
-    return topsis_rank_sql(
-        "SELECT s_suppkey AS sid,"
-        " CAST(round(s_acctbal * 100) AS BIGINT) + 100000 AS bal_c,"
-        " (s_suppkey * 7) % 100 AS unit_cost,"
-        " (s_suppkey * 13) % 40 + s_nationkey AS verbosity FROM supplier",
-        "sid",
-        [("bal_c", True, 3), ("unit_cost", False, 2), ("verbosity", True, 1)],
     )
 
 
@@ -12944,38 +11480,6 @@ def _pca_top_sql() -> str:
     )
 
 
-def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X232 (analytics.markov_attribution): Markov-chain multi-touch
-    attribution by removal effects over the events stream — the
-    data-driven complement to q_attribution's first/last/linear
-    heuristics. Distributed journey windows + transition rollup; the
-    O(channels^2) chain iterates fixed-point integer rounds driver-side
-    (per-term truncating division — order-free); the twin unrolls the
-    identical rounds as materialized CTEs."""
-    from osm2geojson_spark.operators.analytics import markov_attribution
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    return markov_attribution(
-        ev,
-        conv_type="purchase",
-        channels=["click", "error", "signup", "view"],
-        iters=24,
-    )
-
-
-def _markov_attribution_sql() -> str:
-    from osm2geojson_spark.operators.analytics import markov_attribution_sql
-
-    return markov_attribution_sql(
-        "SELECT user_id, ts, event_id, event_type FROM events",
-        conv_type="purchase",
-        channels=["click", "error", "signup", "view"],
-        iters=24,
-    )
-
-
 def q_alpha_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X231 (geometry.alpha_shape_edges): alpha-shape boundary edges of
     the four Delaunay tile groups (same fixture as q_delaunay) at
@@ -13001,36 +11505,6 @@ def _alpha_shape_sql() -> str:
         " (c_custkey * 2246822519 + 7) % 1013 AS y"
         " FROM customer WHERE c_custkey < 160",
         alpha2=40_000,
-    )
-
-
-def q_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X230 (analytics.abc_classes): ABC / Pareto revenue classes over
-    per-part lineitem revenue (cents) — which parts carry 80% / 95% of
-    revenue. Descending two-level prefix scan, integer class gates."""
-    from osm2geojson_spark.operators.analytics import abc_classes
-
-    rev = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy(F.col("l_partkey").alias("part"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .cast("long")
-            .alias("rev_c")
-        )
-    )
-    return abc_classes(rev, key_col="part", value_col="rev_c")
-
-
-def _abc_analysis_sql() -> str:
-    from osm2geojson_spark.operators.analytics import abc_classes_sql
-
-    return abc_classes_sql(
-        "SELECT l_partkey AS part,"
-        " CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)"
-        " AS rev_c FROM lineitem GROUP BY 1",
-        key_col="part",
-        value_col="rev_c",
     )
 
 
@@ -13064,76 +11538,6 @@ def _keyword_extract_sql() -> str:
         " AS text FROM documents",
         k=5,
     )
-
-
-def q_pearson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X264 (analytics.pearson_corr): Pearson linear correlation of
-    event value (integer dollars) against second-of-day per event_type
-    — the linear-association twin of q_spearman. Exact int64 raw
-    moments, decimal(38,0)/HUGEINT centered assembly, one pinned
-    IEEE r."""
-    from osm2geojson_spark.operators.analytics import pearson_corr
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("unix_micros(cast(ts as timestamp)) div 1000000 % 86400").alias(
-            "x"
-        ),
-        F.round(F.col("value")).cast("long").alias("y"),
-    )
-    return pearson_corr(ev)
-
-
-def _pearson_sql() -> str:
-    from osm2geojson_spark.operators.analytics import pearson_corr_sql
-
-    return pearson_corr_sql(
-        "SELECT event_type AS g, epoch_us(ts) // 1000000 % 86400 AS x,"
-        " CAST(round(value) AS BIGINT) AS y FROM events"
-    )
-
-
-def q_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X265 (analytics.bollinger_breach): ±2σ Bollinger breach flags
-    over per-event-type value series (cents) — the float-free
-    cross-multiplied envelope gate (v·n−s)² > k²(n·s2−s²) on a
-    20-row trailing window, ordering pinned by (ts, event_id)."""
-    from osm2geojson_spark.operators.analytics import bollinger_breach
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        F.col("event_id").alias("rid"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-    return bollinger_breach(ev, w=20, k=2)
-
-
-def _bollinger_sql() -> str:
-    from osm2geojson_spark.operators.analytics import bollinger_breach_sql
-
-    return bollinger_breach_sql(
-        "SELECT event_type AS g, epoch_us(ts) AS t, event_id AS rid,"
-        " CAST(round(value * 100) AS BIGINT) AS v FROM events",
-        w=20,
-        k=2,
-    )
-
-
-def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X266 (analytics.pr_curve): exact precision-recall curve points
-    over the hash-scored orders corpus (the q_roc_auc fixture) —
-    descending cumulative tp/fp on the score-collapsed table, floor
-    micro-ratio precision/recall, no floats anywhere."""
-    from osm2geojson_spark.operators.analytics import pr_curve
-
-    return pr_curve(_scored_df(spark, sf_dir))
-
-
-def _pr_curve_sql() -> str:
-    from osm2geojson_spark.operators.analytics import pr_curve_sql
-
-    return pr_curve_sql(_scored_rows())
 
 
 def q_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13202,32 +11606,6 @@ def _bearing_stats_sql() -> str:
     from osm2geojson_spark.operators.trajectory import bearing_resultant_sql
 
     return bearing_resultant_sql(_TRAJ_PINGS_CTE)
-
-
-def q_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X271 (analytics.sax_words): SAX symbolization of per-event-type
-    value series (cents) — 8-point PAA segments binned into a 4-letter
-    equal-width alphabet with the exact rational-mean integer bin."""
-    from osm2geojson_spark.operators.analytics import sax_words
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        F.col("event_id").alias("rid"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-    return sax_words(ev, seg_len=8, alphabet=4)
-
-
-def _sax_sql() -> str:
-    from osm2geojson_spark.operators.analytics import sax_words_sql
-
-    return sax_words_sql(
-        "SELECT event_type AS g, epoch_us(ts) AS t, event_id AS rid,"
-        " CAST(round(value * 100) AS BIGINT) AS v FROM events",
-        seg_len=8,
-        alphabet=4,
-    )
 
 
 def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13386,39 +11764,6 @@ def _cell_buffer_sql() -> str:
         " FROM nation",
         res=6,
         k=2,
-    )
-
-
-def q_stump_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X277 (analytics.stump_train): exact best decision stump per
-    feature over the hash-scored orders corpus — the score itself and
-    a score-decile feature vs the noisy label, errors minimized by the
-    collapsed prefix scan with the (errors, polarity, t) argmin."""
-    from osm2geojson_spark.operators.analytics import stump_train
-
-    sc = _scored_df(spark, sf_dir)
-    feats = sc.select(
-        F.lit("score").alias("feat"), F.col("score").alias("x"), "label"
-    ).unionByName(
-        sc.select(
-            F.lit("decile").alias("feat"),
-            F.expr("score div 100000").alias("x"),
-            "label",
-        )
-    )
-    return stump_train(feats)
-
-
-def _stump_train_sql() -> str:
-    from osm2geojson_spark.operators.analytics import stump_train_sql
-
-    return stump_train_sql(
-        f"""
-  SELECT 'score' AS feat, score AS x, label FROM ({_scored_rows()}) s1
-  UNION ALL
-  SELECT 'decile' AS feat, score // 100000 AS x, label
-  FROM ({_scored_rows()}) s2
-"""
     )
 
 
@@ -13754,99 +12099,6 @@ FROM (
     return psnr_gate_sql(px, factor=10_000)
 
 
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X287 (analytics.snapshot_diff): audit diff of orders vs a
-    synthetically mutated snapshot — %97 keys removed, %101 keys
-    re-added under shifted ids, %13 prices bumped, %17 statuses
-    flipped; null-safe bitmask + popcount per key."""
-    from osm2geojson_spark.operators.analytics import snapshot_diff
-
-    base = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_c"),
-        F.col("o_orderstatus").alias("status_c"),
-    )
-    k = F.col("o_orderkey")
-    mutated = (
-        base.filter(k % 97 != 0)
-        .select(
-            "o_orderkey",
-            F.when(k % 13 == 0, F.col("price_c") + 500)
-            .otherwise(F.col("price_c"))
-            .alias("price_c"),
-            F.when(k % 17 == 0, F.lit("X")).otherwise(
-                F.col("status_c")
-            ).alias("status_c"),
-        )
-        .unionByName(
-            base.filter(k % 101 == 0).select(
-                (k + 1000000000).alias("o_orderkey"), "price_c", "status_c"
-            )
-        )
-    )
-    return snapshot_diff(
-        base, mutated, ["o_orderkey"], ["price_c", "status_c"]
-    )
-
-
-def _snapshot_diff_sql() -> str:
-    from osm2geojson_spark.operators.analytics import snapshot_diff_sql
-
-    base = (
-        "SELECT o_orderkey,"
-        " CAST(round(o_totalprice * 100) AS BIGINT) AS price_c,"
-        " o_orderstatus AS status_c FROM orders"
-    )
-    mutated = f"""
-  SELECT o_orderkey,
-         CASE WHEN o_orderkey % 13 = 0 THEN price_c + 500
-              ELSE price_c END AS price_c,
-         CASE WHEN o_orderkey % 17 = 0 THEN 'X' ELSE status_c END AS status_c
-  FROM ({base}) b WHERE o_orderkey % 97 != 0
-  UNION ALL
-  SELECT o_orderkey + 1000000000, price_c, status_c
-  FROM ({base}) b2 WHERE o_orderkey % 101 = 0
-"""
-    return snapshot_diff_sql(
-        base, mutated, ["o_orderkey"], ["price_c", "status_c"]
-    )
-
-
-def q_knee_point(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X288 (analytics.knee_point): integer Kneedle knee detection on
-    each event_type's cumulative-value curve (rank vs running cents —
-    a concave spend CDF) — exact cross-product deviation from the
-    endpoint chord, (|d| DESC, x ASC)-pinned argmax."""
-    from pyspark.sql.window import Window as _W
-
-    from osm2geojson_spark.operators.analytics import knee_point
-
-    w = _W.partitionBy("event_type").orderBy("ts", "event_id")
-    curve = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.row_number().over(w).cast("long").alias("x"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
-        .over(w.rowsBetween(_W.unboundedPreceding, 0))
-        .alias("y"),
-    )
-    return knee_point(curve)
-
-
-def _knee_point_sql() -> str:
-    from osm2geojson_spark.operators.analytics import knee_point_sql
-
-    return knee_point_sql(
-        "SELECT event_type AS g,"
-        " CAST(row_number() OVER (PARTITION BY event_type"
-        "   ORDER BY ts, event_id) AS BIGINT) AS x,"
-        " CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER ("
-        "   PARTITION BY event_type ORDER BY ts, event_id"
-        "   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS BIGINT) AS y"
-        " FROM events"
-    )
-
-
 def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X289 (graph.critical_path): CPM scheduling over a 6-layer
     activity DAG built from part keys (layer = key % 6, two forward
@@ -13894,107 +12146,6 @@ def _critical_path_sql() -> str:
 
     edges = f"{fam(7, 3)} UNION ALL {fam(131, 17)}"
     return G.critical_path_sql(nodes, edges, max_rounds=6)
-
-
-_FD_CANDIDATES = [
-    ("line_key->qty", ["l_orderkey", "l_linenumber"], "l_quantity"),
-    ("partkey->suppkey", ["l_partkey"], "l_suppkey"),
-    ("returnflag->linestatus", ["l_returnflag"], "l_linestatus"),
-]
-
-
-def q_fd_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X290 (analytics.fd_audit): functional-dependency profiling on
-    lineitem — three candidate FDs audited with the exact g3 error
-    (rows to delete = n_rows − Σ max per-group value count); two-level
-    rollup, no countDistinct memory cliff."""
-    from osm2geojson_spark.operators.analytics import fd_audit
-
-    return fd_audit(_t(spark, sf_dir, "lineitem"), _FD_CANDIDATES)
-
-
-def _fd_check_sql() -> str:
-    from osm2geojson_spark.operators.analytics import fd_audit_sql
-
-    return fd_audit_sql("SELECT * FROM lineitem", _FD_CANDIDATES)
-
-
-def q_fk_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X291 (analytics.inclusion_audit): inclusion-dependency / FK
-    discovery — four candidate child⊆parent pairs audited on distinct
-    values (orphan values + orphan rows, exact), value-collapsed before
-    any join so the probe shuffles |distinct| not |rows|."""
-    from osm2geojson_spark.operators.analytics import inclusion_audit
-
-    return inclusion_audit(
-        [
-            (
-                "lineitem.partkey<part",
-                _t(spark, sf_dir, "lineitem"),
-                "l_partkey",
-                _t(spark, sf_dir, "part"),
-                "p_partkey",
-            ),
-            (
-                "lineitem.suppkey<supplier",
-                _t(spark, sf_dir, "lineitem"),
-                "l_suppkey",
-                _t(spark, sf_dir, "supplier"),
-                "s_suppkey",
-            ),
-            (
-                "orders.custkey<customer",
-                _t(spark, sf_dir, "orders"),
-                "o_custkey",
-                _t(spark, sf_dir, "customer"),
-                "c_custkey",
-            ),
-            (
-                "events.user<customer",
-                _t(spark, sf_dir, "events"),
-                "user_id",
-                _t(spark, sf_dir, "customer"),
-                "c_custkey",
-            ),
-        ]
-    )
-
-
-def _fk_discovery_sql() -> str:
-    from osm2geojson_spark.operators.analytics import inclusion_audit_sql
-
-    return inclusion_audit_sql(
-        [
-            (
-                "lineitem.partkey<part",
-                "SELECT * FROM lineitem",
-                "l_partkey",
-                "SELECT * FROM part",
-                "p_partkey",
-            ),
-            (
-                "lineitem.suppkey<supplier",
-                "SELECT * FROM lineitem",
-                "l_suppkey",
-                "SELECT * FROM supplier",
-                "s_suppkey",
-            ),
-            (
-                "orders.custkey<customer",
-                "SELECT * FROM orders",
-                "o_custkey",
-                "SELECT * FROM customer",
-                "c_custkey",
-            ),
-            (
-                "events.user<customer",
-                "SELECT * FROM events",
-                "user_id",
-                "SELECT * FROM customer",
-                "c_custkey",
-            ),
-        ]
-    )
 
 
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14193,50 +12344,6 @@ def _phonetic_dedup_sql() -> str:
     return phonetic_blocks_sql(words)
 
 
-def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X299 (analytics.readability_scores): Flesch-Kincaid grade gate
-    over every 4th document — exact integer word/sentence/vowel-run
-    syllable accounting, fixed-point grade with pinned truncation."""
-    from osm2geojson_spark.operators.analytics import readability_scores
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 == 0)
-    return readability_scores(docs)
-
-
-def _readability_sql() -> str:
-    from osm2geojson_spark.operators.analytics import readability_scores_sql
-
-    return readability_scores_sql(
-        "SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0"
-    )
-
-
-def q_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X300 (analytics.hurst_rs): Hurst exponent of each event_type's
-    cent-quantized value series (ordered by ts, event_id) via R/S
-    analysis at dyadic windows 8-64 — exact integer block ranges and
-    variance kernels, quantized-log OLS slope."""
-    from osm2geojson_spark.operators.analytics import hurst_rs
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-    )
-    return hurst_rs(ev, order_cols=("ts", "event_id"))
-
-
-def _hurst_sql() -> str:
-    from osm2geojson_spark.operators.analytics import hurst_rs_sql
-
-    series = (
-        "SELECT event_type AS g, ts, event_id,"
-        " CAST(round(value * 100) AS BIGINT) AS x FROM events"
-    )
-    return hurst_rs_sql(series, order_by="ts, event_id")
-
-
 def q_huff_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X301 (spatial_stats.huff_shares): Huff gravity market capture —
     25 nation-derived stores vs customer demand points on a 300-grid,
@@ -14359,31 +12466,6 @@ FROM (
     return pitch_track_sql(samples)
 
 
-def q_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X304 (analytics.naive_bayes_classify): multinomial NB source
-    router — train on even doc_ids (label = source), score odd ones;
-    micro-nat quantized add-one likelihoods, (score DESC, class ASC)
-    pinned argmax."""
-    from osm2geojson_spark.operators.analytics import naive_bayes_classify
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "text", F.col("source").alias("label")
-    )
-    return naive_bayes_classify(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-    )
-
-
-def _naive_bayes_sql() -> str:
-    from osm2geojson_spark.operators.analytics import naive_bayes_classify_sql
-
-    return naive_bayes_classify_sql(
-        "SELECT doc_id, text, source AS label FROM documents WHERE doc_id % 2 = 0",
-        "SELECT doc_id, text, source AS label FROM documents WHERE doc_id % 2 = 1",
-    )
-
-
 def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X305 (graph.betweenness_bounded): pivot-sampled Brandes
     betweenness on the undirected 2-chord part graph (pivots every
@@ -14416,51 +12498,6 @@ def _betweenness_sql() -> str:
     )
     sources = "SELECT p_partkey AS node FROM part WHERE p_partkey % 211 = 0"
     return G.betweenness_bounded_sql(edges, sources, max_hops=4)
-
-
-def q_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X306 (analytics.tree_depth2_train): exact depth-2 decision tree
-    on lineitem (4 integer features; label = returnflag 'R') — global
-    best stump splits, each branch trains its own exact stump; all
-    argmins integer-pinned."""
-    from osm2geojson_spark.operators.analytics import tree_depth2_train
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("id"),
-        (F.col("l_returnflag") == "R").cast("long").alias("label"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.floor(F.col("l_extendedprice") / 10).cast("long").alias("price_d"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("disc_c"),
-        F.round(F.col("l_tax") * 100).cast("long").alias("tax_c"),
-        F.floor(F.col("l_shipdate").cast("timestamp").cast("long") / 86400)
-        .cast("long")
-        .alias("ship_day"),
-    )
-    rows = None
-    for c in ("qty", "price_d", "disc_c", "tax_c", "ship_day"):
-        r = li.select("id", F.lit(c).alias("feat"), F.col(c).alias("x"), "label")
-        rows = r if rows is None else rows.unionByName(r)
-    return tree_depth2_train(rows)
-
-
-def _tree_depth2_sql() -> str:
-    from osm2geojson_spark.operators.analytics import tree_depth2_train_sql
-
-    feats = {
-        "qty": "CAST(l_quantity AS BIGINT)",
-        "price_d": "CAST(floor(l_extendedprice / 10) AS BIGINT)",
-        "disc_c": "CAST(round(l_discount * 100) AS BIGINT)",
-        "tax_c": "CAST(round(l_tax * 100) AS BIGINT)",
-        "ship_day": "CAST(floor(epoch(l_shipdate) / 86400) AS BIGINT)",
-    }
-    rows = " UNION ALL ".join(
-        f"SELECT l_orderkey * 8 + l_linenumber AS id, '{name}' AS feat,"
-        f" {expr} AS x,"
-        " CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label"
-        " FROM lineitem"
-        for name, expr in feats.items()
-    )
-    return tree_depth2_train_sql(rows)
 
 
 def q_lcs_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14673,31 +12710,6 @@ def _stable_matching_sql() -> str:
     return stable_matching_sql(prefs, rounds=8)
 
 
-def q_allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X314 (analytics.allan_variance): Allan-variance ladder of each
-    event_type's cent value series at τ ∈ {4,8,16,32} — exact integer
-    block-sum rationals."""
-    from osm2geojson_spark.operators.analytics import allan_variance
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-    )
-    return allan_variance(ev, order_cols=("ts", "event_id"))
-
-
-def _allan_variance_sql() -> str:
-    from osm2geojson_spark.operators.analytics import allan_variance_sql
-
-    series = (
-        "SELECT event_type AS g, ts, event_id,"
-        " CAST(round(value * 100) AS BIGINT) AS x FROM events"
-    )
-    return allan_variance_sql(series, order_by="ts, event_id")
-
-
 def q_cube_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X315: full CUBE grouping sets over orders (priority × status ×
     ALL marginals — the sibling of rollup_orders, which only walks the
@@ -14805,38 +12817,6 @@ def _mis_sql() -> str:
     return G.maximal_independent_set_sql(edges, rounds=12)
 
 
-def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X318 (analytics.bradley_terry): pairwise-preference ranking of
-    the 25 nation "models" from a deterministic head-to-head win table
-    (both directions, hash-valued) — 6 fixed-point MM rounds."""
-    from osm2geojson_spark.operators.analytics import bradley_terry
-
-    n = _t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("k"))
-    a = n.select(F.col("k").alias("i"))
-    b = n.select(F.col("k").alias("j"))
-    comps = (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("i") != F.col("j"))
-        .select(
-            "i",
-            "j",
-            (1 + (F.col("i") * 7 + F.col("j") * 13) % 5).alias("w"),
-        )
-    )
-    return bradley_terry(comps, rounds=6)
-
-
-def _bradley_terry_sql() -> str:
-    from osm2geojson_spark.operators.analytics import bradley_terry_sql
-
-    comps = (
-        "SELECT a.n_nationkey AS i, b.n_nationkey AS j,"
-        " 1 + (a.n_nationkey * 7 + b.n_nationkey * 13) % 5 AS w"
-        " FROM nation a JOIN nation b ON a.n_nationkey <> b.n_nationkey"
-    )
-    return bradley_terry_sql(comps, rounds=6)
-
-
 def q_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X319 (functions.text.rake_phrases): RAKE keyphrase mining over
     every 3rd document — stopword-delimited candidate phrases, exact
@@ -14907,140 +12887,6 @@ def _coloring_sql() -> str:
         " (p_partkey * 13 + 5) % (SELECT COUNT(*) FROM part) FROM part"
     )
     return G.greedy_coloring_sql(edges, rounds=12)
-
-
-def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X322 (analytics.seasonal_anomaly): per-(event_type, hour-of-day)
-    robust median/MAD anomaly gate over cent values — exact order
-    statistics, integer cross-multiplied 5·MAD flag."""
-    from osm2geojson_spark.operators.analytics import seasonal_anomaly
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        (
-            (F.col("ts").cast("timestamp").cast("long") / 3600).cast("long") % 24
-        ).alias("slot"),
-        F.col("event_id").alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-    )
-    return seasonal_anomaly(ev)
-
-
-def _seasonal_anomaly_sql() -> str:
-    from osm2geojson_spark.operators.analytics import seasonal_anomaly_sql
-
-    series = (
-        "SELECT event_type AS g,"
-        " CAST(floor(epoch(ts)) AS BIGINT) // 3600 % 24 AS slot,"
-        " event_id AS t,"
-        " CAST(round(value * 100) AS BIGINT) AS x FROM events"
-    )
-    return seasonal_anomaly_sql(series)
-
-
-def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X323 (analytics.t_closeness): t-closeness privacy audit of
-    (nation, segment) anonymity cells against the global acctbal-band
-    distribution — exact-rational 1-D EMD, cross-multiplied t = 1/5
-    breach gate."""
-    from osm2geojson_spark.operators.analytics import t_closeness
-
-    rows = _t(spark, sf_dir, "customer").select(
-        F.concat_ws(
-            "|", F.col("c_nationkey").cast("string"), F.col("c_mktsegment")
-        ).alias("cell"),
-        F.floor(F.col("c_acctbal") / 500).cast("long").alias("v"),
-    )
-    return t_closeness(rows)
-
-
-def _t_closeness_sql() -> str:
-    from osm2geojson_spark.operators.analytics import t_closeness_sql
-
-    rows = (
-        "SELECT CAST(c_nationkey AS VARCHAR) || '|' || c_mktsegment AS cell,"
-        " CAST(floor(c_acctbal / 500) AS BIGINT) AS v FROM customer"
-    )
-    return t_closeness_sql(rows)
-
-
-def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X324 (analytics.item_cf_neighbors): co-purchase item-item CF on
-    lineitem baskets (order = basket, part = item) — binary cosine
-    ranked by the exact integer quotient, top-5 neighbors per part."""
-    from osm2geojson_spark.operators.analytics import item_cf_neighbors
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("user"), F.col("l_partkey").alias("item")
-    )
-    return item_cf_neighbors(li, k=5)
-
-
-def _item_cf_sql() -> str:
-    from osm2geojson_spark.operators.analytics import item_cf_neighbors_sql
-
-    return item_cf_neighbors_sql(
-        'SELECT l_orderkey AS "user", l_partkey AS item FROM lineitem', k=5
-    )
-
-
-def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X325 (analytics.ipf_raking): survey raking of the customer
-    (nation × segment) contingency table to hash-perturbed margin
-    targets — six fixed-point IPF rounds, bit-equal unrolled twin."""
-    from osm2geojson_spark.operators.analytics import ipf_raking
-
-    cells = _t(spark, sf_dir, "customer").groupBy(
-        F.col("c_nationkey").alias("r"), F.col("c_mktsegment").alias("c")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    rt = cells.groupBy("r").agg(
-        (F.sum("n") + (F.col("r") * 13) % 10).cast("long").alias("target")
-    )
-    ct = cells.groupBy("c").agg(
-        (F.sum("n") + F.length(F.col("c")) % 7).cast("long").alias("target")
-    )
-    return ipf_raking(cells, rt, ct, rounds=6)
-
-
-def _ipf_raking_sql() -> str:
-    from osm2geojson_spark.operators.analytics import ipf_raking_sql
-
-    cells = (
-        "SELECT c_nationkey AS r, c_mktsegment AS c, COUNT(*) AS n"
-        " FROM customer GROUP BY 1, 2"
-    )
-    rt = (
-        f"SELECT r, SUM(n) + (r * 13) % 10 AS target FROM ({cells}) GROUP BY r"
-    )
-    ct = (
-        f"SELECT c, SUM(n) + length(c) % 7 AS target FROM ({cells}) GROUP BY c"
-    )
-    return ipf_raking_sql(cells, rt, ct, rounds=6)
-
-
-def q_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X326 (analytics.sprt_decisions): Wald SPRT per event_type —
-    success = value > 240, H0 p=1/2 vs H1 p=3/5, alpha = 5%; exact
-    integer LLR walk, first-crossing decision."""
-    from osm2geojson_spark.operators.analytics import sprt_decisions
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        "ts",
-        "event_id",
-        (F.col("value") > 240).cast("long").alias("x"),
-    )
-    return sprt_decisions(ev, order_cols=("ts", "event_id"))
-
-
-def _sprt_sql() -> str:
-    from osm2geojson_spark.operators.analytics import sprt_decisions_sql
-
-    trials = (
-        "SELECT event_type AS g, ts, event_id,"
-        " CASE WHEN value > 240 THEN 1 ELSE 0 END AS x FROM events"
-    )
-    return sprt_decisions_sql(trials, order_by="ts, event_id")
 
 
 def q_convex_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -15118,55 +12964,6 @@ def _novelty_sql() -> str:
     return novelty_scores_sql(
         "SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0"
     )
-
-
-def q_basket3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X330 (analytics.frequent_triples): Apriori 3-itemsets over
-    lineitem baskets with items coarsened to partkey % 20 — downward-
-    closure candidate prune, exact support and independence lift."""
-    from osm2geojson_spark.operators.analytics import frequent_triples
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("basket"),
-        (F.col("l_partkey") % 20).alias("item"),
-    )
-    return frequent_triples(li, min_support=4)
-
-
-def _basket3_sql() -> str:
-    from osm2geojson_spark.operators.analytics import frequent_triples_sql
-
-    return frequent_triples_sql(
-        "SELECT l_orderkey AS basket, l_partkey % 20 AS item FROM lineitem",
-        min_support=4,
-    )
-
-
-def q_did(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X331 (analytics.diff_in_diff): DiD launch-impact readout on
-    events — treated = even users, post = second half of the window,
-    cent values; one combinable aggregate, exact micro means."""
-    from osm2geojson_spark.operators.analytics import diff_in_diff
-
-    ev = _t(spark, sf_dir, "events").select(
-        (F.col("user_id") % 2 == 0).cast("long").alias("treated"),
-        (F.col("ts") >= F.lit("2024-01-16").cast("timestamp"))
-        .cast("long")
-        .alias("post"),
-        F.round(F.col("value") * 100).cast("long").alias("y"),
-    )
-    return diff_in_diff(ev)
-
-
-def _did_sql() -> str:
-    from osm2geojson_spark.operators.analytics import diff_in_diff_sql
-
-    rows = (
-        "SELECT CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS treated,"
-        " CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END AS post,"
-        " CAST(round(value * 100) AS BIGINT) AS y FROM events"
-    )
-    return diff_in_diff_sql(rows)
 
 
 def q_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -15269,82 +13066,6 @@ def _fuzzy2_join_sql() -> str:
     )
 
 
-def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X336 (analytics.acf_table): Box-Jenkins autocorrelation table of
-    each event_type's cent series at lags 1-5 — exact integer
-    sufficient statistics over exactly-aligned windows."""
-    from osm2geojson_spark.operators.analytics import acf_table
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-    )
-    return acf_table(ev, order_cols=("ts", "event_id"))
-
-
-def _acf_sql() -> str:
-    from osm2geojson_spark.operators.analytics import acf_table_sql
-
-    series = (
-        "SELECT event_type AS g, ts, event_id,"
-        " CAST(round(value * 100) AS BIGINT) AS x FROM events"
-    )
-    return acf_table_sql(series, order_by="ts, event_id")
-
-
-def q_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X337 (analytics.theil_index): Theil T inequality of customer
-    balances per market segment — micro-nat quantized entropy terms,
-    clamped integer assembly (decomposable sibling of gini)."""
-    from osm2geojson_spark.operators.analytics import theil_index
-
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_mktsegment").alias("g"),
-        F.greatest(F.round(F.col("c_acctbal") * 100), F.lit(0))
-        .cast("long")
-        .alias("x"),
-    )
-    return theil_index(c)
-
-
-def _theil_sql() -> str:
-    from osm2geojson_spark.operators.analytics import theil_index_sql
-
-    rows = (
-        "SELECT c_mktsegment AS g,"
-        " GREATEST(CAST(round(c_acctbal * 100) AS BIGINT), 0) AS x"
-        " FROM customer"
-    )
-    return theil_index_sql(rows)
-
-
-def q_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X338 (analytics.gumbel_fit): Gumbel extreme-value fit of each
-    event_type's 16-sample block maxima (cent values) — integer-
-    rational plotting positions, quantized OLS, pinned assembly."""
-    from osm2geojson_spark.operators.analytics import gumbel_fit
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-    )
-    return gumbel_fit(ev, order_cols=("ts", "event_id"))
-
-
-def _gumbel_sql() -> str:
-    from osm2geojson_spark.operators.analytics import gumbel_fit_sql
-
-    series = (
-        "SELECT event_type AS g, ts, event_id,"
-        " CAST(round(value * 100) AS BIGINT) AS x FROM events"
-    )
-    return gumbel_fit_sql(series, order_by="ts, event_id")
-
-
 # Round-5 rotation (VERDICT r4 ask #1): the registry is FROZEN — no new queries
 # this round — and the driver's 50-slot correctness window is pointed at the 50
 # OLDEST names never recorded in CORRECTNESS_r01–r04 (the LLM-pipeline core:
@@ -15377,31 +13098,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- round-4 continuation: newest first (never driver-recorded)
-        "gumbel": q_gumbel,
-        "theil": q_theil,
-        "acf": q_acf,
         "fuzzy2_join": q_fuzzy2_join,
         "reciprocity": q_reciprocity,
         "matching": q_matching,
         "sentiment": q_sentiment,
-        "did": q_did,
-        "basket3": q_basket3,
         "novelty": q_novelty,
         "harmonic_centrality": q_harmonic_centrality,
         "convex_layers": q_convex_layers,
-        "sprt": q_sprt,
-        "ipf_raking": q_ipf_raking,
-        "item_cf": q_item_cf,
-        "t_closeness": q_t_closeness,
-        "seasonal_anomaly": q_seasonal_anomaly,
         "coloring": q_coloring,
         "bootstrap_ci": q_bootstrap_ci,
         "rake": q_rake,
-        "bradley_terry": q_bradley_terry,
         "mis": q_mis,
         "fs_linkage": q_fs_linkage,
         "cube_metrics": q_cube_metrics,
-        "allan_variance": q_allan_variance,
         "stable_matching": q_stable_matching,
         "k_truss": q_k_truss,
         "rocchio": q_rocchio,
@@ -15409,14 +13118,10 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quadrat": q_quadrat,
         "undistort": q_undistort,
         "lcs_similarity": q_lcs_similarity,
-        "tree_depth2": q_tree_depth2,
         "betweenness": q_betweenness,
-        "naive_bayes": q_naive_bayes,
         "pitch_track": q_pitch_track,
         "scc": q_scc,
         "huff_model": q_huff_model,
-        "hurst": q_hurst,
-        "readability": q_readability,
         "phonetic_dedup": q_phonetic_dedup,
         "bilateral": q_bilateral,
         "unsharp": q_unsharp,
@@ -15424,11 +13129,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "median_center": q_median_center,
         "knox": q_knox,
         "rrf_fusion": q_rrf_fusion,
-        "fd_check": q_fd_check,
-        "fk_discovery": q_fk_discovery,
         "critical_path": q_critical_path,
-        "knee_point": q_knee_point,
-        "snapshot_diff": q_snapshot_diff,
         "psnr_gate": q_psnr_gate,
         "simrank": q_simrank,
         "cost_distance": q_cost_distance,
@@ -15438,34 +13139,23 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate": q_boilerplate,
         "keyframes": q_keyframes,
         "url_canon": q_url_canon,
-        "stump_train": q_stump_train,
         "cell_buffer": q_cell_buffer,
         "audio_resample": q_audio_resample,
         "cepstrum": q_cepstrum,
         "knn_classify": q_knn_classify,
         "pii_scan": q_pii_scan,
-        "sax": q_sax,
         "bearing_stats": q_bearing_stats,
         "ppr": q_ppr,
         "clique4": q_clique4,
         "f2_sketch": q_f2_sketch,
-        "pr_curve": q_pr_curve,
-        "bollinger": q_bollinger,
-        "pearson": q_pearson,
         "canonical_pick": q_canonical_pick,
-        "quantile_norm": q_quantile_norm,
         "l_diversity": q_l_diversity,
         "shot_detect": q_shot_detect,
-        "matrix_profile": q_matrix_profile,
         "str_partition": q_str_partition,
-        "v_optimal": q_v_optimal,
         "rich_club": q_rich_club,
-        "binary_seg": q_binary_seg,
-        "backtest": q_backtest,
         "label_spread": q_label_spread,
         "hilbert_ranges": q_hilbert_ranges,
         "k_centers": q_k_centers,
-        "topsis": q_topsis,
         "focal_majority": q_focal_majority,
         "flow_accum": q_flow_accum,
         "ring_validity": q_ring_validity,
@@ -15478,68 +13168,43 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "filterbank": q_filterbank,
         "dog_keypoints": q_dog_keypoints,
         "pca_top": q_pca_top,
-        "markov_attribution": q_markov_attribution,
         "alpha_shape": q_alpha_shape,
-        "abc_analysis": q_abc_analysis,
         "keyword_extract": q_keyword_extract,
-        "target_encode": q_target_encode,
         "winnow": q_winnow,
         "clustering_coeff": q_clustering_coeff,
-        "emd_drift": q_emd_drift,
         "color_quantize": q_color_quantize,
         "tone_detect": q_tone_detect,
         "anchor_assign": q_anchor_assign,
-        "xcorr": q_xcorr,
-        "trimmed_mean": q_trimmed_mean,
         "squares": q_squares,
         "viterbi": q_viterbi,
-        "conformal": q_conformal,
         "demosaic": q_demosaic,
-        "benford": q_benford,
         "stream_topk": q_stream_topk,
         "tree_rollup": q_tree_rollup,
         "iou_track": q_iou_track,
-        "ewma": q_ewma,
         "haar_energy": q_haar,
         "assortativity": q_assortativity,
-        "kruskal": q_kruskal,
         "vad_segments": q_vad,
         "coverage_select": q_coverage_select,
-        "theil_sen": q_theil_sen,
         "brief_match": q_brief_match,
         "delaunay": q_delaunay,
         "maxsim": q_maxsim,
-        "isotonic": q_isotonic,
         "dither": q_dither,
-        "kendall": q_kendall,
         "mask_iou": q_mask_iou,
         "fast_corners": q_fast_corners,
         "lbp": q_lbp,
         "join_counts": q_join_counts,
-        "seasonal": q_seasonal,
         "hard_negatives": q_hard_negatives,
-        "spearman": q_spearman,
-        "mann_whitney": q_mann_whitney,
         "scan_stat": q_scan_stat,
-        "scd2": q_scd2,
-        "attribution": q_attribution,
         "link_prediction": q_link_prediction,
-        "kappa": q_kappa,
         "sd_ellipse": q_sd_ellipse,
         "hough": q_hough,
-        "rfm": q_rfm,
         "gaussian_blur": q_gaussian_blur,
         "min_bbox": q_min_bbox,
         "mmr": q_mmr,
         "pmi": q_pmi,
-        "gini": q_gini,
-        "ks_drift": q_ks_drift,
         "silhouette": q_silhouette,
-        "chi2": q_chi2,
-        "survival": q_survival,
         "decluster": q_decluster,
         "canny_nms": q_canny,
-        "mad_outliers": q_mad_outliers,
         "ranking_eval": q_ranking_eval,
         "ssim": q_ssim,
         "morph_openclose": q_morph_openclose,
@@ -15547,11 +13212,8 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "template_match": q_template_match,
         "hll_distinct": q_hll_distinct,
         "mutual_info": q_mutual_information,
-        "union_area": q_union_area,
-        "ab_test": q_ab_test,
         "watershed": q_watershed,
         "frechet": q_frechet,
-        "ransac_line": q_ransac_line,
         "flow_dir": q_flow_dir,
         "harris": q_harris,
         "segment_intersect": q_segment_intersect,
@@ -15563,12 +13225,8 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rle_mask": q_rle_mask,
         "morphology": q_morphology,
         "hist_match": q_hist_match,
-        "group_quantiles": q_group_quantiles,
         "min_seam": q_min_seam,
-        "psi_drift": q_psi_drift,
         "token_budget": q_token_budget,
-        "roc_auc": q_roc_auc,
-        "calibration": q_calibration,
         "block_motion": q_block_motion,
         "image_entropy": q_image_entropy,
         "polylabel": q_polylabel,
@@ -15588,27 +13246,18 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dirty_pyramid": q_dirty_pyramid,
         "compaction_plan": q_compaction_plan,
         "isolines": q_isolines,
-        "peak_concurrency": q_peak_concurrency,
         "resize_bilinear": q_resize_bilinear,
         "cusum_stream": q_cusum_stream,
         "profile": q_profile,
-        "twap": q_twap,
-        "ohlc": q_ohlc,
-        "basket": q_basket,
-        "cusum": q_cusum,
-        "interval_union": q_interval_union,
         "snm_dedup": q_snm_dedup,
         "gram_matrix": q_gram_matrix,
-        "cohort_retention": q_cohort_retention,
         "cms_join_card": q_cms_join_card,
         "fuzzy_join": q_fuzzy_join,
-        "funnel": q_funnel,
         "bloom_semijoin": q_bloom_semijoin,
         "warp_affine": q_warp_affine,
         "geodesic_area": q_geodesic_area,
         "distance_transform": q_distance_transform,
         "hog": q_hog,
-        "skyline": q_skyline,
         "cms_topk": q_cms_topk,
         "pps_sample": q_pps_sample,
         "k_core": q_k_core,
@@ -15766,31 +13415,19 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "gumbel": _gumbel_sql(),
-        "theil": _theil_sql(),
-        "acf": _acf_sql(),
         "fuzzy2_join": _fuzzy2_join_sql(),
         "reciprocity": _reciprocity_sql(),
         "matching": _matching_sql(),
         "sentiment": _sentiment_sql(),
-        "did": _did_sql(),
-        "basket3": _basket3_sql(),
         "novelty": _novelty_sql(),
         "harmonic_centrality": _harmonic_centrality_sql(),
         "convex_layers": _convex_layers_sql(),
-        "sprt": _sprt_sql(),
-        "ipf_raking": _ipf_raking_sql(),
-        "item_cf": _item_cf_sql(),
-        "t_closeness": _t_closeness_sql(),
-        "seasonal_anomaly": _seasonal_anomaly_sql(),
         "coloring": _coloring_sql(),
         "bootstrap_ci": _bootstrap_ci_sql(),
         "rake": _rake_sql(),
-        "bradley_terry": _bradley_terry_sql(),
         "mis": _mis_sql(),
         "fs_linkage": _fs_linkage_sql(),
         "cube_metrics": _CUBE_SQL,
-        "allan_variance": _allan_variance_sql(),
         "stable_matching": _stable_matching_sql(),
         "k_truss": _k_truss_sql(),
         "rocchio": _rocchio_sql(),
@@ -15798,14 +13435,10 @@ def oracle_sql() -> dict[str, str]:
         "quadrat": _quadrat_sql(),
         "undistort": _undistort_sql(),
         "lcs_similarity": _lcs_similarity_sql(),
-        "tree_depth2": _tree_depth2_sql(),
         "betweenness": _betweenness_sql(),
-        "naive_bayes": _naive_bayes_sql(),
         "pitch_track": _pitch_track_sql(),
         "scc": _scc_sql(),
         "huff_model": _huff_model_sql(),
-        "hurst": _hurst_sql(),
-        "readability": _readability_sql(),
         "phonetic_dedup": _phonetic_dedup_sql(),
         "bilateral": _bilateral_sql(),
         "unsharp": _unsharp_sql(),
@@ -15813,11 +13446,7 @@ def oracle_sql() -> dict[str, str]:
         "median_center": _median_center_sql(),
         "knox": _knox_sql(),
         "rrf_fusion": _rrf_fusion_sql(),
-        "fd_check": _fd_check_sql(),
-        "fk_discovery": _fk_discovery_sql(),
         "critical_path": _critical_path_sql(),
-        "knee_point": _knee_point_sql(),
-        "snapshot_diff": _snapshot_diff_sql(),
         "psnr_gate": _psnr_gate_sql(),
         "simrank": _simrank_sql(),
         "cost_distance": _cost_distance_sql(),
@@ -15827,34 +13456,23 @@ def oracle_sql() -> dict[str, str]:
         "boilerplate": _boilerplate_sql(),
         "keyframes": _keyframes_sql(),
         "url_canon": _url_canon_sql(),
-        "stump_train": _stump_train_sql(),
         "cell_buffer": _cell_buffer_sql(),
         "audio_resample": _audio_resample_sql(),
         "cepstrum": _cepstrum_sql(),
         "knn_classify": _knn_classify_sql(),
         "pii_scan": _pii_scan_sql(),
-        "sax": _sax_sql(),
         "bearing_stats": _bearing_stats_sql(),
         "ppr": _ppr_sql(),
         "clique4": _clique4_sql(),
         "f2_sketch": _f2_sketch_sql(),
-        "pr_curve": _pr_curve_sql(),
-        "bollinger": _bollinger_sql(),
-        "pearson": _pearson_sql(),
         "canonical_pick": _canonical_pick_sql(),
-        "quantile_norm": _quantile_norm_sql(),
         "l_diversity": _l_diversity_sql(),
         "shot_detect": _shot_detect_sql(),
-        "matrix_profile": _matrix_profile_sql(),
         "str_partition": _str_partition_sql(),
-        "v_optimal": _v_optimal_sql(),
         "rich_club": _rich_club_sql(),
-        "binary_seg": _binary_seg_sql(),
-        "backtest": _backtest_sql(),
         "label_spread": _label_spread_sql(),
         "hilbert_ranges": _hilbert_ranges_sql(),
         "k_centers": _k_centers_sql(),
-        "topsis": _topsis_sql(),
         "focal_majority": _focal_majority_sql(),
         "flow_accum": _flow_accum_sql(),
         "ring_validity": _ring_validity_sql(),
@@ -15867,68 +13485,43 @@ def oracle_sql() -> dict[str, str]:
         "filterbank": _filterbank_sql(),
         "dog_keypoints": _dog_keypoints_sql(),
         "pca_top": _pca_top_sql(),
-        "markov_attribution": _markov_attribution_sql(),
         "alpha_shape": _alpha_shape_sql(),
-        "abc_analysis": _abc_analysis_sql(),
         "keyword_extract": _keyword_extract_sql(),
-        "target_encode": _target_encode_sql(),
         "winnow": _winnow_sql(),
         "clustering_coeff": _clustering_coeff_sql(),
-        "emd_drift": _emd_drift_sql(),
         "color_quantize": _color_quantize_sql(),
         "tone_detect": _tone_detect_sql(),
         "anchor_assign": _anchor_assign_sql(),
-        "xcorr": _xcorr_sql(),
-        "trimmed_mean": _trimmed_mean_sql(),
         "squares": _squares_sql(),
         "viterbi": _viterbi_sql(),
-        "conformal": _conformal_sql(),
         "demosaic": _demosaic_sql(),
-        "benford": _benford_sql(),
         "stream_topk": _stream_topk_sql(),
         "tree_rollup": _tree_rollup_sql(),
         "iou_track": _iou_track_sql(),
-        "ewma": _ewma_sql(),
         "haar_energy": _haar_sql(),
         "assortativity": _assortativity_sql(),
-        "kruskal": _kruskal_sql(),
         "vad_segments": _vad_sql(),
         "coverage_select": _coverage_select_sql(),
-        "theil_sen": _theil_sen_sql(),
         "brief_match": _brief_match_sql(),
         "delaunay": _delaunay_sql(),
         "maxsim": _maxsim_sql(),
-        "isotonic": _isotonic_sql(),
         "dither": _dither_sql(),
-        "kendall": _kendall_sql(),
         "mask_iou": _mask_iou_sql(),
         "fast_corners": _fast_corners_sql(),
         "lbp": _lbp_sql(),
         "join_counts": _join_counts_sql(),
-        "seasonal": _seasonal_sql(),
         "hard_negatives": _hard_negatives_sql(),
-        "spearman": _spearman_sql(),
-        "mann_whitney": _mann_whitney_sql(),
         "scan_stat": _scan_stat_sql(),
-        "scd2": _scd2_sql(),
-        "attribution": _attribution_sql(),
         "link_prediction": _link_prediction_sql(),
-        "kappa": _kappa_sql(),
         "sd_ellipse": _sd_ellipse_sql(),
         "hough": _hough_sql(),
-        "rfm": _rfm_sql(),
         "gaussian_blur": _gaussian_blur_sql(),
         "min_bbox": _min_bbox_sql(),
         "mmr": _mmr_sql(),
         "pmi": _pmi_sql(),
-        "gini": _gini_sql(),
-        "ks_drift": _ks_drift_sql(),
         "silhouette": _silhouette_sql(),
-        "chi2": _chi2_sql(),
-        "survival": _survival_sql(),
         "decluster": _decluster_sql(),
         "canny_nms": _canny_sql(),
-        "mad_outliers": _mad_outliers_sql(),
         "ranking_eval": _ranking_eval_sql(),
         "ssim": _SSIM_SQL,
         "morph_openclose": _MORPH_OPENCLOSE_SQL,
@@ -15936,11 +13529,8 @@ def oracle_sql() -> dict[str, str]:
         "template_match": _TEMPLATE_MATCH_SQL,
         "hll_distinct": _hll_distinct_sql(),
         "mutual_info": _MUTUAL_INFO_SQL,
-        "union_area": _UNION_AREA_SQL,
-        "ab_test": _AB_TEST_SQL,
         "watershed": _WATERSHED_SQL,
         "frechet": _FRECHET_SQL,
-        "ransac_line": _RANSAC_LINE_SQL,
         "flow_dir": _FLOW_DIR_SQL,
         "harris": _HARRIS_SQL,
         "segment_intersect": _SEGMENT_INTERSECT_SQL,
@@ -15952,12 +13542,8 @@ def oracle_sql() -> dict[str, str]:
         "rle_mask": _RLE_MASK_SQL,
         "morphology": _MORPHOLOGY_SQL,
         "hist_match": _HIST_MATCH_SQL,
-        "group_quantiles": _GROUP_QUANTILES_SQL,
         "min_seam": _MIN_SEAM_SQL,
-        "psi_drift": _psi_drift_sql(),
         "token_budget": _TOKEN_BUDGET_SQL,
-        "roc_auc": _roc_auc_sql(),
-        "calibration": _calibration_sql(),
         "block_motion": _BLOCK_MOTION_SQL,
         "image_entropy": _IMAGE_ENTROPY_SQL,
         "polylabel": _POLYLABEL_SQL,
@@ -15977,27 +13563,18 @@ def oracle_sql() -> dict[str, str]:
         "dirty_pyramid": _dirty_pyramid_sql(),
         "compaction_plan": _compaction_plan_sql(),
         "isolines": _isolines_sql(),
-        "peak_concurrency": _peak_concurrency_sql(),
         "resize_bilinear": _resize_bilinear_sql(),
         "cusum_stream": _cusum_stream_sql(),
         "profile": _profile_sql(),
-        "twap": _twap_sql(),
-        "ohlc": _ohlc_sql(),
-        "basket": _basket_sql(),
-        "cusum": _cusum_sql(),
-        "interval_union": _interval_union_sql(),
         "snm_dedup": _snm_dedup_sql(),
         "gram_matrix": _gram_matrix_sql(),
-        "cohort_retention": _cohort_retention_sql(),
         "cms_join_card": _cms_join_card_sql(),
         "fuzzy_join": _fuzzy_join_sql(),
-        "funnel": _funnel_sql(),
         "bloom_semijoin": _bloom_semijoin_sql(),
         "warp_affine": _warp_affine_sql(),
         "geodesic_area": _geodesic_area_sql(),
         "distance_transform": _DISTANCE_TRANSFORM_SQL,
         "hog": _hog_sql(),
-        "skyline": _skyline_sql(),
         "cms_topk": _cms_topk_sql(),
         "pps_sample": _pps_sample_sql(),
         "k_core": _k_core_sql(),

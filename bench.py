@@ -79,12 +79,8 @@ BENCH_QUERIES = [
     "polylabel",
     "image_entropy",
     "block_motion",
-    "roc_auc",
-    "calibration",
     "token_budget",
-    "psi_drift",
     "min_seam",
-    "group_quantiles",
     "hist_match",
     "morphology",
     "rle_mask",
@@ -100,11 +96,8 @@ BENCH_QUERIES = [
     "segment_intersect",
     "harris",
     "flow_dir",
-    "ransac_line",
     "frechet",
     "watershed",
-    "ab_test",
-    "union_area",
     "mutual_info",
     "hll_distinct",
     "template_match",
@@ -112,7 +105,6 @@ BENCH_QUERIES = [
     "morph_openclose",
     "ssim",
     "ranking_eval",
-    "scd2",
     "hotspots",
     "focal_stats",
     "lisa",
@@ -199,7 +191,6 @@ BENCH_QUERIES = [
     "audio_autocorr",
     "k_core",
     "triangles",
-    "skyline",
     "cms_topk",
     "pps_sample",
     "distance_transform",
@@ -209,80 +200,48 @@ BENCH_QUERIES = [
     "warp_affine",
     "cms_join_card",
     "fuzzy_join",
-    "funnel",
     "gram_matrix",
-    "cohort_retention",
-    "cusum",
-    "interval_union",
     "snm_dedup",
-    "twap",
-    "ohlc",
-    "basket",
     "profile",
     "cusum_stream",
     "resize_bilinear",
-    "peak_concurrency",
-    "attribution",
     "link_prediction",
-    "kappa",
     "sd_ellipse",
     "hough",
-    "rfm",
     "gaussian_blur",
     "min_bbox",
     "mmr",
     "pmi",
-    "gini",
-    "ks_drift",
     "silhouette",
-    "chi2",
-    "survival",
     "decluster",
     "canny_nms",
-    "mad_outliers",
     "scan_stat",
-    "mann_whitney",
-    "spearman",
     "hard_negatives",
-    "seasonal",
     "join_counts",
     "lbp",
     "fast_corners",
     "mask_iou",
-    "kendall",
     "dither",
-    "isotonic",
     "maxsim",
     "delaunay",
     "brief_match",
-    "theil_sen",
     "coverage_select",
     "vad_segments",
-    "kruskal",
     "assortativity",
     "haar_energy",
-    "ewma",
     "iou_track",
     "tree_rollup",
     "stream_topk",
-    "benford",
     "demosaic",
-    "conformal",
     "viterbi",
     "squares",
-    "trimmed_mean",
-    "xcorr",
     "anchor_assign",
     "tone_detect",
     "color_quantize",
-    "emd_drift",
     "clustering_coeff",
     "winnow",
-    "target_encode",
     "keyword_extract",
-    "abc_analysis",
     "alpha_shape",
-    "markov_attribution",
     "pca_top",
     "dog_keypoints",
     "filterbank",
@@ -295,34 +254,23 @@ BENCH_QUERIES = [
     "ring_validity",
     "flow_accum",
     "focal_majority",
-    "topsis",
     "k_centers",
     "hilbert_ranges",
     "label_spread",
-    "backtest",
-    "binary_seg",
     "rich_club",
-    "v_optimal",
     "str_partition",
-    "matrix_profile",
     "shot_detect",
     "l_diversity",
-    "quantile_norm",
     "canonical_pick",
-    "pearson",
-    "bollinger",
-    "pr_curve",
     "f2_sketch",
     "clique4",
     "ppr",
     "bearing_stats",
-    "sax",
     "pii_scan",
     "knn_classify",
     "cepstrum",
     "audio_resample",
     "cell_buffer",
-    "stump_train",
     "url_canon",
     "keyframes",
     "boilerplate",
@@ -332,11 +280,7 @@ BENCH_QUERIES = [
     "cost_distance",
     "simrank",
     "psnr_gate",
-    "snapshot_diff",
-    "knee_point",
     "critical_path",
-    "fd_check",
-    "fk_discovery",
     "rrf_fusion",
     "knox",
     "median_center",
@@ -344,14 +288,10 @@ BENCH_QUERIES = [
     "unsharp",
     "bilateral",
     "phonetic_dedup",
-    "readability",
-    "hurst",
     "huff_model",
     "scc",
     "pitch_track",
-    "naive_bayes",
     "betweenness",
-    "tree_depth2",
     "lcs_similarity",
     "undistort",
     "quadrat",
@@ -359,31 +299,19 @@ BENCH_QUERIES = [
     "rocchio",
     "k_truss",
     "stable_matching",
-    "allan_variance",
     "cube_metrics",
     "fs_linkage",
     "mis",
-    "bradley_terry",
     "rake",
     "bootstrap_ci",
     "coloring",
-    "seasonal_anomaly",
-    "t_closeness",
-    "item_cf",
-    "ipf_raking",
-    "sprt",
     "convex_layers",
     "harmonic_centrality",
     "novelty",
-    "basket3",
-    "did",
     "sentiment",
     "matching",
     "reciprocity",
     "fuzzy2_join",
-    "acf",
-    "theil",
-    "gumbel",
 ]
 
 

@@ -25,7 +25,12 @@ _dirname = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def read_data_file(name: str) -> str:
     """Read a test data file from tests/data and return its contents
-    (reference helpers.py:19-30)."""
+    (reference helpers.py:19-30).
+
+    Works from a repository checkout only: the path is resolved against
+    the directory that contains the package, so an install into
+    site-packages (which ships no ``tests/`` tree) raises
+    ``FileNotFoundError``. The reference has the same contract."""
     path = os.path.join(_dirname, "tests", "data", name)
     with codecs.open(path, "r", encoding="utf-8") as data:
         return data.read()

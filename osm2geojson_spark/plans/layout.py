@@ -109,6 +109,39 @@ def compaction_plan(
     )
 
 
+def _two_level_rank(
+    df: DataFrame, val_col: str, key_col: str, out_col: str, n_buckets: int = 64
+) -> DataFrame:
+    """Global dense 1-based row rank ordered by (val, key) WITHOUT a
+    single-partition window: value-range bucketing, per-bucket totals to
+    the driver once (<= n_buckets rows), per-bucket parallel row_number
+    shifted by the broadcast offsets — the same two-level scan as
+    sampling.pps_systematic. Skewed value distributions only unbalance
+    parallelism, never correctness."""
+    lo, hi = df.agg(F.min(val_col), F.max(val_col)).first()
+    if lo is None:
+        return df.withColumn(out_col, F.lit(None).cast("long"))
+    span = max(int(hi) - int(lo) + 1, 1)
+    bucket = F.expr(
+        f"CAST((({val_col} - {int(lo)}) * {n_buckets}) DIV {span} AS BIGINT)"
+    )
+    b = df.withColumn("_rb", bucket)
+    totals = sorted(
+        (r["_rb"], r["t"])
+        for r in b.groupBy("_rb").agg(F.count(F.lit(1)).alias("t")).collect()
+    )
+    off, acc = F.lit(0).cast("long"), 0
+    for bk, t in totals:
+        off = F.when(F.col("_rb") == bk, F.lit(acc).cast("long")).otherwise(off)
+        acc += t
+    w = Window.partitionBy("_rb").orderBy(
+        F.col(val_col).asc(), F.col(key_col).asc()
+    )
+    return b.withColumn(
+        out_col, (F.row_number().over(w).cast("long") + off)
+    ).drop("_rb")
+
+
 def str_partition(
     pts,
     n_slices: int = 8,
@@ -134,8 +167,6 @@ def str_partition(
     Scale: one two-level rank (bucket rollup to the driver once) + one
     per-slice window — two shuffles total, both combinable/partitioned;
     the result feeds repartitionByRange(slice, tile) on ingest."""
-    from ..operators.analytics import _two_level_rank
-
     base = pts.select(
         F.col(id_col).cast("long").alias("pid"),
         F.col(x_col).cast("long").alias("x"),

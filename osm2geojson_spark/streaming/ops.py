@@ -18,7 +18,7 @@ Design rules:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import cells
@@ -534,6 +534,88 @@ def windowed_heatmap(
     )
 
 
+def cusum_alarms(
+    df: DataFrame,
+    series_col: str,
+    ts_col: str,
+    value_col: str,
+    target: int,
+    h: int,
+) -> DataFrame:
+    """(series, ts, stat) — one-sided upward CUSUM change-point alarms
+    (Page 1954): with S_t the prefix sum of (value - target), the test
+    statistic is G_t = S_t - min_{s<=t} S_s and rows where G_t >= h are
+    alarms. The drift detector behind pipeline monitoring (a data
+    source's quality score creeping up/down) and sensor-break detection
+    — catches slow drifts a fixed threshold never fires on.
+
+    The recursive textbook form G_t = max(0, G_{t-1} + x_t - target) is
+    exactly this running-min formulation, but the latter is pure
+    windows: one running sum + one running min per series — no UDF, no
+    recursion, exact int64 in both engines (the ``value`` contract is
+    integer; quantize floats upstream).
+
+    Scale: both windows partition by series — parallel; output is alarm
+    rows only. Ties in ts break by value for a total order."""
+    w = (
+        Window.partitionBy("_s")
+        .orderBy("_ts", "_v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    base = df.select(
+        F.col(series_col).alias("_s"),
+        F.col(ts_col).alias("_ts"),
+        F.col(value_col).cast("long").alias("_v"),
+    )
+    ssum = F.sum(F.col("_v") - F.lit(int(target))).over(w)
+    # note: Spark resolves column names case-insensitively — never pair
+    # "_s" with "_S" in one frame
+    cur = base.withColumn("_psum", ssum).withColumn(
+        "_G", F.col("_psum") - F.least(F.min("_psum").over(w), F.lit(0))
+    )
+    return cur.filter(F.col("_G") >= F.lit(int(h))).select(
+        F.col("_s").alias(series_col),
+        F.col("_ts").alias(ts_col),
+        F.col("_G").cast("long").alias("stat"),
+    )
+
+
+def cusum_alarms_sql(
+    rows_cte: str,
+    series_col: str,
+    ts_col: str,
+    value_col: str,
+    target: int,
+    h: int,
+) -> str:
+    """DuckDB twin — identical windows, identical integer arithmetic."""
+    return f"""
+WITH cu_raw AS ({rows_cte}),
+cu AS (
+  SELECT {series_col} AS _s, {ts_col} AS _ts,
+         CAST({value_col} AS BIGINT) AS _v
+  FROM cu_raw
+),
+ps AS (
+  SELECT _s, _ts, _v,
+         sum(_v - {int(target)}) OVER w AS s_t
+  FROM cu
+  WINDOW w AS (PARTITION BY _s ORDER BY _ts, _v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+st AS (
+  SELECT _s, _ts, s_t,
+         least(min(s_t) OVER w, 0) AS m_t
+  FROM ps
+  WINDOW w AS (PARTITION BY _s ORDER BY _ts, _v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+SELECT _s AS {series_col}, _ts AS {ts_col},
+       CAST(s_t - m_t AS BIGINT) AS stat
+FROM st WHERE s_t - m_t >= {int(h)}
+"""
+
+
 def streaming_cusum(
     df: DataFrame,
     series_col: str,
@@ -543,7 +625,7 @@ def streaming_cusum(
     h: int,
 ) -> DataFrame:
     """LIVE DRIFT ALARMS — the streaming form of
-    ``analytics.cusum_alarms``: per series, maintain Page's statistic
+    ``cusum_alarms``: per series, maintain Page's statistic
     G = max(0, G + value - target) across micro-batches (state = one
     int64) and emit (series, ts, stat) whenever G >= h. Stream output
     == the batch operator on the same history (the parity test's
@@ -562,8 +644,6 @@ def streaming_cusum(
     all stateful operators pay. On batch input it delegates to the
     fully relational window form."""
     if not df.isStreaming:
-        from ..operators.analytics import cusum_alarms
-
         return cusum_alarms(df, series_col, ts_col, value_col, target, h)
 
     import numpy as np

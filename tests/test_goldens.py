@@ -106,13 +106,17 @@ def _all_docs():
     return docs
 
 
-@pytest.fixture(scope="session")
-def converted(spark):
+def _convert_all(spark):
     docs = _all_docs()
     unfiltered_docs = {"json:issue-9-all": docs.pop("json:issue-9-all")}
     out = convert_documents(spark, docs)
     out.update(convert_documents(spark, unfiltered_docs, filter_used_refs=False))
     return out
+
+
+@pytest.fixture(scope="session")
+def converted(spark):
+    return _convert_all(spark)
 
 
 def _rings_canonical(poly):
@@ -148,12 +152,16 @@ def test_issue_9_unfiltered(converted):
     assert converted["json:issue-9-all"] == read_json("issue-9-all.geojson")["features"]
 
 
-def test_issue_35_semantic(converted):
+def _assert_issue_35(converted):
     got = converted["json:issue-35"]
     exp = read_json("issue-35.geojson")["features"]
     assert len(got) == len(exp) == 1
     assert got[0]["properties"] == exp[0]["properties"]
     assert_semantic_multipolygon_equal(got[0]["geometry"], exp[0]["geometry"])
+
+
+def test_issue_35_semantic(converted):
+    _assert_issue_35(converted)
 
 
 def test_issue_35_noded_pair_repro():
@@ -183,7 +191,7 @@ def test_issue_35_noded_pair_repro():
     assert len(out) == 2
 
 
-def test_issue_54(converted):
+def _assert_issue_54(converted):
     features = converted["xml:issue-54"]
     assert len(features) == 1
     g = features[0]["geometry"]
@@ -191,6 +199,33 @@ def test_issue_54(converted):
     assert g["type"] == "MultiPolygon"
     assert len(g["coordinates"]) == 1
     assert len(g["coordinates"][0]) == 2
+
+
+def test_issue_54(converted):
+    _assert_issue_54(converted)
+
+
+def test_goldens_invariant_at_7_partitions_with_aqe(spark):
+    """Shuffle partition count and AQE must not change any output: the
+    whole golden set, converted again at 7 shuffle partitions with AQE on,
+    still matches byte-exactly (issue-35 semantically)."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        out = _convert_all(spark)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    for name in XML_CASES:
+        assert out[f"xml:{name}"] == read_json(f"{name}.geojson")["features"], name
+    for name in JSON_CASES:
+        if f"json:{name}" not in SEMANTIC_ONLY:
+            assert out[f"json:{name}"] == read_json(f"{name}.geojson")["features"], name
+    assert out["json:issue-9-all"] == read_json("issue-9-all.geojson")["features"]
+    _assert_issue_35(out)
+    _assert_issue_54(out)
 
 
 def test_strict_mode_raises_on_map(spark):

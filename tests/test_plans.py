@@ -180,17 +180,22 @@ def test_session10_plan_shapes(spark):
     assert "EvalPython" not in plan
     assert "CartesianProduct" not in plan
 
-    # FD audit: pure aggregates, JVM-only, no joins at all
-    plan = _plan(E.queries()["fd_check"](spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert "Join" not in plan
-
     # perceptron: weight vector broadcasts against the exploded features
     plan = _plan(E.queries()["perceptron"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
-    # readability / knox / quadrat: JVM-only column algebra
-    for name in ("readability", "quadrat"):
-        plan = _plan(E.queries()[name](spark, SF_DIR))
-        assert "EvalPython" not in plan, name
+    # quadrat: JVM-only column algebra
+    plan = _plan(E.queries()["quadrat"](spark, SF_DIR))
+    assert "EvalPython" not in plan
+
+
+def test_registry_oracles_and_bench_list_agree():
+    """Every registered query has a DuckDB oracle and every oracle a
+    registered query (no orphaned oracle SQL); bench only times
+    registered queries (no stale names)."""
+    import bench
+
+    names = set(E.queries())
+    assert names == set(E.oracle_sql())
+    assert set(bench.BENCH_QUERIES) <= names
