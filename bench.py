@@ -80,7 +80,9 @@ BENCH_QUERIES = [
     "image_entropy",
     "block_motion",
     "token_budget",
+    "psi_drift",
     "min_seam",
+    "group_quantiles",
     "hist_match",
     "morphology",
     "rle_mask",
@@ -98,6 +100,7 @@ BENCH_QUERIES = [
     "flow_dir",
     "frechet",
     "watershed",
+    "ab_test",
     "mutual_info",
     "hll_distinct",
     "template_match",
@@ -105,6 +108,7 @@ BENCH_QUERIES = [
     "morph_openclose",
     "ssim",
     "ranking_eval",
+    "scd2",
     "hotspots",
     "focal_stats",
     "lisa",
@@ -191,6 +195,7 @@ BENCH_QUERIES = [
     "audio_autocorr",
     "k_core",
     "triangles",
+    "skyline",
     "cms_topk",
     "pps_sample",
     "distance_transform",
@@ -202,10 +207,13 @@ BENCH_QUERIES = [
     "fuzzy_join",
     "gram_matrix",
     "snm_dedup",
+    "ohlc",
+    "basket",
     "profile",
     "cusum_stream",
     "resize_bilinear",
     "link_prediction",
+    "kappa",
     "sd_ellipse",
     "hough",
     "gaussian_blur",
@@ -229,6 +237,7 @@ BENCH_QUERIES = [
     "vad_segments",
     "assortativity",
     "haar_energy",
+    "ewma",
     "iou_track",
     "tree_rollup",
     "stream_topk",
@@ -312,6 +321,7 @@ BENCH_QUERIES = [
     "matching",
     "reciprocity",
     "fuzzy2_join",
+    "theil",
 ]
 
 

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .sampling import _H_MOD, sample_hash, sample_hash_sql
+from .sampling import _H_MOD, sample_hash
 
 
 def _sweep_skyline(pts: DataFrame) -> DataFrame:
@@ -109,503 +109,6 @@ WHERE NOT EXISTS (
   SELECT 1 FROM pts q
   WHERE q.x <= p.x AND q.y <= p.y AND (q.x < p.x OR q.y < p.y)
 )
-"""
-
-
-def funnel_depths(
-    events: DataFrame,
-    steps: list[str],
-    window_s: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """(user_id, n_anchors, depth) — WINDOWED FUNNEL ANALYSIS
-    (ClickHouse windowFunnel semantics): a user's depth is the largest k
-    such that some step-1 event anchors a strictly-ordered chain
-    step1 < step2 < ... < stepk (order by (ts, event_id) — total, so
-    equal timestamps break deterministically) all within ``window_s``
-    seconds of the anchor. Greedy earliest-next matching per anchor is
-    optimal (exchange argument), so the semantics are exact, not
-    heuristic. Users with no step-1 event emit no row.
-
-    Shape: one per-user descending-window pass marks every event with
-    the NEXT occurrence index of each later step (k-1 conditional mins
-    over one window frame), then k-2 per-user equi-joins chain the
-    lookups anchor -> step2 row -> step3 row. Everything partitions by
-    user: no global window, no UDF.
-
-    Scale: windows and joins are all (user)-keyed — parallel and
-    combinable; a power-user's event list lives in one partition slice
-    (bound it upstream with a time filter if a bot writes millions of
-    events). k is the query, not the data: the plan has k-2 joins."""
-    assert len(steps) >= 2
-    w_ord = Window.partitionBy("_u").orderBy("_ts", "_eid")
-    ev = events.select(
-        F.col(user_col).alias("_u"),
-        F.col(ts_col).cast("timestamp").alias("_ts"),
-        F.col(id_col).alias("_eid"),
-        F.col(type_col).alias("_ty"),
-    ).withColumn("_idx", F.row_number().over(w_ord))
-    w_next = Window.partitionBy("_u").orderBy("_idx").rowsBetween(
-        1, Window.unboundedFollowing
-    )
-    nxt_cols = []
-    for si, step in enumerate(steps[1:], start=2):
-        ev = ev.withColumn(
-            f"_nxt{si}",
-            F.min(F.when(F.col("_ty") == step, F.col("_idx"))).over(w_next),
-        )
-        nxt_cols.append(f"_nxt{si}")
-    anchors = ev.filter(F.col("_ty") == steps[0]).select(
-        "_u", F.col("_ts").alias("_t0"), F.col("_idx").alias("_i1"), *nxt_cols
-    )
-    limit = F.col("_t0") + F.expr(f"INTERVAL {int(window_s)} SECONDS")
-    cur = anchors.withColumn("_depth", F.lit(1)).withColumn(
-        "_chain", F.col(f"_nxt2") if len(steps) >= 2 else F.lit(None)
-    )
-    for si in range(2, len(steps) + 1):
-        # the candidate event for step si is cur._chain (an _idx); join
-        # its row to test the window and pick up ITS next-step pointer
-        nxt_needed = f"_nxt{si + 1}" if si < len(steps) else None
-        right = ev.select(
-            F.col("_u").alias("_ru"), F.col("_idx").alias("_ridx"),
-            F.col("_ts").alias("_rts"),
-            *( [F.col(nxt_needed).alias("_rnxt")] if nxt_needed else [] ),
-        )
-        cur = cur.join(
-            right,
-            (F.col("_u") == F.col("_ru")) & (F.col("_chain") == F.col("_ridx")),
-            "left",
-        )
-        ok = F.col("_rts").isNotNull() & (F.col("_rts") <= limit) & (
-            F.col("_depth") == si - 1
-        )
-        # materialize the gate BEFORE mutating _depth: the second
-        # withColumn would otherwise re-evaluate `ok` against the
-        # already-advanced depth and null the chain pointer
-        cur = (
-            cur.withColumn("_ok", ok)
-            .withColumn(
-                "_depth",
-                F.when(F.col("_ok"), F.lit(si)).otherwise(F.col("_depth")),
-            )
-            .withColumn(
-                "_chain",
-                F.when(
-                    F.col("_ok") & F.lit(nxt_needed is not None),
-                    F.col("_rnxt") if nxt_needed else F.lit(None),
-                ),
-            )
-            .drop("_ok", "_ru", "_ridx", "_rts", *(["_rnxt"] if nxt_needed else []))
-        )
-    return cur.groupBy("_u").agg(
-        F.count(F.lit(1)).cast("long").alias("n_anchors"),
-        F.max("_depth").cast("int").alias("depth"),
-    ).select(F.col("_u").alias(user_col), "n_anchors", "depth")
-
-
-def funnel_depths_sql(
-    events_cte: str,
-    steps: list[str],
-    window_s: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> str:
-    """DuckDB twin — identical windows and chain joins."""
-    assert 2 <= len(steps) <= 4
-    nxt_defs = ", ".join(
-        f"min(CASE WHEN {type_col} = '{steps[si - 1]}' THEN _idx END)"
-        f" OVER (PARTITION BY {user_col} ORDER BY _idx"
-        f" ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS _nxt{si}"
-        for si in range(2, len(steps) + 1)
-    )
-    sql = f"""
-WITH fd_raw AS ({events_cte}),
-fd_ev AS (
-  SELECT {user_col}, {ts_col} AS _ts, {type_col},
-         row_number() OVER (PARTITION BY {user_col}
-                            ORDER BY {ts_col}, {id_col}) AS _idx
-  FROM fd_raw
-),
-fd_nx AS (
-  SELECT *, {nxt_defs} FROM fd_ev
-),
-fd_chain AS (
-  SELECT a.{user_col}, a._ts AS t0,
-         b._ts AS t2{", b._nxt3 AS i3" if len(steps) >= 3 else ""}
-  FROM fd_nx a LEFT JOIN fd_nx b
-    ON b.{user_col} = a.{user_col} AND b._idx = a._nxt2
-  WHERE a.{type_col} = '{steps[0]}'
-)"""
-    if len(steps) == 2:
-        depth = (
-            f"CASE WHEN t2 IS NOT NULL AND t2 <= t0 + INTERVAL {window_s} SECOND"
-            f" THEN 2 ELSE 1 END"
-        )
-        return sql + f"""
-SELECT {user_col}, CAST(count(*) AS BIGINT) AS n_anchors,
-       CAST(max({depth}) AS INTEGER) AS depth
-FROM fd_chain GROUP BY {user_col}
-"""
-    # 3-step: one more chain join
-    depth = f"""CASE
-  WHEN t2 IS NOT NULL AND t2 <= t0 + INTERVAL {window_s} SECOND
-       AND t3 IS NOT NULL AND t3 <= t0 + INTERVAL {window_s} SECOND THEN 3
-  WHEN t2 IS NOT NULL AND t2 <= t0 + INTERVAL {window_s} SECOND THEN 2
-  ELSE 1 END"""
-    return sql + f""",
-fd_chain2 AS (
-  SELECT c.{user_col}, c.t0, c.t2, d._ts AS t3
-  FROM fd_chain c LEFT JOIN fd_nx d
-    ON d.{user_col} = c.{user_col} AND d._idx = c.i3
-)
-SELECT {user_col}, CAST(count(*) AS BIGINT) AS n_anchors,
-       CAST(max({depth}) AS INTEGER) AS depth
-FROM fd_chain2 GROUP BY {user_col}
-"""
-
-
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """(cohort_week, week_offset, n_active, n_cohort, retention) —
-    COHORT RETENTION: users are cohorted by the ISO week of their FIRST
-    event; for each later week offset, how many of them were active.
-    The standard growth/engagement table, and (for training pipelines)
-    the contributor-churn view of a data source.
-
-    Exact: week truncation is calendar-deterministic (Monday start in
-    both engines), offsets are integer day-diffs / 7 (both weeks
-    truncated, so always divisible), counts are distinct-user counts,
-    and retention is the one float divide, rounded.
-
-    Scale: one user-keyed min (combinable), one distinct on
-    (user, week) — both shuffle on user; the cohort join is a broadcast
-    of cohort sizes (#weeks rows). No window at all."""
-    u, ts = F.col(user_col), F.col(ts_col).cast("timestamp")
-    firsts = (
-        events.select(u.alias("_u"), ts.alias("_ts"))
-        .groupBy("_u")
-        .agg(F.date_trunc("week", F.min("_ts")).alias("_cohort"))
-    )
-    active = (
-        events.select(u.alias("_u"), F.date_trunc("week", ts).alias("_week"))
-        .distinct()
-    )
-    joined = active.join(firsts, "_u").withColumn(
-        "_off",
-        (F.datediff(F.col("_week"), F.col("_cohort")) / F.lit(7)).cast("int"),
-    )
-    sizes = firsts.groupBy("_cohort").agg(
-        F.count(F.lit(1)).cast("long").alias("n_cohort")
-    )
-    out = joined.groupBy("_cohort", "_off").agg(
-        F.countDistinct("_u").cast("long").alias("n_active")
-    )
-    return (
-        out.join(F.broadcast(sizes), "_cohort")
-        .select(
-            F.col("_cohort").cast("date").alias("cohort_week"),
-            F.col("_off").alias("week_offset"),
-            "n_active",
-            "n_cohort",
-            F.round(
-                F.col("n_active").cast("double") / F.col("n_cohort").cast("double"),
-                6,
-            ).alias("retention"),
-        )
-    )
-
-
-def cohort_retention_sql(
-    events_cte: str, user_col: str = "user_id", ts_col: str = "ts"
-) -> str:
-    """DuckDB twin — identical truncations, counts, and the one divide."""
-    return f"""
-WITH cr_raw AS ({events_cte}),
-firsts AS (
-  SELECT {user_col} AS _u, date_trunc('week', min({ts_col})) AS _cohort
-  FROM cr_raw GROUP BY {user_col}
-),
-active AS (
-  SELECT DISTINCT {user_col} AS _u, date_trunc('week', {ts_col}) AS _week
-  FROM cr_raw
-),
-sizes AS (
-  SELECT _cohort, CAST(count(*) AS BIGINT) AS n_cohort
-  FROM firsts GROUP BY _cohort
-),
-j AS (
-  SELECT a._u, f._cohort,
-         CAST(datediff('day', f._cohort, a._week) / 7 AS INTEGER) AS _off
-  FROM active a JOIN firsts f ON f._u = a._u
-),
-agg AS (
-  SELECT _cohort, _off, CAST(count(DISTINCT _u) AS BIGINT) AS n_active
-  FROM j GROUP BY _cohort, _off
-)
-SELECT CAST(agg._cohort AS DATE) AS cohort_week, agg._off AS week_offset,
-       agg.n_active, sizes.n_cohort,
-       round(CAST(agg.n_active AS DOUBLE) / CAST(sizes.n_cohort AS DOUBLE), 6)
-         AS retention
-FROM agg JOIN sizes ON sizes._cohort = agg._cohort
-"""
-
-
-def cusum_alarms(
-    df: DataFrame,
-    series_col: str,
-    ts_col: str,
-    value_col: str,
-    target: int,
-    h: int,
-) -> DataFrame:
-    """(series, ts, stat) — one-sided upward CUSUM change-point alarms
-    (Page 1954): with S_t the prefix sum of (value - target), the test
-    statistic is G_t = S_t - min_{s<=t} S_s and rows where G_t >= h are
-    alarms. The drift detector behind pipeline monitoring (a data
-    source's quality score creeping up/down) and sensor-break detection
-    — catches slow drifts a fixed threshold never fires on.
-
-    The recursive textbook form G_t = max(0, G_{t-1} + x_t - target) is
-    exactly this running-min formulation, but the latter is pure
-    windows: one running sum + one running min per series — no UDF, no
-    recursion, exact int64 in both engines (the ``value`` contract is
-    integer; quantize floats upstream).
-
-    Scale: both windows partition by series — parallel; output is alarm
-    rows only. Ties in ts break by value for a total order."""
-    w = (
-        Window.partitionBy("_s")
-        .orderBy("_ts", "_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    base = df.select(
-        F.col(series_col).alias("_s"),
-        F.col(ts_col).alias("_ts"),
-        F.col(value_col).cast("long").alias("_v"),
-    )
-    ssum = F.sum(F.col("_v") - F.lit(int(target))).over(w)
-    # note: Spark resolves column names case-insensitively — never pair
-    # "_s" with "_S" in one frame
-    cur = base.withColumn("_psum", ssum).withColumn(
-        "_G", F.col("_psum") - F.least(F.min("_psum").over(w), F.lit(0))
-    )
-    return cur.filter(F.col("_G") >= F.lit(int(h))).select(
-        F.col("_s").alias(series_col),
-        F.col("_ts").alias(ts_col),
-        F.col("_G").cast("long").alias("stat"),
-    )
-
-
-def cusum_alarms_sql(
-    rows_cte: str,
-    series_col: str,
-    ts_col: str,
-    value_col: str,
-    target: int,
-    h: int,
-) -> str:
-    """DuckDB twin — identical windows, identical integer arithmetic."""
-    return f"""
-WITH cu_raw AS ({rows_cte}),
-cu AS (
-  SELECT {series_col} AS _s, {ts_col} AS _ts,
-         CAST({value_col} AS BIGINT) AS _v
-  FROM cu_raw
-),
-ps AS (
-  SELECT _s, _ts, _v,
-         sum(_v - {int(target)}) OVER w AS s_t
-  FROM cu
-  WINDOW w AS (PARTITION BY _s ORDER BY _ts, _v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-st AS (
-  SELECT _s, _ts, s_t,
-         least(min(s_t) OVER w, 0) AS m_t
-  FROM ps
-  WINDOW w AS (PARTITION BY _s ORDER BY _ts, _v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT _s AS {series_col}, _ts AS {ts_col},
-       CAST(s_t - m_t AS BIGINT) AS stat
-FROM st WHERE s_t - m_t >= {int(h)}
-"""
-
-
-def interval_union_length(
-    df: DataFrame,
-    group_col: str,
-    start_col: str,
-    end_col: str,
-) -> DataFrame:
-    """(group, covered, n_islands) — total length covered by a set of
-    possibly-overlapping half-open integer intervals [start, end) per
-    group, plus the count of disjoint islands. Uptime/union-coverage:
-    "how many seconds was the user online", "how much of the scan
-    window had sensor coverage" — double-counting overlaps is THE
-    classic bug this operator exists to avoid.
-
-    Gaps-and-islands, exact: per group, order by (start, end); a row
-    opens a NEW island when its start exceeds the running max end of
-    all previous rows; island id = prefix sum of the new-island flag;
-    covered = sum over islands of (max end - min start). Pure integer
-    windows, no UDF.
-
-    Scale: every window partitions by group — parallel; two window
-    passes + one rollup, all combinable. Degenerate/empty intervals
-    (end <= start) contribute zero length but still open islands if
-    disjoint — pinned in tests."""
-    w_ord = Window.partitionBy("_g").orderBy("_st", "_en")
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    base = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(start_col).cast("long").alias("_st"),
-        F.col(end_col).cast("long").alias("_en"),
-    )
-    prev_max = F.max("_en").over(w_prev)
-    marked = base.withColumn(
-        "_new",
-        F.when(prev_max.isNull() | (F.col("_st") > prev_max), 1).otherwise(0),
-    ).withColumn(
-        "_isl",
-        F.sum("_new").over(w_ord.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    islands = marked.groupBy("_g", "_isl").agg(
-        F.min("_st").alias("_a"),
-        F.max("_en").alias("_b"),
-    )
-    return islands.groupBy("_g").agg(
-        F.sum(F.greatest(F.col("_b") - F.col("_a"), F.lit(0)))
-        .cast("long")
-        .alias("covered"),
-        F.count(F.lit(1)).cast("long").alias("n_islands"),
-    ).select(F.col("_g").alias(group_col), "covered", "n_islands")
-
-
-def interval_union_length_sql(
-    rows_cte: str, group_col: str, start_col: str, end_col: str
-) -> str:
-    """DuckDB twin — identical island construction."""
-    return f"""
-WITH iu_raw AS ({rows_cte}),
-iu AS (
-  SELECT {group_col} AS _g, CAST({start_col} AS BIGINT) AS _st,
-         CAST({end_col} AS BIGINT) AS _en
-  FROM iu_raw
-),
-mk AS (
-  SELECT _g, _st, _en,
-         CASE WHEN max(_en) OVER wp IS NULL THEN 1
-              WHEN _st > max(_en) OVER wp THEN 1 ELSE 0 END AS _new
-  FROM iu
-  WINDOW wp AS (PARTITION BY _g ORDER BY _st, _en
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-isl AS (
-  SELECT _g, _st, _en,
-         sum(_new) OVER (PARTITION BY _g ORDER BY _st, _en
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS _isl
-  FROM mk
-),
-spans AS (
-  SELECT _g, _isl, min(_st) AS _a, max(_en) AS _b
-  FROM isl GROUP BY _g, _isl
-)
-SELECT _g AS {group_col},
-       CAST(sum(greatest(_b - _a, 0)) AS BIGINT) AS covered,
-       CAST(count(*) AS BIGINT) AS n_islands
-FROM spans GROUP BY _g
-"""
-
-
-def twap(
-    df: DataFrame,
-    series_col: str,
-    ts_col: str,
-    value_col: str,
-    end_ts: int,
-) -> DataFrame:
-    """(series, held_s, vt_sum, twap_q) — TIME-WEIGHTED AVERAGE of a
-    piecewise-constant signal per series: each observation holds its
-    value from its timestamp (integer seconds) until the next one, the
-    last until ``end_ts``; twap = sum(value * held) / total_held. The
-    sensor/position/pricing average that a plain AVG gets wrong the
-    moment sampling is irregular.
-
-    Exact: values are integer (quantize upstream), hold durations are
-    integer second diffs via one per-series lead(), vt_sum is an
-    order-free int64 sum, and twap_q = round to 6 dp of the one float
-    divide. Observations at or after ``end_ts`` contribute nothing
-    (zero hold); duplicate timestamps break ties by value so the hold
-    of the duplicate is zero in both engines.
-
-    Scale: one per-series window + one combinable rollup."""
-    w = Window.partitionBy("_s").orderBy("_ts", "_v")
-    base = df.select(
-        F.col(series_col).alias("_s"),
-        F.col(ts_col).cast("long").alias("_ts"),
-        F.col(value_col).cast("long").alias("_v"),
-    )
-    nxt = F.coalesce(F.lead("_ts").over(w), F.lit(int(end_ts)))
-    held = F.greatest(
-        F.least(nxt, F.lit(int(end_ts))) - F.col("_ts"), F.lit(0)
-    )
-    rows = base.withColumn("_held", held)
-    out = rows.groupBy("_s").agg(
-        F.sum("_held").cast("long").alias("held_s"),
-        F.sum(F.col("_v") * F.col("_held")).cast("long").alias("vt_sum"),
-    )
-    return out.select(
-        F.col("_s").alias(series_col),
-        "held_s",
-        "vt_sum",
-        F.when(
-            F.col("held_s") > 0,
-            F.round(
-                F.col("vt_sum").cast("double") / F.col("held_s").cast("double"),
-                6,
-            ),
-        ).alias("twap_q"),
-    )
-
-
-def twap_sql(
-    rows_cte: str, series_col: str, ts_col: str, value_col: str, end_ts: int
-) -> str:
-    """DuckDB twin — identical lead/clamp/rollup/divide."""
-    return f"""
-WITH tw_raw AS ({rows_cte}),
-tw AS (
-  SELECT {series_col} AS _s, CAST({ts_col} AS BIGINT) AS _ts,
-         CAST({value_col} AS BIGINT) AS _v
-  FROM tw_raw
-),
-held AS (
-  SELECT _s, _v,
-         greatest(least(coalesce(lead(_ts) OVER w, {int(end_ts)}),
-                        {int(end_ts)}) - _ts, 0) AS _held
-  FROM tw
-  WINDOW w AS (PARTITION BY _s ORDER BY _ts, _v)
-),
-agg AS (
-  SELECT _s, CAST(sum(_held) AS BIGINT) AS held_s,
-         CAST(sum(_v * _held) AS BIGINT) AS vt_sum
-  FROM held GROUP BY _s
-)
-SELECT _s AS {series_col}, held_s, vt_sum,
-       CASE WHEN held_s > 0
-            THEN round(CAST(vt_sum AS DOUBLE) / CAST(held_s AS DOUBLE), 6)
-       END AS twap_q
-FROM agg
 """
 
 
@@ -761,215 +264,6 @@ JOIN ic b ON b._i = pr.item_b
 """
 
 
-def peak_concurrency(
-    df: DataFrame,
-    group_col: str,
-    start_col: str,
-    end_col: str,
-) -> DataFrame:
-    """(group, peak, at_ts) — MAXIMUM CONCURRENT INTERVALS per group via
-    the +1/-1 sweep line: explode each [start, end) into (+1 at start,
-    -1 at end), running-sum in (ts, delta) order (ends sort BEFORE
-    starts at the same tick — half-open semantics), take the max and
-    the earliest tick achieving it. Peak sessions online, peak sensor
-    load, max overlapping visits — interval_union_length's sibling
-    (coverage vs height).
-
-    Exact integer; deterministic tie-break (earliest ts at the peak).
-
-    Scale: one explode (2 rows per interval), one group-partitioned
-    window, one combinable struct-max rollup."""
-    base = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(start_col).cast("long").alias("_st"),
-        F.col(end_col).cast("long").alias("_en"),
-    ).filter(F.col("_en") > F.col("_st"))
-    deltas = base.select(
-        "_g", F.explode(
-            F.array(
-                F.struct(F.col("_st").alias("_ts"), F.lit(1).alias("_d")),
-                F.struct(F.col("_en").alias("_ts"), F.lit(-1).alias("_d")),
-            )
-        ).alias("_e")
-    ).select("_g", F.col("_e._ts").alias("_ts"), F.col("_e._d").alias("_d"))
-    w = (
-        Window.partitionBy("_g")
-        .orderBy(F.col("_ts").asc(), F.col("_d").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    run = deltas.withColumn("_c", F.sum("_d").over(w))
-    best = run.groupBy("_g").agg(
-        F.max(
-            F.struct(F.col("_c").alias("c"), (-F.col("_ts")).alias("negts"))
-        ).alias("_b")
-    )
-    return best.select(
-        F.col("_g").alias(group_col),
-        F.col("_b.c").cast("long").alias("peak"),
-        (-F.col("_b.negts")).cast("long").alias("at_ts"),
-    )
-
-
-def peak_concurrency_sql(
-    rows_cte: str, group_col: str, start_col: str, end_col: str
-) -> str:
-    """DuckDB twin — identical sweep and tie-break."""
-    return f"""
-WITH pc_raw AS ({rows_cte}),
-pc AS (
-  SELECT {group_col} AS _g, CAST({start_col} AS BIGINT) AS _st,
-         CAST({end_col} AS BIGINT) AS _en
-  FROM pc_raw WHERE CAST({end_col} AS BIGINT) > CAST({start_col} AS BIGINT)
-),
-deltas AS (
-  SELECT _g, _st AS _ts, 1 AS _d FROM pc
-  UNION ALL SELECT _g, _en, -1 FROM pc
-),
-run AS (
-  SELECT _g, _ts,
-         sum(_d) OVER (PARTITION BY _g ORDER BY _ts, _d
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS _c
-  FROM deltas
-),
-best AS (
-  SELECT _g, max(struct_pack(c := _c, negts := -_ts)) AS _b FROM run
-  GROUP BY _g
-)
-SELECT _g AS {group_col}, CAST(_b.c AS BIGINT) AS peak,
-       CAST(-_b.negts AS BIGINT) AS at_ts
-FROM best
-"""
-
-
-def roc_auc(
-    scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
-) -> DataFrame:
-    """EXACT ROC-AUC (the Mann-Whitney U statistic) over a scored,
-    binary-labeled corpus — the model-eval rollup every training
-    pipeline runs on its held-out scores, computed with INTEGER rank
-    algebra so the result is exact and order-free at any scale:
-
-        AUC = (sum over positives of average rank - P(P+1)/2) / (P*N)
-
-    with average ranks under ties expanded per tied-score GROUP g
-    (n_g rows, pos_g positives, r_min_g the 1-based rank of the group's
-    first row in score-ascending order):
-
-        num2 = sum_g pos_g * (2*r_min_g + n_g - 1) - P*(P+1)
-        AUC  = num2 / (2*P*N)
-
-    Every quantity is an exact int64 from two combinable rollups plus
-    one cumulative window over the DISTINCT-score groups (corpus-
-    sublinear); no floats until the single final division.
-
-    Returns ONE row: (n, n_pos, n_neg, auc_num2, auc). AUC of a random
-    scorer ~0.5; NULL when either class is absent."""
-    g = (
-        scored.select(
-            F.col(score_col).alias("_s"),
-            F.col(label_col).cast("long").alias("_y"),
-        )
-        .groupBy("_s")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum("_y").cast("long").alias("pos_g"),
-        )
-    )
-    w = Window.orderBy("_s").rowsBetween(Window.unboundedPreceding, -1)
-    g = g.withColumn(
-        "r_min", (F.coalesce(F.sum("n_g").over(w), F.lit(0)) + 1).cast("long")
-    )
-    agg = g.agg(
-        F.sum("n_g").cast("long").alias("n"),
-        F.sum("pos_g").cast("long").alias("n_pos"),
-        F.sum(
-            F.col("pos_g") * (F.lit(2) * F.col("r_min") + F.col("n_g") - 1)
-        )
-        .cast("long")
-        .alias("rank2_sum"),
-    )
-    n_neg = (F.col("n") - F.col("n_pos")).alias("n_neg")
-    num2 = (
-        F.col("rank2_sum") - F.col("n_pos") * (F.col("n_pos") + 1)
-    ).alias("auc_num2")
-    ok = (F.col("n_pos") > 0) & (F.col("n") - F.col("n_pos") > 0)
-    auc = F.when(
-        ok,
-        F.round(
-            (F.col("rank2_sum") - F.col("n_pos") * (F.col("n_pos") + 1))
-            .cast("double")
-            / (
-                F.lit(2.0)
-                * F.col("n_pos").cast("double")
-                * (F.col("n") - F.col("n_pos")).cast("double")
-            ),
-            6,
-        )
-        + F.lit(0.0),
-    ).alias("auc")
-    return agg.select("n", "n_pos", n_neg, num2, auc)
-
-
-def calibration_bins(
-    scored: DataFrame,
-    n_bins: int = 10,
-    score_col: str = "score",
-    label_col: str = "label",
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """CALIBRATION / RELIABILITY BINS (the per-bin components of
-    Expected Calibration Error): scores in [0, 1) fixed-point units of
-    ``1/scale`` are cut into ``n_bins`` equal bins; each bin reports its
-    exact integer evidence — row count, positive count, score sum — plus
-    the replayable float pair (confidence = mean score, accuracy =
-    positive rate) and the bin's micro-quantized |acc - conf| gap.
-    Emitting PER-BIN rows keeps everything order-free-exact; the scalar
-    ECE is the trivial weighted sum downstream.
-
-    Returns one row per non-empty bin: (bin, n, n_pos, score_sum,
-    conf, acc, gap_micro).
-
-    Scale: one combinable groupBy over the corpus — scan-shaped."""
-    assert n_bins >= 1
-    b = F.least(
-        F.lit(n_bins - 1),
-        F.floor(
-            F.col(score_col).cast("double")
-            / F.lit(float(scale))
-            * F.lit(float(n_bins))
-        ).cast("long"),
-    )
-    agg = (
-        scored.select(
-            b.alias("bin"),
-            F.col(score_col).cast("long").alias("_s"),
-            F.col(label_col).cast("long").alias("_y"),
-        )
-        .groupBy("bin")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("_y").cast("long").alias("n_pos"),
-            F.sum("_s").cast("long").alias("score_sum"),
-        )
-    )
-    conf = F.col("score_sum").cast("double") / (
-        F.col("n").cast("double") * F.lit(float(scale))
-    )
-    acc = F.col("n_pos").cast("double") / F.col("n").cast("double")
-    return agg.select(
-        "bin",
-        "n",
-        "n_pos",
-        "score_sum",
-        (F.round(conf, 6) + F.lit(0.0)).alias("conf"),
-        (F.round(acc, 6) + F.lit(0.0)).alias("acc"),
-        F.round(F.abs(acc - conf) * F.lit(1e6)).cast("long").alias("gap_micro"),
-    )
-
-
 def psi_bins(
     ref: DataFrame,
     cur: DataFrame,
@@ -1088,115 +382,6 @@ def group_quantiles(
     )
 
 
-def ransac_line(
-    pts: DataFrame,
-    n_candidates: int = 16,
-    tol: int = 3,
-    group_col: str = "group_id",
-    id_col: str = "pid",
-) -> DataFrame:
-    """DETERMINISTIC RANSAC LINE FIT per group — the robust regression
-    primitive (lane/edge/baseline extraction, sensor-track line fitting)
-    made cluster-reproducible: candidate hypotheses come from a FIXED
-    congruential schedule over the id-ranked points, not an RNG, so the
-    same input yields the same model on any partitioning or engine.
-
-    Candidate j (j = 0..n_candidates-1) takes the points ranked
-    r1 = (j * 13) % n and r2 = (j * 29 + 1) % n (ranks by ``id_col``;
-    if r1 = r2 the second advances one). A point P is an INLIER of line
-    (A, B) iff its distance to the line is <= tol, tested float-free:
-
-        cross(A, B, P)^2 <= tol^2 * |AB|^2     (all int64)
-
-    Coincident-endpoint candidates score 0. Best = max inliers, tie to
-    the smallest candidate index. Input coordinates must be integers
-    (|coord| <= ~1e6 keeps the squares in int64).
-
-    Returns (group, cand_idx, n_inliers, ax, ay, bx, by).
-
-    Scale: one rank window per group, two rank equi-joins to build the
-    K-candidate table, one group-keyed join scoring K*n pairs per group
-    (K is the knob), and an exact max-struct argmax — no RNG, no
-    iteration, no driver loop. Sampling-heavy classic RANSAC becomes a
-    bounded fan-out the optimizer can see."""
-    w = Window.partitionBy("g").orderBy("_pid")
-    ranked = pts.select(
-        F.col(group_col).alias("g"),
-        F.col(id_col).alias("_pid"),
-        F.col("x").cast("long").alias("x"),
-        F.col("y").cast("long").alias("y"),
-    ).withColumn("rk", F.row_number().over(w) - 1)
-    nn = ranked.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
-    cand = (
-        nn.select(
-            "g", "n",
-            F.explode(F.sequence(F.lit(0), F.lit(int(n_candidates) - 1))).alias("j"),
-        )
-        .select(
-            "g", "j",
-            ((F.col("j") * 13) % F.col("n")).alias("r1"),
-            F.when(
-                ((F.col("j") * 29 + 1) % F.col("n")) == ((F.col("j") * 13) % F.col("n")),
-                ((F.col("j") * 29 + 2) % F.col("n")),
-            )
-            .otherwise((F.col("j") * 29 + 1) % F.col("n"))
-            .alias("r2"),
-        )
-    )
-    a = ranked.select(
-        F.col("g"), F.col("rk").alias("r1"),
-        F.col("x").alias("ax"), F.col("y").alias("ay"),
-    )
-    b = ranked.select(
-        F.col("g"), F.col("rk").alias("r2"),
-        F.col("x").alias("bx"), F.col("y").alias("by"),
-    )
-    lines = cand.join(a, ["g", "r1"]).join(b, ["g", "r2"])
-    scored = lines.join(
-        ranked.select("g", "x", "y"), "g"
-    ).withColumn(
-        "_cr",
-        (F.col("bx") - F.col("ax")) * (F.col("y") - F.col("ay"))
-        - (F.col("by") - F.col("ay")) * (F.col("x") - F.col("ax")),
-    ).withColumn(
-        "_len2",
-        (F.col("bx") - F.col("ax")) * (F.col("bx") - F.col("ax"))
-        + (F.col("by") - F.col("ay")) * (F.col("by") - F.col("ay")),
-    )
-    tol2 = int(tol) * int(tol)
-    inl = (
-        scored.filter(
-            (F.col("_len2") > 0)
-            & (F.col("_cr") * F.col("_cr") <= F.lit(tol2) * F.col("_len2"))
-        )
-        .groupBy("g", "j", "ax", "ay", "bx", "by")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inliers"))
-    )
-    # candidates with zero inliers (degenerate A=B) still compete at 0
-    allc = lines.join(inl, ["g", "j", "ax", "ay", "bx", "by"], "left").select(
-        "g", "j", "ax", "ay", "bx", "by",
-        F.coalesce("n_inliers", F.lit(0)).cast("long").alias("n_inliers"),
-    )
-    best = allc.groupBy("g").agg(
-        F.max(
-            F.struct(
-                F.col("n_inliers").alias("ni"),
-                (-F.col("j")).alias("nj"),
-                F.col("j").alias("j"),
-                F.col("ax").alias("ax"), F.col("ay").alias("ay"),
-                F.col("bx").alias("bx"), F.col("by").alias("by"),
-            )
-        ).alias("b")
-    )
-    return best.select(
-        F.col("g").alias(group_col),
-        F.col("b.j").cast("int").alias("cand_idx"),
-        F.col("b.ni").alias("n_inliers"),
-        F.col("b.ax").alias("ax"), F.col("b.ay").alias("ay"),
-        F.col("b.bx").alias("bx"), F.col("b.by").alias("by"),
-    )
-
-
 def ab_test_z(
     events: DataFrame,
     variant_col: str = "variant",
@@ -1245,85 +430,6 @@ def ab_test_z(
             & (F.col("xa") + F.col("xb") < F.col("na") + F.col("nb")),
             F.round(z, 6) + F.lit(0.0),
         ).alias("z"),
-    )
-
-
-def union_rect_area(
-    rects: DataFrame,
-    group_col: str = "group_id",
-) -> DataFrame:
-    """EXACT UNION AREA of axis-aligned integer rectangles per group —
-    the deduplicated-coverage measure (how much area do these scene
-    footprints actually cover, counting overlaps once?) behind tasking
-    / gap analysis and tile-dedup accounting. The 2-D lift of
-    interval_union_length via COORDINATE-COMPRESSION SLABS:
-
-      1. the group's distinct x coordinates cut the plane into
-         vertical slabs (consecutive-pair window);
-      2. each slab joins the rectangles spanning it, reducing the slab
-         to a 1-D y-interval union (gaps-and-islands running max);
-      3. area = sum over slabs of covered_y * slab_width.
-
-    Rectangles are half-open [x0, x1) x [y0, y1) with integer corners —
-    every quantity is int64-exact in any order, so the SQL twin
-    (identical windows) hash-matches. Degenerate rects (x0 >= x1 or
-    y0 >= y1) contribute nothing.
-
-    Returns (group, n_rects, area).
-
-    Scale: all windows and joins are group-keyed. The slab-rect join is
-    the cost: O(n) slabs x rects that span them — worst case O(n^2) per
-    group for n overlapping footprints, the honest bound for exact
-    union; shard giant groups spatially upstream (cells.covering_cells
-    on the footprint) so each shard's n stays bounded, then sum shard
-    areas (cell-clipped rects make shard unions disjoint)."""
-    r = rects.select(
-        F.col(group_col).alias("g"),
-        F.col("x0").cast("long").alias("x0"),
-        F.col("y0").cast("long").alias("y0"),
-        F.col("x1").cast("long").alias("x1"),
-        F.col("y1").cast("long").alias("y1"),
-    ).filter((F.col("x0") < F.col("x1")) & (F.col("y0") < F.col("y1")))
-    n_rects = r.groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("n_rects"))
-    xs = (
-        r.select("g", F.col("x0").alias("x"))
-        .unionByName(r.select("g", F.col("x1").alias("x")))
-        .distinct()
-    )
-    w = Window.partitionBy("g").orderBy("x")
-    slabs = (
-        xs.withColumn("xe", F.lead("x").over(w))
-        .filter(F.col("xe").isNotNull())
-        .select("g", F.col("x").alias("xs"), "xe")
-    )
-    iv = slabs.join(r, "g").filter(
-        (F.col("x0") <= F.col("xs")) & (F.col("x1") >= F.col("xe"))
-    ).select("g", "xs", "xe", "y0", "y1")
-    wi = (
-        Window.partitionBy("g", "xs")
-        .orderBy("y0", "y1")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    iv = iv.withColumn("_pmax", F.max("y1").over(wi)).withColumn(
-        "_new",
-        F.when(
-            F.col("_pmax").isNull() | (F.col("y0") > F.col("_pmax")), 1
-        ).otherwise(0),
-    )
-    wg = Window.partitionBy("g", "xs").orderBy("y0", "y1").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    iv = iv.withColumn("_isl", F.sum("_new").over(wg))
-    merged = iv.groupBy("g", "xs", "xe", "_isl").agg(
-        (F.max("y1") - F.min("y0")).alias("_len")
-    )
-    area = merged.groupBy("g").agg(
-        F.sum(F.col("_len") * (F.col("xe") - F.col("xs"))).cast("long").alias("area")
-    )
-    return n_rects.join(area, "g", "left").select(
-        F.col("g").alias(group_col),
-        "n_rects",
-        F.coalesce("area", F.lit(0)).cast("long").alias("area"),
     )
 
 
@@ -1425,164 +531,6 @@ WINDOW wv AS (PARTITION BY {k} ORDER BY ver)
 """
 
 
-def multi_touch_attribution(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    conv_type: str = "purchase",
-    lookback_s: int = 21600,
-) -> DataFrame:
-    """MULTI-TOUCH ATTRIBUTION — credit each conversion to the touch
-    events (any non-conversion type = a channel) of the same user inside
-    the lookback window, under the three classic models at once:
-    first-touch, last-touch, and linear. The growth-analytics staple.
-
-    Exact-integer credit scheme: every conversion distributes exactly
-    1_000_000 micro-credits per model. Linear gives each of the n
-    touches 1e6 // n and the REMAINDER 1e6 % n to the last touch (ties
-    on equal ts break by ascending event id) — a deterministic integer
-    rule, so per-channel sums are order-free int64 with no floats
-    anywhere. A conversion with no touch in the window credits the
-    synthetic '(direct)' channel in full.
-
-    Returns one row per channel: (channel, n_touches, n_conversions,
-    first_micro, last_micro, linear_micro).
-
-    Scale: the conversion-touch pairing is a user+time range join — at
-    100 TB route it through within-window bucketing (st_join's
-    composite-key pattern); the lookback bounds candidate fan-out per
-    conversion. Credit assignment is two windows over the pair set
-    partitioned by conversion id (bounded by touches-per-window), then
-    one global per-channel rollup of a handful of rows."""
-    u, t, ty, i = user_col, ts_col, type_col, id_col
-    conv = events.filter(F.col(ty) == conv_type).select(
-        F.col(u).alias("_cu"),
-        F.col(t).alias("_cts"),
-        F.col(i).alias("_cid"),
-    )
-    touch = events.filter(F.col(ty) != conv_type).select(
-        F.col(u).alias("_tu"),
-        F.col(t).alias("_tts"),
-        F.col(ty).alias("channel"),
-        F.col(i).alias("_tid"),
-    )
-    lb = F.expr(f"INTERVAL {int(lookback_s)} SECONDS")
-    pairs = conv.join(
-        touch,
-        (F.col("_cu") == F.col("_tu"))
-        & (F.col("_tts") < F.col("_cts"))
-        & (F.col("_tts") >= F.col("_cts") - lb),
-        "inner",
-    )
-    wc = Window.partitionBy("_cid")
-    asc = Window.partitionBy("_cid").orderBy(
-        F.col("_tts").asc(), F.col("_tid").asc()
-    )
-    M = 1_000_000
-    scored = (
-        pairs.withColumn("_n", F.count(F.lit(1)).over(wc))
-        .withColumn("_rn", F.row_number().over(asc))
-        .select(
-            "channel",
-            "_cid",
-            F.when(F.col("_rn") == 1, F.lit(M)).otherwise(0).alias("_first"),
-            F.when(F.col("_rn") == F.col("_n"), F.lit(M))
-            .otherwise(0)
-            .alias("_last"),
-            (
-                (F.lit(M) / F.col("_n")).cast("long")
-                + F.when(
-                    F.col("_rn") == F.col("_n"), F.lit(M) % F.col("_n")
-                ).otherwise(0)
-            ).alias("_linear"),
-        )
-    )
-    per_channel = scored.groupBy("channel").agg(
-        F.count(F.lit(1)).cast("long").alias("n_touches"),
-        F.countDistinct("_cid").cast("long").alias("n_conversions"),
-        F.sum("_first").cast("long").alias("first_micro"),
-        F.sum("_last").cast("long").alias("last_micro"),
-        F.sum("_linear").cast("long").alias("linear_micro"),
-    )
-    direct = (
-        conv.join(
-            pairs.select("_cid").distinct(),
-            "_cid",
-            "left_anti",
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_conversions"))
-        .select(
-            F.lit("(direct)").alias("channel"),
-            F.lit(0).cast("long").alias("n_touches"),
-            "n_conversions",
-            (F.col("n_conversions") * M).cast("long").alias("first_micro"),
-            (F.col("n_conversions") * M).cast("long").alias("last_micro"),
-            (F.col("n_conversions") * M).cast("long").alias("linear_micro"),
-        )
-        .filter(F.col("n_conversions") > 0)
-    )
-    return per_channel.unionByName(direct)
-
-
-def multi_touch_attribution_sql(
-    rows_cte: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    conv_type: str = "purchase",
-    lookback_s: int = 21600,
-) -> str:
-    """DuckDB twin of multi_touch_attribution over ``rows_cte``."""
-    u, t, ty, i = user_col, ts_col, type_col, id_col
-    return f"""
-WITH src AS ({rows_cte}),
-conv AS (
-  SELECT {u} AS cu, {t} AS cts, {i} AS cid FROM src
-  WHERE {ty} = '{conv_type}'
-), touch AS (
-  SELECT {u} AS tu, {t} AS tts, {ty} AS channel, {i} AS tid FROM src
-  WHERE {ty} <> '{conv_type}'
-), pairs AS (
-  SELECT c.cid, tch.channel, tch.tts, tch.tid
-  FROM conv c JOIN touch tch
-    ON tch.tu = c.cu AND tch.tts < c.cts
-   AND tch.tts >= c.cts - INTERVAL {int(lookback_s)} SECOND
-), scored AS (
-  SELECT channel, cid,
-         CASE WHEN row_number() OVER w = 1 THEN 1000000 ELSE 0 END AS f,
-         CASE WHEN row_number() OVER w = count(*) OVER (PARTITION BY cid)
-              THEN 1000000 ELSE 0 END AS l,
-         1000000 // count(*) OVER (PARTITION BY cid)
-           + CASE WHEN row_number() OVER w
-                       = count(*) OVER (PARTITION BY cid)
-                  THEN 1000000 % count(*) OVER (PARTITION BY cid)
-                  ELSE 0 END AS lin
-  FROM pairs
-  WINDOW w AS (PARTITION BY cid ORDER BY tts, tid)
-), per_channel AS (
-  SELECT channel, CAST(count(*) AS BIGINT) AS n_touches,
-         CAST(count(DISTINCT cid) AS BIGINT) AS n_conversions,
-         CAST(sum(f) AS BIGINT) AS first_micro,
-         CAST(sum(l) AS BIGINT) AS last_micro,
-         CAST(sum(lin) AS BIGINT) AS linear_micro
-  FROM scored GROUP BY channel
-), direct AS (
-  SELECT '(direct)' AS channel, CAST(0 AS BIGINT) AS n_touches,
-         CAST(count(*) AS BIGINT) AS n_conversions,
-         CAST(count(*) * 1000000 AS BIGINT) AS first_micro,
-         CAST(count(*) * 1000000 AS BIGINT) AS last_micro,
-         CAST(count(*) * 1000000 AS BIGINT) AS linear_micro
-  FROM conv c
-  WHERE NOT EXISTS (SELECT 1 FROM pairs p WHERE p.cid = c.cid)
-  HAVING count(*) > 0
-)
-SELECT * FROM per_channel UNION ALL SELECT * FROM direct
-"""
-
-
 def kappa_agreement(
     df: DataFrame,
     a_col: str = "label_a",
@@ -1669,1652 +617,6 @@ FROM tot, pe
 """
 
 
-def _two_level_rank(
-    df: DataFrame, val_col: str, key_col: str, out_col: str, n_buckets: int = 64
-) -> DataFrame:
-    """Global dense 1-based row rank ordered by (val, key) WITHOUT a
-    single-partition window: value-range bucketing, per-bucket totals to
-    the driver once (<= n_buckets rows), per-bucket parallel row_number
-    shifted by the broadcast offsets — the same two-level scan as
-    sampling.pps_systematic. Skewed value distributions only unbalance
-    parallelism, never correctness."""
-    lo, hi = df.agg(F.min(val_col), F.max(val_col)).first()
-    if lo is None:
-        return df.withColumn(out_col, F.lit(None).cast("long"))
-    span = max(int(hi) - int(lo) + 1, 1)
-    bucket = F.expr(
-        f"CAST((({val_col} - {int(lo)}) * {n_buckets}) DIV {span} AS BIGINT)"
-    )
-    b = df.withColumn("_rb", bucket)
-    totals = sorted(
-        (r["_rb"], r["t"])
-        for r in b.groupBy("_rb").agg(F.count(F.lit(1)).alias("t")).collect()
-    )
-    off, acc = F.lit(0).cast("long"), 0
-    for bk, t in totals:
-        off = F.when(F.col("_rb") == bk, F.lit(acc).cast("long")).otherwise(off)
-        acc += t
-    w = Window.partitionBy("_rb").orderBy(
-        F.col(val_col).asc(), F.col(key_col).asc()
-    )
-    return b.withColumn(
-        out_col, (F.row_number().over(w).cast("long") + off)
-    ).drop("_rb")
-
-
-def rfm_segments(
-    orders: DataFrame,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    n_bins: int = 5,
-) -> DataFrame:
-    """RFM SEGMENTATION (Hughes 1994) — the classic customer-value
-    grid: per customer Recency (days since last order, against the
-    dataset's max date as the anchor), Frequency (order count) and
-    Monetary (exact cent-quantized revenue), each scored 1..n_bins by
-    EXACT balanced rank quantiles:
-
-        score = 1 + ((rank − 1)·n_bins) DIV n
-
-    with rank the deterministic total order by (metric goodness, key) —
-    recency ranks descending (older = worse), frequency/monetary
-    ascending. No ntile, no single-partition window: each metric's rank
-    is a value-bucketed two-level scan (driver sees <= 64 bucket counts
-    per metric). ``segment`` packs the three digits (e.g. 555 = best).
-
-    Scale: one groupBy over the fact table, then three rank passes over
-    the CUSTOMER-sized relation (each one narrow shuffle + a metadata
-    collect). The SQL twin replays rank and score serially."""
-    c, d, a = cust_col, date_col, amount_col
-    cust = orders.groupBy(F.col(c).alias("cust")).agg(
-        F.max(d).alias("_last"),
-        F.count(F.lit(1)).cast("long").alias("frequency"),
-        F.sum(F.round(F.col(a) * 100).cast("long"))
-        .cast("long")
-        .alias("monetary_c"),
-    )
-    anchor = cust.agg(F.max("_last")).first()[0]
-    cust = cust.withColumn(
-        "recency_days",
-        F.datediff(F.lit(anchor), F.col("_last")).cast("long"),
-    ).drop("_last")
-    n = cust.count()
-    ranked = _two_level_rank(
-        cust.withColumn("_rneg", -F.col("recency_days")),
-        "_rneg", "cust", "_rr",
-    ).drop("_rneg")
-    ranked = _two_level_rank(ranked, "frequency", "cust", "_fr")
-    ranked = _two_level_rank(ranked, "monetary_c", "cust", "_mr")
-
-    def score(rank_col):
-        return (
-            F.lit(1)
-            + F.expr(f"CAST((({rank_col} - 1) * {n_bins}) DIV {n} AS BIGINT)")
-        ).cast("int")
-
-    out = ranked.select(
-        "cust",
-        "recency_days",
-        "frequency",
-        "monetary_c",
-        score("_rr").alias("r_score"),
-        score("_fr").alias("f_score"),
-        score("_mr").alias("m_score"),
-    )
-    return out.withColumn(
-        "segment",
-        (
-            F.col("r_score") * 100 + F.col("f_score") * 10 + F.col("m_score")
-        ).cast("int"),
-    )
-
-
-def rfm_segments_sql(
-    rows_cte: str,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    n_bins: int = 5,
-) -> str:
-    """DuckDB twin of rfm_segments — serial ranks, identical integer
-    score arithmetic."""
-    c, d, a = cust_col, date_col, amount_col
-    return f"""
-WITH src AS ({rows_cte}),
-cust AS (
-  SELECT {c} AS cust, max({d}) AS last_d,
-         CAST(count(*) AS BIGINT) AS frequency,
-         CAST(sum(CAST(round({a} * 100) AS BIGINT)) AS BIGINT) AS monetary_c
-  FROM src GROUP BY 1
-),
-anchored AS (
-  SELECT cust, CAST(date_diff('day', last_d, (SELECT max(last_d) FROM cust))
-               AS BIGINT) AS recency_days,
-         frequency, monetary_c
-  FROM cust
-),
-ranked AS (
-  SELECT *,
-    row_number() OVER (ORDER BY -recency_days, cust) AS rr,
-    row_number() OVER (ORDER BY frequency, cust) AS fr,
-    row_number() OVER (ORDER BY monetary_c, cust) AS mr,
-    count(*) OVER () AS n
-  FROM anchored
-)
-SELECT cust, recency_days, frequency, monetary_c,
-  CAST(1 + ((rr - 1) * {n_bins}) // n AS INTEGER) AS r_score,
-  CAST(1 + ((fr - 1) * {n_bins}) // n AS INTEGER) AS f_score,
-  CAST(1 + ((mr - 1) * {n_bins}) // n AS INTEGER) AS m_score,
-  CAST((1 + ((rr - 1) * {n_bins}) // n) * 100
-     + (1 + ((fr - 1) * {n_bins}) // n) * 10
-     + (1 + ((mr - 1) * {n_bins}) // n) AS INTEGER) AS segment
-FROM ranked
-"""
-
-
-def gini_coefficient(
-    df: DataFrame, value_col: str, key_col: str
-) -> DataFrame:
-    """(n, sum_x, gini_num, gini_den, gini) — GINI COEFFICIENT of a
-    nonnegative integer value column, by the exact rank formula
-
-        G = Σ_i (2·r_i − n − 1)·x_i / (n·Σx)
-
-    with r_i the deterministic 1-based rank by (value, key). The
-    num/den are exact int64 (bound: 2n·max_x·n.. keep n·Σx < 2^63) and
-    the scalar is one IEEE division — the standard concentration metric
-    for revenue/customer skew and token-frequency inequality gates in
-    corpus pipelines.
-
-    Scale: the only ordered step is the global rank — the value-bucketed
-    two-level scan (``_two_level_rank``: <= 64 bucket counts to the
-    driver, per-bucket parallel windows), then one combinable rollup."""
-    base = df.select(
-        F.col(value_col).cast("long").alias("_x"),
-        F.col(key_col).alias("_k"),
-    )
-    ranked = _two_level_rank(base, "_x", "_k", "_r")
-    agg = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("_x").cast("long").alias("sum_x"),
-        F.sum(
-            (F.lit(2) * F.col("_r") - F.lit(1)) * F.col("_x")
-        ).cast("long").alias("_s"),
-    )
-    num = F.col("_s") - F.col("n") * F.col("sum_x")
-    den = F.col("n") * F.col("sum_x")
-    return agg.select(
-        "n",
-        "sum_x",
-        num.cast("long").alias("gini_num"),
-        den.cast("long").alias("gini_den"),
-        F.when(
-            den != 0, num.cast("double") / den.cast("double")
-        ).alias("gini"),
-    )
-
-
-def gini_coefficient_sql(rows_cte: str, value_col: str, key_col: str) -> str:
-    """DuckDB twin of gini_coefficient — serial rank window, identical
-    integer rational."""
-    return f"""
-WITH src AS ({rows_cte}),
-ranked AS (
-  SELECT CAST({value_col} AS BIGINT) AS x,
-         row_number() OVER (ORDER BY {value_col}, {key_col}) AS r
-  FROM src
-),
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sum_x,
-         CAST(sum((2 * r - 1) * x) AS BIGINT) AS s
-  FROM ranked
-)
-SELECT n, sum_x,
-       CAST(s - n * sum_x AS BIGINT) AS gini_num,
-       CAST(n * sum_x AS BIGINT) AS gini_den,
-       CASE WHEN n * sum_x != 0
-            THEN CAST(s - n * sum_x AS DOUBLE)
-                 / CAST(n * sum_x AS DOUBLE)
-       END AS gini
-FROM agg
-"""
-
-
-def ks_test(
-    a: DataFrame, b: DataFrame, value_col: str
-) -> DataFrame:
-    """(n_a, n_b, d_num, d_den, d_stat, d_at) — two-sample
-    KOLMOGOROV-SMIRNOV distance between integer-valued samples: the
-    max ECDF gap, kept EXACT as the integer rational
-
-        D = max_v |cum_a(v)·n_b − cum_b(v)·n_a| / (n_a·n_b)
-
-    evaluated at every distinct value of the union (where the max is
-    attained); ``d_at`` is the smallest attaining value — fully
-    deterministic. The drift gate that complements psi_drift: PSI needs
-    binning, KS is binning-free.
-
-    Scale: per-value counts are combinable rollups; the cumulative
-    walk runs over the DISTINCT-value relation (cardinality of the
-    support, corpus-sublinear) via an ordered window — shard it with
-    the two-level scan if a support ever outgrows a task. The final
-    max is a struct-max rollup, no sort of the raw data anywhere."""
-    ca = a.groupBy(F.col(value_col).alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("na_v")
-    )
-    cb = b.groupBy(F.col(value_col).alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("nb_v")
-    )
-    merged = ca.join(cb, "v", "full_outer").select(
-        "v",
-        F.coalesce("na_v", F.lit(0)).alias("na_v"),
-        F.coalesce("nb_v", F.lit(0)).alias("nb_v"),
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cum = merged.select(
-        "v",
-        F.sum("na_v").over(w).cast("long").alias("ca"),
-        F.sum("nb_v").over(w).cast("long").alias("cb"),
-    )
-    tot = merged.agg(
-        F.sum("na_v").cast("long").alias("n_a"),
-        F.sum("nb_v").cast("long").alias("n_b"),
-    )
-    gap = cum.crossJoin(F.broadcast(tot)).select(
-        "n_a",
-        "n_b",
-        "v",
-        F.abs(
-            F.col("ca") * F.col("n_b") - F.col("cb") * F.col("n_a")
-        ).cast("long").alias("g"),
-    )
-    best = gap.groupBy("n_a", "n_b").agg(
-        F.max(F.struct(F.col("g"), (-F.col("v")).alias("nv"))).alias("m")
-    )
-    return best.select(
-        "n_a",
-        "n_b",
-        F.col("m.g").cast("long").alias("d_num"),
-        (F.col("n_a") * F.col("n_b")).cast("long").alias("d_den"),
-        (
-            F.col("m.g").cast("double")
-            / (F.col("n_a") * F.col("n_b")).cast("double")
-        ).alias("d_stat"),
-        (-F.col("m.nv")).cast("long").alias("d_at"),
-    )
-
-
-def ks_test_sql(a_cte: str, b_cte: str, value_col: str) -> str:
-    """DuckDB twin of ks_test — identical merged-support cumulative
-    counts and integer gap, arg-max replayed with the same smallest-
-    value tie-break."""
-    v = value_col
-    return f"""
-WITH sa AS ({a_cte}), sb AS ({b_cte}),
-ca AS (SELECT {v} AS v, CAST(count(*) AS BIGINT) AS na_v FROM sa GROUP BY 1),
-cb AS (SELECT {v} AS v, CAST(count(*) AS BIGINT) AS nb_v FROM sb GROUP BY 1),
-merged AS (
-  SELECT COALESCE(ca.v, cb.v) AS v,
-         COALESCE(na_v, 0) AS na_v, COALESCE(nb_v, 0) AS nb_v
-  FROM ca FULL OUTER JOIN cb ON ca.v = cb.v
-),
-cum AS (
-  SELECT v,
-    CAST(sum(na_v) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-         AND CURRENT ROW) AS BIGINT) AS cca,
-    CAST(sum(nb_v) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-         AND CURRENT ROW) AS BIGINT) AS ccb
-  FROM merged
-),
-tot AS (
-  SELECT CAST(sum(na_v) AS BIGINT) AS n_a, CAST(sum(nb_v) AS BIGINT) AS n_b
-  FROM merged
-),
-gap AS (
-  SELECT tot.n_a, tot.n_b, v, abs(cca * tot.n_b - ccb * tot.n_a) AS g
-  FROM cum, tot
-)
-SELECT n_a, n_b,
-       CAST(g AS BIGINT) AS d_num,
-       CAST(n_a * n_b AS BIGINT) AS d_den,
-       CAST(g AS DOUBLE) / CAST(n_a * n_b AS DOUBLE) AS d_stat,
-       CAST(v AS BIGINT) AS d_at
-FROM gap
-QUALIFY row_number() OVER (ORDER BY g DESC, v ASC) = 1
-"""
-
-
-def chi2_independence(
-    df: DataFrame, a_col: str, b_col: str
-) -> DataFrame:
-    """(n, df_free, chi2) plus the exact integer backing columns —
-    PEARSON'S CHI-SQUARE test of independence between two categorical
-    columns, the workhorse of feature/label association screens and
-    stratification checks in data pipelines. With observed counts
-    O_ij and marginals r_i, c_j over n items,
-
-        chi2 = Σ_ij (n·O_ij − r_i·c_j)² / (n·r_i·c_j)
-
-    The per-cell numerator (n·O − r·c)² and denominator n·r·c are exact
-    int64 products CAST TO DOUBLE BEFORE squaring/dividing in a pinned
-    order (IEEE multiply/divide are correctly rounded, so both engines
-    produce bit-identical terms); ``chi2`` is the micro-quantized
-    order-free sum Σ floor(term·1e6 + 0.5) / 1e6, making the total
-    summation-order independent. ``df_free`` = (R−1)(C−1).
-
-    Overflow bound: n·r_i·c_j < 2^63 → n < ~2e6 when one class
-    dominates; the quantized-term scheme itself is unbounded.
-
-    Scale: one combinable scan for the contingency cells (|A|·|B| rows),
-    marginals are cell-relation rollups, all driver-size."""
-    conf = df.groupBy(
-        F.col(a_col).alias("_a"), F.col(b_col).alias("_b")
-    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
-    ra = conf.groupBy("_a").agg(F.sum("o").cast("long").alias("r"))
-    cb = conf.groupBy("_b").agg(F.sum("o").cast("long").alias("c"))
-    tot = conf.agg(
-        F.sum("o").cast("long").alias("n"),
-        F.countDistinct("_a").cast("long").alias("_nr"),
-        F.countDistinct("_b").cast("long").alias("_nc"),
-    )
-    # every (a, b) combination, including zero-observed cells
-    cells = (
-        ra.join(cb, F.lit(True))
-        .join(conf, ["_a", "_b"], "left")
-        .select(
-            "_a", "_b", "r", "c",
-            F.coalesce("o", F.lit(0)).cast("long").alias("o"),
-        )
-    )
-    term = cells.crossJoin(F.broadcast(tot)).select(
-        "n",
-        "_nr",
-        "_nc",
-        (
-            (
-                (F.col("n") * F.col("o") - F.col("r") * F.col("c"))
-                .cast("double")
-                * (F.col("n") * F.col("o") - F.col("r") * F.col("c"))
-                .cast("double")
-            )
-            / (F.col("n") * F.col("r") * F.col("c")).cast("double")
-        ).alias("_t"),
-    )
-    agg = term.groupBy("n", "_nr", "_nc").agg(
-        F.sum(
-            F.floor(F.col("_t") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        ).alias("_s")
-    )
-    return agg.select(
-        "n",
-        ((F.col("_nr") - 1) * (F.col("_nc") - 1)).cast("long").alias(
-            "df_free"
-        ),
-        F.col("_s").alias("chi2_micro"),
-        (F.col("_s").cast("double") / F.lit(1e6)).alias("chi2"),
-    )
-
-
-def chi2_independence_sql(rows_cte: str, a_col: str, b_col: str) -> str:
-    """DuckDB twin of chi2_independence — identical pinned term
-    assembly and micro-quantized order-free sum."""
-    return f"""
-WITH src AS ({rows_cte}),
-conf AS (
-  SELECT {a_col} AS a, {b_col} AS b, CAST(count(*) AS BIGINT) AS o
-  FROM src GROUP BY 1, 2
-),
-ra AS (SELECT a, CAST(sum(o) AS BIGINT) AS r FROM conf GROUP BY a),
-cb AS (SELECT b, CAST(sum(o) AS BIGINT) AS c FROM conf GROUP BY b),
-tot AS (
-  SELECT CAST(sum(o) AS BIGINT) AS n,
-         CAST(count(DISTINCT a) AS BIGINT) AS nr,
-         CAST(count(DISTINCT b) AS BIGINT) AS nc
-  FROM conf
-),
-cells AS (
-  SELECT ra.a, cb.b, ra.r, cb.c, COALESCE(conf.o, 0) AS o
-  FROM ra CROSS JOIN cb
-  LEFT JOIN conf ON conf.a = ra.a AND conf.b = cb.b
-),
-term AS (
-  SELECT tot.n, tot.nr, tot.nc,
-    (CAST(n * o - r * c AS DOUBLE) * CAST(n * o - r * c AS DOUBLE))
-      / CAST(n * r * c AS DOUBLE) AS t
-  FROM cells, tot
-)
-SELECT n,
-       CAST((nr - 1) * (nc - 1) AS BIGINT) AS df_free,
-       CAST(sum(CAST(floor(t * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-         AS chi2_micro,
-       CAST(sum(CAST(floor(t * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-         / 1000000.0 AS chi2
-FROM term GROUP BY n, nr, nc
-"""
-
-
-def survival_table(
-    df: DataFrame,
-    duration_col: str = "duration",
-    event_col: str = "event",
-) -> DataFrame:
-    """(t, d, censored_at, n_at_risk, surv) — the KAPLAN-MEIER LIFE
-    TABLE (Kaplan & Meier 1958): one row per distinct EVENT time t with
-    d = events at t, censored_at = censorings at exactly t (at-risk at
-    t by the standard deaths-before-censorings tie convention),
-    n_at_risk = |{duration >= t}|, and the product-limit estimate
-    S(t) = Π_{u<=t}(1 − d_u/n_u). The churn / time-to-failure staple.
-
-    Exactness: t/d/censored_at/n_at_risk are exact int64 (per-time
-    rollup + a reverse cumulative sum over the SUPPORT-sized time
-    relation). ``surv`` is a time-ordered sequential double product —
-    the one column whose cross-engine reproduction depends on fold
-    order, so it is computed with an explicit ordered fold
-    (collect_list window + aggregate) and EXCLUDED from the driver
-    oracle projection (pytest pins it against a serial replay instead);
-    the integer life table is the oracle-checked contract.
-
-    Scale: one groupBy over subjects, then support-sized windows — the
-    same shape as ks_test; shard the support with the two-level scan if
-    it ever outgrows a task."""
-    per_t = df.groupBy(
-        F.col(duration_col).cast("long").alias("t")
-    ).agg(
-        F.sum(
-            F.when(F.col(event_col).cast("int") == 1, 1).otherwise(0)
-        ).cast("long").alias("d"),
-        F.sum(
-            F.when(F.col(event_col).cast("int") == 1, 0).otherwise(1)
-        ).cast("long").alias("censored_at"),
-    )
-    w_rev = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    with_risk = per_t.withColumn(
-        "n_at_risk",
-        F.sum(F.col("d") + F.col("censored_at")).over(w_rev).cast("long"),
-    )
-    ev = with_risk.filter(F.col("d") > 0)
-    w_fwd = Window.orderBy(F.col("t").asc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    factors = F.collect_list(
-        (
-            F.lit(1.0)
-            - F.col("d").cast("double") / F.col("n_at_risk").cast("double")
-        )
-    ).over(w_fwd)
-    return ev.withColumn(
-        "surv",
-        F.aggregate(
-            factors, F.lit(1.0), lambda acc, x: acc * x
-        ),
-    ).select("t", "d", "censored_at", "n_at_risk", "surv")
-
-
-def survival_table_sql(
-    rows_cte: str, duration_col: str = "duration", event_col: str = "event"
-) -> str:
-    """DuckDB twin of survival_table's EXACT columns (surv excluded —
-    see operator docstring)."""
-    return f"""
-WITH src AS ({rows_cte}),
-per_t AS (
-  SELECT CAST({duration_col} AS BIGINT) AS t,
-         CAST(sum(CASE WHEN {event_col} = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS d,
-         CAST(sum(CASE WHEN {event_col} = 1 THEN 0 ELSE 1 END) AS BIGINT)
-           AS censored_at
-  FROM src GROUP BY 1
-),
-risk AS (
-  SELECT *, CAST(sum(d + censored_at) OVER (
-    ORDER BY t DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-  ) AS BIGINT) AS n_at_risk
-  FROM per_t
-)
-SELECT t, d, censored_at, n_at_risk FROM risk WHERE d > 0
-"""
-
-
-def mad_outliers(
-    df: DataFrame,
-    group_col: str = "g",
-    id_col: str = "id",
-    value_col: str = "v",
-    k: int = 3,
-) -> DataFrame:
-    """(g, id, v, med, mad, dev, is_outlier) — ROBUST OUTLIER GATE by
-    the median absolute deviation (Hampel's rule): a row is an outlier
-    when |x − median| > k·MAD. Mean/stddev gates break down under the
-    very outliers they hunt (masking); the MAD's 50% breakdown point is
-    the standard robust fix for sensor glitches, price errors, and
-    label-noise screens.
-
-    Exactness: both medians are TYPE-1 exact (value at 1-based rank
-    ceil(n/2) — always an element, never an average), deviations are
-    exact integers, and the gate ``dev > k·mad`` is an integer
-    comparison. Fully engine-independent, NULL-free.
-
-    Scale: two ordered windows per group (value, then deviation) — the
-    unavoidable exact-median cost, same shape as group_quantiles;
-    groups parallelize, skewed groups salt like any window."""
-    w1 = Window.partitionBy(group_col).orderBy(
-        F.col(value_col).asc(), F.col(id_col).asc()
-    )
-    wn = Window.partitionBy(group_col).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = df.select(
-        F.col(group_col),
-        F.col(id_col),
-        F.col(value_col).cast("long").alias("_v"),
-        F.row_number().over(w1).cast("long").alias("_r"),
-        F.count(F.lit(1)).over(wn).cast("long").alias("_n"),
-    )
-    med = (
-        ranked.filter(F.col("_r") == F.ceil(F.col("_n") / 2))
-        .select(F.col(group_col), F.col("_v").alias("med"))
-    )
-    devs = ranked.join(med, group_col).withColumn(
-        "dev", F.abs(F.col("_v") - F.col("med"))
-    )
-    w2 = Window.partitionBy(group_col).orderBy(
-        F.col("dev").asc(), F.col(id_col).asc()
-    )
-    dev_ranked = devs.withColumn(
-        "_dr", F.row_number().over(w2).cast("long")
-    )
-    mad = (
-        dev_ranked.filter(F.col("_dr") == F.ceil(F.col("_n") / 2))
-        .select(F.col(group_col), F.col("dev").alias("mad"))
-    )
-    return (
-        dev_ranked.join(mad, group_col)
-        .select(
-            F.col(group_col),
-            F.col(id_col),
-            F.col("_v").alias(value_col),
-            "med",
-            "mad",
-            "dev",
-            (F.col("dev") > F.lit(int(k)) * F.col("mad")).alias(
-                "is_outlier"
-            ),
-        )
-    )
-
-
-def mad_outliers_sql(
-    rows_cte: str,
-    group_col: str = "g",
-    id_col: str = "id",
-    value_col: str = "v",
-    k: int = 3,
-) -> str:
-    """DuckDB twin of mad_outliers — identical type-1 medians and
-    integer gate."""
-    g, i, v = group_col, id_col, value_col
-    return f"""
-WITH src AS ({rows_cte}),
-ranked AS (
-  SELECT {g}, {i}, CAST({v} AS BIGINT) AS v,
-         row_number() OVER (PARTITION BY {g} ORDER BY {v}, {i}) AS r,
-         count(*) OVER (PARTITION BY {g}) AS n
-  FROM src
-),
-med AS (
-  SELECT {g}, v AS med FROM ranked
-  WHERE r = CAST(ceil(n / 2.0) AS BIGINT)
-),
-devs AS (
-  SELECT ranked.{g}, ranked.{i}, ranked.v, ranked.n, med.med,
-         abs(ranked.v - med.med) AS dev
-  FROM ranked JOIN med USING ({g})
-),
-dev_ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY {g} ORDER BY dev, {i}) AS dr
-  FROM devs
-),
-mad AS (
-  SELECT {g}, dev AS mad FROM dev_ranked
-  WHERE dr = CAST(ceil(n / 2.0) AS BIGINT)
-)
-SELECT d.{g}, d.{i}, d.v AS {v}, d.med, mad.mad, d.dev,
-       d.dev > {int(k)} * mad.mad AS is_outlier
-FROM dev_ranked d JOIN mad USING ({g})
-"""
-
-
-def mann_whitney_u(
-    df: DataFrame,
-    group_col: str = "g",
-    arm_col: str = "arm",
-    value_col: str = "v",
-) -> DataFrame:
-    """MANN–WHITNEY U rank-sum test per group — the nonparametric
-    two-sample location test (scipy.stats.mannwhitneyu): does arm 1's
-    value distribution stochastically dominate arm 0's? The workhorse
-    A/B test when values are skewed (latencies, spend) and the t-test's
-    normality assumption is junk.
-
-    Exactness: ranks are DOUBLED midranks — for a tie block occupying
-    1-based positions [lo, hi] the midrank is (lo+hi)/2, so the doubled
-    midrank lo+hi = 2·cum_le(v) − cnt(v) + 1 is an exact integer, and
-    the doubled rank sum r2, doubled statistics u2_1/u2_0 (U×2), and
-    the tie term Σ(t³−t) are all order-free exact int64:
-
-        u2_1 = r2_1 − n1·(n1+1),   u2_0 = 2·n0·n1 − u2_1.
-
-    Only the normal-approximation z touches floats — the pinned-order
-    assembly z = (u2_1 − n0·n1) / sqrt(n0·n1·((n+1) − ties/(n·(n−1)))/3)
-    from exact integers (+,−,×,/,√ correctly rounded ⇒ cross-engine
-    bit-identical), NULL when an arm is empty or all values tie.
-
-    Scale: one groupBy(g, v) with map-side combine, one per-group
-    ordered window over DISTINCT values (not rows — ties collapse
-    first), one final groupBy(g). Value-heavy groups parallelize by g;
-    the window's state is the distinct-value count, not n."""
-    arm1 = (F.col(arm_col) != 0).cast("long")
-    byval = df.groupBy(
-        F.col(group_col).alias("g"), F.col(value_col).cast("long").alias("v")
-    ).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(arm1).alias("cnt1"),
-    )
-    w = Window.partitionBy("g").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ranked = byval.select(
-        "g",
-        "cnt",
-        "cnt1",
-        (F.lit(2) * F.sum("cnt").over(w) - F.col("cnt") + F.lit(1)).alias(
-            "d2"
-        ),
-    )
-    per_g = ranked.groupBy("g").agg(
-        F.sum("cnt").alias("n"),
-        F.sum("cnt1").alias("n1"),
-        F.sum(F.col("d2") * F.col("cnt1")).alias("r2_1"),
-        F.sum(
-            F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt")
-        ).alias("ties"),
-    )
-    n0 = F.col("n") - F.col("n1")
-    u2_1 = F.col("r2_1") - F.col("n1") * (F.col("n1") + 1)
-    dd = lambda c: c.cast("double")  # noqa: E731
-    sigma2 = (
-        dd(n0)
-        * dd(F.col("n1"))
-        * (
-            dd(F.col("n") + 1)
-            - dd(F.col("ties")) / (dd(F.col("n")) * dd(F.col("n") - 1))
-        )
-        / F.lit(3.0)
-    )
-    z = F.when(
-        (n0 > 0) & (F.col("n1") > 0) & (F.col("ties") < F.col("n") * F.col("n") * F.col("n") - F.col("n")),
-        F.round((dd(u2_1) - dd(n0 * F.col("n1"))) / F.sqrt(sigma2), 6),
-    )
-    return per_g.select(
-        "g",
-        n0.alias("n0"),
-        F.col("n1"),
-        F.col("r2_1").alias("r2_1"),
-        u2_1.alias("u2_1"),
-        (F.lit(2) * n0 * F.col("n1") - u2_1).alias("u2_0"),
-        F.col("ties"),
-        z.alias("z"),
-    )
-
-
-def mann_whitney_u_sql(
-    rows_cte: str,
-    group_col: str = "g",
-    arm_col: str = "arm",
-    value_col: str = "v",
-) -> str:
-    """DuckDB twin of mann_whitney_u — identical doubled midranks,
-    integer statistics, and pinned z assembly."""
-    g, a, v = group_col, arm_col, value_col
-    return f"""
-WITH src AS ({rows_cte}),
-byval AS (
-  SELECT {g} AS g, CAST({v} AS BIGINT) AS v,
-         count(*) AS cnt,
-         sum(CASE WHEN {a} <> 0 THEN 1 ELSE 0 END) AS cnt1
-  FROM src GROUP BY 1, 2
-),
-ranked AS (
-  SELECT g, cnt, cnt1,
-         2 * sum(cnt) OVER (
-           PARTITION BY g ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) - cnt + 1 AS d2
-  FROM byval
-),
-per_g AS (
-  SELECT g,
-         CAST(sum(cnt) AS BIGINT) AS n,
-         CAST(sum(cnt1) AS BIGINT) AS n1,
-         CAST(sum(d2 * cnt1) AS BIGINT) AS r2_1,
-         CAST(sum(cnt * cnt * cnt - cnt) AS BIGINT) AS ties
-  FROM ranked GROUP BY 1
-)
-SELECT g,
-       (n - n1) AS n0,
-       n1,
-       r2_1,
-       (r2_1 - n1 * (n1 + 1)) AS u2_1,
-       (2 * (n - n1) * n1 - (r2_1 - n1 * (n1 + 1))) AS u2_0,
-       ties,
-       CASE WHEN (n - n1) > 0 AND n1 > 0 AND ties < n * n * n - n
-            THEN round(
-              (CAST(r2_1 - n1 * (n1 + 1) AS DOUBLE)
-               - CAST((n - n1) * n1 AS DOUBLE))
-              / sqrt(
-                  CAST(n - n1 AS DOUBLE) * CAST(n1 AS DOUBLE)
-                  * (CAST(n + 1 AS DOUBLE)
-                     - CAST(ties AS DOUBLE)
-                       / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)))
-                  / 3.0
-                ), 6)
-       END AS z
-FROM per_g
-"""
-
-
-def spearman_corr(
-    df: DataFrame,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """SPEARMAN RANK CORRELATION per group (scipy.stats.spearmanr with
-    ties) — the nonparametric monotone-association measure: Pearson's r
-    computed on midranks. The standard drift/trend detector when the
-    relationship is monotone but not linear (value vs time, size vs
-    latency).
-
-    Exactness: per axis, DOUBLED midranks d = lo+hi are exact integers
-    (see mann_whitney_u); since Σd = n(n+1) exactly, the CENTERED rank
-    c = d − (n+1) is an exact integer with Σc = 0, and Pearson's
-    numerator/denominators collapse to the order-free exact int64 sums
-
-        num = Σ cx·cy,   denx = Σ cx²,   deny = Σ cy²,
-        rho = num / (√denx · √deny)     [pinned doubles, NULL if a
-                                         denominator is 0]
-
-    Overflow bound: |c| ≤ n so every sum is ≤ n³ — exact up to ~2e6
-    rows per group; sample or pre-bin beyond that.
-
-    Scale: two (groupBy(g, v) + distinct-value window) rank maps, two
-    equi-joins back to the rows on (g, value) — rank maps are
-    tie-collapsed so they are small on quantized metrics — then one
-    combinable groupBy(g)."""
-    rows = df.select(
-        F.col(group_col).alias("g"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
-    )
-    n_g = rows.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
-
-    def rank_map(col: str, out: str) -> DataFrame:
-        byval = rows.groupBy("g", col).agg(F.count(F.lit(1)).alias("cnt"))
-        w = Window.partitionBy("g").orderBy(col).rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        return byval.select(
-            "g",
-            col,
-            (
-                F.lit(2) * F.sum("cnt").over(w) - F.col("cnt") + F.lit(1)
-            ).alias(out),
-        )
-
-    joined = (
-        rows.join(rank_map("x", "dx"), ["g", "x"])
-        .join(rank_map("y", "dy"), ["g", "y"])
-        .join(n_g, "g")
-        .select(
-            "g",
-            "n",
-            (F.col("dx") - (F.col("n") + 1)).alias("cx"),
-            (F.col("dy") - (F.col("n") + 1)).alias("cy"),
-        )
-    )
-    agg = joined.groupBy("g", "n").agg(
-        F.sum(F.col("cx") * F.col("cy")).alias("num"),
-        F.sum(F.col("cx") * F.col("cx")).alias("denx"),
-        F.sum(F.col("cy") * F.col("cy")).alias("deny"),
-    )
-    dd = lambda c: F.col(c).cast("double")  # noqa: E731
-    return agg.select(
-        "g",
-        F.col("n"),
-        "num",
-        "denx",
-        "deny",
-        F.when(
-            (F.col("denx") > 0) & (F.col("deny") > 0),
-            F.round(
-                dd("num") / (F.sqrt(dd("denx")) * F.sqrt(dd("deny"))), 6
-            ),
-        ).alias("rho"),
-    )
-
-
-def spearman_corr_sql(
-    rows_cte: str,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> str:
-    """DuckDB twin of spearman_corr — identical centered doubled
-    midranks and pinned rho assembly."""
-    g, x, y = group_col, x_col, y_col
-
-    def rmap(col: str, out: str) -> str:
-        return f"""
-  SELECT g, {col},
-         2 * sum(cnt) OVER (
-           PARTITION BY g ORDER BY {col}
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) - cnt + 1 AS {out}
-  FROM (SELECT g, {col}, count(*) AS cnt FROM src GROUP BY 1, 2)
-"""
-
-    return f"""
-WITH src AS (
-  SELECT {g} AS g, CAST({x} AS BIGINT) AS x, CAST({y} AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-n_g AS (SELECT g, count(*) AS n FROM src GROUP BY 1),
-rx AS ({rmap('x', 'dx')}),
-ry AS ({rmap('y', 'dy')}),
-joined AS (
-  SELECT src.g, n_g.n,
-         (rx.dx - (n_g.n + 1)) AS cx,
-         (ry.dy - (n_g.n + 1)) AS cy
-  FROM src
-  JOIN rx USING (g, x)
-  JOIN ry USING (g, y)
-  JOIN n_g USING (g)
-),
-agg AS (
-  SELECT g, n,
-         CAST(sum(cx * cy) AS BIGINT) AS num,
-         CAST(sum(cx * cx) AS BIGINT) AS denx,
-         CAST(sum(cy * cy) AS BIGINT) AS deny
-  FROM joined GROUP BY 1, 2
-)
-SELECT g, CAST(n AS BIGINT) AS n, num, denx, deny,
-       CASE WHEN denx > 0 AND deny > 0
-            THEN round(
-              CAST(num AS DOUBLE)
-              / (sqrt(CAST(denx AS DOUBLE)) * sqrt(CAST(deny AS DOUBLE))),
-              6)
-       END AS rho
-FROM agg
-"""
-
-
-def seasonal_decompose(
-    df: DataFrame,
-    period: int = 7,
-    group_col: str = "g",
-    t_col: str = "t",
-    value_col: str = "v",
-) -> DataFrame:
-    """ADDITIVE SEASONAL DECOMPOSITION per group (the classical
-    moving-average method behind statsmodels' seasonal_decompose):
-    trend = centered period-length moving average, seasonal index =
-    per-phase mean of the detrended series, residual = the rest. The
-    first look at any business/telemetry daily series.
-
-    ``period`` must be odd (centered MA has a well-defined middle).
-    ``t`` is an integer time index (e.g. day number); phase = t mod
-    period. Gappy series are handled honestly: the trend at t exists
-    only when ALL ``period`` neighbors in [t−h, t+h] are present
-    (h = (period−1)/2), via a RANGE window — never a row-offset window
-    that silently spans gaps.
-
-    Exactness: trend_s = Σ window values (×period the trend) and
-    det_s = period·v − trend_s are exact int64; the per-phase seasonal
-    index is kept as the exact rational (seas_sum = Σ det_s, seas_cnt);
-    only resid = (det_s·seas_cnt − seas_sum)/(period·seas_cnt) is a
-    pinned-order double (round 6). Overflow bound: |det_s·seas_cnt| ≤
-    period·max|v|·points-per-phase — int64-safe for cent-scale daily
-    rollups over centuries.
-
-    Scale: input is the PRE-AGGREGATED series (one row per (g, t) from
-    a combinable upstream groupBy), so the window partitions are
-    series-length-sized; one RANGE window + one groupBy(g, phase) +
-    one broadcastable join back."""
-    assert period % 2 == 1, "centered MA needs an odd period"
-    h = (period - 1) // 2
-    w = Window.partitionBy(group_col).orderBy(t_col).rangeBetween(-h, h)
-    base = df.select(
-        F.col(group_col).alias("g"),
-        F.col(t_col).cast("long").alias("t"),
-        F.col(value_col).cast("long").alias("v"),
-    )
-    with_trend = base.select(
-        "g",
-        "t",
-        "v",
-        (F.col("t") % period).alias("phase"),
-        F.when(
-            F.count(F.lit(1)).over(
-                Window.partitionBy("g").orderBy("t").rangeBetween(-h, h)
-            )
-            == period,
-            F.sum("v").over(
-                Window.partitionBy("g").orderBy("t").rangeBetween(-h, h)
-            ),
-        ).alias("trend_s"),
-    ).withColumn(
-        "det_s",
-        F.when(
-            F.col("trend_s").isNotNull(),
-            F.lit(period) * F.col("v") - F.col("trend_s"),
-        ),
-    )
-    seas = with_trend.filter(F.col("det_s").isNotNull()).groupBy(
-        "g", "phase"
-    ).agg(
-        F.sum("det_s").alias("seas_sum"),
-        F.count(F.lit(1)).alias("seas_cnt"),
-    )
-    out = with_trend.join(seas, ["g", "phase"], "left")
-    resid = F.when(
-        F.col("det_s").isNotNull() & (F.col("seas_cnt") > 0),
-        F.round(
-            (
-                F.col("det_s").cast("double") * F.col("seas_cnt").cast("double")
-                - F.col("seas_sum").cast("double")
-            )
-            / (F.lit(float(period)) * F.col("seas_cnt").cast("double")),
-            6,
-        ),
-    )
-    return out.select(
-        "g",
-        "t",
-        "v",
-        "phase",
-        "trend_s",
-        "det_s",
-        F.col("seas_sum"),
-        F.col("seas_cnt"),
-        resid.alias("resid"),
-    )
-
-
-def seasonal_decompose_sql(
-    rows_cte: str,
-    period: int = 7,
-    group_col: str = "g",
-    t_col: str = "t",
-    value_col: str = "v",
-) -> str:
-    """DuckDB twin of seasonal_decompose — identical RANGE window,
-    integer components, and pinned residual assembly."""
-    g, t, v = group_col, t_col, value_col
-    h = (period - 1) // 2
-    p = period
-    return f"""
-WITH src AS (
-  SELECT {g} AS g, CAST({t} AS BIGINT) AS t, CAST({v} AS BIGINT) AS v
-  FROM ({rows_cte})
-),
-with_trend AS (
-  SELECT g, t, v, (t % {p}) AS phase,
-         CASE WHEN count(*) OVER (
-                PARTITION BY g ORDER BY t
-                RANGE BETWEEN {h} PRECEDING AND {h} FOLLOWING
-              ) = {p}
-              THEN sum(v) OVER (
-                PARTITION BY g ORDER BY t
-                RANGE BETWEEN {h} PRECEDING AND {h} FOLLOWING
-              )
-         END AS trend_s
-  FROM src
-),
-det AS (
-  SELECT g, t, v, phase, trend_s,
-         CASE WHEN trend_s IS NOT NULL THEN {p} * v - trend_s END AS det_s
-  FROM with_trend
-),
-seas AS (
-  SELECT g, phase,
-         CAST(sum(det_s) AS BIGINT) AS seas_sum,
-         CAST(count(*) AS BIGINT) AS seas_cnt
-  FROM det WHERE det_s IS NOT NULL GROUP BY 1, 2
-)
-SELECT det.g, det.t, det.v, det.phase, det.trend_s, det.det_s,
-       seas.seas_sum, seas.seas_cnt,
-       CASE WHEN det.det_s IS NOT NULL AND seas.seas_cnt > 0
-            THEN round(
-              (CAST(det.det_s AS DOUBLE) * CAST(seas.seas_cnt AS DOUBLE)
-               - CAST(seas.seas_sum AS DOUBLE))
-              / ({float(p)} * CAST(seas.seas_cnt AS DOUBLE)),
-              6)
-       END AS resid
-FROM det LEFT JOIN seas ON det.g = seas.g AND det.phase = seas.phase
-"""
-
-
-def kendall_tau(
-    df: DataFrame,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """KENDALL TAU-B rank correlation per group (scipy.stats.kendalltau
-    semantics, tie-corrected) — the pairwise-concordance association
-    measure: of all row pairs, how many order x and y the same way?
-
-        tau_b = (nc - nd) / sqrt((n0 - n1) * (n0 - n2))
-        n0 = n(n-1)/2,  n1 = sum tx(tx-1)/2,  n2 = sum ty(ty-1)/2
-
-    Exactness: rows collapse to tie cells (g, x, y, cnt); concordant /
-    discordant counts come from the cell-pair join restricted to
-    xa < xb (x-tied pairs contribute neither):
-
-        nc = sum over {xa<xb, ya<yb} ca*cb
-        nd = sum over {xa<xb, ya>yb} ca*cb
-
-    All counts are exact int64 (sum of products <= n^2); only the final
-    tau divides, as one pinned two-sqrt assembly (NULL if either
-    tie-corrected denominator term is 0).
-
-    Scale: the cell table is tie-collapsed, so on quantized metrics
-    (cents, days, bins) it is orders of magnitude smaller than the
-    rows; the intra-group cell-pair join is the bounded-bucket contract
-    shared with mask_iou/box_iou (cells per group bounded, not rows).
-    For unbounded-cardinality metrics, pre-bin — tau on bins is the
-    standard large-n practice. Everything else is combinable groupBys."""
-    rows = df.select(
-        F.col(group_col).alias("g"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
-    )
-    cells = rows.groupBy("g", "x", "y").agg(F.count(F.lit(1)).alias("cnt"))
-    n_g = rows.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
-    tie = lambda c, out: (  # noqa: E731
-        rows.groupBy("g", c)
-        .agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("g")
-        .agg((F.sum(F.col("t") * (F.col("t") - 1)) / 2).cast("long").alias(out))
-    )
-    a = cells.select(
-        "g",
-        F.col("x").alias("xa"),
-        F.col("y").alias("ya"),
-        F.col("cnt").alias("ca"),
-    )
-    b = cells.select(
-        F.col("g").alias("g_b"),
-        F.col("x").alias("xb"),
-        F.col("y").alias("yb"),
-        F.col("cnt").alias("cb"),
-    )
-    cd = (
-        a.join(
-            b,
-            (F.col("g") == F.col("g_b")) & (F.col("xa") < F.col("xb")),
-        )
-        .groupBy("g")
-        .agg(
-            F.sum(
-                F.when(F.col("ya") < F.col("yb"), F.col("ca") * F.col("cb"))
-                .otherwise(F.lit(0))
-            ).alias("nc"),
-            F.sum(
-                F.when(F.col("ya") > F.col("yb"), F.col("ca") * F.col("cb"))
-                .otherwise(F.lit(0))
-            ).alias("nd"),
-        )
-    )
-    out = (
-        n_g.join(tie("x", "n1"), "g")
-        .join(tie("y", "n2"), "g")
-        .join(cd, "g", "left")
-        .select(
-            "g",
-            "n",
-            F.coalesce(F.col("nc"), F.lit(0)).alias("nc"),
-            F.coalesce(F.col("nd"), F.lit(0)).alias("nd"),
-            "n1",
-            "n2",
-            ((F.col("n") * (F.col("n") - 1)) / 2).cast("long").alias("n0"),
-        )
-    )
-    dd = lambda c: F.col(c).cast("double")  # noqa: E731
-    return out.select(
-        "g",
-        "n",
-        "nc",
-        "nd",
-        "n1",
-        "n2",
-        F.when(
-            (F.col("n0") > F.col("n1")) & (F.col("n0") > F.col("n2")),
-            F.round(
-                (dd("nc") - dd("nd"))
-                / (
-                    F.sqrt(dd("n0") - dd("n1"))
-                    * F.sqrt(dd("n0") - dd("n2"))
-                ),
-                6,
-            ),
-        ).alias("tau"),
-    )
-
-
-def kendall_tau_sql(
-    rows_cte: str,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> str:
-    """DuckDB twin of kendall_tau — identical tie-cell pair join and
-    pinned tau assembly."""
-    g, x, y = group_col, x_col, y_col
-    return f"""
-WITH src AS (
-  SELECT {g} AS g, CAST({x} AS BIGINT) AS x, CAST({y} AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-cells AS (SELECT g, x, y, count(*) AS cnt FROM src GROUP BY 1, 2, 3),
-n_g AS (SELECT g, count(*) AS n FROM src GROUP BY 1),
-t1 AS (
-  SELECT g, CAST(sum(t * (t - 1)) // 2 AS BIGINT) AS n1
-  FROM (SELECT g, x, count(*) AS t FROM src GROUP BY 1, 2) q GROUP BY 1
-),
-t2 AS (
-  SELECT g, CAST(sum(t * (t - 1)) // 2 AS BIGINT) AS n2
-  FROM (SELECT g, y, count(*) AS t FROM src GROUP BY 1, 2) q GROUP BY 1
-),
-cd AS (
-  SELECT a.g,
-         CAST(sum(CASE WHEN a.y < b.y THEN a.cnt * b.cnt ELSE 0 END)
-              AS BIGINT) AS nc,
-         CAST(sum(CASE WHEN a.y > b.y THEN a.cnt * b.cnt ELSE 0 END)
-              AS BIGINT) AS nd
-  FROM cells a JOIN cells b ON a.g = b.g AND a.x < b.x
-  GROUP BY 1
-)
-SELECT n_g.g, CAST(n_g.n AS BIGINT) AS n,
-       COALESCE(cd.nc, 0) AS nc, COALESCE(cd.nd, 0) AS nd,
-       t1.n1, t2.n2,
-       CASE WHEN (n_g.n * (n_g.n - 1)) // 2 > t1.n1
-             AND (n_g.n * (n_g.n - 1)) // 2 > t2.n2
-            THEN round(
-              (CAST(COALESCE(cd.nc, 0) AS DOUBLE)
-               - CAST(COALESCE(cd.nd, 0) AS DOUBLE))
-              / (sqrt(CAST((n_g.n * (n_g.n - 1)) // 2 - t1.n1 AS DOUBLE))
-                 * sqrt(CAST((n_g.n * (n_g.n - 1)) // 2 - t2.n2 AS DOUBLE))),
-              6)
-       END AS tau
-FROM n_g
-JOIN t1 USING (g)
-JOIN t2 USING (g)
-LEFT JOIN cd USING (g)
-"""
-
-
-def isotonic_fit(
-    df: DataFrame,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """WEIGHTED ISOTONIC REGRESSION per group (sklearn IsotonicRegression
-    semantics) — fit the nondecreasing step function of x minimizing
-    squared error to y: THE probability-calibration primitive (isotonic
-    calibration of model scores) and monotone-trend smoother.
-
-    Rows first collapse to blocks (g, x) with (sum_y, cnt); the kernel
-    then runs the classical POOL-ADJACENT-VIOLATORS stack per group —
-    append a block, merge backwards while the previous pooled average
-    >= the new one — with all average comparisons done by integer
-    cross-multiplication (never a float), so the pooling is exact.
-
-    Output (g, x, w, fitted_micro, fitted): fitted_micro is the exact
-    TRUNCATION of 1e6 * the pooled rational average (integer division
-    of pooled sums — arbitrary-precision in the kernel), fitted the
-    pinned double fitted_micro / 1e6.
-
-    The DuckDB twin deliberately uses the OTHER classical formulation —
-    the minimax identity fitted(i) = max_{j<=i} min_{k>=i} avg(j..k) —
-    on the same trunc-quantized integers; truncation is monotone, so it
-    commutes with max/min and the two independent algorithms agree
-    exactly.
-
-    Scale: the groupBy(g, x) collapse is combinable and runs at corpus
-    scale; the PAVA stack is O(blocks) per group and blocks = distinct
-    x bins (calibration curves are score-binned: tens to thousands),
-    so the applyInPandas stage is trivially bounded. y must be integer
-    units (cents, micro, 0/1 labels)."""
-    import pandas as pd
-
-    blocks = (
-        df.select(
-            F.col(group_col).cast("string").alias("g"),
-            F.col(x_col).cast("long").alias("x"),
-            F.col(y_col).cast("long").alias("y"),
-        )
-        .groupBy("g", "x")
-        .agg(F.sum("y").alias("s"), F.count(F.lit(1)).alias("w"))
-    )
-
-    def pava(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("x")
-        g = pdf["g"].iloc[0]
-        stack: list[list[int]] = []  # [s, w, n_blocks]
-        xs = pdf["x"].tolist()
-        ss = [int(v) for v in pdf["s"].tolist()]
-        ws = [int(v) for v in pdf["w"].tolist()]
-        for s, w in zip(ss, ws):
-            stack.append([s, w, 1])
-            # merge while prev avg >= new avg: s1/w1 >= s2/w2
-            while (
-                len(stack) > 1
-                and stack[-2][0] * stack[-1][1] >= stack[-1][0] * stack[-2][1]
-            ):
-                s2, w2, n2 = stack.pop()
-                stack[-1][0] += s2
-                stack[-1][1] += w2
-                stack[-1][2] += n2
-        out_x, out_w, out_fm = [], [], []
-        i = 0
-        for s, w, n in stack:
-            # exact TRUNCATION (toward zero) of 1e6 * pooled average —
-            # matches SQL integer division; truncation is monotone, so
-            # it commutes with the twin's max/min like floor would
-            num = 1000000 * s
-            fm = abs(num) // w if num >= 0 else -(abs(num) // w)
-            for _ in range(n):
-                out_x.append(xs[i])
-                out_w.append(ws[i])
-                out_fm.append(fm)
-                i += 1
-        return pd.DataFrame(
-            {
-                "g": [g] * len(out_x),
-                "x": out_x,
-                "w": out_w,
-                "fitted_micro": out_fm,
-                "fitted": [v / 1000000.0 for v in out_fm],
-            }
-        )
-
-    return blocks.groupBy("g").applyInPandas(
-        pava,
-        schema="g string, x long, w long, fitted_micro long, fitted double",
-    )
-
-
-def isotonic_fit_sql(
-    rows_cte: str,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> str:
-    """DuckDB twin of isotonic_fit via the minimax identity
-    fitted(i) = max_{j<=i} min_{k>=i} floor(1e6 * avg(j..k)) on the
-    same integer block sums (floor commutes with max/min)."""
-    g, x, y = group_col, x_col, y_col
-    return f"""
-WITH src AS (
-  SELECT {g} AS g, CAST({x} AS BIGINT) AS x, CAST({y} AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-blk AS (
-  SELECT g, x, CAST(sum(y) AS BIGINT) AS s, count(*) AS w,
-         row_number() OVER (PARTITION BY g ORDER BY x) AS i,
-         sum(sum(y)) OVER (
-           PARTITION BY g ORDER BY x
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS cs,
-         sum(count(*)) OVER (
-           PARTITION BY g ORDER BY x
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS cw
-  FROM src GROUP BY 1, 2
-),
-qa AS (
-  SELECT j.g, j.i AS ji, k.i AS ki,
-         (1000000 * (k.cs - j.cs + j.s)) // (k.cw - j.cw + j.w) AS qavg
-  FROM blk j JOIN blk k ON j.g = k.g AND j.i <= k.i
-),
-mn AS (
-  SELECT qa.g, qa.ji, ix.i AS ii, min(qa.qavg) AS v
-  FROM qa JOIN blk ix ON qa.g = ix.g AND qa.ji <= ix.i AND qa.ki >= ix.i
-  GROUP BY 1, 2, 3
-),
-fit AS (SELECT g, ii, max(v) AS fm FROM mn GROUP BY 1, 2)
-SELECT blk.g, blk.x, CAST(blk.w AS BIGINT) AS w,
-       CAST(fit.fm AS BIGINT) AS fitted_micro,
-       CAST(fit.fm AS DOUBLE) / 1000000.0 AS fitted
-FROM blk JOIN fit ON blk.g = fit.g AND blk.i = fit.ii
-"""
-
-
-def theil_sen(
-    df: DataFrame,
-    group_col: str = "g",
-    id_col: str = "pid",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """THEIL-SEN ROBUST REGRESSION per group (Theil 1950 / Sen 1968),
-    the median-of-pairwise-slopes line that tolerates ~29% gross
-    outliers where OLS breaks: slope = median over point pairs with
-    x_i != x_j of (y_j - y_i)/(x_j - x_i), intercept = median over
-    points of y - slope·x.
-
-    Exactness scheme: slopes are REDUCED integer fractions (den > 0),
-    the median is the LOWER median (0-based index (P-1)//2) under the
-    exact cross-multiplied fraction order — no float ever enters the
-    selection — and the reported doubles are each ONE IEEE division of
-    exact int64s, so every column is engine-pinned.  The twin ranks
-    reduced fractions by exact comparison counts, never by float sort.
-
-    Output: (g, n_pts, n_pairs, num, den, inum, iden, slope,
-    intercept) with slope = num/den, intercept = inum/iden.
-
-    Scale: Theil-Sen is O(n^2) BY DEFINITION, so it runs per bounded
-    group (a series / calibration segment, tens to low hundreds of
-    points — same contract as silhouette / dtw); groups parallelize
-    across the cluster and only one row per group returns.  For
-    corpus-wide robust trends, bin x first (group_quantiles) and run
-    Theil-Sen on the bin medians.  |x|,|y| <= ~1e6 keeps the twin's
-    cross-multiplications in int64."""
-    import math as _math
-
-    import pandas as pd
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "g": pd.Series([], dtype=object),
-                "n_pts": [], "n_pairs": [], "num": [], "den": [],
-                "inum": [], "iden": [], "slope": [], "intercept": [],
-            }
-        )
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        g = pdf["g"].iloc[0]
-        xs = [int(v) for v in pdf[x_col]]
-        ys = [int(v) for v in pdf[y_col]]
-        n = len(xs)
-        slopes = []
-        for i in range(n):
-            for j in range(i + 1, n):
-                dx = xs[j] - xs[i]
-                if dx == 0:
-                    continue
-                dy = ys[j] - ys[i]
-                if dx < 0:
-                    dx, dy = -dx, -dy
-                gc = _math.gcd(abs(dy), dx)
-                slopes.append((dy // gc, dx // gc))
-        if not slopes:
-            return empty
-        p = len(slopes)
-        # exact fraction order: a/b < c/d  <=>  a*d < c*b  (b, d > 0)
-        slopes.sort(key=lambda f: _FracKey(f))
-        num, den = slopes[(p - 1) // 2]
-        resid = sorted(y * den - num * x for x, y in zip(xs, ys))
-        rmed = resid[(n - 1) // 2]
-        gc = _math.gcd(abs(rmed), den)
-        inum, iden = rmed // gc, den // gc
-        return pd.DataFrame(
-            {
-                "g": [g], "n_pts": [n], "n_pairs": [p],
-                "num": [num], "den": [den],
-                "inum": [inum], "iden": [iden],
-                "slope": [num / den], "intercept": [inum / iden],
-            }
-        )
-
-    sel = df.select(
-        F.col(group_col).cast("string").alias("g"),
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(x_col).cast("long").alias(x_col),
-        F.col(y_col).cast("long").alias(y_col),
-    )
-    return sel.groupBy("g").applyInPandas(
-        fn,
-        schema="g string, n_pts long, n_pairs long, num long, den long,"
-        " inum long, iden long, slope double, intercept double",
-    )
-
-
-class _FracKey:
-    """Total-order key for reduced integer fractions (den > 0) using
-    exact cross-multiplication — avoids float keys entirely."""
-
-    __slots__ = ("n", "d")
-
-    def __init__(self, f):
-        self.n, self.d = f
-
-    def __lt__(self, other):
-        return self.n * other.d < other.n * self.d
-
-    def __eq__(self, other):
-        return self.n * other.d == other.n * self.d
-
-
-def theil_sen_sql(
-    rows_cte: str,
-) -> str:
-    """DuckDB twin of theil_sen: pairwise slopes -> reduce by gcd ->
-    exact comparison-count median (never a float sort) -> residual
-    lower median by row_number.  ``rows_cte`` -> (g, pid, x, y)."""
-    return f"""
-WITH src AS (
-  SELECT g, pid, CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-pr AS (
-  SELECT a.g,
-         CASE WHEN b.x < a.x THEN a.y - b.y ELSE b.y - a.y END AS dy,
-         abs(b.x - a.x) AS dx
-  FROM src a JOIN src b ON b.g = a.g AND b.pid > a.pid AND b.x <> a.x
-),
-red AS (
-  SELECT g, dy // gcd(abs(dy), dx) AS rdy, dx // gcd(abs(dy), dx) AS rdx,
-         count(*) AS c
-  FROM pr GROUP BY 1, 2, 3
-),
-tot AS (SELECT g, CAST(sum(c) AS BIGINT) AS p, count(*) AS n_pts0 FROM red GROUP BY 1),
-rk AS (
-  SELECT r1.g, r1.rdy, r1.rdx, r1.c,
-         COALESCE(sum(CASE WHEN r2.rdy * r1.rdx < r1.rdy * r2.rdx
-                           THEN r2.c END), 0) AS less
-  FROM red r1
-  LEFT JOIN red r2
-    ON r2.g = r1.g AND NOT (r2.rdy = r1.rdy AND r2.rdx = r1.rdx)
-  GROUP BY 1, 2, 3, 4
-),
-med AS (
-  SELECT rk.g, rk.rdy AS num, rk.rdx AS den
-  FROM rk JOIN tot ON tot.g = rk.g
-  WHERE rk.less <= (tot.p - 1) // 2 AND rk.less + rk.c > (tot.p - 1) // 2
-),
-resid AS (
-  SELECT s.g, s.y * m.den - m.num * s.x AS r, m.num, m.den,
-         row_number() OVER (
-           PARTITION BY s.g ORDER BY s.y * m.den - m.num * s.x) AS rn,
-         count(*) OVER (PARTITION BY s.g) AS n_pts
-  FROM src s JOIN med m ON m.g = s.g
-),
-fin AS (
-  SELECT g, num, den, n_pts, r AS rmed FROM resid
-  WHERE rn = (n_pts - 1) // 2 + 1
-)
-SELECT f.g, f.n_pts, t.p AS n_pairs, f.num, f.den,
-       f.rmed // gcd(abs(f.rmed), f.den) AS inum,
-       f.den // gcd(abs(f.rmed), f.den) AS iden,
-       CAST(f.num AS DOUBLE) / f.den AS slope,
-       CAST(f.rmed // gcd(abs(f.rmed), f.den) AS DOUBLE)
-         / (f.den // gcd(abs(f.rmed), f.den)) AS intercept
-FROM fin f JOIN tot t ON t.g = f.g
-"""
-
-
-def kruskal_wallis(
-    df: DataFrame,
-    group_col: str = "g",
-    arm_col: str = "arm",
-    value_col: str = "v",
-) -> DataFrame:
-    """KRUSKAL–WALLIS H test per group (scipy.stats.kruskal) — the
-    k-sample generalization of Mann–Whitney: do the arms' value
-    distributions share a location?  The nonparametric one-way ANOVA
-    used when arms are >2 and values are skewed.
-
-    Exactness scheme (the mann_whitney_u doubled-midrank house style):
-    ties collapse to (g, v) cells, doubled midranks d2 = 2·cum_cnt −
-    cnt + 1 are exact int64, per-arm doubled rank sums r2_a and the tie
-    term Σ(t³−t) are order-free exact integers.  The per-arm squared
-    term r2_a²/n_a (two IEEE ops on exact ints) is quantized at 1/1024
-    so the cross-arm sum s_q is an order-free int64, and H is assembled
-    from (s_q, n, ties) in a pinned literal-for-literal IEEE expression
-    the twin replays verbatim:
-
-        H = (12·(s_q/1024)/(4·n·(n+1)) − 3·(n+1)) / (1 − ties/(n³−n))
-
-    (the extra /4 converts doubled rank sums: R_a = r2_a/2).  h is NULL
-    when every value ties (zero correction).  |r2_a| ≤ 2n² keeps
-    r2_a² exact in a double for n ≤ ~3·10⁶ rows per group.
-
-    Output: (g, n, k_arms, ties, s_q, h).
-
-    Scale: one combinable groupBy(g, arm, v), one distinct-value window
-    per group (state = distinct values, not rows), two rollups. Same
-    shuffle shape as mann_whitney_u."""
-    bycell = df.groupBy(
-        F.col(group_col).alias("g"),
-        F.col(arm_col).cast("long").alias("arm"),
-        F.col(value_col).cast("long").alias("v"),
-    ).agg(F.count(F.lit(1)).alias("cnt_a"))
-    byval = bycell.groupBy("g", "v").agg(F.sum("cnt_a").alias("cnt"))
-    w = Window.partitionBy("g").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ranked = byval.select(
-        "g",
-        "v",
-        "cnt",
-        (F.lit(2) * F.sum("cnt").over(w) - F.col("cnt") + F.lit(1)).alias(
-            "d2"
-        ),
-    )
-    per_arm = (
-        bycell.join(ranked.select("g", "v", "d2"), ["g", "v"])
-        .groupBy("g", "arm")
-        .agg(
-            F.sum("cnt_a").alias("n_a"),
-            F.sum(F.col("d2") * F.col("cnt_a")).alias("r2_a"),
-        )
-    )
-    dd = lambda c: c.cast("double")  # noqa: E731
-    term = dd(F.col("r2_a")) * dd(F.col("r2_a")) / dd(F.col("n_a"))
-    q = F.floor(term * F.lit(1024.0) + F.lit(0.5)).cast("long")
-    per_g = per_arm.select("g", "n_a", q.alias("q")).groupBy("g").agg(
-        F.sum("n_a").alias("n"),
-        F.count(F.lit(1)).alias("k_arms"),
-        F.sum("q").alias("s_q"),
-    )
-    ties_g = ranked.groupBy("g").agg(
-        F.sum(
-            F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt")
-        ).alias("ties")
-    )
-    j = per_g.join(ties_g, "g")
-    n = F.col("n")
-    corr = F.lit(1.0) - dd(F.col("ties")) / dd(n * n * n - n)
-    h_raw = (
-        F.lit(12.0)
-        * (dd(F.col("s_q")) / F.lit(1024.0))
-        / dd(F.lit(4) * n * (n + 1))
-        - F.lit(3.0) * dd(n + 1)
-    )
-    return j.select(
-        "g",
-        "n",
-        "k_arms",
-        "ties",
-        "s_q",
-        F.when(corr != 0.0, h_raw / corr).alias("h"),
-    )
-
-
-def kruskal_wallis_sql(
-    rows_cte: str,
-    group_col: str = "g",
-    arm_col: str = "arm",
-    value_col: str = "v",
-) -> str:
-    """DuckDB twin of kruskal_wallis — identical doubled midranks,
-    1/1024 term quantization, and verbatim H assembly."""
-    g, a, v = group_col, arm_col, value_col
-    return f"""
-WITH src AS ({rows_cte}),
-bycell AS (
-  SELECT {g} AS g, CAST({a} AS BIGINT) AS arm, CAST({v} AS BIGINT) AS v,
-         count(*) AS cnt_a
-  FROM src GROUP BY 1, 2, 3
-),
-byval AS (
-  SELECT g, v, CAST(sum(cnt_a) AS BIGINT) AS cnt FROM bycell GROUP BY 1, 2
-),
-ranked AS (
-  SELECT g, v, cnt,
-         2 * sum(cnt) OVER (
-           PARTITION BY g ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) - cnt + 1 AS d2
-  FROM byval
-),
-per_arm AS (
-  SELECT b.g, b.arm, CAST(sum(b.cnt_a) AS BIGINT) AS n_a,
-         CAST(sum(r.d2 * b.cnt_a) AS BIGINT) AS r2_a
-  FROM bycell b JOIN ranked r ON r.g = b.g AND r.v = b.v
-  GROUP BY 1, 2
-),
-per_g AS (
-  SELECT g, CAST(sum(n_a) AS BIGINT) AS n, count(*) AS k_arms,
-         CAST(sum(CAST(floor(CAST(r2_a AS DOUBLE) * CAST(r2_a AS DOUBLE)
-                             / CAST(n_a AS DOUBLE) * 1024.0 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS s_q
-  FROM per_arm GROUP BY 1
-),
-ties_g AS (
-  SELECT g, CAST(sum(cnt * cnt * cnt - cnt) AS BIGINT) AS ties
-  FROM ranked GROUP BY 1
-)
-SELECT p.g, p.n, p.k_arms, t.ties, p.s_q,
-       CASE WHEN 1.0 - CAST(t.ties AS DOUBLE)
-                       / CAST(p.n * p.n * p.n - p.n AS DOUBLE) <> 0.0
-            THEN (12.0 * (CAST(p.s_q AS DOUBLE) / 1024.0)
-                    / CAST(4 * p.n * (p.n + 1) AS DOUBLE)
-                  - 3.0 * CAST(p.n + 1 AS DOUBLE))
-                 / (1.0 - CAST(t.ties AS DOUBLE)
-                          / CAST(p.n * p.n * p.n - p.n AS DOUBLE))
-       END AS h
-FROM per_g p JOIN ties_g t ON t.g = p.g
-"""
-
-
 def ewma_smooth(
     df: DataFrame,
     k: int = 6,
@@ -3386,4548 +688,31 @@ FROM src
 """
 
 
-def benford_digits(
-    df: DataFrame,
-    group_col: str = "g",
-    value_col: str = "v",
-) -> DataFrame:
-    """(g, digit, n_obs, n_total, expected_micro, chi2_term_micro) —
-    FIRST-DIGIT (Benford) audit per group: the distribution of leading
-    digits of positive values vs Benford's law p(d) = log10(1 + 1/d),
-    the classic fraud / fabricated-data / unit-mixing screen for
-    financial and sensor columns.
-
-    The leading digit is v // 10^(len-1) where len is the exact decimal
-    length — a 19-way CASE over literal integer divisors (floats and
-    power() are unpinned near 10^k; a nested halving loop explodes the
-    expression tree 3^19-fold), identical in both engines.  Expected Benford
-    masses are inlined micro-unit constants (identical literals in both
-    engines); the per-digit Pearson term (n_obs − n·p)²/(n·p) is
-    emitted micro-quantized from pinned IEEE ops so the group statistic
-    is Σ terms — order-free.  Values <= 0 are excluded (Benford is
-    defined on positive magnitudes).
-
-    Scale: one scan + one 9-cell-per-group combinable rollup — nothing
-    else.  chi2 = sum(chi2_term_micro)/1e6 downstream."""
-    # Benford masses, micro-units (floor(log10(1+1/d)*1e6 + 0.5))
-    probs = [301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757]
-    v = F.col(value_col).cast("long")
-    pre = df.filter(v > 0).select(
-        F.col(group_col).cast("string").alias("g"),
-        v.alias("_v"),
-        F.length(v.cast("string")).alias("_ln"),
-    )
-    d = F.col("_v")
-    for k in range(2, 20):  # int64 has at most 19 digits; `div` stays integer
-        d = F.when(
-            F.col("_ln") == k, F.expr(f"_v div {10 ** (k - 1)}")
-        ).otherwise(d)
-    src = pre.select("g", d.alias("digit"))
-    counts = src.groupBy("g", "digit").agg(F.count(F.lit(1)).alias("n_obs"))
-    tot = counts.groupBy("g").agg(F.sum("n_obs").alias("n_total"))
-    digits = counts.sparkSession.createDataFrame(
-        [(dd, p) for dd, p in zip(range(1, 10), probs)],
-        "digit long, expected_micro long",
-    )
-    full = (
-        tot.crossJoin(F.broadcast(digits))
-        .join(counts, ["g", "digit"], "left")
-        .select(
-            "g",
-            "digit",
-            F.coalesce("n_obs", F.lit(0)).alias("n_obs"),
-            "n_total",
-            "expected_micro",
-        )
-    )
-    dd_ = lambda c: c.cast("double")  # noqa: E731
-    exp_n = dd_(F.col("n_total")) * dd_(F.col("expected_micro")) / F.lit(1000000.0)
-    term = (dd_(F.col("n_obs")) - exp_n) * (dd_(F.col("n_obs")) - exp_n) / exp_n
-    return full.select(
-        "g",
-        "digit",
-        "n_obs",
-        "n_total",
-        "expected_micro",
-        F.floor(term * F.lit(1000000.0) + F.lit(0.5)).cast("long").alias(
-            "chi2_term_micro"
-        ),
-    )
-
-
-def benford_digits_sql(
-    rows_cte: str,
-) -> str:
-    """DuckDB twin of benford_digits — identical digit halving, inlined
-    micro masses, and pinned term assembly.  ``rows_cte`` -> (g, v)."""
-    probs = [301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757]
-    vals = ", ".join(f"({d}, {p})" for d, p in zip(range(1, 10), probs))
-    cases = " ".join(
-        f"WHEN {k} THEN v // {10 ** (k - 1)}" for k in range(2, 20)
-    )
-    digit = f"(CASE length(CAST(v AS VARCHAR)) {cases} ELSE v END)"
-    return f"""
-WITH src AS (
-  SELECT g, {digit} AS digit
-  FROM (SELECT g, CAST(v AS BIGINT) AS v FROM ({rows_cte})) WHERE v > 0
-),
-counts AS (SELECT g, digit, count(*) AS n_obs FROM src GROUP BY 1, 2),
-tot AS (SELECT g, CAST(sum(n_obs) AS BIGINT) AS n_total FROM counts GROUP BY 1),
-dig(digit, expected_micro) AS (VALUES {vals}),
-full0 AS (
-  SELECT t.g, d.digit, COALESCE(c.n_obs, 0) AS n_obs, t.n_total,
-         d.expected_micro
-  FROM tot t CROSS JOIN dig d
-  LEFT JOIN counts c ON c.g = t.g AND c.digit = d.digit
-)
-SELECT g, CAST(digit AS BIGINT) AS digit, CAST(n_obs AS BIGINT) AS n_obs,
-       n_total, CAST(expected_micro AS BIGINT) AS expected_micro,
-       CAST(floor((CAST(n_obs AS DOUBLE)
-              - CAST(n_total AS DOUBLE) * CAST(expected_micro AS DOUBLE)
-                / 1000000.0)
-             * (CAST(n_obs AS DOUBLE)
-              - CAST(n_total AS DOUBLE) * CAST(expected_micro AS DOUBLE)
-                / 1000000.0)
-             / (CAST(n_total AS DOUBLE) * CAST(expected_micro AS DOUBLE)
-                / 1000000.0) * 1000000.0 + 0.5) AS BIGINT)
-         AS chi2_term_micro
-FROM full0
-"""
-
-
-def conformal_flags(
-    cal: DataFrame,
-    test: DataFrame,
-    alpha_micro: int = 100_000,
-    group_col: str = "g",
-    id_col: str = "pid",
-    score_col: str = "s",
-) -> DataFrame:
-    """(g, pid, s, n_cal, k, thresh, covered) — SPLIT CONFORMAL
-    PREDICTION (Vovk et al.; the distribution-free coverage guarantee
-    every production ML gate wants): per group, the threshold is the
-    k-th smallest calibration nonconformity score with
-
-        k = ceil((1 - alpha) * (n_cal + 1))
-
-    and a test row is covered iff its score <= threshold.  When k >
-    n_cal (tiny calibration sets) the threshold is unbounded — NULL
-    thresh, everything covered — the standard convention that keeps
-    the >= 1-alpha guarantee.
-
-    Exactness: k is exact integer arithmetic on micro-units
-    (ceil(a/b) = (a + b - 1) // b), the order statistic is selected by
-    cumulative COUNTS over tie-collapsed distinct scores (min s with
-    cum >= k) — no ntile, no float quantile, no single-partition
-    window.
-
-    Scale: calibration collapses to (g, score) cells (combinable), the
-    cum window runs over distinct scores, the test side is one
-    broadcast-able join on g."""
-    am = int(alpha_micro)
-    byval = cal.groupBy(
-        F.col(group_col).alias("g"), F.col(score_col).cast("long").alias("s")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("g").orderBy("s").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = byval.withColumn("cum", F.sum("cnt").over(w))
-    n_g = byval.groupBy("g").agg(F.sum("cnt").alias("n_cal"))
-    k = (
-        ((F.lit(1_000_000 - am)) * (F.col("n_cal") + 1) + F.lit(999_999))
-        / F.lit(1_000_000)
-    ).cast("long")
-    n_g = n_g.withColumn("k", k)
-    thr = (
-        cum.join(n_g, "g")
-        .filter(F.col("cum") >= F.col("k"))
-        .groupBy("g")
-        .agg(F.min("s").alias("thresh"))
-    )
-    t = test.select(
-        F.col(group_col).alias("g"),
-        F.col(id_col).cast("long").alias("pid"),
-        F.col(score_col).cast("long").alias("s"),
-    )
-    return (
-        t.join(n_g, "g", "left")
-        .join(thr, "g", "left")
-        .select(
-            "g",
-            "pid",
-            "s",
-            F.coalesce("n_cal", F.lit(0)).alias("n_cal"),
-            F.coalesce("k", F.lit(1)).alias("k"),
-            "thresh",
-            (F.col("thresh").isNull() | (F.col("s") <= F.col("thresh"))).alias(
-                "covered"
-            ),
-        )
-    )
-
-
-def conformal_flags_sql(
-    cal_cte: str,
-    test_cte: str,
-    alpha_micro: int = 100_000,
-) -> str:
-    """DuckDB twin of conformal_flags.  ``cal_cte``/``test_cte`` ->
-    (g, pid, s)."""
-    am = int(alpha_micro)
-    return f"""
-WITH cal AS (SELECT g, CAST(s AS BIGINT) AS s FROM ({cal_cte})),
-byval AS (SELECT g, s, count(*) AS cnt FROM cal GROUP BY 1, 2),
-cum AS (
-  SELECT g, s, sum(cnt) OVER (
-    PARTITION BY g ORDER BY s
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM byval
-),
-n_g AS (
-  SELECT g, CAST(sum(cnt) AS BIGINT) AS n_cal,
-         ({1_000_000 - am} * (CAST(sum(cnt) AS BIGINT) + 1) + 999999)
-           // 1000000 AS k
-  FROM byval GROUP BY 1
-),
-thr AS (
-  SELECT c.g, min(c.s) AS thresh
-  FROM cum c JOIN n_g ON n_g.g = c.g
-  WHERE c.cum >= n_g.k GROUP BY 1
-)
-SELECT t.g, CAST(t.pid AS BIGINT) AS pid, CAST(t.s AS BIGINT) AS s,
-       COALESCE(n_g.n_cal, 0) AS n_cal, COALESCE(n_g.k, 1) AS k,
-       thr.thresh,
-       (thr.thresh IS NULL OR t.s <= thr.thresh) AS covered
-FROM ({test_cte}) t
-LEFT JOIN n_g ON n_g.g = t.g
-LEFT JOIN thr ON thr.g = t.g
-"""
-
-
-def trimmed_mean(
-    df: DataFrame,
-    trim_micro: int = 100_000,
-    group_col: str = "g",
-    value_col: str = "v",
-) -> DataFrame:
-    """(g, n, k, trimmed_n, trimmed_sum, trimmed_mean, v_lo, v_hi,
-    winsor_sum, winsor_mean) — TRIMMED and WINSORIZED means per group
-    (the robust location estimates between mean and median): drop
-    (trim) or clamp (winsorize) the k = floor(n·trim/1e6) smallest and
-    largest observations.
-
-    Exactness: everything is counting arithmetic over tie-collapsed
-    (g, v) cells — a cell straddling the trim boundary contributes
-    clip(min(cum, n−k) − max(cum−cnt, k), 0) of its copies, the
-    winsor clamps v_lo/v_hi are count-selected order statistics
-    (min v with cum ≥ k+1 / ≥ n−k), and the two means are single IEEE
-    divisions of exact int64 sums.  No sort of raw rows, no ntile.
-
-    Scale: one combinable groupBy(g, v), one distinct-value window,
-    two rollups — mann_whitney's shuffle shape.  Degenerate groups
-    (n ≤ 2k) return NULL means."""
-    tm = int(trim_micro)
-    byval = df.groupBy(
-        F.col(group_col).alias("g"), F.col(value_col).cast("long").alias("v")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("g").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = byval.withColumn("cum", F.sum("cnt").over(w))
-    n_g = byval.groupBy("g").agg(F.sum("cnt").alias("n"))
-    # integer `div` keeps the floor exact (a double quotient can round
-    # up across the floor boundary for adversarial n*trim)
-    n_g = n_g.withColumn("k", F.expr(f"n * {tm} div 1000000"))
-    j = cum.join(n_g, "g")
-    kept = F.greatest(
-        F.least(F.col("cum"), F.col("n") - F.col("k"))
-        - F.greatest(F.col("cum") - F.col("cnt"), F.col("k")),
-        F.lit(0),
-    )
-    agg = j.groupBy("g").agg(
-        F.sum(F.col("v") * kept).alias("trimmed_sum"),
-        F.min(
-            F.when(F.col("cum") >= F.col("k") + 1, F.col("v"))
-        ).alias("v_lo"),
-        F.min(
-            F.when(F.col("cum") >= F.col("n") - F.col("k"), F.col("v"))
-        ).alias("v_hi"),
-    )
-    out = n_g.join(agg, "g")
-    tn = F.col("n") - 2 * F.col("k")
-    wsum = (
-        F.col("trimmed_sum")
-        + F.col("k") * (F.col("v_lo") + F.col("v_hi"))
-    )
-    dd = lambda c: c.cast("double")  # noqa: E731
-    return out.select(
-        "g",
-        "n",
-        "k",
-        tn.alias("trimmed_n"),
-        "trimmed_sum",
-        F.when(tn > 0, dd(F.col("trimmed_sum")) / dd(tn)).alias(
-            "trimmed_mean"
-        ),
-        "v_lo",
-        "v_hi",
-        wsum.alias("winsor_sum"),
-        F.when(tn > 0, dd(wsum) / dd(F.col("n"))).alias("winsor_mean"),
-    )
-
-
-def trimmed_mean_sql(
-    rows_cte: str, trim_micro: int = 100_000
-) -> str:
-    """DuckDB twin of trimmed_mean.  ``rows_cte`` -> (g, v)."""
-    tm = int(trim_micro)
-    return f"""
-WITH src AS (SELECT g, CAST(v AS BIGINT) AS v FROM ({rows_cte})),
-byval AS (SELECT g, v, count(*) AS cnt FROM src GROUP BY 1, 2),
-cum AS (
-  SELECT g, v, cnt, sum(cnt) OVER (
-    PARTITION BY g ORDER BY v
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM byval
-),
-n_g AS (
-  SELECT g, CAST(sum(cnt) AS BIGINT) AS n,
-         CAST(sum(cnt) * {tm} // 1000000 AS BIGINT) AS k
-  FROM byval GROUP BY 1
-),
-agg AS (
-  SELECT c.g,
-         CAST(sum(c.v * greatest(
-             least(c.cum, n_g.n - n_g.k)
-               - greatest(c.cum - c.cnt, n_g.k), 0)) AS BIGINT)
-           AS trimmed_sum,
-         min(CASE WHEN c.cum >= n_g.k + 1 THEN c.v END) AS v_lo,
-         min(CASE WHEN c.cum >= n_g.n - n_g.k THEN c.v END) AS v_hi
-  FROM cum c JOIN n_g ON n_g.g = c.g
-  GROUP BY 1
-)
-SELECT n_g.g, n_g.n, n_g.k,
-       n_g.n - 2 * n_g.k AS trimmed_n,
-       agg.trimmed_sum,
-       CASE WHEN n_g.n - 2 * n_g.k > 0
-            THEN CAST(agg.trimmed_sum AS DOUBLE)
-                 / CAST(n_g.n - 2 * n_g.k AS DOUBLE) END AS trimmed_mean,
-       agg.v_lo, agg.v_hi,
-       agg.trimmed_sum + n_g.k * (agg.v_lo + agg.v_hi) AS winsor_sum,
-       CASE WHEN n_g.n - 2 * n_g.k > 0
-            THEN CAST(agg.trimmed_sum + n_g.k * (agg.v_lo + agg.v_hi)
-                      AS DOUBLE) / CAST(n_g.n AS DOUBLE) END AS winsor_mean
-FROM n_g JOIN agg ON agg.g = n_g.g
-"""
-
-
-def cross_correlation(
-    df: DataFrame,
-    max_lag: int = 5,
-    group_col: str = "g",
-    time_col: str = "t",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """(g, lag, n, sx, sy, sxy, sx2, sy2, r) — LAGGED CROSS-CORRELATION
-    between two aligned integer series per group: Pearson r of the
-    pairs (x_t, y_{t+lag}) for every lag in [-max_lag, max_lag] — the
-    lead/lag detector (does metric A anticipate metric B, and by how
-    many steps?) behind causal-ish dashboards and alignment search.
-
-    All five sums are exact int64 over the overlap; r is the pinned
-    assembly (n·sxy − sx·sy) / (sqrt(n·sx2 − sx²) · sqrt(n·sy2 − sy²))
-    — exact ints into correctly-rounded ops, identical cross-engine;
-    NULL when either marginal is constant on the overlap.
-
-    Scale: one equi-join of the series against itself shifted by an
-    exploded lag column — (2·max_lag+1)× the input flows into a
-    combinable (g, lag) rollup; no window, no sort."""
-    k = int(max_lag)
-    a = df.select(
-        F.col(group_col).alias("g"),
-        F.col(time_col).cast("long").alias("t"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
-    )
-    lagged = a.select(
-        "g", "t", "x",
-        F.explode(F.sequence(F.lit(-k), F.lit(k))).alias("lag"),
-    )
-    b = a.select(
-        "g", F.col("t").alias("tb"), F.col("y").alias("yb")
-    )
-    j = lagged.join(
-        b,
-        (lagged["g"] == b["g"]) & (b["tb"] == lagged["t"] + lagged["lag"]),
-    ).select(lagged["g"], "lag", "x", F.col("yb").alias("y2"))
-    agg = j.groupBy("g", "lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y2").alias("sy"),
-        F.sum(F.col("x") * F.col("y2")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sx2"),
-        F.sum(F.col("y2") * F.col("y2")).alias("sy2"),
-    )
-    n = F.col("n")
-    vx = n * F.col("sx2") - F.col("sx") * F.col("sx")
-    vy = n * F.col("sy2") - F.col("sy") * F.col("sy")
-    num = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    dd = lambda c: c.cast("double")  # noqa: E731
-    return agg.select(
-        "g", "lag", "n", "sx", "sy", "sxy", "sx2", "sy2",
-        F.when(
-            (vx > 0) & (vy > 0),
-            dd(num) / (F.sqrt(dd(vx)) * F.sqrt(dd(vy))),
-        ).alias("r"),
-    )
-
-
-def cross_correlation_sql(
-    rows_cte: str, max_lag: int = 5
-) -> str:
-    """DuckDB twin of cross_correlation.  ``rows_cte`` -> (g, t, x, y)."""
-    k = int(max_lag)
-    return f"""
-WITH src AS (
-  SELECT g, CAST(t AS BIGINT) AS t, CAST(x AS BIGINT) AS x,
-         CAST(y AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-lags AS (SELECT unnest(range(-{k}, {k + 1})) AS lag),
-j AS (
-  SELECT a.g, l.lag, a.x, b.y AS y2
-  FROM src a CROSS JOIN lags l
-  JOIN src b ON b.g = a.g AND b.t = a.t + l.lag
-),
-agg AS (
-  SELECT g, lag, count(*) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y2) AS BIGINT) AS sy,
-         CAST(sum(x * y2) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sx2,
-         CAST(sum(y2 * y2) AS BIGINT) AS sy2
-  FROM j GROUP BY 1, 2
-)
-SELECT g, CAST(lag AS BIGINT) AS lag, n, sx, sy, sxy, sx2, sy2,
-       CASE WHEN n * sx2 - sx * sx > 0 AND n * sy2 - sy * sy > 0
-            THEN CAST(n * sxy - sx * sy AS DOUBLE)
-                 / (sqrt(CAST(n * sx2 - sx * sx AS DOUBLE))
-                    * sqrt(CAST(n * sy2 - sy * sy AS DOUBLE)))
-       END AS r
-FROM agg
-"""
-
-
-def wasserstein_drift(
-    cur: DataFrame,
-    ref: DataFrame,
-    value_col: str,
-    group_col: str,
-) -> DataFrame:
-    """(g, n_cur, n_ref, w1_num, w1_den, w1) — per-group 1-D
-    WASSERSTEIN-1 (earth mover's) distance between each group's
-    empirical distribution of ``value_col`` and a shared reference
-    sample. The binning-free drift measure that, unlike KS (sup gap)
-    and PSI (binned log-ratio), weighs HOW FAR mass moved:
-
-        W1 = integral |F_g(x) - F_ref(x)| dx
-           = sum_i |cum_g(v_i)*N_ref - cum_ref(v_i)*N_g| * (v_{i+1}-v_i)
-             / (N_g * N_ref)
-
-    over the consecutive distinct values v_i of the union support.
-    The numerator/denominator pair is EXACT int64 (counting arithmetic
-    only); ``w1`` is the single pinned IEEE division. Deterministic:
-    no bins, no epsilon, no order sensitivity (sums of nonnegative
-    integers).
-
-    Scale: per-(g, v) counts are combinable rollups; the reference
-    histogram is broadcast (support-sized, corpus-sublinear); the
-    cumulative walk is a per-group window over the group's support —
-    bounded by distinct values, never raw rows. One shuffle on g."""
-    refc = ref.groupBy(F.col(value_col).alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("nr_v")
-    )
-    curc = cur.groupBy(
-        F.col(group_col).alias("g"), F.col(value_col).alias("v")
-    ).agg(F.count(F.lit(1)).cast("long").alias("nc_v"))
-    groups = curc.select("g").distinct()
-    # union support per group: the group's own values plus every
-    # reference value (the ref support is small and broadcast).
-    support = (
-        curc.select("g", "v")
-        .union(groups.crossJoin(F.broadcast(refc.select("v"))))
-        .distinct()
-    )
-    merged = (
-        support.join(curc, ["g", "v"], "left")
-        .join(F.broadcast(refc), "v", "left")
-        .select(
-            "g",
-            "v",
-            F.coalesce("nc_v", F.lit(0)).alias("nc_v"),
-            F.coalesce("nr_v", F.lit(0)).alias("nr_v"),
-        )
-    )
-    wv = Window.partitionBy("g").orderBy("v")
-    wcum = wv.rowsBetween(Window.unboundedPreceding, 0)
-    stepped = merged.select(
-        "g",
-        "v",
-        F.sum("nc_v").over(wcum).cast("long").alias("cc"),
-        F.sum("nr_v").over(wcum).cast("long").alias("cr"),
-        F.lead("v").over(wv).alias("v_next"),
-    )
-    tot = merged.groupBy("g").agg(
-        F.sum("nc_v").cast("long").alias("n_cur"),
-        F.sum("nr_v").cast("long").alias("n_ref"),
-    )
-    return (
-        stepped.filter(F.col("v_next").isNotNull())
-        .join(tot, "g")
-        .groupBy("g", "n_cur", "n_ref")
-        .agg(
-            F.sum(
-                F.abs(
-                    F.col("cc") * F.col("n_ref")
-                    - F.col("cr") * F.col("n_cur")
-                )
-                * (F.col("v_next") - F.col("v"))
-            )
-            .cast("long")
-            .alias("w1_num")
-        )
-        .select(
-            "g",
-            "n_cur",
-            "n_ref",
-            "w1_num",
-            (F.col("n_cur") * F.col("n_ref")).cast("long").alias("w1_den"),
-            (
-                F.col("w1_num").cast("double")
-                / (F.col("n_cur") * F.col("n_ref")).cast("double")
-            ).alias("w1"),
-        )
-    )
-
-
-def wasserstein_drift_sql(
-    cur_cte: str, ref_cte: str, value_col: str, group_col: str
-) -> str:
-    """DuckDB twin of wasserstein_drift — identical union support,
-    cumulative counts, integer step areas, and pinned final division."""
-    v, g = value_col, group_col
-    return f"""
-WITH cs AS ({cur_cte}), rs AS ({ref_cte}),
-refc AS (SELECT {v} AS v, CAST(count(*) AS BIGINT) AS nr_v
-         FROM rs GROUP BY 1),
-curc AS (SELECT {g} AS g, {v} AS v, CAST(count(*) AS BIGINT) AS nc_v
-         FROM cs GROUP BY 1, 2),
-support AS (
-  SELECT g, v FROM curc
-  UNION
-  SELECT gg.g, refc.v FROM (SELECT DISTINCT g FROM curc) gg, refc
-),
-merged AS (
-  SELECT s.g, s.v,
-         COALESCE(curc.nc_v, 0) AS nc_v,
-         COALESCE(refc.nr_v, 0) AS nr_v
-  FROM support s
-  LEFT JOIN curc ON curc.g = s.g AND curc.v = s.v
-  LEFT JOIN refc ON refc.v = s.v
-),
-stepped AS (
-  SELECT g, v,
-    CAST(sum(nc_v) OVER (PARTITION BY g ORDER BY v
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cc,
-    CAST(sum(nr_v) OVER (PARTITION BY g ORDER BY v
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cr,
-    lead(v) OVER (PARTITION BY g ORDER BY v) AS v_next
-  FROM merged
-),
-tot AS (
-  SELECT g, CAST(sum(nc_v) AS BIGINT) AS n_cur,
-         CAST(sum(nr_v) AS BIGINT) AS n_ref
-  FROM merged GROUP BY 1
-)
-SELECT s.g, t.n_cur, t.n_ref,
-       CAST(sum(abs(s.cc * t.n_ref - s.cr * t.n_cur)
-                * (s.v_next - s.v)) AS BIGINT) AS w1_num,
-       CAST(t.n_cur * t.n_ref AS BIGINT) AS w1_den,
-       CAST(sum(abs(s.cc * t.n_ref - s.cr * t.n_cur)
-                * (s.v_next - s.v)) AS DOUBLE)
-         / CAST(t.n_cur * t.n_ref AS DOUBLE) AS w1
-FROM stepped s JOIN tot t ON t.g = s.g
-WHERE s.v_next IS NOT NULL
-GROUP BY 1, 2, 3, 5
-"""
-
-
 # ------------------------------------------------------- target encoding
-
-
-def target_encode(
-    df: DataFrame,
-    cat_col: str = "cat",
-    target_col: str = "y",
-    m: int = 20,
-) -> DataFrame:
-    """(cat, n, sum_y, enc_micro) — SMOOTHED MEAN TARGET ENCODING
-    (Micci-Barreca, SIGKDD Expl. 2001): the standard high-cardinality
-    categorical feature transform for tabular training pipelines,
-
-        enc(c) = (sum_y(c) + m * prior) / (n(c) + m),
-        prior  = S / N  (global target mean),
-
-    i.e. the per-category target mean shrunk toward the global mean
-    with pseudo-count ``m`` — rare categories get the prior, frequent
-    ones their own mean.
-
-    Exactness: ``target_col`` must be integer-valued (0/1 labels or
-    integer scores). With N = total rows, S = total target sum,
-
-        enc_micro = (sum_y * N + m * S) * 1_000_000 div ((n + m) * N)
-
-    is pure int64 arithmetic — bit-identical cross-engine. Headroom:
-    (sum_y*N + m*S) * 1e6 must fit int64, so N is bounded by ~3e6 at
-    micro precision; at larger N pre-aggregate or drop SCALE_MICRO
-    (the encoding only needs ~1e-6 resolution for any downstream
-    model, so coarser category sketches are fine at 100 TB).
-
-    Scale: one combinable groupBy(cat) shuffle; the global (N, S) is
-    re-aggregated FROM the per-category result (no second scan) and
-    broadcast back as a literal pair via crossJoin of a 1-row frame.
-    Scan-shaped; no windows, no driver collection."""
-    per = df.groupBy(F.col(cat_col).alias("cat")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col(target_col).cast("long")).alias("sum_y"),
-    )
-    glob = per.agg(
-        F.sum("n").alias("_N"), F.sum("sum_y").alias("_S")
-    )
-    return (
-        per.crossJoin(F.broadcast(glob))
-        .select(
-            "cat",
-            "n",
-            "sum_y",
-            F.expr(
-                f"(sum_y * _N + {int(m)} * _S) * 1000000"
-                f" div ((n + {int(m)}) * _N)"
-            ).alias("enc_micro"),
-        )
-    )
-
-
-def target_encode_sql(
-    rows_cte: str,
-    cat_col: str = "cat",
-    target_col: str = "y",
-    m: int = 20,
-) -> str:
-    """DuckDB twin of target_encode — identical integer assembly
-    (DuckDB ``//`` truncates toward zero; all operands nonnegative,
-    so it matches Spark's ``div`` exactly)."""
-    return f"""
-WITH te_rows AS ({rows_cte}),
-te_per AS (
-  SELECT {cat_col} AS cat,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST({target_col} AS BIGINT)) AS BIGINT) AS sum_y
-  FROM te_rows GROUP BY 1
-),
-te_glob AS (
-  SELECT CAST(sum(n) AS BIGINT) AS _N, CAST(sum(sum_y) AS BIGINT) AS _S
-  FROM te_per
-)
-SELECT cat, n, sum_y,
-       (sum_y * _N + {int(m)} * _S) * 1000000 // ((n + {int(m)}) * _N)
-         AS enc_micro
-FROM te_per, te_glob
-"""
 
 
 # ---------------------------------------------------------- ABC analysis
 
 
-def abc_classes(
-    df: DataFrame,
-    key_col: str = "key",
-    value_col: str = "value_c",
-    a_micro: int = 800_000,
-    b_micro: int = 950_000,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """(key, value_c, rank, cum_c, total_c, share_micro, abc) — ABC /
-    PARETO ANALYSIS (Dickie 1951, the 80/20 inventory classic): rank
-    items by value descending, accumulate, and class each item by its
-    cumulative value share AFTER including it — 'A' while
-    cum/total <= a, 'B' while <= b, else 'C'. The catalog-curation /
-    cost-concentration primitive (which parts carry 80% of revenue,
-    which domains carry 95% of tokens).
-
-    Exactness: values must be pre-quantized int64 (cents, tokens); the
-    class gates are integer cross-multiplications cum·1e6 <= a_micro·T
-    — no division in the decision. share_micro = cum·1e6 div T is the
-    one reported quotient. Headroom: cum·1e6 < 2^63 → totals to ~9.2e12
-    units; pre-scale coarser units beyond.
-
-    Scale: the descending global prefix sum is the same TWO-LEVEL SCAN
-    as sampling.pps_systematic — value-range buckets (descending
-    alignment: equal values share a bucket, ties break by key ASC),
-    per-bucket totals to the driver once (<= n_buckets rows), parallel
-    per-bucket windows shifted by broadcast offsets. No
-    single-partition window; the SQL twin is the serial window cumsum —
-    independent mechanism, identical integers."""
-    base = df.select(
-        F.col(key_col).alias("_k"), F.col(value_col).cast("long").alias("_v")
-    )
-    lo_hi = base.agg(F.min("_v"), F.max("_v")).first()
-    lo, hi = lo_hi[0], lo_hi[1]
-    if lo is None:
-        return base.select(
-            F.col("_k").alias(key_col),
-            F.col("_v").alias("value_c"),
-            F.lit(0).cast("long").alias("rank"),
-            F.lit(0).cast("long").alias("cum_c"),
-            F.lit(0).cast("long").alias("total_c"),
-            F.lit(0).cast("long").alias("share_micro"),
-            F.lit("C").alias("abc"),
-        )
-    span = max(int(hi) - int(lo) + 1, 1)
-    bucket = F.expr(
-        f"CAST((({int(hi)} - _v) * {int(n_buckets)}) DIV {span} AS BIGINT)"
-    )
-    b = base.withColumn("_b", bucket)
-    totals = sorted(
-        (r["_b"], r["t"], r["c"])
-        for r in b.groupBy("_b")
-        .agg(F.sum("_v").alias("t"), F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
-    voff = F.lit(0).cast("long")
-    coff = F.lit(0).cast("long")
-    vacc, cacc = 0, 0
-    for bk, t, c in totals:
-        voff = F.when(F.col("_b") == bk, F.lit(vacc).cast("long")).otherwise(voff)
-        coff = F.when(F.col("_b") == bk, F.lit(cacc).cast("long")).otherwise(coff)
-        vacc += t
-        cacc += c
-    total = int(vacc)
-    w = (
-        Window.partitionBy("_b")
-        .orderBy(F.col("_v").desc(), F.col("_k").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (F.sum("_v").over(w) + voff).alias("cum_c")
-    rank = (F.row_number().over(w).cast("long") + coff).alias("rank")
-    out = b.select(
-        F.col("_k").alias(key_col), F.col("_v").alias("value_c"), rank, cum
-    )
-    gate_a = F.col("cum_c") * 1_000_000 <= F.lit(int(a_micro) * total)
-    gate_b = F.col("cum_c") * 1_000_000 <= F.lit(int(b_micro) * total)
-    return out.select(
-        key_col,
-        "value_c",
-        "rank",
-        "cum_c",
-        F.lit(total).cast("long").alias("total_c"),
-        F.expr(f"cum_c * 1000000 DIV {total}").cast("long").alias("share_micro"),
-        F.when(gate_a, F.lit("A")).when(gate_b, F.lit("B")).otherwise(F.lit("C")).alias("abc"),
-    )
-
-
-def abc_classes_sql(
-    rows_cte: str,
-    key_col: str = "key",
-    value_col: str = "value_c",
-    a_micro: int = 800_000,
-    b_micro: int = 950_000,
-) -> str:
-    """DuckDB twin of abc_classes — serial window cumsum over the same
-    (value DESC, key ASC) total order, identical integer gates."""
-    return f"""
-WITH abc_rows AS ({rows_cte}),
-abc_base AS (
-  SELECT {key_col} AS _k, CAST({value_col} AS BIGINT) AS _v FROM abc_rows
-),
-abc_cum AS (
-  SELECT _k, _v,
-    CAST(row_number() OVER (ORDER BY _v DESC, _k ASC) AS BIGINT) AS rank,
-    CAST(sum(_v) OVER (ORDER BY _v DESC, _k ASC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_c,
-    CAST(sum(_v) OVER () AS BIGINT) AS total_c
-  FROM abc_base
-)
-SELECT _k AS {key_col}, _v AS value_c, rank, cum_c, total_c,
-       cum_c * 1000000 // total_c AS share_micro,
-       CASE WHEN cum_c * 1000000 <= {int(a_micro)} * total_c THEN 'A'
-            WHEN cum_c * 1000000 <= {int(b_micro)} * total_c THEN 'B'
-            ELSE 'C' END AS abc
-FROM abc_cum
-"""
-
-
 # ------------------------------------------------- Markov attribution
-
-
-MARKOV_MICRO = 1_000_000
-
-
-def markov_attribution(
-    events: DataFrame,
-    conv_type: str = "purchase",
-    channels: list[str] | None = None,
-    iters: int = 24,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """(channel, out_total, base_micro, removed_micro, effect_micro,
-    attribution_micro) — MARKOV-CHAIN MULTI-TOUCH ATTRIBUTION by
-    removal effects (Anderl et al. 2014), the data-driven alternative
-    to the first/last/linear heuristics of multi_touch_attribution:
-    build the first-order journey chain START -> touches -> CONV/NULL,
-    and credit each channel by how much the chain's conversion
-    probability DROPS when that channel is removed (its state forced to
-    absorb with value 0).
-
-    Journey model: per user, events ordered by (ts, id); a conversion
-    event closes the current path (last touch -> CONV, or START -> CONV
-    for untouched conversions); the path after a conversion restarts at
-    START; a user's trailing unconverted touches end last touch -> NULL.
-
-    Exactness: transition counts are exact int64; absorption
-    probabilities are ``iters`` rounds of the fixed-point update
-
-        v[s] <- sum_s' ( cnt(s,s') * v[s'] ) div tot(s)
-
-    (per-term truncating division — the sum is order-free), with
-    v[CONV] = 1e6, v[NULL] = 0 pinned. Truncation biases each round
-    down by < outdeg units — deterministic, engine-identical; the SQL
-    twin unrolls the identical rounds. attribution_micro splits 1e6
-    across channels proportional to effects (integer div; remainder
-    ends up unassigned — shares sum to <= 1e6).
-
-    Scale: the ONLY data-sized work is two per-user ordered windows and
-    one combinable groupBy(from, to) rollup; the chain itself is
-    O(channels^2) — collected once to the driver (<= ~1e3 rows for any
-    real channel taxonomy) where the 5-variant iteration is plain
-    integer math, exactly like ivf_train's tiny-model locality. No
-    per-row Python, no iteration over the corpus."""
-    is_conv = F.col(type_col) == conv_type
-    w_ord = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col).asc(), F.col(id_col).asc()
-    )
-    path = (
-        F.sum(is_conv.cast("long")).over(
-            w_ord.rowsBetween(Window.unboundedPreceding, -1)
-        )
-    )
-    ev = events.select(
-        F.col(user_col).alias("_u"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-        F.col(type_col).alias("_ty"),
-        is_conv.alias("_conv"),
-        F.coalesce(path, F.lit(0)).alias("_path"),
-    )
-    w_path = Window.partitionBy("_u", "_path").orderBy(
-        F.col("_ts").asc(), F.col("_id").asc()
-    )
-    w_path_all = w_path.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    stepped = ev.withColumn(
-        "_from", F.coalesce(F.lag("_ty").over(w_path), F.lit("START"))
-    ).withColumn(
-        "_to", F.when(F.col("_conv"), F.lit("CONV")).otherwise(F.col("_ty"))
-    ).withColumn(
-        "_path_converts", F.max(F.col("_conv").cast("int")).over(w_path_all)
-    ).withColumn("_rn_desc", F.row_number().over(
-        Window.partitionBy("_u", "_path").orderBy(
-            F.col("_ts").desc(), F.col("_id").desc()
-        )
-    ))
-    trans = stepped.select(F.col("_from").alias("f"), F.col("_to").alias("t"))
-    null_ends = stepped.filter(
-        (F.col("_path_converts") == 0) & (F.col("_rn_desc") == 1)
-    ).select(F.col("_ty").alias("f"), F.lit("NULL").alias("t"))
-    counts = (
-        trans.unionByName(null_ends)
-        .groupBy("f", "t")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    rows = counts.collect()
-    cnt: dict[tuple[str, str], int] = {(r["f"], r["t"]): r["n"] for r in rows}
-    tot: dict[str, int] = {}
-    for (f, _), n in cnt.items():
-        tot[f] = tot.get(f, 0) + n
-    if channels is None:
-        channels = sorted(
-            s for s in tot if s not in ("START", "CONV", "NULL")
-        )
-    transient = ["START"] + [c for c in channels if c in tot]
-
-    def absorb(removed: str | None) -> int:
-        v = {s: 0 for s in transient}
-        v["CONV"] = MARKOV_MICRO
-        v["NULL"] = 0
-        for _ in range(int(iters)):
-            nxt = {}
-            for s in transient:
-                if s == removed:
-                    nxt[s] = 0
-                    continue
-                acc = 0
-                for (f, t), n in cnt.items():
-                    if f != s:
-                        continue
-                    vt = 0 if t == removed else v.get(t, 0)
-                    acc += (n * vt) // tot[s]
-                nxt[s] = acc
-            for s in transient:
-                v[s] = nxt[s]
-        return v.get("START", 0)
-
-    base = absorb(None)
-    effects = {c: base - absorb(c) for c in channels}
-    total_eff = sum(effects.values())
-    out = []
-    for c in channels:
-        eff = effects[c]
-        out.append(
-            (
-                c,
-                tot.get(c, 0),
-                base,
-                base - eff,
-                eff,
-                (eff * MARKOV_MICRO) // total_eff if total_eff > 0 else 0,
-            )
-        )
-    spark = events.sparkSession
-    return spark.createDataFrame(
-        out,
-        "channel string, out_total long, base_micro long, removed_micro long,"
-        " effect_micro long, attribution_micro long",
-    )
-
-
-def markov_attribution_sql(
-    events_cte: str,
-    conv_type: str = "purchase",
-    channels: list[str] = (),
-    iters: int = 24,
-) -> str:
-    """DuckDB twin of markov_attribution — identical journey windows and
-    transition rollup, then the fixed-point rounds UNROLLED as chained
-    CTEs (one vector CTE per variant per round; <= (|channels|+1)*iters
-    tiny joins). ``events_cte`` -> (user_id, ts, event_id, event_type);
-    ``channels`` must list the fixture's channel states explicitly."""
-    channels = list(channels)
-    variants = [None] + channels
-
-    def vname(vi: int, t: int) -> str:
-        return f"mkv_v{vi}_t{t}"
-
-    parts = [
-        f"""mkv_src AS ({events_cte}),
-mkv_ev AS (
-  SELECT user_id AS _u, ts AS _ts, event_id AS _id, event_type AS _ty,
-         event_type = '{conv_type}' AS _conv,
-         COALESCE(CAST(sum(CASE WHEN event_type = '{conv_type}' THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-           AS _path
-  FROM mkv_src
-),
-mkv_stepped AS (
-  SELECT *,
-    COALESCE(lag(_ty) OVER (PARTITION BY _u, _path ORDER BY _ts ASC, _id ASC),
-             'START') AS _from,
-    CASE WHEN _conv THEN 'CONV' ELSE _ty END AS _to,
-    max(CASE WHEN _conv THEN 1 ELSE 0 END)
-      OVER (PARTITION BY _u, _path) AS _path_converts,
-    row_number() OVER (PARTITION BY _u, _path ORDER BY _ts DESC, _id DESC)
-      AS _rn_desc
-  FROM mkv_ev
-),
-mkv_cnt AS MATERIALIZED (
-  SELECT f, t, CAST(count(*) AS BIGINT) AS n FROM (
-    SELECT _from AS f, _to AS t FROM mkv_stepped
-    UNION ALL
-    SELECT _ty AS f, 'NULL' AS t FROM mkv_stepped
-    WHERE _path_converts = 0 AND _rn_desc = 1
-  ) GROUP BY 1, 2
-),
-mkv_tot AS MATERIALIZED (SELECT f, CAST(sum(n) AS BIGINT) AS tot FROM mkv_cnt GROUP BY 1),
-mkv_states AS MATERIALIZED (
-  SELECT 'START' AS s WHERE EXISTS (SELECT 1 FROM mkv_tot WHERE f = 'START')
-  {"".join(f'''UNION ALL SELECT '{c}' WHERE EXISTS (SELECT 1 FROM mkv_tot WHERE f = '{c}') ''' for c in channels)}
-)"""
-    ]
-    for vi, removed in enumerate(variants):
-        zero = (
-            f"CASE WHEN s = '{removed}' THEN 0 ELSE v END"
-            if removed is not None
-            else "v"
-        )
-        parts.append(
-            f"""{vname(vi, 0)} AS MATERIALIZED (
-  SELECT s, CAST(0 AS BIGINT) AS v FROM mkv_states
-  UNION ALL SELECT 'CONV', {MARKOV_MICRO}
-  UNION ALL SELECT 'NULL', 0
-)"""
-        )
-        for t in range(1, int(iters) + 1):
-            prev = vname(vi, t - 1)
-            parts.append(
-                f"""{vname(vi, t)} AS MATERIALIZED (
-  SELECT st.s, COALESCE(nx.v, 0) AS v FROM mkv_states st
-  LEFT JOIN (
-    SELECT c.f AS s,
-           CAST(sum((c.n * ({zero.replace('s =', 'p.s =').replace('ELSE v', 'ELSE p.v')})) // tt.tot) AS BIGINT) AS v
-    FROM mkv_cnt c
-    JOIN {prev} p ON p.s = c.t
-    JOIN mkv_tot tt ON tt.f = c.f
-    GROUP BY 1
-  ) nx ON nx.s = st.s
-  UNION ALL SELECT 'CONV', {MARKOV_MICRO}
-  UNION ALL SELECT 'NULL', 0
-)"""
-            )
-        # final per-variant START value, with removed state forced 0
-        sel = (
-            f"SELECT CASE WHEN s = '{removed}' THEN 0 ELSE v END AS v"
-            if removed is not None
-            else "SELECT v"
-        )
-        parts.append(
-            f"{vname(vi, 'fin')} AS ({sel} FROM {vname(vi, iters)} WHERE s = 'START')"
-        )
-    return f"""
-WITH {','.join(parts)},
-mkv_base AS (SELECT v AS base FROM {vname(0, 'fin')}),
-mkv_removed AS (
-  {" UNION ALL ".join(f"SELECT '{c}' AS channel, (SELECT v FROM {vname(vi + 1, 'fin')}) AS removed" for vi, c in enumerate(channels))}
-),
-mkv_eff AS (
-  SELECT r.channel, b.base, r.removed, b.base - r.removed AS eff
-  FROM mkv_removed r, mkv_base b
-),
-mkv_teff AS (SELECT CAST(sum(eff) AS BIGINT) AS teff FROM mkv_eff)
-SELECT e.channel,
-       COALESCE(tt.tot, 0) AS out_total,
-       CAST(e.base AS BIGINT) AS base_micro,
-       CAST(e.removed AS BIGINT) AS removed_micro,
-       CAST(e.eff AS BIGINT) AS effect_micro,
-       CASE WHEN t.teff > 0 THEN e.eff * {MARKOV_MICRO} // t.teff
-            ELSE 0 END AS attribution_micro
-FROM mkv_eff e
-LEFT JOIN mkv_tot tt ON tt.f = e.channel
-CROSS JOIN mkv_teff t
-"""
 
 
 # ----------------------------------------------------------------- TOPSIS
 
 
-TOPSIS_SCALE = 1000
-
-
-def topsis_rank(
-    df: DataFrame,
-    id_col: str,
-    criteria: list,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """(id, d2_plus, d2_minus, closeness_micro, rank) — TOPSIS
-    multi-criteria ranking (Hwang & Yoon 1981; the squared-distance,
-    max-normalized integer variant): each criterion is scaled to
-    n = x·1000 div max(x), the ideal point takes the max (benefit) or
-    min (cost) of each scaled column, and items rank by closeness
-    C = d²⁻ / (d²⁺ + d²⁻) to the anti-ideal/ideal pair — the standard
-    vendor-selection / site-selection / candidate-triage aggregator
-    when criteria disagree.
-
-    ``criteria`` is a list of (col, is_benefit, weight) with NONNEGATIVE
-    integer columns (shift/quantize upstream) and integer weights.
-    Exactness: scaled values <= 1000, squared diffs <= 1e6, weighted
-    sums bounded by 1e6·Σw — all int64; closeness is one integer micro
-    division; ranking (closeness DESC, id ASC) is the two-level scan —
-    no single-partition window.
-
-    Scale: one aggregate for the per-criterion extremes broadcast back,
-    one scan for distances, the two-level rank's tiny driver collect."""
-    aggs = []
-    for c, _, _ in criteria:
-        aggs.append(F.max(F.col(c)).alias(f"_mx_{c}"))
-    ext = df.agg(*aggs)
-    staged = df.crossJoin(F.broadcast(ext))
-    scaled_cols = []
-    for c, _, _ in criteria:
-        scaled_cols.append(
-            F.expr(
-                f"{c} * {TOPSIS_SCALE} DIV greatest(_mx_{c}, 1)"
-            ).alias(f"_n_{c}")
-        )
-    staged = staged.select(F.col(id_col), *scaled_cols)
-    ideal_aggs = []
-    for c, benefit, _ in criteria:
-        ideal_aggs.append(
-            (F.max if benefit else F.min)(F.col(f"_n_{c}")).alias(f"_id_{c}")
-        )
-        ideal_aggs.append(
-            (F.min if benefit else F.max)(F.col(f"_n_{c}")).alias(f"_ai_{c}")
-        )
-    ideals = staged.agg(*ideal_aggs)
-    full = staged.crossJoin(F.broadcast(ideals))
-    d2p = F.lit(0)
-    d2m = F.lit(0)
-    for c, _, w in criteria:
-        dp = F.col(f"_n_{c}") - F.col(f"_id_{c}")
-        dm = F.col(f"_n_{c}") - F.col(f"_ai_{c}")
-        d2p = d2p + F.lit(int(w)) * dp * dp
-        d2m = d2m + F.lit(int(w)) * dm * dm
-    scored = full.select(
-        F.col(id_col),
-        d2p.cast("long").alias("d2_plus"),
-        d2m.cast("long").alias("d2_minus"),
-    ).withColumn(
-        "closeness_micro",
-        F.when(
-            F.col("d2_plus") + F.col("d2_minus") > 0,
-            F.expr("d2_minus * 1000000 DIV (d2_plus + d2_minus)"),
-        ).otherwise(F.lit(0)).cast("long"),
-    )
-    ranked = _two_level_rank(
-        scored.withColumn("_neg", -F.col("closeness_micro")),
-        "_neg",
-        id_col,
-        "rank",
-        n_buckets=n_buckets,
-    )
-    return ranked.select(
-        id_col, "d2_plus", "d2_minus", "closeness_micro", "rank"
-    )
-
-
-def topsis_rank_sql(rows_cte: str, id_col: str, criteria: list) -> str:
-    """DuckDB twin of topsis_rank — identical scaling, ideal points,
-    weighted squared distances; the rank is the serial window over the
-    same (closeness DESC, id ASC) order."""
-    mx = ", ".join(f"max({c}) AS _mx_{c}" for c, _, _ in criteria)
-    sc = ", ".join(
-        f"{c} * {TOPSIS_SCALE} // greatest(_mx_{c}, 1) AS _n_{c}"
-        for c, _, _ in criteria
-    )
-    ids = ", ".join(
-        (
-            f"max(_n_{c}) AS _id_{c}, min(_n_{c}) AS _ai_{c}"
-            if benefit
-            else f"min(_n_{c}) AS _id_{c}, max(_n_{c}) AS _ai_{c}"
-        )
-        for c, benefit, _ in criteria
-    )
-    d2p = " + ".join(
-        f"{w} * (_n_{c} - _id_{c}) * (_n_{c} - _id_{c})"
-        for c, _, w in criteria
-    )
-    d2m = " + ".join(
-        f"{w} * (_n_{c} - _ai_{c}) * (_n_{c} - _ai_{c})"
-        for c, _, w in criteria
-    )
-    return f"""
-WITH tp_rows AS ({rows_cte}),
-tp_mx AS (SELECT {mx} FROM tp_rows),
-tp_sc AS (SELECT {id_col}, {sc} FROM tp_rows, tp_mx),
-tp_id AS (SELECT {ids} FROM tp_sc),
-tp_d AS (
-  SELECT {id_col},
-         CAST({d2p} AS BIGINT) AS d2_plus,
-         CAST({d2m} AS BIGINT) AS d2_minus
-  FROM tp_sc, tp_id
-),
-tp_c AS (
-  SELECT *,
-         CASE WHEN d2_plus + d2_minus > 0
-              THEN d2_minus * 1000000 // (d2_plus + d2_minus)
-              ELSE 0 END AS closeness_micro
-  FROM tp_d
-)
-SELECT {id_col}, d2_plus, d2_minus, closeness_micro,
-       CAST(row_number() OVER (
-         ORDER BY closeness_micro DESC, {id_col} ASC) AS BIGINT) AS rank
-FROM tp_c
-"""
-
-
 # --------------------------------------------------------------- backtest
-
-
-def mase_backtest(
-    series: DataFrame,
-    season: int = 5,
-    horizon: int = 10,
-    g_col: str = "g",
-    t_col: str = "t",
-    v_col: str = "v_c",
-) -> DataFrame:
-    """(g, n, n_test, sae_test, sad_train, mase_micro) — SEASONAL-NAIVE
-    FORECAST BACKTEST scored by MASE (Hyndman & Koehler 2006), the
-    scale-free forecast-quality gate: hold out the last ``horizon``
-    points per series, forecast each with the seasonal naive
-    ŷ_t = y_{t−season}, and scale the test MAE by the TRAINING
-    one-step naive MAE —
-
-        MASE = (Σ_test |y − ŷ| / n_test) / (Σ_train |y_i − y_{i−1}| / n_diffs)
-
-    computed CROSS-MULTIPLIED in exact int64 (values pre-quantized to
-    cents): mase_micro = sae_test·n_diffs·1e6 div (sad_train·n_test).
-    MASE < 1e6 means the seasonal model beats the naive baseline.
-    Series too short (n <= max(season, horizon+1)) or with a constant
-    training prefix (sad_train = 0) return NULL mase.
-
-    Scale: two per-series ordered windows (lag-1, lag-season) and ONE
-    combinable rollup — the standard time-series shuffle shape; no
-    collect, no floats until nothing."""
-    w = Window.partitionBy(g_col).orderBy(F.col(t_col).asc())
-    wd = Window.partitionBy(g_col).orderBy(F.col(t_col).desc())
-    staged = series.select(
-        F.col(g_col).alias("g"),
-        F.col(v_col).cast("long").alias("v"),
-        F.lag(F.col(v_col).cast("long"), 1).over(w).alias("v1"),
-        F.lag(F.col(v_col).cast("long"), int(season)).over(w).alias("vs"),
-        F.row_number().over(wd).alias("_rdesc"),
-    ).withColumn("_is_test", F.col("_rdesc") <= int(horizon))
-    agg = staged.groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(
-            F.when(
-                F.col("_is_test") & F.col("vs").isNotNull(),
-                F.abs(F.col("v") - F.col("vs")),
-            )
-        ).cast("long").alias("sae_test"),
-        F.sum(
-            F.when(F.col("_is_test") & F.col("vs").isNotNull(), F.lit(1))
-        ).cast("long").alias("n_test"),
-        F.sum(
-            F.when(
-                (~F.col("_is_test")) & F.col("v1").isNotNull(),
-                F.abs(F.col("v") - F.col("v1")),
-            )
-        ).cast("long").alias("sad_train"),
-        F.sum(
-            F.when((~F.col("_is_test")) & F.col("v1").isNotNull(), F.lit(1))
-        ).cast("long").alias("n_diffs"),
-    )
-    return agg.select(
-        "g",
-        "n",
-        F.coalesce("n_test", F.lit(0)).cast("long").alias("n_test"),
-        F.coalesce("sae_test", F.lit(0)).cast("long").alias("sae_test"),
-        F.coalesce("sad_train", F.lit(0)).cast("long").alias("sad_train"),
-        F.when(
-            (F.col("sad_train") > 0) & (F.col("n_test") > 0),
-            F.expr("sae_test * n_diffs * 1000000 DIV (sad_train * n_test)"),
-        ).cast("long").alias("mase_micro"),
-    )
-
-
-def mase_backtest_sql(
-    rows_cte: str, season: int = 5, horizon: int = 10
-) -> str:
-    """DuckDB twin of mase_backtest — identical windows, conditional
-    rollups and the cross-multiplied micro division.
-    ``rows_cte`` -> (g, t, v_c)."""
-    return f"""
-WITH mb_src AS ({rows_cte}),
-mb_st AS (
-  SELECT g, CAST(v_c AS BIGINT) AS v,
-         lag(CAST(v_c AS BIGINT), 1) OVER wo AS v1,
-         lag(CAST(v_c AS BIGINT), {int(season)}) OVER wo AS vs,
-         row_number() OVER wd <= {int(horizon)} AS _is_test
-  FROM mb_src
-  WINDOW wo AS (PARTITION BY g ORDER BY t ASC),
-         wd AS (PARTITION BY g ORDER BY t DESC)
-),
-mb_agg AS (
-  SELECT g, CAST(count(*) AS BIGINT) AS n,
-         CAST(COALESCE(sum(CASE WHEN _is_test AND vs IS NOT NULL
-                         THEN abs(v - vs) END), 0) AS BIGINT) AS sae_test,
-         CAST(COALESCE(sum(CASE WHEN _is_test AND vs IS NOT NULL
-                         THEN 1 END), 0) AS BIGINT) AS n_test,
-         CAST(COALESCE(sum(CASE WHEN NOT _is_test AND v1 IS NOT NULL
-                         THEN abs(v - v1) END), 0) AS BIGINT) AS sad_train,
-         CAST(COALESCE(sum(CASE WHEN NOT _is_test AND v1 IS NOT NULL
-                         THEN 1 END), 0) AS BIGINT) AS n_diffs
-  FROM mb_st GROUP BY 1
-)
-SELECT g, n, n_test, sae_test, sad_train,
-       CASE WHEN sad_train > 0 AND n_test > 0
-            THEN sae_test * n_diffs * 1000000 // (sad_train * n_test)
-       END AS mase_micro
-FROM mb_agg
-"""
 
 
 # ------------------------------------------------------ binary segmentation
 
 
-def binary_seg(
-    series: DataFrame,
-    g_col: str = "g",
-    t_col: str = "t",
-    v_col: str = "v_c",
-) -> DataFrame:
-    """(g, n, best_t, sse0_micro, sse_split_micro, gain_micro) — BINARY
-    SEGMENTATION changepoint detection (one split; the greedy step of
-    Scott & Knott / the PELT family): per series, the split position
-    best_t (prefix length, 1 <= best_t < n) minimizing
-
-        SSE_L + SSE_R,   SSE = (n·Q − S²) / n  (per segment)
-
-    evaluated in MICRO-quantized exact arithmetic — each segment's term
-    is (n·Q − S²)·1e6 div n (int64; bound |v| <= ~1e4 cents at n <=
-    ~200 per series, pre-scale coarser units beyond), so the argmin
-    (cost ASC, t ASC) is engine-identical. gain = single-segment SSE −
-    best split cost: the level-shift evidence score (gate on it before
-    accepting the split).
-
-    Scale: prefix sums from ONE ordered window per series; every
-    candidate split is a row — the argmin is a MAX(struct) rollup, no
-    second window, no collect."""
-    w = Window.partitionBy(g_col).orderBy(F.col(t_col).asc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.partitionBy(g_col)
-    v = F.col(v_col).cast("long")
-    staged = series.select(
-        F.col(g_col).alias("g"),
-        F.sum(v).over(w).alias("ps"),
-        F.sum(v * v).over(w).alias("pq"),
-        F.row_number()
-        .over(Window.partitionBy(g_col).orderBy(F.col(t_col).asc()))
-        .alias("i"),
-        F.sum(v).over(wall).alias("ts"),
-        F.sum(v * v).over(wall).alias("tq"),
-        F.count(F.lit(1)).over(wall).alias("n"),
-    )
-    cand = staged.filter(F.col("i") < F.col("n"))
-    cost = (
-        F.expr("(i * pq - ps * ps) * 1000000 DIV i")
-        + F.expr(
-            "((n - i) * (tq - pq) - (ts - ps) * (ts - ps)) * 1000000"
-            " DIV (n - i)"
-        )
-    ).cast("long")
-    best = cand.select(
-        "g", "n", "ts", "tq", F.col("i").alias("t"), cost.alias("cost")
-    ).groupBy("g").agg(
-        F.min(
-            F.struct(F.col("cost").alias("c"), F.col("t").alias("t"))
-        ).alias("_b"),
-        F.first("n").alias("n"),
-        F.first("ts").alias("ts"),
-        F.first("tq").alias("tq"),
-    )
-    sse0 = F.expr("(n * tq - ts * ts) * 1000000 DIV n").cast("long")
-    return best.select(
-        "g",
-        F.col("n").cast("long").alias("n"),
-        F.col("_b.t").cast("long").alias("best_t"),
-        sse0.alias("sse0_micro"),
-        F.col("_b.c").cast("long").alias("sse_split_micro"),
-        (sse0 - F.col("_b.c")).cast("long").alias("gain_micro"),
-    )
-
-
-def binary_seg_sql(rows_cte: str) -> str:
-    """DuckDB twin of binary_seg — identical prefix windows, candidate
-    costs and (cost, t) struct argmin. ``rows_cte`` -> (g, t, v_c)."""
-    return f"""
-WITH bs_src AS ({rows_cte}),
-bs_st AS (
-  SELECT g,
-         sum(CAST(v_c AS BIGINT)) OVER wc AS ps,
-         sum(CAST(v_c AS BIGINT) * CAST(v_c AS BIGINT)) OVER wc AS pq,
-         row_number() OVER wo AS i,
-         sum(CAST(v_c AS BIGINT)) OVER wa AS ts,
-         sum(CAST(v_c AS BIGINT) * CAST(v_c AS BIGINT)) OVER wa AS tq,
-         count(*) OVER wa AS n
-  FROM bs_src
-  WINDOW wo AS (PARTITION BY g ORDER BY t ASC),
-         wc AS (PARTITION BY g ORDER BY t ASC
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         wa AS (PARTITION BY g)
-),
-bs_cand AS (
-  SELECT g, n, ts, tq, i AS t,
-         CAST((i * pq - ps * ps) * 1000000 // i
-              + ((n - i) * (tq - pq) - (ts - ps) * (ts - ps)) * 1000000
-                // (n - i) AS BIGINT) AS cost
-  FROM bs_st WHERE i < n
-),
-bs_best AS (
-  SELECT g, min({{'c': cost, 't': t}}) AS _b,
-         min(n) AS n, min(ts) AS ts, min(tq) AS tq
-  FROM bs_cand GROUP BY 1
-)
-SELECT g, CAST(n AS BIGINT) AS n, CAST(_b.t AS BIGINT) AS best_t,
-       CAST((n * tq - ts * ts) * 1000000 // n AS BIGINT) AS sse0_micro,
-       CAST(_b.c AS BIGINT) AS sse_split_micro,
-       CAST((n * tq - ts * ts) * 1000000 // n - _b.c AS BIGINT) AS gain_micro
-FROM bs_best
-"""
-
-
 # ---------------------------------------------------- v-optimal histogram
-
-
-def v_optimal_hist(
-    series: DataFrame,
-    k: int = 4,
-    g_col: str = "g",
-    t_col: str = "t",
-    v_col: str = "v_c",
-) -> DataFrame:
-    """(g, seg, start_i, end_i, len, seg_sum, sse_micro) — V-OPTIMAL
-    HISTOGRAM / optimal k-segmentation (Jagadish et al. 1998): per
-    series, the EXACTLY optimal partition into ``k`` contiguous
-    segments minimizing total within-segment SSE, by the classic
-    O(n²k) dynamic program. The optimal-binning / piecewise-constant-
-    compression primitive that binary_seg greedily approximates.
-
-    Exactness: per-segment cost is the micro-quantized integer
-    (len·Q − S²)·1e6 div len (same convention as binary_seg — argmin
-    ties break to the SMALLEST split index), so the DP table and the
-    chosen boundaries are engine-identical. |v| <= ~1e4 at n <= ~200
-    per series keeps everything int64. Series shorter than ``k`` rows
-    are dropped (no valid partition).
-
-    Scale: series are independent — ONE applyInPandas kernel per
-    group runs the integer DP in-batch (n per series is the bounded
-    dimension; the corpus parallelizes across series); the twin unrolls
-    the same DP levels + backtrack as materialized CTEs."""
-
-    import pandas as pd
-
-    def fn(key, pdf):
-        import pandas as pd
-
-        g = key[0]
-        pdf = pdf.sort_values("_ord").reset_index(drop=True)
-        v = [int(x) for x in pdf[v_col]]
-        n = len(v)
-        kk = int(k)
-        if n < kk:
-            return pd.DataFrame(
-                columns=[
-                    "g", "seg", "start_i", "end_i", "len", "seg_sum",
-                    "sse_micro",
-                ]
-            )
-        ps = [0] * (n + 1)
-        pq = [0] * (n + 1)
-        for i, x in enumerate(v, 1):
-            ps[i] = ps[i - 1] + x
-            pq[i] = pq[i - 1] + x * x
-
-        def sse(j, i):  # segment (j+1..i), 1-based i
-            ln = i - j
-            s = ps[i] - ps[j]
-            q = pq[i] - pq[j]
-            return (ln * q - s * s) * 1_000_000 // ln
-
-        INF = float("inf")
-        cost = [[INF] * (n + 1) for _ in range(kk + 1)]
-        back = [[0] * (n + 1) for _ in range(kk + 1)]
-        for i in range(1, n + 1):
-            cost[1][i] = sse(0, i)
-        for lev in range(2, kk + 1):
-            for i in range(lev, n + 1):
-                best = None
-                for j in range(lev - 1, i):
-                    c = cost[lev - 1][j] + sse(j, i)
-                    if best is None or (c, j) < best:
-                        best = (c, j)
-                cost[lev][i] = best[0]
-                back[lev][i] = best[1]
-        rows = []
-        end = n
-        for lev in range(kk, 0, -1):
-            start = back[lev][end] if lev > 1 else 0
-            ln = end - start
-            s = ps[end] - ps[start]
-            rows.append(
-                (g, lev, start + 1, end, ln, s, sse(start, end))
-            )
-            end = start
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "g", "seg", "start_i", "end_i", "len", "seg_sum", "sse_micro"
-            ],
-        )
-
-    staged = series.select(
-        F.col(g_col).alias("g"),
-        F.col(t_col).alias("_ord"),
-        F.col(v_col).cast("long").alias(v_col),
-    )
-    return staged.groupBy("g").applyInPandas(
-        fn,
-        schema=(
-            "g string, seg int, start_i long, end_i long, len long,"
-            " seg_sum long, sse_micro long"
-        ),
-    )
-
-
-def v_optimal_hist_sql(rows_cte: str, k: int = 4) -> str:
-    """DuckDB twin of v_optimal_hist — the DP levels and the backtrack
-    unrolled as materialized CTEs; identical cost convention and
-    smallest-j tie rule. ``rows_cte`` -> (g, t, v_c)."""
-    parts = [
-        f"""vo_src AS ({rows_cte}),
-vo_v AS MATERIALIZED (
-  SELECT g, row_number() OVER (PARTITION BY g ORDER BY t ASC) AS i,
-         CAST(v_c AS BIGINT) AS v
-  FROM vo_src
-),
-vo_n AS MATERIALIZED (
-  SELECT g, CAST(count(*) AS BIGINT) AS n FROM vo_v GROUP BY 1
-  HAVING count(*) >= {int(k)}
-),
-vo_p AS MATERIALIZED (
-  SELECT g, i,
-         sum(v) OVER (PARTITION BY g ORDER BY i
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ps,
-         sum(v * v) OVER (PARTITION BY g ORDER BY i
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pq
-  FROM vo_v
-),
-vo_p0 AS MATERIALIZED (
-  SELECT g, i, ps, pq FROM vo_p
-  UNION ALL
-  SELECT g, 0, 0, 0 FROM vo_n
-),
-vo_c1 AS MATERIALIZED (
-  SELECT p.g, p.i, CAST(0 AS BIGINT) AS bj,
-         CAST((p.i * p.pq - p.ps * p.ps) * 1000000 // p.i AS BIGINT) AS cost
-  FROM vo_p p JOIN vo_n USING (g)
-)"""
-    ]
-    for lev in range(2, int(k) + 1):
-        prev = f"vo_c{lev - 1}"
-        parts.append(
-            f"""vo_c{lev} AS MATERIALIZED (
-  SELECT g, i, CAST(min({{'c': cost, 'j': j}}).j AS BIGINT) AS bj,
-         CAST(min({{'c': cost, 'j': j}}).c AS BIGINT) AS cost
-  FROM (
-    SELECT e.g, e.i, c.i AS j,
-           c.cost + ((e.i - c.i) * (e.pq - cj.pq)
-                     - (e.ps - cj.ps) * (e.ps - cj.ps)) * 1000000
-                    // (e.i - c.i) AS cost
-    FROM vo_p e
-    JOIN {prev} c ON c.g = e.g AND c.i < e.i AND c.i >= {lev - 1}
-    JOIN vo_p0 cj ON cj.g = e.g AND cj.i = c.i
-    WHERE e.i >= {lev}
-  ) GROUP BY 1, 2
-)"""
-        )
-    # backtrack
-    parts.append(
-        f"""vo_b{int(k)} AS MATERIALIZED (
-  SELECT c.g, n.n AS end_i, c.bj
-  FROM vo_c{int(k)} c JOIN vo_n n ON n.g = c.g AND c.i = n.n
-)"""
-    )
-    for lev in range(int(k) - 1, 0, -1):
-        parts.append(
-            f"""vo_b{lev} AS MATERIALIZED (
-  SELECT c.g, b.bj AS end_i, c.bj
-  FROM vo_b{lev + 1} b JOIN vo_c{lev} c ON c.g = b.g AND c.i = b.bj
-)"""
-        )
-    segs = " UNION ALL ".join(
-        f"""SELECT g, {lev} AS seg, bj + 1 AS start_i, end_i,
-       end_i - bj AS len FROM vo_b{lev}"""
-        if lev > 1
-        else f"""SELECT g, 1 AS seg, 1 AS start_i, end_i, end_i AS len
-       FROM vo_b1"""
-        for lev in range(int(k), 0, -1)
-    )
-    return f"""
-WITH {','.join(parts)},
-vo_segs AS ({segs})
-SELECT s.g, CAST(s.seg AS INTEGER) AS seg,
-       CAST(s.start_i AS BIGINT) AS start_i,
-       CAST(s.end_i AS BIGINT) AS end_i,
-       CAST(s.len AS BIGINT) AS len,
-       CAST(pe.ps - pb.ps AS BIGINT) AS seg_sum,
-       CAST((s.len * (pe.pq - pb.pq) - (pe.ps - pb.ps) * (pe.ps - pb.ps))
-            * 1000000 // s.len AS BIGINT) AS sse_micro
-FROM vo_segs s
-JOIN vo_p0 pe ON pe.g = s.g AND pe.i = s.end_i
-JOIN vo_p0 pb ON pb.g = s.g AND pb.i = s.start_i - 1
-"""
 
 
 # ------------------------------------------------------------ matrix profile
 
 
-def matrix_profile(
-    series: DataFrame,
-    m: int = 8,
-    g_col: str = "g",
-    t_col: str = "t",
-    v_col: str = "v_c",
-) -> DataFrame:
-    """(g, i, nn_j, d2min, is_discord) — the MATRIX PROFILE (Yeh et al.
-    2016, unnormalized/Euclidean variant): for every length-``m``
-    window start i of each series, the squared distance to its nearest
-    OTHER window (exclusion zone |i − j| < m suppresses trivial
-    matches) and that neighbor's start j. Low d2min = motif (repeated
-    shape), high d2min = discord (anomalous shape) — ``is_discord``
-    flags the per-series maximum (ties all flagged). The
-    motif/discord-discovery primitive of time-series curation.
-
-    Determinism: integer values → exact int64 distances; nn ties break
-    to the smallest j. Windows with no admissible partner (series
-    shorter than 2m) return NULL nn_j/d2min.
-
-    Scale: series are independent — one applyInPandas kernel per
-    series runs the O(nw²·m) NumPy computation in-batch (the quadratic
-    dimension is per-series window count, bounded by the caller's
-    subsampling); only profile rows come out. The twin brute-forces
-    window pairs with the identical exclusion and tie rules."""
-    import numpy as np
-    import pandas as pd
-
-    def fn(key, pdf):
-        import numpy as np
-        import pandas as pd
-
-        g = key[0]
-        pdf = pdf.sort_values("_ord").reset_index(drop=True)
-        v = pdf[v_col].to_numpy("int64")
-        n = len(v)
-        mm = int(m)
-        nw = n - mm + 1
-        if nw <= 0:
-            return pd.DataFrame(
-                columns=["g", "i", "nn_j", "d2min", "is_discord"]
-            )
-        W = np.lib.stride_tricks.sliding_window_view(v, mm).astype(np.int64)
-        diff = W[:, None, :] - W[None, :, :]
-        D = (diff * diff).sum(axis=2)
-        ii, jj = np.indices((nw, nw))
-        D = np.where(np.abs(ii - jj) < mm, np.iinfo(np.int64).max, D)
-        best_j = D.argmin(axis=1)
-        best_d = D[np.arange(nw), best_j]
-        has = best_d < np.iinfo(np.int64).max
-        d2 = [int(d) if h else None for d, h in zip(best_d, has)]
-        nn = [int(j) + 1 if h else None for j, h in zip(best_j, has)]
-        valid = [d for d in d2 if d is not None]
-        mx = max(valid) if valid else None
-        return pd.DataFrame(
-            {
-                "g": [g] * nw,
-                "i": np.arange(1, nw + 1, dtype=np.int64),
-                "nn_j": nn,
-                "d2min": d2,
-                "is_discord": [
-                    d is not None and d == mx for d in d2
-                ],
-            }
-        )
-
-    staged = series.select(
-        F.col(g_col).alias("g"),
-        F.col(t_col).alias("_ord"),
-        F.col(v_col).cast("long").alias(v_col),
-    )
-    return staged.groupBy("g").applyInPandas(
-        fn,
-        schema="g string, i long, nn_j long, d2min long, is_discord boolean",
-    )
-
-
-def matrix_profile_sql(rows_cte: str, m: int = 8) -> str:
-    """DuckDB twin of matrix_profile — window rows by offset join,
-    pairwise distances with the identical exclusion zone, struct-argmin
-    and per-series discord max. ``rows_cte`` -> (g, t, v_c)."""
-    return f"""
-WITH mp_src AS ({rows_cte}),
-mp_v AS MATERIALIZED (
-  SELECT g, row_number() OVER (PARTITION BY g ORDER BY t ASC) AS p,
-         CAST(v_c AS BIGINT) AS v
-  FROM mp_src
-),
-mp_n AS (SELECT g, count(*) AS n FROM mp_v GROUP BY 1),
-mp_w AS MATERIALIZED (
-  SELECT v.g, v.p - k.k AS i, k.k, v.v
-  FROM mp_v v, unnest(range(0, {int(m)})) k(k)
-  JOIN mp_n n ON n.g = v.g
-  WHERE v.p - k.k >= 1 AND v.p - k.k <= n.n - {int(m)} + 1
-),
-mp_d AS (
-  SELECT a.g, a.i, b.i AS j,
-         CAST(sum((a.v - b.v) * (a.v - b.v)) AS BIGINT) AS d2
-  FROM mp_w a
-  JOIN mp_w b ON b.g = a.g AND b.k = a.k AND abs(a.i - b.i) >= {int(m)}
-  GROUP BY 1, 2, 3
-),
-mp_best AS (
-  SELECT g, i, CAST(min({{'d': d2, 'j': j}}).j AS BIGINT) AS nn_j,
-         CAST(min({{'d': d2, 'j': j}}).d AS BIGINT) AS d2min
-  FROM mp_d GROUP BY 1, 2
-),
-mp_all AS (
-  SELECT v.g, gs.i
-  FROM mp_n v, unnest(range(1, v.n - {int(m)} + 2)) gs(i)
-  WHERE v.n >= {int(m)}
-),
-mp_join AS (
-  SELECT a.g, a.i, b.nn_j, b.d2min
-  FROM mp_all a LEFT JOIN mp_best b ON b.g = a.g AND b.i = a.i
-)
-SELECT g, CAST(i AS BIGINT) AS i, nn_j, d2min,
-       d2min IS NOT NULL AND d2min = max(d2min) OVER (PARTITION BY g)
-         AS is_discord
-FROM mp_join
-"""
-
-
 # -------------------------------------------------- quantile normalization
-
-
-def quantile_normalize(
-    df: DataFrame,
-    g_col: str = "g",
-    id_col: str = "rid",
-    v_col: str = "v_c",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """(g, rid, v_c, r, n_g, target_v) — QUANTILE NORMALIZATION
-    (Bolstad et al. 2003, pooled-reference variant): map each group's
-    values onto the POOLED empirical distribution so every group ends
-    up with the same marginal — the batch-effect / per-source-drift
-    correction of feature pipelines. A group value of within-group
-    rank r (of n_g) is replaced by the pooled value at global rank
-    ceil(r·N / n_g).
-
-    Exactness: all decisions are integer ranks with pinned ties —
-    within-group order (v, id), pooled order (v, g, id); the index map
-    is (r·N + n_g − 1) div n_g. No interpolation, no floats: the
-    target is an actual observed value (type-1 quantile convention,
-    same as group_quantiles).
-
-    Scale: the pooled rank is the TWO-LEVEL scan (no single-partition
-    window); within-group ranks an ordinary partitioned window; one
-    equi-join on the computed index. Headroom r·N < 2^63."""
-    base = df.select(
-        F.col(g_col).alias("g"),
-        F.col(id_col).cast("long").alias("rid"),
-        F.col(v_col).cast("long").alias("v_c"),
-    )
-    n_total = base.count()
-    pooled = _two_level_rank(
-        base.withColumn(
-            "_pk",
-            F.concat_ws("|", F.col("v_c"), F.col("g"), F.col("rid")),
-        ).withColumn("_pv", F.col("v_c")),
-        "_pv",
-        "_pk",
-        "_gidx",
-        n_buckets=n_buckets,
-    ).select(F.col("_gidx").alias("idx"), F.col("v_c").alias("target_v"))
-    wg = Window.partitionBy("g").orderBy(F.col("v_c").asc(), F.col("rid").asc())
-    ranked = base.withColumn("r", F.row_number().over(wg).cast("long")).withColumn(
-        "n_g", F.count(F.lit(1)).over(Window.partitionBy("g")).cast("long")
-    )
-    idx = F.expr(f"(r * {n_total} + n_g - 1) DIV n_g")
-    return ranked.withColumn("idx", idx.cast("long")).join(
-        pooled, "idx"
-    ).select("g", "rid", "v_c", "r", "n_g", "target_v")
-
-
-def quantile_normalize_sql(rows_cte: str) -> str:
-    """DuckDB twin of quantile_normalize — serial windows, identical
-    tie orders and index map. ``rows_cte`` -> (g, rid, v_c)."""
-    return f"""
-WITH qn_src AS ({rows_cte}),
-qn_b AS (
-  SELECT g, CAST(rid AS BIGINT) AS rid, CAST(v_c AS BIGINT) AS v_c
-  FROM qn_src
-),
-qn_pool AS (
-  SELECT CAST(row_number() OVER (
-           ORDER BY v_c ASC,
-                    v_c || '|' || g || '|' || rid ASC) AS BIGINT) AS idx,
-         v_c AS target_v
-  FROM qn_b
-),
-qn_r AS (
-  SELECT *, CAST(row_number() OVER (
-           PARTITION BY g ORDER BY v_c ASC, rid ASC) AS BIGINT) AS r,
-         CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n_g,
-         CAST(count(*) OVER () AS BIGINT) AS n
-  FROM qn_b
-)
-SELECT q.g, q.rid, q.v_c, q.r, q.n_g, p.target_v
-FROM qn_r q JOIN qn_pool p ON p.idx = (q.r * q.n + q.n_g - 1) // q.n_g
-"""
-
-
-def pearson_corr(
-    df: DataFrame,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """(g, n, num, denx, deny, r) — PEARSON CORRELATION per group from
-    exact integer raw moments: the linear-association twin of
-    spearman_corr (which covers the monotone case). The standard
-    screen for feature redundancy / metric coupling in a training-data
-    pipeline ("is doc length just quality score in disguise?").
-
-    Exactness scheme: with integer x, y the five raw sums
-
-        sx = Σx, sy = Σy, sxx = Σx², syy = Σy², sxy = Σx·y
-
-    are exact int64 (order-free); the centered second moments
-
-        num  = n·sxy − sx·sy
-        denx = n·sxx − sx²
-        deny = n·syy − sy²
-
-    are assembled in decimal(38,0) (HUGEINT in the DuckDB twin) so the
-    products cannot overflow for any int64-summable input. r is then
-    the one pinned IEEE assembly double(num)/(√denx·√deny) rounded to
-    6 — identical in both engines because decimal→double casts and
-    sqrt are correctly rounded. NULL r when a variance is 0.
-
-    Scale: one combinable groupBy(g) — a pure map-side-partial scan,
-    no joins, no windows. Input magnitudes: int64 exactness of the raw
-    sums needs n·Bx², n·By², n·Bx·By < 2^63 (B = max |value|); quantize
-    coarser or pre-aggregate beyond that."""
-    rows = df.select(
-        F.col(group_col).alias("g"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
-    )
-    agg = rows.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    wide = agg.select(
-        "g",
-        "n",
-        (d38("n") * d38("sxy") - d38("sx") * d38("sy")).alias("num"),
-        (d38("n") * d38("sxx") - d38("sx") * d38("sx")).alias("denx"),
-        (d38("n") * d38("syy") - d38("sy") * d38("sy")).alias("deny"),
-    )
-    dd = lambda c: F.col(c).cast("double")  # noqa: E731
-    return wide.select(
-        "g",
-        F.col("n").cast("long").alias("n"),
-        F.col("num").cast("string").alias("num"),
-        F.col("denx").cast("string").alias("denx"),
-        F.col("deny").cast("string").alias("deny"),
-        F.when(
-            (F.col("denx") > 0) & (F.col("deny") > 0),
-            F.round(dd("num") / (F.sqrt(dd("denx")) * F.sqrt(dd("deny"))), 6),
-        ).alias("r"),
-    )
-
-
-def pearson_corr_sql(
-    rows_cte: str,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> str:
-    """DuckDB twin of pearson_corr — identical raw moments (HUGEINT
-    assembly mirrors Spark's decimal(38,0)) and pinned r."""
-    g, x, y = group_col, x_col, y_col
-    return f"""
-WITH pc_src AS (
-  SELECT {g} AS g, CAST({x} AS BIGINT) AS x, CAST({y} AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-pc_agg AS (
-  SELECT g, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM pc_src GROUP BY 1
-),
-pc_wide AS (
-  SELECT g, n,
-         CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS num,
-         CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS denx,
-         CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS deny
-  FROM pc_agg
-)
-SELECT g, n,
-       CAST(num AS VARCHAR) AS num,
-       CAST(denx AS VARCHAR) AS denx,
-       CAST(deny AS VARCHAR) AS deny,
-       CASE WHEN denx > 0 AND deny > 0
-            THEN round(
-              CAST(num AS DOUBLE)
-              / (sqrt(CAST(denx AS DOUBLE)) * sqrt(CAST(deny AS DOUBLE))),
-              6)
-       END AS r
-FROM pc_wide
-"""
-
-
-def bollinger_breach(
-    df: DataFrame,
-    group_col: str = "g",
-    t_col: str = "t",
-    id_col: str = "rid",
-    v_col: str = "v",
-    w: int = 20,
-    k: int = 2,
-) -> DataFrame:
-    """(g, t, rid, v, n_w, s, s2, breach) — BOLLINGER BAND BREACH
-    detection: flag rows whose value leaves the ±k·σ envelope around
-    the trailing w-row moving average (the classic volatility-break /
-    metric-anomaly alarm; k is an integer σ multiplier).
-
-    Float-free gate: over the trailing window let n = count, s = Σv,
-    s2 = Σv² (exact int64).  Then
-
-        |v − μ| > k·σ   ⇔   (v·n − s)² > k²·(n·s2 − s²)
-
-    by multiplying both sides by n² — every quantity an exact integer,
-    so the breach set is bit-reproducible in any engine. breach = +1
-    above the upper band, −1 below the lower, 0 inside; warmup rows
-    (n < w) are always 0 (the envelope isn't defined yet).
-
-    Ordering is pinned by (t, rid) so duplicate timestamps cannot make
-    the window ambiguous. Overflow: (v·n−s)² ≤ (2·w·B)² with B =
-    max|v| — exact while w·B < 1.5e9 (w=20, cent-quantized metrics:
-    fine to |v| ≈ $750k).
-
-    Scale: one ROWS-window per series — a single shuffle on g, state
-    bounded by w rows; no self-joins."""
-    rows = df.select(
-        F.col(group_col).alias("g"),
-        F.col(t_col).cast("long").alias("t"),
-        F.col(id_col).cast("long").alias("rid"),
-        F.col(v_col).cast("long").alias("v"),
-    )
-    win = (
-        Window.partitionBy("g")
-        .orderBy("t", "rid")
-        .rowsBetween(-(w - 1), 0)
-    )
-    stats = rows.select(
-        "g",
-        "t",
-        "rid",
-        "v",
-        F.count(F.lit(1)).over(win).alias("n_w"),
-        F.sum("v").over(win).alias("s"),
-        F.sum(F.col("v") * F.col("v")).over(win).alias("s2"),
-    )
-    dev = F.col("v") * F.col("n_w") - F.col("s")
-    var_n2 = F.col("n_w") * F.col("s2") - F.col("s") * F.col("s")
-    gate = (dev * dev) > (F.lit(k * k) * var_n2)
-    return stats.select(
-        "g",
-        "t",
-        "rid",
-        "v",
-        "n_w",
-        "s",
-        "s2",
-        F.when((F.col("n_w") < w) | ~gate, F.lit(0))
-        .when(dev > 0, F.lit(1))
-        .otherwise(F.lit(-1))
-        .cast("int")
-        .alias("breach"),
-    )
-
-
-def bollinger_breach_sql(
-    rows_cte: str,
-    w: int = 20,
-    k: int = 2,
-) -> str:
-    """DuckDB twin of bollinger_breach — identical trailing window and
-    integer gate. ``rows_cte`` -> (g, t, rid, v)."""
-    return f"""
-WITH bb_src AS (
-  SELECT g, CAST(t AS BIGINT) AS t, CAST(rid AS BIGINT) AS rid,
-         CAST(v AS BIGINT) AS v
-  FROM ({rows_cte})
-),
-bb_stats AS (
-  SELECT g, t, rid, v,
-         CAST(count(*) OVER tw AS BIGINT) AS n_w,
-         CAST(sum(v) OVER tw AS BIGINT) AS s,
-         CAST(sum(v * v) OVER tw AS BIGINT) AS s2
-  FROM bb_src
-  WINDOW tw AS (
-    PARTITION BY g ORDER BY t, rid
-    ROWS BETWEEN {w - 1} PRECEDING AND CURRENT ROW
-  )
-)
-SELECT g, t, rid, v, n_w, s, s2,
-       CAST(CASE
-         WHEN n_w < {w} THEN 0
-         WHEN (v * n_w - s) * (v * n_w - s) <= {k * k} * (n_w * s2 - s * s)
-           THEN 0
-         WHEN v * n_w - s > 0 THEN 1
-         ELSE -1
-       END AS INTEGER) AS breach
-FROM bb_stats
-"""
-
-
-def pr_curve(
-    df: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
-) -> DataFrame:
-    """(s, tp, fp, fn, prec_micro, rec_micro) — the EXACT
-    PRECISION-RECALL CURVE: one row per distinct score s, evaluating
-    the classifier "positive iff score ≥ s" (sklearn
-    precision_recall_curve's point set, before its interpolation).
-    The model-selection twin of roc_auc: AUC summarizes one number,
-    the PR points are what you read a quality-filter threshold off.
-
-    Exact integer algebra: group rows by score → (n_g, pos_g); a
-    single descending cumulative window gives tp and fp at every
-    threshold; fn = P − tp.  precision/recall are reported as exact
-    floor micro-ratios (⌊1e6·tp/(tp+fp)⌋, ⌊1e6·tp/P⌋) — integer
-    division, no float anywhere.
-
-    Scale: the window runs on the score-COLLAPSED table (≤ one row per
-    distinct score — bounded by the score quantization, not the data),
-    after a combinable groupBy. Same shape as roc_auc: the raw corpus
-    is never windowed."""
-    g = df.groupBy(F.col(score_col).cast("long").alias("s")).agg(
-        F.count(F.lit(1)).alias("n_g"),
-        F.sum(F.col(label_col).cast("long")).alias("pos_g"),
-    )
-    w = (
-        Window.orderBy(F.desc("s"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = g.select(
-        "s",
-        F.sum("pos_g").over(w).alias("tp"),
-        (F.sum("n_g").over(w) - F.sum("pos_g").over(w)).alias("fp"),
-        F.sum("pos_g").over(wall).alias("p_all"),
-    )
-    return cum.select(
-        "s",
-        "tp",
-        "fp",
-        (F.col("p_all") - F.col("tp")).alias("fn"),
-        F.expr("1000000 * tp div (tp + fp)").alias("prec_micro"),
-        F.expr(
-            "case when p_all > 0 then 1000000 * tp div p_all else 0 end"
-        ).alias("rec_micro"),
-    )
-
-
-def pr_curve_sql(rows_cte: str) -> str:
-    """DuckDB twin of pr_curve — identical collapsed descending
-    cumulative and floor micro-ratios. ``rows_cte`` -> (score, label)."""
-    return f"""
-WITH pr_src AS (
-  SELECT CAST(score AS BIGINT) AS s, CAST(label AS BIGINT) AS label
-  FROM ({rows_cte})
-),
-pr_g AS (
-  SELECT s, CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(label) AS BIGINT) AS pos_g
-  FROM pr_src GROUP BY 1
-),
-pr_cum AS (
-  SELECT s,
-         CAST(sum(pos_g) OVER dw AS BIGINT) AS tp,
-         CAST(sum(n_g) OVER dw - sum(pos_g) OVER dw AS BIGINT) AS fp,
-         CAST(sum(pos_g) OVER () AS BIGINT) AS p_all
-  FROM pr_g
-  WINDOW dw AS (
-    ORDER BY s DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-  )
-)
-SELECT s, tp, fp, p_all - tp AS fn,
-       1000000 * tp // (tp + fp) AS prec_micro,
-       CASE WHEN p_all > 0 THEN 1000000 * tp // p_all ELSE 0 END
-         AS rec_micro
-FROM pr_cum
-"""
-
-
-def sax_words(
-    df: DataFrame,
-    group_col: str = "g",
-    t_col: str = "t",
-    id_col: str = "rid",
-    v_col: str = "v",
-    seg_len: int = 8,
-    alphabet: int = 4,
-) -> DataFrame:
-    """(g, seg, n_in, sum_v, sym) — SAX SYMBOLIZATION (Lin/Keogh
-    2003's PAA+discretize pipeline, the range-normalized integer
-    variant): compress each series into a short symbol string for
-    motif mining, similarity hashing, and anomaly grammars. Each run
-    of ``seg_len`` consecutive points becomes one PAA segment; the
-    segment MEAN is binned into ``alphabet`` equal-width classes of
-    the series' own [min, max] span.
-
-    Float-free discretization: with range = vmax − vmin + 1 the bin
-
-        sym = ⌊ A·(sum_v − n_in·vmin) / (n_in·range) ⌋
-
-    is exact integer division (mean binning with the mean kept as the
-    rational sum_v/n_in — never materialized as a float), and
-    sym < A holds automatically since sum_v − n_in·vmin < n_in·range.
-    Classic SAX uses Gaussian breakpoints on a z-normalized series —
-    float territory; the equal-width variant keeps the symbol stream
-    bit-reproducible, which is what a 100 TB dedup/motif pass needs.
-
-    Scale: one ordered window per series for the segment index, one
-    combinable groupBy(g, seg), one tiny per-series min/max rollup
-    joined back (broadcast-sized). Partial tail segments keep their
-    true n_in."""
-    rows = df.select(
-        F.col(group_col).alias("g"),
-        F.col(t_col).cast("long").alias("t"),
-        F.col(id_col).cast("long").alias("rid"),
-        F.col(v_col).cast("long").alias("v"),
-    )
-    w = Window.partitionBy("g").orderBy("t", "rid")
-    seg = rows.select(
-        "g",
-        "v",
-        ((F.row_number().over(w) - F.lit(1)) / F.lit(seg_len))
-        .cast("long")
-        .alias("seg"),
-    )
-    per_seg = seg.groupBy("g", "seg").agg(
-        F.count(F.lit(1)).alias("n_in"), F.sum("v").alias("sum_v")
-    )
-    span = rows.groupBy("g").agg(
-        F.min("v").alias("vmin"), F.max("v").alias("vmax")
-    )
-    joined = per_seg.join(F.broadcast(span), "g")
-    return joined.select(
-        "g",
-        "seg",
-        "n_in",
-        "sum_v",
-        F.expr(
-            f"{alphabet} * (sum_v - n_in * vmin) div (n_in * (vmax - vmin + 1))"
-        ).alias("sym"),
-    )
-
-
-def sax_words_sql(
-    rows_cte: str,
-    seg_len: int = 8,
-    alphabet: int = 4,
-) -> str:
-    """DuckDB twin of sax_words — identical segment windows and
-    integer bin. ``rows_cte`` -> (g, t, rid, v)."""
-    return f"""
-WITH sx_src AS (
-  SELECT g, CAST(t AS BIGINT) AS t, CAST(rid AS BIGINT) AS rid,
-         CAST(v AS BIGINT) AS v
-  FROM ({rows_cte})
-),
-sx_seg AS (
-  SELECT g, v,
-         (row_number() OVER (PARTITION BY g ORDER BY t, rid) - 1)
-           // {seg_len} AS seg
-  FROM sx_src
-),
-sx_per AS (
-  SELECT g, CAST(seg AS BIGINT) AS seg,
-         CAST(count(*) AS BIGINT) AS n_in,
-         CAST(sum(v) AS BIGINT) AS sum_v
-  FROM sx_seg GROUP BY 1, 2
-),
-sx_span AS (
-  SELECT g, CAST(min(v) AS BIGINT) AS vmin, CAST(max(v) AS BIGINT) AS vmax
-  FROM sx_src GROUP BY 1
-)
-SELECT p.g, p.seg, p.n_in, p.sum_v,
-       {alphabet} * (p.sum_v - p.n_in * s.vmin)
-         // (p.n_in * (s.vmax - s.vmin + 1)) AS sym
-FROM sx_per p JOIN sx_span s ON s.g = p.g
-"""
-
-
-def stump_train(
-    df: DataFrame,
-    feat_col: str = "feat",
-    x_col: str = "x",
-    label_col: str = "label",
-) -> DataFrame:
-    """(feat, best_t, polarity, errors, n, acc_micro) — DECISION STUMP
-    TRAINING per feature: the exact best 1-D threshold rule, the
-    weak learner under boosting and the classic feature-screening
-    baseline ("how separable are labels on this column alone?").
-
-    For every candidate threshold t (= every distinct feature value)
-    and both polarities,
-
-        pol 0 (predict 1 iff x > t):  errors = pos≤t + neg>t
-        pol 1 (predict 1 iff x ≤ t):  errors = neg≤t + pos>t
-
-    computed from one ascending prefix scan over the (feat, x)-
-    COLLAPSED table — never the raw rows. The winner is the exact
-    integer argmin pinned by (errors, polarity, t); constant rules are
-    included automatically (t = max x). acc_micro = ⌊1e6·(n−errors)/n⌋
-    exact integer division.
-
-    Scale: one combinable groupBy(feat, x), one window over the
-    collapsed table (rows = distinct values per feature, bounded by
-    quantization), one struct-min rollup. Same shape as pr_curve."""
-    rows = df.select(
-        F.col(feat_col).alias("feat"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(label_col).cast("long").alias("y"),
-    )
-    g = rows.groupBy("feat", "x").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")
-    )
-    w = (
-        Window.partitionBy("feat")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("feat").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = g.select(
-        "feat",
-        "x",
-        F.sum("pos").over(w).alias("cpos"),
-        (F.sum("cnt").over(w) - F.sum("pos").over(w)).alias("cneg"),
-        F.sum("pos").over(wall).alias("p_all"),
-        (F.sum("cnt").over(wall) - F.sum("pos").over(wall)).alias("n_neg"),
-        F.sum("cnt").over(wall).alias("n"),
-    )
-    both = cum.select(
-        "feat",
-        "x",
-        "n",
-        (F.col("cpos") + F.col("n_neg") - F.col("cneg")).alias("err0"),
-        (F.col("cneg") + F.col("p_all") - F.col("cpos")).alias("err1"),
-    )
-    cand = both.select(
-        "feat", "n",
-        F.struct(
-            F.col("err0").alias("errors"),
-            F.lit(0).cast("long").alias("polarity"),
-            F.col("x").alias("best_t"),
-        ).alias("c"),
-    ).unionByName(
-        both.select(
-            "feat", "n",
-            F.struct(
-                F.col("err1").alias("errors"),
-                F.lit(1).cast("long").alias("polarity"),
-                F.col("x").alias("best_t"),
-            ).alias("c"),
-        )
-    )
-    return (
-        cand.groupBy("feat", "n")
-        .agg(F.min("c").alias("best"))
-        .select(
-            "feat",
-            F.col("best.best_t").alias("best_t"),
-            F.col("best.polarity").alias("polarity"),
-            F.col("best.errors").alias("errors"),
-            "n",
-            F.expr("1000000 * (n - best.errors) div n").alias("acc_micro"),
-        )
-    )
-
-
-def stump_train_sql(rows_cte: str) -> str:
-    """DuckDB twin of stump_train — identical collapsed prefix scan,
-    candidate union, and (errors, polarity, t) argmin.
-    ``rows_cte`` -> (feat, x, label)."""
-    return f"""
-WITH st_src AS (
-  SELECT feat, CAST(x AS BIGINT) AS x, CAST(label AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-st_g AS (
-  SELECT feat, x, CAST(count(*) AS BIGINT) AS cnt,
-         CAST(sum(y) AS BIGINT) AS pos
-  FROM st_src GROUP BY 1, 2
-),
-st_cum AS (
-  SELECT feat, x,
-         CAST(sum(pos) OVER pw AS BIGINT) AS cpos,
-         CAST(sum(cnt) OVER pw - sum(pos) OVER pw AS BIGINT) AS cneg,
-         CAST(sum(pos) OVER fw AS BIGINT) AS p_all,
-         CAST(sum(cnt) OVER fw - sum(pos) OVER fw AS BIGINT) AS n_neg,
-         CAST(sum(cnt) OVER fw AS BIGINT) AS n
-  FROM st_g
-  WINDOW pw AS (PARTITION BY feat ORDER BY x
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         fw AS (PARTITION BY feat)
-),
-st_cand AS (
-  SELECT feat, n, cpos + n_neg - cneg AS errors, 0 AS polarity, x
-  FROM st_cum
-  UNION ALL
-  SELECT feat, n, cneg + p_all - cpos AS errors, 1 AS polarity, x
-  FROM st_cum
-),
-st_pick AS (
-  SELECT feat, n, errors, CAST(polarity AS BIGINT) AS polarity, x,
-         row_number() OVER (PARTITION BY feat
-                            ORDER BY errors, polarity, x) AS rk
-  FROM st_cand
-)
-SELECT feat, x AS best_t, polarity, errors, n,
-       1000000 * (n - errors) // n AS acc_micro
-FROM st_pick WHERE rk = 1
-"""
-
-
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: list,
-    value_cols: list,
-) -> DataFrame:
-    """(…key_cols, status, changed_mask, n_changed) — SNAPSHOT DIFF
-    between two versions of a table: the reconciliation/audit primitive
-    under CDC validation, backfill verification, and "what did this
-    pipeline run change?" reviews — scd2_build's stateless sibling
-    (two snapshots in, one verdict per key out).
-
-    status ∈ {added, removed, changed, same}; changed_mask is the
-    little-endian bitmask of value columns that differ (bit i =
-    value_cols[i]), n_changed its popcount — both exact integers from
-    null-safe equality (<=> — a NULL→value transition counts as a
-    change, the audit semantic).
-
-    Scale: ONE full-outer equi-join on the key (sort-merge at scale;
-    pre-bucket both snapshots by key to make it shuffle-free), column
-    comparisons are JVM expressions. No window, no collect."""
-    o = old.select(
-        *[F.col(k).alias(f"k_{k}") for k in key_cols],
-        *[F.col(c).alias(f"o_{c}") for c in value_cols],
-        F.lit(1).alias("_in_old"),
-    )
-    n = new.select(
-        *[F.col(k).alias(f"k_{k}") for k in key_cols],
-        *[F.col(c).alias(f"n_{c}") for c in value_cols],
-        F.lit(1).alias("_in_new"),
-    )
-    joined = o.join(n, [f"k_{k}" for k in key_cols], "full_outer")
-    mask = F.lit(0)
-    for i, c in enumerate(value_cols):
-        differs = ~F.col(f"o_{c}").eqNullSafe(F.col(f"n_{c}"))
-        mask = mask + F.when(differs, F.lit(1 << i)).otherwise(F.lit(0))
-    status = (
-        F.when(F.col("_in_old").isNull(), F.lit("added"))
-        .when(F.col("_in_new").isNull(), F.lit("removed"))
-        .when(mask > 0, F.lit("changed"))
-        .otherwise(F.lit("same"))
-    )
-    both = F.col("_in_old").isNotNull() & F.col("_in_new").isNotNull()
-    return joined.select(
-        *[F.col(f"k_{k}").alias(k) for k in key_cols],
-        status.alias("status"),
-        F.when(both, mask).otherwise(F.lit(0)).cast("long").alias(
-            "changed_mask"
-        ),
-        F.when(both, F.bit_count(mask)).otherwise(F.lit(0))
-        .cast("long")
-        .alias("n_changed"),
-    )
-
-
-def snapshot_diff_sql(
-    old_cte: str,
-    new_cte: str,
-    key_cols: list,
-    value_cols: list,
-) -> str:
-    """DuckDB twin of snapshot_diff — identical full-outer join,
-    null-safe comparisons, and bitmask assembly."""
-    keys = ", ".join(key_cols)
-    on = " AND ".join(f"n.{k} = o.{k}" for k in key_cols)
-    key_out = ", ".join(
-        f"COALESCE(o.{k}, n.{k}) AS {k}" for k in key_cols
-    )
-    mask_terms = " + ".join(
-        f"(CASE WHEN NOT (o.{c} IS NOT DISTINCT FROM n.{c})"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i, c in enumerate(value_cols)
-    )
-    return f"""
-WITH sd_o AS ({old_cte}),
-sd_n AS ({new_cte}),
-sd_j AS (
-  SELECT {key_out},
-         o.{key_cols[0]} IS NOT NULL AS in_old,
-         n.{key_cols[0]} IS NOT NULL AS in_new,
-         CASE WHEN o.{key_cols[0]} IS NOT NULL
-               AND n.{key_cols[0]} IS NOT NULL
-              THEN {mask_terms} ELSE 0 END AS changed_mask
-  FROM sd_o o FULL OUTER JOIN sd_n n ON {on}
-)
-SELECT {keys},
-       CASE WHEN NOT in_old THEN 'added'
-            WHEN NOT in_new THEN 'removed'
-            WHEN changed_mask > 0 THEN 'changed'
-            ELSE 'same' END AS status,
-       CAST(changed_mask AS BIGINT) AS changed_mask,
-       CAST(bit_count(changed_mask) AS BIGINT) AS n_changed
-FROM sd_j
-"""
-
-
-def knee_point(
-    df: DataFrame,
-    group_col: str = "g",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """(g, knee_x, knee_y, dev_num, side) — KNEE/ELBOW DETECTION on a
-    per-group curve (the Kneedle idea in exact integer form): the
-    point of maximum perpendicular deviation from the chord joining
-    the curve's endpoints — how you pick k for k-means/IVF, a
-    similarity threshold from a score curve, or a compaction cutoff
-    from a file-size CDF, without eyeballing.
-
-    Float-free: with endpoints (x0,y0), (x1,y1) the signed chord
-    deviation of (x,y) is the exact cross product
-
-        d = (y − y0)·(x1 − x0) − (x − x0)·(y1 − y0)
-
-    (∝ perpendicular distance — the ray-casting/orientation primitive
-    reused from the geometry kernels). The knee is the argmax of |d|,
-    pinned by (|d| DESC, x ASC); dev_num reports |d| exactly (divide
-    by the chord length for a scale-free distance; the numerator is
-    kept integer so it never rounds), side = sign(d) (+1 above the
-    chord = convex knee, −1 below = concave elbow). Overflow bound:
-    |d| ≤ Δy·Δx — keep the product under 2^63 (cent-quantized CDFs to
-    ~10^10 × 10^5 points are fine).
-
-    Scale: endpoints via one min/max-struct rollup (no window over raw
-    rows), broadcast back, one argmax rollup. Curves are usually
-    already aggregates (CDFs, k-sweeps) — this runs on their collapsed
-    output."""
-    rows = df.select(
-        F.col(group_col).alias("g"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
-    )
-    ends = rows.groupBy("g").agg(
-        F.min(F.struct("x", "y")).alias("lo"),
-        F.max(F.struct("x", "y")).alias("hi"),
-    )
-    j = rows.join(F.broadcast(ends), "g")
-    d = (F.col("y") - F.col("lo.y")) * (F.col("hi.x") - F.col("lo.x")) - (
-        F.col("x") - F.col("lo.x")
-    ) * (F.col("hi.y") - F.col("lo.y"))
-    staged = j.select(
-        "g",
-        "x",
-        "y",
-        d.alias("d"),
-    )
-    return (
-        staged.groupBy("g")
-        .agg(
-            F.max(
-                F.struct(
-                    F.abs(F.col("d")).alias("ad"),
-                    (-F.col("x")).alias("negx"),
-                    F.col("x").alias("kx"),
-                    F.col("y").alias("ky"),
-                    F.col("d").alias("dd"),
-                )
-            ).alias("top")
-        )
-        .select(
-            "g",
-            F.col("top.kx").alias("knee_x"),
-            F.col("top.ky").alias("knee_y"),
-            F.col("top.ad").alias("dev_num"),
-            F.signum(F.col("top.dd")).cast("long").alias("side"),
-        )
-    )
-
-
-def knee_point_sql(rows_cte: str) -> str:
-    """DuckDB twin of knee_point — identical endpoint structs, cross
-    product, and pinned argmax. ``rows_cte`` -> (g, x, y)."""
-    return f"""
-WITH kn_src AS (
-  SELECT g, CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-kn_ends AS (
-  SELECT g,
-         min(struct_pack(x := x, y := y)) AS lo,
-         max(struct_pack(x := x, y := y)) AS hi
-  FROM kn_src GROUP BY 1
-),
-kn_d AS (
-  SELECT s.g, s.x, s.y,
-         (s.y - e.lo.y) * (e.hi.x - e.lo.x)
-           - (s.x - e.lo.x) * (e.hi.y - e.lo.y) AS d
-  FROM kn_src s JOIN kn_ends e USING (g)
-),
-kn_rk AS (
-  SELECT g, x, y, d,
-         row_number() OVER (PARTITION BY g ORDER BY abs(d) DESC, x ASC)
-           AS rk
-  FROM kn_d
-)
-SELECT g, x AS knee_x, y AS knee_y,
-       CAST(abs(d) AS BIGINT) AS dev_num,
-       CAST(sign(d) AS BIGINT) AS side
-FROM kn_rk WHERE rk = 1
-"""
-
-
-def fd_audit(
-    df: DataFrame,
-    fds: list[tuple[str, list[str], str]],
-) -> DataFrame:
-    """(fd, n_rows, n_groups, n_violating, g3_num, holds) — FUNCTIONAL-
-    DEPENDENCY audit (Metanome/Tane-style data profiling): for each
-    candidate FD  lhs → rhs, does every lhs value determine a single
-    rhs value, and if not, how badly is it broken? ``g3_num`` is the
-    numerator of the classic g3 error (Kivinen-Mannila 1995): the
-    minimum number of rows to delete to make the FD hold, computed
-    exactly as n_rows − Σ_groups max_value_count. The schema-discovery
-    primitive behind key detection, normalization advice, and silent
-    upstream-corruption alarms on 100 TB fact tables.
-
-    Per FD: one groupBy(lhs, rhs) count (map-combinable), one rollup to
-    lhs (n_vals, n_rows, max count), one global rollup — all exact
-    int64, no distinct-in-agg memory cliff (the two-level shape IS the
-    scalable countDistinct). FDs are audited independently and unioned;
-    each is a straight scan-shaped aggregation."""
-    outs = []
-    for name, lhs, rhs in fds:
-        g1 = df.groupBy(*lhs, rhs).agg(F.count(F.lit(1)).alias("_c"))
-        g2 = g1.groupBy(*lhs).agg(
-            F.count(F.lit(1)).alias("_nv"),
-            F.sum("_c").alias("_nr"),
-            F.max("_c").alias("_mx"),
-        )
-        outs.append(
-            g2.agg(
-                F.lit(name).alias("fd"),
-                F.sum("_nr").cast("long").alias("n_rows"),
-                F.count(F.lit(1)).cast("long").alias("n_groups"),
-                F.sum((F.col("_nv") > 1).cast("long")).cast("long").alias(
-                    "n_violating"
-                ),
-                (F.sum("_nr") - F.sum("_mx")).cast("long").alias("g3_num"),
-                (F.sum((F.col("_nv") > 1).cast("long")) == 0).alias("holds"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def fd_audit_sql(table_cte: str, fds: list[tuple[str, list[str], str]]) -> str:
-    """DuckDB twin of fd_audit: identical two-level rollup per FD,
-    UNION ALL across candidates. ``table_cte`` -> the audited rows."""
-    parts = []
-    for name, lhs, rhs in fds:
-        lhs_list = ", ".join(lhs)
-        parts.append(
-            f"""
-SELECT '{name}' AS fd,
-       CAST(SUM(_nr) AS BIGINT) AS n_rows,
-       CAST(COUNT(*) AS BIGINT) AS n_groups,
-       CAST(SUM(CASE WHEN _nv > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating,
-       CAST(SUM(_nr) - SUM(_mx) AS BIGINT) AS g3_num,
-       SUM(CASE WHEN _nv > 1 THEN 1 ELSE 0 END) = 0 AS holds
-FROM (
-  SELECT {lhs_list}, COUNT(*) AS _nv, SUM(_c) AS _nr, MAX(_c) AS _mx
-  FROM (
-    SELECT {lhs_list}, {rhs}, COUNT(*) AS _c
-    FROM ({table_cte}) GROUP BY ALL
-  ) g1 GROUP BY ALL
-) g2"""
-        )
-    return " UNION ALL ".join(parts)
-
-
-def inclusion_audit(
-    pairs: list[tuple[str, DataFrame, str, DataFrame, str]],
-) -> DataFrame:
-    """(ind, n_child, n_child_distinct, n_missing_distinct,
-    n_orphan_rows, contained) — INCLUSION-DEPENDENCY / foreign-key
-    audit: for each candidate child.col ⊆ parent.col, how many child
-    values (and rows) have no parent — referential-integrity discovery
-    and enforcement over raw lakes where constraints are unenforced
-    (Spider/Binder-style profiling). ``pairs`` entries are
-    (name, child_df, child_col, parent_df, parent_col).
-
-    Per pair: the child collapses to (value, row_count) first — the
-    join and the anti probe run on DISTINCT child values, never rows —
-    then one left join against the distinct parent (a dimension: Spark
-    broadcasts it when small; at 10^12 rows both sides are already
-    value-collapsed so the shuffle carries |distinct| not |rows|).
-    NULL child values are excluded (SQL FK semantics)."""
-    outs = []
-    for name, child, ccol, parent, pcol in pairs:
-        cv = (
-            child.filter(F.col(ccol).isNotNull())
-            .groupBy(F.col(ccol).alias("_v"))
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        pv = parent.select(F.col(pcol).alias("_v")).distinct().withColumn(
-            "_hit", F.lit(1)
-        )
-        j = cv.join(pv, "_v", "left")
-        outs.append(
-            j.agg(
-                F.lit(name).alias("ind"),
-                F.sum("_c").cast("long").alias("n_child"),
-                F.count(F.lit(1)).cast("long").alias("n_child_distinct"),
-                F.sum(F.col("_hit").isNull().cast("long"))
-                .cast("long")
-                .alias("n_missing_distinct"),
-                F.sum(F.when(F.col("_hit").isNull(), F.col("_c")).otherwise(0))
-                .cast("long")
-                .alias("n_orphan_rows"),
-                (F.sum(F.col("_hit").isNull().cast("long")) == 0).alias(
-                    "contained"
-                ),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def inclusion_audit_sql(
-    pairs: list[tuple[str, str, str, str, str]],
-) -> str:
-    """DuckDB twin of inclusion_audit. ``pairs`` entries are
-    (name, child_cte, child_col, parent_cte, parent_col)."""
-    parts = []
-    for name, child, ccol, parent, pcol in pairs:
-        parts.append(
-            f"""
-SELECT '{name}' AS ind,
-       CAST(SUM(_c) AS BIGINT) AS n_child,
-       CAST(COUNT(*) AS BIGINT) AS n_child_distinct,
-       CAST(SUM(CASE WHEN _hit IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_missing_distinct,
-       CAST(SUM(CASE WHEN _hit IS NULL THEN _c ELSE 0 END) AS BIGINT)
-         AS n_orphan_rows,
-       SUM(CASE WHEN _hit IS NULL THEN 1 ELSE 0 END) = 0 AS contained
-FROM (
-  SELECT cv._v, cv._c, pv._hit
-  FROM (
-    SELECT {ccol} AS _v, COUNT(*) AS _c FROM ({child})
-    WHERE {ccol} IS NOT NULL GROUP BY 1
-  ) cv
-  LEFT JOIN (
-    SELECT DISTINCT {pcol} AS _v, 1 AS _hit FROM ({parent})
-  ) pv USING (_v)
-) j"""
-        )
-    return " UNION ALL ".join(parts)
-
-
-READ_MICRO = 1_000_000  # fixed-point scale for the FK grade
-_RD_MARK = "\x01"  # marker byte that cannot occur in text
-
-
-def readability_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, n_words, n_sentences, n_syllables, fk100_micro) —
-    FLESCH-KINCAID GRADE LEVEL as exact integer accounting, the
-    standard text-quality gate in LLM-corpus curation (too-simple and
-    too-garbled documents both score out of band). Heuristic syllables:
-    per word, max(1, #vowel-group runs of [aeiouy]); sentences:
-    #runs of [.!?], min 1.
-
-        fk100_micro = 39·10⁶·W DIV S + 1180·10⁶·Syl DIV W − 1559·10⁶
-
-    — 100× the classic 0.39·W/S + 11.8·Syl/W − 15.59, with each ratio
-    floor-divided once (documented truncation, order-fixed) so the
-    score is a pure integer function of the text, bit-equal in the
-    twin. Vowel runs are counted by collapsing each run to one \\x01
-    marker (a byte that cannot occur in the word after [^a-z]
-    stripping) and length-diffing — no regex backreferences, RE2-safe.
-
-    Scale: explode words → one combinable doc rollup; scan-shaped."""
-    m = _RD_MARK
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_t"),
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("_w0"),
-    ).select(
-        "doc_id",
-        "_t",
-        F.regexp_replace(F.col("_w0"), "[^a-z]", "").alias("_w"),
-    ).filter(F.col("_w") != "")
-    vg_marked = F.regexp_replace(F.col("_w"), "[aeiouy]+", m)
-    vg = F.length(vg_marked) - F.length(F.regexp_replace(vg_marked, m, ""))
-    per_word = words.select(
-        "doc_id", "_t", F.greatest(F.lit(1), vg).cast("long").alias("_syl")
-    )
-    s_marked = F.regexp_replace(F.col("_t"), "[.!?]+", m)
-    n_sent = F.greatest(
-        F.lit(1),
-        F.length(s_marked) - F.length(F.regexp_replace(s_marked, m, "")),
-    ).cast("long")
-    agg = per_word.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_words"),
-        F.sum("_syl").cast("long").alias("n_syllables"),
-        F.first(n_sent).alias("n_sentences"),
-    )
-    fk = (
-        F.expr(f"CAST(39 * {READ_MICRO} * n_words DIV n_sentences AS BIGINT)")
-        + F.expr(
-            f"CAST(1180 * {READ_MICRO} * n_syllables DIV n_words AS BIGINT)"
-        )
-        - F.lit(1559 * READ_MICRO)
-    )
-    return agg.select(
-        "doc_id", "n_words", "n_sentences", "n_syllables",
-        fk.cast("long").alias("fk100_micro"),
-    )
-
-
-def readability_scores_sql(docs_cte: str) -> str:
-    """DuckDB twin of readability_scores. ``docs_cte`` -> (doc_id, text)."""
-    m = "chr(1)"
-    return f"""
-WITH rd_d AS (SELECT doc_id, text FROM ({docs_cte})),
-rd_w AS (
-  SELECT doc_id,
-         regexp_replace(lower(w0), '[^a-z]', '', 'g') AS w
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\\s+')) AS w0
-    FROM rd_d
-  )
-  WHERE regexp_replace(lower(w0), '[^a-z]', '', 'g') <> ''
-),
-rd_syl AS (
-  SELECT doc_id,
-         GREATEST(1,
-           length(regexp_replace(w, '[aeiouy]+', {m}, 'g'))
-           - length(replace(regexp_replace(w, '[aeiouy]+', {m}, 'g'),
-                            {m}, ''))) AS syl
-  FROM rd_w
-),
-rd_sent AS (
-  SELECT doc_id,
-         GREATEST(1,
-           length(regexp_replace(text, '[.!?]+', {m}, 'g'))
-           - length(replace(regexp_replace(text, '[.!?]+', {m}, 'g'),
-                            {m}, ''))) AS ns
-  FROM rd_d
-),
-rd_agg AS (
-  SELECT s.doc_id,
-         CAST(COUNT(*) AS BIGINT) AS n_words,
-         CAST(MIN(t.ns) AS BIGINT) AS n_sentences,
-         CAST(SUM(s.syl) AS BIGINT) AS n_syllables
-  FROM rd_syl s JOIN rd_sent t USING (doc_id)
-  GROUP BY 1
-)
-SELECT doc_id, n_words, n_sentences, n_syllables,
-       CAST((39 * {READ_MICRO} * n_words) // n_sentences
-            + (1180 * {READ_MICRO} * n_syllables) // n_words
-            - 1559 * {READ_MICRO} AS BIGINT) AS fk100_micro
-FROM rd_agg
-"""
-
-
-HURST_SCALE = 100_000  # log-term quantization (gravity_fit's scheme)
-
-
-def hurst_rs(
-    series: DataFrame,
-    sizes: tuple[int, ...] = (8, 16, 32, 64),
-    group_col: str = "g",
-    order_cols: tuple[str, ...] = ("t",),
-    value_col: str = "x",
-) -> DataFrame:
-    """(g, n_points, sx_q, sy_q, sxx_q, sxy_q, hurst) — HURST EXPONENT
-    by rescaled-range (R/S) analysis (Hurst 1951/Mandelbrot): the
-    long-memory diagnostic for a time series — H≈0.5 random walk,
-    >0.5 trending/persistent, <0.5 mean-reverting. Used on traffic,
-    latency, and demand series to pick forecasting models.
-
-    Exact core: values must be integers (quantize upstream, e.g.
-    cents). For each dyadic window n, consecutive full blocks of n
-    points give  D_k = n·prefix_k − k·Σx  (int64 — n× the cumulative
-    deviation), so R_scaled = max D − min D and the variance kernel
-    v = n·Σx² − (Σx)² are exact integers, and R/S = R_scaled/√v with
-    every n cancelling. Each block contributes one OLS point
-    (ln n, ln(R/S)) quantized per-term to round(ln·1e5) int64
-    (gravity_fit's scheme: order-free integer sufficient statistics,
-    double slope assembly replayed verbatim in the twin). Zero-variance
-    or zero-range blocks are skipped. ``hurst`` is the OLS slope,
-    rounded to 6 dp; NULL when fewer than 2 usable blocks or no
-    x-variance.
-
-    Scale: one row_number per group + one in-block prefix window per
-    window size (all partitioned by (g, block) — no global window),
-    then a combinable rollup. Overflow: n·|x|·len < 2^63."""
-    w0 = Window.partitionBy("g").orderBy(*[F.col(c) for c in order_cols])
-    base = series.select(
-        F.col(group_col).alias("g"),
-        *[F.col(c) for c in order_cols],
-        F.col(value_col).cast("long").alias("x"),
-    ).withColumn("idx", F.row_number().over(w0).cast("long") - 1)
-    pts = None
-    for n in sizes:
-        blk = base.select(
-            "g", "idx", "x", (F.col("idx") / n).cast("long").alias("b")
-        )
-        wb = (
-            Window.partitionBy("g", "b")
-            .orderBy("idx")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        blk = blk.select(
-            "g",
-            "b",
-            "x",
-            F.sum("x").over(wb).alias("pre"),
-            (F.col("idx") % n + 1).alias("k"),
-        )
-        # D_k needs s1 per block — join the block sum back onto rows
-        s1 = blk.groupBy("g", "b").agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("x").alias("s1"),
-            F.sum(F.col("x") * F.col("x")).alias("s2"),
-        )
-        d = blk.join(s1, ["g", "b"]).select(
-            "g",
-            "b",
-            "_n",
-            "s1",
-            "s2",
-            (F.lit(n) * F.col("pre") - F.col("k") * F.col("s1")).alias("d"),
-        )
-        per_blk = (
-            d.groupBy("g", "b")
-            .agg(
-                F.first("_n").alias("_n"),
-                F.first("s1").alias("s1"),
-                F.first("s2").alias("s2"),
-                (F.max("d") - F.min("d")).alias("r_scaled"),
-            )
-            .filter(F.col("_n") == n)
-            .select(
-                "g",
-                F.lit(n).cast("long").alias("n"),
-                "r_scaled",
-                (F.lit(n) * F.col("s2") - F.col("s1") * F.col("s1")).alias("v"),
-            )
-        )
-        pts = per_blk if pts is None else pts.unionByName(per_blk)
-    pts = pts.filter((F.col("v") > 0) & (F.col("r_scaled") > 0))
-    qx = F.round(
-        F.log(F.col("n").cast("double")) * HURST_SCALE
-    ).cast("long")
-    qy = F.round(
-        F.log(
-            F.col("r_scaled").cast("double")
-            / F.sqrt(F.col("v").cast("double"))
-        )
-        * HURST_SCALE
-    ).cast("long")
-    agg = pts.select("g", qx.alias("qx"), qy.alias("qy")).groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("n_points"),
-        F.sum("qx").cast("long").alias("sx_q"),
-        F.sum("qy").cast("long").alias("sy_q"),
-        F.sum(F.col("qx") * F.col("qx")).cast("long").alias("sxx_q"),
-        F.sum(F.col("qx") * F.col("qy")).cast("long").alias("sxy_q"),
-    )
-    nd = F.col("n_points").cast("double")
-    sx = F.col("sx_q").cast("double")
-    sy = F.col("sy_q").cast("double")
-    sxx = F.col("sxx_q").cast("double")
-    sxy = F.col("sxy_q").cast("double")
-    den = nd * sxx - sx * sx
-    slope = (nd * sxy - sx * sy) / den
-    fit_ok = (F.col("n_points") >= 2) & (den != 0)
-    return agg.select(
-        "g", "n_points", "sx_q", "sy_q", "sxx_q", "sxy_q",
-        F.when(fit_ok, F.round(slope, 6) + F.lit(0.0)).alias("hurst"),
-    )
-
-
-def hurst_rs_sql(
-    series_cte: str,
-    sizes: tuple[int, ...] = (8, 16, 32, 64),
-    order_by: str = "t",
-) -> str:
-    """DuckDB twin of hurst_rs. ``series_cte`` -> (g, <order cols>, x)."""
-    blocks = []
-    for n in sizes:
-        blocks.append(
-            f"""
-SELECT g, CAST({n} AS BIGINT) AS n,
-       MAX(d) - MIN(d) AS r_scaled,
-       {n} * MIN(s2) - MIN(s1) * MIN(s1) AS v
-FROM (
-  SELECT g, b, d,
-         SUM(x) OVER (PARTITION BY g, b) AS s1,
-         SUM(x * x) OVER (PARTITION BY g, b) AS s2,
-         COUNT(*) OVER (PARTITION BY g, b) AS nn
-  FROM (
-    SELECT g, idx // {n} AS b, x,
-           {n} * SUM(x) OVER (PARTITION BY g, idx // {n} ORDER BY idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - (idx % {n} + 1)
-             * SUM(x) OVER (PARTITION BY g, idx // {n}) AS d, idx
-    FROM hu_base
-  ) dd
-) s WHERE nn = {n}
-GROUP BY g, b"""
-        )
-    union = " UNION ALL ".join(blocks)
-    return f"""
-WITH hu_src AS ({series_cte}),
-hu_base AS (
-  SELECT g, CAST(x AS BIGINT) AS x,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY {order_by})
-              AS BIGINT) - 1 AS idx
-  FROM hu_src
-),
-hu_blk AS ({union}),
-hu_q AS (
-  SELECT g,
-         CAST(round(ln(CAST(n AS DOUBLE)) * {HURST_SCALE}) AS BIGINT) AS qx,
-         CAST(round(ln(CAST(r_scaled AS DOUBLE)
-                       / sqrt(CAST(v AS DOUBLE))) * {HURST_SCALE}) AS BIGINT)
-           AS qy
-  FROM hu_blk WHERE v > 0 AND r_scaled > 0
-),
-hu_agg AS (
-  SELECT g, CAST(COUNT(*) AS BIGINT) AS n_points,
-         CAST(SUM(qx) AS BIGINT) AS sx_q,
-         CAST(SUM(qy) AS BIGINT) AS sy_q,
-         CAST(SUM(qx * qx) AS BIGINT) AS sxx_q,
-         CAST(SUM(qx * qy) AS BIGINT) AS sxy_q
-  FROM hu_q GROUP BY 1
-)
-SELECT g, n_points, sx_q, sy_q, sxx_q, sxy_q,
-       CASE WHEN n_points >= 2 AND
-                 CAST(n_points AS DOUBLE) * CAST(sxx_q AS DOUBLE)
-                 - CAST(sx_q AS DOUBLE) * CAST(sx_q AS DOUBLE) <> 0
-            THEN round((CAST(n_points AS DOUBLE) * CAST(sxy_q AS DOUBLE)
-                        - CAST(sx_q AS DOUBLE) * CAST(sy_q AS DOUBLE))
-                       / (CAST(n_points AS DOUBLE) * CAST(sxx_q AS DOUBLE)
-                          - CAST(sx_q AS DOUBLE) * CAST(sx_q AS DOUBLE)), 6)
-                 + 0.0
-            ELSE NULL END AS hurst
-FROM hu_agg
-"""
-
-
-NB_MICRO = 1_000_000  # micro-nat quantization for NB log terms
-
-
-def naive_bayes_classify(
-    train: DataFrame,
-    test: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    label_col: str = "label",
-) -> DataFrame:
-    """(doc_id, pred, true_label, score_micro, correct) — MULTINOMIAL
-    NAIVE BAYES text classification (add-one smoothing), train and
-    score in one job: the bread-and-butter language/domain/quality
-    router for corpus pipelines. Scoring uses track_nll's micro-nat
-    scheme: every log-likelihood term is quantized FIRST —
-    qlp(c,w) = round((ln(n_cw + 1) − ln(n_c + V))·1e6) int64 from
-    exact integer counts — so per-document scores are order-free
-    integer sums and the argmax (score DESC, class ASC pinned) is
-    hash-stable cross-engine. Out-of-vocabulary test tokens are
-    ignored (standard multinomial NB practice).
-
-    Scale: training is two combinable rollups; the (vocab × classes)
-    likelihood table is a broadcast dimension; scoring is one explode +
-    one broadcast join + one combinable (doc, class) rollup — the
-    corpus never shuffles by itself."""
-    tr_tok = train.select(
-        F.col(label_col).alias("c"),
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w"),
-    ).filter(F.col("w") != "")
-    cw = tr_tok.groupBy("c", "w").agg(F.count(F.lit(1)).alias("n_cw"))
-    ctot = cw.groupBy("c").agg(F.sum("n_cw").alias("n_c"))
-    vocab = cw.select("w").distinct()
-    v_size = vocab.agg(F.count(F.lit(1)).alias("v")).select("v")
-    # (class, word) likelihood grid including zero counts
-    grid = (
-        vocab.crossJoin(F.broadcast(ctot))
-        .join(cw, ["c", "w"], "left")
-        .crossJoin(F.broadcast(v_size))
-        .select(
-            "c",
-            "w",
-            F.round(
-                (
-                    F.log(F.coalesce(F.col("n_cw"), F.lit(0)) + 1)
-                    - F.log(F.col("n_c") + F.col("v"))
-                )
-                * NB_MICRO
-            )
-            .cast("long")
-            .alias("qlp"),
-        )
-    )
-    n_docs = train.agg(F.count(F.lit(1)).alias("nd")).select("nd")
-    prior = (
-        train.groupBy(F.col(label_col).alias("c"))
-        .agg(F.count(F.lit(1)).alias("dc"))
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "c",
-            F.round((F.log(F.col("dc")) - F.log(F.col("nd"))) * NB_MICRO)
-            .cast("long")
-            .alias("qpr"),
-        )
-    )
-    te_tok = (
-        test.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(label_col).alias("true_label"),
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .groupBy("doc_id", "true_label", "w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    like = (
-        te_tok.join(F.broadcast(grid), "w")
-        .groupBy("doc_id", "c")
-        .agg(F.sum(F.col("cnt") * F.col("qlp")).alias("like"))
-    )
-    # every (test doc × class) scores — an OOV-only document falls back
-    # to the prior instead of silently dropping out
-    base = (
-        test.select(
-            F.col(id_col).alias("doc_id"), F.col(label_col).alias("true_label")
-        )
-        .distinct()
-        .crossJoin(F.broadcast(prior))
-    )
-    scored = base.join(like, ["doc_id", "c"], "left").select(
-        "doc_id",
-        "true_label",
-        "c",
-        (F.coalesce(F.col("like"), F.lit(0)) + F.col("qpr"))
-        .cast("long")
-        .alias("score"),
-    )
-    # argmax pinned by (score DESC, class ASC) == min over (-score, c)
-    best = scored.groupBy("doc_id").agg(
-        F.first("true_label").alias("true_label"),
-        F.min(F.struct((-F.col("score")).alias("ns"), F.col("c").alias("c"))).alias(
-            "top"
-        ),
-    )
-    return best.select(
-        "doc_id",
-        F.col("top.c").alias("pred"),
-        "true_label",
-        (-F.col("top.ns")).cast("long").alias("score_micro"),
-        (F.col("top.c") == F.col("true_label")).alias("correct"),
-    )
-
-
-def naive_bayes_classify_sql(train_cte: str, test_cte: str) -> str:
-    """DuckDB twin of naive_bayes_classify. CTEs -> (doc_id, text,
-    label)."""
-    return f"""
-WITH nb_tr AS (SELECT doc_id, text, label FROM ({train_cte})),
-nb_te AS (SELECT doc_id, text, label FROM ({test_cte})),
-nb_trt AS (
-  SELECT label AS c, w FROM (
-    SELECT label, unnest(regexp_split_to_array(lower(text), '\\s+')) AS w
-    FROM nb_tr
-  ) WHERE w <> ''
-),
-nb_cw AS (SELECT c, w, COUNT(*) AS n_cw FROM nb_trt GROUP BY 1, 2),
-nb_ct AS (SELECT c, SUM(n_cw) AS n_c FROM nb_cw GROUP BY 1),
-nb_v AS (SELECT DISTINCT w FROM nb_cw),
-nb_vs AS (SELECT COUNT(*) AS v FROM nb_v),
-nb_grid AS (
-  SELECT t.c, v.w,
-         CAST(round((ln(COALESCE(cw.n_cw, 0) + 1) - ln(t.n_c + s.v))
-                    * {NB_MICRO}) AS BIGINT) AS qlp
-  FROM nb_v v CROSS JOIN nb_ct t CROSS JOIN nb_vs s
-  LEFT JOIN nb_cw cw ON cw.c = t.c AND cw.w = v.w
-),
-nb_nd AS (SELECT COUNT(*) AS nd FROM nb_tr),
-nb_pr AS (
-  SELECT label AS c,
-         CAST(round((ln(COUNT(*)) - ln(MIN(d.nd))) * {NB_MICRO}) AS BIGINT)
-           AS qpr
-  FROM nb_tr CROSS JOIN nb_nd d GROUP BY 1
-),
-nb_tet AS (
-  SELECT doc_id, true_label, w, COUNT(*) AS cnt FROM (
-    SELECT doc_id, label AS true_label,
-           unnest(regexp_split_to_array(lower(text), '\\s+')) AS w
-    FROM nb_te
-  ) WHERE w <> '' GROUP BY 1, 2, 3
-),
-nb_like AS (
-  SELECT t.doc_id, g.c, SUM(t.cnt * g.qlp) AS lk
-  FROM nb_tet t JOIN nb_grid g USING (w)
-  GROUP BY 1, 2
-),
-nb_sc AS (
-  SELECT b.doc_id, b.true_label, p.c,
-         CAST(COALESCE(l.lk, 0) + p.qpr AS BIGINT) AS score
-  FROM (SELECT DISTINCT doc_id, label AS true_label FROM nb_te) b
-  CROSS JOIN nb_pr p
-  LEFT JOIN nb_like l ON l.doc_id = b.doc_id AND l.c = p.c
-),
-nb_rk AS (
-  SELECT doc_id, true_label, c, score,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY score DESC, c ASC) AS rk
-  FROM nb_sc
-)
-SELECT doc_id, c AS pred, true_label,
-       CAST(score AS BIGINT) AS score_micro,
-       c = true_label AS correct
-FROM nb_rk WHERE rk = 1
-"""
-
-
-def _stump_winners(rows: DataFrame) -> DataFrame:
-    """Per-feature exact best stump over (id, feat, x, y) rows — the
-    stump_train core, kept id-agnostic (see stump_train for the
-    collapsed-prefix-scan derivation)."""
-    g = rows.groupBy("feat", "x").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")
-    )
-    w = (
-        Window.partitionBy("feat")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("feat").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = g.select(
-        "feat",
-        "x",
-        F.sum("pos").over(w).alias("cpos"),
-        (F.sum("cnt").over(w) - F.sum("pos").over(w)).alias("cneg"),
-        F.sum("pos").over(wall).alias("p_all"),
-        (F.sum("cnt").over(wall) - F.sum("pos").over(wall)).alias("n_neg"),
-        F.sum("cnt").over(wall).alias("n"),
-    )
-    both = cum.select(
-        "feat",
-        "x",
-        "n",
-        (F.col("cpos") + F.col("n_neg") - F.col("cneg")).alias("err0"),
-        (F.col("cneg") + F.col("p_all") - F.col("cpos")).alias("err1"),
-    )
-    cand = both.select(
-        "feat", "n",
-        F.struct(
-            F.col("err0").alias("errors"),
-            F.lit(0).cast("long").alias("polarity"),
-            F.col("x").alias("best_t"),
-        ).alias("c"),
-    ).unionByName(
-        both.select(
-            "feat", "n",
-            F.struct(
-                F.col("err1").alias("errors"),
-                F.lit(1).cast("long").alias("polarity"),
-                F.col("x").alias("best_t"),
-            ).alias("c"),
-        )
-    )
-    return cand.groupBy("feat", "n").agg(F.min("c").alias("best")).select(
-        "feat",
-        F.col("best.errors").alias("errors"),
-        F.col("best.polarity").alias("polarity"),
-        F.col("best.best_t").alias("best_t"),
-        "n",
-    )
-
-
-def tree_depth2_train(
-    df: DataFrame,
-    id_col: str = "id",
-    feat_col: str = "feat",
-    x_col: str = "x",
-    label_col: str = "label",
-) -> DataFrame:
-    """(node, feat, best_t, polarity, errors, n) — EXACT DEPTH-2
-    DECISION TREE training: the globally best stump splits the data,
-    then each branch trains its own best stump — the smallest "real"
-    tree, fully exact (every candidate threshold of every feature
-    evaluated by integer error counts; argmins pinned by
-    (errors, feat, polarity, t)). The interpretable-rule miner for
-    data-quality triage ("which two thresholds explain the label?").
-
-    node ∈ {'root', 'L', 'R'}: L is the branch with root-feature
-    x ≤ best_t, R the rest. A branch node's errors are WITHIN-branch
-    stump errors, so tree training error = err_L + err_R; an empty
-    branch emits no row. Input is long-form (id, feat, x, label) with
-    integer x (quantize upstream) and dense features per id.
-
-    Scale: three collapsed prefix scans (root, L, R) + one broadcast
-    of the winning rule to split ids — never a row² anything; the
-    collapsed table is bounded by distinct values per feature."""
-    rows = df.select(
-        F.col(id_col).alias("id"),
-        F.col(feat_col).alias("feat"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(label_col).cast("long").alias("y"),
-    ).localCheckpoint(eager=False)
-    root = (
-        _stump_winners(rows)
-        .select(
-            F.min(
-                F.struct(
-                    F.col("errors"),
-                    F.col("feat"),
-                    F.col("polarity"),
-                    F.col("best_t"),
-                    F.col("n"),
-                )
-            ).alias("r")
-        )
-        .select(
-            F.col("r.feat").alias("feat"),
-            F.col("r.best_t").alias("best_t"),
-            F.col("r.polarity").alias("polarity"),
-            F.col("r.errors").alias("errors"),
-            F.col("r.n").alias("n"),
-        )
-    )
-    side = (
-        rows.join(
-            F.broadcast(
-                root.select(
-                    F.col("feat").alias("_rf"), F.col("best_t").alias("_rt")
-                )
-            ),
-            rows["feat"] == F.col("_rf"),
-        )
-        .select("id", (F.col("x") <= F.col("_rt")).alias("_left"))
-    )
-    branched = rows.join(side, "id")
-    left = branched.filter(F.col("_left")).drop("_left")
-    right = branched.filter(~F.col("_left")).drop("_left")
-
-    def node_row(src: DataFrame, name: str) -> DataFrame:
-        return (
-            _stump_winners(src)
-            .select(
-                F.min(
-                    F.struct("errors", "feat", "polarity", "best_t", "n")
-                ).alias("r")
-            )
-            .select(
-                F.lit(name).alias("node"),
-                F.col("r.feat").alias("feat"),
-                F.col("r.best_t").alias("best_t"),
-                F.col("r.polarity").alias("polarity"),
-                F.col("r.errors").alias("errors"),
-                F.col("r.n").alias("n"),
-            )
-            .filter(F.col("feat").isNotNull())
-        )
-
-    out = root.select(
-        F.lit("root").alias("node"), "feat", "best_t", "polarity", "errors", "n"
-    )
-    return out.unionByName(node_row(left, "L")).unionByName(node_row(right, "R"))
-
-
-def _stump_block_sql(p: str, rows_cte: str) -> str:
-    """CTE block (prefixed ``p``) computing per-feature stump winners
-    for ``rows_cte`` -> (id, feat, x, y); exposes {p}win."""
-    return f"""{p}src AS (
-  SELECT id, feat, CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y
-  FROM ({rows_cte})
-),
-{p}g AS (
-  SELECT feat, x, CAST(count(*) AS BIGINT) AS cnt,
-         CAST(sum(y) AS BIGINT) AS pos
-  FROM {p}src GROUP BY 1, 2
-),
-{p}cum AS (
-  SELECT feat, x,
-         CAST(sum(pos) OVER pw AS BIGINT) AS cpos,
-         CAST(sum(cnt) OVER pw - sum(pos) OVER pw AS BIGINT) AS cneg,
-         CAST(sum(pos) OVER fw AS BIGINT) AS p_all,
-         CAST(sum(cnt) OVER fw - sum(pos) OVER fw AS BIGINT) AS n_neg,
-         CAST(sum(cnt) OVER fw AS BIGINT) AS n
-  FROM {p}g
-  WINDOW pw AS (PARTITION BY feat ORDER BY x
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         fw AS (PARTITION BY feat)
-),
-{p}cand AS (
-  SELECT feat, n, cpos + n_neg - cneg AS errors,
-         CAST(0 AS BIGINT) AS polarity, x
-  FROM {p}cum
-  UNION ALL
-  SELECT feat, n, cneg + p_all - cpos,
-         CAST(1 AS BIGINT), x
-  FROM {p}cum
-),
-{p}win AS (
-  SELECT feat, errors, polarity, x AS best_t, n
-  FROM (
-    SELECT *, row_number() OVER (PARTITION BY feat
-             ORDER BY errors, polarity, x) AS rk
-    FROM {p}cand
-  ) WHERE rk = 1
-)"""
-
-
-def tree_depth2_train_sql(rows_cte: str) -> str:
-    """DuckDB twin of tree_depth2_train. ``rows_cte`` ->
-    (id, feat, x, label)."""
-    base = f"SELECT id, feat, x, label AS y FROM ({rows_cte})"
-    rt = _stump_block_sql("t2r_", base)
-    left_rows = """
-SELECT s.id, s.feat, s.x, s.y FROM t2r_src s
-JOIN (SELECT id FROM t2r_src s2 JOIN t2_root r ON s2.feat = r.feat
-      WHERE s2.x <= r.best_t) lid USING (id)
-"""
-    right_rows = """
-SELECT s.id, s.feat, s.x, s.y FROM t2r_src s
-JOIN (SELECT id FROM t2r_src s2 JOIN t2_root r ON s2.feat = r.feat
-      WHERE s2.x > r.best_t) rid USING (id)
-"""
-    lf = _stump_block_sql("t2l_", "SELECT id, feat, x, y FROM t2_lrows")
-    rg = _stump_block_sql("t2g_", "SELECT id, feat, x, y FROM t2_rrows")
-    return f"""
-WITH {rt},
-t2_root AS (
-  SELECT feat, best_t, polarity, errors, n
-  FROM (SELECT *, row_number() OVER (
-          ORDER BY errors, feat, polarity, best_t) AS rk FROM t2r_win)
-  WHERE rk = 1
-),
-t2_lrows AS MATERIALIZED ({left_rows}),
-t2_rrows AS MATERIALIZED ({right_rows}),
-{lf},
-t2_lbest AS (
-  SELECT feat, best_t, polarity, errors, n
-  FROM (SELECT *, row_number() OVER (
-          ORDER BY errors, feat, polarity, best_t) AS rk FROM t2l_win)
-  WHERE rk = 1
-),
-{rg},
-t2_rbest AS (
-  SELECT feat, best_t, polarity, errors, n
-  FROM (SELECT *, row_number() OVER (
-          ORDER BY errors, feat, polarity, best_t) AS rk FROM t2g_win)
-  WHERE rk = 1
-)
-SELECT 'root' AS node, feat, best_t, polarity, errors, n FROM t2_root
-UNION ALL
-SELECT 'L', feat, best_t, polarity, errors, n FROM t2_lbest
-UNION ALL
-SELECT 'R', feat, best_t, polarity, errors, n FROM t2_rbest
-"""
-
-
-def allan_variance(
-    series: DataFrame,
-    taus: tuple[int, ...] = (4, 8, 16, 32),
-    group_col: str = "g",
-    order_cols: tuple[str, ...] = ("t",),
-    value_col: str = "x",
-) -> DataFrame:
-    """(g, tau, m_blocks, avar_num, avar_den) — ALLAN VARIANCE per
-    averaging time τ (the oscillator/sensor-stability ladder: white
-    noise slopes −1, random walk +1, bias instability flattens), the
-    drift diagnostic for clock/IMU/telemetry fleets. For block means
-    ȳ_i over consecutive τ-sample blocks,
-
-        AVAR(τ) = Σ_i (ȳ_{i+1} − ȳ_i)² / (2(M−1))
-                = Σ_i (s_{i+1} − s_i)² / (2(M−1)τ²)
-
-    with s_i the exact int64 block SUMS — so the statistic is the
-    exact integer rational (avar_num, avar_den) = (Σ(Δs)², 2(M−1)τ²).
-    Values must be integers (quantize upstream); partial trailing
-    blocks are dropped; groups with M < 2 blocks at a τ emit no row.
-
-    Scale: per τ one combinable block rollup + one lag window over
-    block sums (M rows per group, not samples). Overflow:
-    (Δs)²·M < 2^63 — at |x| ≤ 10⁶, τ ≤ 64 that allows ~10⁶ blocks."""
-    w0 = Window.partitionBy("g").orderBy(*[F.col(c) for c in order_cols])
-    base = series.select(
-        F.col(group_col).alias("g"),
-        *[F.col(c) for c in order_cols],
-        F.col(value_col).cast("long").alias("x"),
-    ).withColumn("idx", F.row_number().over(w0).cast("long") - 1)
-    base = base.localCheckpoint(eager=False)
-    out = None
-    for tau in taus:
-        blocks = (
-            base.select("g", (F.col("idx") / tau).cast("long").alias("b"), "x")
-            .groupBy("g", "b")
-            .agg(F.count(F.lit(1)).alias("_n"), F.sum("x").alias("s"))
-            .filter(F.col("_n") == tau)
-        )
-        wb = Window.partitionBy("g").orderBy("b")
-        d = blocks.select(
-            "g", "b", (F.col("s") - F.lag("s", 1).over(wb)).alias("ds")
-        ).filter(F.col("ds").isNotNull())
-        agg = d.groupBy("g").agg(
-            (F.count(F.lit(1)) + 1).cast("long").alias("m_blocks"),
-            F.sum(F.col("ds") * F.col("ds")).cast("long").alias("num"),
-        ).filter(F.col("m_blocks") >= 2)
-        r = agg.select(
-            "g",
-            F.lit(tau).cast("long").alias("tau"),
-            "m_blocks",
-            F.col("num").alias("avar_num"),
-            (2 * (F.col("m_blocks") - 1) * tau * tau).cast("long").alias(
-                "avar_den"
-            ),
-        )
-        out = r if out is None else out.unionByName(r)
-    return out
-
-
-def allan_variance_sql(
-    series_cte: str,
-    taus: tuple[int, ...] = (4, 8, 16, 32),
-    order_by: str = "t",
-) -> str:
-    """DuckDB twin of allan_variance. ``series_cte`` -> (g, <order>, x)."""
-    blocks = []
-    for tau in taus:
-        blocks.append(
-            f"""
-SELECT g, CAST({tau} AS BIGINT) AS tau,
-       CAST(COUNT(*) + 1 AS BIGINT) AS m_blocks,
-       CAST(SUM(ds * ds) AS BIGINT) AS avar_num,
-       CAST(2 * COUNT(*) * {tau} * {tau} AS BIGINT) AS avar_den
-FROM (
-  SELECT g, s - lag(s) OVER (PARTITION BY g ORDER BY b) AS ds
-  FROM (
-    SELECT g, idx // {tau} AS b, COUNT(*) AS n, SUM(x) AS s
-    FROM av_base GROUP BY 1, 2
-  ) WHERE n = {tau}
-) WHERE ds IS NOT NULL
-GROUP BY g HAVING COUNT(*) + 1 >= 2"""
-        )
-    union = " UNION ALL ".join(blocks)
-    return f"""
-WITH av_src AS ({series_cte}),
-av_base AS (
-  SELECT g, CAST(x AS BIGINT) AS x,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY {order_by})
-              AS BIGINT) - 1 AS idx
-  FROM av_src
-)
-{union}
-"""
-
-
-BT_SCALE = 1_000_000  # Bradley-Terry strength fixed point
-
-
-def bradley_terry(
-    comps: DataFrame,
-    rounds: int = 6,
-    i_col: str = "i",
-    j_col: str = "j",
-    wins_col: str = "w",
-) -> DataFrame:
-    """(item, strength_micro, wins, matches) — BRADLEY-TERRY pairwise-
-    preference ranking via Hunter's MM iteration in fixed point: the
-    standard way to turn head-to-head outcomes (LLM eval preferences,
-    A/B duels, match results) into a single strength scale,
-
-        s_i ← (W_i · S²) DIV Σ_j (n_ij · S²) DIV (s_i + s_j)
-
-    with W_i = total wins, n_ij = games between i and j, all int64
-    with truncating division on positives — each round is a pure
-    function of the comparison table (bit-equal unrolled twin); init
-    s = S. Items with zero wins sink toward 0, undefeated items grow —
-    run enough matches per item (the classic BT identifiability
-    caveat, documented not patched). ``comps`` rows are directed:
-    (i, j, wins of i over j); provide both directions or zeros are
-    assumed.
-
-    Overflow envelope: the MM numerators form nij · S² = nij · 10¹²
-    in int64, so the operator requires n_ij < ~9.2e6 games per
-    directed pair (and likewise W_i < ~9.2e6 total wins per item).
-    Past that Spark wraps silently while DuckDB raises; pre-aggregate
-    or downsample match counts before fitting beyond the bound.
-
-    Scale: per round one symmetrized join of the (item, strength)
-    vector against the pair table + two combinable rollups — the pair
-    table is |items|²-bounded (league metadata, not corpus data)."""
-    d = comps.select(
-        F.col(i_col).alias("i"),
-        F.col(j_col).alias("j"),
-        F.col(wins_col).cast("long").alias("w"),
-    )
-    sym = d.unionByName(
-        d.select(
-            F.col("j").alias("i"), F.col("i").alias("j"),
-            F.lit(0).cast("long").alias("w"),
-        )
-    )
-    pair = (
-        sym.groupBy("i", "j")
-        .agg(F.sum("w").alias("wij"))
-        .localCheckpoint(eager=False)
-    )
-    n_ij = (
-        pair.alias("x")
-        .join(
-            pair.select(
-                F.col("i").alias("j"), F.col("j").alias("i"),
-                F.col("wij").alias("wji"),
-            ),
-            ["i", "j"],
-        )
-        .select("i", "j", "wij", (F.col("wij") + F.col("wji")).alias("nij"))
-        .localCheckpoint(eager=False)
-    )
-    wins = n_ij.groupBy("i").agg(
-        F.sum("wij").cast("long").alias("wins"),
-        F.sum("nij").cast("long").alias("matches"),
-    )
-    s = wins.select("i", F.lit(BT_SCALE).cast("long").alias("s"))
-    for _ in range(rounds):
-        sj = s.select(F.col("i").alias("j"), F.col("s").alias("s_j"))
-        t = (
-            n_ij.join(s, "i")
-            .join(sj, "j")
-            .select(
-                "i",
-                F.expr(
-                    f"CAST(nij * {BT_SCALE} * {BT_SCALE} DIV (s + s_j)"
-                    " AS BIGINT)"
-                ).alias("t"),
-            )
-            .groupBy("i")
-            .agg(F.sum("t").alias("tsum"))
-        )
-        s = (
-            wins.join(t, "i")
-            .select(
-                "i",
-                F.when(
-                    F.col("tsum") > 0,
-                    F.expr(
-                        f"CAST(wins * {BT_SCALE} * {BT_SCALE} DIV tsum"
-                        " AS BIGINT)"
-                    ),
-                )
-                .otherwise(F.lit(BT_SCALE))
-                .alias("s"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return (
-        s.join(wins, "i")
-        .select(
-            F.col("i").alias("item"),
-            F.col("s").alias("strength_micro"),
-            "wins",
-            "matches",
-        )
-    )
-
-
-def bradley_terry_sql(comps_cte: str, rounds: int = 6) -> str:
-    """DuckDB twin of bradley_terry — identical symmetrization and
-    unrolled MM rounds. ``comps_cte`` -> (i, j, w)."""
-    parts = [
-        f"""bt_d AS (SELECT i, j, CAST(w AS BIGINT) AS w FROM ({comps_cte})),
-bt_pair AS MATERIALIZED (
-  SELECT i, j, SUM(w) AS wij FROM (
-    SELECT i, j, w FROM bt_d
-    UNION ALL SELECT j, i, CAST(0 AS BIGINT) FROM bt_d
-  ) GROUP BY 1, 2
-),
-bt_n AS MATERIALIZED (
-  SELECT x.i, x.j, x.wij, x.wij + y.wij AS nij
-  FROM bt_pair x JOIN bt_pair y ON y.i = x.j AND y.j = x.i
-),
-bt_w AS MATERIALIZED (
-  SELECT i, CAST(SUM(wij) AS BIGINT) AS wins,
-         CAST(SUM(nij) AS BIGINT) AS matches
-  FROM bt_n GROUP BY 1
-),
-bt_s0 AS MATERIALIZED (SELECT i, CAST({BT_SCALE} AS BIGINT) AS s FROM bt_w)"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f"""bt_s{r} AS MATERIALIZED (
-  SELECT w.i,
-         CASE WHEN t.tsum > 0
-              THEN CAST(w.wins * {BT_SCALE} * {BT_SCALE} // t.tsum AS BIGINT)
-              ELSE CAST({BT_SCALE} AS BIGINT) END AS s
-  FROM bt_w w
-  JOIN (
-    SELECT n.i,
-           SUM(CAST(n.nij * {BT_SCALE} * {BT_SCALE} // (si.s + sj.s)
-               AS BIGINT)) AS tsum
-    FROM bt_n n
-    JOIN bt_s{r - 1} si ON si.i = n.i
-    JOIN bt_s{r - 1} sj ON sj.i = n.j
-    GROUP BY 1
-  ) t ON t.i = w.i
-)"""
-        )
-    body = ",\n".join(parts)
-    return f"""WITH {body}
-SELECT s.i AS item, s.s AS strength_micro, w.wins, w.matches
-FROM bt_s{rounds} s JOIN bt_w w USING (i)
-"""
-
-
-def seasonal_anomaly(
-    series: DataFrame,
-    k_num: int = 5,
-    k_den: int = 1,
-    group_col: str = "g",
-    slot_col: str = "slot",
-    t_col: str = "t",
-    value_col: str = "x",
-) -> DataFrame:
-    """(g, slot, t, x, med, mad, flagged) — SEASONAL ANOMALY detection
-    by per-slot robust location/scale (the seasonal-ESD/median-MAD
-    hybrid every metrics pipeline runs): each observation is compared
-    against the exact type-1 MEDIAN and MAD of ITS OWN seasonal slot
-    (hour-of-day, day-of-week...), flagged when
-
-        k_den · |x − med|  >  k_num · max(mad, 1)
-
-    — a pure integer cross-multiplied gate (default 5·MAD), immune to
-    the mean/σ masking that z-scores suffer under heavy outliers.
-    Medians are the exact lower-median order statistic (rank
-    ⌈n/2⌉ under (value, t) ordering), MAD the same statistic over
-    |x − med| — both deterministic, no interpolation.
-
-    Scale: two rank windows per (g, slot) partition (seasonal slots
-    bound partition width — never a global window) + one broadcast-
-    shaped join back; scan-shaped otherwise."""
-    rows = series.select(
-        F.col(group_col).alias("g"),
-        F.col(slot_col).cast("long").alias("slot"),
-        F.col(t_col).cast("long").alias("t"),
-        F.col(value_col).cast("long").alias("x"),
-    )
-    w = Window.partitionBy("g", "slot").orderBy("x", "t")
-    cnt = Window.partitionBy("g", "slot")
-    med = (
-        rows.select(
-            "g", "slot", "x",
-            F.row_number().over(w).alias("_r"),
-            F.count(F.lit(1)).over(cnt).alias("_n"),
-        )
-        .filter(F.col("_r") == F.ceil(F.col("_n") / 2).cast("int"))
-        .select("g", "slot", F.col("x").alias("med"))
-    )
-    dev = rows.join(med, ["g", "slot"]).select(
-        "g", "slot", "t", "x", "med", F.abs(F.col("x") - F.col("med")).alias("_d")
-    )
-    wd = Window.partitionBy("g", "slot").orderBy("_d", "t")
-    mad = (
-        dev.select(
-            "g", "slot", "_d",
-            F.row_number().over(wd).alias("_r"),
-            F.count(F.lit(1)).over(cnt).alias("_n"),
-        )
-        .filter(F.col("_r") == F.ceil(F.col("_n") / 2).cast("int"))
-        .select("g", "slot", F.col("_d").alias("mad"))
-    )
-    out = dev.join(mad, ["g", "slot"]).select(
-        "g", "slot", "t", "x", "med", "mad",
-        (
-            F.lit(k_den) * F.abs(F.col("x") - F.col("med"))
-            > F.lit(k_num) * F.greatest(F.col("mad"), F.lit(1))
-        ).alias("flagged"),
-    )
-    return out
-
-
-def seasonal_anomaly_sql(
-    series_cte: str, k_num: int = 5, k_den: int = 1
-) -> str:
-    """DuckDB twin of seasonal_anomaly. ``series_cte`` ->
-    (g, slot, t, x)."""
-    return f"""
-WITH sa_src AS (
-  SELECT g, CAST(slot AS BIGINT) AS slot, CAST(t AS BIGINT) AS t,
-         CAST(x AS BIGINT) AS x
-  FROM ({series_cte})
-),
-sa_med AS (
-  SELECT g, slot, x AS med FROM (
-    SELECT g, slot, x,
-           row_number() OVER (PARTITION BY g, slot ORDER BY x, t) AS _r,
-           COUNT(*) OVER (PARTITION BY g, slot) AS _n
-    FROM sa_src
-  ) WHERE _r = CAST(ceil(_n / 2.0) AS INTEGER)
-),
-sa_dev AS (
-  SELECT s.g, s.slot, s.t, s.x, m.med, abs(s.x - m.med) AS _d
-  FROM sa_src s JOIN sa_med m USING (g, slot)
-),
-sa_mad AS (
-  SELECT g, slot, _d AS mad FROM (
-    SELECT g, slot, _d,
-           row_number() OVER (PARTITION BY g, slot ORDER BY _d, t) AS _r,
-           COUNT(*) OVER (PARTITION BY g, slot) AS _n
-    FROM sa_dev
-  ) WHERE _r = CAST(ceil(_n / 2.0) AS INTEGER)
-),
-sa_out AS (
-  SELECT d.g, d.slot, d.t, d.x, d.med, a.mad,
-         {k_den} * abs(d.x - d.med) > {k_num} * GREATEST(a.mad, 1) AS flagged
-  FROM sa_dev d JOIN sa_mad a USING (g, slot)
-)
-SELECT * FROM sa_out
-"""
-
-
-def t_closeness(
-    rows: DataFrame,
-    t_num: int = 1,
-    t_den: int = 5,
-    cell_col: str = "cell",
-    value_col: str = "v",
-) -> DataFrame:
-    """(cell, n_c, m, emd_num, emd_den, breach) — T-CLOSENESS audit
-    (Li-Li-Venkatasubramanian 2007), the distributional strengthening
-    of k-anonymity/l-diversity already in the engine: an anonymity
-    cell breaches when the 1-D EARTH MOVER'S DISTANCE between its
-    sensitive-value distribution and the global one exceeds t. For the
-    ordered numeric domain with m distinct global values,
-
-        EMD = (1/(m−1)) · Σ_j |cum_c(j)·n − cum_g(j)·n_c| / (n_c·n)
-
-    — reported as the exact integer rational (emd_num, emd_den) with
-    breach = emd_num·t_den > t_num·emd_den (cross-multiplied, no
-    floats). Quantize the sensitive attribute upstream; m (the
-    distinct-value domain) is the cost knob.
-
-    Scale: one global value rollup (m rows, broadcast), one
-    (cell, value) rollup, the cells × m grid via broadcast cross join
-    + a per-cell cumulative window over m rows — the grid is
-    |cells|·m, audit metadata, not the corpus."""
-    r = rows.select(
-        F.col(cell_col).alias("cell"), F.col(value_col).cast("long").alias("v")
-    )
-    gv = r.groupBy("v").agg(F.count(F.lit(1)).alias("gc"))
-    tot = r.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("v").alias("m"),
-    )
-    cv = r.groupBy("cell", "v").agg(F.count(F.lit(1)).alias("cc"))
-    nc = cv.groupBy("cell").agg(F.sum("cc").alias("n_c"))
-    grid = (
-        nc.crossJoin(F.broadcast(gv))
-        .join(cv, ["cell", "v"], "left")
-        .select(
-            "cell", "n_c", "v", "gc",
-            F.coalesce(F.col("cc"), F.lit(0)).alias("cc"),
-        )
-    )
-    w = Window.partitionBy("cell").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grid.select(
-        "cell", "n_c", "v",
-        F.sum("cc").over(w).alias("cum_c"),
-        F.sum("gc").over(w).alias("cum_g"),
-    )
-    agg = (
-        cum.crossJoin(F.broadcast(tot))
-        .select(
-            "cell", "n_c",
-            F.abs(
-                F.col("cum_c") * F.col("n") - F.col("cum_g") * F.col("n_c")
-            ).alias("term"),
-            "n", "m",
-        )
-        .groupBy("cell", "n_c", "n", "m")
-        .agg(F.sum("term").cast("long").alias("emd_num"))
-    )
-    return agg.select(
-        "cell",
-        F.col("n_c").cast("long").alias("n_c"),
-        F.col("m").cast("long").alias("m"),
-        "emd_num",
-        (F.col("n_c") * F.col("n") * F.greatest(F.col("m") - 1, F.lit(1)))
-        .cast("long")
-        .alias("emd_den"),
-        (
-            F.col("emd_num") * t_den
-            > F.lit(t_num)
-            * F.col("n_c")
-            * F.col("n")
-            * F.greatest(F.col("m") - 1, F.lit(1))
-        ).alias("breach"),
-    )
-
-
-def t_closeness_sql(rows_cte: str, t_num: int = 1, t_den: int = 5) -> str:
-    """DuckDB twin of t_closeness. ``rows_cte`` -> (cell, v)."""
-    return f"""
-WITH tc_r AS (
-  SELECT cell, CAST(v AS BIGINT) AS v FROM ({rows_cte})
-),
-tc_gv AS (SELECT v, COUNT(*) AS gc FROM tc_r GROUP BY 1),
-tc_tot AS (SELECT COUNT(*) AS n, COUNT(DISTINCT v) AS m FROM tc_r),
-tc_cv AS (SELECT cell, v, COUNT(*) AS cc FROM tc_r GROUP BY 1, 2),
-tc_nc AS (SELECT cell, SUM(cc) AS n_c FROM tc_cv GROUP BY 1),
-tc_grid AS (
-  SELECT c.cell, c.n_c, g.v, g.gc, COALESCE(x.cc, 0) AS cc
-  FROM tc_nc c CROSS JOIN tc_gv g
-  LEFT JOIN tc_cv x ON x.cell = c.cell AND x.v = g.v
-),
-tc_cum AS (
-  SELECT cell, n_c, v,
-         SUM(cc) OVER (PARTITION BY cell ORDER BY v
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_c,
-         SUM(gc) OVER (PARTITION BY cell ORDER BY v
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_g
-  FROM tc_grid
-),
-tc_agg AS (
-  SELECT c.cell, c.n_c, t.n, t.m,
-         CAST(SUM(abs(c.cum_c * t.n - c.cum_g * c.n_c)) AS BIGINT) AS emd_num
-  FROM tc_cum c CROSS JOIN tc_tot t
-  GROUP BY 1, 2, 3, 4
-)
-SELECT cell, CAST(n_c AS BIGINT) AS n_c, CAST(m AS BIGINT) AS m, emd_num,
-       CAST(n_c * n * GREATEST(m - 1, 1) AS BIGINT) AS emd_den,
-       emd_num * {t_den} > {t_num} * n_c * n * GREATEST(m - 1, 1) AS breach
-FROM tc_agg
-"""
-
-
-def item_cf_neighbors(
-    events: DataFrame,
-    k: int = 5,
-    user_col: str = "user",
-    item_col: str = "item",
-) -> DataFrame:
-    """(item, nbr, co, n_item, n_nbr, rank) — ITEM-BASED COLLABORATIVE
-    FILTERING neighbors (Sarwar et al. 2001, the workhorse of
-    "customers also bought"): for each item the top-k other items by
-    cosine over binary user-item co-occurrence,
-
-        cos(i, j) = co_ij / √(n_i · n_j)
-
-    ranked float-free: neighbors sort by the integer quotient
-    q = co² · 10⁶ DIV (n_i · n_j) (monotone in cos², truncating —
-    deterministic cross-engine) with (q DESC, nbr ASC) pinning ties;
-    near-equal cosines that land on the same quotient resolve by
-    neighbor id — the documented tie rule, identical in the twin.
-
-    Overflow envelope: q is assembled by split division
-    (co² DIV d)·10⁶ + ((co² mod d)·10⁶) DIV d with d = n_i·n_j —
-    exactly co²·10⁶ DIV d, but int64-safe for co < ~3.0e9
-    co-occurrences and d < ~9.2e12 (vs co < ~3.0e6 for the naive
-    co²·10⁶ product). Past those bounds Spark wraps silently while
-    DuckDB raises — keep |users| per item pair inside the envelope.
-
-    Scale: co-occurrence via the user-keyed self-join restricted to
-    i < j (classic Σ basket² — cap basket size upstream for
-    power users, as basket/covisitation do), then one combinable
-    rollup + a per-item window over the item's neighbor list."""
-    ui = events.select(
-        F.col(user_col).alias("u"), F.col(item_col).alias("i")
-    ).distinct().localCheckpoint(eager=False)
-    ni = ui.groupBy("i").agg(F.count(F.lit(1)).alias("n"))
-    a = ui.select("u", F.col("i").alias("ia"))
-    b = ui.select("u", F.col("i").alias("ib"))
-    co = (
-        a.join(b, "u")
-        .filter(F.col("ia") < F.col("ib"))
-        .groupBy("ia", "ib")
-        .agg(F.count(F.lit(1)).alias("co"))
-    )
-    both = co.unionByName(
-        co.select(
-            F.col("ib").alias("ia"), F.col("ia").alias("ib"), "co"
-        )
-    )
-    scored = (
-        both.join(ni.select(F.col("i").alias("ia"), F.col("n").alias("n_item")), "ia")
-        .join(ni.select(F.col("i").alias("ib"), F.col("n").alias("n_nbr")), "ib")
-        .select(
-            F.col("ia").alias("item"),
-            F.col("ib").alias("nbr"),
-            F.col("co").cast("long").alias("co"),
-            F.col("n_item").cast("long").alias("n_item"),
-            F.col("n_nbr").cast("long").alias("n_nbr"),
-            F.expr(
-                "CAST((co * co DIV (n_item * n_nbr)) * 1000000"
-                " + ((co * co % (n_item * n_nbr)) * 1000000)"
-                "   DIV (n_item * n_nbr) AS BIGINT)"
-            ).alias("_q"),
-        )
-    )
-    w = Window.partitionBy("item").orderBy(
-        F.col("_q").desc(), F.col("nbr").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .drop("_q")
-    )
-
-
-def item_cf_neighbors_sql(events_cte: str, k: int = 5) -> str:
-    """DuckDB twin of item_cf_neighbors. ``events_cte`` -> (user, item)."""
-    return f"""
-WITH cf_ui AS (
-  SELECT DISTINCT "user" AS u, item AS i FROM ({events_cte})
-),
-cf_n AS (SELECT i, COUNT(*) AS n FROM cf_ui GROUP BY 1),
-cf_co AS (
-  SELECT a.i AS ia, b.i AS ib, COUNT(*) AS co
-  FROM cf_ui a JOIN cf_ui b ON a.u = b.u AND a.i < b.i
-  GROUP BY 1, 2
-),
-cf_both AS (
-  SELECT ia, ib, co FROM cf_co
-  UNION ALL SELECT ib, ia, co FROM cf_co
-),
-cf_sc AS (
-  SELECT x.ia AS item, x.ib AS nbr, CAST(x.co AS BIGINT) AS co,
-         CAST(na.n AS BIGINT) AS n_item, CAST(nb.n AS BIGINT) AS n_nbr,
-         CAST((x.co * x.co // (na.n * nb.n)) * 1000000
-              + ((x.co * x.co % (na.n * nb.n)) * 1000000)
-                // (na.n * nb.n) AS BIGINT) AS _q
-  FROM cf_both x
-  JOIN cf_n na ON na.i = x.ia
-  JOIN cf_n nb ON nb.i = x.ib
-),
-cf_rk AS (
-  SELECT item, nbr, co, n_item, n_nbr,
-         CAST(row_number() OVER (PARTITION BY item
-              ORDER BY _q DESC, nbr ASC) AS BIGINT) AS rank
-  FROM cf_sc
-)
-SELECT item, nbr, co, n_item, n_nbr, rank FROM cf_rk WHERE rank <= {k}
-"""
-
-
-IPF_SCALE = 1_000_000  # raking weight fixed point
-
-
-def ipf_raking(
-    cells: DataFrame,
-    row_targets: DataFrame,
-    col_targets: DataFrame,
-    rounds: int = 6,
-    r_col: str = "r",
-    c_col: str = "c",
-    n_col: str = "n",
-    target_col: str = "target",
-) -> DataFrame:
-    """(r, c, n, w_micro) — ITERATIVE PROPORTIONAL FITTING / raking
-    (Deming-Stephan 1940): reweight a two-way contingency table so its
-    margins hit external targets — the survey-weighting / census-
-    calibration operator (and the IPF core of gravity OD seeding).
-    Each round rescales rows then columns in fixed point,
-
-        w ← w · (R_r · IPF_SCALE) DIV Σ_c w·n   (then columns)
-
-    applied to the micro-weighted mass w·n — truncating integer
-    division on positives, so every round is a pure function of the
-    inputs and the unrolled twin lands bit-equal. Init w = IPF_SCALE.
-    With matching grand totals IPF converges geometrically; bounded
-    rounds are the product spec either way. Zero-mass rows/columns
-    keep their previous weight (guarded division).
-
-    Scale: the cell table is |rows|×|cols| margin metadata; per round
-    two combinable rollups + two broadcast joins."""
-    base = cells.select(
-        F.col(r_col).alias("r"),
-        F.col(c_col).alias("c"),
-        F.col(n_col).cast("long").alias("n"),
-    ).localCheckpoint(eager=False)
-    rt = row_targets.select(
-        F.col(r_col).alias("r"), F.col(target_col).cast("long").alias("rt")
-    )
-    ct = col_targets.select(
-        F.col(c_col).alias("c"), F.col(target_col).cast("long").alias("ct")
-    )
-    w = base.select("r", "c", "n", F.lit(IPF_SCALE).cast("long").alias("w"))
-    for _ in range(rounds):
-        rs = w.groupBy("r").agg(F.sum(F.col("w") * F.col("n")).alias("mass"))
-        w = (
-            w.join(F.broadcast(rs), "r")
-            .join(F.broadcast(rt), "r")
-            .select(
-                "r", "c", "n",
-                F.when(
-                    F.col("mass") > 0,
-                    F.expr(
-                        f"CAST(w * (rt * {IPF_SCALE}) DIV mass AS BIGINT)"
-                    ),
-                )
-                .otherwise(F.col("w"))
-                .alias("w"),
-            )
-        )
-        cs = w.groupBy("c").agg(F.sum(F.col("w") * F.col("n")).alias("mass"))
-        w = (
-            w.join(F.broadcast(cs), "c")
-            .join(F.broadcast(ct), "c")
-            .select(
-                "r", "c", "n",
-                F.when(
-                    F.col("mass") > 0,
-                    F.expr(
-                        f"CAST(w * (ct * {IPF_SCALE}) DIV mass AS BIGINT)"
-                    ),
-                )
-                .otherwise(F.col("w"))
-                .alias("w"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return w.select("r", "c", "n", F.col("w").alias("w_micro"))
-
-
-def ipf_raking_sql(
-    cells_cte: str,
-    row_targets_cte: str,
-    col_targets_cte: str,
-    rounds: int = 6,
-) -> str:
-    """DuckDB twin of ipf_raking. CTEs -> (r, c, n) / (r, target) /
-    (c, target)."""
-    parts = [
-        f"""ipf_b AS (
-  SELECT r, c, CAST(n AS BIGINT) AS n FROM ({cells_cte})
-),
-ipf_rt AS (SELECT r, CAST(target AS BIGINT) AS rt FROM ({row_targets_cte})),
-ipf_ct AS (SELECT c, CAST(target AS BIGINT) AS ct FROM ({col_targets_cte})),
-ipf_w0 AS MATERIALIZED (
-  SELECT r, c, n, CAST({IPF_SCALE} AS BIGINT) AS w FROM ipf_b
-)"""
-    ]
-    for i in range(1, rounds + 1):
-        parts.append(
-            f"""ipf_r{i} AS MATERIALIZED (
-  SELECT w.r, w.c, w.n,
-         CASE WHEN m.mass > 0
-              THEN CAST(w.w * (t.rt * {IPF_SCALE}) // m.mass AS BIGINT)
-              ELSE w.w END AS w
-  FROM ipf_w{i - 1} w
-  JOIN (SELECT r, SUM(w * n) AS mass FROM ipf_w{i - 1} GROUP BY 1) m
-    USING (r)
-  JOIN ipf_rt t USING (r)
-),
-ipf_w{i} AS MATERIALIZED (
-  SELECT w.r, w.c, w.n,
-         CASE WHEN m.mass > 0
-              THEN CAST(w.w * (t.ct * {IPF_SCALE}) // m.mass AS BIGINT)
-              ELSE w.w END AS w
-  FROM ipf_r{i} w
-  JOIN (SELECT c, SUM(w * n) AS mass FROM ipf_r{i} GROUP BY 1) m
-    USING (c)
-  JOIN ipf_ct t USING (c)
-)"""
-        )
-    body = ",\n".join(parts)
-    return f"""WITH {body}
-SELECT r, c, n, w AS w_micro FROM ipf_w{rounds}
-"""
-
-
-def _sprt_consts(
-    p0_num: int, p0_den: int, p1_num: int, p1_den: int,
-    alpha_num: int = 1, alpha_den: int = 20,
-) -> tuple[int, int, int, int]:
-    """Micro-nat SPRT constants, computed ONCE in Python and shared by
-    both engines (no engine evaluates ln): per-success and per-failure
-    LLR increments, and the Wald bounds for alpha = beta."""
-    import math as _m
-
-    p0 = p0_num / p0_den
-    p1 = p1_num / p1_den
-    a = alpha_num / alpha_den
-    l1 = round(_m.log(p1 / p0) * 1_000_000)
-    l0 = round(_m.log((1 - p1) / (1 - p0)) * 1_000_000)
-    upper = round(_m.log((1 - a) / a) * 1_000_000)
-    return l1, l0, upper, -upper
-
-
-def sprt_decisions(
-    trials: DataFrame,
-    p0: tuple[int, int] = (1, 2),
-    p1: tuple[int, int] = (3, 5),
-    alpha: tuple[int, int] = (1, 20),
-    group_col: str = "g",
-    order_cols: tuple[str, ...] = ("t",),
-    outcome_col: str = "x",
-) -> DataFrame:
-    """(g, n, n_success, decision, cross_n, llr_final_micro) — WALD'S
-    SEQUENTIAL PROBABILITY RATIO TEST per experiment group: the
-    early-stopping A/B monitor (stop the moment the evidence crosses
-    the Wald bounds instead of waiting for a fixed horizon). Bernoulli
-    H0: p = p0 vs H1: p = p1; each trial adds the micro-nat constant
-    L1 (success) or L0 (failure) — both precomputed in Python and
-    embedded as integers, so the running LLR is an exact integer
-    cumulative sum. decision: 'h1' / 'h0' at the FIRST bound crossing
-    (cross_n = that trial index), 'continue' if the walk stays inside.
-
-    Scale: one ordered cumulative window per group + one min-struct
-    rollup for the first crossing — the sequential test evaluated in
-    one batch pass."""
-    l1, l0, up, lo = _sprt_consts(p0[0], p0[1], p1[0], p1[1], alpha[0], alpha[1])
-    w = Window.partitionBy("g").orderBy(*[F.col(c) for c in order_cols])
-    wc = w.rowsBetween(Window.unboundedPreceding, 0)
-    base = trials.select(
-        F.col(group_col).alias("g"),
-        *[F.col(c) for c in order_cols],
-        F.col(outcome_col).cast("long").alias("x"),
-    ).select(
-        "g",
-        F.row_number().over(w).cast("long").alias("idx"),
-        F.sum(
-            F.when(F.col("x") == 1, F.lit(l1)).otherwise(F.lit(l0))
-        ).over(wc).alias("llr"),
-        F.sum("x").over(wc).alias("cum_x"),
-    )
-    stats = base.groupBy("g").agg(
-        F.max("idx").alias("n"),
-        F.max(F.struct("idx", "cum_x")).alias("_last"),
-        F.max(F.struct("idx", "llr")).alias("_lastl"),
-        F.min(
-            F.when(
-                F.col("llr") >= up,
-                F.struct("idx", F.lit(1).alias("d")),
-            ).when(
-                F.col("llr") <= lo,
-                F.struct("idx", F.lit(0).alias("d")),
-            )
-        ).alias("cross"),
-    )
-    return stats.select(
-        "g",
-        F.col("n").cast("long").alias("n"),
-        F.col("_last.cum_x").cast("long").alias("n_success"),
-        F.when(F.col("cross").isNull(), "continue")
-        .when(F.col("cross.d") == 1, "h1")
-        .otherwise("h0")
-        .alias("decision"),
-        F.col("cross.idx").cast("long").alias("cross_n"),
-        F.col("_lastl.llr").cast("long").alias("llr_final_micro"),
-    )
-
-
-def sprt_decisions_sql(
-    trials_cte: str,
-    p0: tuple[int, int] = (1, 2),
-    p1: tuple[int, int] = (3, 5),
-    alpha: tuple[int, int] = (1, 20),
-    order_by: str = "t",
-) -> str:
-    """DuckDB twin of sprt_decisions. ``trials_cte`` -> (g, <order>, x)."""
-    l1, l0, up, lo = _sprt_consts(p0[0], p0[1], p1[0], p1[1], alpha[0], alpha[1])
-    return f"""
-WITH sp_src AS (SELECT * FROM ({trials_cte})),
-sp_b AS (
-  SELECT g,
-         CAST(row_number() OVER win AS BIGINT) AS idx,
-         SUM(CASE WHEN x = 1 THEN {l1} ELSE {l0} END)
-           OVER (PARTITION BY g ORDER BY {order_by}
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS llr,
-         SUM(x) OVER (PARTITION BY g ORDER BY {order_by}
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_x
-  FROM sp_src
-  WINDOW win AS (PARTITION BY g ORDER BY {order_by})
-),
-sp_g AS (
-  SELECT g,
-         MAX(idx) AS n,
-         MAX(struct_pack(idx := idx, cum_x := cum_x)) AS _last,
-         MAX(struct_pack(idx := idx, llr := llr)) AS _lastl,
-         MIN(CASE WHEN llr >= {up}
-                  THEN struct_pack(idx := idx, d := 1)
-                  WHEN llr <= {lo}
-                  THEN struct_pack(idx := idx, d := 0)
-                  ELSE NULL END) AS crs
-  FROM sp_b GROUP BY 1
-)
-SELECT g, CAST(n AS BIGINT) AS n,
-       CAST(_last.cum_x AS BIGINT) AS n_success,
-       CASE WHEN crs IS NULL THEN 'continue'
-            WHEN crs.d = 1 THEN 'h1' ELSE 'h0' END AS decision,
-       CAST(crs.idx AS BIGINT) AS cross_n,
-       CAST(_lastl.llr AS BIGINT) AS llr_final_micro
-FROM sp_g
-"""
-
-
-def frequent_triples(
-    txns: DataFrame,
-    min_support: int,
-    basket_col: str = "basket",
-    item_col: str = "item",
-) -> DataFrame:
-    """(a, b, c, support, lift_num, lift_den) — FREQUENT 3-ITEMSETS by
-    the Apriori level-wise prune (Agrawal-Srikant 1994): a triple is
-    only COUNTED if all three of its pairs are frequent, which is what
-    keeps the candidate space from exploding at market scale (the
-    downward-closure property — the whole point of Apriori). The
-    companion of the existing pair-level `basket` operator, one level
-    up. Lift against full independence is the exact integer rational
-
-        lift = support · n² / (s_a · s_b · s_c)
-
-    (n = basket count) — reported as (num, den) with num =
-    support·n², den = s_a·s_b·s_c.
-
-    Scale: distinct (basket, item) once; L1/L2 are combinable rollups
-    with the support filter pushed before any pairing; the triple count
-    joins the basket-pair lists only through L2-surviving items —
-    candidate volume is Σ freq-item-basket³ bounded by the prune."""
-    bi = txns.select(
-        F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-    ).distinct().localCheckpoint(eager=False)
-    n_b = bi.select("b").distinct().count()
-    l1 = bi.groupBy("i").agg(F.count(F.lit(1)).alias("s")).filter(
-        F.col("s") >= min_support
-    )
-    fi = bi.join(F.broadcast(l1.select("i")), "i")
-    a = fi.select("b", F.col("i").alias("ia"))
-    bb = fi.select("b", F.col("i").alias("ib"))
-    l2 = (
-        a.join(bb, "b")
-        .filter(F.col("ia") < F.col("ib"))
-        .groupBy("ia", "ib")
-        .agg(F.count(F.lit(1)).alias("s2"))
-        .filter(F.col("s2") >= min_support)
-        .localCheckpoint(eager=False)
-    )
-    # candidate triples: (a<b), (b<c) frequent pairs; (a,c) must also be
-    # frequent (the third prune) — then count exact support
-    cand = (
-        l2.select(F.col("ia").alias("a"), F.col("ib").alias("b"))
-        .join(
-            l2.select(F.col("ia").alias("b"), F.col("ib").alias("c")), "b"
-        )
-        .join(
-            l2.select(F.col("ia").alias("a"), F.col("ib").alias("c")),
-            ["a", "c"],
-        )
-    )
-    cc = fi.select("b", F.col("i").alias("ic"))
-    triples = (
-        a.join(bb, "b")
-        .filter(F.col("ia") < F.col("ib"))
-        .join(cc, "b")
-        .filter(F.col("ib") < F.col("ic"))
-        .join(
-            F.broadcast(
-                cand.select(
-                    F.col("a").alias("ia"),
-                    F.col("b").alias("ib"),
-                    F.col("c").alias("ic"),
-                )
-            ),
-            ["ia", "ib", "ic"],
-        )
-        .groupBy("ia", "ib", "ic")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= min_support)
-    )
-    sa = l1.select(F.col("i").alias("ia"), F.col("s").alias("sa"))
-    sb = l1.select(F.col("i").alias("ib"), F.col("s").alias("sb"))
-    sc = l1.select(F.col("i").alias("ic"), F.col("s").alias("sc"))
-    return (
-        triples.join(F.broadcast(sa), "ia")
-        .join(F.broadcast(sb), "ib")
-        .join(F.broadcast(sc), "ic")
-        .select(
-            F.col("ia").alias("a"),
-            F.col("ib").alias("b"),
-            F.col("ic").alias("c"),
-            F.col("support").cast("long").alias("support"),
-            (F.col("support") * F.lit(n_b) * n_b).cast("long").alias(
-                "lift_num"
-            ),
-            (F.col("sa") * F.col("sb") * F.col("sc")).cast("long").alias(
-                "lift_den"
-            ),
-        )
-    )
-
-
-def frequent_triples_sql(txns_cte: str, min_support: int) -> str:
-    """DuckDB twin of frequent_triples. ``txns_cte`` -> (basket, item)."""
-    return f"""
-WITH f3_bi AS (
-  SELECT DISTINCT basket AS b, item AS i FROM ({txns_cte})
-),
-f3_n AS (SELECT COUNT(DISTINCT b) AS n FROM f3_bi),
-f3_l1 AS (
-  SELECT i, COUNT(*) AS s FROM f3_bi GROUP BY 1
-  HAVING COUNT(*) >= {min_support}
-),
-f3_fi AS (SELECT bi.b, bi.i FROM f3_bi bi JOIN f3_l1 USING (i)),
-f3_l2 AS (
-  SELECT x.i AS ia, y.i AS ib, COUNT(*) AS s2
-  FROM f3_fi x JOIN f3_fi y ON x.b = y.b AND x.i < y.i
-  GROUP BY 1, 2 HAVING COUNT(*) >= {min_support}
-),
-f3_cand AS (
-  SELECT p.ia AS a, p.ib AS b, q.ib AS c
-  FROM f3_l2 p
-  JOIN f3_l2 q ON q.ia = p.ib
-  JOIN f3_l2 r ON r.ia = p.ia AND r.ib = q.ib
-),
-f3_tri AS (
-  SELECT x.i AS a, y.i AS b, z.i AS c, COUNT(*) AS support
-  FROM f3_fi x
-  JOIN f3_fi y ON y.b = x.b AND x.i < y.i
-  JOIN f3_fi z ON z.b = x.b AND y.i < z.i
-  JOIN f3_cand cd ON cd.a = x.i AND cd.b = y.i AND cd.c = z.i
-  GROUP BY 1, 2, 3 HAVING COUNT(*) >= {min_support}
-)
-SELECT t.a, t.b, t.c, CAST(t.support AS BIGINT) AS support,
-       CAST(t.support * n.n * n.n AS BIGINT) AS lift_num,
-       CAST(la.s * lb.s * lc.s AS BIGINT) AS lift_den
-FROM f3_tri t
-CROSS JOIN f3_n n
-JOIN f3_l1 la ON la.i = t.a
-JOIN f3_l1 lb ON lb.i = t.b
-JOIN f3_l1 lc ON lc.i = t.c
-"""
-
-
-def diff_in_diff(
-    rows: DataFrame,
-    group_col: str = "treated",
-    period_col: str = "post",
-    value_col: str = "y",
-) -> DataFrame:
-    """One row (n_c0, n_c1, n_t0, n_t1, mean_c0..mean_t1 [micro],
-    did_micro) — DIFFERENCE-IN-DIFFERENCES point estimate: the
-    canonical quasi-experimental effect readout
-    (treated-after − treated-before) − (control-after − control-before),
-    on cent-quantized values with per-cell truncating micro means
-    (order-free, engine-exact; the documented ±1-micro cell rounding is
-    the price of exactness). The launch-impact estimator for rollouts
-    without holdouts.
-
-    Contract: ``value_col`` must be NONNEGATIVE integers — the Spark
-    side uses truncating DIV while the twin uses floor //, which only
-    agree for nonnegative sums. Shift values upstream if y can go
-    negative (the entry query feeds round(value*100) of nonnegative
-    event values).
-
-    Scale: ONE combinable aggregate over the fact scan — four
-    conditional sums/counts, no shuffle beyond the 1-row reduce."""
-    t = F.col(group_col).cast("long")
-    p = F.col(period_col).cast("long")
-    y = F.col(value_col).cast("long")
-
-    def cell(tv, pv):
-        cond = (t == tv) & (p == pv)
-        return (
-            F.sum(F.when(cond, y)).alias(f"s_{tv}{pv}"),
-            F.sum(cond.cast("long")).alias(f"n_{tv}{pv}"),
-        )
-
-    aggs = []
-    for tv in (0, 1):
-        for pv in (0, 1):
-            aggs.extend(cell(tv, pv))
-    g = rows.agg(*aggs)
-
-    def mean(tv, pv):
-        return F.expr(
-            f"CAST(1000000 * s_{tv}{pv} DIV greatest(n_{tv}{pv}, 1) AS BIGINT)"
-        )
-
-    m_c0, m_c1 = mean(0, 0), mean(0, 1)
-    m_t0, m_t1 = mean(1, 0), mean(1, 1)
-    return g.select(
-        F.col("n_00").cast("long").alias("n_c0"),
-        F.col("n_01").cast("long").alias("n_c1"),
-        F.col("n_10").cast("long").alias("n_t0"),
-        F.col("n_11").cast("long").alias("n_t1"),
-        m_c0.alias("mean_c0_micro"),
-        m_c1.alias("mean_c1_micro"),
-        m_t0.alias("mean_t0_micro"),
-        m_t1.alias("mean_t1_micro"),
-        ((m_t1 - m_t0) - (m_c1 - m_c0)).cast("long").alias("did_micro"),
-    )
-
-
-def diff_in_diff_sql(rows_cte: str) -> str:
-    """DuckDB twin of diff_in_diff. ``rows_cte`` -> (treated, post, y);
-    values must be nonnegative integers (truncating-vs-floor)."""
-    cells = []
-    for tv in (0, 1):
-        for pv in (0, 1):
-            cells.append(
-                f"SUM(CASE WHEN treated = {tv} AND post = {pv} THEN y END)"
-                f" AS s_{tv}{pv},"
-                f" SUM(CASE WHEN treated = {tv} AND post = {pv} THEN 1"
-                f" ELSE 0 END) AS n_{tv}{pv}"
-            )
-    sel = ", ".join(cells)
-    means = {
-        f"m_{tv}{pv}": (
-            f"CAST(1000000 * s_{tv}{pv} // GREATEST(n_{tv}{pv}, 1) AS BIGINT)"
-        )
-        for tv in (0, 1)
-        for pv in (0, 1)
-    }
-    return f"""
-WITH dd_g AS (SELECT {sel} FROM ({rows_cte}))
-SELECT CAST(n_00 AS BIGINT) AS n_c0, CAST(n_01 AS BIGINT) AS n_c1,
-       CAST(n_10 AS BIGINT) AS n_t0, CAST(n_11 AS BIGINT) AS n_t1,
-       {means['m_00']} AS mean_c0_micro,
-       {means['m_01']} AS mean_c1_micro,
-       {means['m_10']} AS mean_t0_micro,
-       {means['m_11']} AS mean_t1_micro,
-       CAST(({means['m_11']} - {means['m_10']})
-            - ({means['m_01']} - {means['m_00']}) AS BIGINT) AS did_micro
-FROM dd_g
-"""
-
-
-def acf_table(
-    series: DataFrame,
-    max_lag: int = 5,
-    group_col: str = "g",
-    order_cols: tuple[str, ...] = ("t",),
-    value_col: str = "x",
-) -> DataFrame:
-    """(g, lag, n_terms, dot_sum, sum_a, sum_b, ss_a, ss_b) — the
-    AUTOCORRELATION TABLE per series at lags 1..max_lag, as exact
-    integer sufficient statistics: for each lag the aligned pairs
-    (x_t, x_{t+lag}) contribute Σ x_t·x_{t+lag} plus the marginal
-    sums/squares over EXACTLY the aligned window — everything a
-    consumer needs to assemble Pearson-style ACF coefficients without
-    the engine ever dividing (the Box-Jenkins model-identification
-    table, ready for arbitrary downstream normalization). Values must
-    be integers (quantize upstream).
-
-    Scale: one row_number per series + max_lag equi-joins on
-    (g, idx+lag) — combinable rollups, no window wider than the sort."""
-    w = Window.partitionBy("g").orderBy(*[F.col(c) for c in order_cols])
-    base = series.select(
-        F.col(group_col).alias("g"),
-        *[F.col(c) for c in order_cols],
-        F.col(value_col).cast("long").alias("x"),
-    ).withColumn("idx", F.row_number().over(w).cast("long")).localCheckpoint(
-        eager=False
-    )
-    a = base.select("g", "idx", F.col("x").alias("xa"))
-    out = None
-    for lag in range(1, max_lag + 1):
-        b = base.select(
-            "g", (F.col("idx") - lag).alias("idx"), F.col("x").alias("xb")
-        )
-        r = (
-            a.join(b, ["g", "idx"])
-            .groupBy("g")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_terms"),
-                F.sum(F.col("xa") * F.col("xb")).cast("long").alias("dot_sum"),
-                F.sum("xa").cast("long").alias("sum_a"),
-                F.sum("xb").cast("long").alias("sum_b"),
-                F.sum(F.col("xa") * F.col("xa")).cast("long").alias("ss_a"),
-                F.sum(F.col("xb") * F.col("xb")).cast("long").alias("ss_b"),
-            )
-            .select("g", F.lit(lag).cast("long").alias("lag"), "n_terms",
-                    "dot_sum", "sum_a", "sum_b", "ss_a", "ss_b")
-        )
-        out = r if out is None else out.unionByName(r)
-    return out
-
-
-def acf_table_sql(series_cte: str, max_lag: int = 5, order_by: str = "t") -> str:
-    """DuckDB twin of acf_table. ``series_cte`` -> (g, <order>, x)."""
-    lags = []
-    for lag in range(1, max_lag + 1):
-        lags.append(
-            f"""
-SELECT g, CAST({lag} AS BIGINT) AS lag,
-       CAST(COUNT(*) AS BIGINT) AS n_terms,
-       CAST(SUM(xa * xb) AS BIGINT) AS dot_sum,
-       CAST(SUM(xa) AS BIGINT) AS sum_a,
-       CAST(SUM(xb) AS BIGINT) AS sum_b,
-       CAST(SUM(xa * xa) AS BIGINT) AS ss_a,
-       CAST(SUM(xb * xb) AS BIGINT) AS ss_b
-FROM (
-  SELECT a.g, a.x AS xa, b.x AS xb
-  FROM acf_base a JOIN acf_base b
-    ON b.g = a.g AND b.idx = a.idx + {lag}
-) GROUP BY g"""
-        )
-    union = " UNION ALL ".join(lags)
-    return f"""
-WITH acf_src AS ({series_cte}),
-acf_base AS (
-  SELECT g, CAST(x AS BIGINT) AS x,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY {order_by})
-              AS BIGINT) AS idx
-  FROM acf_src
-)
-{union}
-"""
 
 
 def theil_index(
@@ -8001,144 +786,3 @@ FROM th_j GROUP BY 1
 """
 
 
-GUMBEL_SCALE = 1_000_000  # plotting-position quantization
-
-
-def gumbel_fit(
-    series: DataFrame,
-    block: int = 16,
-    group_col: str = "g",
-    order_cols: tuple[str, ...] = ("t",),
-    value_col: str = "x",
-) -> DataFrame:
-    """(g, k, sx_q, sy_q, syy_q, sxy_q, beta, mu) — GUMBEL EXTREME-
-    VALUE FIT by block maxima + plotting-position regression (the
-    hydrology/latency-tail standard: return levels from the Gumbel
-    line): consecutive ``block``-sample maxima M_(1..k) (sorted
-    ascending, ties pinned by block index) regress on the reduced
-    variate y_i = −ln(−ln(i/(k+1))). beta (scale) is the slope, mu
-    (location) the intercept — "the p99.9 you should expect per
-    window" from modest data.
-
-    Exactness: y_i is a pure function of the integer pair (i, k) —
-    both engines evaluate ln on identical rational arguments and the
-    result quantizes to round(y·1e6) int64; the maxima are exact
-    integers; the OLS sufficient statistics are order-free integer
-    sums (gravity_fit's scheme) and beta/mu an identically-ordered
-    double assembly, 6-dp rounded. Partial trailing blocks drop;
-    groups with < 3 maxima or zero variance emit NULL fit.
-
-    Scale: one block rollup + one per-group rank window over k rows
-    (maxima, not samples) + one combinable aggregate."""
-    w0 = Window.partitionBy("g").orderBy(*[F.col(c) for c in order_cols])
-    base = series.select(
-        F.col(group_col).alias("g"),
-        *[F.col(c) for c in order_cols],
-        F.col(value_col).cast("long").alias("x"),
-    ).withColumn("idx", F.row_number().over(w0).cast("long") - 1)
-    blocks = (
-        base.select("g", (F.col("idx") / block).cast("long").alias("b"), "x")
-        .groupBy("g", "b")
-        .agg(F.count(F.lit(1)).alias("_n"), F.max("x").alias("m"))
-        .filter(F.col("_n") == block)
-    )
-    wr = Window.partitionBy("g").orderBy("m", "b")
-    wk = Window.partitionBy("g")
-    ranked = blocks.select(
-        "g",
-        "m",
-        F.row_number().over(wr).cast("long").alias("i"),
-        F.count(F.lit(1)).over(wk).cast("long").alias("k"),
-    )
-    y = F.round(
-        -F.log(-F.log(F.col("i").cast("double") / (F.col("k") + 1)))
-        * GUMBEL_SCALE
-    ).cast("long")
-    agg = ranked.select("g", "k", F.col("m").alias("qx"), y.alias("qy")).groupBy(
-        "g", "k"
-    ).agg(
-        F.sum("qx").cast("long").alias("sx_q"),
-        F.sum("qy").cast("long").alias("sy_q"),
-        F.sum(F.col("qy") * F.col("qy")).cast("long").alias("syy_q"),
-        F.sum(F.col("qx") * F.col("qy")).cast("long").alias("sxy_q"),
-    )
-    kd = F.col("k").cast("double")
-    sx = F.col("sx_q").cast("double")
-    sy = F.col("sy_q").cast("double")
-    syy = F.col("syy_q").cast("double")
-    sxy = F.col("sxy_q").cast("double")
-    den = kd * syy - sy * sy
-    beta = (kd * sxy - sx * sy) / den * F.lit(float(GUMBEL_SCALE))
-    mu = (sx - (kd * sxy - sx * sy) / den * sy) / kd
-    ok = (F.col("k") >= 3) & (den != 0)
-    return agg.select(
-        "g",
-        "k",
-        "sx_q",
-        "sy_q",
-        "syy_q",
-        "sxy_q",
-        F.when(ok, F.round(beta, 6) + F.lit(0.0)).alias("beta"),
-        F.when(ok, F.round(mu, 6) + F.lit(0.0)).alias("mu"),
-    )
-
-
-def gumbel_fit_sql(
-    series_cte: str, block: int = 16, order_by: str = "t"
-) -> str:
-    """DuckDB twin of gumbel_fit. ``series_cte`` -> (g, <order>, x)."""
-    return f"""
-WITH gb_src AS ({series_cte}),
-gb_base AS (
-  SELECT g, CAST(x AS BIGINT) AS x,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY {order_by})
-              AS BIGINT) - 1 AS idx
-  FROM gb_src
-),
-gb_blk AS (
-  SELECT g, idx // {block} AS b, COUNT(*) AS n, MAX(x) AS m
-  FROM gb_base GROUP BY 1, 2 HAVING COUNT(*) = {block}
-),
-gb_rk AS (
-  SELECT g, m,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY m, b) AS BIGINT) AS i,
-         CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS k
-  FROM gb_blk
-),
-gb_q AS (
-  SELECT g, k, m AS qx,
-         CAST(round(-ln(-ln(CAST(i AS DOUBLE) / (k + 1)))
-              * {GUMBEL_SCALE}) AS BIGINT) AS qy
-  FROM gb_rk
-),
-gb_a AS (
-  SELECT g, k,
-         CAST(SUM(qx) AS BIGINT) AS sx_q,
-         CAST(SUM(qy) AS BIGINT) AS sy_q,
-         CAST(SUM(qy * qy) AS BIGINT) AS syy_q,
-         CAST(SUM(qx * qy) AS BIGINT) AS sxy_q
-  FROM gb_q GROUP BY 1, 2
-)
-SELECT g, k, sx_q, sy_q, syy_q, sxy_q,
-       CASE WHEN k >= 3 AND
-                 CAST(k AS DOUBLE) * CAST(syy_q AS DOUBLE)
-                 - CAST(sy_q AS DOUBLE) * CAST(sy_q AS DOUBLE) <> 0
-            THEN round((CAST(k AS DOUBLE) * CAST(sxy_q AS DOUBLE)
-                        - CAST(sx_q AS DOUBLE) * CAST(sy_q AS DOUBLE))
-                       / (CAST(k AS DOUBLE) * CAST(syy_q AS DOUBLE)
-                          - CAST(sy_q AS DOUBLE) * CAST(sy_q AS DOUBLE))
-                       * {GUMBEL_SCALE}.0, 6) + 0.0
-            ELSE NULL END AS beta,
-       CASE WHEN k >= 3 AND
-                 CAST(k AS DOUBLE) * CAST(syy_q AS DOUBLE)
-                 - CAST(sy_q AS DOUBLE) * CAST(sy_q AS DOUBLE) <> 0
-            THEN round((CAST(sx_q AS DOUBLE)
-                        - (CAST(k AS DOUBLE) * CAST(sxy_q AS DOUBLE)
-                           - CAST(sx_q AS DOUBLE) * CAST(sy_q AS DOUBLE))
-                          / (CAST(k AS DOUBLE) * CAST(syy_q AS DOUBLE)
-                             - CAST(sy_q AS DOUBLE) * CAST(sy_q AS DOUBLE))
-                          * CAST(sy_q AS DOUBLE))
-                       / CAST(k AS DOUBLE), 6) + 0.0
-            ELSE NULL END AS mu
-FROM gb_a
-"""

@@ -330,100 +330,6 @@ def test_lev1_join_matches_brute(spark):
     assert twin == got
 
 
-def _brute_funnel(rows, steps, window_s):
-    """rows: (user, ts_epoch_s, eid, type). Greedy earliest chain."""
-    from collections import defaultdict
-
-    by_u = defaultdict(list)
-    for u, t, e, ty in rows:
-        by_u[u].append((t, e, ty))
-    out = {}
-    for u, evs in by_u.items():
-        evs.sort()
-        anchors = [i for i, (_, _, ty) in enumerate(evs) if ty == steps[0]]
-        if not anchors:
-            continue
-        best = 1
-        for i0 in anchors:
-            t0 = evs[i0][0]
-            depth, pos = 1, i0
-            for step in steps[1:]:
-                nxt = next(
-                    (
-                        j
-                        for j in range(pos + 1, len(evs))
-                        if evs[j][2] == step
-                    ),
-                    None,
-                )
-                if nxt is None or evs[nxt][0] > t0 + window_s:
-                    break
-                depth, pos = depth + 1, nxt
-            best = max(best, depth)
-        out[u] = (len(anchors), best)
-    return out
-
-
-def test_funnel_matches_brute_and_twin(spark):
-    import datetime as dt
-    import duckdb
-
-    rng = np.random.default_rng(23)
-    base = dt.datetime(2024, 1, 1)
-    types = ["view", "click", "purchase", "error"]
-    rows = []
-    for e in range(400):
-        rows.append(
-            (
-                int(rng.integers(0, 25)),
-                int(rng.integers(0, 3600)),
-                e,
-                types[int(rng.integers(0, 4))],
-            )
-        )
-    # a user whose chain only fits in a wide window
-    rows += [(90, 0, 9001, "view"), (90, 500, 9002, "click"), (90, 1200, 9003, "purchase")]
-    sdf = spark.createDataFrame(
-        [
-            (u, base + dt.timedelta(seconds=t), e, ty)
-            for u, t, e, ty in rows
-        ],
-        "user_id long, ts timestamp, event_id long, event_type string",
-    )
-    from osm2geojson_spark.operators.analytics import funnel_depths, funnel_depths_sql
-
-    steps = ["view", "click", "purchase"]
-    for win in (600, 3600):
-        got = {
-            r["user_id"]: (r["n_anchors"], r["depth"])
-            for r in funnel_depths(sdf, steps, win).collect()
-        }
-        assert got == _brute_funnel(rows, steps, win), f"win={win}"
-    # the planted user: depth 2 at 600 s, 3 at 3600 s
-    assert _brute_funnel(rows, steps, 600)[90][1] == 2
-    assert _brute_funnel(rows, steps, 3600)[90][1] == 3
-
-    duck = duckdb.connect()
-    duck.execute(
-        "CREATE TABLE ev (user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type VARCHAR)"
-    )
-    duck.executemany(
-        "INSERT INTO ev VALUES (?, ?, ?, ?)",
-        [(u, base + dt.timedelta(seconds=t), e, ty) for u, t, e, ty in rows],
-    )
-    twin = {
-        u: (n, d)
-        for u, n, d in duck.sql(
-            funnel_depths_sql("SELECT * FROM ev", steps, 600)
-        ).fetchall()
-    }
-    got600 = {
-        r["user_id"]: (r["n_anchors"], r["depth"])
-        for r in funnel_depths(sdf, steps, 600).collect()
-    }
-    assert twin == got600
-
-
 def test_gram_matrix_exact_vs_numpy_and_twin(spark):
     import duckdb
 
@@ -460,55 +366,10 @@ def test_gram_matrix_exact_vs_numpy_and_twin(spark):
     assert twin == want
 
 
-def test_cohort_retention_matches_hand_walk(spark):
-    import datetime as dt
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import cohort_retention, cohort_retention_sql
-
-    # week of 2024-01-01 is a Monday — cohorts align cleanly
-    def t(day, hour=12):
-        return dt.datetime(2024, 1, day, hour)
-
-    rows = [
-        (1, t(1)), (1, t(2)), (1, t(9)),        # cohort w0, active w0+w1
-        (2, t(3)),                              # cohort w0, only w0
-        (3, t(10)), (3, t(24)),                 # cohort w1, active w1+w3
-        (4, t(11)), (4, t(16)), (4, t(17)),     # cohort w1, active w1+w2
-    ]
-    df = spark.createDataFrame(
-        [(u, ts, i, "view") for i, (u, ts) in enumerate(rows)],
-        "user_id long, ts timestamp, event_id long, event_type string",
-    )
-    got = {
-        (str(r["cohort_week"]), r["week_offset"]): (r["n_active"], r["n_cohort"], r["retention"])
-        for r in cohort_retention(df).collect()
-    }
-    want = {
-        ("2024-01-01", 0): (2, 2, 1.0),
-        ("2024-01-01", 1): (1, 2, 0.5),
-        ("2024-01-08", 0): (2, 2, 1.0),
-        ("2024-01-08", 1): (1, 2, 0.5),
-        ("2024-01-08", 2): (1, 2, 0.5),
-    }
-    assert got == want
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE ce (user_id BIGINT, ts TIMESTAMP)")
-    duck.executemany("INSERT INTO ce VALUES (?, ?)", rows)
-    twin = {
-        (str(c), o): (na, nc, rt)
-        for c, o, na, nc, rt in duck.sql(
-            cohort_retention_sql("SELECT user_id, ts FROM ce")
-        ).fetchall()
-    }
-    assert twin == got
-
-
 def test_cusum_matches_recursive_textbook_form(spark):
     import duckdb
 
-    from osm2geojson_spark.operators.analytics import cusum_alarms, cusum_alarms_sql
+    from osm2geojson_spark.streaming.ops import cusum_alarms, cusum_alarms_sql
 
     rng = np.random.default_rng(37)
     rows = []
@@ -547,41 +408,6 @@ def test_cusum_matches_recursive_textbook_form(spark):
     twin = sorted(duck.sql(
         cusum_alarms_sql("SELECT * FROM cusrc", "sid", "t", "v", target, h)
     ).fetchall())
-    assert twin == got
-
-
-def test_interval_union_length_overlaps_and_islands(spark):
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        interval_union_length, interval_union_length_sql)
-
-    rows = [
-        # g=1: [0,10) + [5,12) overlap -> [0,12); [20,25) separate => 17, 2 islands
-        (1, 0, 10), (1, 5, 12), (1, 20, 25),
-        # g=2: nested + touching: [0,100) swallows [10,20); [100,110) touches -> one island
-        (2, 0, 100), (2, 10, 20), (2, 100, 110),
-        # g=3: degenerate empty interval alone
-        (3, 5, 5),
-        # g=4: duplicate intervals
-        (4, 1, 4), (4, 1, 4),
-    ]
-    df = spark.createDataFrame(rows, "g long, s long, e long")
-    got = {
-        r["g"]: (r["covered"], r["n_islands"])
-        for r in interval_union_length(df, "g", "s", "e").collect()
-    }
-    assert got == {1: (17, 2), 2: (110, 1), 3: (0, 1), 4: (3, 1)}
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE iv (g BIGINT, s BIGINT, e BIGINT)")
-    duck.executemany("INSERT INTO iv VALUES (?, ?, ?)", rows)
-    twin = {
-        g: (c, n)
-        for g, c, n in duck.sql(
-            interval_union_length_sql("SELECT * FROM iv", "g", "s", "e")
-        ).fetchall()
-    }
     assert twin == got
 
 
@@ -626,44 +452,6 @@ def test_snm_pairs_matches_brute_window_scan(spark):
     twin = sorted(duck.sql(
         snm_pairs_sql("SELECT * FROM sn", "id", "s", window, max_lev)
     ).fetchall())
-    assert twin == got
-
-
-def test_twap_irregular_sampling_and_end_clamp(spark):
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import twap, twap_sql
-
-    rows = [
-        # series 1: 10 held 0..5, 20 held 5..20, 40 held 20..30 -> (50+300+400)/30 = 25
-        (1, 0, 10), (1, 5, 20), (1, 20, 40),
-        # series 2: single obs, holds 100..130
-        (2, 100, 7),
-        # series 3: obs at end_ts holds nothing; earlier one holds to end
-        (3, 25, 3), (3, 30, 99),
-        # series 4: duplicate ts — first (smaller v) holds 0 s in both engines
-        (4, 10, 5), (4, 10, 6),
-    ]
-    end_ts = 30
-    df = spark.createDataFrame(rows, "sid long, t long, v long")
-    got = {
-        r["sid"]: (r["held_s"], r["vt_sum"], r["twap_q"])
-        for r in twap(df, "sid", "t", "v", end_ts).collect()
-    }
-    assert got[1] == (30, 750, 25.0)
-    assert got[2] == (0, 0, None)  # obs starts after end? no: t=100 > 30 -> zero hold
-    assert got[3] == (5, 15, 3.0)
-    assert got[4] == (20, 120, 6.0)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE twr (sid BIGINT, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO twr VALUES (?, ?, ?)", rows)
-    twin = {
-        s: (h, vs, tq)
-        for s, h, vs, tq in duck.sql(
-            twap_sql("SELECT * FROM twr", "sid", "t", "v", end_ts)
-        ).fetchall()
-    }
     assert twin == got
 
 
@@ -771,91 +559,6 @@ def test_profile_table_one_pass_and_twin(spark):
     # expands to a two-level Aggregate, but there is a single scan)
     plan = profile_table(df, ["k", "s"])._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("LogicalRDD") == 1
-
-
-def test_peak_concurrency_sweep(spark):
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        peak_concurrency, peak_concurrency_sql)
-
-    rows = [
-        # g=1: three overlap in [4,5): peak 3 at 4
-        (1, 0, 10), (1, 4, 6), (1, 3, 5), (1, 20, 21),
-        # g=2: back-to-back [0,5)+[5,10): half-open -> never concurrent
-        (2, 0, 5), (2, 5, 10),
-        # g=3: identical intervals stack; empty interval ignored
-        (3, 2, 4), (3, 2, 4), (3, 7, 7),
-    ]
-    df = spark.createDataFrame(rows, "g long, s long, e long")
-    got = {
-        r["g"]: (r["peak"], r["at_ts"])
-        for r in peak_concurrency(df, "g", "s", "e").collect()
-    }
-    assert got == {1: (3, 4), 2: (1, 0), 3: (2, 2)}
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE pcs (g BIGINT, s BIGINT, e BIGINT)")
-    duck.executemany("INSERT INTO pcs VALUES (?, ?, ?)", rows)
-    twin = {
-        g: (p, a)
-        for g, p, a in duck.sql(
-            peak_concurrency_sql("SELECT * FROM pcs", "g", "s", "e")
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_roc_auc_and_calibration_match_brute(spark):
-    """roc_auc == the O(P*N) pairwise definition (ties count 1/2) on a
-    small corpus WITH tied scores; perfect ranking -> 1.0, inverted ->
-    0.0, one-class -> NULL. calibration_bins == a dict replay."""
-    from osm2geojson_spark.operators.analytics import calibration_bins, roc_auc
-
-    rows = [
-        (1, 100_000, 0), (2, 200_000, 0), (3, 200_000, 1), (4, 400_000, 0),
-        (5, 500_000, 1), (6, 500_000, 0), (7, 500_000, 1), (8, 800_000, 1),
-        (9, 950_000, 1), (10, 50_000, 0),
-    ]
-    df = spark.createDataFrame(rows, "rid long, score long, label long")
-    r = roc_auc(df).collect()[0]
-    pos = [s for _, s, y in rows if y == 1]
-    neg = [s for _, s, y in rows if y == 0]
-    u = sum(
-        1.0 if p > q else (0.5 if p == q else 0.0) for p in pos for q in neg
-    )
-    want = u / (len(pos) * len(neg))
-    assert (r["n"], r["n_pos"], r["n_neg"]) == (10, 5, 5)
-    assert r["auc"] == round(want, 6)
-    assert r["auc_num2"] == int(2 * u + len(pos) * (len(pos) + 1)) - len(pos) * (len(pos) + 1)
-    # closed forms
-    perfect = spark.createDataFrame(
-        [(i, i * 1000, 1 if i > 5 else 0) for i in range(1, 11)],
-        "rid long, score long, label long",
-    )
-    assert roc_auc(perfect).collect()[0]["auc"] == 1.0
-    from pyspark.sql import functions as F
-
-    inverted = perfect.select(
-        "rid", "score", (1 - F.col("label")).alias("label")
-    )
-    assert roc_auc(inverted).collect()[0]["auc"] == 0.0
-    oneclass = perfect.filter("label = 1")
-    assert roc_auc(oneclass).collect()[0]["auc"] is None
-
-    got = {
-        b["bin"]: (b["n"], b["n_pos"], b["score_sum"], b["gap_micro"])
-        for b in calibration_bins(df, n_bins=5).collect()
-    }
-    wantb = {}
-    for _, s, y in rows:
-        b = min(4, s * 5 // 1_000_000)
-        n, np_, ss = wantb.get(b, (0, 0, 0))
-        wantb[b] = (n + 1, np_ + y, ss + s)
-    for b, (n, np_, ss) in wantb.items():
-        conf = ss / (n * 1_000_000)
-        acc = np_ / n
-        assert got[b] == (n, np_, ss, round(abs(acc - conf) * 1e6)), b
 
 
 def test_psi_bins_matches_brute_and_drift_direction(spark):
@@ -968,63 +671,6 @@ def test_text_nll_matches_brute_bigram_lm(spark):
     assert got[5]["avg_nll"] == 0.0
 
 
-def test_ransac_line_recovers_planted_line_and_matches_brute(spark):
-    """ransac_line == a from-scratch scalar replay of the congruential
-    schedule; on a planted 70%-inlier line the winner explains exactly
-    the inlier points."""
-    from osm2geojson_spark.operators.analytics import ransac_line
-
-    rng = np.random.default_rng(5)
-    pts = []
-    pid = 0
-    # group 0: y = 3x + 7 with noise in [-1, 1], 30% gross outliers
-    for i in range(40):
-        x = i
-        if i % 3 == 0 and i > 0:
-            y = int(rng.integers(-50, 150))  # outlier
-        else:
-            y = 3 * x + 7 + int(rng.integers(-1, 2))
-        pts.append((0, pid, x, y))
-        pid += 1
-    # group 1: everything collinear -> all points inliers
-    for i in range(12):
-        pts.append((1, pid, i, 5 * i - 2))
-        pid += 1
-    df = spark.createDataFrame(pts, "group_id long, pid long, x long, y long")
-    got = {r["group_id"]: r for r in ransac_line(df, 16, tol=3).collect()}
-
-    def brute(group):
-        g = sorted((p for p in pts if p[0] == group), key=lambda p: p[1])
-        n = len(g)
-        best = None
-        for j in range(16):
-            r1 = (j * 13) % n
-            r2 = (j * 29 + 1) % n
-            if r1 == r2:
-                r2 = (j * 29 + 2) % n
-            ax, ay = g[r1][2], g[r1][3]
-            bx, by = g[r2][2], g[r2][3]
-            l2 = (bx - ax) ** 2 + (by - ay) ** 2
-            ni = 0
-            if l2 > 0:
-                for _, _, x, y in g:
-                    cr = (bx - ax) * (y - ay) - (by - ay) * (x - ax)
-                    if cr * cr <= 9 * l2:
-                        ni += 1
-            if best is None or ni > best[0]:
-                best = (ni, j, ax, ay, bx, by)
-        return best
-
-    for grp in (0, 1):
-        ni, j, ax, ay, bx, by = brute(grp)
-        r = got[grp]
-        assert (r["n_inliers"], r["cand_idx"]) == (ni, j)
-        assert (r["ax"], r["ay"], r["bx"], r["by"]) == (ax, ay, bx, by)
-    assert got[1]["n_inliers"] == 12  # fully collinear group: all inliers
-    # the planted line dominates its outliers
-    assert got[0]["n_inliers"] >= 26
-
-
 def test_ab_test_z_matches_scipy_style_formula_and_degenerates(spark):
     """ab_test_z == the textbook pooled two-proportion z computed in
     plain Python; degenerate inputs yield NULL z."""
@@ -1053,46 +699,6 @@ def test_ab_test_z_matches_scipy_style_formula_and_degenerates(spark):
     onearm = spark.createDataFrame([(0, 1), (0, 0)], "variant long, converted long")
     r3 = ab_test_z(onearm).collect()[0]
     assert r3["z"] is None and r3["rate_b"] is None and r3["nb"] == 0
-
-
-def test_union_rect_area_matches_pixel_brute(spark):
-    """union_rect_area == a literal pixel-raster union count, including
-    full containment, exact-touch adjacency, and degenerate rects."""
-    from osm2geojson_spark.operators.analytics import union_rect_area
-
-    rng = np.random.default_rng(17)
-    rects = []
-    for i in range(50):
-        x0 = int(rng.integers(0, 30))
-        y0 = int(rng.integers(0, 30))
-        rects.append((0, x0, y0, x0 + int(rng.integers(1, 10)),
-                      y0 + int(rng.integers(1, 10))))
-    # group 1: planted exact cases
-    rects += [
-        (1, 0, 0, 10, 10),
-        (1, 2, 2, 5, 5),      # fully contained
-        (1, 10, 0, 15, 10),   # exact-touch neighbor (shared edge)
-        (1, 30, 30, 30, 40),  # degenerate: zero width
-        (1, 50, 50, 51, 51),  # disjoint unit square
-    ]
-    df = spark.createDataFrame(
-        rects, "group_id long, x0 long, y0 long, x1 long, y1 long"
-    )
-    got = {r["group_id"]: r for r in union_rect_area(df).collect()}
-
-    import numpy as np_
-    for g in (0, 1):
-        grid = np_.zeros((100, 100), dtype=bool)
-        n = 0
-        for gg, x0, y0, x1, y1 in rects:
-            if gg != g:
-                continue
-            if x0 < x1 and y0 < y1:
-                n += 1
-            grid[y0:y1, x0:x1] = True
-        assert got[g]["area"] == int(grid.sum())
-        assert got[g]["n_rects"] == n
-    assert got[1]["area"] == 100 + 50 + 1  # 10x10 + touching 5x10 + unit
 
 
 def test_hll_distinct_matches_brute_registers_and_accuracy(spark):
@@ -1231,63 +837,6 @@ def test_scd2_build_matches_dict_replay(spark):
         assert sum(r["n_events"] for r in rs) == 40
 
 
-def test_multi_touch_attribution_matches_dict_replay(spark):
-    """multi_touch_attribution == a dict replay: 1e6 micro-credits per
-    conversion per model (conservation), linear remainder to the last
-    touch, (direct) channel for untouched conversions, lookback gate."""
-    from datetime import datetime, timedelta
-
-    from osm2geojson_spark.operators.analytics import multi_touch_attribution
-
-    t0 = datetime(2024, 1, 1)
-
-    def ts(mins):
-        return t0 + timedelta(minutes=mins)
-
-    rows = [
-        # user 1: view, email, signup then purchase -> n=3, rem 1e6%3=1
-        (1, 1, ts(0), "view"),
-        (2, 1, ts(10), "email"),
-        (3, 1, ts(20), "signup"),
-        (4, 1, ts(30), "purchase"),
-        # user 2: touch OUTSIDE the 1h lookback + purchase -> (direct)
-        (5, 2, ts(0), "view"),
-        (6, 2, ts(90), "purchase"),
-        # user 3: two touches, second purchase later reuses them too
-        (7, 3, ts(0), "click"),
-        (8, 3, ts(5), "click"),
-        (9, 3, ts(10), "purchase"),
-        (10, 3, ts(15), "purchase"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, event_type string"
-    )
-    got = {
-        r["channel"]: r
-        for r in multi_touch_attribution(df, lookback_s=3600).collect()
-    }
-    M = 1_000_000
-    # conservation: every model distributes exactly 1e6 per conversion
-    n_conv = 4
-    for model in ("first_micro", "last_micro", "linear_micro"):
-        assert sum(r[model] for r in got.values()) == n_conv * M, model
-    # user 1: first=view, last=signup, linear 333333/333333/333334
-    assert got["view"]["first_micro"] == M
-    assert got["signup"]["last_micro"] == M
-    assert got["signup"]["linear_micro"] == M // 3 + 1
-    assert got["view"]["linear_micro"] == M // 3
-    # user 2: untouched -> (direct) gets the full conversion
-    d = got["(direct)"]
-    assert (
-        d["n_conversions"] == 1
-        and d["first_micro"] == d["last_micro"] == d["linear_micro"] == M
-    )
-    # user 3: click channel gets both purchases' credits entirely
-    c = got["click"]
-    assert c["n_conversions"] == 2 and c["n_touches"] == 4
-    assert c["first_micro"] == c["last_micro"] == c["linear_micro"] == 2 * M
-
-
 def test_kappa_agreement_matches_textbook(spark):
     """kappa_agreement == sklearn-style hand formula on a known confusion
     matrix, plus the degenerate single-class NULL case."""
@@ -1318,848 +867,6 @@ def test_kappa_agreement_matches_textbook(spark):
     )
     ra = kappa_agreement(dfa).collect()[0]
     assert ra["kappa_den"] == 0 and ra["kappa"] is None
-
-
-def test_rfm_segments_matches_serial_replay(spark):
-    """rfm_segments (two-level distributed rank) == a serial Python
-    replay: balanced exact quantile scores, deterministic tie-breaks,
-    packed segment digits."""
-    from datetime import date, timedelta
-
-    import numpy as np
-
-    from osm2geojson_spark.operators.analytics import rfm_segments
-
-    rng = np.random.default_rng(23)
-    rows = []
-    oid = 0
-    for cust in range(60):
-        for _ in range(int(rng.integers(1, 9))):
-            rows.append(
-                (
-                    oid,
-                    cust,
-                    date(2024, 1, 1) + timedelta(days=int(rng.integers(0, 400))),
-                    float(rng.integers(100, 99999)) / 100.0,
-                )
-            )
-            oid += 1
-    df = spark.createDataFrame(
-        rows, "o_orderkey long, o_custkey long, o_orderdate date, o_totalprice double"
-    ).repartition(5)
-    got = {r["cust"]: r for r in rfm_segments(df).collect()}
-
-    # serial replay
-    per = {}
-    for _, cust, dd, amt in rows:
-        last, freq, mon = per.get(cust, (date(1970, 1, 1), 0, 0))
-        per[cust] = (max(last, dd), freq + 1, mon + round(amt * 100))
-    anchor = max(v[0] for v in per.values())
-    met = {
-        c: ((anchor - v[0]).days, v[1], v[2]) for c, v in per.items()
-    }
-    n = len(met)
-
-    def scores(idx, neg):
-        order = sorted(met, key=lambda c: (-met[c][idx] if neg else met[c][idx], c))
-        return {
-            c: 1 + ((rank * 5) // n)
-            for rank, c in enumerate(order)
-        }
-
-    rs, fs, ms = scores(0, True), scores(1, False), scores(2, False)
-    for c in met:
-        r = got[c]
-        assert (r["recency_days"], r["frequency"], r["monetary_c"]) == met[c]
-        assert (r["r_score"], r["f_score"], r["m_score"]) == (rs[c], fs[c], ms[c]), c
-        assert r["segment"] == rs[c] * 100 + fs[c] * 10 + ms[c]
-    # balanced quintiles: each score bucket within 1 of n/5
-    from collections import Counter
-
-    for sc in (rs, fs, ms):
-        cnt = Counter(sc.values())
-        assert set(cnt) == set(range(1, 6))
-        assert max(cnt.values()) - min(cnt.values()) <= 1
-
-
-def test_gini_matches_textbook_and_twin(spark):
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.analytics import (
-        gini_coefficient,
-        gini_coefficient_sql,
-    )
-
-    # equal values -> 0; single holder -> (n-1)/n
-    eq = spark.createDataFrame([(i, 10) for i in range(8)], "k long, x long")
-    r = gini_coefficient(eq, "x", "k").collect()[0]
-    assert r["gini_num"] == 0 and r["gini"] == 0.0
-    onep = spark.createDataFrame(
-        [(i, 0) for i in range(9)] + [(9, 100)], "k long, x long"
-    )
-    r1 = gini_coefficient(onep, "x", "k").collect()[0]
-    assert abs(r1["gini"] - 0.9) < 1e-12
-
-    rng = np.random.default_rng(29)
-    rows = [(int(i), int(v)) for i, v in enumerate(rng.integers(0, 5000, 300))]
-    df = spark.createDataFrame(rows, "k long, x long").repartition(6)
-    got = gini_coefficient(df, "x", "k").collect()[0]
-    xs = np.sort(np.array([v for _, v in rows], dtype=np.int64))
-    n = len(xs)
-    want = float(((2 * np.arange(1, n + 1) - n - 1) * xs).sum() / (n * xs.sum()))
-    assert abs(got["gini"] - want) < 1e-12
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE base (k BIGINT, x BIGINT)")
-    duck.executemany("INSERT INTO base VALUES (?, ?)", rows)
-    twin = duck.sql(
-        gini_coefficient_sql("SELECT k, x FROM base", "x", "k")
-    ).fetchall()[0]
-    assert twin == tuple(
-        got[c] for c in ("n", "sum_x", "gini_num", "gini_den", "gini")
-    )
-
-
-def test_ks_test_matches_ecdf_replay_and_twin(spark):
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.analytics import ks_test, ks_test_sql
-
-    rng = np.random.default_rng(31)
-    av = [int(v) for v in rng.integers(0, 60, 150)]
-    bv = [int(v) for v in (rng.integers(0, 60, 200) + 8)]  # shifted
-    a = spark.createDataFrame([(v,) for v in av], "v long").repartition(4)
-    b = spark.createDataFrame([(v,) for v in bv], "v long").repartition(3)
-    got = ks_test(a, b, "v").collect()[0]
-
-    support = sorted(set(av) | set(bv))
-    na, nb = len(av), len(bv)
-    best = None
-    for v in support:
-        ca = sum(1 for x in av if x <= v)
-        cb = sum(1 for x in bv if x <= v)
-        g = abs(ca * nb - cb * na)
-        if best is None or (g, -v) > (best[0], -best[1]):
-            best = (g, v)
-    assert (got["n_a"], got["n_b"]) == (na, nb)
-    assert (got["d_num"], got["d_at"]) == best
-    assert got["d_den"] == na * nb
-    assert abs(got["d_stat"] - best[0] / (na * nb)) < 1e-15
-
-    # identical samples -> D = 0; disjoint -> D = 1
-    same = ks_test(a, a, "v").collect()[0]
-    assert same["d_num"] == 0
-    lo = spark.createDataFrame([(v,) for v in range(5)], "v long")
-    hi = spark.createDataFrame([(v,) for v in range(100, 104)], "v long")
-    dj = ks_test(lo, hi, "v").collect()[0]
-    assert dj["d_stat"] == 1.0 and dj["d_at"] == 4
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE ta (v BIGINT)")
-    duck.executemany("INSERT INTO ta VALUES (?)", [(v,) for v in av])
-    duck.execute("CREATE TABLE tb (v BIGINT)")
-    duck.executemany("INSERT INTO tb VALUES (?)", [(v,) for v in bv])
-    twin = duck.sql(
-        ks_test_sql("SELECT v FROM ta", "SELECT v FROM tb", "v")
-    ).fetchall()[0]
-    assert twin == tuple(
-        got[c] for c in ("n_a", "n_b", "d_num", "d_den", "d_stat", "d_at")
-    )
-
-
-def test_chi2_independence_matches_textbook_and_twin(spark):
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.analytics import (
-        chi2_independence,
-        chi2_independence_sql,
-    )
-
-    # textbook 2x2: chi2 = n(ad-bc)^2 / ((a+b)(c+d)(a+c)(b+d))
-    a, b, c, d = 20, 30, 25, 25
-    rows = (
-        [("x", "u")] * a + [("x", "v")] * b
-        + [("y", "u")] * c + [("y", "v")] * d
-    )
-    df = spark.createDataFrame(rows, "la string, lb string")
-    r = chi2_independence(df, "la", "lb").collect()[0]
-    n = a + b + c + d
-    want = n * (a * d - b * c) ** 2 / ((a + b) * (c + d) * (a + c) * (b + d))
-    assert r["df_free"] == 1 and r["n"] == n
-    assert abs(r["chi2"] - want) < 2e-6  # micro-quantized
-
-    # independence: perfectly proportional table -> chi2 == 0
-    rows0 = (
-        [("x", "u")] * 10 + [("x", "v")] * 20
-        + [("y", "u")] * 30 + [("y", "v")] * 60
-    )
-    df0 = spark.createDataFrame(rows0, "la string, lb string")
-    assert chi2_independence(df0, "la", "lb").collect()[0]["chi2_micro"] == 0
-
-    # zero-observed cell included (3x2 with a structural gap)
-    rows1 = (
-        [("p", "u")] * 5 + [("q", "v")] * 7 + [("s", "u")] * 4
-        + [("s", "v")] * 3
-    )
-    df1 = spark.createDataFrame(rows1, "la string, lb string")
-    r1 = chi2_independence(df1, "la", "lb").collect()[0]
-    # replay with numpy including O=0 cells
-    obs = np.array([[5, 0], [0, 7], [4, 3]], dtype=np.int64)
-    nn = obs.sum()
-    rr = obs.sum(1)
-    cc = obs.sum(0)
-    t = 0
-    for i in range(3):
-        for j in range(2):
-            num = float(nn * obs[i, j] - rr[i] * cc[j])
-            t += int(np.floor(num * num / float(nn * rr[i] * cc[j]) * 1e6 + 0.5))
-    assert r1["chi2_micro"] == t and r1["df_free"] == 2
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE base (la VARCHAR, lb VARCHAR)")
-    duck.executemany("INSERT INTO base VALUES (?, ?)", rows1)
-    twin = duck.sql(
-        chi2_independence_sql("SELECT la, lb FROM base", "la", "lb")
-    ).fetchall()[0]
-    assert twin == tuple(r1[c] for c in ("n", "df_free", "chi2_micro", "chi2"))
-
-
-def test_survival_table_matches_km_replay(spark):
-    """survival_table == a serial Kaplan-Meier replay (textbook
-    product-limit with deaths-before-censorings ties)."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        survival_table,
-        survival_table_sql,
-    )
-
-    # classic small KM example (durations, event flag)
-    data = [
-        (1, 6, 1), (2, 6, 1), (3, 6, 1), (4, 6, 0), (5, 7, 1),
-        (6, 9, 0), (7, 10, 1), (8, 10, 0), (9, 11, 0), (10, 13, 1),
-        (11, 16, 1), (12, 17, 0), (13, 19, 0), (14, 20, 0), (15, 22, 1),
-        (16, 23, 1), (17, 25, 0), (18, 32, 0), (19, 32, 0), (20, 34, 0),
-        (21, 35, 0),
-    ]
-    df = spark.createDataFrame(data, "id long, duration long, event int")
-    got = {r["t"]: r for r in survival_table(df).collect()}
-
-    # serial replay
-    from collections import Counter
-
-    dcnt = Counter(t for _, t, e in data if e == 1)
-    ccnt = Counter(t for _, t, e in data if e == 0)
-    times = sorted(dcnt)
-    s = 1.0
-    want = {}
-    for t in times:
-        n_risk = sum(1 for _, u, _e in data if u >= t)
-        s = s * (1.0 - dcnt[t] / n_risk)
-        want[t] = (dcnt[t], ccnt.get(t, 0), n_risk, s)
-    assert set(got) == set(want)
-    for t, (d, c, n, s) in want.items():
-        r = got[t]
-        assert (r["d"], r["censored_at"], r["n_at_risk"]) == (d, c, n), t
-        assert abs(r["surv"] - s) < 1e-12, t
-    # the freireich-style sanity: survival is non-increasing, in (0, 1]
-    sv = [got[t]["surv"] for t in times]
-    assert all(a >= b for a, b in zip(sv, sv[1:])) and 0 < sv[-1] < 1
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE base (id BIGINT, duration BIGINT, event INT)")
-    duck.executemany("INSERT INTO base VALUES (?, ?, ?)", data)
-    twin = {
-        r[0]: r[1:]
-        for r in duck.sql(
-            survival_table_sql("SELECT * FROM base")
-        ).fetchall()
-    }
-    assert twin == {
-        t: (r["d"], r["censored_at"], r["n_at_risk"]) for t, r in got.items()
-    }
-
-
-def test_mad_outliers_matches_replay_and_twin(spark):
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.analytics import (
-        mad_outliers,
-        mad_outliers_sql,
-    )
-
-    rng = np.random.default_rng(53)
-    rows = []
-    rid = 0
-    for g in range(4):
-        base = int(rng.integers(100, 1000))
-        for _ in range(21 + g):  # odd and even group sizes
-            rows.append((g, rid, base + int(rng.integers(-5, 6)))); rid += 1
-        rows.append((g, rid, base + 500)); rid += 1  # planted outlier
-    df = spark.createDataFrame(rows, "g long, id long, v long").repartition(5)
-    got = {r["id"]: r for r in mad_outliers(df).collect()}
-
-    from collections import defaultdict
-
-    per = defaultdict(list)
-    for g, i, v in rows:
-        per[g].append((v, i))
-    for g, vals in per.items():
-        n = len(vals)
-        ordered = sorted(vals)
-        med = ordered[-(-n // 2) - 1][0]  # rank ceil(n/2), 1-based
-        devs = sorted((abs(v - med), i) for v, i in vals)
-        mad = devs[-(-n // 2) - 1][0]
-        for v, i in vals:
-            r = got[i]
-            dev = abs(v - med)
-            assert (r["med"], r["mad"], r["dev"]) == (med, mad, dev), i
-            assert r["is_outlier"] == (dev > 3 * mad), i
-    # every planted +500 spike flagged; inliers not
-    flagged = {i for i, r in got.items() if r["is_outlier"]}
-    planted = {i for g, i, v in rows
-               if v - min(vv for gg, _, vv in rows if gg == g) >= 495}
-    assert planted <= flagged and len(flagged) <= len(planted) + 1
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE base (g BIGINT, id BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO base VALUES (?, ?, ?)", rows)
-    twin = {
-        r[1]: r
-        for r in duck.sql(
-            mad_outliers_sql("SELECT * FROM base")
-        ).fetchall()
-    }
-    for i, r in got.items():
-        assert twin[i] == (
-            r["g"], i, r["v"], r["med"], r["mad"], r["dev"], r["is_outlier"]
-        ), i
-
-
-def test_mann_whitney_brute_and_twin(spark):
-    import math
-    import random
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        mann_whitney_u,
-        mann_whitney_u_sql,
-    )
-
-    rng = random.Random(11)
-    rows = []
-    # group 0: arm 1 shifted up (real effect); group 1: identical arms;
-    # group 2: heavy ties; group 3: one-arm-only (z must be NULL)
-    for i in range(300):
-        rows.append((0, i % 2, rng.randrange(100) + 40 * (i % 2)))
-    for i in range(300):
-        rows.append((1, i % 2, rng.randrange(100)))
-    for i in range(200):
-        rows.append((2, i % 2, rng.randrange(4)))
-    for i in range(50):
-        rows.append((3, 1, rng.randrange(100)))
-    df = spark.createDataFrame(rows, "g long, arm long, v long")
-    got = {r["g"]: r for r in mann_whitney_u(df).collect()}
-
-    for g in range(4):
-        vals = [(v, a) for gg, a, v in rows if gg == g]
-        n = len(vals)
-        n1 = sum(a for _, a in vals)
-        n0 = n - n1
-        # doubled midranks
-        svals = sorted(v for v, _ in vals)
-        lo = {}
-        for pos, v in enumerate(svals, 1):
-            lo.setdefault(v, pos)
-        hi = {}
-        for pos, v in enumerate(svals, 1):
-            hi[v] = pos
-        r2_1 = sum(lo[v] + hi[v] for v, a in vals if a == 1)
-        u2_1 = r2_1 - n1 * (n1 + 1)
-        from collections import Counter
-
-        c = Counter(v for v, _ in vals)
-        ties = sum(t**3 - t for t in c.values())
-        r = got[g]
-        assert (r["n0"], r["n1"], r["r2_1"], r["u2_1"], r["u2_0"], r["ties"]) == (
-            n0, n1, r2_1, u2_1, 2 * n0 * n1 - u2_1, ties
-        ), g
-        if n0 and n1 and ties < n**3 - n:
-            sigma2 = (
-                float(n0) * float(n1)
-                * (float(n + 1) - float(ties) / (float(n) * float(n - 1)))
-                / 3.0
-            )
-            z = round((float(u2_1) - float(n0 * n1)) / math.sqrt(sigma2), 6)
-            assert r["z"] == z, g
-        else:
-            assert r["z"] is None, g
-    # planted effect direction: group 0 strongly positive, group 1 small
-    assert got[0]["z"] > 5.0 and abs(got[1]["z"]) < 3.0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE ab (g BIGINT, arm BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO ab VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: r
-        for r in duck.sql(mann_whitney_u_sql("SELECT * FROM ab")).fetchall()
-    }
-    for g, r in got.items():
-        assert twin[g] == (
-            g, r["n0"], r["n1"], r["r2_1"], r["u2_1"], r["u2_0"],
-            r["ties"], r["z"],
-        ), g
-
-
-def test_spearman_brute_and_twin(spark):
-    import math
-    import random
-    from collections import Counter
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        spearman_corr,
-        spearman_corr_sql,
-    )
-
-    rng = random.Random(7)
-    rows = []
-    # g0: monotone increasing with noise + ties; g1: independent;
-    # g2: perfectly anti-monotone (rho = -1); g3: constant x (rho NULL)
-    for i in range(200):
-        rows.append((0, i // 3, (i // 3) * 2 + rng.randrange(20)))
-    for i in range(200):
-        rows.append((1, rng.randrange(50), rng.randrange(50)))
-    for i in range(100):
-        rows.append((2, i, -i))
-    for i in range(40):
-        rows.append((3, 5, rng.randrange(10)))
-    df = spark.createDataFrame(rows, "g long, x long, y long")
-    got = {r["g"]: r for r in spearman_corr(df).collect()}
-
-    def dranks(vals):
-        sv = sorted(vals)
-        lo, hi = {}, {}
-        for p, v in enumerate(sv, 1):
-            lo.setdefault(v, p)
-            hi[v] = p
-        return {v: lo[v] + hi[v] for v in set(vals)}
-
-    for g in range(4):
-        xs = [x for gg, x, _ in rows if gg == g]
-        ys = [y for gg, _, y in rows if gg == g]
-        n = len(xs)
-        rx, ry = dranks(xs), dranks(ys)
-        cx = [rx[x] - (n + 1) for x in xs]
-        cy = [ry[y] - (n + 1) for y in ys]
-        num = sum(a * b for a, b in zip(cx, cy))
-        denx = sum(a * a for a in cx)
-        deny = sum(b * b for b in cy)
-        r = got[g]
-        assert (r["n"], r["num"], r["denx"], r["deny"]) == (
-            n, num, denx, deny
-        ), g
-        if denx > 0 and deny > 0:
-            rho = round(
-                float(num) / (math.sqrt(float(denx)) * math.sqrt(float(deny))),
-                6,
-            )
-            assert r["rho"] == rho, g
-        else:
-            assert r["rho"] is None, g
-    assert got[0]["rho"] > 0.9
-    assert abs(got[1]["rho"]) < 0.3
-    assert got[2]["rho"] == -1.0
-    assert got[3]["rho"] is None
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE xy (g BIGINT, x BIGINT, y BIGINT)")
-    duck.executemany("INSERT INTO xy VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: r
-        for r in duck.sql(
-            spearman_corr_sql("SELECT * FROM xy")
-        ).fetchall()
-    }
-    for g, r in got.items():
-        assert twin[g] == (
-            g, r["n"], r["num"], r["denx"], r["deny"], r["rho"]
-        ), g
-
-
-def test_seasonal_decompose_brute_and_twin(spark):
-    import random
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        seasonal_decompose,
-        seasonal_decompose_sql,
-    )
-
-    rng = random.Random(5)
-    rows = []
-    # g0: trend + weekly pattern, with a GAP (days 40-42 missing)
-    pat = [0, 50, 120, 90, -30, -80, -60]
-    for d in range(80):
-        if 40 <= d <= 42:
-            continue
-        rows.append((0, d, 1000 + 3 * d + pat[d % 7] + rng.randrange(10)))
-    # g1: shorter than one period (trend never defined)
-    for d in range(5):
-        rows.append((1, d, 100 + d))
-    df = spark.createDataFrame(rows, "g long, t long, v long")
-    got = {(r["g"], r["t"]): r for r in seasonal_decompose(df).collect()}
-    assert len(got) == len(rows)
-
-    by_g = {}
-    for g, t, v in rows:
-        by_g.setdefault(g, {})[t] = v
-    # brute replay
-    det_by_phase = {}
-    brute = {}
-    for g, series in by_g.items():
-        for t, v in series.items():
-            win = [series.get(t + d) for d in range(-3, 4)]
-            if all(x is not None for x in win):
-                trend = sum(win)
-                det = 7 * v - trend
-                det_by_phase.setdefault((g, t % 7), []).append(det)
-            else:
-                trend = det = None
-            brute[(g, t)] = (v, t % 7, trend, det)
-    for (g, t), (v, ph, trend, det) in brute.items():
-        r = got[(g, t)]
-        assert (r["v"], r["phase"], r["trend_s"], r["det_s"]) == (
-            v, ph, trend, det
-        ), (g, t)
-        dets = det_by_phase.get((g, ph))
-        if dets is None:
-            assert r["seas_sum"] is None and r["resid"] is None
-        else:
-            assert (r["seas_sum"], r["seas_cnt"]) == (sum(dets), len(dets))
-            if det is not None:
-                want = round(
-                    (float(det) * float(len(dets)) - float(sum(dets)))
-                    / (7.0 * float(len(dets))),
-                    6,
-                )
-                assert r["resid"] == want, (g, t)
-    # seasonal indices recover the planted weekly pattern's ordering
-    seas = {
-        ph: got[(0, 21 + ph)]["seas_sum"] / got[(0, 21 + ph)]["seas_cnt"] / 7
-        for ph in range(7)
-    }
-    assert max(seas, key=seas.get) == 2 and min(seas, key=seas.get) == 5
-    # g1 (shorter than a period): no trend anywhere
-    assert all(got[(1, d)]["trend_s"] is None for d in range(5))
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE s (g BIGINT, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO s VALUES (?, ?, ?)", rows)
-    twin = {
-        (r[0], r[1]): r
-        for r in duck.sql(
-            seasonal_decompose_sql("SELECT * FROM s")
-        ).fetchall()
-    }
-    assert len(twin) == len(got)
-    for key, r in got.items():
-        assert twin[key] == (
-            r["g"], r["t"], r["v"], r["phase"], r["trend_s"], r["det_s"],
-            r["seas_sum"], r["seas_cnt"], r["resid"],
-        ), key
-
-
-def test_kendall_tau_brute_and_twin(spark):
-    import math
-    import random
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        kendall_tau,
-        kendall_tau_sql,
-    )
-
-    rng = random.Random(11)
-    rows = []
-    # g0: monotone with ties; g1: independent; g2: anti-monotone
-    # (tau = -1); g3: constant x (tau NULL, nc = nd = 0)
-    for i in range(120):
-        rows.append((0, i // 4, (i // 4) * 3 + rng.randrange(6)))
-    for i in range(120):
-        rows.append((1, rng.randrange(15), rng.randrange(15)))
-    for i in range(60):
-        rows.append((2, i, -i))
-    for i in range(30):
-        rows.append((3, 7, rng.randrange(5)))
-    df = spark.createDataFrame(rows, "g long, x long, y long")
-    got = {r["g"]: r for r in kendall_tau(df).collect()}
-
-    for g in range(4):
-        pts = [(x, y) for gg, x, y in rows if gg == g]
-        n = len(pts)
-        nc = nd = 0
-        for i in range(n):
-            for j in range(i + 1, n):
-                (xa, ya), (xb, yb) = pts[i], pts[j]
-                if xa == xb or ya == yb:
-                    continue
-                if (xa < xb) == (ya < yb):
-                    nc += 1
-                else:
-                    nd += 1
-        from collections import Counter
-
-        tx = Counter(x for x, _ in pts)
-        ty = Counter(y for _, y in pts)
-        n0 = n * (n - 1) // 2
-        n1 = sum(t * (t - 1) // 2 for t in tx.values())
-        n2 = sum(t * (t - 1) // 2 for t in ty.values())
-        r = got[g]
-        assert (r["n"], r["nc"], r["nd"], r["n1"], r["n2"]) == (
-            n, nc, nd, n1, n2
-        ), g
-        if n0 > n1 and n0 > n2:
-            tau = round(
-                (float(nc) - float(nd))
-                / (math.sqrt(float(n0 - n1)) * math.sqrt(float(n0 - n2))),
-                6,
-            )
-            assert r["tau"] == tau, g
-        else:
-            assert r["tau"] is None, g
-    assert got[0]["tau"] > 0.85
-    assert abs(got[1]["tau"]) < 0.25
-    assert got[2]["tau"] == -1.0
-    assert got[3]["tau"] is None
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE xy (g BIGINT, x BIGINT, y BIGINT)")
-    duck.executemany("INSERT INTO xy VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: r for r in duck.sql(kendall_tau_sql("SELECT * FROM xy")).fetchall()
-    }
-    assert set(twin) == set(got)
-    for g, r in got.items():
-        assert twin[g] == (
-            g, r["n"], r["nc"], r["nd"], r["n1"], r["n2"], r["tau"]
-        ), g
-
-
-def test_isotonic_brute_and_twin(spark):
-    import random
-    from fractions import Fraction
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        isotonic_fit,
-        isotonic_fit_sql,
-    )
-
-    rng = random.Random(17)
-    rows = []
-    # g0: noisy increasing; g1: strictly decreasing (fit = one pool);
-    # g2: negative values with ties (floor-division sign behavior)
-    for x in range(30):
-        for _ in range(rng.randrange(1, 5)):
-            rows.append(("0", x, 10 * x + rng.randrange(-40, 41)))
-    for x in range(20):
-        rows.append(("1", x, 100 - 7 * x))
-    for x in range(15):
-        for _ in range(2):
-            rows.append(("2", x, rng.randrange(-50, 10)))
-    df = spark.createDataFrame(rows, "g string, x long, y long")
-    got = {
-        (r["g"], r["x"]): r for r in isotonic_fit(df).collect()
-    }
-
-    # brute: exact minimax over Fractions, then floor to micro
-    for g in ("0", "1", "2"):
-        pts = sorted(
-            {x for gg, x, _ in rows if gg == g}
-        )
-        s = {x: sum(y for gg, xx, y in rows if gg == g and xx == x) for x in pts}
-        w = {x: sum(1 for gg, xx, _ in rows if gg == g and xx == x) for x in pts}
-        m = len(pts)
-        for i, xi in enumerate(pts):
-            best = None
-            for j in range(i + 1):
-                worst = None
-                for k in range(i, m):
-                    seg = pts[j : k + 1]
-                    a = Fraction(sum(s[x] for x in seg), sum(w[x] for x in seg))
-                    if worst is None or a < worst:
-                        worst = a
-                if best is None or worst > best:
-                    best = worst
-            num = 1000000 * best.numerator
-            den = best.denominator
-            fm = abs(num) // den if num >= 0 else -(abs(num) // den)
-            r = got[(g, xi)]
-            assert (r["w"], r["fitted_micro"]) == (w[xi], fm), (g, xi)
-            assert r["fitted"] == fm / 1000000.0
-        # monotone nondecreasing
-        fs = [got[(g, x)]["fitted_micro"] for x in pts]
-        assert fs == sorted(fs), g
-    # g1 pools to a single average
-    assert len({got[("1", x)]["fitted_micro"] for x in range(20)}) == 1
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE xy (g VARCHAR, x BIGINT, y BIGINT)")
-    duck.executemany("INSERT INTO xy VALUES (?, ?, ?)", rows)
-    twin = {
-        (t[0], t[1]): t
-        for t in duck.sql(isotonic_fit_sql("SELECT * FROM xy")).fetchall()
-    }
-    assert set(twin) == set(got)
-    for key, r in got.items():
-        assert twin[key] == (
-            key[0], key[1], r["w"], r["fitted_micro"], r["fitted"]
-        ), key
-
-
-def test_theil_sen_brute_and_twin(spark):
-    """Fraction brute force (sorted with exact Fractions) + breakdown
-    robustness: 25% gross outliers must not move the slope off the
-    planted line."""
-    import random
-    from fractions import Fraction
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import theil_sen, theil_sen_sql
-
-    rng = random.Random(99)
-    rows = []
-    for pid in range(40):
-        x = pid % 20
-        if pid % 4 == 0:  # 25% outliers
-            y = rng.randrange(-5000, 5000)
-        else:
-            y = 7 * x + 3 + rng.randrange(-2, 3)
-        rows.append(("a", pid, x, y))
-    # second group: exact line, even n, duplicate x values
-    for pid in range(40, 60):
-        x = (pid % 5) * 2
-        rows.append(("b", pid, x, -3 * x + 11))
-
-    df = spark.createDataFrame(rows, "g string, pid long, x long, y long")
-    got = {
-        r["g"]: (
-            r["n_pts"], r["n_pairs"], r["num"], r["den"],
-            r["inum"], r["iden"], r["slope"], r["intercept"],
-        )
-        for r in theil_sen(df).collect()
-    }
-
-    for g in ("a", "b"):
-        pts = [(x, y) for gg, p, x, y in rows if gg == g]
-        slopes = sorted(
-            Fraction(y2 - y1, x2 - x1)
-            for i, (x1, y1) in enumerate(pts)
-            for (x2, y2) in pts[i + 1:]
-            if x2 != x1
-        )
-        m = slopes[(len(slopes) - 1) // 2]
-        resid = sorted(Fraction(y) - m * x for x, y in pts)
-        b = resid[(len(pts) - 1) // 2]
-        r = got[g]
-        assert (Fraction(r[2], r[3]), Fraction(r[4], r[5])) == (m, b), g
-        assert r[0] == len(pts) and r[1] == len(slopes)
-    # robustness: group a recovers the planted slope within the noise
-    assert abs(got["a"][6] - 7) < 0.5
-    # exact line: group b nails it
-    assert (got["b"][2], got["b"][3]) == (-3, 1)
-    assert (got["b"][4], got["b"][5]) == (11, 1)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE ts (g VARCHAR, pid BIGINT, x BIGINT, y BIGINT)")
-    duck.executemany("INSERT INTO ts VALUES (?, ?, ?, ?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            theil_sen_sql("SELECT g, pid, x, y FROM ts")
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_kruskal_wallis_matches_textbook_and_twin(spark):
-    """Textbook H (scipy.stats.kruskal formula in pure Python with float
-    midranks) must match within the 1/1024 quantization; twin exact."""
-    import random
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        kruskal_wallis,
-        kruskal_wallis_sql,
-    )
-
-    rng = random.Random(5)
-    rows = []
-    for i in range(300):
-        arm = i % 3
-        rows.append(("a", arm, rng.randrange(0, 40) + 4 * arm))
-    # group with every value tied -> h NULL
-    for i in range(30):
-        rows.append(("b", i % 3, 7))
-    df = spark.createDataFrame(rows, "g string, arm long, v long")
-    got = {r["g"]: r for r in kruskal_wallis(df).collect()}
-
-    # textbook H for group a
-    vals = [(v, arm) for g, arm, v in rows if g == "a"]
-    svals = sorted(v for v, _ in vals)
-    # float midranks
-    rank = {}
-    i = 0
-    while i < len(svals):
-        j = i
-        while j < len(svals) and svals[j] == svals[i]:
-            j += 1
-        rank[svals[i]] = (i + 1 + j) / 2
-        i = j
-    n = len(vals)
-    arms = sorted(set(a for _, a in vals))
-    s = sum(
-        sum(rank[v] for v, a in vals if a == arm) ** 2
-        / sum(1 for _, a in vals if a == arm)
-        for arm in arms
-    )
-    from collections import Counter
-
-    tie = sum(t**3 - t for t in Counter(svals).values())
-    h_text = (12.0 * s / (n * (n + 1)) - 3 * (n + 1)) / (
-        1 - tie / (n**3 - n)
-    )
-    assert abs(got["a"]["h"] - h_text) < 1e-3
-    assert got["a"]["n"] == n and got["a"]["k_arms"] == 3
-    assert got["a"]["ties"] == tie
-    assert got["b"]["h"] is None
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE kw (g VARCHAR, arm BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO kw VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: tuple(r)
-        for r in duck.sql(
-            kruskal_wallis_sql("SELECT * FROM kw")
-        ).fetchall()
-    }
-    for g in ("a", "b"):
-        r = got[g]
-        assert twin[g] == (
-            g, r["n"], r["k_arms"], r["ties"], r["s_q"], r["h"]
-        ), g
 
 
 def test_ewma_brute_and_twin(spark):
@@ -2207,1053 +914,6 @@ def test_ewma_brute_and_twin(spark):
         ).fetchall()
     }
     assert twin == got
-
-
-def test_benford_digits_brute_and_twin(spark):
-    """Scalar replay including int64-extreme values, zero/negative
-    exclusion, and a perfectly-Benford synthetic group (terms small)."""
-    import math
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        benford_digits,
-        benford_digits_sql,
-    )
-
-    rows = [("x", v) for v in (
-        1, 9, 10, 99, 42, -7, 0, 912345678901234567, 9223372036854775807,
-        100000000000000000, 7,
-    )]
-    # group y: counts proportional to Benford masses (scaled by 1e3)
-    masses = [301, 176, 125, 97, 79, 67, 58, 51, 46]
-    for d, m in zip(range(1, 10), masses):
-        rows += [("y", d * 10 + i % 10) for i in range(m)]
-
-    df = spark.createDataFrame(rows, "g string, v long")
-    got = {
-        (r["g"], r["digit"]): (
-            r["n_obs"], r["n_total"], r["expected_micro"],
-            r["chi2_term_micro"],
-        )
-        for r in benford_digits(df).collect()
-    }
-
-    from collections import Counter
-
-    for g in ("x", "y"):
-        vals = [v for gg, v in rows if gg == g and v > 0]
-        digs = Counter(int(str(v)[0]) for v in vals)
-        n = len(vals)
-        for d in range(1, 10):
-            p = math.floor(math.log10(1 + 1 / d) * 1e6 + 0.5)
-            e = n * p / 1e6
-            term = math.floor((digs[d] - e) * (digs[d] - e) / e * 1e6 + 0.5)
-            assert got[(g, d)] == (digs[d], n, p, term), (g, d)
-    # near-Benford group: every per-digit term is tiny (< 0.2)
-    assert all(got[("y", d)][3] < 200000 for d in range(1, 10))
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE bf (g VARCHAR, v BIGINT)")
-    duck.executemany("INSERT INTO bf VALUES (?, ?)", rows)
-    twin = {
-        (r[0], r[1]): tuple(r[2:])
-        for r in duck.sql(
-            benford_digits_sql("SELECT * FROM bf")
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_conformal_coverage_guarantee_and_twin(spark):
-    """The finite-sample guarantee itself: with exchangeable cal/test
-    scores (same hash family), empirical coverage >= 1 - alpha; plus a
-    tiny-calibration group (k > n -> NULL thresh, all covered) and a
-    sorted-order brute replay of the threshold."""
-    import math
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        conformal_flags,
-        conformal_flags_sql,
-    )
-
-    cal_rows = [("a", i, (i * 7919) % 500) for i in range(1, 400, 2)]
-    test_rows = [("a", i, (i * 7919) % 500) for i in range(0, 400, 2)]
-    cal_rows += [("tiny", 1000, 7)]          # n=1, k=ceil(0.9*2)=2 > 1
-    test_rows += [("tiny", 1001, 99999)]
-    cdf = spark.createDataFrame(cal_rows, "g string, pid long, s long")
-    tdf = spark.createDataFrame(test_rows, "g string, pid long, s long")
-    got = {
-        (r["g"], r["pid"]): r
-        for r in conformal_flags(cdf, tdf, alpha_micro=100_000).collect()
-    }
-
-    # brute threshold for group a
-    scores = sorted(s for g, _, s in cal_rows if g == "a")
-    n = len(scores)
-    k = math.ceil(0.9 * (n + 1))
-    thresh = scores[k - 1]
-    ncov = 0
-    for g, pid, s in test_rows:
-        r = got[(g, pid)]
-        if g == "a":
-            assert r["thresh"] == thresh and r["k"] == k and r["n_cal"] == n
-            assert r["covered"] == (s <= thresh)
-            ncov += int(r["covered"])
-        else:
-            assert r["thresh"] is None and r["covered"] is True
-    n_test = sum(1 for g, *_ in test_rows if g == "a")
-    assert ncov / n_test >= 0.9 - 0.05  # guarantee modulo finite-sample noise
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE calr (g VARCHAR, pid BIGINT, s BIGINT)")
-    duck.executemany("INSERT INTO calr VALUES (?, ?, ?)", cal_rows)
-    duck.execute("CREATE TABLE tstr (g VARCHAR, pid BIGINT, s BIGINT)")
-    duck.executemany("INSERT INTO tstr VALUES (?, ?, ?)", test_rows)
-    twin = {
-        (r[0], r[1]): tuple(r)
-        for r in duck.sql(
-            conformal_flags_sql(
-                "SELECT * FROM calr", "SELECT * FROM tstr",
-                alpha_micro=100_000,
-            )
-        ).fetchall()
-    }
-    for key, r in got.items():
-        assert twin[key] == (
-            r["g"], r["pid"], r["s"], r["n_cal"], r["k"],
-            r["thresh"], r["covered"],
-        ), key
-
-
-def test_trimmed_mean_brute_and_twin(spark):
-    """Sorted-list brute (scipy.stats.trim_mean / winsorize semantics
-    with k = floor(n·trim)) on random multisets with heavy ties, a
-    degenerate tiny group (n <= 2k -> NULL means), and outlier
-    robustness."""
-    import random
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        trimmed_mean,
-        trimmed_mean_sql,
-    )
-
-    rng = random.Random(4)
-    rows = []
-    for i in range(157):
-        v = rng.randrange(0, 12)  # heavy ties
-        if i % 13 == 0:
-            v = 10_000 + i  # gross outliers
-        rows.append(("a", v))
-    rows += [("tiny", 5), ("tiny", 6)]  # n=2, k=0 -> plain mean... keep
-    rows += [("one", 9)]
-    df = spark.createDataFrame(rows, "g string, v long")
-    got = {r["g"]: r for r in trimmed_mean(df, trim_micro=200_000).collect()}
-
-    for g in ("a", "tiny", "one"):
-        vals = sorted(v for gg, v in rows if gg == g)
-        n = len(vals)
-        k = n * 200_000 // 1_000_000
-        kept = vals[k: n - k]
-        r = got[g]
-        assert (r["n"], r["k"], r["trimmed_n"]) == (n, k, len(kept))
-        assert r["trimmed_sum"] == sum(kept)
-        assert r["trimmed_mean"] == sum(kept) / len(kept)
-        assert (r["v_lo"], r["v_hi"]) == (vals[k], vals[n - k - 1])
-        wvals = [max(min(v, vals[n - k - 1]), vals[k]) for v in vals]
-        assert r["winsor_sum"] == sum(wvals)
-        assert r["winsor_mean"] == sum(wvals) / n
-    # robustness: outliers are >= 10000 but the trimmed mean stays small
-    assert got["a"]["trimmed_mean"] < 15
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE tm (g VARCHAR, v BIGINT)")
-    duck.executemany("INSERT INTO tm VALUES (?, ?)", rows)
-    twin = {
-        r[0]: tuple(r)
-        for r in duck.sql(
-            trimmed_mean_sql("SELECT * FROM tm", trim_micro=200_000)
-        ).fetchall()
-    }
-    for g, r in got.items():
-        assert twin[g] == (
-            g, r["n"], r["k"], r["trimmed_n"], r["trimmed_sum"],
-            r["trimmed_mean"], r["v_lo"], r["v_hi"], r["winsor_sum"],
-            r["winsor_mean"],
-        ), g
-
-
-def test_cross_correlation_brute_and_shift_peak(spark):
-    """Float-Pearson brute per lag + the designed property: a shifted
-    copy peaks at exactly its shift with r == 1; constant overlap ->
-    NULL."""
-    import random
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        cross_correlation,
-        cross_correlation_sql,
-    )
-
-    rng = random.Random(21)
-    xs = [rng.randrange(0, 50) for _ in range(60)]
-    rows = []
-    for t in range(60):
-        y = xs[t - 2] if t >= 2 else rng.randrange(0, 50)
-        rows.append(("a", t, xs[t], y))
-    rows += [("c", t, 7, t * t % 13) for t in range(20)]  # constant x
-    df = spark.createDataFrame(rows, "g string, t long, x long, y long")
-    got = {
-        (r["g"], r["lag"]): r
-        for r in cross_correlation(df, max_lag=4).collect()
-    }
-
-    for lag in range(-4, 5):
-        pairs = [
-            (x, [r for r in rows if r[0] == "a" and r[1] == t + lag])
-            for _, t, x, _ in [r for r in rows if r[0] == "a"]
-        ]
-        xv, yv = [], []
-        amap = {t: (x, y) for g, t, x, y in rows if g == "a"}
-        for t in amap:
-            if t + lag in amap:
-                xv.append(amap[t][0])
-                yv.append(amap[t + lag][1])
-        n = len(xv)
-        r = got[("a", lag)]
-        assert r["n"] == n
-        sx, sy = sum(xv), sum(yv)
-        sxy = sum(a * b for a, b in zip(xv, yv))
-        sx2, sy2 = sum(a * a for a in xv), sum(b * b for b in yv)
-        assert (r["sx"], r["sy"], r["sxy"], r["sx2"], r["sy2"]) == (
-            sx, sy, sxy, sx2, sy2
-        )
-        import math
-
-        vx, vy = n * sx2 - sx * sx, n * sy2 - sy * sy
-        if vx > 0 and vy > 0:
-            want = (n * sxy - sx * sy) / (math.sqrt(vx) * math.sqrt(vy))
-            assert abs(r["r"] - want) < 1e-12
-    # y is x shifted by 2 -> r == 1 at lag 2 (overlap excludes the head)
-    assert got[("a", 2)]["r"] == 1.0
-    assert all(
-        got[("a", l)]["r"] < 0.999 for l in range(-4, 5) if l != 2
-    )
-    # constant x -> NULL r at every lag
-    assert all(got[("c", l)]["r"] is None for l in range(-4, 5))
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE xc (g VARCHAR, t BIGINT, x BIGINT, y BIGINT)")
-    duck.executemany("INSERT INTO xc VALUES (?, ?, ?, ?)", rows)
-    twin = {
-        (r[0], r[1]): tuple(r)
-        for r in duck.sql(
-            cross_correlation_sql("SELECT * FROM xc", max_lag=4)
-        ).fetchall()
-    }
-    for key, r in got.items():
-        assert twin[key] == (
-            r["g"], r["lag"], r["n"], r["sx"], r["sy"], r["sxy"],
-            r["sx2"], r["sy2"], r["r"],
-        ), key
-
-
-def test_wasserstein_drift_matches_scipy_style_brute_and_twin(spark):
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.analytics import (
-        wasserstein_drift,
-        wasserstein_drift_sql,
-    )
-
-    rng = np.random.default_rng(47)
-    refv = [int(v) for v in rng.integers(0, 40, 180)]
-    curr = [("a", int(v)) for v in rng.integers(0, 40, 120)] + [
-        ("b", int(v + 7)) for v in rng.integers(0, 40, 90)
-    ]
-    cur = spark.createDataFrame(curr, "g string, v long").repartition(4)
-    ref = spark.createDataFrame(
-        [(v,) for v in refv], "v long"
-    ).repartition(3)
-    got = {
-        r["g"]: r
-        for r in wasserstein_drift(cur, ref, "v", "g").collect()
-    }
-
-    def brute_w1(xs, ys):
-        # integral of |Fx - Fy| over the union support (unit: raw value)
-        support = sorted(set(xs) | set(ys))
-        nx, ny = len(xs), len(ys)
-        num = 0
-        for v, vn in zip(support, support[1:]):
-            cx = sum(1 for t in xs if t <= v)
-            cy = sum(1 for t in ys if t <= v)
-            num += abs(cx * ny - cy * nx) * (vn - v)
-        return num, nx * ny
-
-    for g in ("a", "b"):
-        xs = [v for gg, v in curr if gg == g]
-        num, den = brute_w1(xs, refv)
-        r = got[g]
-        assert (r["w1_num"], r["w1_den"]) == (num, den)
-        assert (r["n_cur"], r["n_ref"]) == (len(xs), len(refv))
-        assert r["w1"] == num / den
-        # cross-check against the closed-form equal-weights answer
-        q = np.linspace(0, 1, 12001)[1:-1]
-        approx = float(
-            np.mean(
-                np.abs(
-                    np.quantile(xs, q, method="inverted_cdf")
-                    - np.quantile(refv, q, method="inverted_cdf")
-                )
-            )
-        )
-        assert abs(r["w1"] - approx) < 0.02
-
-    # shift invariance: W1(x, x + c) == c for same-size samples
-    base = [("s", v) for v in range(50)]
-    sh = spark.createDataFrame(base, "g string, v long")
-    shref = spark.createDataFrame([(v + 9,) for v in range(50)], "v long")
-    r = wasserstein_drift(sh, shref, "v", "g").collect()[0]
-    assert r["w1"] == 9.0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE tc (g VARCHAR, v BIGINT)")
-    duck.executemany("INSERT INTO tc VALUES (?, ?)", curr)
-    duck.execute("CREATE TABLE tr (v BIGINT)")
-    duck.executemany("INSERT INTO tr VALUES (?)", [(v,) for v in refv])
-    twin = duck.sql(
-        wasserstein_drift_sql(
-            "SELECT g, v FROM tc", "SELECT v FROM tr", "v", "g"
-        )
-    ).fetchall()
-    for g, n_cur, n_ref, num, den, w1 in twin:
-        r = got[g]
-        assert (
-            r["n_cur"], r["n_ref"], r["w1_num"], r["w1_den"], r["w1"]
-        ) == (n_cur, n_ref, num, den, w1)
-
-
-def test_target_encode_brute_and_twin(spark):
-    """Exact-integer replay of the smoothed mean encoding on a skewed
-    categorical with a rare category (shrinks to the prior) and a
-    frequent pure-1 category (stays near its own mean), plus the
-    DuckDB twin byte-for-byte."""
-    import random
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        target_encode,
-        target_encode_sql,
-    )
-
-    rng = random.Random(11)
-    rows = []
-    for _ in range(400):
-        rows.append(("common_lo", 1 if rng.random() < 0.1 else 0))
-    for _ in range(300):
-        rows.append(("common_hi", 1))
-    rows.append(("rare", 1))  # n=1: encoding must sit near the prior
-    df = spark.createDataFrame(rows, "cat string, y int")
-    got = {r["cat"]: r for r in target_encode(df, m=20).collect()}
-
-    N = len(rows)
-    S = sum(y for _, y in rows)
-    for cat in ("common_lo", "common_hi", "rare"):
-        n = sum(1 for c, _ in rows if c == cat)
-        sy = sum(y for c, y in rows if c == cat)
-        enc = (sy * N + 20 * S) * 1_000_000 // ((n + 20) * N)
-        r = got[cat]
-        assert (r["n"], r["sum_y"], r["enc_micro"]) == (n, sy, enc), cat
-    # shrinkage properties: rare sits between its own mean region and
-    # the prior, and much closer to the prior than common_hi is to it
-    prior_micro = S * 1_000_000 // N
-    assert abs(got["rare"]["enc_micro"] - prior_micro) < 50_000
-    assert got["common_hi"]["enc_micro"] > prior_micro + 200_000
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE te (cat VARCHAR, y INTEGER)")
-    duck.executemany("INSERT INTO te VALUES (?, ?)", rows)
-    twin = {
-        r[0]: tuple(r)
-        for r in duck.sql(
-            target_encode_sql("SELECT * FROM te", m=20)
-        ).fetchall()
-    }
-    for cat, r in got.items():
-        assert twin[cat] == (cat, r["n"], r["sum_y"], r["enc_micro"]), cat
-
-
-def test_abc_classes_brute_and_twin(spark):
-    """Serial-replay brute of the descending Pareto scan on a skewed
-    value set with heavy ties (same-value items must rank by key), a
-    dominant head item, and the DuckDB twin byte-for-byte."""
-    import random
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        abc_classes,
-        abc_classes_sql,
-    )
-
-    rng = random.Random(7)
-    rows = [(0, 50_000)]  # dominant head
-    rows += [(i, 1_000) for i in range(1, 6)]  # tied block
-    rows += [(i, rng.randrange(1, 500)) for i in range(6, 60)]
-    df = spark.createDataFrame(rows, "key long, value_c long")
-    got = {
-        r["key"]: (r["rank"], r["cum_c"], r["total_c"], r["share_micro"], r["abc"])
-        for r in abc_classes(df).collect()
-    }
-
-    order = sorted(rows, key=lambda r: (-r[1], r[0]))
-    total = sum(v for _, v in rows)
-    cum = 0
-    for rank0, (k, v) in enumerate(order):
-        cum += v
-        abc = (
-            "A" if cum * 1_000_000 <= 800_000 * total
-            else "B" if cum * 1_000_000 <= 950_000 * total
-            else "C"
-        )
-        assert got[k] == (rank0 + 1, cum, total, cum * 1_000_000 // total, abc), k
-    # the dominant item is A; the long tail ends in C
-    assert got[0][4] == "A" and got[order[-1][0]][4] == "C"
-    # tied block ranks strictly by key
-    tied = [got[i][0] for i in range(1, 6)]
-    assert tied == sorted(tied)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE abc_t (key BIGINT, value_c BIGINT)")
-    duck.executemany("INSERT INTO abc_t VALUES (?, ?)", rows)
-    twin = {
-        r[0]: tuple(r[2:])
-        for r in duck.sql(abc_classes_sql("SELECT * FROM abc_t")).fetchall()
-    }
-    for k, g in got.items():
-        assert twin[k] == g, k
-
-
-def test_markov_attribution_replay_and_twin(spark):
-    """Scalar replay of the journey chain + fixed-point absorption on a
-    designed fixture (a channel that always converts, one that never
-    does, direct conversions, multi-path users), plus the designed
-    properties: the never-converting channel has zero removal effect;
-    the always-converting channel dominates; twin byte-for-byte."""
-    from datetime import datetime, timedelta
-
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        markov_attribution,
-        markov_attribution_sql,
-    )
-
-    t0 = datetime(2024, 1, 1)
-    rows, eid = [], 0
-
-    def ev(u, types):
-        nonlocal eid
-        for ty in types:
-            rows.append((u, t0 + timedelta(minutes=eid), eid, ty))
-            eid += 1
-
-    ev(1, ["gold", "purchase"])
-    ev(2, ["gold", "purchase"])
-    ev(3, ["dead", "dead"])
-    ev(4, ["purchase"])  # direct: START -> CONV
-    ev(5, ["gold", "dead"])  # gold -> dead -> NULL
-    ev(6, ["dead", "gold", "purchase", "dead"])  # multi-path user
-    df = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    chans = ["dead", "gold"]
-    got = {
-        r["channel"]: (
-            r["out_total"], r["base_micro"], r["removed_micro"],
-            r["effect_micro"], r["attribution_micro"],
-        )
-        for r in markov_attribution(df, channels=chans, iters=24).collect()
-    }
-
-    # scalar replay
-    MICRO = 1_000_000
-    cnt, tot = {}, {}
-    paths = {
-        1: [["gold", "purchase"]], 2: [["gold", "purchase"]],
-        3: [["dead", "dead"]], 4: [["purchase"]],
-        5: [["gold", "dead"]], 6: [["dead", "gold", "purchase"], ["dead"]],
-    }
-    for u, ps in paths.items():
-        for p in ps:
-            prev = "START"
-            converted = False
-            for ty in p:
-                to = "CONV" if ty == "purchase" else ty
-                cnt[(prev, to)] = cnt.get((prev, to), 0) + 1
-                if to == "CONV":
-                    converted = True
-                prev = to
-            if not converted:
-                cnt[(prev, "NULL")] = cnt.get((prev, "NULL"), 0) + 1
-    for (f, _), n in cnt.items():
-        tot[f] = tot.get(f, 0) + n
-    transient = ["START"] + [c for c in chans if c in tot]
-
-    def absorb(removed):
-        v = {s: 0 for s in transient}
-        v["CONV"] = MICRO
-        v["NULL"] = 0
-        for _ in range(24):
-            nxt = {}
-            for s in transient:
-                if s == removed:
-                    nxt[s] = 0
-                    continue
-                acc = 0
-                for (f, t), n in cnt.items():
-                    if f == s:
-                        vt = 0 if t == removed else v.get(t, 0)
-                        acc += (n * vt) // tot[s]
-                nxt[s] = acc
-            v.update(nxt)
-        return v["START"]
-
-    base = absorb(None)
-    effs = {c: base - absorb(c) for c in chans}
-    teff = sum(effs.values())
-    for c in chans:
-        want = (
-            tot.get(c, 0), base, base - effs[c], effs[c],
-            effs[c] * MICRO // teff if teff else 0,
-        )
-        assert got[c] == want, (c, got[c], want)
-    # designed properties
-    assert got["dead"][3] < got["gold"][3]
-    assert got["gold"][4] > 500_000
-
-    duck = duckdb.connect()
-    duck.execute(
-        "CREATE TABLE mkev (user_id BIGINT, ts TIMESTAMP,"
-        " event_id BIGINT, event_type VARCHAR)"
-    )
-    duck.executemany("INSERT INTO mkev VALUES (?,?,?,?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            markov_attribution_sql(
-                "SELECT * FROM mkev", channels=chans, iters=24
-            )
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_topsis_rank_replay_and_dominance(spark):
-    """Scalar replay of the integer TOPSIS variant plus the designed
-    property: an item that dominates on every criterion ranks first and
-    a fully dominated item ranks last; twin byte-for-byte."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        TOPSIS_SCALE,
-        topsis_rank,
-        topsis_rank_sql,
-    )
-
-    rows = [
-        (1, 100, 5, 50),   # dominator: max benefit, min cost, max benefit
-        (2, 80, 20, 30),
-        (3, 50, 50, 20),
-        (4, 10, 90, 5),    # dominated on everything
-        (5, 80, 20, 30),   # duplicate of 2 -> same closeness, id tiebreak
-    ]
-    crit = [("a", True, 3), ("b", False, 2), ("c", True, 1)]
-    df = spark.createDataFrame(rows, "iid long, a long, b long, c long")
-    got = {r["iid"]: r.asDict() for r in topsis_rank(df, "iid", crit).collect()}
-
-    mx = {c: max(r[i + 1] for r in rows) for i, (c, _, _) in enumerate(crit)}
-    sc = {
-        r[0]: {
-            c: r[i + 1] * TOPSIS_SCALE // max(mx[c], 1)
-            for i, (c, _, _) in enumerate(crit)
-        }
-        for r in rows
-    }
-    ideal = {
-        c: (max if ben else min)(sc[r[0]][c] for r in rows)
-        for c, ben, _ in crit
-    }
-    anti = {
-        c: (min if ben else max)(sc[r[0]][c] for r in rows)
-        for c, ben, _ in crit
-    }
-    want = {}
-    for r in rows:
-        i = r[0]
-        d2p = sum(w * (sc[i][c] - ideal[c]) ** 2 for c, _, w in crit)
-        d2m = sum(w * (sc[i][c] - anti[c]) ** 2 for c, _, w in crit)
-        cm = d2m * 1_000_000 // (d2p + d2m) if d2p + d2m else 0
-        want[i] = (d2p, d2m, cm)
-    order = sorted(want, key=lambda i: (-want[i][2], i))
-    for i in want:
-        g = got[i]
-        assert (g["d2_plus"], g["d2_minus"], g["closeness_micro"]) == want[i], i
-        assert g["rank"] == order.index(i) + 1, i
-    assert got[1]["rank"] == 1 and got[4]["rank"] == 5
-    assert got[2]["rank"] + 1 == got[5]["rank"]  # tie -> id order
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE tpr (iid BIGINT, a BIGINT, b BIGINT, c BIGINT)")
-    duck.executemany("INSERT INTO tpr VALUES (?,?,?,?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            topsis_rank_sql("SELECT * FROM tpr", "iid", crit)
-        ).fetchall()
-    }
-    for i, g in got.items():
-        assert twin[i] == (
-            g["d2_plus"], g["d2_minus"], g["closeness_micro"], g["rank"]
-        ), i
-
-
-def test_mase_backtest_replay_and_periodic_series(spark):
-    """Scalar replay of the cross-multiplied MASE on designed series: a
-    perfectly period-5 series scores mase 0 (seasonal naive is exact on
-    the holdout), a noisy series scores > 0, a constant-train series
-    gives NULL, a too-short series never produces test points."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        mase_backtest,
-        mase_backtest_sql,
-    )
-
-    rows = []
-    for t in range(40):
-        rows.append(("periodic", t, 100 + 13 * (t % 5)))
-        rows.append(("noisy", t, 100 + (t * 37) % 50))
-    for t in range(40):
-        rows.append(("flat_train", t, 7 if t < 30 else 7 + t))
-    for t in range(4):
-        rows.append(("short", t, t * 10))
-    df = spark.createDataFrame(rows, "g string, t long, v_c long")
-    got = {r["g"]: r.asDict() for r in mase_backtest(df, season=5, horizon=10).collect()}
-
-    # direct scalar replay
-    for g in ("periodic", "noisy", "flat_train", "short"):
-        vs = [v for gg, t, v in sorted(
-            (r for r in rows if r[0] == g), key=lambda r: r[1])]
-        n = len(vs)
-        h = 10
-        sae = n_test = sad = n_diffs = 0
-        for i in range(n):
-            is_test = i >= n - h
-            if is_test and i - 5 >= 0:
-                sae += abs(vs[i] - vs[i - 5])
-                n_test += 1
-            if (not is_test) and i >= 1:
-                sad += abs(vs[i] - vs[i - 1])
-                n_diffs += 1
-        mase = (
-            sae * n_diffs * 1_000_000 // (sad * n_test)
-            if sad > 0 and n_test > 0
-            else None
-        )
-        gg = got[g]
-        assert (gg["n"], gg["n_test"], gg["sae_test"], gg["sad_train"],
-                gg["mase_micro"]) == (n, n_test, sae, sad, mase), g
-    assert got["periodic"]["mase_micro"] == 0
-    assert got["noisy"]["mase_micro"] > 0
-    assert got["flat_train"]["mase_micro"] is None  # constant training
-    assert got["short"]["n_test"] == 0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE mbt (g VARCHAR, t BIGINT, v_c BIGINT)")
-    duck.executemany("INSERT INTO mbt VALUES (?,?,?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            mase_backtest_sql("SELECT * FROM mbt", season=5, horizon=10)
-        ).fetchall()
-    }
-    for g, gg in got.items():
-        assert twin[g] == (gg["n"], gg["n_test"], gg["sae_test"],
-                           gg["sad_train"], gg["mase_micro"]), g
-
-
-def test_binary_seg_finds_planted_shift(spark):
-    """A series with a planted level shift at position 30 must split
-    exactly there with a large gain; a pure-noise series still returns
-    the exact argmin of the replayed cost curve; tie on a symmetric
-    two-point series goes to the smallest t; twin byte-for-byte."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        binary_seg,
-        binary_seg_sql,
-    )
-
-    rows = []
-    for t in range(60):
-        rows.append(("shift", t, 10 + (t % 3) + (50 if t >= 30 else 0)))
-        rows.append(("noise", t, (t * 37) % 23))
-    rows += [("tiny", 0, 5), ("tiny", 1, 9)]
-    df = spark.createDataFrame(rows, "g string, t long, v_c long")
-    got = {r["g"]: r.asDict() for r in binary_seg(df).collect()}
-
-    def replay(g):
-        vs = [v for gg, t, v in sorted(
-            (r for r in rows if r[0] == g), key=lambda r: r[1])]
-        n = len(vs)
-        ts, tq = sum(vs), sum(v * v for v in vs)
-        best = None
-        for t in range(1, n):
-            ps, pq = sum(vs[:t]), sum(v * v for v in vs[:t])
-            cost = (t * pq - ps * ps) * 1_000_000 // t + (
-                (n - t) * (tq - pq) - (ts - ps) ** 2
-            ) * 1_000_000 // (n - t)
-            if best is None or (cost, t) < best:
-                best = (cost, t)
-        sse0 = (n * tq - ts * ts) * 1_000_000 // n
-        return n, best[1], sse0, best[0], sse0 - best[0]
-
-    for g in ("shift", "noise", "tiny"):
-        n, bt, s0, sc, gain = replay(g)
-        gg = got[g]
-        assert (gg["n"], gg["best_t"], gg["sse0_micro"],
-                gg["sse_split_micro"], gg["gain_micro"]) == (n, bt, s0, sc, gain), g
-    assert got["shift"]["best_t"] == 30
-    assert got["shift"]["gain_micro"] > got["noise"]["gain_micro"]
-    assert got["tiny"]["best_t"] == 1
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE bsg (g VARCHAR, t BIGINT, v_c BIGINT)")
-    duck.executemany("INSERT INTO bsg VALUES (?,?,?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(binary_seg_sql("SELECT * FROM bsg")).fetchall()
-    }
-    for g, gg in got.items():
-        assert twin[g] == (gg["n"], gg["best_t"], gg["sse0_micro"],
-                           gg["sse_split_micro"], gg["gain_micro"]), g
-
-
-def test_v_optimal_hist_dp_replay_and_optimality(spark):
-    """Brute enumeration of ALL 4-partitions on a planted-levels series
-    must match the DP's chosen boundaries and total cost; the DP total
-    is <= binary-seg-style greedy; short series are dropped; twin
-    byte-for-byte (checked via the planted fixture in /tmp smoke — here
-    the brute)."""
-    from itertools import combinations
-
-    from osm2geojson_spark.operators.analytics import v_optimal_hist
-
-    vals = [10, 11, 10, 11, 40, 41, 40, 5, 6, 5, 6, 60, 61, 60, 61, 59]
-    rows = [("a", t, v) for t, v in enumerate(vals)]
-    rows += [("short", 0, 1), ("short", 1, 2)]
-    df = spark.createDataFrame(rows, "g string, t long, v_c long")
-    got = sorted(
-        (r["seg"], r["start_i"], r["end_i"], r["len"], r["seg_sum"], r["sse_micro"])
-        for r in v_optimal_hist(df, k=4).collect()
-        if r["g"] == "a"
-    )
-    assert not any(
-        r["g"] == "short" for r in v_optimal_hist(df, k=4).collect()
-    )
-
-    n = len(vals)
-
-    def sse(j, i):
-        seg = vals[j:i]
-        ln = len(seg)
-        s, q = sum(seg), sum(x * x for x in seg)
-        return (ln * q - s * s) * 1_000_000 // ln
-
-    best = None
-    for cuts in combinations(range(1, n), 3):
-        b = [0, *cuts, n]
-        cost = sum(sse(b[i], b[i + 1]) for i in range(4))
-        key = (cost, cuts)
-        if best is None or key < best:
-            best = key
-    total_got = sum(r[5] for r in got)
-    assert total_got == best[0]
-    cuts = sorted({r[1] - 1 for r in got} - {0})
-    assert tuple(cuts) == best[1]
-    # planted boundaries at 4, 7, 11
-    assert cuts == [4, 7, 11]
-
-
-def test_matrix_profile_motif_discord_and_twin(spark):
-    """A series with a planted repeated motif and one anomalous bump:
-    the motif windows must be mutual nearest neighbors at distance ~0,
-    the bump window must be the discord; exclusion zone suppresses
-    trivial self-matches; short series gives all-NULL profile rows;
-    twin byte-for-byte."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        matrix_profile,
-        matrix_profile_sql,
-    )
-
-    motif = [5, 40, 80, 40, 5, 0, 0, 0]
-    vals = motif + [1, 2, 1, 2, 1, 2, 1, 2] + motif + [0] * 4
-    # anomalous bump
-    vals += [99, 0, 99, 0, 99, 0, 99, 0] + [1] * 8
-    rows = [("a", t, v) for t, v in enumerate(vals)]
-    rows += [("short", t, t) for t in range(10)]  # n=10 < 2m -> NULLs
-    df = spark.createDataFrame(rows, "g string, t long, v_c long")
-    got = {
-        (r["g"], r["i"]): (r["nn_j"], r["d2min"], r["is_discord"])
-        for r in matrix_profile(df, m=8).collect()
-    }
-
-    # brute replay for series a
-    m = 8
-    nw = len(vals) - m + 1
-    for i in range(nw):
-        best = None
-        for j in range(nw):
-            if abs(i - j) < m:
-                continue
-            d2 = sum((vals[i + k] - vals[j + k]) ** 2 for k in range(m))
-            if best is None or (d2, j) < best:
-                best = (d2, j)
-        want = (best[1] + 1, best[0]) if best else (None, None)
-        assert got[("a", i + 1)][:2] == want, i
-    # motif at windows 1 and 17 (1-based): exact repeat -> d2 0, mutual
-    assert got[("a", 1)][:2] == (17, 0) and got[("a", 17)][:2] == (1, 0)
-    # discord flag sits on the max d2min
-    mx = max(v[1] for k, v in got.items() if k[0] == "a")
-    for k, v in got.items():
-        if k[0] == "a":
-            assert v[2] == (v[1] == mx)
-    # short series: rows exist with NULLs
-    assert got[("short", 1)] == (None, None, False)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE mpt (g VARCHAR, t BIGINT, v_c BIGINT)")
-    duck.executemany("INSERT INTO mpt VALUES (?,?,?)", rows)
-    twin = {
-        (r[0], r[1]): (r[2], r[3], r[4])
-        for r in duck.sql(matrix_profile_sql("SELECT * FROM mpt", m=8)).fetchall()
-    }
-    assert twin == got
-
-
-def test_quantile_normalize_marginal_alignment(spark):
-    """Dict replay of the rank map on two shifted distributions, plus
-    the designed property: after normalization, two equal-size groups
-    carry exactly the same multiset of targets (the point of quantile
-    normalization); a group's max maps to the pooled max; twin parity."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        quantile_normalize,
-        quantile_normalize_sql,
-    )
-
-    rows = []
-    for i in range(20):
-        rows.append(("lo", i, 100 + i))        # low batch
-        rows.append(("hi", 100 + i, 500 + i))  # shifted batch
-    df = spark.createDataFrame(rows, "g string, rid long, v_c long")
-    got = {
-        r["rid"]: (r["g"], r["v_c"], r["r"], r["n_g"], r["target_v"])
-        for r in quantile_normalize(df).collect()
-    }
-
-    pooled = sorted(
-        (v, f"{v}|{g}|{rid}") for g, rid, v in rows
-    )
-    vals = [v for v, _ in pooled]
-    N = len(rows)
-    for g in ("lo", "hi"):
-        grp = sorted((v, rid) for gg, rid, v in rows if gg == g)
-        n_g = len(grp)
-        for r0, (v, rid) in enumerate(grp, 1):
-            idx = (r0 * N + n_g - 1) // n_g
-            assert got[rid] == (g, v, r0, n_g, vals[idx - 1]), rid
-    lo_targets = sorted(t for rid, (g, _, _, _, t) in got.items() if g == "lo")
-    hi_targets = sorted(t for rid, (g, _, _, _, t) in got.items() if g == "hi")
-    assert lo_targets == hi_targets  # identical marginals
-    assert max(lo_targets) == max(vals)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE qnt (g VARCHAR, rid BIGINT, v_c BIGINT)")
-    duck.executemany("INSERT INTO qnt VALUES (?,?,?)", rows)
-    twin = {
-        r[1]: (r[0], r[2], r[3], r[4], r[5])
-        for r in duck.sql(quantile_normalize_sql("SELECT * FROM qnt")).fetchall()
-    }
-    assert twin == got
-
-
-def test_pearson_corr_brute_and_twin(spark):
-    """Exact raw moments vs a scalar replay; r vs statistics-free
-    numpy corrcoef; degenerate (zero-variance) group yields NULL r."""
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.analytics import (
-        pearson_corr,
-        pearson_corr_sql,
-    )
-
-    rows = (
-        [("a", t, (t * 7) % 23, (t * t) % 31 - 11) for t in range(40)]
-        + [("c", t, t, 5) for t in range(6)]  # y constant -> NULL r
-    )
-    data = [(g, x, y) for g, _, x, y in rows]
-    df = spark.createDataFrame(data, "g string, x long, y long")
-    got = {r["g"]: r.asDict() for r in pearson_corr(df).collect()}
-
-    for g in ("a", "c"):
-        xs = [x for gg, x, y in data if gg == g]
-        ys = [y for gg, x, y in data if gg == g]
-        n = len(xs)
-        num = n * sum(a * b for a, b in zip(xs, ys)) - sum(xs) * sum(ys)
-        denx = n * sum(a * a for a in xs) - sum(xs) ** 2
-        deny = n * sum(b * b for b in ys) - sum(ys) ** 2
-        r = got[g]
-        assert (r["num"], r["denx"], r["deny"]) == (
-            str(num),
-            str(denx),
-            str(deny),
-        )
-        if denx > 0 and deny > 0:
-            assert abs(r["r"] - np.corrcoef(xs, ys)[0, 1]) < 1e-6
-        else:
-            assert r["r"] is None
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE pc (g VARCHAR, x BIGINT, y BIGINT)")
-    duck.executemany("INSERT INTO pc VALUES (?, ?, ?)", data)
-    twin = {
-        r[0]: r
-        for r in duck.sql(pearson_corr_sql("SELECT * FROM pc")).fetchall()
-    }
-    for g in ("a", "c"):
-        gr = got[g]
-        assert twin[g] == (g, gr["n"], gr["num"], gr["denx"], gr["deny"], gr["r"])
-
-
-def test_bollinger_breach_brute_and_twin(spark):
-    """Scalar replay of the trailing-window envelope gate; a planted
-    spike breaches up, a planted crash breaches down, warmup rows
-    never flag; DuckDB twin bit-identical."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        bollinger_breach,
-        bollinger_breach_sql,
-    )
-
-    # note w > k²+1: a lone spike INSIDE its own trailing window has
-    # z² ≤ w−1, so w=5,k=2 could never flag — the operator includes the
-    # current row in the envelope (classic Bollinger), pick w accordingly
-    w, k = 10, 2
-    vals = [100, 102, 98, 101, 99, 100, 101, 99, 100, 102, 98, 101, 500,
-            100, 98, 99, 101, -300, 101]
-    data = [("a", 10 * i, i, v) for i, v in enumerate(vals)]
-    # duplicate-timestamp series: ordering must pin by rid
-    data += [
-        ("b", 0, i, v)
-        for i, v in enumerate([10, 11, 10, 11, 10, 11, 10, 11, 10, 11, 90])
-    ]
-    df = spark.createDataFrame(data, "g string, t long, rid long, v long")
-    got = {
-        (r["g"], r["rid"]): r.asDict()
-        for r in bollinger_breach(df, w=w, k=k).collect()
-    }
-
-    for g in ("a", "b"):
-        series = sorted((t, rid, v) for gg, t, rid, v in data if gg == g)
-        for i, (t, rid, v) in enumerate(series):
-            lo = max(0, i - (w - 1))
-            window = [x[2] for x in series[lo : i + 1]]
-            n = len(window)
-            s = sum(window)
-            s2 = sum(x * x for x in window)
-            dev = v * n - s
-            exp = 0
-            if n >= w and dev * dev > k * k * (n * s2 - s * s):
-                exp = 1 if dev > 0 else -1
-            r = got[(g, rid)]
-            assert (r["n_w"], r["s"], r["s2"], r["breach"]) == (n, s, s2, exp), (
-                g,
-                rid,
-            )
-    # the planted spike/crash breach, steady rows don't
-    assert got[("a", 12)]["breach"] == 1
-    assert got[("a", 17)]["breach"] == -1
-    assert got[("b", 10)]["breach"] == 1
-    assert sum(abs(r["breach"]) for r in got.values()) == 3
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE bb (g VARCHAR, t BIGINT, rid BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO bb VALUES (?, ?, ?, ?)", data)
-    twin = {
-        (r[0], r[2]): r
-        for r in duck.sql(
-            bollinger_breach_sql("SELECT * FROM bb", w=w, k=k)
-        ).fetchall()
-    }
-    for key, r in got.items():
-        assert twin[key] == (
-            r["g"], r["t"], r["rid"], r["v"], r["n_w"], r["s"], r["s2"], r["breach"],
-        )
-
-
-def test_pr_curve_sklearn_style_brute_and_twin(spark):
-    """Every threshold's (tp, fp, fn) vs a scalar sweep; monotone
-    recall; precision at the top threshold = purity of the top score
-    group; DuckDB twin bit-identical."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import pr_curve, pr_curve_sql
-
-    data = [(s, 1 if (s * 7 + i) % 3 == 0 else 0)
-            for i, s in enumerate([5, 9, 9, 3, 7, 5, 1, 9, 3, 7, 2, 8])]
-    df = spark.createDataFrame(data, "score long, label long")
-    got = {r["s"]: r.asDict() for r in pr_curve(df).collect()}
-
-    p_all = sum(l for _, l in data)
-    for s in sorted({s for s, _ in data}):
-        tp = sum(l for sc, l in data if sc >= s)
-        fp = sum(1 - l for sc, l in data if sc >= s)
-        r = got[s]
-        assert (r["tp"], r["fp"], r["fn"]) == (tp, fp, p_all - tp), s
-        assert r["prec_micro"] == 1000000 * tp // (tp + fp)
-        assert r["rec_micro"] == 1000000 * tp // p_all
-    # recall monotone nonincreasing in threshold
-    ss = sorted(got)
-    assert all(
-        got[a]["rec_micro"] >= got[b]["rec_micro"]
-        for a, b in zip(ss, ss[1:])
-    )
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE sc (score BIGINT, label BIGINT)")
-    duck.executemany("INSERT INTO sc VALUES (?, ?)", data)
-    twin = {
-        r[0]: r for r in duck.sql(pr_curve_sql("SELECT * FROM sc")).fetchall()
-    }
-    for s, r in got.items():
-        assert twin[s] == (
-            s, r["tp"], r["fp"], r["fn"], r["prec_micro"], r["rec_micro"],
-        )
 
 
 def test_ams_f2_sketch_replay_estimate_quality_and_twin(spark):
@@ -3318,125 +978,6 @@ def test_ams_f2_sketch_replay_estimate_quality_and_twin(spark):
         duck.sql(ams_f2_sql("SELECT k FROM ams", "k")).fetchall()
     )
     assert twin == got
-
-
-def test_sax_words_brute_and_twin(spark):
-    """Scalar replay of segment sums + integer bins; a ramp series
-    produces a nondecreasing symbol word hitting both alphabet ends;
-    constant series maps to symbol 0; partial tails keep true n_in."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import sax_words, sax_words_sql
-
-    m, a = 4, 4
-    data = (
-        [("ramp", i, i, 10 + 3 * i) for i in range(18)]  # tail of 2
-        + [("flat", i, i, 7) for i in range(9)]
-        + [("vee", i, i, abs(8 - i) * 5) for i in range(17)]
-    )
-    df = spark.createDataFrame(data, "g string, t long, rid long, v long")
-    got = {
-        (r["g"], r["seg"]): (r["n_in"], r["sum_v"], r["sym"])
-        for r in sax_words(df, seg_len=m, alphabet=a).collect()
-    }
-
-    from collections import defaultdict
-
-    series = defaultdict(list)
-    for g, t, rid, v in data:
-        series[g].append((t, rid, v))
-    want = {}
-    for g, pts in series.items():
-        pts.sort()
-        vs = [v for _, _, v in pts]
-        vmin, vmax = min(vs), max(vs)
-        rng = vmax - vmin + 1
-        for s0 in range(0, len(vs), m):
-            chunk = vs[s0 : s0 + m]
-            n, sv = len(chunk), sum(chunk)
-            want[(g, s0 // m)] = (n, sv, a * (sv - n * vmin) // (n * rng))
-    assert got == want
-    # ramp: word nondecreasing, spans 0..3; tail segment has n_in=2
-    ramp = [got[("ramp", s)][2] for s in range(5)]
-    assert ramp == sorted(ramp) and ramp[0] == 0 and ramp[-1] == a - 1
-    assert got[("ramp", 4)][0] == 2
-    assert all(got[("flat", s)][2] == 0 for s in (0, 1, 2))
-    # vee: high-low-high symbol shape
-    vee = [got[("vee", s)][2] for s in range(5)]
-    assert vee[0] == a - 1 and min(vee) == 0 and vee[-1] >= 1
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE sax (g VARCHAR, t BIGINT, rid BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO sax VALUES (?, ?, ?, ?)", data)
-    twin = {
-        (r[0], r[1]): (r[2], r[3], r[4])
-        for r in duck.sql(
-            sax_words_sql("SELECT * FROM sax", seg_len=m, alphabet=a)
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_stump_train_brute_sweep_and_twin(spark):
-    """Exhaustive scalar sweep over (threshold, polarity) must agree
-    with the operator on every feature; a perfectly separable feature
-    trains to 0 errors with the right polarity; an anti-correlated one
-    flips polarity; twin bit-identical."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        stump_train,
-        stump_train_sql,
-    )
-
-    rows = []
-    # sep: label = 1 iff x >= 50 (perfect, polarity 0 at t=49ish)
-    for i in range(60):
-        rows.append(("sep", i * 2, 1 if i * 2 >= 50 else 0))
-    # anti: label = 1 iff x <= 10 (perfect with polarity 1)
-    for i in range(40):
-        rows.append(("anti", i, 1 if i <= 10 else 0))
-    # noisy: label depends on parity — no good stump
-    for i in range(30):
-        rows.append(("noisy", i % 7, i % 2))
-    df = spark.createDataFrame(rows, "feat string, x long, label long")
-    got = {r["feat"]: r.asDict() for r in stump_train(df).collect()}
-
-    from collections import defaultdict
-
-    byf = defaultdict(list)
-    for f, x, y in rows:
-        byf[f].append((x, y))
-    for f, pts in byf.items():
-        xs = sorted({x for x, _ in pts})
-        n = len(pts)
-        best = None
-        for t in xs:
-            e0 = sum(1 for x, y in pts if (x > t) != (y == 1))
-            e1 = sum(1 for x, y in pts if (x <= t) != (y == 1))
-            for err, pol in ((e0, 0), (e1, 1)):
-                k = (err, pol, t)
-                if best is None or k < best:
-                    best = k
-        r = got[f]
-        assert (r["errors"], r["polarity"], r["best_t"]) == best, f
-        assert r["n"] == n
-        assert r["acc_micro"] == 1000000 * (n - best[0]) // n
-    assert got["sep"]["errors"] == 0 and got["sep"]["polarity"] == 0
-    assert got["anti"]["errors"] == 0 and got["anti"]["polarity"] == 1
-    assert got["noisy"]["errors"] > 0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE stp (feat VARCHAR, x BIGINT, label BIGINT)")
-    duck.executemany("INSERT INTO stp VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: r
-        for r in duck.sql(stump_train_sql("SELECT * FROM stp")).fetchall()
-    }
-    for f, r in got.items():
-        assert twin[f] == (
-            f, r["best_t"], r["polarity"], r["errors"], r["n"], r["acc_micro"],
-        )
 
 
 def test_compactor_quantiles_replay_exact_small_and_error_bound(spark):
@@ -3527,1093 +1068,6 @@ def test_compactor_quantiles_replay_exact_small_and_error_bound(spark):
         )
 
 
-def test_snapshot_diff_statuses_masks_and_twin(spark):
-    """Every status class planted (added/removed/changed/same), NULL
-    transitions count as changes, the bitmask addresses the right
-    columns, popcount matches; twin bit-identical."""
-    import duckdb
-
-    old = [
-        (1, 100, "a"),
-        (2, 200, "b"),
-        (3, 300, None),   # null -> value = change in col 1
-        (4, 400, "d"),    # removed
-        (6, 600, "f"),    # both cols change
-    ]
-    new = [
-        (1, 100, "a"),    # same
-        (2, 250, "b"),    # col 0 changes
-        (3, 300, "c"),    # col 1 changes (NULL -> 'c')
-        (5, 500, "e"),    # added
-        (6, 601, "g"),    # mask 0b11
-    ]
-    from osm2geojson_spark.operators.analytics import (
-        snapshot_diff,
-        snapshot_diff_sql,
-    )
-
-    odf = spark.createDataFrame(old, "k long, price long, tag string")
-    ndf = spark.createDataFrame(new, "k long, price long, tag string")
-    got = {
-        r["k"]: (r["status"], r["changed_mask"], r["n_changed"])
-        for r in snapshot_diff(odf, ndf, ["k"], ["price", "tag"]).collect()
-    }
-    assert got == {
-        1: ("same", 0, 0),
-        2: ("changed", 1, 1),
-        3: ("changed", 2, 1),
-        4: ("removed", 0, 0),
-        5: ("added", 0, 0),
-        6: ("changed", 3, 2),
-    }
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE so (k BIGINT, price BIGINT, tag VARCHAR)")
-    duck.execute("CREATE TABLE sn (k BIGINT, price BIGINT, tag VARCHAR)")
-    duck.executemany("INSERT INTO so VALUES (?, ?, ?)", old)
-    duck.executemany("INSERT INTO sn VALUES (?, ?, ?)", new)
-    twin = {
-        r[0]: (r[1], r[2], r[3])
-        for r in duck.sql(
-            snapshot_diff_sql(
-                "SELECT * FROM so", "SELECT * FROM sn", ["k"],
-                ["price", "tag"],
-            )
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_knee_point_brute_and_planted_elbow(spark):
-    """Exhaustive scalar argmax vs the operator; a piecewise-linear
-    curve with a sharp planted elbow reports exactly the corner (and
-    side = concave); a straight line reports deviation 0; twin
-    bit-identical."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import knee_point, knee_point_sql
-
-    rows = []
-    # elbow: steep rise to (10, 1000), then flat to (30, 1100)
-    for x in range(11):
-        rows.append(("elbow", x, 100 * x))
-    for x in range(11, 31):
-        rows.append(("elbow", x, 1000 + 5 * (x - 10)))
-    # straight line: zero deviation everywhere (knee = leftmost point)
-    for x in range(20):
-        rows.append(("line", x, 7 * x + 3))
-    df = spark.createDataFrame(rows, "g string, x long, y long")
-    got = {r["g"]: r.asDict() for r in knee_point(df).collect()}
-
-    from collections import defaultdict
-
-    byg = defaultdict(list)
-    for g, x, y in rows:
-        byg[g].append((x, y))
-    for g, pts in byg.items():
-        pts.sort()
-        (x0, y0), (x1, y1) = pts[0], pts[-1]
-        best = None
-        for x, y in pts:
-            d = (y - y0) * (x1 - x0) - (x - x0) * (y1 - y0)
-            k = (-abs(d), x, y, d)
-            if best is None or k < best:
-                best = k
-        r = got[g]
-        assert (r["knee_x"], r["knee_y"], r["dev_num"], r["side"]) == (
-            best[1], best[2], abs(best[3]),
-            0 if best[3] == 0 else (1 if best[3] > 0 else -1),
-        ), g
-    assert got["elbow"]["knee_x"] == 10 and got["elbow"]["side"] == 1
-    assert got["line"]["dev_num"] == 0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE kn (g VARCHAR, x BIGINT, y BIGINT)")
-    duck.executemany("INSERT INTO kn VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: r
-        for r in duck.sql(knee_point_sql("SELECT * FROM kn")).fetchall()
-    }
-    for g, r in got.items():
-        assert twin[g] == (
-            g, r["knee_x"], r["knee_y"], r["dev_num"], r["side"],
-        )
-
-
-def test_fd_audit_brute_and_twin(spark):
-    """g3 numerator on a hand table with a known violation pattern."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import fd_audit, fd_audit_sql
-
-    rows = [
-        # (k, v): k=1 maps to two values (3 rows, max group 2 -> g3 1)
-        (1, "a"), (1, "a"), (1, "b"),
-        # k=2 clean (2 rows)
-        (2, "c"), (2, "c"),
-        # k=3 three-way split (3 rows, max 1 -> g3 2)
-        (3, "x"), (3, "y"), (3, "z"),
-    ]
-    df = spark.createDataFrame(rows, "k long, v string")
-    got = {
-        r["fd"]: (r["n_rows"], r["n_groups"], r["n_violating"], r["g3_num"], r["holds"])
-        for r in fd_audit(df, [("k->v", ["k"], "v")]).collect()
-    }
-    assert got == {"k->v": (8, 3, 2, 3, False)}
-    # holds case: v -> sign(k) style trivial FD on clean data
-    clean = spark.createDataFrame([(1, "a"), (2, "b"), (2, "b")], "k long, v string")
-    r = fd_audit(clean, [("k->v", ["k"], "v")]).collect()[0]
-    assert r["holds"] and r["g3_num"] == 0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE fda (k BIGINT, v VARCHAR)")
-    duck.executemany("INSERT INTO fda VALUES (?, ?)", rows)
-    twin = {
-        r[0]: tuple(r[1:6])
-        for r in duck.sql(
-            fd_audit_sql("SELECT * FROM fda", [("k->v", ["k"], "v")])
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_inclusion_audit_brute_and_twin(spark):
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        inclusion_audit,
-        inclusion_audit_sql,
-    )
-
-    child = spark.createDataFrame(
-        [(1,), (1,), (2,), (9,), (9,), (9,), (None,)], "v long"
-    )
-    parent = spark.createDataFrame([(1,), (2,), (3,)], "p long")
-    r = inclusion_audit([("c<p", child, "v", parent, "p")]).collect()[0]
-    # NULL excluded; distinct child {1,2,9}; 9 missing with 3 orphan rows
-    assert (
-        r["n_child"], r["n_child_distinct"], r["n_missing_distinct"],
-        r["n_orphan_rows"], r["contained"],
-    ) == (6, 3, 1, 3, False)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE inc_c (v BIGINT)")
-    duck.executemany(
-        "INSERT INTO inc_c VALUES (?)", [(1,), (1,), (2,), (9,), (9,), (9,), (None,)]
-    )
-    duck.execute("CREATE TABLE inc_p (p BIGINT)")
-    duck.executemany("INSERT INTO inc_p VALUES (?)", [(1,), (2,), (3,)])
-    t = duck.sql(
-        inclusion_audit_sql(
-            [("c<p", "SELECT * FROM inc_c", "v", "SELECT * FROM inc_p", "p")]
-        )
-    ).fetchall()[0]
-    assert tuple(t) == ("c<p", 6, 3, 1, 3, False)
-
-
-def test_readability_scalar_replay_and_twin(spark):
-    """FK accounting vs a scalar replay on texts with punctuation,
-    vowel-less words, and multi-syllable words."""
-    import duckdb
-    import re
-
-    from osm2geojson_spark.operators.analytics import (
-        READ_MICRO,
-        readability_scores,
-        readability_scores_sql,
-    )
-
-    docs = [
-        (1, "The quick brown fox jumps. Over the lazy dog!"),
-        (2, "nth rhythms... simple banana elevation?! ok"),
-        (3, "one-sentence text with no punctuation at all"),
-    ]
-
-    def brute(text):
-        words = [re.sub("[^a-z]", "", w) for w in re.split(r"\s+", text.lower())]
-        words = [w for w in words if w]
-        syl = sum(max(1, len(re.findall("[aeiouy]+", w))) for w in words)
-        ns = max(1, len(re.findall("[.!?]+", text)))
-        nw = len(words)
-        fk = (
-            39 * READ_MICRO * nw // ns
-            + 1180 * READ_MICRO * syl // nw
-            - 1559 * READ_MICRO
-        )
-        return nw, ns, syl, fk
-
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (
-            r["n_words"], r["n_sentences"], r["n_syllables"], r["fk100_micro"]
-        )
-        for r in readability_scores(df).collect()
-    }
-    assert got == {i: brute(t) for i, t in docs}
-    # sanity: doc 2 has 2 sentence-punctuation runs ("..." and "?!")
-    assert got[2][1] == 2
-    assert got[3][1] == 1
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE rdd (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO rdd VALUES (?, ?)", docs)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            readability_scores_sql("SELECT doc_id, text FROM rdd")
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_hurst_rs_scalar_replay_and_regimes(spark):
-    """R/S machinery vs a scalar replay; persistent (trending) series
-    scores high H, alternating series scores low H, both vs ~0.5 noise."""
-    import duckdb
-    import math
-
-    from osm2geojson_spark.operators.analytics import (
-        HURST_SCALE,
-        hurst_rs,
-        hurst_rs_sql,
-    )
-
-    rows = []
-    # trending: pure drift + tiny deterministic wiggle -> H near 1
-    for i in range(128):
-        rows.append(("trend", i, 10 * i + (i * i * 7) % 3))
-    # anti-persistent: strict alternation -> H near 0
-    for i in range(128):
-        rows.append(("alt", i, 50 if i % 2 == 0 else -50))
-    # iid ±1 increments (the stationary input R/S expects) -> H ~ 0.5
-    import random as _random
-
-    _rng = _random.Random(42)
-    for i in range(128):
-        rows.append(("noise", i, _rng.choice([1, -1])))
-
-    def brute():
-        out = {}
-        for g in ("trend", "alt", "noise"):
-            xs = [x for gg, _, x in rows if gg == g]
-            pts = []
-            for n in (8, 16, 32, 64):
-                for b in range(len(xs) // n):
-                    blk = xs[b * n : (b + 1) * n]
-                    s1 = sum(blk)
-                    s2 = sum(x * x for x in blk)
-                    pre = 0
-                    ds = []
-                    for k, x in enumerate(blk, 1):
-                        pre += x
-                        ds.append(n * pre - k * s1)
-                    r = max(ds) - min(ds)
-                    vv = n * s2 - s1 * s1
-                    if r > 0 and vv > 0:
-                        qx = round(math.log(n) * HURST_SCALE)
-                        qy = round(
-                            math.log(r / math.sqrt(vv)) * HURST_SCALE
-                        )
-                        pts.append((qx, qy))
-            np_ = len(pts)
-            sx = sum(p[0] for p in pts)
-            sy = sum(p[1] for p in pts)
-            sxx = sum(p[0] * p[0] for p in pts)
-            sxy = sum(p[0] * p[1] for p in pts)
-            den = np_ * sxx - sx * sx
-            h = round((np_ * sxy - sx * sy) / den, 6) if den else None
-            out[g] = (np_, sx, sy, sxx, sxy, h)
-        return out
-
-    df = spark.createDataFrame(rows, "g string, t long, x long")
-    got = {
-        r["g"]: (r["n_points"], r["sx_q"], r["sy_q"], r["sxx_q"], r["sxy_q"], r["hurst"])
-        for r in hurst_rs(df, order_cols=("t",)).collect()
-    }
-    assert got == brute()
-    assert got["trend"][5] > 0.85
-    assert got["alt"][5] < 0.2
-    assert 0.35 < got["noise"][5] < 0.75
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE hrs (g VARCHAR, t BIGINT, x BIGINT)")
-    duck.executemany("INSERT INTO hrs VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(hurst_rs_sql("SELECT * FROM hrs", order_by="t")).fetchall()
-    }
-    assert twin == got
-
-
-def test_naive_bayes_scalar_replay_and_separable(spark):
-    """NB vs a dict replay; distinct vocabularies classify perfectly."""
-    import duckdb
-    import math
-    import collections
-
-    from osm2geojson_spark.operators.analytics import (
-        NB_MICRO,
-        naive_bayes_classify,
-        naive_bayes_classify_sql,
-    )
-
-    train = [
-        (1, "spam offer money win offer", "spam"),
-        (2, "win money offer now", "spam"),
-        (3, "meeting notes agenda review", "ham"),
-        (4, "review agenda notes meeting notes", "ham"),
-    ]
-    test = [
-        (10, "offer win", "spam"),
-        (11, "agenda review meeting", "ham"),
-        (12, "money notes", "spam"),  # mixed: one token each side
-        (13, "unknownword", "ham"),  # OOV only: priors decide
-    ]
-
-    def brute():
-        cw = collections.Counter()
-        ct = collections.Counter()
-        docs_c = collections.Counter()
-        vocab = set()
-        for _, t, c in train:
-            docs_c[c] += 1
-            for w in t.split():
-                cw[(c, w)] += 1
-                ct[c] += 1
-                vocab.add(w)
-        V = len(vocab)
-        nd = len(train)
-        out = {}
-        for did, t, true in test:
-            scores = {}
-            for c in docs_c:
-                s = round((math.log(docs_c[c]) - math.log(nd)) * NB_MICRO)
-                for w in t.split():
-                    if w in vocab:
-                        s += round(
-                            (math.log(cw[(c, w)] + 1) - math.log(ct[c] + V))
-                            * NB_MICRO
-                        )
-                scores[c] = s
-            pred = min(scores, key=lambda c: (-scores[c], c))
-            out[did] = (pred, true, scores[pred], pred == true)
-        return out
-
-    tr = spark.createDataFrame(train, "doc_id long, text string, label string")
-    te = spark.createDataFrame(test, "doc_id long, text string, label string")
-    got = {
-        r["doc_id"]: (r["pred"], r["true_label"], r["score_micro"], r["correct"])
-        for r in naive_bayes_classify(tr, te).collect()
-    }
-    assert got == brute()
-    assert got[10][0] == "spam" and got[11][0] == "ham"
-    # OOV-only doc falls back to the (uniform here) prior, tie -> 'ham'
-    assert got[13][0] == "ham"
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE nbtr (doc_id BIGINT, text VARCHAR, label VARCHAR)")
-    duck.executemany("INSERT INTO nbtr VALUES (?, ?, ?)", train)
-    duck.execute("CREATE TABLE nbte (doc_id BIGINT, text VARCHAR, label VARCHAR)")
-    duck.executemany("INSERT INTO nbte VALUES (?, ?, ?)", test)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            naive_bayes_classify_sql(
-                "SELECT doc_id, text, label FROM nbtr",
-                "SELECT doc_id, text, label FROM nbte",
-            )
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_tree_depth2_scalar_replay_and_xor(spark):
-    """Depth-2 tree vs exhaustive scalar search; the XOR-ish pattern a
-    single stump cannot fit is solved exactly by the two branches."""
-    import duckdb
-    import itertools
-
-    from osm2geojson_spark.operators.analytics import (
-        tree_depth2_train,
-        tree_depth2_train_sql,
-    )
-
-    # label = (a <= 4) XOR (b <= 4)  on the full 8x8 grid
-    pts = [(i, i % 8, i // 8) for i in range(64)]
-    rows = []
-    for i, a, b in pts:
-        y = int((a <= 4) != (b <= 4))
-        rows.append((i, "a", a, y))
-        rows.append((i, "b", b, y))
-
-    def best_stump(sub):
-        # sub: list of (id, feat, x, y); returns dict feat->... then argmin
-        feats = sorted({f for _, f, _, _ in sub})
-        best = None
-        for f in feats:
-            xs = sorted({x for _, ff, x, _ in sub if ff == f})
-            n = len({i for i, ff, _, _ in sub if ff == f})
-            for pol, t in itertools.product((0, 1), xs):
-                err = 0
-                for i, ff, x, y in sub:
-                    if ff != f:
-                        continue
-                    pred = (x > t) if pol == 0 else (x <= t)
-                    err += int(pred) != y
-                key = (err, f, pol, t)
-                if best is None or key < best:
-                    best = key
-        err, f, pol, t = best
-        return f, t, pol, err, n
-
-    def brute():
-        f, t, pol, err, n = best_stump(rows)
-        out = {"root": (f, t, pol, err, n)}
-        root_x = {i: x for i, ff, x, _ in rows if ff == f}
-        lids = {i for i, x in root_x.items() if x <= t}
-        l = [r for r in rows if r[0] in lids]
-        r_ = [r for r in rows if r[0] not in lids]
-        if l:
-            out["L"] = best_stump(l)
-        if r_:
-            out["R"] = best_stump(r_)
-        return out
-
-    df = spark.createDataFrame(rows, "id long, feat string, x long, label long")
-    got = {
-        r["node"]: (r["feat"], r["best_t"], r["polarity"], r["errors"], r["n"])
-        for r in tree_depth2_train(df).collect()
-    }
-    assert got == brute()
-    # branches can only improve on the root stump (monotone refinement),
-    # and on XOR data the root alone is badly wrong
-    assert got["root"][3] > 0
-    total = got.get("L", (0,) * 5)[3] + got.get("R", (0,) * 5)[3]
-    assert total < got["root"][3]
-
-    duck = duckdb.connect()
-    duck.execute(
-        "CREATE TABLE t2 (id BIGINT, feat VARCHAR, x BIGINT, label BIGINT)"
-    )
-    duck.executemany("INSERT INTO t2 VALUES (?, ?, ?, ?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(tree_depth2_train_sql("SELECT * FROM t2")).fetchall()
-    }
-    assert twin == got
-
-
-def test_allan_variance_scalar_and_noise_slopes(spark):
-    """AVAR vs scalar replay; white noise halves with doubling tau,
-    a linear ramp's AVAR is exactly tau-independent... no — the ramp
-    (pure drift) gives constant Δs = tau², AVAR = tau²/2·... checked
-    against the closed form below."""
-    import duckdb
-    import random as _random
-
-    from osm2geojson_spark.operators.analytics import (
-        allan_variance,
-        allan_variance_sql,
-    )
-
-    rows = []
-    # ramp: x_t = t  ->  block sums differ by tau^2, AVAR = tau^2/2 exactly
-    for t in range(128):
-        rows.append(("ramp", t, t))
-    rng = _random.Random(7)
-    for t in range(128):
-        rows.append(("white", t, rng.randrange(-1000, 1001)))
-
-    def brute():
-        out = {}
-        for g in ("ramp", "white"):
-            xs = [x for gg, _, x in rows if gg == g]
-            for tau in (4, 8, 16, 32):
-                m = len(xs) // tau
-                ss = [sum(xs[i * tau : (i + 1) * tau]) for i in range(m)]
-                ds = [ss[i + 1] - ss[i] for i in range(m - 1)]
-                if m >= 2:
-                    out[(g, tau)] = (
-                        m, sum(d * d for d in ds), 2 * (m - 1) * tau * tau
-                    )
-        return out
-
-    df = spark.createDataFrame(rows, "g string, t long, x long")
-    got = {
-        (r["g"], r["tau"]): (r["m_blocks"], r["avar_num"], r["avar_den"])
-        for r in allan_variance(df, order_cols=("t",)).collect()
-    }
-    assert got == brute()
-    # ramp closed form: AVAR(tau) = tau^2/2  ->  num/den = tau^2 / (2 tau^2)
-    # ... i.e. num = (M-1) * tau^4, den = 2 (M-1) tau^2 -> ratio tau²/2
-    for tau in (4, 8, 16, 32):
-        m, num, den = got[("ramp", tau)]
-        assert num * 2 == den * tau * tau
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE avs (g VARCHAR, t BIGINT, x BIGINT)")
-    duck.executemany("INSERT INTO avs VALUES (?, ?, ?)", rows)
-    twin = {
-        (r[0], r[1]): (r[2], r[3], r[4])
-        for r in duck.sql(
-            allan_variance_sql("SELECT * FROM avs", order_by="t")
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_bradley_terry_scalar_replay_and_ordering(spark):
-    """Fixed-point MM vs scalar replay; a dominant item outranks a
-    weak one; strengths track win totals."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        BT_SCALE,
-        bradley_terry,
-        bradley_terry_sql,
-    )
-
-    # item 1 beats everyone usually, 4 loses usually
-    comps = [
-        (1, 2, 8), (2, 1, 2),
-        (1, 3, 7), (3, 1, 3),
-        (1, 4, 9), (4, 1, 1),
-        (2, 3, 5), (3, 2, 5),
-        (2, 4, 7), (4, 2, 3),
-        (3, 4, 6), (4, 3, 4),
-    ]
-
-    def brute(rounds=6):
-        import collections
-
-        wij = collections.Counter()
-        for i, j, w in comps:
-            wij[(i, j)] += w
-            wij[(j, i)] += 0
-        items = sorted({i for i, _ in wij})
-        nij = {
-            (i, j): wij[(i, j)] + wij[(j, i)] for (i, j) in wij
-        }
-        wins = {i: sum(w for (a, _), w in wij.items() if a == i) for i in items}
-        matches = {
-            i: sum(n for (a, _), n in nij.items() if a == i) for i in items
-        }
-        s = {i: BT_SCALE for i in items}
-        for _ in range(rounds):
-            t = {
-                i: sum(
-                    nij[(i, j)] * BT_SCALE * BT_SCALE // (s[i] + s[j])
-                    for j in items
-                    if (i, j) in nij
-                )
-                for i in items
-            }
-            s = {
-                i: (wins[i] * BT_SCALE * BT_SCALE // t[i]) if t[i] > 0 else BT_SCALE
-                for i in items
-            }
-        return {i: (s[i], wins[i], matches[i]) for i in items}
-
-    df = spark.createDataFrame(comps, "i long, j long, w long")
-    got = {
-        r["item"]: (r["strength_micro"], r["wins"], r["matches"])
-        for r in bradley_terry(df, rounds=6).collect()
-    }
-    assert got == brute()
-    assert got[1][0] > got[2][0] > got[4][0]
-    assert got[3][0] > got[4][0]
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE btc (i BIGINT, j BIGINT, w BIGINT)")
-    duck.executemany("INSERT INTO btc VALUES (?, ?, ?)", comps)
-    twin = {
-        r[0]: (r[1], r[2], r[3])
-        for r in duck.sql(
-            bradley_terry_sql("SELECT * FROM btc", rounds=6)
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_seasonal_anomaly_scalar_replay_and_planted_spike(spark):
-    """Median/MAD seasonal gate vs scalar replay; a planted spike in an
-    otherwise-stable slot is the only flag."""
-    import duckdb
-    import math
-
-    from osm2geojson_spark.operators.analytics import (
-        seasonal_anomaly,
-        seasonal_anomaly_sql,
-    )
-
-    rows = []
-    t = 0
-    for day in range(10):
-        for slot in range(3):
-            base = 100 * (slot + 1)
-            x = base + (day * 7) % 5
-            rows.append(("m", slot, t, x))
-            t += 1
-    rows.append(("m", 1, t, 9999))  # planted spike in slot 1
-
-    def brute():
-        out = {}
-        for g, slot in {(r[0], r[1]) for r in rows}:
-            pts = sorted(
-                [(x, tt) for gg, ss, tt, x in rows if gg == g and ss == slot]
-            )
-            n = len(pts)
-            med = sorted(pts, key=lambda p: (p[0], p[1]))[
-                math.ceil(n / 2) - 1
-            ][0]
-            devs = sorted(
-                (abs(x - med), tt) for x, tt in pts
-            )
-            mad = devs[math.ceil(n / 2) - 1][0]
-            for x, tt in pts:
-                out[(g, slot, tt)] = (
-                    x, med, mad, abs(x - med) > 5 * max(mad, 1)
-                )
-        return out
-
-    df = spark.createDataFrame(rows, "g string, slot long, t long, x long")
-    got = {
-        (r["g"], r["slot"], r["t"]): (r["x"], r["med"], r["mad"], r["flagged"])
-        for r in seasonal_anomaly(df).collect()
-    }
-    assert got == brute()
-    flagged = [k for k, v in got.items() if v[3]]
-    assert flagged == [("m", 1, t)]
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE sas (g VARCHAR, slot BIGINT, t BIGINT, x BIGINT)")
-    duck.executemany("INSERT INTO sas VALUES (?, ?, ?, ?)", rows)
-    twin = {
-        (r[0], r[1], r[2]): (r[3], r[4], r[5], r[6])
-        for r in duck.sql(seasonal_anomaly_sql("SELECT * FROM sas")).fetchall()
-    }
-    assert twin == got
-
-
-def test_t_closeness_scalar_replay_and_skewed_cell(spark):
-    """Exact-EMD t-closeness vs scalar replay; a cell holding only the
-    extreme sensitive values breaches, a proportional cell does not."""
-    import duckdb
-
-    rows = []
-    # global: values 0..4 uniform across cells A (proportional) and B
-    for v in range(5):
-        for _ in range(8):
-            rows.append(("A", v))
-    # skewed cell: only extreme value 4
-    for _ in range(10):
-        rows.append(("B", 4))
-
-    from osm2geojson_spark.operators.analytics import t_closeness, t_closeness_sql
-
-    def brute(t_num=1, t_den=5):
-        import collections
-
-        gv = collections.Counter(v for _, v in rows)
-        n = len(rows)
-        m = len(gv)
-        vals = sorted(gv)
-        out = {}
-        for cell in {c for c, _ in rows}:
-            cv = collections.Counter(v for c, v in rows if c == cell)
-            n_c = sum(cv.values())
-            cum_c = cum_g = 0
-            num = 0
-            for v in vals:
-                cum_c += cv.get(v, 0)
-                cum_g += gv[v]
-                num += abs(cum_c * n - cum_g * n_c)
-            den = n_c * n * max(m - 1, 1)
-            out[cell] = (n_c, m, num, den, num * t_den > t_num * den)
-        return out
-
-    df = spark.createDataFrame(rows, "cell string, v long")
-    got = {
-        r["cell"]: (r["n_c"], r["m"], r["emd_num"], r["emd_den"], r["breach"])
-        for r in t_closeness(df).collect()
-    }
-    assert got == brute()
-    assert got["B"][4] and not got["A"][4]
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE tcr (cell VARCHAR, v BIGINT)")
-    duck.executemany("INSERT INTO tcr VALUES (?, ?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(t_closeness_sql("SELECT * FROM tcr")).fetchall()
-    }
-    assert twin == got
-
-
-def test_item_cf_neighbors_brute_and_twin(spark):
-    """Item-item cosine CF vs scalar replay; frequently co-bought pair
-    ranks first."""
-    import collections
-    import duckdb
-
-    rows = [
-        # users x items: 1&2 co-bought by three users; 3 rides with 1 once
-        (10, 1), (10, 2), (11, 1), (11, 2), (12, 1), (12, 2),
-        (13, 1), (13, 3), (14, 2), (15, 3), (15, 4),
-    ]
-    from osm2geojson_spark.operators.analytics import (
-        item_cf_neighbors,
-        item_cf_neighbors_sql,
-    )
-
-    def brute(k=3):
-        ui = sorted(set(rows))
-        n = collections.Counter(i for _, i in ui)
-        co = collections.Counter()
-        users = collections.defaultdict(set)
-        for u, i in ui:
-            users[u].add(i)
-        for u, items in users.items():
-            for a in items:
-                for b in items:
-                    if a < b:
-                        co[(a, b)] += 1
-        out = {}
-        for (a, b), c in list(co.items()):
-            co[(b, a)] = c
-        per_item = collections.defaultdict(list)
-        for (a, b), c in co.items():
-            q = c * c * 1_000_000 // (n[a] * n[b])
-            per_item[a].append((-q, b, c))
-        res = {}
-        for a, lst in per_item.items():
-            lst.sort()
-            for r, (negq, b, c) in enumerate(lst[:k], 1):
-                res[(a, b)] = (c, n[a], n[b], r)
-        return res
-
-    df = spark.createDataFrame(rows, "user long, item long")
-    got = {
-        (r["item"], r["nbr"]): (r["co"], r["n_item"], r["n_nbr"], r["rank"])
-        for r in item_cf_neighbors(df, k=3).collect()
-    }
-    assert got == brute()
-    # the 3x co-bought pair is each other's #1 neighbor
-    assert got[(1, 2)][3] == 1 and got[(2, 1)][3] == 1
-
-    duck = duckdb.connect()
-    duck.execute('CREATE TABLE cfe ("user" BIGINT, item BIGINT)')
-    duck.executemany("INSERT INTO cfe VALUES (?, ?)", rows)
-    twin = {
-        (r[0], r[1]): (r[2], r[3], r[4], r[5])
-        for r in duck.sql(
-            item_cf_neighbors_sql('SELECT "user", item FROM cfe', k=3)
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_ipf_raking_scalar_replay_and_margin_fit(spark):
-    """IPF rounds vs scalar replay; with matching grand totals the
-    raked margins land within integer-rounding of the targets."""
-    import collections
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        IPF_SCALE,
-        ipf_raking,
-        ipf_raking_sql,
-    )
-
-    cells = [(0, "A", 10), (0, "B", 30), (1, "A", 30), (1, "B", 30)]
-    # targets shift mass toward row 0 / column A, same grand total 100
-    rts = [(0, 50), (1, 50)]
-    cts = [("A", 60), ("B", 40)]
-
-    def brute(rounds=6):
-        w = {(r, c): IPF_SCALE for r, c, _ in cells}
-        n = {(r, c): k for r, c, k in cells}
-        for _ in range(rounds):
-            rs = collections.Counter()
-            for (r, c), wv in w.items():
-                rs[r] += wv * n[(r, c)]
-            rtd = dict(rts)
-            for (r, c) in list(w):
-                if rs[r] > 0:
-                    w[(r, c)] = w[(r, c)] * (rtd[r] * IPF_SCALE) // rs[r]
-            cs = collections.Counter()
-            for (r, c), wv in w.items():
-                cs[c] += wv * n[(r, c)]
-            ctd = dict(cts)
-            for (r, c) in list(w):
-                if cs[c] > 0:
-                    w[(r, c)] = w[(r, c)] * (ctd[c] * IPF_SCALE) // cs[c]
-        return {(r, c): (n[(r, c)], w[(r, c)]) for r, c, _ in cells}
-
-    cdf = spark.createDataFrame(cells, "r long, c string, n long")
-    rdf = spark.createDataFrame(rts, "r long, target long")
-    tdf = spark.createDataFrame(cts, "c string, target long")
-    got = {
-        (r["r"], r["c"]): (r["n"], r["w_micro"])
-        for r in ipf_raking(cdf, rdf, tdf, rounds=6).collect()
-    }
-    assert got == brute()
-    # margin fit: raked row masses hit targets within 1%
-    for r, t in rts:
-        mass = sum(
-            w * n for (rr, c), (n, w) in got.items() if rr == r
-        ) / IPF_SCALE
-        assert abs(mass - t) < t * 0.01 + 1
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE ipfc (r BIGINT, c VARCHAR, n BIGINT)")
-    duck.executemany("INSERT INTO ipfc VALUES (?, ?, ?)", cells)
-    duck.execute("CREATE TABLE ipfr (r BIGINT, target BIGINT)")
-    duck.executemany("INSERT INTO ipfr VALUES (?, ?)", rts)
-    duck.execute("CREATE TABLE ipft (c VARCHAR, target BIGINT)")
-    duck.executemany("INSERT INTO ipft VALUES (?, ?)", cts)
-    twin = {
-        (r[0], r[1]): (r[2], r[3])
-        for r in duck.sql(
-            ipf_raking_sql(
-                "SELECT * FROM ipfc", "SELECT * FROM ipfr", "SELECT * FROM ipft", 6
-            )
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_sprt_scalar_replay_and_regimes(spark):
-    """SPRT walk vs scalar replay; a strong arm accepts H1 early, a
-    null arm accepts H0, a knife-edge arm continues."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import (
-        _sprt_consts,
-        sprt_decisions,
-        sprt_decisions_sql,
-    )
-
-    rows = []
-    # strong: ~75% success
-    for t in range(80):
-        rows.append(("strong", t, 1 if (t * 3) % 4 != 0 else 0))
-    # null: ~25% success
-    for t in range(80):
-        rows.append(("null", t, 1 if (t * 3) % 4 == 0 else 0))
-    # knife-edge: alternating (p=0.5, between the hypotheses)
-    for t in range(40):
-        rows.append(("edge", t, t % 2))
-
-    def brute():
-        l1, l0, up, lo = _sprt_consts(1, 2, 3, 5)
-        out = {}
-        for g in ("strong", "null", "edge"):
-            xs = [x for gg, _, x in rows if gg == g]
-            llr = 0
-            cum = 0
-            cross = None
-            for i, x in enumerate(xs, 1):
-                llr += l1 if x else l0
-                cum += x
-                if cross is None:
-                    if llr >= up:
-                        cross = (i, "h1")
-                    elif llr <= lo:
-                        cross = (i, "h0")
-            dec = cross[1] if cross else "continue"
-            out[g] = (len(xs), cum, dec, cross[0] if cross else None, llr)
-        return out
-
-    df = spark.createDataFrame(rows, "g string, t long, x long")
-    got = {
-        r["g"]: (r["n"], r["n_success"], r["decision"], r["cross_n"], r["llr_final_micro"])
-        for r in sprt_decisions(df, order_cols=("t",)).collect()
-    }
-    assert got == brute()
-    assert got["strong"][2] == "h1" and got["null"][2] == "h0"
-    assert got["edge"][2] == "continue"
-    # early stopping: both decided well before the horizon
-    assert got["strong"][3] < 40 and got["null"][3] < 40
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE spt (g VARCHAR, t BIGINT, x BIGINT)")
-    duck.executemany("INSERT INTO spt VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            sprt_decisions_sql("SELECT * FROM spt", order_by="t")
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_frequent_triples_brute_and_prune(spark):
-    """Apriori triples vs itertools brute; a planted frequent triple
-    surfaces with lift > 1, infrequent triples are pruned."""
-    import collections
-    import duckdb
-    import itertools
-
-    from osm2geojson_spark.operators.analytics import (
-        frequent_triples,
-        frequent_triples_sql,
-    )
-
-    rows = []
-    # planted: {1,2,3} appears together in 6 baskets
-    for b in range(6):
-        rows += [(b, 1), (b, 2), (b, 3)]
-    # noise baskets
-    for b in range(6, 30):
-        rows += [(b, 1 + b % 4), (b, 5 + b % 3), (b, 8)]
-
-    def brute(min_s=4):
-        baskets = collections.defaultdict(set)
-        for b, i in rows:
-            baskets[b].add(i)
-        n = len(baskets)
-        s1 = collections.Counter()
-        for items in baskets.values():
-            for i in items:
-                s1[i] += 1
-        freq1 = {i for i, s in s1.items() if s >= min_s}
-        s2 = collections.Counter()
-        for items in baskets.values():
-            for a, b2 in itertools.combinations(sorted(items & freq1), 2):
-                s2[(a, b2)] += 1
-        freq2 = {p for p, s in s2.items() if s >= min_s}
-        s3 = collections.Counter()
-        for items in baskets.values():
-            for t in itertools.combinations(sorted(items & freq1), 3):
-                if (
-                    (t[0], t[1]) in freq2
-                    and (t[1], t[2]) in freq2
-                    and (t[0], t[2]) in freq2
-                ):
-                    s3[t] += 1
-        out = {}
-        for t, s in s3.items():
-            if s >= min_s:
-                out[t] = (s, s * n * n, s1[t[0]] * s1[t[1]] * s1[t[2]])
-        return out
-
-    df = spark.createDataFrame(rows, "basket long, item long")
-    got = {
-        (r["a"], r["b"], r["c"]): (r["support"], r["lift_num"], r["lift_den"])
-        for r in frequent_triples(df, min_support=4).collect()
-    }
-    assert got == brute()
-    assert (1, 2, 3) in got
-    s, ln, ld = got[(1, 2, 3)]
-    assert s == 6 and ln > ld  # positively associated
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE f3t (basket BIGINT, item BIGINT)")
-    duck.executemany("INSERT INTO f3t VALUES (?, ?)", rows)
-    twin = {
-        (r[0], r[1], r[2]): (r[3], r[4], r[5])
-        for r in duck.sql(
-            frequent_triples_sql("SELECT * FROM f3t", min_support=4)
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_diff_in_diff_scalar_replay_and_planted_effect(spark):
-    """DiD vs replay; a planted treatment lift is recovered net of the
-    shared time trend."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import diff_in_diff, diff_in_diff_sql
-
-    rows = []
-    # control: 100 pre, 120 post (trend +20); treated: 100 pre,
-    # 150 post (trend +20 plus effect +30)
-    for i in range(50):
-        rows.append((0, 0, 100 + i % 3))
-        rows.append((0, 1, 120 + i % 3))
-        rows.append((1, 0, 100 + i % 3))
-        rows.append((1, 1, 150 + i % 3))
-
-    def brute():
-        import collections
-
-        s = collections.Counter()
-        n = collections.Counter()
-        for t, p, y in rows:
-            s[(t, p)] += y
-            n[(t, p)] += 1
-        m = {k: 1_000_000 * s[k] // max(n[k], 1) for k in s}
-        did = (m[(1, 1)] - m[(1, 0)]) - (m[(0, 1)] - m[(0, 0)])
-        return (
-            n[(0, 0)], n[(0, 1)], n[(1, 0)], n[(1, 1)],
-            m[(0, 0)], m[(0, 1)], m[(1, 0)], m[(1, 1)], did,
-        )
-
-    df = spark.createDataFrame(rows, "treated long, post long, y long")
-    got = tuple(diff_in_diff(df).collect()[0])
-    assert got == brute()
-    # effect ~ +30 units = 30e6 micro
-    assert abs(got[8] - 30_000_000) < 2
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE ddr (treated BIGINT, post BIGINT, y BIGINT)")
-    duck.executemany("INSERT INTO ddr VALUES (?, ?, ?)", rows)
-    twin = tuple(duck.sql(diff_in_diff_sql("SELECT * FROM ddr")).fetchall()[0])
-    assert twin == got
-
-
-def test_acf_table_scalar_replay_and_periodic_signal(spark):
-    """ACF stats vs scalar replay; a period-3 signal's lag-3 dot
-    dominates lags 1-2 after centering."""
-    import duckdb
-
-    from osm2geojson_spark.operators.analytics import acf_table, acf_table_sql
-
-    rows = []
-    for t in range(60):
-        rows.append(("per3", t, [10, -5, -5][t % 3]))
-        rows.append(("const", t, 7))
-
-    def brute(max_lag=5):
-        out = {}
-        for g in ("per3", "const"):
-            xs = [x for gg, _, x in rows if gg == g]
-            for lag in range(1, max_lag + 1):
-                pairs = [(xs[i], xs[i + lag]) for i in range(len(xs) - lag)]
-                out[(g, lag)] = (
-                    len(pairs),
-                    sum(a * b for a, b in pairs),
-                    sum(a for a, _ in pairs),
-                    sum(b for _, b in pairs),
-                    sum(a * a for a, _ in pairs),
-                    sum(b * b for _, b in pairs),
-                )
-        return out
-
-    df = spark.createDataFrame(rows, "g string, t long, x long")
-    got = {
-        (r["g"], r["lag"]): (
-            r["n_terms"], r["dot_sum"], r["sum_a"], r["sum_b"], r["ss_a"], r["ss_b"]
-        )
-        for r in acf_table(df, order_cols=("t",)).collect()
-    }
-    assert got == brute()
-    # the period-3 signal: lag-3 raw dot is maximal among lags 1..5
-    dots = {lag: got[("per3", lag)][1] for lag in range(1, 6)}
-    assert max(dots, key=dots.get) == 3
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE acfs (g VARCHAR, t BIGINT, x BIGINT)")
-    duck.executemany("INSERT INTO acfs VALUES (?, ?, ?)", rows)
-    twin = {
-        (r[0], r[1]): tuple(r[2:])
-        for r in duck.sql(acf_table_sql("SELECT * FROM acfs", order_by="t")).fetchall()
-    }
-    assert twin == got
-
-
 def test_theil_index_scalar_replay_and_regimes(spark):
     """Theil T vs scalar replay; equal incomes -> 0, a one-holder
     concentration -> ~ln(n)."""
@@ -4663,59 +1117,3 @@ def test_theil_index_scalar_replay_and_regimes(spark):
     assert twin == got
 
 
-def test_gumbel_fit_scalar_replay_and_recovery(spark):
-    """Gumbel fit vs scalar replay; maxima synthesized FROM a Gumbel
-    law (inverse-CDF on a deterministic grid) recover mu/beta within
-    a few percent."""
-    import duckdb
-    import math
-
-    from osm2geojson_spark.operators.analytics import (
-        GUMBEL_SCALE,
-        gumbel_fit,
-        gumbel_fit_sql,
-    )
-
-    # synthesize samples whose 16-block maxima are Gumbel(mu=500, beta=80):
-    # make every block constant at the inverse CDF of a stratified grid
-    rows = []
-    t = 0
-    K = 40
-    for j in range(K):
-        p = (j + 0.5) / K
-        mx = 500 + 80 * (-math.log(-math.log(p)))
-        for _ in range(16):
-            rows.append(("g1", t, int(round(mx))))
-            t += 1
-
-    def brute(block=16):
-        xs = [x for _, _, x in rows]
-        k = len(xs) // block
-        ms = sorted(
-            (max(xs[b * block : (b + 1) * block]), b) for b in range(k)
-        )
-        pts = []
-        for i, (m, _) in enumerate(ms, 1):
-            y = round(-math.log(-math.log(i / (k + 1))) * GUMBEL_SCALE)
-            pts.append((m, y))
-        sx = sum(p[0] for p in pts)
-        sy = sum(p[1] for p in pts)
-        syy = sum(p[1] * p[1] for p in pts)
-        sxy = sum(p[0] * p[1] for p in pts)
-        den = k * syy - sy * sy
-        beta = (k * sxy - sx * sy) / den * GUMBEL_SCALE
-        mu = (sx - (k * sxy - sx * sy) / den * sy) / k
-        return (k, sx, sy, syy, sxy, round(beta, 6), round(mu, 6))
-
-    df = spark.createDataFrame(rows, "g string, t long, x long")
-    r = gumbel_fit(df, order_cols=("t",)).collect()[0]
-    got = (r["k"], r["sx_q"], r["sy_q"], r["syy_q"], r["sxy_q"], r["beta"], r["mu"])
-    assert got == brute()
-    assert abs(r["beta"] - 80) < 8
-    assert abs(r["mu"] - 500) < 15
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE gbs (g VARCHAR, t BIGINT, x BIGINT)")
-    duck.executemany("INSERT INTO gbs VALUES (?, ?, ?)", rows)
-    tw = duck.sql(gumbel_fit_sql("SELECT * FROM gbs", order_by="t")).fetchall()[0]
-    assert tuple(tw) == ("g1",) + got

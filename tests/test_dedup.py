@@ -2464,173 +2464,3 @@ def test_gemm_collect_paths_guarded(spark):
     # within the cap the paths still run
     assert label_noise_scores(emb, k=3, max_rows=10).count() == 10
     assert gemm_knn_edges(emb, k=2, max_rows=10).count() == 20
-
-
-def test_lev1_join_matches_brute(spark):
-    import duckdb
-
-    from osm2geojson_spark.operators.dedup import lev1_join, lev1_join_sql
-
-    words = [
-        "spark", "spork", "sparks", "park", "stark", "spark",  # near-family
-        "duck", "dusk", "luck", "ducky",
-        "a", "b", "ab", "", "abc",
-        "zzzzz",
-    ]
-    rows = [(i, w) for i, w in enumerate(words)]
-    df = spark.createDataFrame(rows, "id long, s string")
-    got = sorted(
-        (r["a"], r["b"], r["lev"]) for r in lev1_join(df, "id", "s").collect()
-    )
-
-    def lev(x, y):
-        import numpy as np
-        d = np.arange(len(y) + 1)
-        for i, cx in enumerate(x, 1):
-            prev, d[0] = d[0], i
-            for j, cy in enumerate(y, 1):
-                cur = min(d[j] + 1, d[j - 1] + 1, prev + (cx != cy))
-                prev, d[j] = d[j], cur
-        return int(d[len(y)])
-
-    brute = sorted(
-        (i, j, lev(words[i], words[j]))
-        for i in range(len(words))
-        for j in range(i + 1, len(words))
-        if lev(words[i], words[j]) <= 1
-    )
-    assert got == brute
-    assert any(l == 0 for _, _, l in got)  # the duplicate "spark" pair
-    assert any(l == 1 for _, _, l in got)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE w (id BIGINT, s VARCHAR)")
-    duck.executemany("INSERT INTO w VALUES (?, ?)", rows)
-    twin = sorted(duck.sql(lev1_join_sql("SELECT * FROM w", "id", "s")).fetchall())
-    assert twin == got
-
-
-def test_gram_matrix_exact_vs_numpy_and_twin(spark):
-    import duckdb
-
-    from osm2geojson_spark.operators.similarity import gram_matrix, gram_matrix_sql, GRAM_SCALE
-
-    rng = np.random.default_rng(29)
-    dim = 8
-    V = rng.standard_normal((120, dim)).astype(np.float32)
-    rows = [(int(i), [float(x) for x in V[i]]) for i in range(len(V))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(5)
-
-    got = {
-        (r["i"], r["j"]): r["g_q"]
-        for r in gram_matrix(df, dim=dim).collect()
-    }
-    Q = np.floor(V.astype(np.float64) * GRAM_SCALE + 0.5).astype(np.int64)
-    G = Q.T @ Q
-    want = {(i, j): int(G[i, j]) for i in range(dim) for j in range(i, dim)}
-    assert got == want
-    # partition count must not matter (order-free integer sums)
-    got1 = {
-        (r["i"], r["j"]): r["g_q"]
-        for r in gram_matrix(df.coalesce(1), dim=dim).collect()
-    }
-    assert got1 == want
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE e (vec_id BIGINT, embedding FLOAT[])")
-    duck.executemany("INSERT INTO e VALUES (?, ?)", rows)
-    twin = {
-        (i, j): g
-        for i, j, g in duck.sql(gram_matrix_sql("SELECT * FROM e")).fetchall()
-    }
-    assert twin == want
-
-
-def test_snm_pairs_matches_brute_window_scan(spark):
-    import duckdb
-
-    from osm2geojson_spark.operators.dedup import snm_pairs, snm_pairs_sql
-
-    words = ["apple", "appel", "apply", "banana", "bananna", "cherry",
-             "cherri", "date", "dates", "fig"]
-    rows = [(i, w) for i, w in enumerate(words)]
-    df = spark.createDataFrame(rows, "id long, s string")
-    window, max_lev = 3, 2
-    got = sorted(
-        (r["a"], r["b"], r["lev"])
-        for r in snm_pairs(df, "id", "s", window, max_lev).collect()
-    )
-
-    def lev(x, y):
-        d = list(range(len(y) + 1))
-        for i, cx in enumerate(x, 1):
-            prev, d[0] = d[0], i
-            for j, cy in enumerate(y, 1):
-                cur = min(d[j] + 1, d[j - 1] + 1, prev + (cx != cy))
-                prev, d[j] = d[j], cur
-        return d[len(y)]
-
-    order = sorted(range(len(words)), key=lambda i: (words[i], i))
-    want = set()
-    for p in range(len(order)):
-        for q in range(p + 1, min(p + window + 1, len(order))):
-            i, j = order[p], order[q]
-            l = lev(words[i], words[j])
-            if l <= max_lev:
-                want.add((min(i, j), max(i, j), l))
-    assert got == sorted(want)
-    assert (0, 1, 2) in want or (0, 1, 1) in want  # apple/appel caught
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE sn (id BIGINT, s VARCHAR)")
-    duck.executemany("INSERT INTO sn VALUES (?, ?)", rows)
-    twin = sorted(duck.sql(
-        snm_pairs_sql("SELECT * FROM sn", "id", "s", window, max_lev)
-    ).fetchall())
-    assert twin == got
-
-
-def test_text_nll_matches_brute_bigram_lm(spark):
-    """text_nll == a from-scratch Python char-bigram LM on a tiny corpus;
-    repetitive text scores lower avg_nll than erratic text."""
-    import math
-    from collections import Counter
-
-    from osm2geojson_spark.functions.text import text_nll
-
-    docs = [
-        (1, "abababababab"),
-        (2, "aabbaabbaabb"),
-        (3, "the cat sat on the mat"),
-        (4, "x"),           # too short: no bigram, must drop
-        (5, "zq"),          # rare transition
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in text_nll(df).collect()}
-
-    bigrams = []
-    per_doc = {}
-    for did, t in docs:
-        bs = [t[i : i + 2] for i in range(len(t) - 1)]
-        per_doc[did] = bs
-        bigrams.extend(bs)
-    n_bg = Counter(bigrams)
-    n_c1 = Counter()
-    for bg, c in n_bg.items():
-        n_c1[bg[0]] += c
-    for did, bs in per_doc.items():
-        if not bs:
-            assert did not in got
-            continue
-        terms = [
-            int(round((math.log(n_bg[b]) - math.log(n_c1[b[0]])) * 1e6))
-            for b in bs
-        ]
-        r = got[did]
-        assert r["n_bigrams"] == len(bs)
-        assert r["nll_micro"] == -sum(terms)
-        assert abs(r["avg_nll"] - round(-sum(terms) / len(bs) / 1e6, 6)) < 1e-9
-    # the perfectly periodic doc is the most predictable
-    assert got[1]["avg_nll"] <= got[3]["avg_nll"]
-    # a corpus-unique transition is certain under the self-trained model
-    assert got[5]["avg_nll"] == 0.0
