@@ -145,12 +145,12 @@ def q_way_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = resolve_ways(frames)
     return w.select(
         F.col("id").alias("way_id"),
-        (F.size("coords_arr") / 2).cast("long").alias("n_pts"),
+        (F.size("coords") / 2).cast("long").alias("n_pts"),
         F.col("closed").alias("closed"),
-        F.round(F.try_element_at("coords_arr", F.lit(1)), 9).alias("x0"),
-        F.round(F.try_element_at("coords_arr", F.lit(2)), 9).alias("y0"),
-        F.round(F.try_element_at("coords_arr", F.lit(-2)), 9).alias("xn"),
-        F.round(F.try_element_at("coords_arr", F.lit(-1)), 9).alias("yn"),
+        F.round(F.try_element_at("coords", F.lit(1)), 9).alias("x0"),
+        F.round(F.try_element_at("coords", F.lit(2)), 9).alias("y0"),
+        F.round(F.try_element_at("coords", F.lit(-2)), 9).alias("xn"),
+        F.round(F.try_element_at("coords", F.lit(-1)), 9).alias("yn"),
     )
 
 

@@ -4,7 +4,9 @@ The distributed re-expression of the reference's conversion pipeline
 (/root/reference/osm2geojson/main.py:136-788):
 
 * way node-chains   : ``posexplode(nodes)`` -> left join against the node
-  table -> ``groupBy(way_id)`` ordered collect -> packed coordinate buffers.
+  table -> ``groupBy(way_id)`` ordered collect -> flat ``array<double>``
+  coordinates [lon0, lat0, lon1, lat1, ...], the one coordinate format from
+  here to the shape kernels.
   (reference: hash refs_index probe loop, main.py:288-302)
 * classification    : pure column expressions (functions/classify.py).
 * relation assembly : grouped Arrow kernels (linemerge / ring nesting /
@@ -21,12 +23,9 @@ no row-at-a-time Python UDFs.
 
 from __future__ import annotations
 
-import json
-from dataclasses import dataclass
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -34,32 +33,17 @@ from pyspark.sql.functions import pandas_udf
 from ..functions import geom
 from ..functions import kernels as K
 from ..functions.classify import polygon_flag_column
-from ..sources.normalize import ElementFrames, normalize_elements
+from ..sources.normalize import ElementFrames
 
 # --------------------------------------------------------------------------
-# small packed-coords helpers (raw (n,2) float64 buffers, no GPB header)
+# flat coords -> (n, 2) points
 
 
-def _coords_to_bin(arr: np.ndarray) -> bytes:
-    # + 0.0 normalizes -0.0 to +0.0 (IEEE 754 round-to-nearest) so the
-    # byte-equality ring-closing test (close_coords_expr) agrees with float
-    # value equality. NaN coords (never produced by OSM sources) are the one
-    # remaining divergence: bit-equal NaN endpoints read as "closed".
-    return (np.ascontiguousarray(arr, dtype="<f8") + 0.0).tobytes()
-
-
-def _bin_to_coords(buf: bytes) -> np.ndarray:
-    return np.frombuffer(buf, dtype="<f8").reshape(-1, 2)
-
-
-@pandas_udf(T.BinaryType())
-def pack_coords_udf(flat: pd.Series) -> pd.Series:
-    """array<double> [lon0,lat0,lon1,lat1,...] -> packed binary (or null)."""
-    return flat.map(
-        # + 0.0: normalize -0.0 (see _coords_to_bin)
-        lambda a: None if a is None else (np.asarray(a, dtype="<f8") + 0.0).tobytes(),
-        na_action="ignore",
-    )
+def _points(flat) -> np.ndarray:
+    """array<double> [lon0,lat0,lon1,lat1,...] -> (n, 2) float64 points.
+    + 0.0 normalizes -0.0 to +0.0 (IEEE 754 round-to-nearest), so no -0.0
+    reaches an emitted geometry."""
+    return (np.asarray(flat, dtype=np.float64) + 0.0).reshape(-1, 2)
 
 
 @pandas_udf(T.BinaryType())
@@ -85,7 +69,7 @@ def point_gpb_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
 
 
 # --------------------------------------------------------------------------
-# way shape kernel: packed coords + polygon flag -> GPB + failure reason
+# way shape kernel: flat coords + polygon flag -> GPB + failure reason
 
 _WAY_SHAPE_T = T.StructType(
     [T.StructField("gpb", T.BinaryType()), T.StructField("reason", T.StringType())]
@@ -93,14 +77,14 @@ _WAY_SHAPE_T = T.StructType(
 
 
 @pandas_udf(_WAY_SHAPE_T)
-def way_gpb_udf(coords_bin: pd.Series, is_poly: pd.Series) -> pd.DataFrame:
+def way_gpb_udf(coords: pd.Series, is_poly: pd.Series) -> pd.DataFrame:
     gpbs, reasons = [], []
-    for buf, poly in zip(coords_bin, is_poly):
-        if buf is None:
+    for flat, poly in zip(coords, is_poly):
+        if flat is None:
             gpbs.append(None)
             reasons.append("no_coords")
             continue
-        pts = _bin_to_coords(buf)
+        pts = _points(flat)
         if len(pts) < 2:  # main.py:346-351
             gpbs.append(None)
             reasons.append("too_few_coords")
@@ -247,18 +231,17 @@ def _member_lines(g: dict):
         if nested_bad[s]:
             return None, "nested_relation_too_deep"
         if pos1[s] < 0:  # direct way member
-            buf = coords[s]
+            flat = coords[s]
             r = role[s] or ""
-            if buf is None:
+            if flat is None or len(flat) < 4:
                 out.append((pos0[s], r, None, ref[s]))
             else:
-                pts = _bin_to_coords(buf)
-                out.append((pos0[s], r, pts if len(pts) >= 2 else None, ref[s]))
+                out.append((pos0[s], r, _points(flat), ref[s]))
         else:  # flattened nested-relation member -> merge its way lines
             lines = [
-                _bin_to_coords(b)
-                for b in coords[s:e]
-                if b is not None and len(b) >= 32
+                _points(flat)
+                for flat in coords[s:e]
+                if flat is not None and len(flat) >= 4
             ]
             if not lines:
                 out.append((pos0[s], role[s] or "", None, ref[s]))
@@ -381,19 +364,14 @@ def batched_rel_kernel(row_fn):
 
 
 def _coords_from_structs(col: Column) -> Column:
-    """array<struct<lon,lat>> -> flat array<double> for packing."""
+    """array<struct<lon,lat>> -> flat array<double>."""
     return F.flatten(F.transform(col, lambda p: F.array(p["lon"], p["lat"])))
-
-
-@dataclass
-class AssembledWays:
-    df: DataFrame  # way_id,id,seq,branch,coords,closed,is_poly,gpb,reason,used_node_refs,...
 
 
 def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -> DataFrame:
     """All top-level ways -> coords + classification + shape.
 
-    Columns: seq, id, branch, coords(binary), closed, is_poly, gpb, reason,
+    Columns: seq, id, branch, coords(array<double>), closed, is_poly, gpb, reason,
     used_node_refs(array<long>), nodes, tags, meta...
     """
     w = frames.ways
@@ -460,8 +438,7 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     flat = F.when(F.col("branch") == "geom", _coords_from_structs(F.col("geometry"))).when(
         F.col("branch") == "nodes", F.col("resolved_coords")
     )
-    w = w.withColumn("coords_arr", flat)  # flat [lon0,lat0,...] kept for consumers
-    w = w.withColumn("coords", pack_coords_udf(F.col("coords_arr")))
+    w = w.withColumn("coords", flat)
 
     # ring-closure test for the classifier: inline geometry first, then refs
     # (main.py:399-404)
@@ -501,9 +478,11 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
 
 
 def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
-    """Explode relation members; resolve way-member coords; flatten depth-1
-    relation members (multiline path). Output one row per leaf member:
-    (rel_id, pos0, pos1, mtype, ref, role, coords, found, nested_bad).
+    """Explode relation members into leaf rows and resolve every leaf with
+    one lookup join. Leaves are the direct members (pos1 = -1) and the
+    members of depth-1 nested relations (pos1 >= 0; multiline path). Output
+    one row per leaf member:
+    (rel_id, pos0, pos1, mtype, ref, role, coords, needs_close, nested_bad).
     """
     rels = frames.relations.filter(F.col("center").isNull())
     mem = rels.select(
@@ -512,131 +491,88 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
         "doc_id",
         "rel_id",
         F.col("m.pos").alias("pos0"),
+        F.lit(-1).alias("pos1"),
         F.col("m.mtype").alias("mtype"),
         F.col("m.ref").alias("ref"),
         F.col("m.role").alias("role"),
         F.col("m.geometry").alias("mgeom"),
     )
 
-    # deref'd way coords: the referenced way's own shape coordinates — the
-    # closed exterior when the way classifies as polygon (main.py:334-336)
-    way_lookup = ways_resolved.select(
-        "doc_id",
-        F.col("id").alias("ref"),
-        F.when(
-            F.col("gpb").isNotNull() & (F.col("branch") != "center"), F.col("coords")
-        ).alias("way_coords"),
-        F.col("is_poly").alias("way_is_poly"),
-        (F.col("gpb").isNotNull() & (F.col("branch") != "center")).alias("way_ok"),
-    )
-
-    mem = mem.join(way_lookup, ["doc_id", "ref"], "left")
-
-    inline = F.col("mgeom").isNotNull() & (F.size("mgeom") > 0)
-    direct = mem.withColumn(
-        "coords",
-        F.when(F.col("mtype") != "way", F.lit(None).cast("binary"))
-        .when(inline, pack_coords_udf(_coords_from_structs(F.col("mgeom"))))
-        .when(F.col("way_ok"), F.col("way_coords"))
-        .otherwise(F.lit(None).cast("binary")),
-    ).withColumn(
-        "needs_close", (~inline) & F.coalesce(F.col("way_is_poly"), F.lit(False))
-    ).withColumn(
-        "found", F.col("way_coords").isNotNull() | inline
-    )
-
-    # nested relation members (depth 1): replace with the referenced
-    # relation's way members, same resolution rules (main.py:526-532)
+    # nested relation members (depth 1): the referenced relation's members
+    # under the outer member's position and role (main.py:526-532)
     rel_index = frames.relations.select(
         "doc_id", F.col("id").alias("ref"), F.col("members").alias("nested_members")
     )
-    nested_src = (
+    nested = (
         mem.filter(F.col("mtype") == "relation")
-        .select("doc_id", "rel_id", "pos0", "ref", "role")
         .join(rel_index, ["doc_id", "ref"], "inner")
-    )
-    nested = nested_src.select(
-        "doc_id",
-        "rel_id",
-        "pos0",
-        F.col("role"),
-        F.explode("nested_members").alias("nm"),
-    ).select(
-        "doc_id",
-        "rel_id",
-        "pos0",
-        "role",
-        F.col("nm.pos").alias("pos1"),
-        F.col("nm.mtype").alias("nmtype"),
-        F.col("nm.ref").alias("ref"),
-        F.col("nm.geometry").alias("mgeom"),
-    )
-    # depth-2 relation member that exists in the index aborts the relation
-    # (reference KeyError at main.py:529 for id-less nested rel dicts)
-    rel_ids = frames.relations.select(
-        "doc_id", F.col("id").alias("ref"), F.lit(True).alias("_isrel")
-    )
-    nested = nested.join(rel_ids, ["doc_id", "ref"], "left").withColumn(
-        "nested_bad", (F.col("nmtype") == "relation") & F.col("_isrel").isNotNull()
-    ).drop("_isrel")
-    nested = nested.filter((F.col("nmtype") == "way") | F.col("nested_bad"))
-    nested = nested.join(way_lookup, ["doc_id", "ref"], "left")
-    n_inline = F.col("mgeom").isNotNull() & (F.size("mgeom") > 0)
-    nested = nested.withColumn(
-        "coords",
-        F.when(F.col("nested_bad"), F.lit(None).cast("binary"))
-        .when(n_inline, pack_coords_udf(_coords_from_structs(F.col("mgeom"))))
-        .when(F.col("way_ok"), F.col("way_coords"))
-        .otherwise(F.lit(None).cast("binary")),
-    ).withColumn(
-        "needs_close", (~n_inline) & F.coalesce(F.col("way_is_poly"), F.lit(False))
+        .select("doc_id", "rel_id", "pos0", "role", F.explode("nested_members").alias("nm"))
+        .select(
+            "doc_id",
+            "rel_id",
+            "pos0",
+            F.col("nm.pos").alias("pos1"),
+            F.col("nm.mtype").alias("mtype"),
+            F.col("nm.ref").alias("ref"),
+            "role",
+            F.col("nm.geometry").alias("mgeom"),
+        )
     )
 
-    direct_rows = direct.select(
+    # one lookup keyed by member type. A way resolves to its own shape
+    # coordinates — the closed exterior when the way classifies as polygon
+    # (main.py:334-336). A relation id found under a nested relation is a
+    # depth-2 member, which aborts the relation (reference KeyError at
+    # main.py:529 for id-less nested rel dicts).
+    way_ok = F.col("gpb").isNotNull() & (F.col("branch") != "center")
+    lookup = ways_resolved.select(
         "doc_id",
-        "rel_id",
-        "pos0",
-        F.lit(-1).alias("pos1"),
-        "mtype",
-        "ref",
-        "role",
-        "coords",
-        "needs_close",
-        F.lit(False).alias("nested_bad"),
+        F.col("id").alias("ref"),
+        F.lit("way").alias("mtype"),
+        F.when(way_ok, F.col("coords")).alias("way_coords"),
+        F.col("is_poly").alias("way_is_poly"),
+    ).unionByName(
+        frames.relations.select(
+            "doc_id",
+            F.col("id").alias("ref"),
+            F.lit("relation").alias("mtype"),
+            F.lit(True).alias("is_rel"),
+        ),
+        allowMissingColumns=True,
     )
-    nested_rows = nested.select(
+    leaves = mem.unionByName(nested).join(lookup, ["doc_id", "ref", "mtype"], "left")
+    inline = F.col("mgeom").isNotNull() & (F.size("mgeom") > 0)
+    return leaves.select(
         "doc_id",
         "rel_id",
         "pos0",
         "pos1",
-        F.lit("way").alias("mtype"),
+        "mtype",
         "ref",
         "role",
-        "coords",
-        "needs_close",
-        "nested_bad",
+        F.when(
+            F.col("mtype") == "way",
+            F.when(inline, _coords_from_structs(F.col("mgeom"))).otherwise(
+                F.col("way_coords")
+            ),
+        ).alias("coords"),
+        ((~inline) & F.coalesce(F.col("way_is_poly"), F.lit(False))).alias("needs_close"),
+        ((F.col("pos1") >= 0) & F.col("is_rel").isNotNull()).alias("nested_bad"),
     )
-    return direct_rows.unionByName(nested_rows)
-
-
-_MEMBER_KERNEL_SCHEMA = (
-    "rel_id long, pos0 int, pos1 int, mtype string, ref long, role string, "
-    "coords binary, nested_bad boolean"
-)
 
 
 def close_coords_expr(coords: Column, needs_close: Column) -> Column:
-    """K.close_ring as a pure column expression over the packed little-endian
-    float64 coords binary: append the first 16 bytes (the first point) when
-    the ring is open. JVM-side — no Python/Arrow pass over every member row
-    just to close the few polygon-classified ways."""
-    first_pt = F.substring(coords, 1, 16)
-    last_pt = F.substring(coords, -16, 16)
+    """K.close_ring as a pure column expression over flat coords: append the
+    first point when the ring is open. JVM-side — no Python/Arrow pass over
+    every member row just to close the few polygon-classified ways. Spark
+    compares doubles with -0.0 == 0.0, so such a ring counts as closed, as
+    it does in the kernels after their + 0.0."""
+    first_pt = F.slice(coords, 1, 2)
     open_ring = (
         needs_close
         & coords.isNotNull()
-        & (F.length(coords) >= 32)
-        & (first_pt != last_pt)
+        & (F.size(coords) >= 4)
+        & (first_pt != F.slice(coords, -2, 2))
     )
     return F.when(open_ring, F.concat(coords, first_pt)).otherwise(coords)
 
@@ -660,16 +596,14 @@ def assemble_relations(
     ).drop("needs_close")
     flagged = members.join(no_center, ["doc_id", "rel_id"], "inner")
 
-    # multiline path never sees relation-member rows that weren't flattened;
-    # multipolygon path only consumes way members (main.py:596-607). Both
-    # path filters are applied as ONE disjunction so a single repartition +
-    # sort + kernel pass serves both (per-group dispatch on is_poly).
+    # multiline path: way members, direct or flattened from a nested
+    # relation, plus the depth-2 markers; multipolygon path: direct members
+    # only, of which it consumes the ways (main.py:596-607). Both path
+    # filters are applied as ONE disjunction so a single repartition + sort
+    # + kernel pass serves both (per-group dispatch on is_poly).
     kept_members = flagged.filter(
         (F.col("is_poly") & (F.col("pos1") < 0))
-        | (
-            (~F.col("is_poly"))
-            & ((F.col("mtype") == "way") | (F.col("pos1") >= 0) | F.col("nested_bad"))
-        )
+        | ((~F.col("is_poly")) & ((F.col("mtype") == "way") | F.col("nested_bad")))
     )
 
     # mtype is a filter-only column — the kernel never reads it, so it is
@@ -693,7 +627,7 @@ def assemble_relations(
         F.lit(-1).alias("pos1"),
         F.lit(None).cast("long").alias("ref"),
         F.lit(None).cast("string").alias("role"),
-        F.lit(None).cast("binary").alias("coords"),
+        F.lit(None).cast("array<double>").alias("coords"),
         F.lit(False).alias("nested_bad"),
         "is_poly",
     )

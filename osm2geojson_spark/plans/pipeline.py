@@ -106,8 +106,6 @@ def _build_plan(
     relations it was built from: (features, failures, ways, rels_flagged).
     Strict mode derives its member violations from the same two frames."""
     ways = resolve_ways(frames, area_keys, polygon_features)
-    # coords_arr duplicates the packed binary `coords` — don't materialize it
-    ways = ways.drop("coords_arr")
     if materialize == "localCheckpoint":
         ways = ways.localCheckpoint(eager=False)
     elif materialize == "cache":

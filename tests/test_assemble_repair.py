@@ -5,16 +5,20 @@ relation-member call sites."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.functions import geom
 from osm2geojson_spark.functions import kernels as K
 from osm2geojson_spark.operators.assemble import (
-    _coords_to_bin,
     _lines_to_multipolygon,
+    close_coords_expr,
     way_gpb_udf,
 )
+from osm2geojson_spark.plans.pipeline import build_features, json2geojson
+from osm2geojson_spark.sources.normalize import normalize_elements
 
 
 def _pentagram() -> np.ndarray:
@@ -27,8 +31,8 @@ def test_self_intersecting_way_emits_all_repaired_loops(spark):
     with all 6 simple loops, not a single arbitrary fragment."""
     ring = _pentagram()
     df = spark.createDataFrame(
-        [(1, bytearray(_coords_to_bin(ring)), True)],
-        "way_id long, coords binary, is_poly boolean",
+        [(1, ring.ravel().tolist(), True)],
+        "way_id long, coords array<double>, is_poly boolean",
     )
     out = df.select(way_gpb_udf(F.col("coords"), F.col("is_poly")).alias("s"))
     row = out.select("s.gpb", "s.reason").collect()[0]
@@ -45,8 +49,8 @@ def test_self_intersecting_way_emits_all_repaired_loops(spark):
 def test_simple_way_still_emits_plain_polygon(spark):
     sq = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]])
     df = spark.createDataFrame(
-        [(1, bytearray(_coords_to_bin(sq)), True)],
-        "way_id long, coords binary, is_poly boolean",
+        [(1, sq.ravel().tolist(), True)],
+        "way_id long, coords array<double>, is_poly boolean",
     )
     row = df.select(way_gpb_udf(F.col("coords"), F.col("is_poly")).alias("s")).select(
         "s.gpb"
@@ -70,3 +74,125 @@ def test_lines_to_multipolygon_keeps_all_repaired_pieces():
     assert len(polys) == 3
     for rings in polys:
         assert K.ring_is_simple(rings[0])
+
+
+def test_close_coords_expr_appends_first_point_to_open_rings(spark):
+    open_sq = [0.0, 0.0, 1.0, 0.0, 1.0, 1.0]
+    closed_sq = open_sq + [0.0, 0.0]
+    signed_zero = [-0.0, 5.0, 1.0, 5.0, 1.0, 6.0, 0.0, 5.0]
+    rows = [
+        (1, open_sq, True),
+        (2, closed_sq, True),
+        (3, None, True),
+        (4, [3.0, 4.0], True),
+        (5, open_sq, False),
+        (6, signed_zero, True),
+    ]
+    df = spark.createDataFrame(rows, "id int, coords array<double>, needs_close boolean")
+    got = dict(
+        df.select("id", close_coords_expr(F.col("coords"), F.col("needs_close")))
+        .toPandas()
+        .itertuples(index=False)
+    )
+    got = {k: None if v is None else list(v) for k, v in got.items()}
+    assert got == {
+        1: closed_sq,
+        2: closed_sq,
+        3: None,
+        4: [3.0, 4.0],
+        5: open_sq,
+        6: signed_zero,
+    }
+
+
+def _node(i, lon, lat):
+    return {"type": "node", "id": i, "lon": lon, "lat": lat}
+
+
+def _way(i, nodes, **tags):
+    return {"type": "way", "id": i, "nodes": nodes, "tags": tags}
+
+
+def _rel(i, rtype, members):
+    return {
+        "type": "relation",
+        "id": i,
+        "members": [{"type": t, "ref": r, "role": role} for t, r, role in members],
+        "tags": {"type": rtype},
+    }
+
+
+def test_nested_member_failure_reasons(spark):
+    """Depth-1 nested relation members: a relation member two levels down
+    that exists aborts the relation, a nested relation whose ways do not
+    merge to one chain fails it, and a multipolygon ignores its
+    relation-type members."""
+    elements = [
+        _node(1, 0.0, 0.0), _node(2, 1.0, 0.0), _node(3, 1.0, 1.0),
+        _node(4, 0.0, 1.0), _node(5, 5.0, 5.0), _node(6, 6.0, 5.0),
+        _way(10, [1, 2]),
+        _way(11, [2, 3]),
+        _way(12, [5, 6]),
+        _way(13, [1, 2, 3, 4, 1]),
+        # 100 -> 200 -> {relation 300, way 10}: 300 exists -> too deep
+        _rel(100, "route", [("relation", 200, "")]),
+        _rel(200, "route", [("relation", 300, ""), ("way", 10, "")]),
+        _rel(300, "route", [("way", 11, "")]),
+        # 400 -> 500 -> {way 10, way 12}: two disjoint chains
+        _rel(400, "route", [("relation", 500, "")]),
+        _rel(500, "route", [("way", 10, ""), ("way", 12, "")]),
+        # multipolygon with a relation-type member: assembled from its way
+        _rel(600, "multipolygon", [("way", 13, "outer"), ("relation", 500, "outer")]),
+    ]
+    frames = normalize_elements(spark, elements)
+    features, failures = build_features(spark, frames)
+    reasons = {
+        r["id"]: r["reason"]
+        for r in failures.filter(F.col("etype") == "relation").collect()
+    }
+    assert reasons == {
+        100: "nested_relation_too_deep",
+        400: "nested_multiline_not_mergeable",
+    }
+    rels = {
+        r["id"]: geom.decode(bytes(r["gpb"]))
+        for r in features.filter(F.col("etype") == "relation").collect()
+    }
+    gtype, polys = rels[600]
+    assert gtype == geom.GTYPE_MULTIPOLYGON
+    assert len(polys) == 1 and len(polys[0]) == 1
+    assert abs(K.signed_area(polys[0][0])) == 1.0
+
+
+def test_negative_zero_coords_emit_positive_zero(spark):
+    """-0.0 longitudes, from node refs and from inline geometry, come out as
+    0.0, and an inline ring from (-0.0, 5) to (0.0, 5) reads as closed."""
+    elements = [
+        _node(1, -0.0, 0.0), _node(2, 1.0, 0.0), _node(3, 1.0, 1.0),
+        _node(4, -0.0, 1.0),
+        _way(10, [1, 2, 3, 4, 1], building="yes"),
+        {
+            "type": "way",
+            "id": 11,
+            "geometry": [
+                {"lon": -0.0, "lat": 5.0},
+                {"lon": 1.0, "lat": 5.0},
+                {"lon": 1.0, "lat": 6.0},
+                {"lon": 0.0, "lat": 5.0},
+            ],
+            "tags": {"building": "yes"},
+        },
+    ]
+    feats = json2geojson(spark, {"elements": elements})["features"]
+    got = {f["properties"]["id"]: f["geometry"] for f in feats}
+    assert got == {
+        10: {
+            "type": "Polygon",
+            "coordinates": [[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]],
+        },
+        11: {
+            "type": "Polygon",
+            "coordinates": [[[0.0, 5.0], [1.0, 5.0], [1.0, 6.0], [0.0, 5.0]]],
+        },
+    }
+    assert "-0.0" not in json.dumps(got)

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from osm2geojson_spark.functions import geom as GEO
 from osm2geojson_spark.functions import kernels as K
-from osm2geojson_spark.plans.pipeline import build_features
+from osm2geojson_spark.plans.pipeline import build_features, feature_json_lines
 from osm2geojson_spark.sources.synthetic import synthetic_osm_frames
 
 
@@ -41,3 +41,32 @@ def test_synthetic_corpus_conversion(spark):
         assert K.signed_area(rings[0]) > 0
         for h in rings[1:]:
             assert K.signed_area(h) < 0
+
+
+def _plan_node_names(plan) -> list[str]:
+    """Node names of an executed plan; a reused exchange also adds
+    "reuses:<name of the exchange it reuses>"."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        if node.nodeName() == "ReusedExchange":
+            names.append("reuses:" + node.child().nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_build_features_plan_shape(spark):
+    """Python crossings and shuffles of the unmaterialized conversion plan.
+    ArrowEvalPython: node point + serializer, way shape + serializer, the
+    relation member lookup's way shape + serializer, and the way shape once
+    more under the way branch's pushed-down ``gpb IS NOT NULL`` filter.
+    Member resolution is two joins (nested relation index, member lookup),
+    both broadcast at this size, so it adds no shuffle."""
+    frames = synthetic_osm_frames(spark, 50)
+    features, _ = build_features(spark, frames, materialize=None)
+    plan = feature_json_lines(features)._jdf.queryExecution().executedPlan()
+    names = _plan_node_names(plan)
+    assert names.count("ArrowEvalPython") == 7
+    assert names.count("Exchange") + names.count("reuses:Exchange") == 8
