@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
+
 # fixed tiny stopword list — part of the operator definition
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it", "on", "for"]
 
@@ -684,8 +686,8 @@ def bpe_train(
     rescanned. Returns min(merges, available) rows."""
     out, _ = _bpe_learn(docs, text_col, merges)
     spark = docs.sparkSession
-    return spark.createDataFrame(
-        out, "round int, a string, b string, merged string, pair_count long"
+    return local_frame(
+        spark, out, "round int, a string, b string, merged string, pair_count long"
     )
 
 
@@ -1329,7 +1331,7 @@ def lexicon_sentiment(
         F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w"),
     ).filter(F.col("w") != "")
     spark = docs.sparkSession
-    lex_df = spark.createDataFrame(lex, "w string, wt long")
+    lex_df = local_frame(spark, lex, "w string, wt long")
     j = toks.join(F.broadcast(lex_df), "w", "left")
     agg = j.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),

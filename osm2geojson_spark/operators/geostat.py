@@ -38,6 +38,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from . import cells
 from .spatial_join import within_distance_join
 
@@ -399,8 +400,8 @@ def ripleys_k(
         .groupBy("r_m")
         .agg((F.lit(2) * F.count(F.lit(1))).cast("long").alias("n_pairs_le"))
     )
-    spine = points.sparkSession.createDataFrame(
-        [(r,) for r in radii], "r_m double"
+    spine = local_frame(
+        points.sparkSession, [(r,) for r in radii], "r_m double"
     )
     k_hat = (
         F.lit(float(area_m2))
@@ -834,8 +835,10 @@ def k_centers(
     ).localCheckpoint(eager=False)
     first = base.orderBy("pid").limit(1).collect()
     if not first:
-        return pts.sparkSession.createDataFrame(
-            [], "round int, pid long, x long, y long, d2_when_added long"
+        return local_frame(
+            pts.sparkSession,
+            [],
+            "round int, pid long, x long, y long, d2_when_added long",
         )
     centers = [(1, first[0]["pid"], first[0]["x"], first[0]["y"], None)]
     for r in range(2, int(k) + 1):
@@ -854,8 +857,10 @@ def k_centers(
         centers.append(
             (r, top[0]["pid"], top[0]["x"], top[0]["y"], top[0]["_d2"])
         )
-    return pts.sparkSession.createDataFrame(
-        centers, "round int, pid long, x long, y long, d2_when_added long"
+    return local_frame(
+        pts.sparkSession,
+        centers,
+        "round int, pid long, x long, y long, d2_when_added long",
     )
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import imagecodec
+from ..sources.local import local_frame
 
 
 def decode_stats(images: DataFrame) -> DataFrame:
@@ -4708,7 +4709,7 @@ def filterbank_energy(
         "is_dominant"
     )
     spark = audios.sparkSession
-    wtab = spark.createDataFrame(fb, "m int, k int, w long")
+    wtab = local_frame(spark, fb, "m int, k int, w long")
     out = (
         en.join(F.broadcast(wtab), "k")
         .groupBy("audio_id", "frame_idx", "m")
@@ -5087,7 +5088,7 @@ def cepstral_features(
         audios, frame=frame, centers=centers, scale=scale
     ).select("audio_id", "frame_idx", "m", "log2_e")
     spark = audios.sparkSession
-    basis = spark.createDataFrame(_ceps_basis(M), "j int, m int, b long")
+    basis = local_frame(spark, _ceps_basis(M), "j int, m int, b long")
     return (
         fb.join(F.broadcast(basis), "m")
         .groupBy("audio_id", "frame_idx", "j")

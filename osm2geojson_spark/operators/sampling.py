@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
+
 # Congruential gate. The key is reduced mod the prime FIRST, so (a) any
 # int64 key is legal — the product (MOD-1)·MUL + ADD ≈ 2.7e15 stays far
 # below 2^63, no silent Spark wrap / DuckDB overflow error (round-3
@@ -701,8 +703,8 @@ def coverage_select(
             out.append((step, doc, gain, total))
             picked.append(doc)
         spark = docs.sparkSession
-        return spark.createDataFrame(
-            out, "step long, doc_id long, gain long, covered_total long"
+        return local_frame(
+            spark, out, "step long, doc_id long, gain long, covered_total long"
         )
     finally:
         toks.unpersist()

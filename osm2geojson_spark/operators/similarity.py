@@ -47,6 +47,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from ..sources.local import local_frame
+
 RH_BITS = 16  # bits (hyperplanes) per band
 ANN_BANDS = 4  # bands probed by cosine_topk_lsh (hamming-1 multiprobe)
 DEDUP_BANDS = 8  # bands used by embedding_cosine_dups (plain band join)
@@ -1477,8 +1479,8 @@ def pca_top_eigvec(
     den = sum(x * x for x in v) * scale * scale
     lam = float(num) / float(den) if den else 0.0
     spark = emb.sparkSession
-    return spark.createDataFrame(
-        [(i, v[i], lam) for i in range(dim)], "i int, v_q long, lam double"
+    return local_frame(
+        spark, [(i, v[i], lam) for i in range(dim)], "i int, v_q long, lam double"
     )
 
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .sampling import _H_ADD, _H_MOD, _H_MUL, sample_hash, sample_hash_sql
 
 
@@ -864,8 +865,8 @@ def compactor_quantiles(
         F.sum(F.expr("shiftleft(1L, lvl)")).over(wall).alias("w_total"),
         F.count(F.lit(1)).over(wall).alias("sketch_n"),
     )
-    qs = df.sparkSession.createDataFrame(
-        [(int(q),) for q in q_pcts], "q_pct long"
+    qs = local_frame(
+        df.sparkSession, [(int(q),) for q in q_pcts], "q_pct long"
     )
     hits = (
         walked.crossJoin(F.broadcast(qs))

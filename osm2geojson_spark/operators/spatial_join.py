@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions import geom
 from ..functions import kernels as K
+from ..sources.local import local_frame
 from . import cells
 
 
@@ -34,13 +35,18 @@ from . import cells
 
 
 def polygons_to_df(spark, polys: list[tuple[int, bytes]]) -> DataFrame:
-    """[(poly_id, gpb)] -> DataFrame(poly_id, gpb, minx, miny, maxx, maxy)."""
+    """[(poly_id, gpb)] -> DataFrame(poly_id, gpb, minx, miny, maxx, maxy).
+
+    A local relation: ``point_in_polygon_join``'s collect of it runs no
+    Spark job, and a join against it is planned as a broadcast."""
     rows = []
     for pid, g in polys:
         minx, miny, maxx, maxy = geom.bbox(g)
         rows.append((pid, bytearray(g), minx, miny, maxx, maxy))
-    return spark.createDataFrame(
-        rows, "poly_id long, gpb binary, minx double, miny double, maxx double, maxy double"
+    return local_frame(
+        spark,
+        rows,
+        "poly_id long, gpb binary, minx double, miny double, maxx double, maxy double",
     )
 
 
@@ -333,7 +339,7 @@ def point_in_polygon_join(
                 def _probe_at(r):
                     return cells.cell_id(F.col(lon_col), F.col(lat_col), r)
 
-            inside_df = spark.createDataFrame(inside_rows, shard_schema)
+            inside_df = local_frame(spark, inside_rows, shard_schema)
             probe = F.explode(F.array(*[_probe_at(r) for r in res_set]))
             fast = (
                 pts.withColumn("probe_cell", probe)
@@ -346,9 +352,9 @@ def point_in_polygon_join(
                 .drop(inside_df["cell_id"])
             )
         else:
-            inside_df = spark.createDataFrame(inside_rows, shard_schema)
+            inside_df = local_frame(spark, inside_rows, shard_schema)
             fast = pts.join(F.broadcast(inside_df), "cell_id", "inner")
-        boundary_df = spark.createDataFrame(boundary_rows, shard_schema)
+        boundary_df = local_frame(spark, boundary_rows, shard_schema)
         cand = pts.join(F.broadcast(boundary_df), "cell_id", "inner")
         out_schema = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields

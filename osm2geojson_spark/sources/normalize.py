@@ -8,6 +8,11 @@ input order, so the final sink sorts by it. ``tags`` is kept as
 sensitive (main.py:370-373).
 
 Coordinates are carried (lon, lat) ordered, matching GeoJSON axis order.
+
+The four frames are driver-held local relations (``sources.local``): the
+rows are parsed and held on the driver, as before, but scanning them never
+starts a Python worker. The input-size cap of a whole-document driver
+parse is unchanged.
 """
 
 from __future__ import annotations
@@ -16,6 +21,8 @@ from collections import namedtuple
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from .local import local_frame
 
 ElementFrames = namedtuple(
     "ElementFrames", ["nodes", "ways", "relations", "others", "n_elements"]
@@ -214,10 +221,10 @@ def normalize_documents(
                 others.append((doc_id, seq, t, el.get("id")))
 
     return ElementFrames(
-        nodes=spark.createDataFrame(nodes, NODES_SCHEMA),
-        ways=spark.createDataFrame(ways, WAYS_SCHEMA),
-        relations=spark.createDataFrame(rels, RELATIONS_SCHEMA),
-        others=spark.createDataFrame(others, OTHERS_SCHEMA),
+        nodes=local_frame(spark, nodes, NODES_SCHEMA),
+        ways=local_frame(spark, ways, WAYS_SCHEMA),
+        relations=local_frame(spark, rels, RELATIONS_SCHEMA),
+        others=local_frame(spark, others, OTHERS_SCHEMA),
         n_elements=n,
     )
 

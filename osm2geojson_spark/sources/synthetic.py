@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..functions import imagecodec
+from .local import local_frame
 
 Q = 1 << 31
 _LON_M1, _LON_M2 = 2654435761, 1000003
@@ -228,7 +229,7 @@ def synthetic_osm_frames(spark: SparkSession, n_rel: int):
         F.lit(None).cast("string").alias("user"),
         F.lit(None).cast("long").alias("uid"),
     )
-    return ElementFrames(nodes, ways, rels, spark.createDataFrame([], OTHERS_SCHEMA), 0)
+    return ElementFrames(nodes, ways, rels, local_frame(spark, [], OTHERS_SCHEMA), 0)
 
 
 @pandas_udf(T.BinaryType())

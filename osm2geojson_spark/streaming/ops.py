@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..operators import cells
 from ..sources import synthetic as SYN
+from ..sources.local import local_frame
 
 EVENTS_DDL = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -380,7 +381,8 @@ def streaming_geofence_events(
         from ..operators.trajectory import geofence_visits
 
         spark = pings.sparkSession
-        fdf = spark.createDataFrame(
+        fdf = local_frame(
+            spark,
             [(int(f[0]), float(f[1]), float(f[2]), float(f[3]), float(f[4])) for f in fences],
             "fence_id long, x0 double, y0 double, x1 double, y1 double",
         )

@@ -4,11 +4,13 @@ closed-form ground truth at any n_rel (the bench osm_convert workload)."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.functions import geom as GEO
 from osm2geojson_spark.functions import kernels as K
 from osm2geojson_spark.plans.pipeline import build_features, feature_json_lines
+from osm2geojson_spark.sources.normalize import normalize_elements
 from osm2geojson_spark.sources.synthetic import synthetic_osm_frames
 
 
@@ -70,3 +72,39 @@ def test_build_features_plan_shape(spark):
     names = _plan_node_names(plan)
     assert names.count("ArrowEvalPython") == 7
     assert names.count("Exchange") + names.count("reuses:Exchange") == 8
+
+
+def test_normalized_frames_are_local_relations(spark):
+    """The document path's element frames are JVM local relations: no scan
+    of them starts a Python worker."""
+    elements = [
+        {"type": "node", "id": 1, "lon": 1.0, "lat": 2.0, "tags": {"a": "b"}},
+        {"type": "way", "id": 2, "nodes": [1, 1]},
+        {
+            "type": "relation",
+            "id": 3,
+            "members": [
+                {"type": "way", "ref": 2, "role": "outer",
+                 "geometry": [{"lon": 1.0, "lat": 2.0}]},
+            ],
+        },
+        {"type": "area", "id": 4},
+    ]
+    frames = normalize_elements(spark, elements)
+    for df in (frames.nodes, frames.ways, frames.relations, frames.others):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+        assert df.count() == 1
+
+
+def test_normalize_rejects_bad_input_naming_the_field(spark):
+    """A null id and a string id fail on the driver with a named field."""
+    with pytest.raises(ValueError, match=r"\bid\b"):
+        normalize_elements(
+            spark, [{"type": "node", "id": None, "lon": 1.0, "lat": 2.0}]
+        )
+    with pytest.raises((TypeError, ValueError)):
+        normalize_elements(
+            spark, [{"type": "node", "id": "x", "lon": 1.0, "lat": 2.0}]
+        )

@@ -127,6 +127,30 @@ def test_pip_join_matches_bruteforce(spark, points):
     assert len(got) > 50  # non-trivial
 
 
+@pytest.mark.parametrize("compact_interior", [True, False])
+def test_polygon_side_is_a_local_relation(spark, points, compact_interior):
+    """The polygon table and the broadcast shard tables are JVM local
+    relations: no scan of them starts a Python worker."""
+    rects = [
+        (1, geom.polygon([[(-6, -6), (6, -6), (6, 6), (-6, 6), (-6, -6)]])),
+        (2, geom.polygon([[(2, 2), (9, 2), (9, 9), (2, 9), (2, 2)]])),
+    ]
+    polys = polygons_to_df(spark, rects)
+    joined = point_in_polygon_join(
+        points, polys, res=5, compact_interior=compact_interior
+    )
+    for df in (polys, joined):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+    n = {1: 0, 2: 0}
+    for r in points.collect():
+        n[1] += -6 <= r["lon"] <= 6 and -6 <= r["lat"] <= 6
+        n[2] += 2 <= r["lon"] <= 9 and 2 <= r["lat"] <= 9
+    got = joined.groupBy("poly_id").count().collect()
+    assert {r["poly_id"]: r["count"] for r in got} == n
+
+
 def test_pip_respects_holes(spark):
     poly = _triangle_with_hole()
     polys = polygons_to_df(spark, [(1, poly)])
