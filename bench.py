@@ -80,9 +80,7 @@ BENCH_QUERIES = [
     "image_entropy",
     "block_motion",
     "token_budget",
-    "psi_drift",
     "min_seam",
-    "group_quantiles",
     "hist_match",
     "morphology",
     "rle_mask",
@@ -100,7 +98,6 @@ BENCH_QUERIES = [
     "flow_dir",
     "frechet",
     "watershed",
-    "ab_test",
     "mutual_info",
     "hll_distinct",
     "template_match",
@@ -108,7 +105,6 @@ BENCH_QUERIES = [
     "morph_openclose",
     "ssim",
     "ranking_eval",
-    "scd2",
     "hotspots",
     "focal_stats",
     "lisa",
@@ -189,13 +185,9 @@ BENCH_QUERIES = [
     "glcm",
     "st_dbscan",
     "theta_distinct",
-    "audio_stats",
-    "audio_frames",
     "median_filter",
-    "audio_autocorr",
     "k_core",
     "triangles",
-    "skyline",
     "cms_topk",
     "pps_sample",
     "distance_transform",
@@ -207,13 +199,10 @@ BENCH_QUERIES = [
     "fuzzy_join",
     "gram_matrix",
     "snm_dedup",
-    "ohlc",
-    "basket",
     "profile",
     "cusum_stream",
     "resize_bilinear",
     "link_prediction",
-    "kappa",
     "sd_ellipse",
     "hough",
     "gaussian_blur",
@@ -234,10 +223,8 @@ BENCH_QUERIES = [
     "delaunay",
     "brief_match",
     "coverage_select",
-    "vad_segments",
     "assortativity",
     "haar_energy",
-    "ewma",
     "iou_track",
     "tree_rollup",
     "stream_topk",
@@ -245,7 +232,6 @@ BENCH_QUERIES = [
     "viterbi",
     "squares",
     "anchor_assign",
-    "tone_detect",
     "color_quantize",
     "clustering_coeff",
     "winnow",
@@ -253,12 +239,10 @@ BENCH_QUERIES = [
     "alpha_shape",
     "pca_top",
     "dog_keypoints",
-    "filterbank",
     "home_anchors",
     "compress_cost",
     "bpe_train",
     "bpe_encode",
-    "onset_detect",
     "gray_world",
     "ring_validity",
     "flow_accum",
@@ -277,8 +261,6 @@ BENCH_QUERIES = [
     "bearing_stats",
     "pii_scan",
     "knn_classify",
-    "cepstrum",
-    "audio_resample",
     "cell_buffer",
     "url_canon",
     "keyframes",
@@ -299,12 +281,10 @@ BENCH_QUERIES = [
     "phonetic_dedup",
     "huff_model",
     "scc",
-    "pitch_track",
     "betweenness",
     "lcs_similarity",
     "undistort",
     "quadrat",
-    "beat_track",
     "rocchio",
     "k_truss",
     "stable_matching",
@@ -321,7 +301,6 @@ BENCH_QUERIES = [
     "matching",
     "reciprocity",
     "fuzzy2_join",
-    "theil",
 ]
 
 

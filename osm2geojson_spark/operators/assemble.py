@@ -387,8 +387,10 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     )
 
     # --- node-ref resolution (the refs_index probe as a left join) -------
+    # keyed by (doc_id, seq), not id: two ways that share an id each resolve
+    # their own node list, as the reference converts every element on its own
     need = w.filter(F.col("branch") == "nodes").select(
-        "doc_id", "id", F.posexplode("nodes").alias("pos", "node_ref")
+        "doc_id", "seq", F.posexplode("nodes").alias("pos", "node_ref")
     )
     # last-occurrence-wins node index (build_refs_index dict overwrite);
     # max_by aggregation, not a window — partial (map-side) aggregation
@@ -401,7 +403,7 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     )
     resolved = (
         need.join(nd, ["doc_id", "node_ref"], "left")
-        .groupBy("doc_id", "id")
+        .groupBy("doc_id", "seq")
         .agg(F.sort_array(F.collect_list(F.struct("pos", "node_ref", "lon", "lat"))).alias("pts"))
     )
     miss = F.filter("pts", lambda p: p["lon"].isNull())
@@ -429,9 +431,9 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
 
     w = w.join(
         resolved.select(
-            "doc_id", "id", "first_miss", "used_node_refs", "resolved_coords"
+            "doc_id", "seq", "first_miss", "used_node_refs", "resolved_coords"
         ),
-        ["doc_id", "id"],
+        ["doc_id", "seq"],
         "left",
     )
 

@@ -1,10 +1,10 @@
-"""Multimodal (image/audio/video) column operators.
+"""Multimodal (image/video) column operators.
 
 Media travels as opaque ``binary`` columns with typed metadata (w, h, fmt) —
 exactly the input_hint payload shape. All processing is Arrow-batched
 ``mapInPandas``: schema, partitioning, UDF signature and batch shaping are
-production-real; only external codecs are stubbed (this container has no
-image/audio libraries — see functions/imagecodec.decode_external), while the
+production-real; only external codecs are stubbed (the package depends on
+no image library — see functions/imagecodec.decode_external), while the
 'rawz' lossless codec path is fully implemented and tested.
 
 Operators:
@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import imagecodec
-from ..sources.local import local_frame
 
 
 def decode_stats(images: DataFrame) -> DataFrame:
@@ -1496,113 +1495,6 @@ def glcm_features(
     )
 
 
-def audio_stats(audios: DataFrame) -> DataFrame:
-    """AUDIO WAVEFORM STATS per clip — the audio-curation gate (silence /
-    clipping / energy screens before a speech or audio-event training
-    set): decode the pcmz payload and emit
-
-        n_samples   exact int64
-        sq_sum      sum v^2       (int64 — the energy numerator)
-        peak        max |v|       (int64; 32768 = hard-clipped)
-        zero_cross  #{t : sign(v_t) != sign(v_t+1)}, sign = (v >= 0)
-        rms         round(sqrt(sq_sum / n), 6) assembled JVM-SIDE
-
-    Exactness: int16^2 <= 2^30, so a 2^33-sample clip (~75 h at 32 kHz)
-    keeps sq_sum inside int64; every reported integer is engine-exact and
-    rms is the one float op pair (divide, sqrt) replayed in SQL-twin
-    order. Undecodable formats yield decode_ok = false with NULL stats.
-
-    Scale: decode_stats' shape on the audio column — Arrow-batched
-    mapInPandas, one vectorized pass per clip, 5 small columns out,
-    sample bytes never shuffle."""
-    from ..functions import audiocodec
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    s, _rate = audiocodec.decode(bytes(r.bytes), r.fmt)
-                except NotImplementedError:
-                    rows.append((r.audio_id, None, None, None, None, False))
-                    continue
-                v = s.astype(np.int64)
-                nz = (v >= 0).astype(np.int8)
-                rows.append(
-                    (
-                        r.audio_id,
-                        int(v.size),
-                        int((v * v).sum()),
-                        int(np.abs(v).max()) if v.size else 0,
-                        int((nz[1:] != nz[:-1]).sum()),
-                        True,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id", "n_samples", "sq_sum", "peak", "zero_cross",
-                    "decode_ok",
-                ],
-            )
-
-    raw = audios.select("audio_id", "bytes", "fmt").mapInPandas(
-        fn,
-        schema=(
-            "audio_id string, n_samples long, sq_sum long, peak long,"
-            " zero_cross long, decode_ok boolean"
-        ),
-    )
-    rms = F.round(
-        F.sqrt(F.col("sq_sum").cast("double") / F.col("n_samples").cast("double")),
-        6,
-    ) + F.lit(0.0)
-    return raw.select(
-        "audio_id", "n_samples", "sq_sum", "peak", "zero_cross",
-        F.when(F.col("decode_ok") & (F.col("n_samples") > 0), rms).alias("rms"),
-        "decode_ok",
-    )
-
-
-def audio_frames(audios: DataFrame, frame: int = 256) -> DataFrame:
-    """FRAME-LEVEL AUDIO ENERGY — the clip cut into non-overlapping
-    ``frame``-sample windows (ragged tail dropped, the standard hop
-    convention), one row per frame with exact int64 energy and peak:
-    the patchification of the audio modality (extract_patches' twin),
-    feeding VAD-style gates and frame-level samplers.
-
-    Scale: one mapInPandas, a single vectorized reshape per clip, rows
-    out ~ n/frame each carrying 4 small columns; bytes never shuffle."""
-    from ..functions import audiocodec
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    s, _rate = audiocodec.decode(bytes(r.bytes), r.fmt)
-                except NotImplementedError:
-                    continue
-                nf = len(s) // frame
-                if nf == 0:
-                    continue
-                v = s[: nf * frame].astype(np.int64).reshape(nf, frame)
-                sq = (v * v).sum(axis=1)
-                pk = np.abs(v).max(axis=1)
-                for j in range(nf):
-                    rows.append((r.audio_id, j, int(sq[j]), int(pk[j])))
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "frame_idx", "sq_sum", "peak"]
-            )
-
-    return audios.select("audio_id", "bytes", "fmt").mapInPandas(
-        fn,
-        schema=(
-            "audio_id string, frame_idx int, sq_sum long, peak long"
-        ),
-    )
-
-
 def median_filter_stats(images: DataFrame, with_bytes: bool = False) -> DataFrame:
     """3x3 MEDIAN FILTER per image — the classic salt-and-pepper denoise
     pass of scan/document cleanup pipelines. Each INTERIOR pixel becomes
@@ -1662,53 +1554,6 @@ def median_filter_stats(images: DataFrame, with_bytes: bool = False) -> DataFram
         schema += ", bytes binary"
     return images.select("image_id", "bytes", "fmt").mapInPandas(
         fn, schema=schema
-    )
-
-
-def audio_autocorr(audios: DataFrame, lags: list[int]) -> DataFrame:
-    """RAW AUTOCORRELATION at fixed lags per clip — the periodicity /
-    pitch-detection primitive (a peak at lag L means a fundamental at
-    rate/L):
-
-        ac(lag) = sum_{t=0}^{n-lag-1} v[t] * v[t+lag]     (exact int64)
-
-    One row per (clip, lag): (audio_id, lag, n_terms, ac_sum). ac(0) is
-    the energy (== audio_stats.sq_sum), so normalized correlation is
-    ac(lag)/ac(0) downstream — kept out of this operator so every output
-    is an exact integer (int16 products bound |terms| <= 2^30; clips to
-    ~2^33 samples stay inside int64). Clips shorter than a lag emit no
-    row for it.
-
-    Scale: scan-shaped mapInPandas; per lag one vectorized shifted dot
-    product — len(lags) small columns of int64 out, sample bytes never
-    shuffle."""
-    from ..functions import audiocodec
-
-    lags = sorted(set(int(x) for x in lags))
-    assert all(x >= 0 for x in lags)
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    s, _rate = audiocodec.decode(bytes(r.bytes), r.fmt)
-                except NotImplementedError:
-                    continue
-                v = s.astype(np.int64)
-                n = len(v)
-                for lag in lags:
-                    if lag >= n:
-                        continue
-                    prod = v[: n - lag] * v[lag:] if lag else v * v
-                    rows.append((r.audio_id, lag, n - lag, int(prod.sum())))
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "lag", "n_terms", "ac_sum"]
-            )
-
-    return audios.select("audio_id", "bytes", "fmt").mapInPandas(
-        fn,
-        schema="audio_id string, lag int, n_terms long, ac_sum long",
     )
 
 
@@ -3919,82 +3764,6 @@ QUALIFY row_number() OVER (
 """
 
 
-def vad_segments(
-    frames: DataFrame,
-    thresh: int,
-    min_frames: int = 2,
-) -> DataFrame:
-    """(audio_id, seg_idx, start_frame, end_frame, n_frames, energy) —
-    VOICE-ACTIVITY SEGMENTS: maximal runs of >= ``min_frames``
-    consecutive frames whose exact int64 energy (``sq_sum`` from
-    ``audio_frames``) clears ``thresh`` — the energy-gate VAD that
-    fronts every speech-data pipeline (silence trimming, utterance
-    splitting, speech/music routing).
-
-    Pure gaps-and-islands column algebra over the frame table: active
-    frames get island key frame_idx - row_number(), islands aggregate
-    to (start, end, count, energy), short islands drop, seg_idx
-    renumbers by start.  Everything integer -> engine-exact.
-
-    Scale: composes directly on audio_frames' scan-shaped output; the
-    two windows + rollup all partition by audio_id (one shuffle, then
-    AQE-local), segments per clip are tiny.  10^12 clips = a groupBy
-    on the natural key with no skew beyond clip length."""
-    active = frames.filter(F.col("sq_sum") >= int(thresh))
-    w = Window.partitionBy("audio_id").orderBy("frame_idx")
-    isl = active.withColumn(
-        "isl", F.col("frame_idx") - F.row_number().over(w)
-    )
-    segs = (
-        isl.groupBy("audio_id", "isl")
-        .agg(
-            F.min("frame_idx").alias("start_frame"),
-            F.max("frame_idx").alias("end_frame"),
-            F.count(F.lit(1)).alias("n_frames"),
-            F.sum("sq_sum").alias("energy"),
-        )
-        .filter(F.col("n_frames") >= int(min_frames))
-    )
-    w2 = Window.partitionBy("audio_id").orderBy("start_frame")
-    return segs.select(
-        "audio_id",
-        F.row_number().over(w2).alias("seg_idx"),
-        "start_frame",
-        "end_frame",
-        "n_frames",
-        "energy",
-    )
-
-
-def vad_segments_sql(
-    frames_cte: str, thresh: int, min_frames: int = 2
-) -> str:
-    """DuckDB twin of vad_segments over the same (audio_id, frame_idx,
-    sq_sum) relation."""
-    return f"""
-WITH fr AS ({frames_cte}),
-act AS (
-  SELECT audio_id, frame_idx, sq_sum,
-         frame_idx - row_number() OVER (
-           PARTITION BY audio_id ORDER BY frame_idx) AS isl
-  FROM fr WHERE sq_sum >= {int(thresh)}
-),
-segs AS (
-  SELECT audio_id, isl,
-         min(frame_idx) AS start_frame, max(frame_idx) AS end_frame,
-         count(*) AS n_frames, CAST(sum(sq_sum) AS BIGINT) AS energy
-  FROM act GROUP BY 1, 2
-)
-SELECT audio_id,
-       CAST(row_number() OVER (
-         PARTITION BY audio_id ORDER BY start_frame) AS INTEGER) AS seg_idx,
-       CAST(start_frame AS INTEGER) AS start_frame,
-       CAST(end_frame AS INTEGER) AS end_frame,
-       CAST(n_frames AS BIGINT) AS n_frames, energy
-FROM segs WHERE n_frames >= {int(min_frames)}
-"""
-
-
 _HAAR_SUBBANDS = ("lh1", "hl1", "hh1", "ll2", "lh2", "hl2", "hh2")
 
 
@@ -4216,140 +3985,6 @@ SELECT image_id, count(*) AS n_px,
        CAST(sum(b4) AS BIGINT) AS b4_sum,
        CAST(sum((x + 2 * y + 1) * (r4 + 2 * g4 + 3 * b4)) AS BIGINT) AS chk
 FROM rgb GROUP BY 1
-"""
-
-
-def dft_trig_table(
-    frame: int = 64, bins: tuple = (1, 2, 3, 5), scale: int = 512
-) -> list[tuple[int, int, int, int]]:
-    """(k, t, c, s) — the fixed-point DFT basis shared by the Arrow
-    kernel and the SQL twin: c = round(cos(2π·k·t/frame)·scale), s =
-    round(sin(...)·scale).  Generated ONCE here and inlined into both
-    plans, so libm's last-ulp variance can never split the engines."""
-    import math
-
-    out = []
-    for k in bins:
-        for t in range(frame):
-            a = 2.0 * math.pi * k * t / frame
-            out.append(
-                (k, t, round(math.cos(a) * scale), round(math.sin(a) * scale))
-            )
-    return out
-
-
-def tone_detect(
-    audios: DataFrame,
-    frame: int = 64,
-    bins: tuple = (1, 2, 3, 5),
-    scale: int = 512,
-) -> DataFrame:
-    """(audio_id, frame_idx, k, c_sum, s_sum, energy, is_dominant) —
-    TONE DETECTION: fixed-point DFT energy at ``bins`` cycles-per-frame
-    for every non-overlapping ``frame``-sample window (the
-    Goertzel/DTMF primitive — dial tones, alarm beeps, hums — and the
-    narrowband-energy feature of audio curation).
-
-        c_sum = Σ_t v_t·c(k,t),  s_sum = Σ_t v_t·s(k,t),
-        energy = c_sum² + s_sum²
-
-    with the shared ``dft_trig_table`` basis — everything exact int64
-    (|v| ≤ 32768, scale 512, 64 terms → energy < 2.4e18).  Per frame,
-    the (energy DESC, k ASC) leader is flagged dominant.
-
-    Scale: one Arrow pass (a single (frames × samples) @ (samples ×
-    2|bins|) integer GEMM per clip), rows out = frames·|bins|; the
-    dominant flag is a per-frame window over |bins| rows.  Scan-shaped
-    at 10^12 clips."""
-    from ..functions import audiocodec
-
-    tab = dft_trig_table(frame, bins, scale)
-    karr = np.array(sorted(set(k for k, *_ in tab)), dtype=np.int64)
-    C = np.zeros((frame, len(karr)), dtype=np.int64)
-    S = np.zeros((frame, len(karr)), dtype=np.int64)
-    kpos = {int(k): i for i, k in enumerate(karr)}
-    for k, t, c, s in tab:
-        C[t, kpos[k]] = c
-        S[t, kpos[k]] = s
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    smp, _rate = audiocodec.decode(bytes(r.bytes), r.fmt)
-                except NotImplementedError:
-                    continue
-                nf = len(smp) // frame
-                if nf == 0:
-                    continue
-                v = smp[: nf * frame].astype(np.int64).reshape(nf, frame)
-                cs = v @ C
-                ss = v @ S
-                en = cs * cs + ss * ss
-                for j in range(nf):
-                    for i, k in enumerate(karr):
-                        rows.append(
-                            (
-                                r.audio_id, j, int(k),
-                                int(cs[j, i]), int(ss[j, i]), int(en[j, i]),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id", "frame_idx", "k", "c_sum", "s_sum", "energy",
-                ],
-            )
-
-    out = audios.select("audio_id", "bytes", "fmt").mapInPandas(
-        fn,
-        schema="audio_id string, frame_idx int, k int, c_sum long,"
-        " s_sum long, energy long",
-    )
-    w = Window.partitionBy("audio_id", "frame_idx").orderBy(
-        F.col("energy").desc(), F.col("k").asc()
-    )
-    return out.withColumn(
-        "is_dominant", F.row_number().over(w) == 1
-    )
-
-
-def tone_detect_sql(
-    samples_cte: str,
-    frame: int = 64,
-    bins: tuple = (1, 2, 3, 5),
-    scale: int = 512,
-) -> str:
-    """DuckDB twin of tone_detect over (audio_id, t, v) samples — the
-    same inlined trig VALUES, grouped sums, and dominant ranking."""
-    tab = dft_trig_table(frame, bins, scale)
-    vals = ", ".join(f"({k}, {t}, {c}, {s})" for k, t, c, s in tab)
-    return f"""
-WITH smp AS MATERIALIZED (
-  SELECT audio_id, CAST(t AS BIGINT) AS t, CAST(v AS BIGINT) AS v
-  FROM ({samples_cte})
-),
-nfr AS (SELECT audio_id, (max(t) + 1) // {frame} AS nf FROM smp GROUP BY 1),
-trig(k, tt, c, s) AS (VALUES {vals}),
-comp AS (
-  SELECT m.audio_id, CAST(m.t // {frame} AS INTEGER) AS frame_idx,
-         CAST(g.k AS INTEGER) AS k,
-         CAST(sum(m.v * g.c) AS BIGINT) AS c_sum,
-         CAST(sum(m.v * g.s) AS BIGINT) AS s_sum
-  FROM smp m
-  JOIN nfr ON nfr.audio_id = m.audio_id
-  JOIN trig g ON g.tt = m.t % {frame}
-  WHERE m.t < nfr.nf * {frame}
-  GROUP BY 1, 2, 3
-)
-SELECT audio_id, frame_idx, k, c_sum, s_sum,
-       c_sum * c_sum + s_sum * s_sum AS energy,
-       row_number() OVER (
-         PARTITION BY audio_id, frame_idx
-         ORDER BY c_sum * c_sum + s_sum * s_sum DESC, k ASC) = 1
-         AS is_dominant
-FROM comp
 """
 
 
@@ -4656,212 +4291,6 @@ WHERE c.x >= 3 AND c.x <= c.w - 4 AND c.y >= 3 AND c.y <= c.h - 4
 """
 
 
-def octave_filterbank(
-    centers: tuple = (2, 4, 8), weight_scale: int = 64
-) -> list[tuple[int, int, int]]:
-    """(m, k, w) — integer OCTAVE TRIANGULAR FILTERBANK shared by the
-    Spark plan and the SQL twin: filter m is a triangle over DFT bins
-    [c/2, 2c] centered at c = centers[m], rising
-    floor(scale·(k−l)/(c−l)), falling floor(scale·(r−k)/(r−c)); the
-    log-spaced (mel-like) band-energy weighting of audio features.
-    Generated once here, inlined into both plans."""
-    out = []
-    for m, c in enumerate(centers):
-        lo, hi = c // 2, 2 * c
-        for k in range(lo, hi + 1):
-            if k <= c:
-                w = (weight_scale * (k - lo)) // max(c - lo, 1)
-            else:
-                w = (weight_scale * (hi - k)) // max(hi - c, 1)
-            if w > 0:
-                out.append((m, k, w))
-    return out
-
-
-FB_ENERGY_SHIFT = 12  # energy pre-scale: e >> 12 before weighting
-
-
-def filterbank_energy(
-    audios: DataFrame,
-    frame: int = 64,
-    centers: tuple = (2, 4, 8),
-    scale: int = 512,
-) -> DataFrame:
-    """(audio_id, frame_idx, m, fb_energy, log2_e, is_top) — per-frame
-    OCTAVE FILTERBANK ENERGIES (the mel-spectrogram analogue on the
-    engine's fixed-point DFT): each filter m sums its triangular-
-    weighted bin energies,
-
-        fb_energy(m) = Σ_k w(m,k) · (energy(k) div 2^12),
-
-    the 2^12 pre-shift keeping everything int64 (energy < 2.4e18 →
-    summand < 3.8e16 per bin at weight 64). log2_e is the dyadic
-    log (bit length − 1, −1 for zero) — the integer dB-ish feature;
-    the per-frame (fb_energy DESC, m ASC) leader is flagged — the
-    spectral-tilt / band-dominance gate of audio curation.
-
-    Built BY COMPOSITION: tone_detect's GEMM energies (bins = the
-    filterbank's support) → broadcast weight join → one combinable
-    rollup. No new kernel; clips never shuffle, only frame×bin rows."""
-    fb = octave_filterbank(centers)
-    bins = tuple(sorted(set(k for _, k, _ in fb)))
-    en = tone_detect(audios, frame=frame, bins=bins, scale=scale).drop(
-        "is_dominant"
-    )
-    spark = audios.sparkSession
-    wtab = local_frame(spark, fb, "m int, k int, w long")
-    out = (
-        en.join(F.broadcast(wtab), "k")
-        .groupBy("audio_id", "frame_idx", "m")
-        .agg(
-            F.sum(
-                F.col("w") * F.expr(f"energy DIV {1 << FB_ENERGY_SHIFT}")
-            ).cast("long").alias("fb_energy")
-        )
-    )
-    wnd = Window.partitionBy("audio_id", "frame_idx").orderBy(
-        F.col("fb_energy").desc(), F.col("m").asc()
-    )
-    return out.withColumn(
-        "log2_e",
-        F.when(F.col("fb_energy") <= 0, F.lit(-1)).otherwise(
-            F.length(F.bin(F.col("fb_energy"))) - 1
-        ).cast("long"),
-    ).withColumn("is_top", F.row_number().over(wnd) == 1)
-
-
-def filterbank_energy_sql(
-    samples_cte: str,
-    frame: int = 64,
-    centers: tuple = (2, 4, 8),
-    scale: int = 512,
-) -> str:
-    """DuckDB twin of filterbank_energy over (audio_id, t, v) sample
-    rows — same inlined trig + weight tables, same shift and rollup."""
-    fb = octave_filterbank(centers)
-    bins = tuple(sorted(set(k for _, k, _ in fb)))
-    tab = dft_trig_table(frame, bins, scale)
-    trig = ", ".join(f"({k}, {t}, {c}, {s})" for k, t, c, s in tab)
-    wts = ", ".join(f"({m}, {k}, {w})" for m, k, w in fb)
-    return f"""
-WITH fb_smp AS MATERIALIZED (
-  SELECT audio_id, CAST(t AS BIGINT) AS t, CAST(v AS BIGINT) AS v
-  FROM ({samples_cte})
-),
-fb_trig(k, t, c, s) AS (SELECT * FROM (VALUES {trig})),
-fb_w(m, k, w) AS (SELECT * FROM (VALUES {wts})),
-fb_nfr AS (
-  SELECT audio_id, (max(t) + 1) // {int(frame)} AS nf FROM fb_smp GROUP BY 1
-),
-fb_en AS (
-  SELECT m.audio_id, CAST(m.t // {int(frame)} AS INTEGER) AS frame_idx,
-         CAST(g.k AS INTEGER) AS k,
-         CAST(sum(m.v * g.c) AS BIGINT) AS c_sum,
-         CAST(sum(m.v * g.s) AS BIGINT) AS s_sum
-  FROM fb_smp m
-  JOIN fb_nfr ON fb_nfr.audio_id = m.audio_id
-  JOIN fb_trig g ON g.t = m.t % {int(frame)}
-  WHERE m.t < fb_nfr.nf * {int(frame)}
-  GROUP BY 1, 2, 3
-),
-fb_roll AS (
-  SELECT audio_id, frame_idx, CAST(w.m AS INTEGER) AS m,
-         CAST(sum(w.w * ((c_sum * c_sum + s_sum * s_sum)
-                         // {1 << FB_ENERGY_SHIFT})) AS BIGINT) AS fb_energy
-  FROM fb_en JOIN fb_w w ON w.k = fb_en.k
-  GROUP BY 1, 2, 3
-)
-SELECT audio_id, frame_idx, m, fb_energy,
-       CAST(CASE WHEN fb_energy <= 0 THEN -1
-            ELSE length(bin(fb_energy)) - 1 END AS BIGINT) AS log2_e,
-       row_number() OVER (PARTITION BY audio_id, frame_idx
-                          ORDER BY fb_energy DESC, m ASC) = 1 AS is_top
-FROM fb_roll
-"""
-
-
-def onset_detect(
-    audios: DataFrame,
-    frame: int = 64,
-    centers: tuple = (2, 4, 8),
-    min_nov: int = 1_000,
-    num: int = 5,
-    den: int = 4,
-) -> DataFrame:
-    """(audio_id, frame_idx, novelty, prev_novelty, is_onset) — ONSET
-    DETECTION by SPECTRAL FLUX (Bello et al. 2005): per frame, the
-    positively-rectified band-energy change
-
-        novelty(t) = Σ_m max(0, E_m(t) − E_m(t−1))
-
-    over the octave filterbank bands; a frame is an ONSET iff
-    novelty·den > num·prev_novelty (integer cross-multiplication — the
-    ratio spike gate, num/den = 1.25 default) AND novelty >= min_nov.
-    Frame 0 compares against 0 bands (prev = 0): an energetic first
-    frame is an onset iff it clears min_nov. The audio-segmentation /
-    beat-candidate primitive of clip curation.
-
-    Built BY COMPOSITION on filterbank_energy (itself on tone_detect's
-    GEMM): one lag window per (audio, band) + one per-frame rollup +
-    one lag window per audio — all exact int64, no floats, no RNG."""
-    fb = filterbank_energy(audios, frame=frame, centers=centers).select(
-        "audio_id", "frame_idx", "m", "fb_energy"
-    )
-    w_band = Window.partitionBy("audio_id", "m").orderBy("frame_idx")
-    diff = fb.withColumn(
-        "_prev_e", F.coalesce(F.lag("fb_energy").over(w_band), F.lit(0))
-    ).withColumn(
-        "_rect",
-        F.greatest(F.col("fb_energy") - F.col("_prev_e"), F.lit(0)),
-    )
-    nov = diff.groupBy("audio_id", "frame_idx").agg(
-        F.sum("_rect").cast("long").alias("novelty")
-    )
-    w_aud = Window.partitionBy("audio_id").orderBy("frame_idx")
-    return nov.withColumn(
-        "prev_novelty",
-        F.coalesce(F.lag("novelty").over(w_aud), F.lit(0)).cast("long"),
-    ).withColumn(
-        "is_onset",
-        (F.col("novelty") * den > F.lit(num) * F.col("prev_novelty"))
-        & (F.col("novelty") >= min_nov),
-    )
-
-
-def onset_detect_sql(
-    samples_cte: str,
-    frame: int = 64,
-    centers: tuple = (2, 4, 8),
-    min_nov: int = 1_000,
-    num: int = 5,
-    den: int = 4,
-) -> str:
-    """DuckDB twin of onset_detect — filterbank twin as a nested CTE,
-    identical lag/rectify/rollup/gate algebra."""
-    inner = filterbank_energy_sql(samples_cte, frame=frame, centers=centers)
-    return f"""
-WITH ons_fb AS MATERIALIZED ({inner}),
-ons_diff AS (
-  SELECT audio_id, frame_idx, m,
-         greatest(fb_energy - COALESCE(lag(fb_energy) OVER (
-           PARTITION BY audio_id, m ORDER BY frame_idx), 0), 0) AS rect
-  FROM ons_fb
-),
-ons_nov AS (
-  SELECT audio_id, frame_idx, CAST(sum(rect) AS BIGINT) AS novelty
-  FROM ons_diff GROUP BY 1, 2
-)
-SELECT audio_id, frame_idx, novelty,
-       CAST(COALESCE(lag(novelty) OVER (
-         PARTITION BY audio_id ORDER BY frame_idx), 0) AS BIGINT)
-         AS prev_novelty,
-       (novelty * {int(den)} > {int(num)} * COALESCE(lag(novelty) OVER (
-          PARTITION BY audio_id ORDER BY frame_idx), 0))
-         AND novelty >= {int(min_nov)} AS is_onset
-FROM ons_nov
-"""
-
-
 def gray_world_stats(px: DataFrame) -> DataFrame:
     """(image_id, n_px, s_r, s_g, s_b, cr_sum, cg_sum, cb_sum,
     n_clipped) — GRAY-WORLD WHITE BALANCE (Buchsbaum 1980) as an exact
@@ -4968,8 +4397,7 @@ def shot_detect(frames: DataFrame, thresh: int = 40) -> DataFrame:
 
     Scale: ONE Arrow decode pass emits per-frame bin rows (16 per
     frame — pixels never shuffle); the diff is a lag window per
-    (clip, bin) + one per-frame rollup. Same shuffle shape as
-    onset_detect."""
+    (clip, bin) + one per-frame rollup."""
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -5034,197 +4462,6 @@ SELECT clip_id, frame_idx,
        sum(abs(cnt - prev)) >= {int(thresh)} AS is_cut
 FROM sd_diff WHERE prev IS NOT NULL
 GROUP BY 1, 2
-"""
-
-
-CEPS_BASIS_SCALE = 4096  # dyadic DCT-II basis quantization (dct_phash scheme)
-
-
-def _ceps_basis(n_filters: int) -> list[tuple[int, int, int]]:
-    """(j, m, b) rows of the DCT-II basis, b = round(cos(π·j·(2m+1)/(2M))
-    · 4096) — exact ints embedded identically in both engines."""
-    import math
-
-    out = []
-    for j in range(n_filters):
-        for m in range(n_filters):
-            b = round(
-                math.cos(math.pi * j * (2 * m + 1) / (2 * n_filters))
-                * CEPS_BASIS_SCALE
-            )
-            out.append((j, m, b))
-    return out
-
-
-def cepstral_features(
-    audios: DataFrame,
-    frame: int = 64,
-    centers: tuple = (2, 4, 8),
-    scale: int = 512,
-) -> DataFrame:
-    """(audio_id, frame_idx, j, ceps) — CEPSTRAL FEATURES (the MFCC
-    recipe on the engine's integer stack): DCT-II of the per-frame
-    log filterbank energies. Coefficient 0 is overall log-energy,
-    coefficient 1 spectral tilt, 2 curvature — the compact timbre
-    vector under audio dedup, clustering, and quality gates.
-
-    Integer-exact end to end: the filterbank's dyadic log2_e (bit
-    length − 1; −1 for silence) is multiplied by the 4096-quantized
-    DCT basis (dct_phash's dyadic-quantization scheme — every basis
-    entry an exact int), so
-
-        ceps(j) = Σ_m log2_e(m) · round(4096·cos(πj(2m+1)/(2M)))
-
-    is exact int64 (|ceps| ≤ 63·4096·M). Classic MFCC's float mel/log
-    resolution is traded for bit-reproducibility — the corpus-curation
-    tradeoff this engine makes everywhere (SAX, keyword_extract,
-    compress_cost).
-
-    Built BY COMPOSITION on filterbank_energy (tone_detect DFT GEMM →
-    octave weights): one extra broadcast basis join + combinable
-    rollup; clips never shuffle."""
-    M = len(centers)
-    fb = filterbank_energy(
-        audios, frame=frame, centers=centers, scale=scale
-    ).select("audio_id", "frame_idx", "m", "log2_e")
-    spark = audios.sparkSession
-    basis = local_frame(spark, _ceps_basis(M), "j int, m int, b long")
-    return (
-        fb.join(F.broadcast(basis), "m")
-        .groupBy("audio_id", "frame_idx", "j")
-        .agg(F.sum(F.col("log2_e") * F.col("b")).cast("long").alias("ceps"))
-    )
-
-
-def cepstral_features_sql(
-    samples_cte: str,
-    frame: int = 64,
-    centers: tuple = (2, 4, 8),
-    scale: int = 512,
-) -> str:
-    """DuckDB twin of cepstral_features — wraps filterbank_energy_sql
-    and replays the identical basis join + rollup."""
-    M = len(centers)
-    basis = ", ".join(f"({j}, {m}, {b})" for j, m, b in _ceps_basis(M))
-    inner = filterbank_energy_sql(
-        samples_cte, frame=frame, centers=centers, scale=scale
-    )
-    return f"""
-WITH ceps_fb AS MATERIALIZED ({inner}),
-ceps_b(j, m, b) AS (SELECT * FROM (VALUES {basis}))
-SELECT f.audio_id, f.frame_idx, CAST(ceps_b.j AS INTEGER) AS j,
-       CAST(sum(f.log2_e * ceps_b.b) AS BIGINT) AS ceps
-FROM ceps_fb f JOIN ceps_b ON ceps_b.m = f.m
-GROUP BY 1, 2, 3
-"""
-
-
-AUDIO_RESAMPLE_BIAS = 32768  # keeps the lerp numerator nonnegative
-
-
-def audio_resample(
-    audios: DataFrame,
-    src_rate: int = 4,
-    dst_rate: int = 3,
-) -> DataFrame:
-    """(audio_id, t_out, v_out, n_out) — LINEAR AUDIO RESAMPLING by the
-    exact rational ratio dst_rate/src_rate (sample-rate normalization —
-    the first step of any corpus-wide audio pipeline where sources
-    arrive at mixed rates). resize_bilinear's 1-D sibling.
-
-    Integer-exact interpolation: output sample t maps to source
-    position t·src/dst; with i0 = (t·src) div dst and
-    frac = (t·src) mod dst,
-
-        v_out = (v[i0]·(dst − frac) + v[i0+1]·frac) div dst
-
-    — the linear interpolation kept as an exact rational with ONE
-    floor division, made engine-identical by biasing the numerator
-    nonnegative first (+32768 per sample, subtracted after): DuckDB's
-    ``//`` truncates toward zero on negatives while NumPy floors, so
-    the unbiased form would differ by 1 on negative samples. Output
-    length n_out = ⌈(n−1)·dst/src⌉ + 1 uses only fully-supported
-    positions (i0+1 ≤ n−1), endpoint exact (t=0 → v[0]).
-
-    Scale: one Arrow pass per clip batch, vectorized gather+lerp; rows
-    out ∝ dst/src × input samples. Clips never shuffle."""
-    from ..functions import audiocodec
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    smp, _rate = audiocodec.decode(bytes(r.bytes), r.fmt)
-                except NotImplementedError:
-                    continue
-                n = len(smp)
-                if n < 2:
-                    continue
-                v = smp.astype(np.int64)
-                n_out = (n - 1) * dst_rate // src_rate + 1
-                t = np.arange(n_out, dtype=np.int64)
-                num = t * src_rate
-                i0 = num // dst_rate
-                frac = num % dst_rate
-                v0 = v[i0] + AUDIO_RESAMPLE_BIAS
-                v1 = v[np.minimum(i0 + 1, n - 1)] + AUDIO_RESAMPLE_BIAS
-                out = (
-                    v0 * (dst_rate - frac) + v1 * frac
-                ) // dst_rate - AUDIO_RESAMPLE_BIAS
-                rows.extend(
-                    (r.audio_id, int(tt), int(vv), int(n_out))
-                    for tt, vv in zip(t, out)
-                )
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "t_out", "v_out", "n_out"]
-            )
-
-    return audios.select("audio_id", "bytes", "fmt").mapInPandas(
-        fn,
-        schema="audio_id string, t_out long, v_out long, n_out long",
-    )
-
-
-def audio_resample_sql(
-    samples_cte: str,
-    src_rate: int = 4,
-    dst_rate: int = 3,
-) -> str:
-    """DuckDB twin of audio_resample over (audio_id, t, v) sample rows
-    — output positions generated per clip, gathered by the identical
-    i0/frac arithmetic (floor division on nonnegative ints)."""
-    bias = AUDIO_RESAMPLE_BIAS
-    return f"""
-WITH rs_src AS (
-  SELECT audio_id, CAST(t AS BIGINT) AS t, CAST(v AS BIGINT) AS v
-  FROM ({samples_cte})
-),
-rs_n AS (
-  SELECT audio_id, CAST(count(*) AS BIGINT) AS n FROM rs_src GROUP BY 1
-),
-rs_pos AS (
-  SELECT audio_id, n,
-         (n - 1) * {dst_rate} // {src_rate} + 1 AS n_out,
-         unnest(range(0, (n - 1) * {dst_rate} // {src_rate} + 1)) AS t_out
-  FROM rs_n WHERE n >= 2
-),
-rs_map AS (
-  SELECT audio_id, n, n_out, t_out,
-         (t_out * {src_rate}) // {dst_rate} AS i0,
-         (t_out * {src_rate}) % {dst_rate} AS frac
-  FROM rs_pos
-)
-SELECT m.audio_id, m.t_out,
-       ((v0.v + {bias}) * ({dst_rate} - m.frac)
-        + (v1.v + {bias}) * m.frac) // {dst_rate}
-         - {bias} AS v_out,
-       m.n_out
-FROM rs_map m
-JOIN rs_src v0 ON v0.audio_id = m.audio_id AND v0.t = m.i0
-JOIN rs_src v1 ON v1.audio_id = m.audio_id
-             AND v1.t = CASE WHEN m.i0 + 1 > m.n - 1
-                             THEN m.n - 1 ELSE m.i0 + 1 END
 """
 
 
@@ -5624,99 +4861,6 @@ FROM b_conv GROUP BY image_id
 """
 
 
-def pitch_track(
-    audios: DataFrame,
-    frame: int = 256,
-    min_lag: int = 16,
-    max_lag: int = 80,
-) -> DataFrame:
-    """(audio_id, frame_idx, best_lag, best_corr) — PITCH TRACKING by
-    per-frame autocorrelation argmax (the ACF pitch detector behind
-    YIN/RAPT's coarse stage): each non-overlapping ``frame``-sample
-    window reports the lag in [min_lag, max_lag] maximizing the exact
-    int64 shifted dot product Σ v[t]·v[t+lag], ties pinned by
-    (corr DESC, lag ASC). A tonal frame's best_lag is its fundamental
-    period in samples (rate/lag = f0); partial trailing frames are
-    dropped so every window is the same length.
-
-    Scale: scan-shaped mapInPandas; per clip a (lags × frame) strided
-    dot-product sweep in NumPy — sample bytes never shuffle, output is
-    frames × 4 ints."""
-    from ..functions import audiocodec
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    s, _rate = audiocodec.decode(bytes(r.bytes), r.fmt)
-                except NotImplementedError:
-                    continue
-                v = s.astype(np.int64)
-                for f in range(len(v) // frame):
-                    x = v[f * frame : (f + 1) * frame]
-                    best_lag = -1
-                    best_corr = None
-                    for lag in range(min_lag, max_lag + 1):
-                        c = int(np.dot(x[: frame - lag], x[lag:]))
-                        if best_corr is None or c > best_corr:
-                            best_corr = c
-                            best_lag = lag
-                    rows.append((r.audio_id, f, best_lag, best_corr))
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "frame_idx", "best_lag", "best_corr"]
-            )
-
-    return audios.select("audio_id", "bytes", "fmt").mapInPandas(
-        fn,
-        schema=(
-            "audio_id string, frame_idx long, best_lag long, best_corr long"
-        ),
-    )
-
-
-def pitch_track_sql(
-    samples_cte: str,
-    frame: int = 256,
-    min_lag: int = 16,
-    max_lag: int = 80,
-) -> str:
-    """DuckDB twin of pitch_track. ``samples_cte`` -> (audio_id, t, v)
-    sample rows (replay the closed-form waveform — no self-join needed
-    if v(t) and v(t+lag) are both instantiated from the formula; this
-    generic twin joins the sample table to itself on (id, t+lag))."""
-    return f"""
-WITH pt_s AS (
-  SELECT audio_id, CAST(t AS BIGINT) AS t, CAST(v AS BIGINT) AS v
-  FROM ({samples_cte})
-),
-pt_n AS (
-  SELECT audio_id, (MAX(t) + 1) // {frame} AS n_frames
-  FROM pt_s GROUP BY 1
-),
-pt_lag AS (SELECT unnest(range({min_lag}, {max_lag} + 1)) AS lag),
-pt_c AS (
-  SELECT a.audio_id, a.t // {frame} AS frame_idx, l.lag,
-         CAST(SUM(a.v * b.v) AS BIGINT) AS c
-  FROM pt_s a
-  JOIN pt_lag l ON (a.t % {frame}) < {frame} - l.lag
-  JOIN pt_s b ON b.audio_id = a.audio_id AND b.t = a.t + l.lag
-  JOIN pt_n n ON n.audio_id = a.audio_id
-  WHERE a.t // {frame} < n.n_frames
-  GROUP BY 1, 2, 3
-),
-pt_rk AS (
-  SELECT audio_id, frame_idx, lag, c,
-         row_number() OVER (PARTITION BY audio_id, frame_idx
-                            ORDER BY c DESC, lag ASC) AS rk
-  FROM pt_c
-)
-SELECT audio_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-       CAST(lag AS BIGINT) AS best_lag, CAST(c AS BIGINT) AS best_corr
-FROM pt_rk WHERE rk = 1
-"""
-
-
 UNDIST_FP = 4096  # radial factor fixed point
 UNDIST_KDEN = 60_000  # barrel coefficient: k = FP/KDEN per quarter-px²
 
@@ -5814,118 +4958,3 @@ FROM ud_j GROUP BY image_id
 """
 
 
-BEAT_FLUX_SHIFT = 16  # onset-strength downshift keeping ACF in int64
-
-
-def beat_track(
-    audios: DataFrame,
-    frame: int = 32,
-    min_lag: int = 2,
-    max_lag: int = 16,
-) -> DataFrame:
-    """(audio_id, n_frames, best_lag, best_corr) — TEMPO / BEAT-PERIOD
-    estimation BY COMPOSITION over audio_frames: the frame-energy
-    envelope's onset strength  o_f = max(0, e_f − e_{f−1}) >> 16
-    (half-wave-rectified flux, downshifted so ACF products stay int64)
-    is autocorrelated and the best lag in [min_lag, max_lag] frames is
-    the beat period — the classic librosa-style tempogram argmax, in
-    pure relational algebra (the only kernel is the existing frame
-    cutter; everything after is a window + an equi-join).
-
-    Ties pinned by (corr DESC, lag ASC); clips with fewer than
-    min_lag+2 frames emit nothing (no ACF support).
-
-    Scale: the envelope is ~n/frame rows per clip; the ACF join is
-    |lags| equi-joins worth of envelope rows keyed by (clip, frame) —
-    combinable rollups, no pixel/sample bytes past the first stage."""
-    env = audio_frames(audios, frame=frame)
-    w = Window.partitionBy("audio_id").orderBy("frame_idx")
-    flux = env.select(
-        "audio_id",
-        F.col("frame_idx").cast("long").alias("f"),
-        F.greatest(
-            F.lit(0),
-            (F.col("sq_sum")
-             - F.coalesce(F.lag("sq_sum", 1).over(w), F.col("sq_sum"))),
-        ).alias("o_raw"),
-    ).select(
-        "audio_id",
-        "f",
-        F.expr(f"CAST(o_raw DIV {1 << BEAT_FLUX_SHIFT} AS BIGINT)").alias("o"),
-    ).filter(F.col("o").isNotNull())
-    nf = flux.groupBy("audio_id").agg(F.count(F.lit(1)).cast("long").alias("n_frames"))
-    a = flux.select("audio_id", "f", F.col("o").alias("oa"))
-    lags = None
-    for lag in range(min_lag, max_lag + 1):
-        b = flux.select(
-            "audio_id", (F.col("f") - lag).alias("f"), F.col("o").alias("ob")
-        )
-        c = (
-            a.join(b, ["audio_id", "f"])
-            .groupBy("audio_id")
-            .agg(F.sum(F.col("oa") * F.col("ob")).cast("long").alias("corr"))
-            .select("audio_id", F.lit(lag).cast("long").alias("lag"), "corr")
-        )
-        lags = c if lags is None else lags.unionByName(c)
-    best = lags.groupBy("audio_id").agg(
-        F.min(
-            F.struct((-F.col("corr")).alias("nc"), F.col("lag").alias("lag"))
-        ).alias("top")
-    )
-    return best.join(nf, "audio_id").select(
-        "audio_id",
-        "n_frames",
-        F.col("top.lag").alias("best_lag"),
-        (-F.col("top.nc")).cast("long").alias("best_corr"),
-    )
-
-
-def beat_track_sql(
-    samples_cte: str,
-    frame: int = 32,
-    min_lag: int = 2,
-    max_lag: int = 16,
-) -> str:
-    """DuckDB twin of beat_track. ``samples_cte`` -> (audio_id, t, v)."""
-    return f"""
-WITH bt_s AS (
-  SELECT audio_id, CAST(t AS BIGINT) AS t, CAST(v AS BIGINT) AS v
-  FROM ({samples_cte})
-),
-bt_nf AS (SELECT audio_id, (MAX(t) + 1) // {frame} AS full_frames FROM bt_s GROUP BY 1),
-bt_e AS (
-  SELECT s.audio_id, s.t // {frame} AS f, SUM(s.v * s.v) AS e
-  FROM bt_s s JOIN bt_nf n USING (audio_id)
-  WHERE s.t // {frame} < n.full_frames
-  GROUP BY 1, 2
-),
-bt_o AS (
-  SELECT audio_id, f,
-         GREATEST(0, e - COALESCE(
-             lag(e) OVER (PARTITION BY audio_id ORDER BY f), e))
-           // {1 << BEAT_FLUX_SHIFT} AS o
-  FROM bt_e
-),
-bt_f AS (SELECT audio_id, f, o FROM bt_o WHERE o IS NOT NULL),
-bt_cnt AS (SELECT audio_id, CAST(COUNT(*) AS BIGINT) AS n_frames
-           FROM bt_f GROUP BY 1),
-bt_l AS (SELECT unnest(range({min_lag}, {max_lag} + 1)) AS lag),
-bt_c AS (
-  SELECT a.audio_id, l.lag, CAST(SUM(a.o * b.o) AS BIGINT) AS corr
-  FROM bt_f a
-  JOIN bt_l l ON true
-  JOIN bt_f b ON b.audio_id = a.audio_id AND b.f = a.f + l.lag
-  GROUP BY 1, 2
-),
-bt_rk AS (
-  SELECT audio_id, lag, corr,
-         row_number() OVER (PARTITION BY audio_id
-                            ORDER BY corr DESC, lag ASC) AS rk
-  FROM bt_c
-)
-SELECT r.audio_id, c.n_frames,
-       CAST(r.lag AS BIGINT) AS best_lag,
-       CAST(r.corr AS BIGINT) AS best_corr
-FROM bt_rk r JOIN bt_cnt c USING (audio_id)
-WHERE r.rk = 1
-"""

@@ -797,9 +797,9 @@ def compactor_quantiles(
     """(g, q_pct, est_v, w_total, sketch_n) — QUANTILE SKETCH by
     deterministic KLL-style compaction (Karnin-Lang-Liberty 2016, the
     RNG-free variant): approximate per-group quantiles WITHOUT a
-    per-group sort of the raw data — the scale path when
-    group_quantiles' exact two-level rank is too hot (100 TB value
-    columns, millions of groups).
+    per-group sort of the raw data — the scale path when an exact
+    per-group rank is too hot (100 TB value columns, millions of
+    groups).
 
     Levels hold weighted items (weight 2^lvl). Each round, every level
     over capacity ``k`` sorts itself under the pinned (v, rid) order

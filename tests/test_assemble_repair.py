@@ -17,7 +17,7 @@ from osm2geojson_spark.operators.assemble import (
     close_coords_expr,
     way_gpb_udf,
 )
-from osm2geojson_spark.plans.pipeline import build_features, json2geojson
+from osm2geojson_spark.plans.pipeline import build_features, convert_elements, json2geojson
 from osm2geojson_spark.sources.normalize import normalize_elements
 
 
@@ -196,3 +196,27 @@ def test_negative_zero_coords_emit_positive_zero(spark):
         },
     }
     assert "-0.0" not in json.dumps(got)
+
+
+def test_ways_sharing_an_id_resolve_their_own_nodes(spark):
+    """Two way elements with the same id each take their coordinates from
+    their own node list; the node lists are not pooled by id."""
+    elements = [
+        _node(1, 0.0, 0.0), _node(2, 1.0, 1.0), _node(3, 0.0, 2.0),
+        _way(10, [1, 2]),
+        _way(10, [1, 2]),
+        _way(11, [2, 3]),
+        _way(11, [3, 1]),
+    ]
+    feats = convert_elements(spark, elements, filter_used_refs=False)
+    got = [
+        (f["properties"]["id"], f["geometry"]["coordinates"])
+        for f in feats
+        if f["properties"]["type"] == "way"
+    ]
+    assert got == [
+        (10, [[0.0, 0.0], [1.0, 1.0]]),
+        (10, [[0.0, 0.0], [1.0, 1.0]]),
+        (11, [[1.0, 1.0], [0.0, 2.0]]),
+        (11, [[0.0, 2.0], [0.0, 0.0]]),
+    ]

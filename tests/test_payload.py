@@ -1115,61 +1115,6 @@ def test_glcm_matches_scalar_brute(spark):
         assert c["energy"] == c["n_pairs"] ** 2
 
 
-def test_audio_codec_roundtrip_and_stats_brute(spark):
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import audio_stats
-
-    s = AC.synth_samples(3, 1000)
-    back, rate = AC.decode_pcm16(AC.encode_pcm16(s, 22050))
-    assert rate == 22050 and np.array_equal(back, s)
-
-    clips = spark.createDataFrame(
-        [
-            ("a", "pcmz", bytearray(AC.encode_pcm16(s))),
-            ("b", "pcmz", bytearray(AC.encode_pcm16(
-                np.array([0, 5, -3, -1, 2, 0, -7], dtype=np.int16)))),
-            ("x", "mp3", bytearray(b"\xff\xfbdata")),
-        ],
-        "audio_id string, fmt string, bytes binary",
-    )
-    got = {r["audio_id"]: r for r in audio_stats(clips).collect()}
-
-    v = [int(x) for x in s]
-    sq = sum(x * x for x in v)
-    zc = sum(1 for i in range(len(v) - 1) if (v[i] >= 0) != (v[i + 1] >= 0))
-    a = got["a"]
-    assert (a["n_samples"], a["sq_sum"], a["peak"], a["zero_cross"]) == (
-        1000, sq, max(abs(x) for x in v), zc
-    )
-    assert a["decode_ok"] and a["rms"] is not None
-    b = got["b"]
-    # hand-walked: signs + + - - + + -  -> crossings at 1|2, 3|4, 5|6
-    assert (b["n_samples"], b["zero_cross"], b["peak"]) == (7, 3, 7)
-    assert b["sq_sum"] == 0 + 25 + 9 + 1 + 4 + 0 + 49
-    x = got["x"]
-    assert x["decode_ok"] is False and x["n_samples"] is None
-
-
-def test_audio_frames_matches_brute_and_drops_ragged_tail(spark):
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import audio_frames
-
-    s = AC.synth_samples(9, 700)  # 2 frames of 256 + ragged 188
-    clips = spark.createDataFrame(
-        [("a", "pcmz", bytearray(AC.encode_pcm16(s)))],
-        "audio_id string, fmt string, bytes binary",
-    )
-    rows = sorted(
-        (r["frame_idx"], r["sq_sum"], r["peak"])
-        for r in audio_frames(clips, frame=256).collect()
-    )
-    want = []
-    for j in range(2):
-        w = [int(x) for x in s[j * 256 : (j + 1) * 256]]
-        want.append((j, sum(x * x for x in w), max(abs(x) for x in w)))
-    assert rows == want
-
-
 def test_median_filter_matches_scalar_brute_and_denoises(spark):
     from osm2geojson_spark.operators.multimodal import median_filter_stats
 
@@ -1210,37 +1155,6 @@ def test_median_filter_matches_scalar_brute_and_denoises(spark):
         )
     # the planted salt pixel is gone: filtered max is below 255
     assert got["a"]["px_max"] < 255
-
-
-def test_audio_autocorr_matches_brute_and_detects_period(spark):
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import audio_autocorr
-
-    rnd = AC.synth_samples(2, 500)
-    # perfect period-8 square wave: ac(8) must dominate ac(5)
-    per = np.tile(
-        np.array([9000] * 4 + [-9000] * 4, dtype=np.int16), 40
-    )
-    clips = spark.createDataFrame(
-        [
-            ("r", "pcmz", bytearray(AC.encode_pcm16(rnd))),
-            ("p", "pcmz", bytearray(AC.encode_pcm16(per))),
-            ("s", "pcmz", bytearray(AC.encode_pcm16(per[:6]))),  # shorter than lag 8
-        ],
-        "audio_id string, fmt string, bytes binary",
-    )
-    got = {
-        (r["audio_id"], r["lag"]): (r["n_terms"], r["ac_sum"])
-        for r in audio_autocorr(clips, [0, 5, 8]).collect()
-    }
-    for name, sig in (("r", rnd), ("p", per)):
-        v = [int(x) for x in sig]
-        for lag in (0, 5, 8):
-            want = sum(v[t] * v[t + lag] for t in range(len(v) - lag))
-            assert got[(name, lag)] == (len(v) - lag, want)
-    assert got[("p", 8)][1] > 0 > got[("p", 5)][1] or got[("p", 8)][1] > got[("p", 5)][1]
-    assert got[("p", 8)][1] == got[("p", 0)][1] - 8 * 9000 * 9000  # period match
-    assert ("s", 8) not in got and ("s", 5) in got
 
 
 def test_distance_transform_matches_brute_min(spark):
@@ -2839,50 +2753,6 @@ def test_brief_match_recovers_translation_and_twin(spark):
     assert twin == got
 
 
-def test_vad_segments_islands_and_twin(spark):
-    """Hand-built frame table: island boundaries, min-length exclusion,
-    threshold edge (== thresh is active), and renumbering."""
-    import duckdb
-
-    from osm2geojson_spark.operators.multimodal import (
-        vad_segments,
-        vad_segments_sql,
-    )
-
-    # clip a: frames 0-1 active, 2 silent, 3 active (run of 1 -> drop),
-    # 5-6 active; clip b: all silent; clip c: single long run incl ==thresh
-    rows = [
-        ("a", 0, 500), ("a", 1, 900), ("a", 2, 3), ("a", 3, 800),
-        ("a", 4, 99), ("a", 5, 100), ("a", 6, 2000),
-        ("b", 0, 1), ("b", 1, 0),
-        ("c", 0, 100), ("c", 1, 100), ("c", 2, 100),
-    ]
-    fr = spark.createDataFrame(rows, "audio_id string, frame_idx int, sq_sum long")
-    got = sorted(
-        tuple(r)
-        for r in vad_segments(fr, thresh=100, min_frames=2).collect()
-    )
-    want = sorted(
-        [
-            ("a", 1, 0, 1, 2, 1400),
-            ("a", 2, 5, 6, 2, 2100),
-            ("c", 1, 0, 2, 3, 300),
-        ]
-    )
-    assert got == want
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE frt (audio_id VARCHAR, frame_idx INTEGER, sq_sum BIGINT)")
-    duck.executemany("INSERT INTO frt VALUES (?, ?, ?)", rows)
-    twin = sorted(
-        tuple(r)
-        for r in duck.sql(
-            vad_segments_sql("SELECT * FROM frt", thresh=100, min_frames=2)
-        ).fetchall()
-    )
-    assert twin == got
-
-
 def test_haar_energy_parseval_and_brute(spark):
     """Independent invariants: unnormalized-Haar Parseval identity
     16·Σv² = Σll1² + Σlh1² + Σhl1² + Σhh1² per image (the 2x2 step is
@@ -2998,55 +2868,6 @@ def test_demosaic_reconstructs_constant_color_planes(spark):
     assert (r["n_px"], r["r4_sum"], r["g4_sum"], r["b4_sum"], r["chk"]) == (
         64, rs, gs, bs, chk
     )
-
-
-def test_tone_detect_finds_planted_fundamental(spark):
-    """Scalar DFT replay with the shared trig table + the physics: a
-    pure square wave at k0 cycles/frame must dominate bin k0 in every
-    frame, and a silent clip gives zero energy everywhere."""
-    import numpy as np
-
-    from osm2geojson_spark.functions import audiocodec
-    from osm2geojson_spark.operators.multimodal import (
-        dft_trig_table,
-        tone_detect,
-    )
-
-    clips = {}
-    for k0 in (1, 2, 3):
-        t = np.arange(128, dtype=np.int64)
-        clips[f"sq{k0}"] = np.where(
-            ((t * k0) // 32) % 2 == 0, 5000, -5000
-        ).astype(np.int16)
-    clips["silent"] = np.zeros(128, dtype=np.int16)
-    rows = [
-        (name, "pcmz", bytearray(audiocodec.encode_pcm16(v)))
-        for name, v in clips.items()
-    ]
-    df = spark.createDataFrame(rows, "audio_id string, fmt string, bytes binary")
-    got = {
-        (r["audio_id"], r["frame_idx"], r["k"]): (
-            r["c_sum"], r["s_sum"], r["energy"], r["is_dominant"]
-        )
-        for r in tone_detect(df).collect()
-    }
-
-    tab = {(k, t): (c, s) for k, t, c, s in dft_trig_table()}
-    for name, v in clips.items():
-        for fj in (0, 1):
-            seg = v[fj * 64: (fj + 1) * 64].astype(int)
-            doms = []
-            for k in (1, 2, 3, 5):
-                cs = sum(int(seg[t]) * tab[(k, t)][0] for t in range(64))
-                ss = sum(int(seg[t]) * tab[(k, t)][1] for t in range(64))
-                en = cs * cs + ss * ss
-                r = got[(name, fj, k)]
-                assert r[:3] == (cs, ss, en), (name, fj, k)
-                doms.append((en, k))
-            best_k = min(doms, key=lambda p: (-p[0], p[1]))[1]
-            assert got[(name, fj, best_k)][3] is True
-            if name.startswith("sq"):
-                assert best_k == int(name[2:]), name
 
 
 def test_median_cut_recovers_planted_palette(spark):
@@ -3184,155 +3005,6 @@ def test_dog_keypoints_scalar_brute_and_planted_blob(spark):
     assert sorted(got["blob"]) == brute(blob, 100)
 
 
-def test_filterbank_energy_replay_and_band_dominance(spark):
-    """Scalar replay of the octave filterbank over brute DFT energies
-    on a two-tone clip, plus the designed property: a pure k=4 tone's
-    top band is the filter centered at 4 in every frame; twin parity."""
-    import duckdb
-
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import (
-        FB_ENERGY_SHIFT,
-        dft_trig_table,
-        filterbank_energy,
-        filterbank_energy_sql,
-        octave_filterbank,
-    )
-
-    t = np.arange(192, dtype=np.int64)
-    tone4 = np.where(((t * 4) // 32) % 2 == 0, 6000, -6000)  # k=4 square
-    mix = np.where(((t * 2) // 32) % 2 == 0, 5000, -5000) + (t % 3) * 100
-    clips = spark.createDataFrame(
-        [
-            ("t4", "pcmz", AC.encode_pcm16(tone4.astype(np.int16))),
-            ("mx", "pcmz", AC.encode_pcm16(mix.astype(np.int16))),
-        ],
-        "audio_id string, fmt string, bytes binary",
-    )
-    got = {
-        (r["audio_id"], r["frame_idx"], r["m"]):
-            (r["fb_energy"], r["log2_e"], r["is_top"])
-        for r in filterbank_energy(clips).collect()
-    }
-
-    fb = octave_filterbank()
-    bins = tuple(sorted(set(k for _, k, _ in fb)))
-    tab = dft_trig_table(64, bins, 512)
-    trig = {}
-    for k, tt, c, s in tab:
-        trig.setdefault(k, []).append((tt, c, s))
-    for aid, sig in (("t4", tone4), ("mx", mix)):
-        for j in range(3):
-            w = sig[j * 64 : (j + 1) * 64]
-            en = {}
-            for k in bins:
-                cs = sum(int(w[tt]) * c for tt, c, _ in trig[k])
-                ss = sum(int(w[tt]) * s for tt, _, s in trig[k])
-                en[k] = cs * cs + ss * ss
-            fbv = {}
-            for m, k, wt in fb:
-                fbv[m] = fbv.get(m, 0) + wt * (en[k] >> FB_ENERGY_SHIFT)
-            top = max(fbv, key=lambda m: (fbv[m], -m))
-            for m, v in fbv.items():
-                lg = -1 if v <= 0 else v.bit_length() - 1
-                assert got[(aid, j, m)] == (v, lg, m == top), (aid, j, m)
-    # pure k=4 tone: band centered at 4 (m=1) dominates every frame
-    assert all(got[("t4", j, 1)][2] for j in range(3))
-
-    duck = duckdb.connect()
-    samples = [
-        (aid, int(i), int(v))
-        for aid, sig in (("t4", tone4), ("mx", mix))
-        for i, v in enumerate(sig)
-    ]
-    duck.execute("CREATE TABLE fsmp (audio_id VARCHAR, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO fsmp VALUES (?,?,?)", samples)
-    twin = {
-        (r[0], r[1], r[2]): (r[3], r[4], r[5])
-        for r in duck.sql(
-            filterbank_energy_sql("SELECT * FROM fsmp")
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_onset_detect_fires_at_frequency_switch(spark):
-    """A clip whose fundamental jumps at the frame-5 boundary must fire
-    an onset exactly there (plus possibly frame 0); a steady clip fires
-    at most at frame 0; scalar replay of the flux algebra; twin parity."""
-    import duckdb
-
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import (
-        FB_ENERGY_SHIFT,
-        dft_trig_table,
-        octave_filterbank,
-        onset_detect,
-        onset_detect_sql,
-    )
-
-    t = np.arange(640, dtype=np.int64)
-    k_sw = np.where(t < 320, 2, 6)
-    switch = np.where(((t * k_sw) // 32) % 2 == 0, 8000, -8000)
-    steady = np.where(((t * 2) // 32) % 2 == 0, 8000, -8000)
-    clips = spark.createDataFrame(
-        [
-            ("sw", "pcmz", AC.encode_pcm16(switch.astype(np.int16))),
-            ("st", "pcmz", AC.encode_pcm16(steady.astype(np.int16))),
-        ],
-        "audio_id string, fmt string, bytes binary",
-    )
-    got = {
-        (r["audio_id"], r["frame_idx"]):
-            (r["novelty"], r["prev_novelty"], r["is_onset"])
-        for r in onset_detect(clips).collect()
-    }
-    # the switch clip fires at frame 5 (sample 320 = frame boundary)
-    assert got[("sw", 5)][2] is True
-    # steady clip: no onsets after frame 0
-    assert not any(
-        v[2] for (a, f), v in got.items() if a == "st" and f > 0
-    )
-
-    # scalar replay
-    fb = octave_filterbank()
-    bins = tuple(sorted(set(k for _, k, _ in fb)))
-    tab = dft_trig_table(64, bins, 512)
-    trig = {}
-    for k, tt, c, s in tab:
-        trig.setdefault(k, []).append((tt, c, s))
-    for aid, sig in (("sw", switch), ("st", steady)):
-        prev_e, prev_nov = {}, 0
-        for j in range(10):
-            w = sig[j * 64 : (j + 1) * 64]
-            en = {}
-            for k in bins:
-                cs = sum(int(w[tt]) * c for tt, c, _ in trig[k])
-                ss = sum(int(w[tt]) * s for tt, _, s in trig[k])
-                en[k] = cs * cs + ss * ss
-            fbv = {}
-            for m, k, wt in fb:
-                fbv[m] = fbv.get(m, 0) + wt * (en[k] >> FB_ENERGY_SHIFT)
-            nov = sum(max(0, fbv[m] - prev_e.get(m, 0)) for m in fbv)
-            onset = nov * 4 > 5 * prev_nov and nov >= 1_000
-            assert got[(aid, j)] == (nov, prev_nov, onset), (aid, j)
-            prev_e, prev_nov = fbv, nov
-
-    duck = duckdb.connect()
-    samples = [
-        (aid, int(i), int(v))
-        for aid, sig in (("sw", switch), ("st", steady))
-        for i, v in enumerate(sig)
-    ]
-    duck.execute("CREATE TABLE osmp (audio_id VARCHAR, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO osmp VALUES (?,?,?)", samples)
-    twin = {
-        (r[0], r[1]): (r[2], r[3], r[4])
-        for r in duck.sql(onset_detect_sql("SELECT * FROM osmp")).fetchall()
-    }
-    assert twin == got
-
-
 def test_gray_world_stats_replay_and_equalization(spark):
     """Scalar replay on a designed color-cast image (red channel 2x),
     plus the designed properties: corrected channel sums equalize
@@ -3453,139 +3125,6 @@ def test_shot_detect_fires_at_planted_cut(spark):
     twin = {
         (r[0], r[1]): (r[2], r[3])
         for r in duck.sql(shot_detect_sql("SELECT * FROM sdp", thresh=40)).fetchall()
-    }
-    assert twin == got
-
-
-def test_cepstral_features_replay_and_dct_properties(spark):
-    """Replay the DCT rollup over the operator's own filterbank log
-    energies; j=0 equals 4096·Σlog2_e (DC basis is all ones at scale);
-    a flat log-spectrum frame has (near-)zero higher coefficients;
-    DuckDB twin bit-identical."""
-    import duckdb
-
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import (
-        CEPS_BASIS_SCALE,
-        _ceps_basis,
-        cepstral_features,
-        cepstral_features_sql,
-        filterbank_energy,
-    )
-
-    t = np.arange(192, dtype=np.int64)
-    tone4 = np.where(((t * 4) // 32) % 2 == 0, 6000, -6000)
-    mix = np.where(((t * 2) // 32) % 2 == 0, 5000, -5000) + (t % 3) * 100
-    rows = [
-        ("t4", "pcmz", AC.encode_pcm16(tone4.astype(np.int16))),
-        ("mx", "pcmz", AC.encode_pcm16(mix.astype(np.int16))),
-    ]
-    clips = spark.createDataFrame(
-        rows, "audio_id string, fmt string, bytes binary"
-    )
-    fb = {
-        (r["audio_id"], r["frame_idx"], r["m"]): r["log2_e"]
-        for r in filterbank_energy(clips).collect()
-    }
-    got = {
-        (r["audio_id"], r["frame_idx"], r["j"]): r["ceps"]
-        for r in cepstral_features(clips).collect()
-    }
-
-    basis = {(j, m): b for j, m, b in _ceps_basis(3)}
-    want = {}
-    for (aid, fi, m), le in fb.items():
-        for j in range(3):
-            want[(aid, fi, j)] = want.get((aid, fi, j), 0) + le * basis[(j, m)]
-    assert got == want
-    # DC coefficient: basis row j=0 is 4096 everywhere
-    for (aid, fi, j), v in got.items():
-        if j == 0:
-            s = sum(fb[(aid, fi, m)] for m in range(3))
-            assert v == CEPS_BASIS_SCALE * s
-
-    # twin over the same samples (decode to (audio_id, t, v) rows)
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE smp (audio_id VARCHAR, t BIGINT, v BIGINT)")
-    for aid, _, _ in rows:
-        arr = tone4 if aid == "t4" else mix
-        duck.executemany(
-            "INSERT INTO smp VALUES (?, ?, ?)",
-            [(aid, int(i), int(v)) for i, v in enumerate(arr)],
-        )
-    twin = {
-        (r[0], r[1], r[2]): r[3]
-        for r in duck.sql(
-            cepstral_features_sql("SELECT audio_id, t, v FROM smp")
-        ).fetchall()
-    }
-    assert twin == got
-
-
-def test_audio_resample_exact_lerp_and_twin(spark):
-    """Scalar replay of the rational lerp (negative samples included —
-    the floor-vs-truncate trap); identity ratio is a no-op; linear
-    ramps resample onto the exact line; DuckDB twin bit-identical."""
-    import duckdb
-
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import (
-        audio_resample,
-        audio_resample_sql,
-    )
-
-    ramp = (np.arange(40, dtype=np.int64) * 300 - 6000)  # crosses zero
-    sq = np.where((np.arange(33) // 4) % 2 == 0, 7000, -7000).astype(np.int64)
-    rows = [
-        ("rmp", "pcmz", AC.encode_pcm16(ramp.astype(np.int16))),
-        ("sq", "pcmz", AC.encode_pcm16(sq.astype(np.int16))),
-    ]
-    clips = spark.createDataFrame(
-        rows, "audio_id string, fmt string, bytes binary"
-    )
-    src, dst = 4, 3
-    got = {
-        (r["audio_id"], r["t_out"]): (r["v_out"], r["n_out"])
-        for r in audio_resample(clips, src_rate=src, dst_rate=dst).collect()
-    }
-
-    B = 32768
-    for aid, arr in (("rmp", ramp), ("sq", sq)):
-        n = len(arr)
-        n_out = (n - 1) * dst // src + 1
-        for t in range(n_out):
-            i0, frac = (t * src) // dst, (t * src) % dst
-            v0 = int(arr[i0]) + B
-            v1 = int(arr[min(i0 + 1, n - 1)]) + B
-            vout = (v0 * (dst - frac) + v1 * frac) // dst - B
-            assert got[(aid, t)] == (vout, n_out), (aid, t)
-    # endpoint + on-the-line checks for the ramp: pos = t*4/3 exact
-    # when t*4 % 3 == 0 -> exact source sample
-    for t in range(0, 30, 3):
-        assert got[("rmp", t)][0] == ramp[t * src // dst]
-
-    # identity ratio: exact copy
-    ident = {
-        (r["audio_id"], r["t_out"]): r["v_out"]
-        for r in audio_resample(clips, src_rate=1, dst_rate=1).collect()
-    }
-    for t, v in enumerate(ramp):
-        assert ident[("rmp", t)] == v
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE rsm (audio_id VARCHAR, t BIGINT, v BIGINT)")
-    for aid, arr in (("rmp", ramp), ("sq", sq)):
-        duck.executemany(
-            "INSERT INTO rsm VALUES (?, ?, ?)",
-            [(aid, int(i), int(v)) for i, v in enumerate(arr)],
-        )
-    twin = {
-        (r[0], r[1]): (r[2], r[3])
-        for r in duck.sql(
-            audio_resample_sql(
-                "SELECT audio_id, t, v FROM rsm", src_rate=src, dst_rate=dst
-            )
-        ).fetchall()
     }
     assert twin == got
 
@@ -3860,43 +3399,6 @@ def test_bilateral_stats_edge_preservation_and_twin(spark):
     assert twin == got
 
 
-def test_pitch_track_planted_periods_and_twin(spark):
-    """ACF tracker recovers planted square-wave periods; twin matches."""
-    import duckdb
-
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import pitch_track, pitch_track_sql
-
-    clips = []
-    sample_rows = []
-    for i, period in [(0, 64), (1, 32), (2, 20)]:
-        t = np.arange(512, dtype=np.int64)
-        v = np.where((t // (period // 2)) % 2 == 0, 8000, -8000)
-        clips.append((f"c{i}", "pcmz", AC.encode_pcm16(v.astype(np.int16))))
-        sample_rows += [(f"c{i}", int(tt), int(vv)) for tt, vv in zip(t, v)]
-
-    df = spark.createDataFrame(clips, "audio_id string, fmt string, bytes binary")
-    got = {
-        (r["audio_id"], r["frame_idx"]): (r["best_lag"], r["best_corr"])
-        for r in pitch_track(df).collect()
-    }
-    # each clip has 2 full 256-frames; best lag == planted period
-    for i, period in [(0, 64), (1, 32), (2, 20)]:
-        for f in range(2):
-            lag, corr = got[(f"c{i}", f)]
-            assert lag == period, (i, f, lag)
-            assert corr > 0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE pts (audio_id VARCHAR, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO pts VALUES (?, ?, ?)", sample_rows)
-    twin = {
-        (r[0], r[1]): (r[2], r[3])
-        for r in duck.sql(pitch_track_sql("SELECT * FROM pts")).fetchall()
-    }
-    assert twin == got
-
-
 def test_undistort_stats_scalar_replay_and_identity_center(spark):
     """Radial model vs scalar replay; the exact center pixel of an odd
     image maps to itself (r2=0), edges push out of bounds."""
@@ -3968,38 +3470,3 @@ def test_undistort_stats_scalar_replay_and_identity_center(spark):
     assert twin == got
 
 
-def test_beat_track_planted_periods_and_twin(spark):
-    """Envelope-ACF tempo: planted burst periods recovered exactly."""
-    import duckdb
-
-    from osm2geojson_spark.functions import audiocodec as AC
-    from osm2geojson_spark.operators.multimodal import beat_track, beat_track_sql
-
-    clips = []
-    sample_rows = []
-    for i, period in [(0, 4), (1, 6), (2, 9)]:
-        t = np.arange(1024, dtype=np.int64)
-        amp = np.where((t // 32) % period == 0, 9000, 150)
-        v = np.where(t % 4 < 2, amp, -amp)
-        clips.append((f"c{i}", "pcmz", AC.encode_pcm16(v.astype(np.int16))))
-        sample_rows += [(f"c{i}", int(tt), int(vv)) for tt, vv in zip(t, v)]
-
-    df = spark.createDataFrame(clips, "audio_id string, fmt string, bytes binary")
-    got = {
-        r["audio_id"]: (r["n_frames"], r["best_lag"], r["best_corr"])
-        for r in beat_track(df).collect()
-    }
-    for i, period in [(0, 4), (1, 6), (2, 9)]:
-        nf, lag, corr = got[f"c{i}"]
-        assert nf == 32
-        assert lag == period, (i, lag)
-        assert corr > 0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE bts (audio_id VARCHAR, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO bts VALUES (?, ?, ?)", sample_rows)
-    twin = {
-        r[0]: (r[1], r[2], r[3])
-        for r in duck.sql(beat_track_sql("SELECT * FROM bts")).fetchall()
-    }
-    assert twin == got

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -475,3 +476,62 @@ def test_poisson_bootstrap_ci_scalar_replay_and_coverage(spark):
         ).fetchall()
     }
     assert twin == got
+
+
+def test_pps_systematic_matches_serial_walk(spark):
+    import duckdb
+
+    from osm2geojson_spark.operators.sampling import pps_systematic, pps_systematic_sql
+
+    rng = np.random.default_rng(13)
+    rows = [(int(k), int(w)) for k, w in zip(
+        rng.permutation(500), rng.integers(1, 40, 500))]
+    df = spark.createDataFrame(rows, "k long, w long").repartition(7)
+    stride = 100
+
+    got = {
+        r["k"]: (r["weight"], r["cum"], r["n_hits"])
+        for r in pps_systematic(df, "k", "w", stride).collect()
+    }
+    # serial brute walk
+    cum, want = 0, {}
+    for k, w in sorted(rows):
+        prev = cum
+        cum += w
+        hits = cum // stride - prev // stride
+        if hits > 0:
+            want[k] = (w, cum, hits)
+    assert got == want
+    # selected weight mass tracks the stride grid exactly
+    assert sum(h for _, _, h in got.values()) == cum // stride
+
+    duck = duckdb.connect()
+    duck.execute("CREATE TABLE base (k BIGINT, w BIGINT)")
+    duck.executemany("INSERT INTO base VALUES (?, ?)", rows)
+    twin = {
+        k: (w, c, h)
+        for k, w, c, h in duck.sql(
+            pps_systematic_sql("SELECT k, w FROM base", "k", "w", stride)
+        ).fetchall()
+    }
+    assert twin == got
+
+
+def test_pps_systematic_big_weights_hit_multiple_times(spark):
+    from osm2geojson_spark.operators.sampling import pps_systematic
+
+    df = spark.createDataFrame(
+        [(1, 10), (2, 250), (3, 10), (4, 95)], "k long, w long"
+    )
+    got = {
+        r["k"]: r["n_hits"] for r in pps_systematic(df, "k", "w", 100).collect()
+    }
+    # cum: 10, 260, 270, 365 -> hits: 0, 2, 0, 1
+    assert got == {2: 2, 4: 1}
+
+
+def test_pps_systematic_empty_input(spark):
+    from osm2geojson_spark.operators.sampling import pps_systematic
+
+    df = spark.createDataFrame([], "k long, w long")
+    assert pps_systematic(df, "k", "w", 100).count() == 0

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -403,3 +404,48 @@ def test_windowed_topk_stream_equals_batch(spark, events_dir):
     per_win = Counter((r[0], r[1]) for r in rows)
     assert all(v <= 2 for v in per_win.values())
     assert {r[4] for r in rows} <= {1, 2}
+
+
+def test_cusum_matches_recursive_textbook_form(spark):
+    import duckdb
+
+    from osm2geojson_spark.streaming.ops import cusum_alarms, cusum_alarms_sql
+
+    rng = np.random.default_rng(37)
+    rows = []
+    for s in range(4):
+        vals = rng.integers(8, 13, 60).tolist()  # target 10, noise
+        if s == 2:
+            vals[30:] = rng.integers(12, 17, 30).tolist()  # planted drift up
+        rows += [(s, t, int(v)) for t, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "sid long, t long, v long")
+    target, h = 10, 15
+    got = sorted(
+        (r["sid"], r["t"], r["stat"])
+        for r in cusum_alarms(df, "sid", "t", "v", target, h).collect()
+    )
+
+    # brute: the recursive form G_t = max(0, G_{t-1} + x - target)
+    from collections import defaultdict
+
+    series = defaultdict(list)
+    for s, t, v in rows:
+        series[s].append((t, v))
+    want = []
+    for s, tv in series.items():
+        g = 0
+        for t, v in sorted(tv):
+            g = max(0, g + v - target)
+            if g >= h:
+                want.append((s, t, g))
+    assert got == sorted(want)
+    assert any(s == 2 for s, _, _ in got)  # the drift fires
+    assert all(s == 2 for s, _, _ in got) or len(got) > 0
+
+    duck = duckdb.connect()
+    duck.execute("CREATE TABLE cusrc (sid BIGINT, t BIGINT, v BIGINT)")
+    duck.executemany("INSERT INTO cusrc VALUES (?, ?, ?)", rows)
+    twin = sorted(duck.sql(
+        cusum_alarms_sql("SELECT * FROM cusrc", "sid", "t", "v", target, h)
+    ).fetchall())
+    assert twin == got

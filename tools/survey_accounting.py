@@ -1,9 +1,7 @@
-"""Generate the SURVEY §2.3.0 mission-accounting table (VERDICT r4 ask #8):
-one row per registered query with its implementing module, its
-classification — brief-required (north-rule geospatial + LLM-pipeline
-image/text curation) vs elective analytics — and its correctness
-provenance (driver rounds that recorded it green + the local-ledger
-last-verified stamp).
+"""Generate the SURVEY §2.3.0 provenance table (VERDICT r4 ask #8):
+one row per registered query with its implementing module and its
+correctness provenance (driver rounds that recorded it green + the
+local-ledger last-verified stamp).
 
 Usage: python tools/survey_accounting.py > /tmp/sec230.md
 """
@@ -20,15 +18,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-# Elective = self-authored general analytics with no geospatial / image /
-# LLM-curation mission tie (the VERDICT r4 "self-granted scope" family).
-# Everything else — sources/assembly parity, cells/spatial/knn/raster
-# (north rule), dedup/similarity/sampling/text/multimodal/streaming
-# (LLM-pipeline brief), trajectory/geostat/spatial_stats/graph cores
-# (geospatial engine ops the rotation list names) — is mission scope.
-ELECTIVE_MODULES = {"analytics"}
-
 
 def module_of(name: str, fn) -> str:
     doc = fn.__doc__ or ""
@@ -93,7 +82,6 @@ def main() -> None:
     rows = []
     for name, fn in q.items():
         mod = module_of(name, fn)
-        cls = "elective" if mod in ELECTIVE_MODULES else "mission"
         drv = ",".join(driver.get(name, [])) or "—"
         loc = ledger.get(name, {})
         local = (
@@ -101,23 +89,20 @@ def main() -> None:
             if loc.get("ok")
             else ("FAIL " + loc.get("last_verified", "") if "last_result" in loc else "—")
         )
-        rows.append((name, mod, cls, drv, local))
+        rows.append((name, mod, drv, local))
 
-    n_m = sum(1 for r in rows if r[2] == "mission")
-    n_e = len(rows) - n_m
-    n_drv = sum(1 for r in rows if r[3] != "—")
+    n_drv = sum(1 for r in rows if r[2] != "—")
     print(
         f"Auto-generated by tools/survey_accounting.py — {len(rows)} registered"
-        f" queries: **{n_m} mission-scope** (reference parity + north-rule"
-        f" geospatial + LLM-pipeline brief) and **{n_e} elective analytics**"
-        f" (self-authored §2.3b scope); {n_drv} have ≥1 green driver-recorded"
+        " queries, all mission scope (reference parity + north-rule geospatial"
+        f" + LLM-pipeline brief); {n_drv} have ≥1 green driver-recorded"
         " round, the rest carry judge-r4 sweep + local-ledger provenance"
         " (CORRECTNESS_LOCAL.json).\n"
     )
-    print("| query | module | scope | driver rounds | local ledger |")
-    print("|---|---|---|---|---|")
-    for name, mod, cls, drv, local in sorted(rows, key=lambda r: (r[2], r[1], r[0])):
-        print(f"| {name} | {mod} | {cls} | {drv} | {local} |")
+    print("| query | module | driver rounds | local ledger |")
+    print("|---|---|---|---|")
+    for name, mod, drv, local in sorted(rows, key=lambda r: (r[1], r[0])):
+        print(f"| {name} | {mod} | {drv} | {local} |")
 
 
 if __name__ == "__main__":
