@@ -4955,9 +4955,6 @@ WHERE rn <= 1
 """
 
 
-_BOX_COLS_SPARK = None  # built inline in q_box_iou
-
-
 def _order_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic detection boxes from order keys: one image per
     customer (~10 boxes/image at every SF — detection-shaped constant

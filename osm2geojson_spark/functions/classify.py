@@ -94,13 +94,6 @@ def is_geometry_polygon(
 # --------------------------------------------------------------- spark
 
 
-def _tag_value(tags_col: Column, key: str) -> Column:
-    """Value of tag ``key`` from an array<struct<k,v>> column (null if absent;
-    first occurrence wins, like dict construction in the reference parser)."""
-    hit = F.filter(tags_col, lambda t: t["k"] == F.lit(key))
-    return F.try_element_at(hit, F.lit(1))["v"]
-
-
 def _map_value(tags_map: Column, key: str) -> Column:
     return F.try_element_at(tags_map, F.lit(key))
 

@@ -188,16 +188,6 @@ def bbox(buf: bytes) -> tuple[float, float, float, float]:
     return float(mn[0]), float(mn[1]), float(mx[0]), float(mx[1])
 
 
-def outer_rings(buf: bytes) -> list[np.ndarray]:
-    """Exterior rings of a Polygon/MultiPolygon (ring 0 of each polygon)."""
-    t, payload = decode(buf)
-    if t == GTYPE_POLYGON:
-        return [payload[0]]
-    if t == GTYPE_MULTIPOLYGON:
-        return [rings[0] for rings in payload]
-    raise ValueError("not a polygonal geometry")
-
-
 def all_rings(buf: bytes) -> list[tuple[np.ndarray, bool]]:
     """[(ring, is_hole)] for polygonal geometry."""
     t, payload = decode(buf)

@@ -63,14 +63,6 @@ def close_ring(pts: np.ndarray) -> np.ndarray:
     return np.vstack([pts, pts[:1]])
 
 
-def rotate_ring_start(closed: np.ndarray, k: int) -> np.ndarray:
-    """Rotate a closed ring so it starts at distinct-vertex index k."""
-    distinct = closed[:-1]
-    k = k % len(distinct)
-    rolled = np.concatenate([distinct[k:], distinct[:k]])
-    return np.vstack([rolled, rolled[:1]])
-
-
 def reverse_closed(closed: np.ndarray) -> np.ndarray:
     """Reverse a closed ring in place — start point preserved (what
     shapely's orient() does to a wrongly-wound ring)."""

@@ -104,37 +104,12 @@ def stopword_hits_from_padded(padded: Column) -> Column:
     return n
 
 
-def _stopword_hits(text: Column) -> Column:
-    return stopword_hits_from_padded(padded_norm_col(text))
-
-
 def _stopword_hits_sql(text: str) -> str:
     padded = f"(' ' || {normalize_sql(text)} || ' ')"
     parts = [
         f"(length(regexp_split_to_array({padded}, ' {w} ')) - 1)" for w in EN_STOPWORDS
     ]
     return "(" + " + ".join(parts) + ")"
-
-
-def quality_score(text: Column) -> Column:
-    """Deterministic [0,1] quality heuristic:
-       0.4 * min(1, n_ws_tokens/20) + 0.3 * (1 - punct_ratio)
-       + 0.3 * min(1, 5*stopword_hits/max(1,n_ws_tokens)), rounded to 6 dp.
-
-    Note: split-based counting means overlapping stopword pairs ("of the")
-    count once per non-overlapping occurrence — the SQL oracle uses the
-    identical split, so both sides agree by construction.
-    """
-    n_tok = ws_token_count(text).cast("double")
-    n_chars = F.greatest(F.length(text), F.lit(1)).cast("double")
-    n_punct = F.regexp_count(text, F.lit("[^a-zA-Z0-9\\s]")).cast("double")
-    stop = _stopword_hits(text).cast("double")
-    score = (
-        F.lit(0.4) * F.least(F.lit(1.0), n_tok / F.lit(20.0))
-        + F.lit(0.3) * (F.lit(1.0) - n_punct / n_chars)
-        + F.lit(0.3) * F.least(F.lit(1.0), F.lit(5.0) * stop / F.greatest(n_tok, F.lit(1.0)))
-    )
-    return F.round(score, 6)
 
 
 def quality_score_sql(text: str) -> str:
@@ -150,16 +125,6 @@ def quality_score_sql(text: str) -> str:
 
 
 # ---------------------------------------------------------------- lang id
-
-
-def lang_id(text: Column) -> Column:
-    """'en' when >= 2 stopword hits or >= 5% of tokens are stopwords,
-    else 'other' — an n-gram-frequency heuristic over the fixed list."""
-    hits = _stopword_hits(text).cast("double")
-    n_tok = ws_token_count(text).cast("double")
-    return F.when(
-        (hits >= 2) | (hits / F.greatest(n_tok, F.lit(1.0)) >= 0.05), F.lit("en")
-    ).otherwise(F.lit("other"))
 
 
 def lang_id_sql(text: str) -> str:
@@ -185,8 +150,9 @@ def text_features(df, text_col: str = "text", id_cols: tuple[str, ...] = ("doc_i
     its output feeds more than one non-cheap consumer, so the optimized plan
     evaluates the two normalization regexes, one tokenizing split and the
     ten literal-pattern stopword splits exactly once per row (pinned by
-    tests/test_plans.py). Semantics are byte-identical to the per-column
-    builders and to the SQL oracle twins.
+    tests/test_plans.py). The quality score and language id exist only
+    here; semantics are byte-identical to the SQL oracle twins
+    (``quality_score_sql``, ``lang_id_sql``).
     """
     t = F.col(text_col)
     staged = (

@@ -10,9 +10,11 @@ The distributed re-expression of the reference's conversion pipeline
   (reference: hash refs_index probe loop, main.py:288-302)
 * classification    : pure column expressions (functions/classify.py).
 * relation assembly : grouped Arrow kernels (linemerge / ring nesting /
-  orientation repair) — repartitioned by (doc_id, rel_id) and processed
-  many-relations-per-Arrow-batch via ``mapInPandas`` (``batched_rel_kernel``;
-  per-group ``applyInPandas`` costs ~ms of machinery per group).
+  orientation repair) — repartitioned by the relation's (doc_id, seq), so
+  two relations sharing an id each convert from their own members, and
+  processed many-relations-per-Arrow-batch via ``mapInPandas``
+  (``batched_rel_kernel``; per-group ``applyInPandas`` costs ~ms of
+  machinery per group).
   (reference: main.py:498-788)
 * used-refs dedup   : a literal left **anti join** on ``id`` — id-only key,
   reproducing the reference's cross-type-collision quirk (main.py:168-180).
@@ -112,11 +114,12 @@ def way_gpb_udf(coords: pd.Series, is_poly: pd.Series) -> pd.DataFrame:
 
 
 # --------------------------------------------------------------------------
-# relation kernels (batched mapInPandas over (doc_id, rel_id) groups)
+# relation kernels (batched mapInPandas over (doc_id, seq) groups)
 
 _REL_OUT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
+        T.StructField("seq", T.LongType()),
         T.StructField("rel_id", T.LongType()),
         T.StructField("gpb", T.BinaryType()),
         T.StructField("reason", T.StringType()),
@@ -302,22 +305,23 @@ def batched_rel_kernel(row_fn):
 
     ``applyInPandas`` costs ~ms per group (a Python call + a 1-row DataFrame
     each) — ruinous at millions of small relations. Instead the member rows
-    arrive hash-partitioned by (doc_id, rel_id) and sorted within partitions,
+    arrive hash-partitioned by (doc_id, seq) and sorted within partitions,
     so each group is contiguous; a group possibly split across two Arrow
     batches is carried over in ``buf`` and flushed at partition end."""
 
     COLS = (
-        "doc_id", "rel_id", "pos0", "pos1", "role", "ref", "coords",
+        "doc_id", "seq", "rel_id", "pos0", "pos1", "role", "ref", "coords",
         "nested_bad", "is_poly",
     )
     def fn(it):
         buf = None  # carried tail group: dict of numpy arrays
-        out_doc, out_rel, out_gpb, out_reason = [], [], [], []
+        out_doc, out_seq, out_rel, out_gpb, out_reason = [], [], [], [], []
 
         def emit(g, s, e):
             sub = {c: g[c][s:e] for c in COLS}
             gpb, reason = row_fn(sub)
             out_doc.append(g["doc_id"][s])
+            out_seq.append(int(g["seq"][s]))
             out_rel.append(int(g["rel_id"][s]))
             out_gpb.append(gpb)
             out_reason.append(reason)
@@ -333,7 +337,7 @@ def batched_rel_kernel(row_fn):
             # slow path in numpy — factorize to int codes once per span (C
             # hashing; codes only need within-span consistency)
             dk = pd.factorize(g["doc_id"])[0]
-            rk = g["rel_id"]
+            rk = g["seq"]
             is_last = (dk == dk[-1]) & (rk == rk[-1])
             split = int(np.argmax(is_last))  # groups are contiguous (sorted)
             if split == 0:  # whole batch is one group — may continue
@@ -341,7 +345,7 @@ def batched_rel_kernel(row_fn):
                 continue
             head = {c: g[c][:split] for c in COLS}
             buf = {c: g[c][split:] for c in COLS}
-            # composite run detection over (doc_id, rel_id)
+            # composite run detection over (doc_id, seq)
             n = split
             change = np.empty(n, dtype=bool)
             change[0] = True
@@ -353,7 +357,10 @@ def batched_rel_kernel(row_fn):
         if buf is not None and len(buf["doc_id"]) > 0:
             emit(buf, 0, len(buf["doc_id"]))
         yield pd.DataFrame(
-            {"doc_id": out_doc, "rel_id": out_rel, "gpb": out_gpb, "reason": out_reason}
+            {
+                "doc_id": out_doc, "seq": out_seq, "rel_id": out_rel,
+                "gpb": out_gpb, "reason": out_reason,
+            }
         )
 
     return fn
@@ -483,14 +490,16 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
     """Explode relation members into leaf rows and resolve every leaf with
     one lookup join. Leaves are the direct members (pos1 = -1) and the
     members of depth-1 nested relations (pos1 >= 0; multiline path). Output
-    one row per leaf member:
-    (rel_id, pos0, pos1, mtype, ref, role, coords, needs_close, nested_bad).
+    one row per leaf member, keyed by the relation's ``seq``:
+    (doc_id, seq, rel_id, pos0, pos1, mtype, ref, role, coords, needs_close,
+    nested_bad).
     """
     rels = frames.relations.filter(F.col("center").isNull())
     mem = rels.select(
-        "doc_id", F.col("id").alias("rel_id"), F.explode("members").alias("m")
+        "doc_id", "seq", F.col("id").alias("rel_id"), F.explode("members").alias("m")
     ).select(
         "doc_id",
+        "seq",
         "rel_id",
         F.col("m.pos").alias("pos0"),
         F.lit(-1).alias("pos1"),
@@ -508,9 +517,13 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
     nested = (
         mem.filter(F.col("mtype") == "relation")
         .join(rel_index, ["doc_id", "ref"], "inner")
-        .select("doc_id", "rel_id", "pos0", "role", F.explode("nested_members").alias("nm"))
+        .select(
+            "doc_id", "seq", "rel_id", "pos0", "role",
+            F.explode("nested_members").alias("nm"),
+        )
         .select(
             "doc_id",
+            "seq",
             "rel_id",
             "pos0",
             F.col("nm.pos").alias("pos1"),
@@ -546,6 +559,7 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
     inline = F.col("mgeom").isNotNull() & (F.size("mgeom") > 0)
     return leaves.select(
         "doc_id",
+        "seq",
         "rel_id",
         "pos0",
         "pos1",
@@ -584,10 +598,13 @@ def assemble_relations(
     ways_resolved: DataFrame,
     rels_flagged: DataFrame,
 ) -> DataFrame:
-    """Relation shapes: (rel_id, gpb, reason) via grouped Arrow kernels.
+    """Relation shapes: (doc_id, seq, rel_id, gpb, reason) via grouped Arrow
+    kernels, one row per relation element without a center, keyed by its
+    ``seq`` so relations that share an id keep their own members.
     ``rels_flagged``: frames.relations + precomputed ``is_poly`` column."""
     no_center = rels_flagged.filter(F.col("center").isNull()).select(
         "doc_id",
+        "seq",
         F.col("id").alias("rel_id"),
         "is_poly",
     )
@@ -596,7 +613,7 @@ def assemble_relations(
     members = members.withColumn(
         "coords", close_coords_expr(F.col("coords"), F.col("needs_close"))
     ).drop("needs_close")
-    flagged = members.join(no_center, ["doc_id", "rel_id"], "inner")
+    flagged = members.join(no_center.drop("rel_id"), ["doc_id", "seq"], "inner")
 
     # multiline path: way members, direct or flattened from a nested
     # relation, plus the depth-2 markers; multipolygon path: direct members
@@ -612,7 +629,7 @@ def assemble_relations(
     # dropped BEFORE the repartition (a string column on every member row
     # is pure shuffle + Arrow weight)
     cols = [
-        "doc_id", "rel_id", "pos0", "pos1", "ref", "role", "coords",
+        "doc_id", "seq", "rel_id", "pos0", "pos1", "ref", "role", "coords",
         "nested_bad", "is_poly",
     ]
 
@@ -624,6 +641,7 @@ def assemble_relations(
     # action (once for results, once to find the missing relations).
     sentinels = no_center.select(
         "doc_id",
+        "seq",
         "rel_id",
         F.lit(-1).alias("pos0"),
         F.lit(-1).alias("pos1"),
@@ -636,7 +654,7 @@ def assemble_relations(
     return (
         kept_members.select(cols)
         .unionByName(sentinels.select(cols))
-        .repartition("doc_id", "rel_id")
-        .sortWithinPartitions("doc_id", "rel_id", "pos0", "pos1")
+        .repartition("doc_id", "seq")
+        .sortWithinPartitions("doc_id", "seq", "pos0", "pos1")
         .mapInPandas(batched_rel_kernel(_dispatch_row), schema=_REL_OUT_SCHEMA)
     )

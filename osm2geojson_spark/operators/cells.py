@@ -103,20 +103,6 @@ def k_ring(cell: Column, res: int, k: int = 1) -> Column:
     )
 
 
-def cell_bounds(cell: Column, res: int) -> tuple[Column, Column, Column, Column]:
-    """(min_lon, min_lat, max_lon, max_lat) of a cell."""
-    n = float(_grid_n(res))
-    x, y = cell_xy(cell)
-    min_lon = x / F.lit(n) * F.lit(360.0) - F.lit(180.0)
-    min_lat = y / F.lit(n) * F.lit(180.0) - F.lit(90.0)
-    return (
-        min_lon,
-        min_lat,
-        min_lon + F.lit(360.0 / n),
-        min_lat + F.lit(180.0 / n),
-    )
-
-
 def covering_cells(
     min_lon: Column, min_lat: Column, max_lon: Column, max_lat: Column, res: int
 ) -> Column:

@@ -1682,9 +1682,6 @@ def hog_features(images: DataFrame) -> DataFrame:
     )
 
 
-WARP_DENOM = 256  # fixed-point denominator of the affine coefficients
-
-
 def warp_affine(
     images: DataFrame,
     coeffs: tuple[int, int, int, int, int, int],

@@ -4,14 +4,20 @@ Design (SURVEY §2.3, BASELINE.json north_star):
 
 * Both sides are keyed by the E1 cell grid: points by ``cell_id(lon,lat)``,
   polygons/tile-footprints by their bbox covering cells (exploded).
-* The equi-join on ``cell_id`` is the only shuffle; polygon payloads are
-  replicated per covering cell and **broadcast** when small (fixture polygon
-  sets are ~KBs; a planet polygon table shuffles instead — caller's flag).
-* Exact refinement (vectorized NumPy ray cast over Arrow batches) runs
-  cell-locally after the join, grouped by polygon so each polygon decodes
-  once per partition batch.
+* The equi-join on ``cell_id`` is the only shuffle; the polygon side is
+  **broadcast** when small (fixture polygon sets are ~KBs; a planet polygon
+  table shuffles instead — caller's flag).
+* Point-in-polygon refines in the JVM: each (cell, polygon) shard row
+  carries only the ring edges a ray cast from that cell can cross, plus a
+  parity bit per ring for the edges every such ray crosses, and one filter
+  expression folds them per point (ray casting against cell-local polygon
+  shards). No point crosses into Python.
+* The raster<->vector exact refine (vectorized NumPy over Arrow batches)
+  runs cell-locally after the join, grouped by polygon so each polygon
+  decodes once per partition batch.
 
-A brute-force variant (no cells) exists as the tests' oracle.
+A brute-force variant (no cells, NumPy ray cast) exists as the tests'
+oracle.
 """
 
 from __future__ import annotations
@@ -22,12 +28,13 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import geom
 from ..functions import kernels as K
-from ..sources.local import local_frame
+from ..sources.local import arrow_table, local_frame
 from . import cells
 
 
@@ -72,6 +79,15 @@ def sphere_shard_polygons(polys_df: DataFrame, res: int) -> DataFrame:
 
 _CELL_EPS = 1e-9  # conservative pad >> float error of the JVM cell assignment
 
+# The PIP shard table: one row per (cell, polygon) pair a point can match.
+# ``rings`` is NULL for a cell wholly inside the polygon; for a boundary
+# cell it holds each ring's ray-cast state for the points of that cell
+# (see _cell_rings), which _in_rings folds per point.
+SHARD_SCHEMA = (
+    "cell_id long, poly_id long, rings array<struct<hole boolean, parity boolean, "
+    "edges array<struct<x1 double, y1 double, x2 double, y2 double>>>>"
+)
+
 
 def _classify_cell(rings, cx0, cy0, cx1, cy1) -> str:
     """'inside' / 'outside' / 'boundary' for the closed cell rectangle.
@@ -93,22 +109,49 @@ def _classify_cell(rings, cx0, cy0, cx1, cy1) -> str:
             return "boundary"
     c = np.array([[(cx0 + cx1) / 2.0, (cy0 + cy1) / 2.0]])
     inside = False
-    for ring, is_hole in rings:  # same fold as _pip_refine
+    for ring, is_hole in rings:  # same fold as _in_rings
         hit = bool(K.points_in_ring(c, ring)[0])
         inside = (inside and not hit) if is_hole else (inside or hit)
     return "inside" if inside else "outside"
 
 
+def _cell_rings(rings, bx0, by0, bx1, by1) -> list:
+    """The eastward ray cast of ``kernels.points_in_ring`` cut down to the
+    points of one padded cell box [bx0, bx1] x [by0, by1]: a list of
+    (hole, parity, edges) in ``geom.all_rings`` order.
+
+    An edge no ray from the box can cross is dropped: a horizontal one, one
+    wholly above or below the box's latitude band, one wholly west of the
+    box. An edge wholly east of the box that spans the whole band crosses
+    every ray from the box; it is dropped too and flips the ring's parity.
+    The other edges are kept and cast per point. A ring left with no edges
+    and even parity hits no point of the box and so leaves the ring fold
+    unchanged; it is dropped."""
+    out = []
+    for ring, is_hole in rings:
+        x1, y1 = ring[:-1, 0], ring[:-1, 1]
+        x2, y2 = ring[1:, 0], ring[1:, 1]
+        ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
+        live = (y1 != y2) & (yhi >= by0) & (ylo <= by1) & (np.maximum(x1, x2) >= bx0)
+        spans = live & (np.minimum(x1, x2) > bx1) & (ylo <= by0) & (yhi > by1)
+        keep = live & ~spans
+        parity = bool(np.count_nonzero(spans) % 2)
+        if parity or keep.any():
+            edges = np.column_stack([x1, y1, x2, y2])[keep].tolist()
+            out.append((bool(is_hole), parity, [tuple(e) for e in edges]))
+    return out
+
+
 def classified_shards(polys: list[tuple[int, bytes]], res: int):
-    """Driver-side shard build for a small polygon set:
-    returns (inside_rows, boundary_rows, {poly_id: gpb}) where rows are
-    (cell_id, poly_id). Outside cells are dropped here — they never join."""
+    """Shard build for a polygon set on the flat grid: returns
+    (inside_rows, boundary_rows, boundary_rings) where rows are
+    (cell_id, poly_id) at ``res`` and ``boundary_rings[k]`` is the
+    ``_cell_rings`` of ``boundary_rows[k]``. Outside cells are dropped
+    here — they never join."""
     n = 1 << res
-    inside, boundary = [], []
-    pid2gpb: dict[int, bytes] = {}
+    inside, boundary, boundary_rings = [], [], []
     for pid, g in polys:
         g = bytes(g)
-        pid2gpb[pid] = g
         rings = geom.all_rings(g)
         minx, miny, maxx, maxy = geom.bbox(g)
         x0 = max(0, min(n - 1, int((minx + 180.0) / 360.0 * n)))
@@ -126,28 +169,33 @@ def classified_shards(polys: list[tuple[int, bytes]], res: int):
                     inside.append((cells.pack_cell_py(res, x, y), pid))
                 elif st == "boundary":
                     boundary.append((cells.pack_cell_py(res, x, y), pid))
-    return inside, boundary, pid2gpb
+                    boundary_rings.append(_cell_rings(
+                        rings, cx0 - _CELL_EPS, cy0 - _CELL_EPS,
+                        cx1 + _CELL_EPS, cy1 + _CELL_EPS,
+                    ))
+    return inside, boundary, boundary_rings
 
 
 def sphere_classified_shards(polys: list[tuple[int, bytes]], res: int):
-    """Driver-side shard build on the SPHERE grid (cells_sphere): returns
-    (inside_rows, boundary_rows, {poly_id: gpb}).
+    """Shard build on the SPHERE grid (cells_sphere): returns
+    (inside_rows, boundary_rows, boundary_rings) as ``classified_shards``.
 
     Covering cells come from the hierarchical sphere coverer; each cell is
     classified against the polygon via its conservative lon/lat box
     (cell_lonlat_boxes): a cell whose padded box touches no polygon segment
     bbox is uniformly inside/outside (decided by the box center — the
     padded box is a connected planar region containing the cell, so if the
-    polygon boundary misses the box, box and cell share one side).
+    polygon boundary misses the box, box and cell share one side), and a
+    boundary cell's rings are cut down to that box.
     Pole-touching / antimeridian-wrapping cells (clean=False) are planar-
-    disconnected, so they always go to the exact-refine boundary class."""
+    disconnected, so they always go to the boundary class with every
+    non-horizontal edge and no parity."""
     from . import cells_sphere as SPH
 
-    inside, boundary = [], []
-    pid2gpb: dict[int, bytes] = {}
+    inf = float("inf")
+    inside, boundary, boundary_rings = [], [], []
     for pid, g in polys:
         g = bytes(g)
-        pid2gpb[pid] = g
         rings = geom.all_rings(g)
         minx, miny, maxx, maxy = geom.bbox(g)
         for cell in SPH.sphere_covering_cells_py(minx, miny, maxx, maxy, res):
@@ -155,6 +203,7 @@ def sphere_classified_shards(polys: list[tuple[int, bytes]], res: int):
             boxes, clean = SPH._boxes_cached(f, res, i, j)
             if not clean:
                 boundary.append((cell, pid))
+                boundary_rings.append(_cell_rings(rings, -inf, -inf, inf, inf))
                 continue
             bx0, by0, bx1, by1 = boxes[0]
             st = _classify_cell(rings, bx0, by0, bx1, by1)
@@ -162,13 +211,182 @@ def sphere_classified_shards(polys: list[tuple[int, bytes]], res: int):
                 inside.append((cell, pid))
             elif st == "boundary":
                 boundary.append((cell, pid))
-    return inside, boundary, pid2gpb
+                boundary_rings.append(_cell_rings(
+                    rings, bx0 - _CELL_EPS, by0 - _CELL_EPS,
+                    bx1 + _CELL_EPS, by1 + _CELL_EPS,
+                ))
+    return inside, boundary, boundary_rings
+
+
+def _shard_rows(polys: list, res: int, grid: str, compact: bool) -> list:
+    """``SHARD_SCHEMA`` rows of a polygon layer: the interior cells with
+    NULL rings, compacted when ``compact`` (H3-compactCells analogue: 4
+    interior siblings collapse to their parent until fixpoint, so the
+    interior shrinks from ~area/cell_area rows to ~perimeter/cell_width),
+    then the boundary cells at ``res``."""
+    if grid == "sphere":
+        from . import cells_sphere as SPH
+
+        inside, boundary, rings = sphere_classified_shards(polys, res)
+        compact_fn = SPH.sphere_compact_cells_py
+    else:
+        inside, boundary, rings = classified_shards(polys, res)
+        compact_fn = cells.compact_cells_py
+    if compact and inside:
+        inside = compact_fn(inside, res)
+    return [(c, p, None) for c, p in inside] + [
+        (c, p, r) for (c, p), r in zip(boundary, rings)
+    ]
+
+
+# Driver-side shard memo: a production session runs the same polygon layer
+# against many point batches (and a bench/driver rep loop runs the
+# identical layer every rep) — rebuilding ~0.3 s of single-core Python per
+# call is pure replanning waste. Keyed by the polygon BYTES (not object
+# identity), capped small: the layers worth caching are the handful a
+# session reuses.
+_SHARD_CACHE: dict = {}
+_SHARD_CACHE_MAX = 8
+
+
+def _shard_rows_cached(polys: list, res: int, grid: str, compact: bool) -> list:
+    import hashlib
+
+    h = hashlib.md5()
+    for pid, gpb in polys:
+        h.update(str(pid).encode())
+        h.update(gpb)
+    key = (h.hexdigest(), res, grid, compact)
+    got = _SHARD_CACHE.get(key)
+    if got is None:
+        got = _shard_rows(polys, res, grid, compact)
+        if len(_SHARD_CACHE) >= _SHARD_CACHE_MAX:
+            _SHARD_CACHE.pop(next(iter(_SHARD_CACHE)))
+        _SHARD_CACHE[key] = got
+    return got
+
+
+def _shard_batches(res: int, grid: str):
+    """mapInArrow body of the shuffle path: polygon batches (poly_id, gpb)
+    -> uncompacted ``SHARD_SCHEMA`` rows at ``res``, built on executors."""
+    schema = T.StructType.fromDDL(SHARD_SCHEMA)  # parsed here: needs the JVM
+
+    def build(batches):
+        for b in batches:
+            polys = list(zip(b.column("poly_id").to_pylist(), b.column("gpb").to_pylist()))
+            yield from arrow_table(_shard_rows(polys, res, grid, False), schema).to_batches()
+
+    return build
+
+
+def _in_rings(rings: Column, lon: Column, lat: Column) -> Column:
+    """The ring fold of ``_pip_refine`` over a shard row's rings as one JVM
+    expression: an outer ring ORs its hit into the result, a hole ANDs in
+    its negation. A ring's hit starts from its parity and XORs each kept
+    edge's crossing, tested in ``kernels.points_in_ring``'s operand order
+    so IEEE doubles give the same answer; the CASE keeps the division off
+    horizontal edges. NULL rings (an interior cell) pass."""
+
+    def cross(hit, e):
+        return hit != F.when(
+            (e["y1"] > lat) != (e["y2"] > lat),
+            lon < e["x1"] + (lat - e["y1"]) * (e["x2"] - e["x1"]) / (e["y2"] - e["y1"]),
+        ).otherwise(F.lit(False))
+
+    def fold(inside, r):
+        hit = F.aggregate(r["edges"], r["parity"], cross)
+        return F.when(r["hole"], inside & ~hit).otherwise(inside | hit)
+
+    return rings.isNull() | F.aggregate(rings, F.lit(False), fold)
+
+
+def point_in_polygon_join(
+    points: DataFrame,
+    polys_df: DataFrame,
+    res: int = cells.DEFAULT_RES,
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    broadcast_polys: bool = True,
+    grid: str = "flat",
+    salt_threshold: int = 2_000_000,
+    n_salts: int = 16,
+    compact_interior: bool = True,
+) -> DataFrame:
+    """E2: rows of ``points`` paired with every polygon containing them.
+
+    Output: all point columns + poly_id. One join of the points against the
+    ``SHARD_SCHEMA`` table of ``polys_df`` on cell, then one JVM filter
+    (``_in_rings``): an interior shard passes every point, a boundary shard
+    ray-casts the point against only the edges that matter in its cell.
+    The points are scanned once and never leave the JVM.
+
+    A broadcastable polygon side (the default) builds the shard table on
+    the driver, memoized per layer, with the interior compacted
+    (``compact_interior``): points probe their ancestor cell at every
+    resolution present (an antichain per polygon, so multiplicity is
+    unchanged; the ancestor probe is exact because both grids' index math
+    is a clamped floor of a per-axis monotone map, and floor-division
+    composes: floor(s*2^R) >> (R-r) == floor(s*2^r)). The join is a
+    broadcast, so there is no shuffle.
+
+    ``broadcast_polys=False`` (a planet-size polygon table) builds the
+    shards on executors, uncompacted at ``res``, and shuffle-joins them.
+    Dense cells (urban cores) are exactly the heavy hitters SCALE.md flags
+    on this path, so heavy point cells are hash-spread over ``n_salts``
+    with the matching shard rows replicated per salt (plans/skew.py).
+
+    ``grid``: "flat" (equirectangular E1 cells) or "sphere" (cube-face
+    cells_sphere — uniform cell area everywhere, so polar-heavy corpora
+    don't concentrate into a handful of distorted cells). Results are
+    identical; only candidate generation changes.
+    """
+    if grid == "sphere":
+        from . import cells_sphere as SPH
+
+        def probe_at(r):
+            return SPH.sphere_cell_id(F.col(lon_col), F.col(lat_col), r)
+
+        cell_res = SPH.sphere_cell_res_py
+    else:
+
+        def probe_at(r):
+            return cells.cell_id(F.col(lon_col), F.col(lat_col), r)
+
+        cell_res = cells.cell_res_py
+
+    if broadcast_polys:
+        polys = [(r["poly_id"], bytes(r["gpb"])) for r in polys_df.select("poly_id", "gpb").collect()]
+        rows = _shard_rows_cached(polys, res, grid, compact_interior)
+        res_set = sorted({cell_res(c) for c, _, _ in rows}) or [res]
+        probe = (
+            probe_at(res_set[0])
+            if len(res_set) == 1
+            else F.explode(F.array(*[probe_at(r) for r in res_set]))
+        )
+        shards = local_frame(points.sparkSession, rows, SHARD_SCHEMA)
+        cand = points.withColumn("cell_id", probe).join(F.broadcast(shards), "cell_id")
+    else:
+        from ..plans.skew import salted_cell_join
+
+        shards = polys_df.select("poly_id", "gpb").mapInArrow(
+            _shard_batches(res, grid), SHARD_SCHEMA
+        )
+        cand = salted_cell_join(
+            points.withColumn("cell_id", probe_at(res)),
+            shards,
+            cell_col="cell_id",
+            threshold=salt_threshold,
+            n_salts=n_salts,
+            salt_src=lon_col,
+        )
+    inside = _in_rings(F.col("rings"), F.col(lon_col), F.col(lat_col))
+    return cand.filter(inside).drop("cell_id", "rings")
 
 
 def _pip_refine(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas refinement: keep rows whose point lies in the polygon.
-    Decodes each distinct polygon once per batch, then vectorizes the ray
-    cast over all its candidate points."""
+    """mapInPandas kernel of the brute-force oracle: keep rows whose point
+    lies in the row's polygon. Decodes each distinct polygon once per batch,
+    then vectorizes the ray cast over all its candidate points."""
     for pdf in pdf_iter:
         if len(pdf) == 0:
             yield pdf.drop(columns=["gpb"])
@@ -189,204 +407,6 @@ def _pip_refine(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     inside |= hit
             keep[idx] = inside
         yield pdf.loc[keep].drop(columns=["gpb"])
-
-
-def _make_closure_refine(pid2gpb: dict[int, bytes]):
-    """Refine kernel with the polygon payloads carried in the task closure
-    (serialized once per worker) instead of duplicated per candidate row —
-    Arrow batches then carry only (point cols, poly_id)."""
-    ring_cache: dict[int, list] = {}
-
-    def refine(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                rings = ring_cache.get(pid)
-                if rings is None:
-                    rings = ring_cache[pid] = geom.all_rings(pid2gpb[int(pid)])
-                pts = np.column_stack(
-                    [pdf["lon"].values[idx], pdf["lat"].values[idx]]
-                ).astype(np.float64)
-                inside = np.zeros(len(idx), dtype=bool)
-                for ring, is_hole in rings:
-                    hit = K.points_in_ring(pts, ring)
-                    if is_hole:
-                        inside &= ~hit
-                    else:
-                        inside |= hit
-                keep[idx] = inside
-            yield pdf.loc[keep]
-
-    return refine
-
-
-# Driver-side shard-classification memo: a production session runs the
-# same polygon layer against many point batches (and a bench/driver rep
-# loop runs the identical layer every rep) — re-classifying ~0.3 s of
-# single-core Python per call is pure replanning waste. Keyed by the
-# polygon BYTES (not object identity), capped small: the layers worth
-# caching are the handful a session reuses.
-_SHARD_CACHE: dict = {}
-_SHARD_CACHE_MAX = 8
-
-
-def _classified_shards_cached(polys: list, res: int, grid: str):
-    import hashlib
-
-    h = hashlib.md5()
-    for pid, gpb in polys:
-        h.update(str(pid).encode())
-        h.update(gpb)
-    key = (h.hexdigest(), res, grid)
-    got = _SHARD_CACHE.get(key)
-    if got is None:
-        shard_fn = (
-            sphere_classified_shards if grid == "sphere" else classified_shards
-        )
-        got = shard_fn(polys, res)
-        if len(_SHARD_CACHE) >= _SHARD_CACHE_MAX:
-            _SHARD_CACHE.pop(next(iter(_SHARD_CACHE)))
-        _SHARD_CACHE[key] = got
-    return got
-
-
-def point_in_polygon_join(
-    points: DataFrame,
-    polys_df: DataFrame,
-    res: int = cells.DEFAULT_RES,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    broadcast_polys: bool = True,
-    grid: str = "flat",
-    salt_threshold: int = 2_000_000,
-    n_salts: int = 16,
-    compact_interior: bool = True,
-    reuse_points: bool = False,
-) -> DataFrame:
-    """E2: rows of ``points`` paired with every polygon containing them.
-
-    Output: all point columns + poly_id. One shuffle (the cell equi-join) —
-    none at all when the polygon side broadcasts.
-
-    Broadcastable polygon sides take the cell-classified plan: covering
-    cells are split into *interior* (every point provably inside — resolved
-    by the JVM join alone, no Python) and *boundary* (exact ray-cast refine
-    over Arrow batches, polygons in the closure). At planet scale the
-    boundary fraction shrinks as perimeter/area, so the Python path touches
-    only an O(1/res) sliver of the candidates.
-
-    ``grid``: "flat" (equirectangular E1 cells) or "sphere" (cube-face
-    cells_sphere — uniform cell area everywhere, so polar-heavy corpora
-    don't concentrate into a handful of distorted cells). Results are
-    identical; only candidate generation changes.
-
-    ``reuse_points``: the broadcast plan fans out into the interior and
-    boundary branches, and Spark recomputes a non-exchange upstream once
-    PER BRANCH — if ``points`` is expensive (e.g. an image-decode
-    mapInPandas), that is a double scan of the fat source. True inserts an
-    explicit hash exchange on cell_id below the fan-out: Catalyst plans
-    ONE shuffle and a ReusedExchange for the second branch (pinned by
-    test_pip_reuse_points_single_upstream), so the upstream runs once and
-    only slim (point, cell) rows move twice. Leave False when points are
-    a cheap re-scannable source (pruned parquet scan / column math) —
-    there the extra shuffle costs more than the re-scan.
-    """
-    spark = points.sparkSession
-    if grid == "sphere":
-        from . import cells_sphere as SPH
-
-        pts = points.withColumn(
-            "cell_id", SPH.sphere_cell_id(F.col(lon_col), F.col(lat_col), res)
-        )
-    else:
-        pts = points.withColumn(
-            "cell_id", cells.cell_id(F.col(lon_col), F.col(lat_col), res)
-        )
-
-    if broadcast_polys:
-        if reuse_points:
-            pts = pts.repartition(F.col("cell_id"))
-        polys = [(r["poly_id"], bytes(r["gpb"])) for r in polys_df.select("poly_id", "gpb").collect()]
-        inside_rows, boundary_rows, pid2gpb = _classified_shards_cached(
-            polys, res, grid
-        )
-        shard_schema = "cell_id long, poly_id long"
-        if compact_interior and inside_rows:
-            # H3-compactCells analogue: 4 interior siblings collapse to
-            # their parent until fixpoint — the broadcast table shrinks
-            # from ~area/cell_area rows to ~perimeter/cell_width. Points
-            # probe their ancestor cell at every resolution present (an
-            # antichain per polygon, so multiplicity is unchanged; the
-            # ancestor probe is exact because both grids' index math is a
-            # clamped floor of a per-axis monotone map, and floor-division
-            # composes: floor(s*2^R) >> (R-r) == floor(s*2^r)).
-            if grid == "sphere":
-                from . import cells_sphere as SPH
-
-                inside_rows = SPH.sphere_compact_cells_py(inside_rows, res)
-                res_set = sorted({SPH.sphere_cell_res_py(c) for c, _ in inside_rows})
-
-                def _probe_at(r):
-                    return SPH.sphere_cell_id(F.col(lon_col), F.col(lat_col), r)
-
-            else:
-                inside_rows = cells.compact_cells_py(inside_rows, res)
-                res_set = sorted({cells.cell_res_py(c) for c, _ in inside_rows})
-
-                def _probe_at(r):
-                    return cells.cell_id(F.col(lon_col), F.col(lat_col), r)
-
-            inside_df = local_frame(spark, inside_rows, shard_schema)
-            probe = F.explode(F.array(*[_probe_at(r) for r in res_set]))
-            fast = (
-                pts.withColumn("probe_cell", probe)
-                .join(
-                    F.broadcast(inside_df),
-                    F.col("probe_cell") == inside_df["cell_id"],
-                    "inner",
-                )
-                .drop("probe_cell")
-                .drop(inside_df["cell_id"])
-            )
-        else:
-            inside_df = local_frame(spark, inside_rows, shard_schema)
-            fast = pts.join(F.broadcast(inside_df), "cell_id", "inner")
-        boundary_df = local_frame(spark, boundary_rows, shard_schema)
-        cand = pts.join(F.broadcast(boundary_df), "cell_id", "inner")
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields
-        )
-        refined = cand.mapInPandas(_make_closure_refine(pid2gpb), schema=out_schema)
-        return fast.unionByName(refined).drop("cell_id")
-
-    # huge polygon side: shuffle join with per-row payloads. Dense cells
-    # (urban cores) are exactly the heavy hitters SCALE.md flags on this
-    # path — the broadcast plan is skew-proof by construction, this one
-    # salts them explicitly: heavy point cells hash-spread over n_salts,
-    # matching shard rows replicated per salt (plans/skew.py).
-    from ..plans.skew import salted_cell_join
-
-    shards = (
-        sphere_shard_polygons(polys_df, res)
-        if grid == "sphere"
-        else shard_polygons(polys_df, res)
-    )
-    cand = salted_cell_join(
-        pts,
-        shards,
-        cell_col="cell_id",
-        threshold=salt_threshold,
-        n_salts=n_salts,
-        salt_src=lon_col,
-    )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields if f.name != "gpb"
-    )
-    refined = cand.mapInPandas(_pip_refine, schema=out_schema)
-    return refined.drop("cell_id")
 
 
 def point_in_polygon_bruteforce(

@@ -165,9 +165,7 @@ def _build_plan(
 
     rel_base = frames.relations
     rel_feats = (
-        rel_base.join(
-            rel_shapes.withColumnRenamed("rel_id", "id"), ["doc_id", "id"], "left"
-        )
+        rel_base.join(rel_shapes.drop("rel_id"), ["doc_id", "seq"], "left")
         .withColumn(
             "gpb",
             F.when(

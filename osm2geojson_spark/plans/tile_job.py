@@ -18,7 +18,8 @@ invocation per resume attempt drives the whole thing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import cells
@@ -40,10 +41,20 @@ def image_points(images: DataFrame, coarse_res: int) -> DataFrame:
 
 
 def tile_batch(
-    pts: DataFrame, polys_df: DataFrame, coarse_cell: int, res: int, tile_res: int
+    pts: DataFrame,
+    polys_df: DataFrame,
+    coarse_cell: int,
+    res: int,
+    tile_res: int,
+    rows_in: Observation | None = None,
 ) -> DataFrame:
-    """One batch: coarse-cell slice -> PIP join -> per-(poly, tile) rollup."""
+    """One batch: coarse-cell slice -> PIP join -> per-(poly, tile) rollup.
+
+    ``rows_in``, when given, counts the slice's rows as ``n`` in the same
+    pass: the PIP join scans the slice once."""
     sub = pts.filter(F.col("coarse") == coarse_cell).drop("coarse")
+    if rows_in is not None:
+        sub = sub.observe(rows_in, F.count(F.lit(1)).alias("n"))
     joined = point_in_polygon_join(sub, polys_df, res=res)
     return (
         joined.withColumn("tile", cells.cell_id(F.col("lon"), F.col("lat"), tile_res))
@@ -60,11 +71,11 @@ def run_tile_job(
     res: int = 6,
     tile_res: int = 9,
     coarse_res: int = 2,
-    count_rows_in: bool = True,
 ) -> dict:
     """Returns {"ran": [...], "skipped": [...]} (skipped = already committed
     by a previous attempt). Output at <out_root>/data/batch=<cell>/ plus the
-    lineage manifest at <out_root>/manifest/."""
+    lineage manifest at <out_root>/manifest/, whose ``rows_in`` is observed
+    during each batch's write, not counted by a job of its own."""
     pts = image_points(images, coarse_res).localCheckpoint(eager=False)
     man = ParquetManifest(out_root)
     job = ResumableJob(man)
@@ -72,16 +83,22 @@ def run_tile_job(
     n = 1 << coarse_res
     batch_ids = [str(cells.pack_cell_py(coarse_res, x, y)) for x in range(n) for y in range(n)]
 
-    rows_in = (
-        (lambda bid: pts.filter(F.col("coarse") == int(bid)).count())
-        if count_rows_in
-        else None
-    )
-    return job.run(
-        batch_ids,
-        lambda bid: tile_batch(pts, polys_df, int(bid), res, tile_res),
-        rows_in=rows_in,
-    )
+    observed: dict[str, Observation] = {}
+
+    def batch(bid: str) -> DataFrame:
+        observed[bid] = Observation()
+        return tile_batch(pts, polys_df, int(bid), res, tile_res, rows_in=observed[bid])
+
+    def rows_in(bid: str) -> int:
+        try:
+            return observed.pop(bid).get["n"]
+        except Py4JJavaError:
+            # no metrics: the planner cut the slice out of the final plan (an
+            # empty polygon layer, or AQE dropping a stage that output no
+            # rows), so this batch alone pays for a count of its own
+            return pts.filter(F.col("coarse") == int(bid)).count()
+
+    return job.run(batch_ids, batch, rows_in=rows_in)
 
 
 def read_tiles(spark: SparkSession, out_root: str) -> DataFrame:

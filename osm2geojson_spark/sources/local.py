@@ -31,10 +31,16 @@ def local_frame(
     verify = _make_type_verifier(schema)
     for row in rows:
         verify(row)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def arrow_table(rows: list[tuple], schema: T.StructType) -> pa.Table:
+    """``rows`` (tuples in ``schema`` field order) as a ``pyarrow.Table``
+    with the Spark schema's Arrow types, unchecked. Needs no session, so
+    executors can build Arrow output with it too."""
     arrow = to_arrow_schema(schema)
     columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(col, type=f.type) for col, f in zip(columns, arrow)],
         schema=arrow,
     )
-    return spark.createDataFrame(table, schema)

@@ -233,14 +233,6 @@ def synthetic_osm_frames(spark: SparkSession, n_rel: int):
 
 
 @pandas_udf(T.BinaryType())
-def _encode_image_udf(i: pd.Series, w: pd.Series, h: pd.Series) -> pd.Series:
-    out = []
-    for idx, ww, hh in zip(i, w, h):
-        out.append(imagecodec.encode_rawz(imagecodec.synth_pixels(int(idx), int(ww), int(hh))))
-    return pd.Series(out)
-
-
-@pandas_udf(T.BinaryType())
 def _encode_image_fmt_udf(i: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.Series:
     """Format-aware encoder: same deterministic pixels, container per row
     ('rawz' or real 'png' — functions/imagecodec.encode)."""

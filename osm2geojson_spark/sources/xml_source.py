@@ -183,10 +183,3 @@ def parse(xml_str: str) -> dict | None:
     return doc
 
 
-def xml_docs_to_elements(xml_docs) -> Iterator[dict]:
-    """Parse an iterable of XML document strings into element dicts
-    (executor-side helper for mapInPandas bulk ingestion)."""
-    for doc in xml_docs:
-        parsed = parse(doc)
-        if parsed:
-            yield from parsed["elements"]

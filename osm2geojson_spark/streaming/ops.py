@@ -156,8 +156,8 @@ def streaming_image_dedup(
 
 def stream_tile_assign(images: DataFrame, polys_df: DataFrame, res: int = 6) -> DataFrame:
     """Streaming form of the flagship spatial join: image stream -> phash
-    decode -> cell id -> stream-static broadcast join against the sharded
-    polygon side -> exact PIP refine (the same Arrow kernel as batch).
+    decode -> cell id -> stream-static broadcast join against the polygon
+    shard table -> exact PIP refine (the same JVM filter as batch).
     Stateless, so it scales with the stream rate; aggregation is left to the
     caller so the join itself stays append-mode.
 

@@ -220,3 +220,25 @@ def test_ways_sharing_an_id_resolve_their_own_nodes(spark):
         (11, [[1.0, 1.0], [0.0, 2.0]]),
         (11, [[0.0, 2.0], [0.0, 0.0]]),
     ]
+
+
+def test_relations_sharing_an_id_convert_their_own_members(spark):
+    """Two relation elements with the same id each convert from their own
+    member list; the members are not pooled by id."""
+    elements = [
+        _node(1, 0.0, 0.0), _node(2, 1.0, 1.0), _node(3, 0.0, 2.0),
+        _way(10, [1, 2]),
+        _way(11, [2, 3]),
+        _rel(100, "route", [("way", 10, "")]),
+        _rel(100, "route", [("way", 11, "")]),
+    ]
+    feats = convert_elements(spark, elements, filter_used_refs=False)
+    got = [
+        (f["properties"]["id"], f["geometry"])
+        for f in feats
+        if f["properties"]["type"] == "relation"
+    ]
+    assert got == [
+        (100, {"type": "LineString", "coordinates": [[0.0, 0.0], [1.0, 1.0]]}),
+        (100, {"type": "LineString", "coordinates": [[1.0, 1.0], [0.0, 2.0]]}),
+    ]

@@ -9,6 +9,7 @@ import pathlib
 import pytest
 
 import osm2geojson_spark
+from osm2geojson_spark.operators.spatial_join import SHARD_SCHEMA
 from osm2geojson_spark.sources.local import local_frame
 from osm2geojson_spark.sources.normalize import (
     NODES_SCHEMA,
@@ -56,6 +57,14 @@ CASES = {
     ),
     "others": (OTHERS_SCHEMA, [("d", 0, "area", 5), ("d", 1, None, None)]),
     "shards": ("cell_id long, poly_id long", [(1 << 62, 1), (-1, None)]),
+    "pip_shards": (
+        SHARD_SCHEMA,
+        [
+            (1, 2, None),
+            (3, 4, [(False, True, []), (True, False, [(-0.0, NAN, 1.5, -2.25), (0.0, 1.0, 2.0, 3.0)])]),
+            (5, 6, []),
+        ],
+    ),
     "polygons": (
         "poly_id long, gpb binary, minx double, miny double, maxx double, maxy double",
         [(1, bytearray(b"\x00\x01\xff"), -0.0, NAN, 1.0, 2.0), (2, None, 0.0, 0.0, 0.0, 0.0)],

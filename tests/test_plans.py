@@ -24,13 +24,15 @@ def _plan(df) -> str:
 
 def test_pip_join_broadcasts_polygons(spark):
     plan = _plan(E.queries()["pip_join"](spark, SF_DIR))
-    # two broadcast joins (interior fast path + boundary refine), no
-    # sort-merge, no shuffle on the point side (both Exchanges broadcast)
-    assert plan.count("BroadcastHashJoin") == 2
+    # one broadcast join against the shard table and a JVM refine: no
+    # sort-merge, no shuffle on the point side (the one Exchange is the
+    # broadcast), no second branch and no Python
+    assert plan.count("BroadcastHashJoin") == 1
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
-    assert plan.count("Exchange") == 2 and plan.count("BroadcastExchange") == 2
-    assert plan.count("MapInPandas") == 1  # refine only on the boundary branch
+    assert plan.count("Exchange") == 1 and plan.count("BroadcastExchange") == 1
+    assert "Union" not in plan
+    assert "MapInPandas" not in plan and "Python" not in plan
 
 
 def test_regional_revenue_pushdown_and_broadcast(spark):

@@ -161,6 +161,163 @@ def test_pip_respects_holes(spark):
     assert got == {2}  # 1 in hole, 3 outside
 
 
+def _edge_case_polys():
+    """Rectangles with every vertex on a res-4 flat grid line, a polygon
+    with two holes, a multipolygon with two parts in one cell, a 97-gon
+    reaching toward the pole, the whole world, and the issue-35 relation."""
+    import json
+    import os
+
+    def rect(x0, y0, x1, y1):
+        return [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+
+    ang = np.linspace(0.0, 2.0 * np.pi, 98)
+    gon = np.column_stack([20.0 + 40.0 * np.cos(ang), 72.0 + 14.0 * np.sin(ang)])
+    gon[-1] = gon[0]
+    with open(os.path.join(os.path.dirname(__file__), "data", "issue-35.geojson")) as fh:
+        (feat,) = json.load(fh)["features"]
+    return [
+        (1, geom.polygon([rect(-45.0, -22.5, 45.0, 22.5)])),
+        (2, geom.polygon([rect(-22.5, -11.25, 0.0, 0.0)])),
+        (3, geom.polygon([
+            rect(-90.0, -60.0, 90.0, 60.0),
+            rect(-10.0, -10.0, 10.0, 10.0),
+            rect(50.0, 20.0, 70.0, 45.0),
+        ])),
+        (4, geom.multipolygon([
+            [[[100.1, 10.1], [100.4, 10.1], [100.4, 10.4], [100.1, 10.1]]],
+            [[[100.5, 10.5], [101.0, 10.5], [101.0, 10.9], [100.5, 10.5]]],
+        ])),
+        (5, geom.polygon([gon])),
+        (6, geom.polygon([rect(-180.0, -90.0, 180.0, 90.0)])),
+        (7, geom.multipolygon(feat["geometry"]["coordinates"])),
+    ]
+
+
+@pytest.fixture(scope="module")
+def edge_case_pip(spark):
+    """(points, polygons, brute-force pairs) for the edge-case fixture."""
+    from osm2geojson_spark.operators.spatial_join import point_in_polygon_bruteforce
+
+    polys = _edge_case_polys()
+    rng = np.random.default_rng(35)
+    pts = list(zip(rng.uniform(-180, 180, 1500), rng.uniform(-90, 90, 1500)))
+    for _, g in polys:
+        x0, y0, x1, y1 = geom.bbox(g)
+        pts += zip(rng.uniform(x0, x1, 400), rng.uniform(y0, y1, 400))
+    # grid-line crossings, the rectangles' own vertices and the world's edge
+    pts += [(x, y) for x in np.arange(-180.0, 180.1, 22.5) for y in np.arange(-90.0, 90.1, 11.25)]
+    pts += [(x, y) for x in (-180.0, 180.0) for y in (-90.0, -45.0, 0.0, 45.0, 90.0)]
+    pts += [(x, y) for x in (-90.0, 0.0, 90.0) for y in (-90.0, 90.0)]
+    points = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "pid long, lon double, lat double",
+    ).cache()
+    polys_df = polygons_to_df(spark, polys)
+    brute = {
+        (r["pid"], r["poly_id"])
+        for r in point_in_polygon_bruteforce(points, polys_df).collect()
+    }
+    return points, polys_df, brute
+
+
+@pytest.mark.parametrize("grid", ["flat", "sphere"])
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_pip_edge_shards_match_bruteforce(spark, edge_case_pip, grid, broadcast):
+    """The JVM edge-shard refine equals the NumPy ray cast on grid-aligned
+    vertices, holes, a two-part cell, a 97-gon, issue-35's polygons and
+    points at lon +-180 / lat +-90, on both grids and both join paths."""
+    points, polys_df, brute = edge_case_pip
+    got = point_in_polygon_join(
+        points, polys_df, res=4, grid=grid, broadcast_polys=broadcast
+    ).select("pid", "poly_id").collect()
+    assert len(got) == len(set(got))
+    assert {(r["pid"], r["poly_id"]) for r in got} == brute
+    assert {p for _, p in brute} == {1, 2, 3, 4, 5, 6, 7}
+
+
+def test_cell_rings_fold_equals_ray_cast():
+    """_cell_rings keeps, per cell, exactly what the ray cast needs: its
+    edges and parity folded as the JVM filter folds them give the full
+    kernel's answer for points anywhere in the cell, edges included."""
+    from osm2geojson_spark.operators.spatial_join import _CELL_EPS, _cell_rings
+
+    rng = np.random.default_rng(8)
+    n = 1 << 6
+    for _, g in _edge_case_polys():
+        rings = geom.all_rings(g)
+        # points just either side of every edge: the ones a wrongly dropped
+        # edge would misclassify
+        mid = np.vstack([(r[:-1] + r[1:]) / 2.0 for r, _ in rings])
+        near = np.vstack([mid + [d, 0.0] for d in (-1e-6, 1e-6)])
+        x0, y0, x1, y1 = geom.bbox(g)
+        for cx in range(int((x0 + 180) / 360 * n), min(n, int((x1 + 180) / 360 * n) + 1)):
+            for cy in range(int((y0 + 90) / 180 * n), min(n, int((y1 + 90) / 180 * n) + 1)):
+                bx0, bx1 = -180 + cx * 360 / n, -180 + (cx + 1) * 360 / n
+                by0, by1 = -90 + cy * 180 / n, -90 + (cy + 1) * 180 / n
+                pts = np.column_stack([rng.uniform(bx0, bx1, 16), rng.uniform(by0, by1, 16)])
+                inb = (near[:, 0] >= bx0) & (near[:, 0] <= bx1) & (near[:, 1] >= by0) & (near[:, 1] <= by1)
+                pts = np.vstack([pts, near[inb], [[bx0, by0], [bx1, by1], [bx0, by1], [bx1, by0]]])
+                want = np.zeros(len(pts), dtype=bool)
+                for ring, hole in rings:
+                    hit = K.points_in_ring(pts, ring)
+                    want = want & ~hit if hole else want | hit
+                got = np.zeros(len(pts), dtype=bool)
+                shard = _cell_rings(
+                    rings, bx0 - _CELL_EPS, by0 - _CELL_EPS, bx1 + _CELL_EPS, by1 + _CELL_EPS
+                )
+                for hole, parity, edges in shard:
+                    hit = np.full(len(pts), parity)
+                    for ex1, ey1, ex2, ey2 in edges:
+                        x, y = pts[:, 0], pts[:, 1]
+                        with np.errstate(divide="ignore", invalid="ignore"):
+                            cross = ((ey1 > y) != (ey2 > y)) & (
+                                x < ex1 + (y - ey1) * (ex2 - ex1) / (ey2 - ey1)
+                            )
+                        hit ^= cross
+                    got = got & ~hit if hole else got | hit
+                assert (got == want).all(), (cx, cy)
+
+
+def _python_nodes_and_leaves(plan):
+    """[(python exec node name, names of the leaves under it)] of an
+    executed plan, walked through py4j."""
+
+    def children(node):
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def leaves(node):
+        kids = children(node)
+        return [node.toString()] if not kids else [x for k in kids for x in leaves(k)]
+
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if "Python" in name or "InPandas" in name or "InArrow" in name:
+            out.append((name, leaves(node)))
+        stack.extend(children(node))
+    return out
+
+
+@pytest.mark.parametrize("grid", ["flat", "sphere"])
+def test_pip_plan_python_only_under_polygon_side(spark, points, grid):
+    """Broadcast path: no Python exec node and no Union anywhere in the
+    executed plan. Shuffle path: Python runs only under the polygon side
+    (the executor-side shard build), never over the points."""
+    polys = polygons_to_df(spark, [(1, _triangle_with_hole())])
+    bc = point_in_polygon_join(points, polys, res=5, grid=grid)
+    plan = bc._jdf.queryExecution().executedPlan()
+    assert _python_nodes_and_leaves(plan) == []
+    assert "Union" not in plan.toString()
+    sh = point_in_polygon_join(points, polys, res=5, grid=grid, broadcast_polys=False)
+    found = _python_nodes_and_leaves(sh._jdf.queryExecution().executedPlan())
+    assert found
+    for _, leaves in found:
+        assert all("gpb" in leaf for leaf in leaves), leaves
+
+
 def test_polygon_sharding_covers_bbox(spark):
     polys = polygons_to_df(spark, [(1, _triangle_with_hole())])
     n = shard_polygons(polys, 5).count()
@@ -1193,27 +1350,31 @@ def test_covering_cells_near_full_band_no_duplicates(spark):
             assert got in cov1, (res, lon)
 
 
-def test_pip_reuse_points_single_upstream(spark, points):
-    """reuse_points=True must (a) return the identical pair set and
-    (b) plan the point side as ONE exchange + a ReusedExchange for the
-    second fan-out branch — so an expensive upstream (image decode) is
-    computed once, not once per branch (the round-4 4-core scaling
-    finding: the double-scan was the dominant non-scaling cost)."""
-    from osm2geojson_spark.functions import geom as G
-    from osm2geojson_spark.operators.spatial_join import (
-        point_in_polygon_join,
-        polygons_to_df,
-    )
+def test_pip_scans_points_once(spark):
+    """The PIP join reads its point source once: an expensive upstream
+    (here a Python pass standing in for an image decode) appears once in
+    the executed plan, with no Union and no reused exchange, and the pairs
+    equal the brute-force oracle."""
+    from osm2geojson_spark.operators.spatial_join import point_in_polygon_bruteforce
 
-    sq = G.polygon([[[-50, -30], [60, -30], [60, 45], [-50, 45], [-50, -30]]])
+    def decode(batches):
+        yield from batches
+
+    src = spark.range(0, 2000).select(
+        F.col("id").alias("pid"),
+        SYN.lon_expr(F.col("id"), (-60.0, -40.0, 70.0, 50.0)).alias("lon"),
+        SYN.lat_expr(F.col("id"), (-60.0, -40.0, 70.0, 50.0)).alias("lat"),
+    )
+    pts = src.mapInPandas(decode, schema=src.schema)
+    sq = geom.polygon([[[-50, -30], [60, -30], [60, 45], [-50, 45], [-50, -30]]])
     polys = polygons_to_df(spark, [(1, sq)])
-    a = point_in_polygon_join(points, polys, res=6)
-    b = point_in_polygon_join(points, polys, res=6, reuse_points=True)
-    ra = sorted(r["pid"] for r in a.collect())
-    rb = sorted(r["pid"] for r in b.collect())
-    assert ra == rb and ra
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan
+    joined = point_in_polygon_join(pts, polys, res=6)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1 and plan.count("Range (") == 1, plan
+    assert "Union" not in plan and "ReusedExchange" not in plan, plan
+    got = sorted(r["pid"] for r in joined.collect())
+    want = sorted(r["pid"] for r in point_in_polygon_bruteforce(src, polys).collect())
+    assert got == want and got
 
 
 def test_knn_graph_matches_bruteforce(spark):

@@ -54,7 +54,7 @@ def test_tile_job_resume_equivalence(spark, tmp_path):
     assert partial["ran"] == all_ids[:5]
 
     # resume: the full job skips the committed 5, runs the remaining 11
-    res = tile_job.run_tile_job(spark, imgs, polys, root, count_rows_in=True)
+    res = tile_job.run_tile_job(spark, imgs, polys, root)
     assert res["skipped"] == all_ids[:5]
     assert len(res["ran"]) == 11
 
@@ -74,9 +74,21 @@ def test_tile_job_idempotent_rerun(spark, tmp_path):
     imgs = SYN.synthetic_images(spark, 500, with_bytes=False)
     polys = _polys(spark)
     root = str(tmp_path / "tiles2")
-    r1 = tile_job.run_tile_job(spark, imgs, polys, root, count_rows_in=False)
+    r1 = tile_job.run_tile_job(spark, imgs, polys, root)
     assert len(r1["ran"]) == 16 and not r1["skipped"]
     first = sorted(map(tuple, tile_job.read_tiles(spark, root).collect()))
-    r2 = tile_job.run_tile_job(spark, imgs, polys, root, count_rows_in=False)
+    r2 = tile_job.run_tile_job(spark, imgs, polys, root)
     assert len(r2["skipped"]) == 16 and not r2["ran"]
     assert sorted(map(tuple, tile_job.read_tiles(spark, root).collect())) == first
+
+
+def test_tile_job_rows_in_without_polygons(spark, tmp_path):
+    """With an empty polygon layer the planner removes the observed slice
+    from every batch's plan; rows_in is still each batch's input count."""
+    imgs = SYN.synthetic_images(spark, 500, with_bytes=False)
+    root = str(tmp_path / "tiles3")
+    r = tile_job.run_tile_job(spark, imgs, polygons_to_df(spark, []), root)
+    assert len(r["ran"]) == 16
+    metrics = ParquetManifest(root).read_metrics()
+    assert sum(m["rows_in"] for m in metrics) == 500
+    assert sum(m["rows_out"] for m in metrics) == 0

@@ -115,9 +115,7 @@ def _child(argv: list[str]) -> None:
         )
         if variant == "decode":  # isolate scan+Arrow+python-decode stage
             return pts.count()
-        # reuse_points: the PIP fan-out would otherwise re-run the decode
-        # scan once per branch — ReusedExchange computes it once
-        joined = point_in_polygon_join(pts, polys_df, res=7, reuse_points=True)
+        joined = point_in_polygon_join(pts, polys_df, res=7)
         if variant == "pip":  # decode + PIP, no rollup shuffle
             return joined.count()
         return (

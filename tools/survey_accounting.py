@@ -21,13 +21,6 @@ sys.path.insert(0, REPO)
 
 def module_of(name: str, fn) -> str:
     doc = fn.__doc__ or ""
-    pats = [
-        r"operators/([a-z_0-9]+)\.py",
-        r"operators/([a-z_0-9]+)\.",
-        r"\(([a-z_0-9]+)\.[a-z_0-9]+\)",
-        r"\(([a-z_0-9]+)\.[a-z_0-9_]+:",
-        r"streaming/ops",
-    ]
     mm = re.search(r"\(?(?:operators|streaming|functions|plans)[/.]([a-z_0-9]+)", doc)
     if mm:
         return "streaming" if mm.group(1) == "ops" else mm.group(1)
