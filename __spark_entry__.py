@@ -5040,39 +5040,6 @@ FROM pc GROUP BY 1, 2
 """
 
 
-def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X52 (graph.bfs_hops): bounded multi-source BFS over a deterministic
-    sparse road graph on part keys (two modular out-edges per node,
-    traversed undirected) from the k % 97 == 0 source set, 4 hops.
-    Driver-coordinated frontier rounds, one shuffle each, early exit; the
-    oracle is a DuckDB recursive CTE with min-hop semantics."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 131 + 17) % n).alias("dst"))
-    )
-    sources = part.filter(k % 97 == 0).select(k.alias("node"))
-    return G.bfs_hops(edges, sources, max_hops=4, directed=False)
-
-
-def _bfs_hops_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey AS src,"
-        " (p_partkey * 131 + 17) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-    )
-    sources = "SELECT p_partkey AS node FROM part WHERE p_partkey % 97 = 0"
-    return G.bfs_hops_sql(edges, sources, max_hops=4, directed=False)
-
-
 def q_resample_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X54 (trajectory.resample_tracks): per-user trajectory resampling
     onto the 6-hour epoch grid by exact linear interpolation — integer-
@@ -5918,54 +5885,6 @@ FROM eq GROUP BY i, w
 """
 
 
-def q_isochrone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X66 (graph.isochrone_cells over graph.shortest_dists): service-area
-    coverage — bounded weighted shortest paths from the k % 97 == 0
-    sources over the part road graph, nodes placed at their synthetic
-    coordinates, cells at res 5 tagged with the smallest cost tier
-    (15/35/80) that reaches them. Cell-set isochrones are the
-    scale-correct shape (polygon outlines are a downstream polygonize);
-    everything is integer-exact so the recursive-CTE + min/bucket oracle
-    hash-matches."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 131 + 17) % n).alias("dst"))
-    ).withColumn(
-        "w", (F.lit(1) + (F.col("src") * 3 + F.col("dst") * 5) % 20).cast("long")
-    )
-    sources = part.filter(k % 97 == 0).select(k.alias("node"))
-    dists = G.shortest_dists(edges, sources, max_hops=4, directed=False)
-    coords = part.select(
-        k.alias("node"), _lon(k).alias("lon"), _lat(k).alias("lat")
-    )
-    return G.isochrone_cells(dists, coords, tiers=[15, 35, 80], res=5)
-
-
-def _isochrone_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT src, dst, CAST(1 + (src * 3 + dst * 5) % 20 AS BIGINT) AS w FROM ("
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey AS src,"
-        " (p_partkey * 131 + 17) % (SELECT COUNT(*) FROM part) AS dst FROM part) e"
-    )
-    sources = "SELECT p_partkey AS node FROM part WHERE p_partkey % 97 = 0"
-    dists = G.shortest_dists_sql(edges, sources, max_hops=4, directed=False)
-    coords = (
-        f"SELECT p_partkey AS node, {SYN.lon_sql('p_partkey')} AS lon,"
-        f" {SYN.lat_sql('p_partkey')} AS lat FROM part"
-    )
-    return G.isochrone_cells_sql(dists, coords, tiers=[15, 35, 80], res=5)
-
-
 def q_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X65 (spatial_join.bbox_intersect_join): image-footprint x AOI
     rectangle-intersection join — supplier scene footprints (0.5-4 deg)
@@ -6110,64 +6029,6 @@ def _adaptive_bins_sql() -> str:
         f"SELECT cell_id, res, CAST(count(*) AS BIGINT) AS n FROM ({inner}) q"
         f" GROUP BY cell_id, res"
     )
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X61 (graph.pagerank_int): 3 rounds of fixed-point integer PageRank
-    over the directed deterministic road graph on part keys — node
-    importance / intersection centrality. One combinable groupBy(dst)
-    shuffle per round, degree join precomputed once; truncating int64
-    division makes the score bit-identical across partitionings and
-    engines, so the unrolled-CTE oracle hash-matches exactly."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 131 + 17) % n).alias("dst"))
-    )
-    return G.pagerank_int(edges, n_iters=3)
-
-
-def _pagerank_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey AS src,"
-        " (p_partkey * 131 + 17) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-    )
-    return G.pagerank_sql(edges, n_iters=3)
-
-
-def _dense_graph(spark: SparkSession, sf_dir: str):
-    """Deterministic dense simple graph on a FIXED 211-node universe:
-    every part row contributes two modular edges whose endpoints mix two
-    COPRIME residues (k mod 211 and k mod 199), so the distinct edge set
-    has period 211*199 in the key and genuinely densifies with sf
-    (sf0.001: ~400 edges / 211 nodes; sf0.01: ~4000) — rich in triangles
-    and nontrivial k-cores at every scale."""
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    k = F.col("p_partkey")
-    return part.select(
-        (k % 211).alias("src"), (((k % 199) * 7 + 3) % 211).alias("dst")
-    ).unionByName(
-        part.select(
-            (k % 211).alias("src"), (((k % 199) * 131 + 17) % 211).alias("dst")
-        )
-    )
-
-
-_DENSE_GRAPH_SQL = (
-    "SELECT p_partkey % 211 AS src,"
-    " ((p_partkey % 199) * 7 + 3) % 211 AS dst"
-    " FROM part UNION ALL SELECT p_partkey % 211 AS src,"
-    " ((p_partkey % 199) * 131 + 17) % 211 AS dst FROM part"
-)
 
 
 def q_resize_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6676,57 +6537,6 @@ def _pps_sample_sql() -> str:
     )
 
 
-def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X77 (graph.k_core): bounded k-core peeling (k=3, 8 synchronous
-    rounds, early-exit) over the dense deterministic 211-node graph —
-    the density-hierarchy / cohesive-subgraph primitive. Per round one
-    map-side-combinable degree count + a survivor semi-join on the
-    only-shrinking edge relation; the oracle unrolls identical rounds."""
-    from osm2geojson_spark.operators import graph as G
-
-    return G.k_core(_dense_graph(spark, sf_dir), k=3, n_rounds=8)
-
-
-def _k_core_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    return G.k_core_sql(_DENSE_GRAPH_SQL, k=3, n_rounds=8)
-
-
-def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X78 (graph.triangle_count): exact per-node triangle counting via
-    the oriented (low-id -> high-id) two-hop join — each triangle found
-    exactly once, credited to all three corners. Two equi-join shuffles
-    + one combinable rollup; orientation caps the candidate volume."""
-    from osm2geojson_spark.operators import graph as G
-
-    return G.triangle_count(_dense_graph(spark, sf_dir))
-
-
-def _triangles_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    return G.triangle_count_sql(_DENSE_GRAPH_SQL)
-
-
-def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X173 (graph.link_scores): neighborhood link prediction over the
-    dense modular graph — every non-adjacent pair sharing >= 2 neighbors
-    scored with common-neighbor count, resource-allocation index (exact
-    Σ floor(1e6/deg) micro-units — the log-free Adamic-Adar sibling) and
-    Jaccard as an exact integer fraction. Wedge self-join + combinable
-    rollup; integer end to end."""
-    from osm2geojson_spark.operators import graph as G
-
-    return G.link_scores(_dense_graph(spark, sf_dir), min_common=2)
-
-
-def _link_prediction_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    return G.link_scores_sql(_DENSE_GRAPH_SQL, min_common=2)
-
-
 def q_st_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X60 (spatial_join.spatiotemporal_join): contact/encounter join —
     event pairs within 300 km (haversine) AND within 4 hours, aid < bid.
@@ -6806,45 +6616,6 @@ def _kde_sql() -> str:
         f" {SYN.lat_sql('c_custkey')} AS lat FROM customer"
     )
     return kde_surface_sql(pts, 500_000.0, res=6)
-
-
-def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X58 (graph.shortest_dists): bounded weighted shortest paths
-    (travel-time isochrones) over the same deterministic road graph as
-    bfs_hops, with edge weights 1 + (src*3 + dst*5) % 20 — Bellman-Ford
-    rounds, one relax shuffle each, exact two-scalar fixed-point probe;
-    the oracle enumerates walk states in a DuckDB recursive CTE and takes
-    min(dist) per node."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"),
-        ((k * 7 + 3) % n).alias("dst"),
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 131 + 17) % n).alias("dst"))
-    )
-    edges = edges.withColumn(
-        "w", (F.lit(1) + (F.col("src") * 3 + F.col("dst") * 5) % 20).cast("long")
-    )
-    sources = part.filter(k % 97 == 0).select(k.alias("node"))
-    return G.shortest_dists(edges, sources, max_hops=4, directed=False)
-
-
-def _shortest_path_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT src, dst, CAST(1 + (src * 3 + dst * 5) % 20 AS BIGINT) AS w FROM ("
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey AS src,"
-        " (p_partkey * 131 + 17) % (SELECT COUNT(*) FROM part) AS dst FROM part) e"
-    )
-    sources = "SELECT p_partkey AS node FROM part WHERE p_partkey % 97 = 0"
-    return G.shortest_dists_sql(edges, sources, max_hops=4, directed=False)
 
 
 def _geofences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7257,49 +7028,6 @@ SELECT hex, q, r,
        n
 FROM qr
 """
-
-
-def q_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X92 (graph.label_propagation): 3 synchronous rounds of
-    deterministic label-propagation community detection over a
-    block-structured road graph on part keys (8-node ring+chord blocks,
-    sparse bridges every 16th node). Min-label tie-break + synchronous
-    update = pure function of the edge set; the oracle unrolls the
-    identical rounds."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    blk = (k - k % 8).alias("blk")
-    ring = part.select(
-        k.alias("src"), ((k - k % 8) + (k % 8 + 1) % 8).alias("dst")
-    )
-    chord = part.select(
-        k.alias("src"), ((k - k % 8) + (k % 8 + 3) % 8).alias("dst")
-    )
-    bridge = part.filter(k % 16 == 0).select(
-        k.alias("src"), ((k + 8) % n).alias("dst")
-    )
-    return G.label_propagation(
-        ring.unionByName(chord).unionByName(bridge), n_iters=3
-    )
-
-
-def _lpa_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT p_partkey AS src,"
-        " (p_partkey - p_partkey % 8) + (p_partkey % 8 + 1) % 8 AS dst"
-        " FROM part"
-        " UNION ALL SELECT p_partkey,"
-        " (p_partkey - p_partkey % 8) + (p_partkey % 8 + 3) % 8 FROM part"
-        " UNION ALL SELECT p_partkey,"
-        " (p_partkey + 8) % (SELECT count(*) FROM part) FROM part"
-        " WHERE p_partkey % 16 = 0"
-    )
-    return G.label_propagation_sql(edges, n_iters=3)
 
 
 def q_chaikin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8594,23 +8322,6 @@ _INTEGRAL_BOXES = [
 ]
 
 
-def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X226 (graph.clustering_coeff): per-node local clustering
-    coefficient over the dense modular graph — 2*tri/(deg*(deg-1)) as
-    the exact integer rational with one pinned division, deg<2 nodes 0
-    by the networkx convention. Degree rollup + the oriented two-hop
-    triangle closure; the cohesion feature for bot/spam graph gates."""
-    from osm2geojson_spark.operators import graph as G
-
-    return G.clustering_coeff(_dense_graph(spark, sf_dir))
-
-
-def _clustering_coeff_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    return G.clustering_coeff_sql(_DENSE_GRAPH_SQL)
-
-
 def q_color_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X224 (multimodal.median_cut_palette): depth-2 median-cut
     palettes over 30 synthetic 16x16 RGB pixel tables (three coprime
@@ -8690,21 +8401,6 @@ def _anchor_assign_sql() -> str:
         " (p_partkey * 29) % 40 + 10 + p_partkey % 7 AS y1"
         " FROM part WHERE p_partkey < 30"
     )
-
-
-def q_squares(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X219 (graph.square_count): exact 4-cycle census of the dense
-    modular graph via the diagonal co-degree identity
-    sum C(codeg,2)/2 — one oriented wedge join + a combinable rollup."""
-    from osm2geojson_spark.operators import graph as G
-
-    return G.square_count(_dense_graph(spark, sf_dir))
-
-
-def _squares_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    return G.square_count_sql(_DENSE_GRAPH_SQL)
 
 
 def q_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8810,33 +8506,6 @@ WHERE rnk <= 2
 """
 
 
-def q_tree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X213 (graph.tree_rollup): recursive hierarchy rollup over a
-    2-root ternary forest on 200 customer-keyed nodes (parent =
-    (n-2)//3, hash weights) — depth/root/subtree count+sum via
-    pointer-doubled ancestor closure; recursive-CTE twin."""
-    from osm2geojson_spark.operators import graph as G
-
-    n = F.col("c_custkey")
-    nodes = _t(spark, sf_dir, "customer").filter(n < 200).select(
-        n.alias("node_id"),
-        F.when(n >= 2, F.floor((n - 2) / 3).cast("long")).alias("parent_id"),
-        ((n * 7919) % 100).alias("w"),
-    )
-    return G.tree_rollup(nodes)
-
-
-def _tree_rollup_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    return G.tree_rollup_sql(
-        "SELECT c_custkey AS node_id,"
-        " CASE WHEN c_custkey >= 2 THEN (c_custkey - 2) // 3 END AS parent_id,"
-        " (c_custkey * 7919) % 100 AS w"
-        " FROM customer WHERE c_custkey < 200"
-    )
-
-
 def q_iou_track(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X212 (boxes.iou_track): SORT-style IoU tracking over 10 videos x
     12 frames — 3 linearly drifting 8x8 objects per video with
@@ -8931,21 +8600,6 @@ FROM (
 )
 """
     return haar_energy_sql(px)
-
-
-def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X209 (graph.degree_assortativity): Newman degree assortativity
-    of the dense modular graph — exact int64 stub sums, one IEEE
-    division; NULL-guarded for regular graphs."""
-    from osm2geojson_spark.operators import graph as G
-
-    return G.degree_assortativity(_dense_graph(spark, sf_dir))
-
-
-def _assortativity_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    return G.degree_assortativity_sql(_DENSE_GRAPH_SQL)
 
 
 def q_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10392,38 +10046,6 @@ FROM agg
 """
 
 
-def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X153 (graph.hits_int): 2 rounds of fixed-point integer HITS
-    (hubs and authorities) over the directed deterministic graph on part
-    keys — PageRank's link-analysis dual. Order-free int64 sums +
-    truncating max-normalization make scores bit-identical across
-    partitionings and engines; the unrolled-CTE oracle hash-matches
-    exactly."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 131 + 17) % n).alias("dst"))
-    )
-    return G.hits_int(edges, n_iters=2)
-
-
-def _hits_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey AS src,"
-        " (p_partkey * 131 + 17) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-    )
-    return G.hits_sql(edges, n_iters=2)
-
-
 def q_geary_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X152 (spatial_stats.gearys_c): global Geary's C of customer-point
     counts over the occupied-cell rook lattice at res 4 — Moran's I's
@@ -10827,46 +10449,6 @@ def _str_partition_sql() -> str:
     )
 
 
-def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X251 (graph.rich_club): rich-club coefficient curve over the
-    dense modular graph — hub-interlink density phi(k) for every degree
-    threshold, exact micro quotients from two histogram suffix scans;
-    the bot-ring / citation-cartel diagnostic."""
-    from osm2geojson_spark.operators.graph import rich_club
-
-    return rich_club(_dense_graph(spark, sf_dir))
-
-
-def _rich_club_sql() -> str:
-    from osm2geojson_spark.operators.graph import rich_club_sql
-
-    return rich_club_sql(_DENSE_GRAPH_SQL)
-
-
-def q_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X248 (graph.label_spread): frozen-frontier semi-supervised label
-    spreading over the dense modular graph — seeds are nodes 0..3
-    labeled by parity, 4 rounds of majority votes (ties to smallest
-    label); the moderation/topic weak-supervision expansion gate."""
-    from osm2geojson_spark.operators.graph import label_spread
-
-    seeds = spark.createDataFrame(
-        [(0, 10), (1, 20), (2, 10), (3, 20)], "node long, label long"
-    )
-    return label_spread(_dense_graph(spark, sf_dir), seeds, rounds=4)
-
-
-def _label_spread_sql() -> str:
-    from osm2geojson_spark.operators.graph import label_spread_sql
-
-    return label_spread_sql(
-        _DENSE_GRAPH_SQL,
-        "SELECT * FROM (VALUES (0, 10), (1, 20), (2, 10), (3, 20))"
-        " AS s(node, label)",
-        rounds=4,
-    )
-
-
 def q_hilbert_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X247 (cells.hilbert_ranges): Hilbert range planning — the bbox
     (-60,-30,60,40) at res 6 as minimal contiguous key intervals (the
@@ -10934,15 +10516,14 @@ FROM (SELECT unnest(range(0, 1024)) AS i)
 
 
 def q_flow_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X243 (composition: geostat.flow_direction -> graph.tree_rollup):
+    """X243 (composition: geostat.flow_direction -> geostat.tree_rollup):
     D8 FLOW ACCUMULATION over the shared 32x32 DEM — each cell's
     upstream contributing-cell count (the hydrology raster classic) is
     exactly the subtree size of the D8 drainage forest (parent =
     steepest-descent neighbor, sinks are roots), so the pointer-doubled
     ancestor closure computes it with no new kernel. subtree_w carries
     the upstream elevation sum as a free checksum."""
-    from osm2geojson_spark.operators.geostat import flow_direction
-    from osm2geojson_spark.operators.graph import tree_rollup
+    from osm2geojson_spark.operators.geostat import flow_direction, tree_rollup
 
     flow = flow_direction(_dem32(spark))
     nodes = flow.select(
@@ -10957,7 +10538,7 @@ def q_flow_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _flow_accum_sql() -> str:
-    from osm2geojson_spark.operators.graph import tree_rollup_sql
+    from osm2geojson_spark.operators.geostat import tree_rollup_sql
 
     cut = _FLOW_DIR_SQL.index("\nSELECT flow.x")
     flow_with = _FLOW_DIR_SQL[_FLOW_DIR_SQL.index("WITH") + 4 : cut]
@@ -11205,42 +10786,6 @@ def _f2_sketch_sql() -> str:
     from osm2geojson_spark.operators.sketch import ams_f2_sql
 
     return ams_f2_sql("SELECT o_custkey FROM orders", "o_custkey")
-
-
-def q_clique4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X268 (graph.four_clique_count): per-node 4-clique participation
-    on the dense modular graph — triangle_count's oriented two-hop
-    closure extended by a fourth all-adjacent corner, exactly one
-    materialization per K4."""
-    from osm2geojson_spark.operators.graph import four_clique_count
-
-    return four_clique_count(_dense_graph(spark, sf_dir))
-
-
-def _clique4_sql() -> str:
-    from osm2geojson_spark.operators.graph import four_clique_count_sql
-
-    return four_clique_count_sql(_DENSE_GRAPH_SQL)
-
-
-def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X269 (graph.personalized_pagerank): random walk with restart
-    onto seed nodes {0,3,7,11} of the dense modular graph — seeded
-    proximity ranking, bit-exact truncating int64 rounds (pagerank_int
-    scheme with a seed-only restart vector)."""
-    from osm2geojson_spark.operators.graph import personalized_pagerank
-
-    seeds = spark.createDataFrame([(0,), (3,), (7,), (11,)], "node long")
-    return personalized_pagerank(_dense_graph(spark, sf_dir), seeds)
-
-
-def _ppr_sql() -> str:
-    from osm2geojson_spark.operators.graph import personalized_pagerank_sql
-
-    return personalized_pagerank_sql(
-        _DENSE_GRAPH_SQL,
-        "SELECT unnest([0, 3, 7, 11]) AS node",
-    )
 
 
 def q_bearing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11593,7 +11138,7 @@ def _kll_quantiles_sql() -> str:
 def q_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X284 (geostat.cost_distance): least-cost accumulation over the
     shared 32x32 DEM from 4 corner-quadrant seeds — per-step cost
-    1 + min(|Δz|, 3), composed over graph.shortest_dists' bounded
+    1 + min(|Δz|, 3), composed over geostat.shortest_dists' bounded
     Bellman-Ford (12 hops); recursive-walk oracle."""
     from osm2geojson_spark.operators.geostat import cost_distance
 
@@ -11617,39 +11162,6 @@ def _cost_distance_sql() -> str:
         "SELECT unnest([4, 27, 4, 27]) AS x, unnest([4, 4, 27, 27]) AS y",
         max_hops=12,
         slope_cap=3,
-    )
-
-
-def q_simrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X285 (graph.simrank_int): fixed-point SimRank (3 rounds,
-    C=0.8) on an SF-capped slice of the dense modular graph (the pair
-    space is inherently quadratic — the caller's subgraph is the
-    knob); bit-exact truncating int64 rounds, upper triangle out."""
-    from osm2geojson_spark.operators.graph import simrank_int
-
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 1000)
-    k = F.col("p_partkey")
-    edges = part.select(
-        (k % 211).alias("src"), (((k % 199) * 7 + 3) % 211).alias("dst")
-    ).unionByName(
-        part.select(
-            (k % 211).alias("src"), (((k % 199) * 131 + 17) % 211).alias("dst")
-        )
-    )
-    return simrank_int(edges, rounds=3)
-
-
-def _simrank_sql() -> str:
-    from osm2geojson_spark.operators.graph import simrank_sql
-
-    return simrank_sql(
-        "SELECT p_partkey % 211 AS src,"
-        " ((p_partkey % 199) * 7 + 3) % 211 AS dst"
-        " FROM part WHERE p_partkey < 1000"
-        " UNION ALL SELECT p_partkey % 211 AS src,"
-        " ((p_partkey % 199) * 131 + 17) % 211 AS dst"
-        " FROM part WHERE p_partkey < 1000",
-        rounds=3,
     )
 
 
@@ -11716,55 +11228,6 @@ FROM (
 )
 """
     return psnr_gate_sql(px, factor=10_000)
-
-
-def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X289 (graph.critical_path): CPM scheduling over a 6-layer
-    activity DAG built from part keys (layer = key % 6, two forward
-    edge families per node, durations 1 + (key*5+2) % 13) — bounded
-    max-relax rounds forward + backward, exact int64 es/ef/lf/slack,
-    critical-flagged; the oracle enumerates walks in recursive CTEs."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    nodes = part.select(
-        k.alias("node"), (F.lit(1) + (k * 5 + 2) % 13).cast("long").alias("dur")
-    )
-
-    def fam(mul: int, add: int):
-        b0 = (k * mul + add) % n
-        b = b0 - (b0 % 6) + (k % 6) + 1
-        return part.filter((k % 6) < 5).select(
-            k.alias("src"), b.alias("dst")
-        ).filter(F.col("dst") < n)
-
-    edges = fam(7, 3).unionByName(fam(131, 17))
-    return G.critical_path(nodes, edges, max_rounds=6)
-
-
-def _critical_path_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    nodes = (
-        "SELECT p_partkey AS node,"
-        " CAST(1 + (p_partkey * 5 + 2) % 13 AS BIGINT) AS dur FROM part"
-    )
-
-    def fam(mul: int, add: int) -> str:
-        return (
-            "SELECT src, dst FROM ("
-            f"SELECT p_partkey AS src,"
-            f" ((p_partkey * {mul} + {add}) % (SELECT COUNT(*) FROM part))"
-            f" - (((p_partkey * {mul} + {add}) % (SELECT COUNT(*) FROM part)) % 6)"
-            f" + (p_partkey % 6) + 1 AS dst"
-            " FROM part WHERE p_partkey % 6 < 5) f"
-            " WHERE dst < (SELECT COUNT(*) FROM part)"
-        )
-
-    edges = f"{fam(7, 3)} UNION ALL {fam(131, 17)}"
-    return G.critical_path_sql(nodes, edges, max_rounds=6)
 
 
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12001,77 +11464,6 @@ def _huff_model_sql() -> str:
     return huff_shares_sql(demand, stores, radius=60)
 
 
-def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X302 (graph.scc_coloring): cycle detection on a directed graph
-    of 5-rings (blocks of part keys) plus forward hash chords — exact
-    SCC labels with component sizes via Trim + forward-backward
-    coloring (O(nodes) frontier state); the oracle replays full
-    recursive mutual reachability."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    ring = part.select(
-        k.alias("src"),
-        F.when(k % 5 == 4, k - 4).otherwise(k + 1).alias("dst"),
-    ).filter(F.col("dst") < n)
-    chords = part.filter(k % 3 == 0).select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    )
-    return G.scc_coloring(ring.unionByName(chords))
-
-
-def _scc_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT src, dst FROM ("
-        "SELECT p_partkey AS src,"
-        " CASE WHEN p_partkey % 5 = 4 THEN p_partkey - 4"
-        " ELSE p_partkey + 1 END AS dst FROM part) r"
-        " WHERE dst < (SELECT COUNT(*) FROM part)"
-        " UNION ALL SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst"
-        " FROM part WHERE p_partkey % 3 = 0"
-    )
-    return G.scc_sql(edges)
-
-
-def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X305 (graph.betweenness_bounded): pivot-sampled Brandes
-    betweenness on the undirected 2-chord part graph (pivots every
-    211th key), 4-hop horizon — exact σ path counts, fixed-point
-    dependency sweep; oracle = walk-enumeration + unrolled levels."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 13 + 5) % n).alias("dst"))
-    ).filter(F.col("src") != F.col("dst"))
-    sources = part.filter(k % 211 == 0).select(k.alias("node"))
-    return G.betweenness_bounded(edges, sources, max_hops=4)
-
-
-def _betweenness_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT src, dst FROM ("
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey AS src,"
-        " (p_partkey * 13 + 5) % (SELECT COUNT(*) FROM part) AS dst"
-        " FROM part) e WHERE src <> dst"
-    )
-    sources = "SELECT p_partkey AS node FROM part WHERE p_partkey % 211 = 0"
-    return G.betweenness_bounded_sql(edges, sources, max_hops=4)
-
-
 def q_lcs_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X307 (dedup.lcs_block_similarity): LCS fuzzy similarity between
     the first words of part names, blocked by the product noun — DP
@@ -12155,49 +11547,6 @@ def _rocchio_sql() -> str:
     return rocchio_expand_sql(
         "documents", H.tokens_sql("text"), _BM25_TERMS, k=10, m=10
     )
-
-
-def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X312 (graph.k_truss): 4-truss peeling on planted K4 blocks
-    (every edge inside a block of 4 consecutive part keys) plus hash
-    chord noise — the chords peel away, the cliques survive with
-    support 2."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    base = k - (k % 4)
-    in_block = (base + 3) < n
-    cliques = None
-    for a in range(4):
-        for b in range(a + 1, 4):
-            ed = part.filter(in_block & (k % 4 == a)).select(
-                k.alias("src"), (k + (b - a)).alias("dst")
-            )
-            cliques = ed if cliques is None else cliques.unionByName(ed)
-    noise = part.select(k.alias("src"), ((k * 7 + 3) % n).alias("dst"))
-    return G.k_truss(cliques.unionByName(noise), k=4, rounds=4)
-
-
-def _k_truss_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    pairs = []
-    for a in range(4):
-        for b in range(a + 1, 4):
-            pairs.append(
-                "SELECT p_partkey AS src, p_partkey + "
-                f"{b - a} AS dst FROM part WHERE p_partkey % 4 = {a}"
-                " AND p_partkey - (p_partkey % 4) + 3 <"
-                " (SELECT COUNT(*) FROM part)"
-            )
-    pairs.append(
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-    )
-    edges = " UNION ALL ".join(pairs)
-    return G.k_truss_sql(edges, k=4, rounds=4)
 
 
 def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12310,35 +11659,6 @@ def _fs_linkage_sql() -> str:
     return fs_link_scores_sql(pairs, ["same_nat", "same_band", "same_res"])
 
 
-def q_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X317 (graph.maximal_independent_set): deterministic id-priority
-    Luby MIS on the undirected 2-chord part graph — selected
-    representatives + knockout rounds, twin-identical."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 13 + 5) % n).alias("dst"))
-    )
-    return G.maximal_independent_set(edges, rounds=12)
-
-
-def _mis_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey,"
-        " (p_partkey * 13 + 5) % (SELECT COUNT(*) FROM part) FROM part"
-    )
-    return G.maximal_independent_set_sql(edges, rounds=12)
-
-
 def q_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X319 (functions.text.rake_phrases): RAKE keyphrase mining over
     every 3rd document — stopword-delimited candidate phrases, exact
@@ -12382,35 +11702,6 @@ def _bootstrap_ci_sql() -> str:
     return poisson_bootstrap_ci_sql(rows, b_reps=32)
 
 
-def q_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X321 (graph.greedy_coloring): Jones-Plassmann greedy coloring of
-    the undirected 2-chord part graph — id-priority waves, relational
-    mex, wave provenance."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 13 + 5) % n).alias("dst"))
-    )
-    return G.greedy_coloring(edges, rounds=12)
-
-
-def _coloring_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey,"
-        " (p_partkey * 13 + 5) % (SELECT COUNT(*) FROM part) FROM part"
-    )
-    return G.greedy_coloring_sql(edges, rounds=12)
-
-
 def q_convex_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X327 (geometry.convex_layers): onion peeling of the convex_hull
     point cloud (8 groups, 1000-grid integer coords) — three layers of
@@ -12435,39 +11726,6 @@ def _convex_layers_sql() -> str:
         " (p_partkey * 104729) % 1000 AS y FROM part WHERE p_partkey < 800"
     )
     return convex_layers_sql(pts, layers=3)
-
-
-def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X328 (graph.harmonic_centrality): pivot-sampled harmonic
-    centrality on the undirected 2-chord part graph (pivots every
-    173rd key, 4-hop horizon) — exact Σ 1e6 DIV d contributions."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 13 + 5) % n).alias("dst"))
-    ).filter(F.col("src") != F.col("dst"))
-    sources = part.filter(k % 173 == 0).select(k.alias("node"))
-    return G.harmonic_centrality(edges, sources, max_hops=4)
-
-
-def _harmonic_centrality_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT src, dst FROM ("
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey AS src,"
-        " (p_partkey * 13 + 5) % (SELECT COUNT(*) FROM part) AS dst"
-        " FROM part) e WHERE src <> dst"
-    )
-    sources = "SELECT p_partkey AS node FROM part WHERE p_partkey % 173 = 0"
-    return G.harmonic_centrality_sql(edges, sources, max_hops=4)
 
 
 def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12506,62 +11764,6 @@ def _sentiment_sql() -> str:
     )
 
 
-def q_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X333 (graph.greedy_matching): deterministic maximal matching on
-    the undirected 2-chord part graph — edge-priority Luby rounds on
-    the line graph, round provenance."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    edges = part.select(
-        k.alias("src"), ((k * 7 + 3) % n).alias("dst")
-    ).unionByName(
-        part.select(k.alias("src"), ((k * 13 + 5) % n).alias("dst"))
-    )
-    return G.greedy_matching(edges, rounds=12)
-
-
-def _matching_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT p_partkey,"
-        " (p_partkey * 13 + 5) % (SELECT COUNT(*) FROM part) FROM part"
-    )
-    return G.greedy_matching_sql(edges, rounds=12)
-
-
-def q_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X334 (graph.reciprocity): follow-back census on a directed hash
-    graph where ~1 in 3 edges has a planted reverse."""
-    from osm2geojson_spark.operators import graph as G
-
-    part = _t(spark, sf_dir, "part").select("p_partkey")
-    n = part.count()
-    k = F.col("p_partkey")
-    fwd = part.select(k.alias("src"), ((k * 7 + 3) % n).alias("dst"))
-    back = part.filter(k % 3 == 0).select(
-        ((k * 7 + 3) % n).alias("src"), k.alias("dst")
-    )
-    return G.reciprocity(fwd.unionByName(back))
-
-
-def _reciprocity_sql() -> str:
-    from osm2geojson_spark.operators import graph as G
-
-    edges = (
-        "SELECT p_partkey AS src,"
-        " (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part) AS dst FROM part"
-        " UNION ALL SELECT (p_partkey * 7 + 3) % (SELECT COUNT(*) FROM part),"
-        " p_partkey FROM part WHERE p_partkey % 3 = 0"
-    )
-    return G.reciprocity_sql(edges)
-
-
 def q_fuzzy2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X335 (dedup.lev2_join): depth-2 FastSS fuzzy join over
     suffix-diversified part names (every 11th part) — complete
@@ -12591,9 +11793,11 @@ def _fuzzy2_join_sql() -> str:
 # Round-5 rotation (VERDICT r4 ask #1): the registry is FROZEN — no new queries
 # this round — and the driver's 50-slot correctness window is pointed at the 50
 # OLDEST names never recorded in CORRECTNESS_r01–r04 (the LLM-pipeline core:
-# ANN/PQ, bm25, asof/interval joins, graph, trajectory, multimodal).  The base
-# dict below keeps its historical newest-first order; this list is promoted to
-# positions 0–49 at call time so CORRECTNESS_r05 clears verification backlog.
+# ANN/PQ, bm25, asof/interval joins, trajectory, multimodal).  The base dict
+# below keeps its historical newest-first order; this list is promoted to the
+# front at call time so CORRECTNESS_r05 clears verification backlog.  Since the
+# graph family's deletion it names 46 queries; the window's last 4 slots take
+# the first 4 base names.
 _PROMOTE_R5 = [
     "interval_join", "asof_join", "mobility", "od_flows", "stay_points",
     "spatial_window", "domain_cap", "pack_sequences", "doc_chunking",
@@ -12602,10 +11806,10 @@ _PROMOTE_R5 = [
     "ann_cosine_ivf", "zonal_median", "zonal_stats", "vectorize_tiles",
     "caption_alignment", "crossmodal_dedup", "image_pipeline", "image_similarity",
     "image_sharpness", "knn_graph", "halo_gradient", "dbscan",
-    "vectorize_stitched", "dedup_semantic", "bfs_hops", "rasterize", "box_iou",
+    "vectorize_stitched", "dedup_semantic", "rasterize", "box_iou",
     "map_match", "semivariogram", "idw", "resample_tracks", "colocation",
-    "geofence_visits", "shortest_path", "kde", "st_join", "pagerank",
-    "patch_extract", "adaptive_bins", "track_speed", "bbox_join", "isochrone",
+    "geofence_visits", "kde", "st_join",
+    "patch_extract", "adaptive_bins", "track_speed", "bbox_join",
     "hist_equalize",
 ]
 
@@ -12621,26 +11825,18 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- round-4 continuation: newest first (never driver-recorded)
         "fuzzy2_join": q_fuzzy2_join,
-        "reciprocity": q_reciprocity,
-        "matching": q_matching,
         "sentiment": q_sentiment,
         "novelty": q_novelty,
-        "harmonic_centrality": q_harmonic_centrality,
         "convex_layers": q_convex_layers,
-        "coloring": q_coloring,
         "bootstrap_ci": q_bootstrap_ci,
         "rake": q_rake,
-        "mis": q_mis,
         "fs_linkage": q_fs_linkage,
         "cube_metrics": q_cube_metrics,
         "stable_matching": q_stable_matching,
-        "k_truss": q_k_truss,
         "rocchio": q_rocchio,
         "quadrat": q_quadrat,
         "undistort": q_undistort,
         "lcs_similarity": q_lcs_similarity,
-        "betweenness": q_betweenness,
-        "scc": q_scc,
         "huff_model": q_huff_model,
         "phonetic_dedup": q_phonetic_dedup,
         "bilateral": q_bilateral,
@@ -12649,9 +11845,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "median_center": q_median_center,
         "knox": q_knox,
         "rrf_fusion": q_rrf_fusion,
-        "critical_path": q_critical_path,
         "psnr_gate": q_psnr_gate,
-        "simrank": q_simrank,
         "cost_distance": q_cost_distance,
         "kll_quantiles": q_kll_quantiles,
         "containment": q_containment,
@@ -12663,15 +11857,11 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_classify": q_knn_classify,
         "pii_scan": q_pii_scan,
         "bearing_stats": q_bearing_stats,
-        "ppr": q_ppr,
-        "clique4": q_clique4,
         "f2_sketch": q_f2_sketch,
         "canonical_pick": q_canonical_pick,
         "l_diversity": q_l_diversity,
         "shot_detect": q_shot_detect,
         "str_partition": q_str_partition,
-        "rich_club": q_rich_club,
-        "label_spread": q_label_spread,
         "hilbert_ranges": q_hilbert_ranges,
         "k_centers": q_k_centers,
         "focal_majority": q_focal_majority,
@@ -12687,17 +11877,13 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "alpha_shape": q_alpha_shape,
         "keyword_extract": q_keyword_extract,
         "winnow": q_winnow,
-        "clustering_coeff": q_clustering_coeff,
         "color_quantize": q_color_quantize,
         "anchor_assign": q_anchor_assign,
-        "squares": q_squares,
         "viterbi": q_viterbi,
         "demosaic": q_demosaic,
         "stream_topk": q_stream_topk,
-        "tree_rollup": q_tree_rollup,
         "iou_track": q_iou_track,
         "haar_energy": q_haar,
-        "assortativity": q_assortativity,
         "coverage_select": q_coverage_select,
         "brief_match": q_brief_match,
         "delaunay": q_delaunay,
@@ -12709,7 +11895,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "join_counts": q_join_counts,
         "hard_negatives": q_hard_negatives,
         "scan_stat": q_scan_stat,
-        "link_prediction": q_link_prediction,
         "sd_ellipse": q_sd_ellipse,
         "hough": q_hough,
         "gaussian_blur": q_gaussian_blur,
@@ -12733,7 +11918,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "segment_intersect": q_segment_intersect,
         "viewshed": q_viewshed,
         "text_nll": q_text_nll,
-        "hits": q_hits,
         "geary_c": q_geary_c,
         "integral_image": q_integral_image,
         "rle_mask": q_rle_mask,
@@ -12774,14 +11958,11 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hog": q_hog,
         "cms_topk": q_cms_topk,
         "pps_sample": q_pps_sample,
-        "k_core": q_k_core,
-        "triangles": q_triangles,
         "median_filter": q_median_filter,
         "theta_distinct": q_theta_distinct,
         "st_dbscan": q_st_dbscan,
         "glcm": q_glcm,
         "hexbin": q_hexbin,
-        "lpa": q_lpa,
         "chaikin": q_chaikin,
         "otsu": q_otsu,
         "image_moments": q_image_moments,
@@ -12805,15 +11986,12 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cell_transitions": q_cell_transitions,
         "reverse_geocode": q_reverse_geocode,
         "hist_equalize": q_hist_equalize,
-        "isochrone": q_isochrone,
         "bbox_join": q_bbox_join,
         "track_speed": q_track_speed,
         "adaptive_bins": q_adaptive_bins,
         "patch_extract": q_patch_extract,
-        "pagerank": q_pagerank,
         "st_join": q_st_join,
         "kde": q_kde,
-        "shortest_path": q_shortest_path,
         "geofence_visits": q_geofence_visits,
         "colocation": q_colocation,
         "resample_tracks": q_resample_tracks,
@@ -12822,7 +12000,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "map_match": q_map_match,
         "box_iou": q_box_iou,
         "rasterize": q_rasterize,
-        "bfs_hops": q_bfs_hops,
         # --- never driver-recorded (round-3 verdict ask #1): first, so a
         # budget-capped sweep records them before the long-verified tail
         "dedup_semantic": q_dedup_semantic,
@@ -12927,26 +12104,18 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     return {
         "fuzzy2_join": _fuzzy2_join_sql(),
-        "reciprocity": _reciprocity_sql(),
-        "matching": _matching_sql(),
         "sentiment": _sentiment_sql(),
         "novelty": _novelty_sql(),
-        "harmonic_centrality": _harmonic_centrality_sql(),
         "convex_layers": _convex_layers_sql(),
-        "coloring": _coloring_sql(),
         "bootstrap_ci": _bootstrap_ci_sql(),
         "rake": _rake_sql(),
-        "mis": _mis_sql(),
         "fs_linkage": _fs_linkage_sql(),
         "cube_metrics": _CUBE_SQL,
         "stable_matching": _stable_matching_sql(),
-        "k_truss": _k_truss_sql(),
         "rocchio": _rocchio_sql(),
         "quadrat": _quadrat_sql(),
         "undistort": _undistort_sql(),
         "lcs_similarity": _lcs_similarity_sql(),
-        "betweenness": _betweenness_sql(),
-        "scc": _scc_sql(),
         "huff_model": _huff_model_sql(),
         "phonetic_dedup": _phonetic_dedup_sql(),
         "bilateral": _bilateral_sql(),
@@ -12955,9 +12124,7 @@ def oracle_sql() -> dict[str, str]:
         "median_center": _median_center_sql(),
         "knox": _knox_sql(),
         "rrf_fusion": _rrf_fusion_sql(),
-        "critical_path": _critical_path_sql(),
         "psnr_gate": _psnr_gate_sql(),
-        "simrank": _simrank_sql(),
         "cost_distance": _cost_distance_sql(),
         "kll_quantiles": _kll_quantiles_sql(),
         "containment": _containment_sql(),
@@ -12969,15 +12136,11 @@ def oracle_sql() -> dict[str, str]:
         "knn_classify": _knn_classify_sql(),
         "pii_scan": _pii_scan_sql(),
         "bearing_stats": _bearing_stats_sql(),
-        "ppr": _ppr_sql(),
-        "clique4": _clique4_sql(),
         "f2_sketch": _f2_sketch_sql(),
         "canonical_pick": _canonical_pick_sql(),
         "l_diversity": _l_diversity_sql(),
         "shot_detect": _shot_detect_sql(),
         "str_partition": _str_partition_sql(),
-        "rich_club": _rich_club_sql(),
-        "label_spread": _label_spread_sql(),
         "hilbert_ranges": _hilbert_ranges_sql(),
         "k_centers": _k_centers_sql(),
         "focal_majority": _focal_majority_sql(),
@@ -12993,17 +12156,13 @@ def oracle_sql() -> dict[str, str]:
         "alpha_shape": _alpha_shape_sql(),
         "keyword_extract": _keyword_extract_sql(),
         "winnow": _winnow_sql(),
-        "clustering_coeff": _clustering_coeff_sql(),
         "color_quantize": _color_quantize_sql(),
         "anchor_assign": _anchor_assign_sql(),
-        "squares": _squares_sql(),
         "viterbi": _viterbi_sql(),
         "demosaic": _demosaic_sql(),
         "stream_topk": _stream_topk_sql(),
-        "tree_rollup": _tree_rollup_sql(),
         "iou_track": _iou_track_sql(),
         "haar_energy": _haar_sql(),
-        "assortativity": _assortativity_sql(),
         "coverage_select": _coverage_select_sql(),
         "brief_match": _brief_match_sql(),
         "delaunay": _delaunay_sql(),
@@ -13015,7 +12174,6 @@ def oracle_sql() -> dict[str, str]:
         "join_counts": _join_counts_sql(),
         "hard_negatives": _hard_negatives_sql(),
         "scan_stat": _scan_stat_sql(),
-        "link_prediction": _link_prediction_sql(),
         "sd_ellipse": _sd_ellipse_sql(),
         "hough": _hough_sql(),
         "gaussian_blur": _gaussian_blur_sql(),
@@ -13039,7 +12197,6 @@ def oracle_sql() -> dict[str, str]:
         "segment_intersect": _SEGMENT_INTERSECT_SQL,
         "viewshed": _VIEWSHED_SQL,
         "text_nll": _TEXT_NLL_SQL,
-        "hits": _hits_sql(),
         "geary_c": _geary_c_sql(),
         "integral_image": _integral_image_sql(),
         "rle_mask": _RLE_MASK_SQL,
@@ -13080,14 +12237,11 @@ def oracle_sql() -> dict[str, str]:
         "hog": _hog_sql(),
         "cms_topk": _cms_topk_sql(),
         "pps_sample": _pps_sample_sql(),
-        "k_core": _k_core_sql(),
-        "triangles": _triangles_sql(),
         "median_filter": _MEDIAN_FILTER_SQL,
         "theta_distinct": _theta_distinct_sql(),
         "st_dbscan": _st_dbscan_sql(),
         "glcm": _glcm_sql(),
         "hexbin": _hexbin_sql(),
-        "lpa": _lpa_sql(),
         "chaikin": _CHAIKIN_SQL,
         "otsu": _otsu_sql(),
         "image_moments": _image_moments_sql(),
@@ -13100,22 +12254,18 @@ def oracle_sql() -> dict[str, str]:
         "cell_transitions": _cell_transitions_sql(),
         "reverse_geocode": _reverse_geocode_sql(),
         "hist_equalize": _HIST_EQUALIZE_SQL,
-        "isochrone": _isochrone_sql(),
         "bbox_join": _bbox_join_sql(),
         "track_speed": _track_speed_sql(),
         "adaptive_bins": _adaptive_bins_sql(),
         "patch_extract": _PATCH_EXTRACT_SQL,
-        "pagerank": _pagerank_sql(),
         "st_join": _st_join_sql(),
         "kde": _kde_sql(),
-        "shortest_path": _shortest_path_sql(),
         "geofence_visits": _geofence_visits_sql(),
         "idw": _idw_sql(),
         "semivariogram": _semivariogram_sql(),
         "map_match": _map_match_sql(),
         "box_iou": _box_iou_sql(),
         "rasterize": _rasterize_sql(),
-        "bfs_hops": _bfs_hops_sql(),
         "resample_tracks": _resample_tracks_sql(),
         "dtw": _dtw_sql(),
         "colocation": _colocation_sql(),

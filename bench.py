@@ -90,7 +90,6 @@ BENCH_QUERIES = [
     "geohash_layout",
     "morans_i",
     "geary_c",
-    "hits",
     "text_nll",
     "viewshed",
     "segment_intersect",
@@ -144,19 +143,15 @@ BENCH_QUERIES = [
     "map_match",
     "box_iou",
     "rasterize",
-    "bfs_hops",
     "resample_tracks",
     "colocation",
     "geofence_visits",
-    "shortest_path",
     "kde",
     "st_join",
-    "pagerank",
     "patch_extract",
     "adaptive_bins",
     "track_speed",
     "bbox_join",
-    "isochrone",
     "hist_equalize",
     "reverse_geocode",
     "cell_transitions",
@@ -180,14 +175,11 @@ BENCH_QUERIES = [
     "otsu",
     "image_moments",
     "chaikin",
-    "lpa",
     "hexbin",
     "glcm",
     "st_dbscan",
     "theta_distinct",
     "median_filter",
-    "k_core",
-    "triangles",
     "cms_topk",
     "pps_sample",
     "distance_transform",
@@ -202,7 +194,6 @@ BENCH_QUERIES = [
     "profile",
     "cusum_stream",
     "resize_bilinear",
-    "link_prediction",
     "sd_ellipse",
     "hough",
     "gaussian_blur",
@@ -223,17 +214,13 @@ BENCH_QUERIES = [
     "delaunay",
     "brief_match",
     "coverage_select",
-    "assortativity",
     "haar_energy",
     "iou_track",
-    "tree_rollup",
     "stream_topk",
     "demosaic",
     "viterbi",
-    "squares",
     "anchor_assign",
     "color_quantize",
-    "clustering_coeff",
     "winnow",
     "keyword_extract",
     "alpha_shape",
@@ -249,15 +236,11 @@ BENCH_QUERIES = [
     "focal_majority",
     "k_centers",
     "hilbert_ranges",
-    "label_spread",
-    "rich_club",
     "str_partition",
     "shot_detect",
     "l_diversity",
     "canonical_pick",
     "f2_sketch",
-    "clique4",
-    "ppr",
     "bearing_stats",
     "pii_scan",
     "knn_classify",
@@ -269,9 +252,7 @@ BENCH_QUERIES = [
     "containment",
     "kll_quantiles",
     "cost_distance",
-    "simrank",
     "psnr_gate",
-    "critical_path",
     "rrf_fusion",
     "knox",
     "median_center",
@@ -280,26 +261,18 @@ BENCH_QUERIES = [
     "bilateral",
     "phonetic_dedup",
     "huff_model",
-    "scc",
-    "betweenness",
     "lcs_similarity",
     "undistort",
     "quadrat",
     "rocchio",
-    "k_truss",
     "stable_matching",
     "cube_metrics",
     "fs_linkage",
-    "mis",
     "rake",
     "bootstrap_ci",
-    "coloring",
     "convex_layers",
-    "harmonic_centrality",
     "novelty",
     "sentiment",
-    "matching",
-    "reciprocity",
     "fuzzy2_join",
 ]
 

@@ -722,6 +722,115 @@ def watershed_basins(dem: DataFrame, max_path: int = 4096) -> DataFrame:
     )
 
 
+def tree_rollup(
+    nodes: DataFrame,
+    max_rounds: int = 6,
+    id_col: str = "node_id",
+    parent_col: str = "parent_id",
+    weight_col: str = "w",
+) -> DataFrame:
+    """(node_id, depth, root_id, subtree_n, subtree_w) — HIERARCHY
+    ROLLUP over a parent-pointer forest (the org-chart / category-tree
+    / file-system recursive aggregate every warehouse needs and plain
+    SQL groupBy cannot express): per node its depth, its root, and the
+    exact count/weight-sum of its whole subtree (self included).
+
+    The ancestor closure is built by POINTER DOUBLING — round k holds
+    every (descendant, ancestor) pair at distance < 2^k, and one
+    self-join doubles the horizon — so a depth-D forest needs
+    ceil(log2 D) + 1 rounds, not D.  ``max_rounds`` = 6 covers depth
+    64.  Cycles are the caller's bug (forests only); all sums exact
+    int64.
+
+    Scale: the closure has n·depth rows — the inherent size of the
+    answer for path-dependent aggregates; each round is one equi-join
+    shuffle on node id. Subtree sums and depths are then combinable
+    rollups over the closure. Real hierarchies (org charts, catalogs,
+    admin-area trees) have depth 5-20, so the closure is a small
+    constant times the node table."""
+    v = nodes.select(
+        F.col(id_col).cast("long").alias("v"),
+        F.col(parent_col).cast("long").alias("p"),
+        F.col(weight_col).cast("long").alias("w"),
+    )
+    # closure of strict ancestors: (d)escendant -> (a)ncestor
+    clos = v.filter(F.col("p").isNotNull()).select(
+        F.col("v").alias("d"), F.col("p").alias("a")
+    )
+    for _ in range(int(max_rounds)):
+        hop = clos.alias("x").join(
+            clos.alias("y"), F.col("x.a") == F.col("y.d")
+        ).select(F.col("x.d").alias("d"), F.col("y.a").alias("a"))
+        new = clos.unionByName(hop).distinct().localCheckpoint(eager=False)
+        if new.count() == clos.count():
+            clos = new
+            break
+        clos = new
+    roots = v.filter(F.col("p").isNull()).select(F.col("v").alias("a"))
+    depth = clos.groupBy("d").agg(F.count(F.lit(1)).alias("depth"))
+    root_of = clos.join(roots, "a").select(
+        F.col("d").alias("v"), F.col("a").alias("root_id")
+    )
+    sub = (
+        clos.join(
+            v.select(F.col("v").alias("d"), F.col("w").alias("dw")), "d"
+        )
+        .groupBy("a")
+        .agg(F.count(F.lit(1)).alias("desc_n"), F.sum("dw").alias("desc_w"))
+    )
+    return (
+        v.join(depth, v["v"] == depth["d"], "left")
+        .drop("d")
+        .join(root_of.withColumnRenamed("v", "_rv"), v["v"] == F.col("_rv"), "left")
+        .drop("_rv")
+        .join(sub, v["v"] == sub["a"], "left")
+        .drop("a")
+        .select(
+            F.col("v").alias(id_col),
+            F.coalesce("depth", F.lit(0)).alias("depth"),
+            F.coalesce("root_id", F.col("v")).alias("root_id"),
+            (F.coalesce("desc_n", F.lit(0)) + 1).alias("subtree_n"),
+            (F.coalesce("desc_w", F.lit(0)) + F.col("w")).alias("subtree_w"),
+        )
+    )
+
+
+def tree_rollup_sql(nodes_cte: str) -> str:
+    """DuckDB twin of tree_rollup — recursive-CTE ancestor closure,
+    identical rollups.  ``nodes_cte`` -> (node_id, parent_id, w)."""
+    return f"""
+WITH RECURSIVE v AS (
+  SELECT CAST(node_id AS BIGINT) AS v, CAST(parent_id AS BIGINT) AS p,
+         CAST(w AS BIGINT) AS w
+  FROM ({nodes_cte})
+),
+clos(d, a) AS (
+  SELECT v, p FROM v WHERE p IS NOT NULL
+  UNION
+  SELECT c.d, v.p FROM clos c JOIN v ON v.v = c.a WHERE v.p IS NOT NULL
+),
+depth AS (SELECT d, count(*) AS depth FROM clos GROUP BY 1),
+root_of AS (
+  SELECT c.d AS v, c.a AS root_id
+  FROM clos c JOIN v r ON r.v = c.a AND r.p IS NULL
+),
+sub AS (
+  SELECT c.a, count(*) AS desc_n, CAST(sum(w.w) AS BIGINT) AS desc_w
+  FROM clos c JOIN v w ON w.v = c.d GROUP BY 1
+)
+SELECT v.v AS node_id,
+       CAST(COALESCE(depth.depth, 0) AS BIGINT) AS depth,
+       COALESCE(root_of.root_id, v.v) AS root_id,
+       CAST(COALESCE(sub.desc_n, 0) + 1 AS BIGINT) AS subtree_n,
+       CAST(COALESCE(sub.desc_w, 0) + v.w AS BIGINT) AS subtree_w
+FROM v
+LEFT JOIN depth ON depth.d = v.v
+LEFT JOIN root_of ON root_of.v = v.v
+LEFT JOIN sub ON sub.a = v.v
+"""
+
+
+
 def decluster_weights(
     points: DataFrame,
     res: int = 5,
@@ -908,6 +1017,96 @@ FROM ({sel})
 """
 
 
+def shortest_dists(
+    edges: DataFrame,
+    sources: DataFrame,
+    max_hops: int,
+    node_col: str = "node",
+    src_col: str = "src",
+    dst_col: str = "dst",
+    weight_col: str = "w",
+    directed: bool = True,
+) -> DataFrame:
+    """(node, dist) — the minimum total edge weight from ANY source to each
+    node over walks of at most ``max_hops`` edges (bounded Bellman-Ford:
+    travel-time isochrones). Weights must be nonnegative; keep them integer for a
+    bit-exact oracle. Unreached nodes (within the cap) are absent; sources
+    report dist = 0.
+
+    Each round is ONE relax shuffle (dist ⋈ edges on src, then a min-
+    rollup over the union with the current labels) — the Pregel superstep
+    as relational algebra, localCheckpoint'ed so iterative lineage stays
+    flat. Early exit uses an exact two-scalar probe: distances only ever
+    decrease and the node set only grows, so an unchanged
+    (count, sum(dist)) pair proves a fixed point — no join against the
+    previous round needed.
+
+    At 10^12-edge scale the per-round shuffle carries only (node, dist)
+    pairs and the rollup is map-side combinable; rounds <= max_hops is
+    the product spec (bounded reach)."""
+    e = edges.select(
+        F.col(src_col).alias("_s"),
+        F.col(dst_col).alias("_d"),
+        F.col(weight_col).cast("long").alias("_w"),
+    )
+    if not directed:
+        e = e.unionByName(
+            edges.select(
+                F.col(dst_col).alias("_s"),
+                F.col(src_col).alias("_d"),
+                F.col(weight_col).cast("long").alias("_w"),
+            )
+        )
+    dist = (
+        sources.select(F.col(node_col).alias("node"))
+        .distinct()
+        .withColumn("dist", F.lit(0).cast("long"))
+        .localCheckpoint(eager=False)
+    )
+    sig = dist.agg(F.count(F.lit(1)), F.sum("dist")).collect()[0]
+    for _ in range(max_hops):
+        relaxed = dist.join(e, dist["node"] == e["_s"]).select(
+            F.col("_d").alias("node"), (F.col("dist") + F.col("_w")).alias("dist")
+        )
+        dist = (
+            dist.unionByName(relaxed)
+            .groupBy("node")
+            .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=False)
+        )
+        nsig = dist.agg(F.count(F.lit(1)), F.sum("dist")).collect()[0]
+        if tuple(nsig) == tuple(sig):
+            break
+        sig = nsig
+    return dist
+
+
+def shortest_dists_sql(
+    edges_cte: str, sources_cte: str, max_hops: int, directed: bool = True
+) -> str:
+    """DuckDB recursive-CTE twin of shortest_dists: enumerate (node, dist,
+    hops) walk states up to the cap (UNION dedups identical states), then
+    min(dist) per node. Positive integer weights keep the state space
+    finite and the arithmetic engine-exact."""
+    und = (
+        " UNION SELECT dst AS src, src AS dst, w FROM e0" if not directed else ""
+    )
+    return f"""
+WITH RECURSIVE e0 AS ({edges_cte}),
+e AS (SELECT src, dst, w FROM e0{und}),
+s AS ({sources_cte}),
+walk(node, dist, hops) AS (
+  SELECT node, CAST(0 AS BIGINT), 0 FROM s
+  UNION
+  SELECT e.dst, walk.dist + e.w, walk.hops + 1
+  FROM walk JOIN e ON e.src = walk.node
+  WHERE walk.hops < {max_hops}
+)
+SELECT node, CAST(MIN(dist) AS BIGINT) AS dist FROM walk GROUP BY node
+"""
+
+
+
 def cost_distance(
     dem: DataFrame,
     sources: DataFrame,
@@ -924,7 +1123,7 @@ def cost_distance(
 
     BY COMPOSITION: the DEM becomes an undirected integer-weighted
     grid graph (two +1-offset self-joins — no kernel) and the
-    distances are graph.shortest_dists' bounded Bellman-Ford, so
+    distances are shortest_dists' bounded Bellman-Ford, so
     exactness, early-exit, and the per-round shuffle story are
     inherited wholesale. The cap on |Δz| keeps the weight alphabet
     tiny, which also bounds the oracle's walk-state space.
@@ -933,8 +1132,6 @@ def cost_distance(
 
     Scale: the grid graph is 2 rows per cell (never materialized
     wider); each Bellman-Ford round moves (cell, dist) pairs only."""
-    from .graph import shortest_dists
-
     d = dem.select("x", "y", F.col("z").cast("long").alias("z"))
     a = d.select(
         F.col("x").alias("ax"), F.col("y").alias("ay"), F.col("z").alias("az")
@@ -988,8 +1185,6 @@ def cost_distance_sql(
     """DuckDB twin of cost_distance — the same grid-graph construction
     composed over shortest_dists_sql's recursive walk.
     ``dem_cte`` -> (x, y, z); ``sources_cte`` -> (x, y)."""
-    from .graph import shortest_dists_sql
-
     n_side = 1 << 20
     edges = f"""
   SELECT a.y * {n_side} + a.x AS src, b.y * {n_side} + b.x AS dst,

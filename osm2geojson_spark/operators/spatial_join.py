@@ -324,10 +324,13 @@ def point_in_polygon_join(
     the driver, memoized per layer, with the interior compacted
     (``compact_interior``): points probe their ancestor cell at every
     resolution present (an antichain per polygon, so multiplicity is
-    unchanged; the ancestor probe is exact because both grids' index math
-    is a clamped floor of a per-axis monotone map, and floor-division
-    composes: floor(s*2^R) >> (R-r) == floor(s*2^r)). The join is a
-    broadcast, so there is no shuffle.
+    unchanged). Each point's cell is computed once, at the finest
+    resolution present, and the coarser ones are shifted out of it. That
+    is exact because both grids' index math is a clamped floor of a
+    per-axis monotone map scaled by a power of two, and floor-division
+    composes: floor(s*2^R) >> (R-r) == floor(s*2^r). It also keeps the
+    generated code to one cell computation, not one per resolution. The
+    join is a broadcast, so there is no shuffle.
 
     ``broadcast_polys=False`` (a planet-size polygon table) builds the
     shards on executors, uncompacted at ``res``, and shuffle-joins them.
@@ -346,25 +349,27 @@ def point_in_polygon_join(
         def probe_at(r):
             return SPH.sphere_cell_id(F.col(lon_col), F.col(lat_col), r)
 
-        cell_res = SPH.sphere_cell_res_py
+        parent_of, cell_res = SPH.sphere_parent, SPH.sphere_cell_res_py
     else:
 
         def probe_at(r):
             return cells.cell_id(F.col(lon_col), F.col(lat_col), r)
 
-        cell_res = cells.cell_res_py
+        parent_of, cell_res = cells.parent_cell, cells.cell_res_py
 
     if broadcast_polys:
         polys = [(r["poly_id"], bytes(r["gpb"])) for r in polys_df.select("poly_id", "gpb").collect()]
         rows = _shard_rows_cached(polys, res, grid, compact_interior)
         res_set = sorted({cell_res(c) for c, _, _ in rows}) or [res]
-        probe = (
-            probe_at(res_set[0])
-            if len(res_set) == 1
-            else F.explode(F.array(*[probe_at(r) for r in res_set]))
-        )
+        top = res_set[-1]
+        probed = points.withColumn("cell_id", probe_at(top))
+        if len(res_set) > 1:
+            cell = F.col("cell_id")
+            probed = probed.withColumn(
+                "cell_id", F.explode(F.array(*[parent_of(cell, top, r) for r in res_set]))
+            )
         shards = local_frame(points.sparkSession, rows, SHARD_SCHEMA)
-        cand = points.withColumn("cell_id", probe).join(F.broadcast(shards), "cell_id")
+        cand = probed.join(F.broadcast(shards), "cell_id")
     else:
         from ..plans.skew import salted_cell_join
 

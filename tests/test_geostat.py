@@ -492,6 +492,73 @@ def test_watershed_basins_matches_scalar_chase(spark):
         assert got[s][:2] == s
 
 
+def test_tree_rollup_brute_and_twin(spark):
+    """Dict replay on a random forest (roots 0 and 1, random parents
+    among earlier nodes -> acyclic by construction), deep-chain case
+    to exercise pointer doubling past one round."""
+    import random
+
+    import duckdb
+
+    from osm2geojson_spark.operators.geostat import tree_rollup, tree_rollup_sql
+
+    rng = random.Random(13)
+    rows = [(0, None, 5), (1, None, 7)]
+    for n in range(2, 40):
+        rows.append((n, rng.randrange(0, n), (n * 31) % 20))
+    # deep chain hanging off node 1: 40 -> 41 -> ... -> 52
+    prev = 1
+    for n in range(40, 53):
+        rows.append((n, prev, 1))
+        prev = n
+
+    df = spark.createDataFrame(rows, "node_id long, parent_id long, w long")
+    got = {
+        r["node_id"]: (
+            r["depth"], r["root_id"], r["subtree_n"], r["subtree_w"]
+        )
+        for r in tree_rollup(df).collect()
+    }
+
+    parent = {n: p for n, p, _ in rows}
+    weight = {n: w for n, _, w in rows}
+    for n in parent:
+        anc = []
+        p = parent[n]
+        while p is not None:
+            anc.append(p)
+            p = parent[p]
+        desc = [m for m in parent if n in _ancestors(parent, m)]
+        want = (
+            len(anc),
+            anc[-1] if anc else n,
+            len(desc) + 1,
+            sum(weight[m] for m in desc) + weight[n],
+        )
+        assert got[n] == want, n
+    assert got[52][0] == 13  # chain: 40..51 (12 nodes) + root hop via 1
+
+    duck = duckdb.connect()
+    duck.execute("CREATE TABLE nd (node_id BIGINT, parent_id BIGINT, w BIGINT)")
+    duck.executemany("INSERT INTO nd VALUES (?, ?, ?)", rows)
+    twin = {
+        r[0]: tuple(r[1:])
+        for r in duck.sql(
+            tree_rollup_sql("SELECT * FROM nd")
+        ).fetchall()
+    }
+    assert twin == got
+
+
+def _ancestors(parent, n):
+    out = set()
+    p = parent[n]
+    while p is not None:
+        out.add(p)
+        p = parent[p]
+    return out
+
+
 def test_decluster_weights_matches_replay_and_twin(spark):
     """decluster_weights == a dict replay; weights sum to n exactly
     (as rationals); clustered points are downweighted vs isolated ones;
@@ -602,6 +669,76 @@ def test_k_centers_greedy_replay_and_properties(spark):
         tuple(r) for r in duck.sql(k_centers_sql("SELECT * FROM kcp", k=6)).fetchall()
     )
     assert twin == got
+
+
+def _brute_dists(edges, sources, max_hops, directed):
+    """Bounded Bellman-Ford in plain Python: min weight over walks with at
+    most max_hops edges."""
+    adj = {}
+    for s, d, w in edges:
+        adj.setdefault(s, []).append((d, w))
+        if not directed:
+            adj.setdefault(d, []).append((s, w))
+    dist = {s: 0 for s in sources}
+    for _ in range(max_hops):
+        nxt = dict(dist)
+        for v, dv in dist.items():
+            for u, w in adj.get(v, []):
+                if dv + w < nxt.get(u, float("inf")):
+                    nxt[u] = dv + w
+        if nxt == dist:
+            break
+        dist = nxt
+    return dist
+
+
+def _wgraph(seed, n=120, m=320):
+    rng = np.random.default_rng(seed)
+    return [
+        (int(rng.integers(0, n)), int(rng.integers(0, n)),
+         int(rng.integers(1, 25)))
+        for _ in range(m)
+    ]
+
+
+def _run_dists(spark, edges, sources, max_hops, directed):
+    from osm2geojson_spark.operators.geostat import shortest_dists
+
+    e = spark.createDataFrame(edges, "src long, dst long, w long")
+    s = spark.createDataFrame([(x,) for x in sources], "node long")
+    return {
+        r["node"]: r["dist"]
+        for r in shortest_dists(
+            e, s, max_hops=max_hops, directed=directed
+        ).collect()
+    }
+
+
+def test_shortest_dists_matches_bruteforce(spark):
+    for seed, directed in ((3, True), (4, False)):
+        edges = _wgraph(seed)
+        sources = [0, 7, 55]
+        for hops in (1, 3, 5):
+            got = _run_dists(spark, edges, sources, hops, directed)
+            want = _brute_dists(edges, sources, hops, directed)
+            assert got == want, (seed, directed, hops)
+            assert len(want) > len(sources)  # non-degenerate reach
+
+
+def test_shortest_dists_weighted_detour_beats_direct(spark):
+    # direct edge weight 10; two-hop detour weight 2+3 -> dist 5 needs
+    # 2 hops, so hops=1 reports 10 and hops=2 reports 5
+    edges = [(0, 1, 10), (0, 2, 2), (2, 1, 3)]
+    assert _run_dists(spark, edges, [0], 1, True)[1] == 10
+    assert _run_dists(spark, edges, [0], 2, True)[1] == 5
+
+
+def test_shortest_dists_early_exit_and_source_min(spark):
+    # sources keep dist 0 even with incoming edges; a converged graph
+    # exits before the hop cap (result equals the unbounded answer)
+    edges = [(0, 1, 4), (1, 0, 1), (1, 2, 1)]
+    got = _run_dists(spark, edges, [0, 2], 50, True)
+    assert got == {0: 0, 2: 0, 1: 4}
 
 
 def test_cost_distance_dijkstra_brute_and_twin(spark):

@@ -236,6 +236,44 @@ def test_pip_edge_shards_match_bruteforce(spark, edge_case_pip, grid, broadcast)
     assert {p for _, p in brute} == {1, 2, 3, 4, 5, 6, 7}
 
 
+def test_pip_sphere_probe_compiles_without_fallback(spark):
+    """A compacted sphere probe at res 6 spans resolutions 2-6. Its code
+    computes one sphere cell per point, so it compiles with codegen
+    fallback off; one sphere_cell_id per resolution grew past the JVM's
+    64 KB method limit and ran interpreted."""
+    from osm2geojson_spark.operators.spatial_join import point_in_polygon_bruteforce
+
+    def rect(x0, y0, x1, y1):
+        return [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+
+    polys = polygons_to_df(spark, [
+        (1, geom.polygon([rect(-45.0, -22.5, 45.0, 22.5)])),
+        (2, geom.polygon([rect(-90.0, -60.0, 90.0, 60.0), rect(-10.0, -10.0, 10.0, 10.0)])),
+    ])
+    rng = np.random.default_rng(64)
+    points = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in
+         enumerate(zip(rng.uniform(-180, 180, 1000), rng.uniform(-90, 90, 1000)))],
+        "pid long, lon double, lat double",
+    )
+    brute = {
+        (r["pid"], r["poly_id"])
+        for r in point_in_polygon_bruteforce(points, polys).collect()
+    }
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = point_in_polygon_join(points, polys, res=6, grid="sphere").select(
+            "pid", "poly_id"
+        ).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(got) == len(set(got))
+    assert {(r["pid"], r["poly_id"]) for r in got} == brute
+    assert {p for _, p in brute} == {1, 2}
+
+
 def test_cell_rings_fold_equals_ray_cast():
     """_cell_rings keeps, per cell, exactly what the ray cast needs: its
     edges and parity folded as the JVM filter folds them give the full

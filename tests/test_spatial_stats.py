@@ -931,8 +931,7 @@ def test_flow_accumulation_matches_serial_walk(spark):
     tilted plane drains everything to one corner sink; accumulation at
     the sink equals the cell count; conservation: sum of accumulation
     equals sum of (path length + 1) over cells."""
-    from osm2geojson_spark.operators.geostat import flow_direction
-    from osm2geojson_spark.operators.graph import tree_rollup
+    from osm2geojson_spark.operators.geostat import flow_direction, tree_rollup
     from pyspark.sql import functions as F
 
     n = 6
