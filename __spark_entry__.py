@@ -10,7 +10,6 @@ sums are computed in DECIMAL so they are exact.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
@@ -42,10 +41,8 @@ from osm2geojson_spark.operators.spatial_join import (
 from osm2geojson_spark.sources import synthetic as SYN
 from osm2geojson_spark.sources.normalize import (
     ElementFrames,
-    NODES_SCHEMA,
     OTHERS_SCHEMA,
     RELATIONS_SCHEMA,
-    WAYS_SCHEMA,
 )
 
 _REPO = os.path.dirname(os.path.abspath(__file__))

@@ -13,13 +13,15 @@ Two equivalent implementations:
 * ``polygon_flag_column`` — pure Spark column expressions over
   ``tags: array<struct<k,v>>`` (order-preserving) so the decision runs
   JVM-side inside whole-stage codegen on the distributed path; the
-  rulebooks are folded into literal predicates at plan build time
-  (they are broadcast-sized: 28 + 40 entries).
+  rulebooks (28 + 40 entries) enter as one JSON literal of (key, value)
+  pair arrays, which the optimizer folds into constants.
 * ``is_geometry_polygon`` — Python mirror used by unit tests and by the
   strict-mode error reporting.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -93,46 +95,52 @@ def is_geometry_polygon(
 
 # --------------------------------------------------------------- spark
 
-
-def _map_value(tags_map: Column, key: str) -> Column:
-    return F.try_element_at(tags_map, F.lit(key))
-
-
-def rulebook_column(tags_map: Column, polygon_features=None) -> Column:
-    """is_geometry_polygon_without_exceptions as a boolean column over a
-    map<string,string> tags column (map lookups keep the expression tree
-    small enough for fast Catalyst analysis)."""
-    rules = polygon_features if polygon_features is not None else default_polygon_features()
-    blacklist_hit = F.lit(False)
-    pass2 = F.lit(False)
-    whitelist_keys = {r["key"] for r in rules if r["polygon"] == "whitelist"}
-    for rule in rules:
-        v = _map_value(tags_map, rule["key"])
-        present = v.isNotNull()
-        if rule["polygon"] == "blacklist":
-            blacklist_hit = blacklist_hit | (present & v.isin(list(rule["values"])))
-            if rule["key"] not in whitelist_keys:
-                pass2 = pass2 | present
-        elif rule["polygon"] == "all":
-            pass2 = pass2 | present
-        else:  # whitelist
-            pass2 = pass2 | (present & v.isin(list(rule["values"])))
-    return F.when(blacklist_hit, F.lit(False)).otherwise(pass2)
+_PAIRS_T = "array<struct<k:string,v:string>>"
+_RULEBOOK_T = (
+    f"struct<bl:{_PAIRS_T},wl:{_PAIRS_T},any:array<string>,ak_keys:array<string>,"
+    f"ak:{_PAIRS_T},area_no:struct<k:string,v:string>,forced:{_PAIRS_T}>"
+)
 
 
-def exception_column(tags_col: Column, area_keys: dict | None = None) -> Column:
-    """areaKeys veto: first tag whose key is in areaKeys decides
-    (order-sensitive — hence the array<struct<k,v>> tag representation)."""
-    area_keys = area_keys if area_keys is not None else default_area_keys()
-    keys = list(area_keys.keys())
-    true_pairs = [
-        k + "\x00" + v for k, vals in area_keys.items() for v, flag in vals.items() if flag
+def _pairs(pairs) -> list[dict]:
+    return [{"k": k, "v": v} for k, v in pairs]
+
+
+def _rulebook_json(area_keys: dict, polygon_features: list) -> str:
+    """Both rulebooks as ONE JSON document of ``_RULEBOOK_T``. Fields:
+
+    * ``bl``: blacklist (key, value) pairs, which make the element a line;
+    * ``wl``: whitelist (key, value) pairs, which make it a polygon;
+    * ``any``: keys that make it a polygon whatever their value ("all"
+      rules, and blacklist keys without a whitelist rule);
+    * ``ak_keys``: the areaKeys keys; ``ak``: their truthy (key, value)
+      exception pairs;
+    * ``area_no`` and ``forced`` (area=yes, type=multipolygon): the tags
+      that decide before any rulebook.
+    """
+    by_kind: dict = {"blacklist": [], "whitelist": []}
+    for rule in polygon_features:
+        if rule["polygon"] in by_kind:
+            by_kind[rule["polygon"]] += [(rule["key"], v) for v in rule["values"]]
+    whitelist_keys = {r["key"] for r in polygon_features if r["polygon"] == "whitelist"}
+    any_keys = [
+        r["key"]
+        for r in polygon_features
+        if r["polygon"] == "all"
+        or (r["polygon"] == "blacklist" and r["key"] not in whitelist_keys)
     ]
-    first = F.try_element_at(F.filter(tags_col, lambda t: t["k"].isin(keys)), F.lit(1))
-    return F.when(
-        first.isNotNull(),
-        F.concat_ws("\x00", first["k"], first["v"]).isin(true_pairs) if true_pairs else F.lit(False),
-    ).otherwise(F.lit(False))
+    exceptions = [(k, v) for k, vals in area_keys.items() for v, flag in vals.items() if flag]
+    return json.dumps(
+        {
+            "bl": _pairs(by_kind["blacklist"]),
+            "wl": _pairs(by_kind["whitelist"]),
+            "any": any_keys,
+            "ak_keys": list(area_keys),
+            "ak": _pairs(exceptions),
+            "area_no": {"k": "area", "v": "no"},
+            "forced": _pairs([("area", "yes"), ("type", "multipolygon")]),
+        }
+    )
 
 
 def polygon_flag_column(
@@ -145,18 +153,30 @@ def polygon_flag_column(
 
     ``closed_col``: nullable boolean — ring closure of the element's
     geometry/nodes (null when the element has neither, e.g. relations).
+    Tag keys are unique per element (the sources build tags from dicts), so
+    a (key, value) pair present in the tag array is a dict lookup that
+    matched. The rulebooks enter as one JSON string literal, parsed once
+    when the optimizer folds it into constant arrays: building this column
+    costs the same number of JVM calls whatever their size, and the plan
+    carries two expression nodes for them, not one per rulebook entry.
     """
-    tags_map = F.map_from_entries(tags_col)
-    area_v = _map_value(tags_map, "area")
-    type_v = _map_value(tags_map, "type")
-    rb = rulebook_column(tags_map, polygon_features)
-    exc = exception_column(tags_col, area_keys)
-    no_tags = tags_col.isNull() | (F.size(tags_col) == 0)
-    return (
-        F.when(no_tags, F.lit(False))
-        .when(area_v == "no", F.lit(False))
-        .when(area_v == "yes", F.lit(True))
-        .when(type_v == "multipolygon", F.lit(True))
-        .when(closed_col.isNotNull() & ~closed_col, F.lit(False))
-        .otherwise(rb & ~exc)
+    area_keys = area_keys if area_keys is not None else default_area_keys()
+    rules = polygon_features if polygon_features is not None else default_polygon_features()
+    book = F.from_json(F.lit(_rulebook_json(area_keys, rules)), _RULEBOOK_T)
+    rulebook = ~F.arrays_overlap(tags_col, book["bl"]) & (
+        F.arrays_overlap(tags_col["k"], book["any"]) | F.arrays_overlap(tags_col, book["wl"])
+    )
+    # areaKeys veto: the first tag whose key is in areaKeys decides
+    # (order-sensitive — hence the array<struct<k,v>> tag representation)
+    first = F.try_element_at(
+        F.filter(tags_col, lambda t: F.array_contains(book["ak_keys"], t["k"])), F.lit(1)
+    )
+    vetoed = F.coalesce(F.array_contains(book["ak"], first), F.lit(False))
+    open_ring = F.coalesce(~closed_col, F.lit(False))
+    # area=no > area=yes | type=multipolygon > open ring > rulebook and veto;
+    # null or empty tags give False
+    return F.coalesce(
+        ~F.array_contains(tags_col, book["area_no"])
+        & (F.arrays_overlap(tags_col, book["forced"]) | (~open_ring & rulebook & ~vetoed)),
+        F.lit(False),
     )

@@ -3,11 +3,15 @@
 The distributed re-expression of the reference's conversion pipeline
 (/root/reference/osm2geojson/main.py:136-788):
 
-* way node-chains   : ``posexplode(nodes)`` -> left join against the node
-  table -> ``groupBy(way_id)`` ordered collect -> flat ``array<double>``
-  coordinates [lon0, lat0, lon1, lat1, ...], the one coordinate format from
-  here to the shape kernels.
-  (reference: hash refs_index probe loop, main.py:288-302)
+* way node-chains   : ``posexplode(nodes)`` -> left join against every
+  node row -> ``groupBy(doc_id, seq)`` ordered collect, keeping the last
+  node row of each position (the refs_index's last occurrence wins) -> flat
+  ``array<double>`` coordinates [lon0, lat0, lon1, lat1, ...], the one
+  coordinate format from here to the shape kernels. It shuffles for the
+  join (unless the node table broadcasts) and for the group, and nowhere
+  else: no node index is aggregated first.
+  (reference: hash refs_index build and probe loop, main.py:228-229,
+  288-302)
 * classification    : pure column expressions (functions/classify.py).
 * relation assembly : grouped Arrow kernels (linemerge / ring nesting /
   orientation repair) — repartitioned by the relation's (doc_id, seq), so
@@ -370,9 +374,15 @@ def batched_rel_kernel(row_fn):
 # pipeline stages
 
 
-def _coords_from_structs(col: Column) -> Column:
-    """array<struct<lon,lat>> -> flat array<double>."""
-    return F.flatten(F.transform(col, lambda p: F.array(p["lon"], p["lat"])))
+def _coords_sql(structs: str) -> str:
+    """SQL for array<struct<lon,lat>> -> flat array<double>."""
+    return f"flatten(transform({structs}, p -> array(p.lon, p.lat)))"
+
+
+# The plan builders below write their column expressions as SQL text: one
+# parsed expression costs one driver-to-JVM call, where the same expression
+# composed from Column operators costs about ten per operator (PySpark
+# records each operator's Python call site in the JVM).
 
 
 def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -> DataFrame:
@@ -381,109 +391,93 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     Columns: seq, id, branch, coords(array<double>), closed, is_poly, gpb, reason,
     used_node_refs(array<long>), nodes, tags, meta...
     """
-    w = frames.ways
-    has_center = F.col("center").isNotNull()
-    has_geom = F.col("geometry").isNotNull() & (F.size("geometry") > 0)
-    has_nodes = F.col("nodes").isNotNull() & (F.size("nodes") > 0)
-    w = w.withColumn(
+    w = frames.ways.withColumn(
         "branch",
-        F.when(has_center, "center")
-        .when(has_geom, "geom")
-        .when(has_nodes, "nodes")
-        .otherwise("none"),
+        F.expr(
+            "CASE WHEN center IS NOT NULL THEN 'center'"
+            " WHEN geometry IS NOT NULL AND size(geometry) > 0 THEN 'geom'"
+            " WHEN nodes IS NOT NULL AND size(nodes) > 0 THEN 'nodes'"
+            " ELSE 'none' END"
+        ),
     )
 
     # --- node-ref resolution (the refs_index probe as a left join) -------
     # keyed by (doc_id, seq), not id: two ways that share an id each resolve
     # their own node list, as the reference converts every element on its own
-    need = w.filter(F.col("branch") == "nodes").select(
-        "doc_id", "seq", F.posexplode("nodes").alias("pos", "node_ref")
+    need = w.filter("branch = 'nodes'").selectExpr(
+        "doc_id", "seq", "posexplode(nodes) AS (pos, node_ref)"
     )
-    # last-occurrence-wins node index (build_refs_index dict overwrite);
-    # max_by aggregation, not a window — partial (map-side) aggregation
-    # instead of a full shuffle+sort of every node row
-    nd = (
-        frames.nodes.select("doc_id", F.col("id").alias("node_ref"), "seq", "lon", "lat")
-        .groupBy("doc_id", "node_ref")
-        .agg(F.max_by(F.struct("lon", "lat"), "seq").alias("_p"))
-        .select("doc_id", "node_ref", F.col("_p.lon").alias("lon"), F.col("_p.lat").alias("lat"))
-    )
+    nodes = frames.nodes.selectExpr("doc_id", "id AS node_ref", "seq AS nseq", "lon", "lat")
+    # every node row sharing the ref's id joins; sort_array orders each
+    # position's candidates by node seq, and keeping the last one is the
+    # last-occurrence-wins index of build_refs_index (dict overwrite) without
+    # an aggregation of its own over the node table
     resolved = (
-        need.join(nd, ["doc_id", "node_ref"], "left")
+        need.join(nodes, ["doc_id", "node_ref"], "left")
         .groupBy("doc_id", "seq")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", "node_ref", "lon", "lat"))).alias("pts"))
+        .agg(F.expr("sort_array(collect_list(struct(pos, nseq, node_ref, lon, lat))) AS pts"))
+        .selectExpr(
+            "doc_id",
+            "seq",
+            "filter(pts, (p, i) -> coalesce(try_element_at(pts, i + 2).pos != p.pos, true))"
+            " AS pts",
+        )
+        .selectExpr(
+            "doc_id",
+            "seq",
+            "pts",
+            "try_element_at(filter(pts, p -> p.lon IS NULL), 1).pos AS first_miss",
+        )
+        # nodes before the first missing ref are marked used even when the
+        # way fails (main.py:288-302 marks during iteration)
+        .selectExpr(
+            "doc_id",
+            "seq",
+            "first_miss",
+            "transform(filter(pts, p -> p.lon IS NOT NULL"
+            " AND (first_miss IS NULL OR p.pos < first_miss)), p -> p.node_ref)"
+            " AS used_node_refs",
+            f"CASE WHEN first_miss IS NULL THEN {_coords_sql('pts')} END AS resolved_coords",
+        )
     )
-    miss = F.filter("pts", lambda p: p["lon"].isNull())
-    first_miss = F.when(F.size(miss) > 0, F.try_element_at(miss, F.lit(1))["pos"])
-    resolved = resolved.withColumn("first_miss", first_miss)
-    # nodes before the first missing ref are marked used even when the way
-    # fails (main.py:288-302 marks during iteration)
-    resolved = resolved.withColumn(
-        "used_node_refs",
-        F.transform(
-            F.filter(
-                "pts",
-                lambda p: p["lon"].isNotNull()
-                & (F.col("first_miss").isNull() | (p["pos"] < F.col("first_miss"))),
+    w = w.join(resolved, ["doc_id", "seq"], "left")
+
+    # coordinates, and the ring-closure test for the classifier: inline
+    # geometry first, then refs (main.py:399-404)
+    w = w.withColumns(
+        {
+            "coords": F.expr(
+                f"CASE WHEN branch = 'geom' THEN {_coords_sql('geometry')}"
+                " WHEN branch = 'nodes' THEN resolved_coords END"
             ),
-            lambda p: p["node_ref"],
-        ),
-    ).withColumn(
-        "resolved_coords",
-        F.when(
-            F.col("first_miss").isNull(),
-            F.flatten(F.transform("pts", lambda p: F.array(p["lon"], p["lat"]))),
-        ),
+            "closed": F.expr(
+                "CASE WHEN geometry IS NOT NULL AND size(geometry) > 0"
+                " THEN try_element_at(geometry, 1).lon = try_element_at(geometry, -1).lon"
+                " AND try_element_at(geometry, 1).lat = try_element_at(geometry, -1).lat"
+                " WHEN nodes IS NOT NULL AND size(nodes) > 0"
+                " THEN try_element_at(nodes, 1) = try_element_at(nodes, -1) END"
+            ),
+        }
     )
-
-    w = w.join(
-        resolved.select(
-            "doc_id", "seq", "first_miss", "used_node_refs", "resolved_coords"
-        ),
-        ["doc_id", "seq"],
-        "left",
-    )
-
-    flat = F.when(F.col("branch") == "geom", _coords_from_structs(F.col("geometry"))).when(
-        F.col("branch") == "nodes", F.col("resolved_coords")
-    )
-    w = w.withColumn("coords", flat)
-
-    # ring-closure test for the classifier: inline geometry first, then refs
-    # (main.py:399-404)
-    geom_closed = (
-        F.try_element_at("geometry", F.lit(1))["lon"] == F.try_element_at("geometry", F.lit(-1))["lon"]
-    ) & (F.try_element_at("geometry", F.lit(1))["lat"] == F.try_element_at("geometry", F.lit(-1))["lat"])
-    nodes_closed = F.try_element_at("nodes", F.lit(1)) == F.try_element_at("nodes", F.lit(-1))
-    closed = (
-        F.when(F.col("geometry").isNotNull() & (F.size("geometry") > 0), geom_closed)
-        .when(F.col("nodes").isNotNull() & (F.size("nodes") > 0), nodes_closed)
-        .otherwise(F.lit(None))
-    )
-    w = w.withColumn("closed", closed)
     w = w.withColumn(
         "is_poly", polygon_flag_column(F.col("tags"), F.col("closed"), area_keys, polygon_features)
     )
 
-    shape = way_gpb_udf(F.col("coords"), F.col("is_poly"))
-    w = w.withColumn("_shape", shape)
-    w = (
-        w.withColumn(
-            "gpb",
-            F.when(F.col("branch") == "center", point_gpb_udf(F.col("center.lon"), F.col("center.lat")))
-            .when(F.col("branch") == "none", F.lit(None).cast("binary"))
-            .otherwise(F.col("_shape.gpb")),
-        )
-        .withColumn(
-            "reason",
-            F.when(F.col("branch") == "center", F.lit(None).cast("string"))
-            .when(F.col("branch") == "none", F.lit("no_source"))
-            .when(F.col("first_miss").isNotNull(), F.lit("node_missing"))
-            .otherwise(F.col("_shape.reason")),
-        )
-        .drop("_shape", "resolved_coords")
-    )
-    return w
+    w = w.withColumn("_shape", way_gpb_udf(F.col("coords"), F.col("is_poly")))
+    return w.withColumns(
+        {
+            "gpb": F.when(
+                F.expr("branch = 'center'"),
+                point_gpb_udf(F.col("center.lon"), F.col("center.lat")),
+            ).otherwise(F.expr("CASE WHEN branch != 'none' THEN _shape.gpb END")),
+            "reason": F.expr(
+                "CASE WHEN branch = 'center' THEN CAST(NULL AS STRING)"
+                " WHEN branch = 'none' THEN 'no_source'"
+                " WHEN first_miss IS NOT NULL THEN 'node_missing'"
+                " ELSE _shape.reason END"
+            ),
+        }
+    ).drop("_shape", "resolved_coords")
 
 
 def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
@@ -494,43 +488,27 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
     (doc_id, seq, rel_id, pos0, pos1, mtype, ref, role, coords, needs_close,
     nested_bad).
     """
-    rels = frames.relations.filter(F.col("center").isNull())
-    mem = rels.select(
-        "doc_id", "seq", F.col("id").alias("rel_id"), F.explode("members").alias("m")
-    ).select(
-        "doc_id",
-        "seq",
-        "rel_id",
-        F.col("m.pos").alias("pos0"),
-        F.lit(-1).alias("pos1"),
-        F.col("m.mtype").alias("mtype"),
-        F.col("m.ref").alias("ref"),
-        F.col("m.role").alias("role"),
-        F.col("m.geometry").alias("mgeom"),
+    mem = (
+        frames.relations.filter("center IS NULL")
+        .selectExpr("doc_id", "seq", "id AS rel_id", "explode(members) AS m")
+        .selectExpr(
+            "doc_id", "seq", "rel_id", "m.pos AS pos0", "-1 AS pos1", "m.mtype AS mtype",
+            "m.ref AS ref", "m.role AS role", "m.geometry AS mgeom",
+        )
     )
 
     # nested relation members (depth 1): the referenced relation's members
     # under the outer member's position and role (main.py:526-532)
-    rel_index = frames.relations.select(
-        "doc_id", F.col("id").alias("ref"), F.col("members").alias("nested_members")
-    )
+    rel_index = frames.relations.selectExpr("doc_id", "id AS ref", "members AS nested_members")
     nested = (
-        mem.filter(F.col("mtype") == "relation")
+        mem.filter("mtype = 'relation'")
         .join(rel_index, ["doc_id", "ref"], "inner")
-        .select(
-            "doc_id", "seq", "rel_id", "pos0", "role",
-            F.explode("nested_members").alias("nm"),
+        .selectExpr(
+            "doc_id", "seq", "rel_id", "pos0", "role", "explode(nested_members) AS nm"
         )
-        .select(
-            "doc_id",
-            "seq",
-            "rel_id",
-            "pos0",
-            F.col("nm.pos").alias("pos1"),
-            F.col("nm.mtype").alias("mtype"),
-            F.col("nm.ref").alias("ref"),
-            "role",
-            F.col("nm.geometry").alias("mgeom"),
+        .selectExpr(
+            "doc_id", "seq", "rel_id", "pos0", "nm.pos AS pos1", "nm.mtype AS mtype",
+            "nm.ref AS ref", "role", "nm.geometry AS mgeom",
         )
     )
 
@@ -539,25 +517,19 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
     # (main.py:334-336). A relation id found under a nested relation is a
     # depth-2 member, which aborts the relation (reference KeyError at
     # main.py:529 for id-less nested rel dicts).
-    way_ok = F.col("gpb").isNotNull() & (F.col("branch") != "center")
-    lookup = ways_resolved.select(
+    lookup = ways_resolved.selectExpr(
         "doc_id",
-        F.col("id").alias("ref"),
-        F.lit("way").alias("mtype"),
-        F.when(way_ok, F.col("coords")).alias("way_coords"),
-        F.col("is_poly").alias("way_is_poly"),
+        "id AS ref",
+        "'way' AS mtype",
+        "CASE WHEN gpb IS NOT NULL AND branch != 'center' THEN coords END AS way_coords",
+        "is_poly AS way_is_poly",
     ).unionByName(
-        frames.relations.select(
-            "doc_id",
-            F.col("id").alias("ref"),
-            F.lit("relation").alias("mtype"),
-            F.lit(True).alias("is_rel"),
-        ),
+        frames.relations.selectExpr("doc_id", "id AS ref", "'relation' AS mtype", "true AS is_rel"),
         allowMissingColumns=True,
     )
     leaves = mem.unionByName(nested).join(lookup, ["doc_id", "ref", "mtype"], "left")
-    inline = F.col("mgeom").isNotNull() & (F.size("mgeom") > 0)
-    return leaves.select(
+    inline = "(mgeom IS NOT NULL AND size(mgeom) > 0)"
+    return leaves.selectExpr(
         "doc_id",
         "seq",
         "rel_id",
@@ -566,14 +538,10 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
         "mtype",
         "ref",
         "role",
-        F.when(
-            F.col("mtype") == "way",
-            F.when(inline, _coords_from_structs(F.col("mgeom"))).otherwise(
-                F.col("way_coords")
-            ),
-        ).alias("coords"),
-        ((~inline) & F.coalesce(F.col("way_is_poly"), F.lit(False))).alias("needs_close"),
-        ((F.col("pos1") >= 0) & F.col("is_rel").isNotNull()).alias("nested_bad"),
+        f"CASE WHEN mtype = 'way' THEN CASE WHEN {inline} THEN {_coords_sql('mgeom')}"
+        " ELSE way_coords END END AS coords",
+        f"NOT {inline} AND coalesce(way_is_poly, false) AS needs_close",
+        "pos1 >= 0 AND is_rel IS NOT NULL AS nested_bad",
     )
 
 
@@ -602,11 +570,8 @@ def assemble_relations(
     kernels, one row per relation element without a center, keyed by its
     ``seq`` so relations that share an id keep their own members.
     ``rels_flagged``: frames.relations + precomputed ``is_poly`` column."""
-    no_center = rels_flagged.filter(F.col("center").isNull()).select(
-        "doc_id",
-        "seq",
-        F.col("id").alias("rel_id"),
-        "is_poly",
+    no_center = rels_flagged.filter("center IS NULL").selectExpr(
+        "doc_id", "seq", "id AS rel_id", "is_poly"
     )
 
     members = _member_rows(frames, ways_resolved)
@@ -621,8 +586,7 @@ def assemble_relations(
     # filters are applied as ONE disjunction so a single repartition + sort
     # + kernel pass serves both (per-group dispatch on is_poly).
     kept_members = flagged.filter(
-        (F.col("is_poly") & (F.col("pos1") < 0))
-        | ((~F.col("is_poly")) & ((F.col("mtype") == "way") | F.col("nested_bad")))
+        "(is_poly AND pos1 < 0) OR (NOT is_poly AND (mtype = 'way' OR nested_bad))"
     )
 
     # mtype is a filter-only column — the kernel never reads it, so it is
@@ -639,16 +603,16 @@ def assemble_relations(
     # replaces a left-anti join against the kernel OUTPUT, which made the
     # whole member-resolution + Python-kernel subtree execute twice per
     # action (once for results, once to find the missing relations).
-    sentinels = no_center.select(
+    sentinels = no_center.selectExpr(
         "doc_id",
         "seq",
         "rel_id",
-        F.lit(-1).alias("pos0"),
-        F.lit(-1).alias("pos1"),
-        F.lit(None).cast("long").alias("ref"),
-        F.lit(None).cast("string").alias("role"),
-        F.lit(None).cast("array<double>").alias("coords"),
-        F.lit(False).alias("nested_bad"),
+        "-1 AS pos0",
+        "-1 AS pos1",
+        "CAST(NULL AS BIGINT) AS ref",
+        "CAST(NULL AS STRING) AS role",
+        "CAST(NULL AS ARRAY<DOUBLE>) AS coords",
+        "false AS nested_bad",
         "is_poly",
     )
     return (

@@ -46,23 +46,15 @@ class ConversionError(RuntimeError):
     """strict-mode (raise_on_failure) conversion failure."""
 
 
-def _props_json(df: DataFrame, etype: str, include_nodes: bool) -> F.Column:
+def _props_json(etype: str, include_nodes: bool) -> F.Column:
     """GeoJSON properties as a JSON column — fixed-key projection with
-    null dropping (main.py:236-238 get_element_props)."""
-    fields = [
-        F.lit(etype).alias("type"),
-        F.col("id").alias("id"),
-        F.map_from_entries("tags").alias("tags"),
-    ]
-    if include_nodes:
-        fields.append(F.col("nodes").alias("nodes"))
-    fields += [
-        F.col("timestamp").alias("timestamp"),
-        F.col("user").alias("user"),
-        F.col("uid").alias("uid"),
-        F.col("version").alias("version"),
-    ]
-    return F.to_json(F.struct(*fields))
+    null dropping (main.py:236-238 get_element_props). One parsed SQL
+    expression: it costs one driver-to-JVM call to build."""
+    nodes = "'nodes', nodes, " if include_nodes else ""
+    return F.expr(
+        f"to_json(named_struct('type', '{etype}', 'id', id, 'tags', map_from_entries(tags), "
+        f"{nodes}'timestamp', timestamp, 'user', `user`, 'uid', uid, 'version', version))"
+    )
 
 
 def build_features(
@@ -143,78 +135,56 @@ def _build_plan(
             "left_anti",
         )
 
-    nodes_kept = _drop_used(frames.nodes)
-    node_feats = nodes_kept.select(
+    node_feats = _drop_used(frames.nodes).select(
         "doc_id",
         "seq",
-        F.lit("node").alias("etype"),
+        F.expr("'node' AS etype"),
         "id",
         point_gpb_udf(F.col("lon"), F.col("lat")).alias("gpb"),
-        _props_json(nodes_kept, "node", include_nodes=False).alias("props"),
+        _props_json("node", include_nodes=False).alias("props"),
     )
 
     way_feats = ways.select(
         "doc_id",
         "seq",
-        F.lit("way").alias("etype"),
+        F.expr("'way' AS etype"),
         "id",
         "gpb",
-        _props_json(ways, "way", include_nodes=True).alias("props"),
+        _props_json("way", include_nodes=True).alias("props"),
         "reason",
     )
 
-    rel_base = frames.relations
-    rel_feats = (
-        rel_base.join(rel_shapes.drop("rel_id"), ["doc_id", "seq"], "left")
-        .withColumn(
-            "gpb",
-            F.when(
-                F.col("center").isNotNull(),
-                point_gpb_udf(F.col("center.lon"), F.col("center.lat")),
-            ).otherwise(F.col("gpb")),
-        )
-        .withColumn(
-            "reason",
-            F.when(F.col("center").isNotNull(), F.lit(None).cast("string")).otherwise(
-                F.col("reason")
-            ),
-        )
-        .select(
-            "doc_id",
-            "seq",
-            F.lit("relation").alias("etype"),
-            "id",
-            "gpb",
-            _props_json(rel_base, "relation", include_nodes=False).alias("props"),
-            "reason",
-        )
-    )
-
-    other_failures = frames.others.select(
+    rel_feats = frames.relations.join(
+        rel_shapes.drop("rel_id"), ["doc_id", "seq"], "left"
+    ).select(
         "doc_id",
         "seq",
-        F.col("type").alias("etype"),
+        F.expr("'relation' AS etype"),
         "id",
-        F.lit("unsupported_type").alias("reason"),
-    )
-    failures = (
-        way_feats.filter(F.col("gpb").isNull())
-        .select("doc_id", "seq", "etype", "id", "reason")
-        .unionByName(
-            rel_feats.filter(F.col("gpb").isNull()).select(
-                "doc_id", "seq", "etype", "id", "reason"
-            )
+        F.when(
+            F.expr("center IS NOT NULL"),
+            point_gpb_udf(F.col("center.lon"), F.col("center.lat")),
         )
+        .otherwise(F.col("gpb"))
+        .alias("gpb"),
+        _props_json("relation", include_nodes=False).alias("props"),
+        F.expr("CASE WHEN center IS NULL THEN reason END AS reason"),
+    )
+
+    other_failures = frames.others.selectExpr(
+        "doc_id", "seq", "type AS etype", "id", "'unsupported_type' AS reason"
+    )
+    failure_cols = ["doc_id", "seq", "etype", "id", "reason"]
+    failures = (
+        way_feats.filter("gpb IS NULL")
+        .select(failure_cols)
+        .unionByName(rel_feats.filter("gpb IS NULL").select(failure_cols))
         .unionByName(other_failures)
     )
 
     features = (
-        node_feats.unionByName(
-            _drop_used(way_feats.filter(F.col("gpb").isNotNull()).drop("reason"))
-        )
-        .unionByName(
-            _drop_used(rel_feats.filter(F.col("gpb").isNotNull()).drop("reason"))
-        )
+        node_feats.unionByName(_drop_used(way_feats.filter("gpb IS NOT NULL").drop("reason")))
+        .unionByName(_drop_used(rel_feats.filter("gpb IS NOT NULL").drop("reason")))
     )
 
     return features, failures, ways, rels_flagged
@@ -227,34 +197,32 @@ def used_ref_ids(
 ) -> DataFrame:
     """DataFrame with one column ``used_id`` — the consumption-edge
     projection replacing the reference's side-effecting used marks."""
-    used_nodes = ways_resolved.select(
-        F.col("doc_id").alias("used_doc"),
-        F.explode(F.coalesce("used_node_refs", F.array())).alias("used_id"),
+    used_nodes = ways_resolved.selectExpr(
+        "doc_id AS used_doc", "explode(coalesce(used_node_refs, array())) AS used_id"
     )
 
-    rels = rels_flagged.filter(F.col("center").isNull())
-    mem = rels.select("doc_id", "id", "is_poly", F.explode("members").alias("m"))
+    mem = rels_flagged.filter("center IS NULL").selectExpr(
+        "doc_id", "is_poly", "explode(members) AS m"
+    )
 
-    way_ids = frames.ways.select("doc_id", F.col("id").alias("ref"))
     # multipolygon way members without inline geometry mark the deref'd way
+    way_ids = frames.ways.selectExpr("doc_id", "id AS ref")
     used_ways = (
         mem.filter(
-            F.col("is_poly")
-            & (F.col("m.mtype") == "way")
-            & (F.col("m.geometry").isNull() | (F.size("m.geometry") == 0))
+            "is_poly AND m.mtype = 'way' AND (m.geometry IS NULL OR size(m.geometry) = 0)"
         )
-        .select("doc_id", F.col("m.ref").alias("ref"))
+        .selectExpr("doc_id", "m.ref AS ref")
         .join(way_ids, ["doc_id", "ref"], "leftsemi")
-        .select(F.col("doc_id").alias("used_doc"), F.col("ref").alias("used_id"))
+        .selectExpr("doc_id AS used_doc", "ref AS used_id")
     )
 
-    rel_ids = frames.relations.select("doc_id", F.col("id").alias("ref"))
     # multiline relation-type members mark the deref'd relation
+    rel_ids = frames.relations.selectExpr("doc_id", "id AS ref")
     used_rels = (
-        mem.filter((~F.col("is_poly")) & (F.col("m.mtype") == "relation"))
-        .select("doc_id", F.col("m.ref").alias("ref"))
+        mem.filter("NOT is_poly AND m.mtype = 'relation'")
+        .selectExpr("doc_id", "m.ref AS ref")
         .join(rel_ids, ["doc_id", "ref"], "leftsemi")
-        .select(F.col("doc_id").alias("used_doc"), F.col("ref").alias("used_id"))
+        .selectExpr("doc_id AS used_doc", "ref AS used_id")
     )
 
     # NO distinct: the only consumer is a left-anti join, where duplicate

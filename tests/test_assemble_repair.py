@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.functions import geom
@@ -17,7 +18,12 @@ from osm2geojson_spark.operators.assemble import (
     close_coords_expr,
     way_gpb_udf,
 )
-from osm2geojson_spark.plans.pipeline import build_features, convert_elements, json2geojson
+from osm2geojson_spark.plans.pipeline import (
+    build_features,
+    collect_features,
+    convert_elements,
+    json2geojson,
+)
 from osm2geojson_spark.sources.normalize import normalize_elements
 
 
@@ -242,3 +248,54 @@ def test_relations_sharing_an_id_convert_their_own_members(spark):
         (100, {"type": "LineString", "coordinates": [[0.0, 0.0], [1.0, 1.0]]}),
         (100, {"type": "LineString", "coordinates": [[1.0, 1.0], [0.0, 2.0]]}),
     ]
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [
+        {"spark.sql.shuffle.partitions": "1", "spark.sql.adaptive.enabled": "false"},
+        {
+            "spark.sql.shuffle.partitions": "7",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ],
+    ids=["1-partition", "7-partitions-aqe-shuffle-joins"],
+)
+def test_duplicate_node_ids_last_occurrence_wins(spark, conf):
+    """Two node elements share id 1: a way takes node 1's coordinates from
+    the last occurrence (the reference's refs_index overwrite). A way whose
+    second ref is missing fails as node_missing, but its first node is
+    still marked used; the node after the missing ref is not. The used
+    anti-join matches on id only, so both rows of node 1 are dropped."""
+    elements = [
+        _node(1, 0.0, 0.0), _node(2, 1.0, 1.0), _node(3, 2.0, 2.0),
+        _node(4, 3.0, 3.0), _node(1, 5.0, 5.0), _node(6, 6.0, 6.0),
+        _way(10, [1, 2]),
+        _way(11, [3, 99, 4]),
+        _way(12, [6, 1, 6]),
+    ]
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        frames = normalize_elements(spark, elements)
+        features, failures = build_features(spark, frames)
+        got = [
+            (f["properties"]["type"], f["properties"]["id"], f["geometry"])
+            for f in collect_features(features)
+        ]
+        failed = sorted((r["id"], r["reason"]) for r in failures.collect())
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert got == [
+        ("node", 4, {"type": "Point", "coordinates": [3.0, 3.0]}),
+        ("way", 10, {"type": "LineString", "coordinates": [[5.0, 5.0], [1.0, 1.0]]}),
+        (
+            "way",
+            12,
+            {"type": "LineString", "coordinates": [[6.0, 6.0], [5.0, 5.0], [6.0, 6.0]]},
+        ),
+    ]
+    assert failed == [(11, "node_missing")]

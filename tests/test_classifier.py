@@ -4,7 +4,10 @@ the Python mirror and the Spark column expression."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
+from py4j.java_gateway import GatewayClient
 from pyspark.sql import functions as F
 
 from osm2geojson_spark.functions.classify import (
@@ -12,6 +15,7 @@ from osm2geojson_spark.functions.classify import (
     is_geometry_polygon_without_exceptions,
     polygon_flag_column,
 )
+from osm2geojson_spark.rulebooks import default_area_keys, default_polygon_features
 
 # (tags, closed, expected) — closed=None when the element has no geometry/nodes
 FULL_CASES = [
@@ -87,3 +91,81 @@ def test_tag_order_sensitivity_of_exception(spark):
         ).collect()
     }
     assert out[1] is False and out[2] is True
+
+
+# keys and values the rulebook literal must carry through unchanged
+ODD = ["it's", "back\\slash", 'say "hi"', "straße", "道路", "", "\\'", "tab\there"]
+
+ODD_AREA_KEYS = {
+    "it's": {"back\\slash": True, "": True, "straße": False},
+    "": {'say "hi"': True},
+    "道路": {},
+    "\\'": {"it's": True},
+}
+
+ODD_FEATURES = [
+    {"key": "straße", "polygon": "all", "values": []},
+    {"key": "it's", "polygon": "whitelist", "values": ["back\\slash", "", "straße"]},
+    {"key": "道路", "polygon": "blacklist", "values": ['say "hi"', "\\'"]},
+    {"key": "", "polygon": "blacklist", "values": ["tab\there"]},
+    {"key": "\\'", "polygon": "whitelist", "values": ["it's"]},
+    {"key": "\\'", "polygon": "blacklist", "values": [""]},
+]
+
+
+def test_spark_column_matches_mirror_on_escaped_rulebook_literals(spark):
+    """Custom rulebooks whose keys and values hold quotes, backslashes,
+    non-ASCII, tabs and empty strings classify every tag set as the Python
+    mirror does."""
+    tag_sets = [[(k, v)] for k in ODD for v in ODD]
+    tag_sets += [[(a, "x"), (b, v)] for a in ODD for b in ODD if a != b for v in ODD[:3]]
+    rows = [(i, tags, closed) for i, tags in enumerate(tag_sets) for closed in (None, True)]
+    df = spark.createDataFrame(
+        rows, "i int, tags array<struct<k:string,v:string>>, closed boolean"
+    )
+    got = {
+        (r["i"], r["closed"]): r["got"]
+        for r in df.withColumn(
+            "got",
+            polygon_flag_column(F.col("tags"), F.col("closed"), ODD_AREA_KEYS, ODD_FEATURES),
+        ).collect()
+    }
+    want = {
+        (i, closed): is_geometry_polygon(tags, closed, ODD_AREA_KEYS, ODD_FEATURES)
+        for i, tags, closed in rows
+    }
+    assert got == want
+    assert any(want.values()) and not all(want.values())
+
+
+def _py4j_calls_to_build(area_keys, polygon_features) -> int:
+    """py4j commands this thread sends while building the column. Released
+    Python handles are freed by py4j's finalizer thread, at its own pace, so
+    only this thread's commands are counted."""
+    me = threading.get_ident()
+    calls = 0
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        polygon_flag_column(F.col("tags"), F.col("closed"), area_keys, polygon_features)
+    finally:
+        GatewayClient.send_command = send
+    return calls
+
+
+def test_classifier_build_cost_does_not_grow_with_the_rulebooks(spark):
+    """Building the column makes as many JVM calls for rulebooks twice the
+    default size as for the defaults."""
+    area_keys, features = default_area_keys(), default_polygon_features()
+    area_keys2 = {**area_keys, **{k + "_2": v for k, v in area_keys.items()}}
+    features2 = features + [{**r, "key": r["key"] + "_2"} for r in features]
+    _py4j_calls_to_build(area_keys, features)  # first build warms py4j lookups
+    base = _py4j_calls_to_build(area_keys, features)
+    assert base > 0
+    assert _py4j_calls_to_build(area_keys2, features2) == base

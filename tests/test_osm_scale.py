@@ -65,13 +65,16 @@ def test_build_features_plan_shape(spark):
     relation member lookup's way shape + serializer, and the way shape once
     more under the way branch's pushed-down ``gpb IS NOT NULL`` filter.
     Member resolution is two joins (nested relation index, member lookup),
-    both broadcast at this size, so it adds no shuffle."""
+    both broadcast at this size, so it adds no shuffle. Way node resolution
+    joins the node rows directly (broadcast here), so it shuffles once, for
+    its per-way group: the node index's own aggregation shuffle (a max_by
+    per node id) is gone, 8 -> 7."""
     frames = synthetic_osm_frames(spark, 50)
     features, _ = build_features(spark, frames, materialize=None)
     plan = feature_json_lines(features)._jdf.queryExecution().executedPlan()
     names = _plan_node_names(plan)
     assert names.count("ArrowEvalPython") == 7
-    assert names.count("Exchange") + names.count("reuses:Exchange") == 8
+    assert names.count("Exchange") + names.count("reuses:Exchange") == 7
 
 
 def test_normalized_frames_are_local_relations(spark):
