@@ -23,6 +23,7 @@ geometries the reference manipulates in /root/reference/osm2geojson/main.py:14-2
 
 from __future__ import annotations
 
+import json
 import struct
 
 import numpy as np
@@ -166,6 +167,20 @@ def to_geojson_geometry(buf: bytes) -> dict:
     else:
         raise ValueError(f"bad gtype {t}")
     return {"type": name, "coordinates": coords}
+
+
+def feature_json(buf: bytes, props: str) -> str:
+    """One compact GeoJSON Feature line from a GPB and its properties JSON:
+    the per-feature part of the reference's single ``json.dump``
+    (main.py:118-133). Every serialized feature goes through here."""
+    return json.dumps(
+        {
+            "type": "Feature",
+            "properties": json.loads(props),
+            "geometry": to_geojson_geometry(buf),
+        },
+        separators=(",", ":"),
+    )
 
 
 def bbox(buf: bytes) -> tuple[float, float, float, float]:

@@ -18,8 +18,11 @@ The distributed re-expression of the reference's conversion pipeline
   two relations sharing an id each convert from their own members, and
   processed many-relations-per-Arrow-batch via ``mapInPandas``
   (``batched_rel_kernel``; per-group ``applyInPandas`` costs ~ms of
-  machinery per group).
+  machinery per group). The kernel also serializes each relation's
+  Feature, so a relation crosses into Python once.
   (reference: main.py:498-788)
+* points            : packed in the JVM (``point_gpb_sql``), never in
+  Python.
 * used-refs dedup   : a literal left **anti join** on ``id`` — id-only key,
   reproducing the reference's cross-type-collision quirk (main.py:168-180).
 
@@ -50,28 +53,6 @@ def _points(flat) -> np.ndarray:
     + 0.0 normalizes -0.0 to +0.0 (IEEE 754 round-to-nearest), so no -0.0
     reaches an emitted geometry."""
     return (np.asarray(flat, dtype=np.float64) + 0.0).reshape(-1, 2)
-
-
-@pandas_udf(T.BinaryType())
-def point_gpb_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """Point GPB (tag byte + 2 LE doubles) built for the whole Arrow batch
-    in one NumPy pass — node corpora are the largest element class, a
-    per-row struct.pack loop here was measurable at 10^6 nodes."""
-    n = len(lon)
-    if n == 0:
-        return pd.Series([], dtype=object)
-    x = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-    y = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-    rec = np.empty((n, 17), dtype=np.uint8)
-    rec[:, 0] = geom.GTYPE_POINT
-    rec[:, 1:9] = x.astype("<f8").view(np.uint8).reshape(n, 8)
-    rec[:, 9:17] = y.astype("<f8").view(np.uint8).reshape(n, 8)
-    blob = rec.tobytes()
-    valid = ~np.isnan(x)  # null/NaN lon -> null gpb (matches the old loop)
-    out = [
-        blob[i * 17 : (i + 1) * 17] if valid[i] else None for i in range(n)
-    ]
-    return pd.Series(out)
 
 
 # --------------------------------------------------------------------------
@@ -126,7 +107,9 @@ _REL_OUT_SCHEMA = T.StructType(
         T.StructField("seq", T.LongType()),
         T.StructField("rel_id", T.LongType()),
         T.StructField("gpb", T.BinaryType()),
+        T.StructField("props", T.StringType()),
         T.StructField("reason", T.StringType()),
+        T.StructField("line", T.StringType()),
     ]
 )
 
@@ -295,10 +278,14 @@ def _multiline_row(g: dict):
 
 
 def _dispatch_row(g: dict):
-    """Per-group poly/line dispatch (R18) INSIDE the kernel: every group
-    carries its relation's is_poly flag, so one repartition + sort + Arrow
-    pass serves both geometry paths — two separate grouped() paths executed
-    the whole member-resolution subtree twice per action."""
+    """Per-group dispatch (R18) INSIDE the kernel: every group carries its
+    relation's is_poly flag, so one repartition + sort + Arrow pass serves
+    both geometry paths — two separate grouped() paths executed the whole
+    member-resolution subtree twice per action. A relation with a center
+    arrives as its sentinel row alone and keeps the point built in the JVM
+    (null, with no reason, when the center's lon is NaN)."""
+    if g["has_center"][0]:
+        return g["point"][0], None
     v = g["is_poly"][0]
     poly = bool(v) if v is not None and v == v else False  # null/NaN -> line
     return (_multipolygon_row if poly else _multiline_row)(g)
@@ -311,24 +298,32 @@ def batched_rel_kernel(row_fn):
     each) — ruinous at millions of small relations. Instead the member rows
     arrive hash-partitioned by (doc_id, seq) and sorted within partitions,
     so each group is contiguous; a group possibly split across two Arrow
-    batches is carried over in ``buf`` and flushed at partition end."""
+    batches is carried over in ``buf`` and flushed at partition end.
+
+    Each group starts with its relation's sentinel row (pos0 = -1 sorts
+    before every member), which carries the properties JSON; the kernel
+    emits the serialized Feature line next to the shape, so a relation
+    crosses into Python once."""
 
     COLS = (
         "doc_id", "seq", "rel_id", "pos0", "pos1", "role", "ref", "coords",
-        "nested_bad", "is_poly",
+        "nested_bad", "is_poly", "props", "has_center", "point",
     )
     def fn(it):
         buf = None  # carried tail group: dict of numpy arrays
-        out_doc, out_seq, out_rel, out_gpb, out_reason = [], [], [], [], []
+        out = {c: [] for c in _REL_OUT_SCHEMA.fieldNames()}
 
         def emit(g, s, e):
             sub = {c: g[c][s:e] for c in COLS}
             gpb, reason = row_fn(sub)
-            out_doc.append(g["doc_id"][s])
-            out_seq.append(int(g["seq"][s]))
-            out_rel.append(int(g["rel_id"][s]))
-            out_gpb.append(gpb)
-            out_reason.append(reason)
+            props = g["props"][s]
+            out["doc_id"].append(g["doc_id"][s])
+            out["seq"].append(int(g["seq"][s]))
+            out["rel_id"].append(int(g["rel_id"][s]))
+            out["gpb"].append(gpb)
+            out["props"].append(props)
+            out["reason"].append(reason)
+            out["line"].append(None if gpb is None else geom.feature_json(gpb, props))
 
         for pdf in it:
             if len(pdf) == 0:
@@ -360,12 +355,7 @@ def batched_rel_kernel(row_fn):
                 emit(head, s, e)
         if buf is not None and len(buf["doc_id"]) > 0:
             emit(buf, 0, len(buf["doc_id"]))
-        yield pd.DataFrame(
-            {
-                "doc_id": out_doc, "seq": out_seq, "rel_id": out_rel,
-                "gpb": out_gpb, "reason": out_reason,
-            }
-        )
+        yield pd.DataFrame(out)
 
     return fn
 
@@ -374,15 +364,44 @@ def batched_rel_kernel(row_fn):
 # pipeline stages
 
 
+# The plan builders below write their column expressions as SQL text: one
+# parsed expression costs one driver-to-JVM call, where the same expression
+# composed from Column operators costs about ten per operator (PySpark
+# records each operator's Python call site in the JVM).
+
+
 def _coords_sql(structs: str) -> str:
     """SQL for array<struct<lon,lat>> -> flat array<double>."""
     return f"flatten(transform({structs}, p -> array(p.lon, p.lat)))"
 
 
-# The plan builders below write their column expressions as SQL text: one
-# parsed expression costs one driver-to-JVM call, where the same expression
-# composed from Column operators costs about ten per operator (PySpark
-# records each operator's Python call site in the JVM).
+def _le_double_sql(x: str) -> str:
+    """SQL for the 8 little-endian IEEE 754 bytes of a double, raw bits
+    kept (-0.0 and NaN payloads included), as ``struct.pack("<d")``."""
+    bits = f"CAST(java_method('java.lang.Double', 'doubleToRawLongBits', {x}) AS BIGINT)"
+    swapped = f"CAST(java_method('java.lang.Long', 'reverseBytes', {bits}) AS BIGINT)"
+    return f"unhex(lpad(hex({swapped}), 16, '0'))"
+
+
+def point_gpb_sql(lon: str, lat: str) -> str:
+    """SQL for a Point GPB (tag byte + 2 LE doubles), built in the JVM so a
+    point never crosses into Python just to be packed. Null when lon is
+    null or NaN; a null lat packs as NaN."""
+    x, y = _le_double_sql(lon), _le_double_sql(f"coalesce({lat}, double('NaN'))")
+    return (
+        f"CASE WHEN NOT isnan(coalesce({lon}, double('NaN')))"
+        f" THEN concat(X'{geom.GTYPE_POINT:02X}', {x}, {y}) END"
+    )
+
+
+def props_json_sql(etype: str, include_nodes: bool) -> str:
+    """SQL for the GeoJSON properties JSON: fixed-key projection with null
+    dropping (main.py:236-238 get_element_props)."""
+    nodes = "'nodes', nodes, " if include_nodes else ""
+    return (
+        f"to_json(named_struct('type', '{etype}', 'id', id, 'tags', map_from_entries(tags), "
+        f"{nodes}'timestamp', timestamp, 'user', `user`, 'uid', uid, 'version', version))"
+    )
 
 
 def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -> DataFrame:
@@ -466,10 +485,11 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     w = w.withColumn("_shape", way_gpb_udf(F.col("coords"), F.col("is_poly")))
     return w.withColumns(
         {
-            "gpb": F.when(
-                F.expr("branch = 'center'"),
-                point_gpb_udf(F.col("center.lon"), F.col("center.lat")),
-            ).otherwise(F.expr("CASE WHEN branch != 'none' THEN _shape.gpb END")),
+            "gpb": F.expr(
+                "CASE WHEN branch = 'center' THEN "
+                f"{point_gpb_sql('center.lon', 'center.lat')}"
+                " WHEN branch != 'none' THEN _shape.gpb END"
+            ),
             "reason": F.expr(
                 "CASE WHEN branch = 'center' THEN CAST(NULL AS STRING)"
                 " WHEN branch = 'none' THEN 'no_source'"
@@ -480,20 +500,22 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     ).drop("_shape", "resolved_coords")
 
 
-def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
+def _member_rows(
+    frames: ElementFrames, ways_resolved: DataFrame, rels_flagged: DataFrame
+) -> DataFrame:
     """Explode relation members into leaf rows and resolve every leaf with
     one lookup join. Leaves are the direct members (pos1 = -1) and the
     members of depth-1 nested relations (pos1 >= 0; multiline path). Output
-    one row per leaf member, keyed by the relation's ``seq``:
-    (doc_id, seq, rel_id, pos0, pos1, mtype, ref, role, coords, needs_close,
-    nested_bad).
+    one row per leaf member, keyed by the relation's ``seq`` and carrying
+    its ``is_poly`` flag: (doc_id, seq, rel_id, is_poly, pos0, pos1, mtype,
+    ref, role, coords, needs_close, nested_bad).
     """
     mem = (
-        frames.relations.filter("center IS NULL")
-        .selectExpr("doc_id", "seq", "id AS rel_id", "explode(members) AS m")
+        rels_flagged.filter("center IS NULL")
+        .selectExpr("doc_id", "seq", "id AS rel_id", "is_poly", "explode(members) AS m")
         .selectExpr(
-            "doc_id", "seq", "rel_id", "m.pos AS pos0", "-1 AS pos1", "m.mtype AS mtype",
-            "m.ref AS ref", "m.role AS role", "m.geometry AS mgeom",
+            "doc_id", "seq", "rel_id", "is_poly", "m.pos AS pos0", "-1 AS pos1",
+            "m.mtype AS mtype", "m.ref AS ref", "m.role AS role", "m.geometry AS mgeom",
         )
     )
 
@@ -504,11 +526,12 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
         mem.filter("mtype = 'relation'")
         .join(rel_index, ["doc_id", "ref"], "inner")
         .selectExpr(
-            "doc_id", "seq", "rel_id", "pos0", "role", "explode(nested_members) AS nm"
+            "doc_id", "seq", "rel_id", "is_poly", "pos0", "role",
+            "explode(nested_members) AS nm",
         )
         .selectExpr(
-            "doc_id", "seq", "rel_id", "pos0", "nm.pos AS pos1", "nm.mtype AS mtype",
-            "nm.ref AS ref", "role", "nm.geometry AS mgeom",
+            "doc_id", "seq", "rel_id", "is_poly", "pos0", "nm.pos AS pos1",
+            "nm.mtype AS mtype", "nm.ref AS ref", "role", "nm.geometry AS mgeom",
         )
     )
 
@@ -533,6 +556,7 @@ def _member_rows(frames: ElementFrames, ways_resolved: DataFrame) -> DataFrame:
         "doc_id",
         "seq",
         "rel_id",
+        "is_poly",
         "pos0",
         "pos1",
         "mtype",
@@ -566,26 +590,23 @@ def assemble_relations(
     ways_resolved: DataFrame,
     rels_flagged: DataFrame,
 ) -> DataFrame:
-    """Relation shapes: (doc_id, seq, rel_id, gpb, reason) via grouped Arrow
-    kernels, one row per relation element without a center, keyed by its
-    ``seq`` so relations that share an id keep their own members.
+    """Relation features from one grouped Arrow kernel pass: (doc_id, seq,
+    rel_id, gpb, props, reason, line), one row per relation element, keyed
+    by its ``seq`` so relations that share an id keep their own members.
+    ``line`` is the serialized GeoJSON Feature (null when ``gpb`` is). A
+    relation with a center keeps its point and has no member rows.
     ``rels_flagged``: frames.relations + precomputed ``is_poly`` column."""
-    no_center = rels_flagged.filter("center IS NULL").selectExpr(
-        "doc_id", "seq", "id AS rel_id", "is_poly"
-    )
-
-    members = _member_rows(frames, ways_resolved)
+    members = _member_rows(frames, ways_resolved, rels_flagged)
     members = members.withColumn(
         "coords", close_coords_expr(F.col("coords"), F.col("needs_close"))
     ).drop("needs_close")
-    flagged = members.join(no_center.drop("rel_id"), ["doc_id", "seq"], "inner")
 
     # multiline path: way members, direct or flattened from a nested
     # relation, plus the depth-2 markers; multipolygon path: direct members
     # only, of which it consumes the ways (main.py:596-607). Both path
     # filters are applied as ONE disjunction so a single repartition + sort
     # + kernel pass serves both (per-group dispatch on is_poly).
-    kept_members = flagged.filter(
+    kept_members = members.filter(
         "(is_poly AND pos1 < 0) OR (NOT is_poly AND (mtype = 'way' OR nested_bad))"
     )
 
@@ -602,11 +623,14 @@ def assemble_relations(
     # row filtered out) is failed as "no_members" INSIDE the kernel. This
     # replaces a left-anti join against the kernel OUTPUT, which made the
     # whole member-resolution + Python-kernel subtree execute twice per
-    # action (once for results, once to find the missing relations).
-    sentinels = no_center.selectExpr(
+    # action (once for results, once to find the missing relations). The
+    # sentinel also carries what only the relation row has: its properties
+    # JSON and, for a relation with a center, the point (both built in the
+    # JVM); member rows leave those columns null.
+    sentinels = rels_flagged.selectExpr(
         "doc_id",
         "seq",
-        "rel_id",
+        "id AS rel_id",
         "-1 AS pos0",
         "-1 AS pos1",
         "CAST(NULL AS BIGINT) AS ref",
@@ -614,10 +638,13 @@ def assemble_relations(
         "CAST(NULL AS ARRAY<DOUBLE>) AS coords",
         "false AS nested_bad",
         "is_poly",
+        f"{props_json_sql('relation', include_nodes=False)} AS props",
+        "center IS NOT NULL AS has_center",
+        f"{point_gpb_sql('center.lon', 'center.lat')} AS point",
     )
     return (
         kept_members.select(cols)
-        .unionByName(sentinels.select(cols))
+        .unionByName(sentinels, allowMissingColumns=True)
         .repartition("doc_id", "seq")
         .sortWithinPartitions("doc_id", "seq", "pos0", "pos1")
         .mapInPandas(batched_rel_kernel(_dispatch_row), schema=_REL_OUT_SCHEMA)

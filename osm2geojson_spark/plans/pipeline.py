@@ -17,26 +17,37 @@ reference's in-place ``ref["used"] = id`` mutation (main.py:293,318-320,529,609)
 The dedup filter itself is a left **anti join on id only** (not (type, id)) —
 faithfully reproducing the reference's cross-type-collision behavior.
 
+Python crossings, per element class: a node crosses once (the serializer,
+after the anti join; its point is packed in the JVM), a way twice (the
+shape kernel below the ways cache, the serializer after the anti join), a
+relation once (its kernel emits the serialized line with the shape). Each
+task entering a Python evaluator pays a fixed cost of the order of 100 ms
+on a small box, rows or not, so the plan keeps evaluators few.
+
 The distributed sink (``write_geojson_lines``) persists the serialized
 lines before its ``repartitionByRange``: the range partitioner's sample job,
 its skew re-sample job and the shuffle map stage each evaluate the child,
-and without the cache each would re-run the relation kernel, the element
-UDFs and the serializer.
+and without the cache each would re-run the relation kernel and the
+serializers.
 """
 
 from __future__ import annotations
 
 import json
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from ..functions import geom
 from ..functions.classify import polygon_flag_column
 from ..operators.assemble import (
-    point_gpb_udf,
-    resolve_ways,
     assemble_relations,
+    point_gpb_sql,
+    props_json_sql,
+    resolve_ways,
 )
 from ..sources.normalize import ElementFrames, normalize_documents, normalize_elements
 from ..sources import xml_source
@@ -46,15 +57,16 @@ class ConversionError(RuntimeError):
     """strict-mode (raise_on_failure) conversion failure."""
 
 
-def _props_json(etype: str, include_nodes: bool) -> F.Column:
-    """GeoJSON properties as a JSON column — fixed-key projection with
-    null dropping (main.py:236-238 get_element_props). One parsed SQL
-    expression: it costs one driver-to-JVM call to build."""
-    nodes = "'nodes', nodes, " if include_nodes else ""
-    return F.expr(
-        f"to_json(named_struct('type', '{etype}', 'id', id, 'tags', map_from_entries(tags), "
-        f"{nodes}'timestamp', timestamp, 'user', `user`, 'uid', uid, 'version', version))"
-    )
+@pandas_udf(T.StringType())
+def _feature_line_udf(gpb, props):
+    """The Arrow-batched serializer of the node and way branches (GPB
+    geometry decode + props passthrough are per-row ragged work, so this is
+    the sanctioned Python path); relations serialize inside their kernel."""
+    return pd.Series([geom.feature_json(g, p) for g, p in zip(gpb, props)])
+
+
+def _with_line(df: DataFrame) -> DataFrame:
+    return df.withColumn("line", _feature_line_udf(F.col("gpb"), F.col("props")))
 
 
 def build_features(
@@ -68,7 +80,8 @@ def build_features(
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (features_df, failures_df).
 
-    features_df: seq, etype, id, gpb, props — one row per converted element.
+    features_df: doc_id, seq, etype, id, gpb, props, line — one row per
+    converted element; ``line`` is its serialized GeoJSON Feature.
     failures_df: seq, etype, id, reason — unconverted elements (reference
     logs "Element not converted"; strict mode raises on the first).
 
@@ -135,40 +148,32 @@ def _build_plan(
             "left_anti",
         )
 
-    node_feats = _drop_used(frames.nodes).select(
-        "doc_id",
-        "seq",
-        F.expr("'node' AS etype"),
-        "id",
-        point_gpb_udf(F.col("lon"), F.col("lat")).alias("gpb"),
-        _props_json("node", include_nodes=False).alias("props"),
+    # nodes and ways cross into Python in the serializer, after their anti
+    # join; relations in their kernel, which also serializes; the way shape
+    # kernel sits below the ways cache
+    node_feats = _with_line(
+        _drop_used(frames.nodes).selectExpr(
+            "doc_id",
+            "seq",
+            "'node' AS etype",
+            "id",
+            f"{point_gpb_sql('lon', 'lat')} AS gpb",
+            f"{props_json_sql('node', include_nodes=False)} AS props",
+        )
     )
 
-    way_feats = ways.select(
+    way_feats = ways.selectExpr(
         "doc_id",
         "seq",
-        F.expr("'way' AS etype"),
+        "'way' AS etype",
         "id",
         "gpb",
-        _props_json("way", include_nodes=True).alias("props"),
+        f"{props_json_sql('way', include_nodes=True)} AS props",
         "reason",
     )
 
-    rel_feats = frames.relations.join(
-        rel_shapes.drop("rel_id"), ["doc_id", "seq"], "left"
-    ).select(
-        "doc_id",
-        "seq",
-        F.expr("'relation' AS etype"),
-        "id",
-        F.when(
-            F.expr("center IS NOT NULL"),
-            point_gpb_udf(F.col("center.lon"), F.col("center.lat")),
-        )
-        .otherwise(F.col("gpb"))
-        .alias("gpb"),
-        _props_json("relation", include_nodes=False).alias("props"),
-        F.expr("CASE WHEN center IS NULL THEN reason END AS reason"),
+    rel_feats = rel_shapes.selectExpr(
+        "doc_id", "seq", "'relation' AS etype", "rel_id AS id", "gpb", "props", "reason", "line"
     )
 
     other_failures = frames.others.selectExpr(
@@ -182,10 +187,9 @@ def _build_plan(
         .unionByName(other_failures)
     )
 
-    features = (
-        node_feats.unionByName(_drop_used(way_feats.filter("gpb IS NOT NULL").drop("reason")))
-        .unionByName(_drop_used(rel_feats.filter("gpb IS NOT NULL").drop("reason")))
-    )
+    features = node_feats.unionByName(
+        _with_line(_drop_used(way_feats.filter("gpb IS NOT NULL").drop("reason")))
+    ).unionByName(_drop_used(rel_feats.filter("gpb IS NOT NULL").drop("reason")))
 
     return features, failures, ways, rels_flagged
 
@@ -233,35 +237,16 @@ def used_ref_ids(
 
 def feature_json_lines(features: DataFrame) -> DataFrame:
     """(doc_id, seq, line): one complete GeoJSON Feature as a compact JSON
-    string per row — the distributed serialization the reference performs
-    driver-side in one json.dump (main.py:118-133, __main__.py:115-135).
+    string per row of ``build_features``' output — the distributed
+    serialization the reference performs driver-side in one json.dump
+    (main.py:118-133, __main__.py:115-135).
 
-    The serializer is an Arrow-batched pandas UDF (GPB geometry decode +
-    props passthrough are per-row ragged work, so this is the sanctioned
-    Python path); everything around it stays a DataFrame, so the sink
-    scales with executors instead of driver memory."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _fjson(gpb, props):
-        import pandas as pd
-
-        out = [None] * len(gpb)
-        for i, (g, p) in enumerate(zip(gpb, props)):
-            out[i] = json.dumps(
-                {
-                    "type": "Feature",
-                    "properties": json.loads(p),
-                    "geometry": geom.to_geojson_geometry(g),
-                },
-                separators=(",", ":"),
-            )
-        return pd.Series(out)
-
-    return features.select(
-        "doc_id", "seq", _fjson(F.col("gpb"), F.col("props")).alias("line")
-    )
+    The lines are built inside ``build_features``' branches, so selecting
+    them adds no Python pass: a conversion crosses into Python once per
+    element class (the node serializer, the way serializer, the relation
+    kernel) plus the way shape kernel. Everything around them stays a
+    DataFrame, so the sink scales with executors instead of driver memory."""
+    return features.select("doc_id", "seq", "line")
 
 
 def write_geojson_lines(
@@ -271,7 +256,7 @@ def write_geojson_lines(
     mode: str = "error",
 ) -> None:
     """Distributed GeoJSON-lines sink (SURVEY §1.2's S10 scale mapping:
-    vectorized feature→JSON pandas UDF + ``df.write.text``): one Feature
+    executor-side feature→JSON + ``df.write.text``): one Feature
     per line, directory-partitioned by ``doc_id``, and — because the rows
     are range-repartitioned on (doc_id, seq) and sorted within partitions —
     reading each doc directory's part files in FILENAME order replays the
@@ -283,8 +268,8 @@ def write_geojson_lines(
     The serialized lines are persisted before the range exchange: its
     partitioner samples the child in one job, re-samples skewed partitions
     in another, and the shuffle map stage reads it a third time, so an
-    unpersisted child would run the relation kernel, the element UDFs and
-    the serializer three times. The cache is released in ``finally``, also
+    unpersisted child would run the relation kernel and the serializers
+    three times. The cache is released in ``finally``, also
     when the write fails."""
     lines = feature_json_lines(features).persist()
     try:
@@ -326,9 +311,9 @@ def read_geojson_lines(spark: SparkSession, path: str) -> dict[str, list[dict]]:
 
 def collect_features_by_doc(features: DataFrame) -> dict[str, list[dict]]:
     """Driver-side materialization, grouped per document, each in input
-    order — the golden-test sink. It delegates serialization to the SAME
-    vectorized ``feature_json_lines`` UDF the distributed sink writes
-    through, so every golden fixture also pins the scale path's bytes."""
+    order — the golden-test sink. It reads the SAME ``feature_json_lines``
+    the distributed sink writes, so every golden fixture also pins the
+    scale path's bytes."""
     rows = feature_json_lines(features).collect()
     rows.sort(key=lambda r: (r["doc_id"], r["seq"]))
     out: dict[str, list[dict]] = {}

@@ -3,6 +3,8 @@ closed-form ground truth at any n_rel (the bench osm_convert workload)."""
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -47,13 +49,20 @@ def test_synthetic_corpus_conversion(spark):
 
 def _plan_node_names(plan) -> list[str]:
     """Node names of an executed plan; a reused exchange also adds
-    "reuses:<name of the exchange it reuses>"."""
-    names, stack = [], [plan]
+    "reuses:<name of the exchange it reuses>". The plan a cached relation
+    was built from counts once, however many scans read it."""
+    names, stack, cached = [], [plan], set()
     while stack:
         node = stack.pop()
         names.append(node.nodeName())
         if node.nodeName() == "ReusedExchange":
             names.append("reuses:" + node.child().nodeName())
+        if node.nodeName() == "InMemoryTableScan":
+            cached_plan = node.relation().cachedPlan()
+            key = cached_plan.treeString()
+            if key not in cached:
+                cached.add(key)
+                stack.append(cached_plan)
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
     return names
@@ -61,20 +70,45 @@ def _plan_node_names(plan) -> list[str]:
 
 def test_build_features_plan_shape(spark):
     """Python crossings and shuffles of the unmaterialized conversion plan.
-    ArrowEvalPython: node point + serializer, way shape + serializer, the
-    relation member lookup's way shape + serializer, and the way shape once
-    more under the way branch's pushed-down ``gpb IS NOT NULL`` filter.
-    Member resolution is two joins (nested relation index, member lookup),
-    both broadcast at this size, so it adds no shuffle. Way node resolution
-    joins the node rows directly (broadcast here), so it shuffles once, for
-    its per-way group: the node index's own aggregation shuffle (a max_by
-    per node id) is gone, 8 -> 7."""
+    ArrowEvalPython: the node serializer, the way shape + serializer, the
+    relation member lookup's way shape, and the way shape once more under
+    the way branch's pushed-down ``gpb IS NOT NULL`` filter; points are
+    packed in the JVM and relations serialize in their kernel, 7 -> 5.
+    MapInPandas: the relation kernel. Exchanges: both sides of the node
+    branch's anti join, the way branch's element side (its used side
+    reuses the node branch's), the relation branch's used side (the
+    kernel output is already partitioned), way node resolution's group
+    (its node join broadcasts here), the relation repartition, and both
+    sides of the member lookup join. That lookup broadcast at this size
+    while the way shape's evaluator also output the point UDF's column:
+    the narrower evaluator output raises the optimizer's size estimate of
+    the lookup side past the broadcast threshold, 7 -> 9. With AQE on (the
+    benchmark's session) the join is planned from runtime sizes."""
     frames = synthetic_osm_frames(spark, 50)
     features, _ = build_features(spark, frames, materialize=None)
     plan = feature_json_lines(features)._jdf.queryExecution().executedPlan()
     names = _plan_node_names(plan)
-    assert names.count("ArrowEvalPython") == 7
-    assert names.count("Exchange") + names.count("reuses:Exchange") == 7
+    assert names.count("ArrowEvalPython") == 5
+    assert names.count("MapInPandas") == 1
+    assert names.count("Exchange") + names.count("reuses:Exchange") == 9
+
+
+def test_cached_conversion_plan_python_evaluators(spark):
+    """The plan the scale path runs (``materialize="cache"``, then the
+    sink's lines) has at most one Python evaluator per element class plus
+    the way shape kernel, counted under the cached ways too: the node
+    serializer, the way serializer, the relation kernel (which serializes
+    its own lines) and the way shape kernel below the cache."""
+    spark.catalog.clearCache()
+    frames = synthetic_osm_frames(spark, 50)
+    features, _ = build_features(spark, frames, materialize="cache")
+    try:
+        plan = feature_json_lines(features)._jdf.queryExecution().executedPlan()
+        names = _plan_node_names(plan)
+    finally:
+        spark.catalog.clearCache()
+    assert "InMemoryTableScan" in names
+    assert names.count("ArrowEvalPython") + names.count("MapInPandas") <= 4
 
 
 def test_normalized_frames_are_local_relations(spark):
@@ -111,3 +145,61 @@ def test_normalize_rejects_bad_input_naming_the_field(spark):
         normalize_elements(
             spark, [{"type": "node", "id": "x", "lon": 1.0, "lat": 2.0}]
         )
+
+
+_NAN = float("nan")
+
+
+def _point_elements(cases, base):
+    """A node, a center way and a center relation per (lon, lat) case, ids
+    ``base + 10 * i + (0, 1, 2)``; nothing references the node, so it stays
+    a feature. Centers need both keys, so a null coordinate is node-only."""
+    out = []
+    for i, (lon, lat) in enumerate(cases):
+        k = base + 10 * i
+        out.append({"type": "node", "id": k, "lon": lon, "lat": lat, "tags": {"n": str(i)}})
+        if lon is not None and lat is not None:
+            c = {"lon": lon, "lat": lat}
+            out.append({"type": "way", "id": k + 1, "center": c, "tags": {"w": str(i)}})
+            out.append({"type": "relation", "id": k + 2, "center": c, "members": []})
+    return out
+
+
+def test_point_edge_values_pack_and_serialize_as_struct_pack(spark):
+    """Points are packed in the JVM: raw IEEE 754 bits as ``struct.pack``
+    writes them (``geom.point``), -0.0, subnormal-range and NaN values
+    included, and serialized from those bytes (``to_geojson_geometry``).
+    Node, center-way and center-relation points alike; a null lat packs as
+    NaN. A null or NaN lon gives no point: the node keeps a null gpb, and
+    a center way or relation fails with no reason."""
+    from osm2geojson_spark import json2shapes
+
+    ok = [(-0.0, -0.0), (0.0, -0.0), (1e-300, -1e-300), (180.0, -180.0),
+          (-180.0, 180.0), (-179.99999999, 90.0), (1.0, _NAN), (2.0, None)]
+    elements = _point_elements(ok, 1000)
+    shapes = json2shapes(spark, {"elements": elements})
+    assert len(shapes) == len(elements)
+    want = {}
+    for seq, (el, (gpb, props)) in enumerate(zip(elements, shapes)):
+        assert (props["type"], props["id"]) == (el["type"], el["id"])
+        p = el.get("center") or el
+        lat = _NAN if p["lat"] is None else p["lat"]
+        point = GEO.point(p["lon"], lat)
+        assert bytes(gpb) == point, el
+        want[seq] = json.dumps(
+            {"type": "Feature", "properties": props,
+             "geometry": GEO.to_geojson_geometry(point)},
+            separators=(",", ":"),
+        )
+    features, _ = build_features(spark, normalize_elements(spark, elements))
+    got = {r["seq"]: r["line"] for r in feature_json_lines(features).collect()}
+    assert got == want
+
+    bad = [(_NAN, 1.0), (None, 1.0)]
+    elements = _point_elements(bad, 2000)
+    shapes = json2shapes(spark, {"elements": elements})
+    assert [(g, p["id"]) for g, p in shapes] == [(None, 2000), (None, 2010)]
+    _, failures = build_features(spark, normalize_elements(spark, elements))
+    assert sorted((r["id"], r["reason"]) for r in failures.collect()) == [
+        (2001, None), (2002, None)
+    ]
