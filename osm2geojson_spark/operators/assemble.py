@@ -21,8 +21,9 @@ The distributed re-expression of the reference's conversion pipeline
   machinery per group). The kernel also serializes each relation's
   Feature, so a relation crosses into Python once.
   (reference: main.py:498-788)
-* points            : packed in the JVM (``point_gpb_sql``), never in
-  Python.
+* points            : packed (``point_gpb``) where the element already
+  crosses into Python: the node serializer, the way shape kernel, the
+  relation kernel; never in an evaluator of their own.
 * used-refs dedup   : a literal left **anti join** on ``id`` — id-only key,
   reproducing the reference's cross-type-collision quirk (main.py:168-180).
 
@@ -55,6 +56,14 @@ def _points(flat) -> np.ndarray:
     return (np.asarray(flat, dtype=np.float64) + 0.0).reshape(-1, 2)
 
 
+def point_gpb(lon, lat) -> bytes | None:
+    """Point GPB of one coordinate pair as an Arrow batch holds it (null ->
+    NaN): None when lon is NaN, and a NaN lat packs as NaN."""
+    if lon is None or lon != lon:
+        return None
+    return geom.point(lon, float("nan") if lat is None else lat)
+
+
 # --------------------------------------------------------------------------
 # way shape kernel: flat coords + polygon flag -> GPB + failure reason
 
@@ -64,9 +73,16 @@ _WAY_SHAPE_T = T.StructType(
 
 
 @pandas_udf(_WAY_SHAPE_T)
-def way_gpb_udf(coords: pd.Series, is_poly: pd.Series) -> pd.DataFrame:
+def way_gpb_udf(coords: pd.Series, is_poly: pd.Series, branch: pd.Series) -> pd.DataFrame:
+    """A way's shape from its flat coordinates. A ``'center'`` way's
+    coordinates are its center, and its shape is that point (None, with no
+    reason, when the center's lon is NaN)."""
     gpbs, reasons = [], []
-    for flat, poly in zip(coords, is_poly):
+    for flat, poly, kind in zip(coords, is_poly, branch):
+        if kind == "center":
+            gpbs.append(point_gpb(flat[0], flat[1]))
+            reasons.append(None)
+            continue
         if flat is None:
             gpbs.append(None)
             reasons.append("no_coords")
@@ -282,10 +298,10 @@ def _dispatch_row(g: dict):
     relation's is_poly flag, so one repartition + sort + Arrow pass serves
     both geometry paths — two separate grouped() paths executed the whole
     member-resolution subtree twice per action. A relation with a center
-    arrives as its sentinel row alone and keeps the point built in the JVM
-    (null, with no reason, when the center's lon is NaN)."""
+    arrives as its sentinel row alone and its shape is that point (None,
+    with no reason, when the center's lon is NaN)."""
     if g["has_center"][0]:
-        return g["point"][0], None
+        return point_gpb(g["center_lon"][0], g["center_lat"][0]), None
     v = g["is_poly"][0]
     poly = bool(v) if v is not None and v == v else False  # null/NaN -> line
     return (_multipolygon_row if poly else _multiline_row)(g)
@@ -307,7 +323,7 @@ def batched_rel_kernel(row_fn):
 
     COLS = (
         "doc_id", "seq", "rel_id", "pos0", "pos1", "role", "ref", "coords",
-        "nested_bad", "is_poly", "props", "has_center", "point",
+        "nested_bad", "is_poly", "props", "has_center", "center_lon", "center_lat",
     )
     def fn(it):
         buf = None  # carried tail group: dict of numpy arrays
@@ -375,25 +391,6 @@ def _coords_sql(structs: str) -> str:
     return f"flatten(transform({structs}, p -> array(p.lon, p.lat)))"
 
 
-def _le_double_sql(x: str) -> str:
-    """SQL for the 8 little-endian IEEE 754 bytes of a double, raw bits
-    kept (-0.0 and NaN payloads included), as ``struct.pack("<d")``."""
-    bits = f"CAST(java_method('java.lang.Double', 'doubleToRawLongBits', {x}) AS BIGINT)"
-    swapped = f"CAST(java_method('java.lang.Long', 'reverseBytes', {bits}) AS BIGINT)"
-    return f"unhex(lpad(hex({swapped}), 16, '0'))"
-
-
-def point_gpb_sql(lon: str, lat: str) -> str:
-    """SQL for a Point GPB (tag byte + 2 LE doubles), built in the JVM so a
-    point never crosses into Python just to be packed. Null when lon is
-    null or NaN; a null lat packs as NaN."""
-    x, y = _le_double_sql(lon), _le_double_sql(f"coalesce({lat}, double('NaN'))")
-    return (
-        f"CASE WHEN NOT isnan(coalesce({lon}, double('NaN')))"
-        f" THEN concat(X'{geom.GTYPE_POINT:02X}', {x}, {y}) END"
-    )
-
-
 def props_json_sql(etype: str, include_nodes: bool) -> str:
     """SQL for the GeoJSON properties JSON: fixed-key projection with null
     dropping (main.py:236-238 get_element_props)."""
@@ -407,8 +404,9 @@ def props_json_sql(etype: str, include_nodes: bool) -> str:
 def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -> DataFrame:
     """All top-level ways -> coords + classification + shape.
 
-    Columns: seq, id, branch, coords(array<double>), closed, is_poly, gpb, reason,
-    used_node_refs(array<long>), nodes, tags, meta...
+    Columns: seq, id, branch, coords(array<double>; a center way's center),
+    closed, is_poly, gpb, reason, used_node_refs(array<long>), nodes, tags,
+    meta...
     """
     w = frames.ways.withColumn(
         "branch",
@@ -466,7 +464,8 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     w = w.withColumns(
         {
             "coords": F.expr(
-                f"CASE WHEN branch = 'geom' THEN {_coords_sql('geometry')}"
+                "CASE WHEN branch = 'center' THEN array(center.lon, center.lat)"
+                f" WHEN branch = 'geom' THEN {_coords_sql('geometry')}"
                 " WHEN branch = 'nodes' THEN resolved_coords END"
             ),
             "closed": F.expr(
@@ -482,14 +481,12 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
         "is_poly", polygon_flag_column(F.col("tags"), F.col("closed"), area_keys, polygon_features)
     )
 
-    w = w.withColumn("_shape", way_gpb_udf(F.col("coords"), F.col("is_poly")))
+    w = w.withColumn(
+        "_shape", way_gpb_udf(F.col("coords"), F.col("is_poly"), F.col("branch"))
+    )
     return w.withColumns(
         {
-            "gpb": F.expr(
-                "CASE WHEN branch = 'center' THEN "
-                f"{point_gpb_sql('center.lon', 'center.lat')}"
-                " WHEN branch != 'none' THEN _shape.gpb END"
-            ),
+            "gpb": F.col("_shape.gpb"),
             "reason": F.expr(
                 "CASE WHEN branch = 'center' THEN CAST(NULL AS STRING)"
                 " WHEN branch = 'none' THEN 'no_source'"
@@ -508,7 +505,7 @@ def _member_rows(
     members of depth-1 nested relations (pos1 >= 0; multiline path). Output
     one row per leaf member, keyed by the relation's ``seq`` and carrying
     its ``is_poly`` flag: (doc_id, seq, rel_id, is_poly, pos0, pos1, mtype,
-    ref, role, coords, needs_close, nested_bad).
+    ref, role, coords, nested_bad).
     """
     mem = (
         rels_flagged.filter("center IS NULL")
@@ -535,22 +532,34 @@ def _member_rows(
         )
     )
 
-    # one lookup keyed by member type. A way resolves to its own shape
-    # coordinates — the closed exterior when the way classifies as polygon
-    # (main.py:334-336). A relation id found under a nested relation is a
-    # depth-2 member, which aborts the relation (reference KeyError at
-    # main.py:529 for id-less nested rel dicts).
-    lookup = ways_resolved.selectExpr(
-        "doc_id",
-        "id AS ref",
-        "'way' AS mtype",
-        "CASE WHEN gpb IS NOT NULL AND branch != 'center' THEN coords END AS way_coords",
-        "is_poly AS way_is_poly",
+    # one lookup keyed by member type: ``l_rel`` is false for a way and true
+    # for a relation, and a node member's key is null, so it matches
+    # nothing. A way resolves to its own shape coordinates, closed once per
+    # way when it classifies as polygon (main.py:334-336). A relation id
+    # found under a nested relation is a depth-2 member, which aborts the
+    # relation (reference KeyError at main.py:529 for id-less nested rel
+    # dicts). The lookup carries no column the join does not need: it is
+    # the build side of a broadcast at small inputs.
+    lookup = ways_resolved.select(
+        F.expr("doc_id AS l_doc"),
+        F.expr("id AS l_ref"),
+        F.expr("false AS l_rel"),
+        close_coords_expr(
+            F.expr("CASE WHEN gpb IS NOT NULL AND branch != 'center' THEN coords END"),
+            F.col("is_poly"),
+        ).alias("way_coords"),
     ).unionByName(
-        frames.relations.selectExpr("doc_id", "id AS ref", "'relation' AS mtype", "true AS is_rel"),
+        frames.relations.selectExpr("doc_id AS l_doc", "id AS l_ref", "true AS l_rel"),
         allowMissingColumns=True,
     )
-    leaves = mem.unionByName(nested).join(lookup, ["doc_id", "ref", "mtype"], "left")
+    leaves = mem.unionByName(nested).join(
+        lookup,
+        F.expr(
+            "doc_id = l_doc AND ref = l_ref"
+            " AND CASE mtype WHEN 'way' THEN false WHEN 'relation' THEN true END = l_rel"
+        ),
+        "left",
+    )
     inline = "(mgeom IS NOT NULL AND size(mgeom) > 0)"
     return leaves.selectExpr(
         "doc_id",
@@ -564,15 +573,14 @@ def _member_rows(
         "role",
         f"CASE WHEN mtype = 'way' THEN CASE WHEN {inline} THEN {_coords_sql('mgeom')}"
         " ELSE way_coords END END AS coords",
-        f"NOT {inline} AND coalesce(way_is_poly, false) AS needs_close",
-        "pos1 >= 0 AND is_rel IS NOT NULL AS nested_bad",
+        "pos1 >= 0 AND coalesce(l_rel, false) AS nested_bad",
     )
 
 
 def close_coords_expr(coords: Column, needs_close: Column) -> Column:
     """K.close_ring as a pure column expression over flat coords: append the
     first point when the ring is open. JVM-side — no Python/Arrow pass over
-    every member row just to close the few polygon-classified ways. Spark
+    every way just to close the polygon-classified ones. Spark
     compares doubles with -0.0 == 0.0, so such a ring counts as closed, as
     it does in the kernels after their + 0.0."""
     first_pt = F.slice(coords, 1, 2)
@@ -597,9 +605,6 @@ def assemble_relations(
     relation with a center keeps its point and has no member rows.
     ``rels_flagged``: frames.relations + precomputed ``is_poly`` column."""
     members = _member_rows(frames, ways_resolved, rels_flagged)
-    members = members.withColumn(
-        "coords", close_coords_expr(F.col("coords"), F.col("needs_close"))
-    ).drop("needs_close")
 
     # multiline path: way members, direct or flattened from a nested
     # relation, plus the depth-2 markers; multipolygon path: direct members
@@ -625,8 +630,8 @@ def assemble_relations(
     # whole member-resolution + Python-kernel subtree execute twice per
     # action (once for results, once to find the missing relations). The
     # sentinel also carries what only the relation row has: its properties
-    # JSON and, for a relation with a center, the point (both built in the
-    # JVM); member rows leave those columns null.
+    # JSON (built in the JVM) and its center; member rows leave those
+    # columns null.
     sentinels = rels_flagged.selectExpr(
         "doc_id",
         "seq",
@@ -640,7 +645,8 @@ def assemble_relations(
         "is_poly",
         f"{props_json_sql('relation', include_nodes=False)} AS props",
         "center IS NOT NULL AS has_center",
-        f"{point_gpb_sql('center.lon', 'center.lat')} AS point",
+        "center.lon AS center_lon",
+        "center.lat AS center_lat",
     )
     return (
         kept_members.select(cols)

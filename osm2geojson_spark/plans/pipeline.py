@@ -18,8 +18,8 @@ The dedup filter itself is a left **anti join on id only** (not (type, id)) —
 faithfully reproducing the reference's cross-type-collision behavior.
 
 Python crossings, per element class: a node crosses once (the serializer,
-after the anti join; its point is packed in the JVM), a way twice (the
-shape kernel below the ways cache, the serializer after the anti join), a
+after the anti join, which also packs its point), a way twice (the shape
+kernel below the ways cache, the serializer after the anti join), a
 relation once (its kernel emits the serialized line with the shape). Each
 task entering a Python evaluator pays a fixed cost of the order of 100 ms
 on a small box, rows or not, so the plan keeps evaluators few.
@@ -45,7 +45,7 @@ from ..functions import geom
 from ..functions.classify import polygon_flag_column
 from ..operators.assemble import (
     assemble_relations,
-    point_gpb_sql,
+    point_gpb,
     props_json_sql,
     resolve_ways,
 )
@@ -59,14 +59,28 @@ class ConversionError(RuntimeError):
 
 @pandas_udf(T.StringType())
 def _feature_line_udf(gpb, props):
-    """The Arrow-batched serializer of the node and way branches (GPB
-    geometry decode + props passthrough are per-row ragged work, so this is
-    the sanctioned Python path); relations serialize inside their kernel."""
+    """The Arrow-batched serializer of the way branch (GPB geometry decode +
+    props passthrough are per-row ragged work, so this is the sanctioned
+    Python path)."""
     return pd.Series([geom.feature_json(g, p) for g, p in zip(gpb, props)])
 
 
 def _with_line(df: DataFrame) -> DataFrame:
     return df.withColumn("line", _feature_line_udf(F.col("gpb"), F.col("props")))
+
+
+_POINT_FEATURE_T = T.StructType(
+    [T.StructField("gpb", T.BinaryType()), T.StructField("line", T.StringType())]
+)
+
+
+@pandas_udf(_POINT_FEATURE_T)
+def _point_feature_udf(lon: pd.Series, lat: pd.Series, props: pd.Series) -> pd.DataFrame:
+    """The node branch's serializer, which also packs the point: a node
+    crosses into Python once. No line for a node without a point."""
+    gpbs = [point_gpb(x, y) for x, y in zip(lon, lat)]
+    lines = [None if g is None else geom.feature_json(g, p) for g, p in zip(gpbs, props)]
+    return pd.DataFrame({"gpb": gpbs, "line": lines})
 
 
 def build_features(
@@ -149,17 +163,22 @@ def _build_plan(
         )
 
     # nodes and ways cross into Python in the serializer, after their anti
-    # join; relations in their kernel, which also serializes; the way shape
-    # kernel sits below the ways cache
-    node_feats = _with_line(
-        _drop_used(frames.nodes).selectExpr(
+    # join (a node's serializer also packs its point); relations in their
+    # kernel, which also serializes; the way shape kernel sits below the
+    # ways cache
+    node_feats = (
+        _drop_used(frames.nodes)
+        .selectExpr(
             "doc_id",
             "seq",
             "'node' AS etype",
             "id",
-            f"{point_gpb_sql('lon', 'lat')} AS gpb",
+            "lon",
+            "lat",
             f"{props_json_sql('node', include_nodes=False)} AS props",
         )
+        .withColumn("_f", _point_feature_udf(F.col("lon"), F.col("lat"), F.col("props")))
+        .selectExpr("doc_id", "seq", "etype", "id", "_f.gpb AS gpb", "props", "_f.line AS line")
     )
 
     way_feats = ways.selectExpr(

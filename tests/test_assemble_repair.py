@@ -40,7 +40,7 @@ def test_self_intersecting_way_emits_all_repaired_loops(spark):
         [(1, ring.ravel().tolist(), True)],
         "way_id long, coords array<double>, is_poly boolean",
     )
-    out = df.select(way_gpb_udf(F.col("coords"), F.col("is_poly")).alias("s"))
+    out = df.select(way_gpb_udf(F.col("coords"), F.col("is_poly"), F.lit("geom")).alias("s"))
     row = out.select("s.gpb", "s.reason").collect()[0]
     assert row["reason"] is None
     gtype, polys = geom.decode(bytes(row["gpb"]))
@@ -58,7 +58,7 @@ def test_simple_way_still_emits_plain_polygon(spark):
         [(1, sq.ravel().tolist(), True)],
         "way_id long, coords array<double>, is_poly boolean",
     )
-    row = df.select(way_gpb_udf(F.col("coords"), F.col("is_poly")).alias("s")).select(
+    row = df.select(way_gpb_udf(F.col("coords"), F.col("is_poly"), F.lit("geom")).alias("s")).select(
         "s.gpb"
     ).collect()[0]
     gtype, _ = geom.decode(bytes(row["gpb"]))

@@ -72,25 +72,26 @@ def test_build_features_plan_shape(spark):
     """Python crossings and shuffles of the unmaterialized conversion plan.
     ArrowEvalPython: the node serializer, the way shape + serializer, the
     relation member lookup's way shape, and the way shape once more under
-    the way branch's pushed-down ``gpb IS NOT NULL`` filter; points are
-    packed in the JVM and relations serialize in their kernel, 7 -> 5.
+    the way branch's pushed-down ``gpb IS NOT NULL`` filter; the node
+    serializer packs the points and relations serialize in their kernel,
+    7 -> 5.
     MapInPandas: the relation kernel. Exchanges: both sides of the node
     branch's anti join, the way branch's element side (its used side
     reuses the node branch's), the relation branch's used side (the
-    kernel output is already partitioned), way node resolution's group
-    (its node join broadcasts here), the relation repartition, and both
-    sides of the member lookup join. That lookup broadcast at this size
-    while the way shape's evaluator also output the point UDF's column:
-    the narrower evaluator output raises the optimizer's size estimate of
-    the lookup side past the broadcast threshold, 7 -> 9. With AQE on (the
-    benchmark's session) the join is planned from runtime sizes."""
+    kernel output is already partitioned; its anti join also keys on the
+    kernel's doc_id, so it cannot reuse the exchange keyed on the id
+    alone), way node resolution's group (its node join broadcasts here)
+    and the relation repartition. The member lookup join broadcasts: its
+    build side carries only the join keys and the way coordinates, which
+    keeps the optimizer's size estimate of it (10.48 MB, from the way
+    shape evaluator's estimate) under the 10 MiB broadcast threshold."""
     frames = synthetic_osm_frames(spark, 50)
     features, _ = build_features(spark, frames, materialize=None)
     plan = feature_json_lines(features)._jdf.queryExecution().executedPlan()
     names = _plan_node_names(plan)
     assert names.count("ArrowEvalPython") == 5
     assert names.count("MapInPandas") == 1
-    assert names.count("Exchange") + names.count("reuses:Exchange") == 9
+    assert names.count("Exchange") + names.count("reuses:Exchange") == 7
 
 
 def test_cached_conversion_plan_python_evaluators(spark):
@@ -166,16 +167,20 @@ def _point_elements(cases, base):
 
 
 def test_point_edge_values_pack_and_serialize_as_struct_pack(spark):
-    """Points are packed in the JVM: raw IEEE 754 bits as ``struct.pack``
-    writes them (``geom.point``), -0.0, subnormal-range and NaN values
-    included, and serialized from those bytes (``to_geojson_geometry``).
-    Node, center-way and center-relation points alike; a null lat packs as
-    NaN. A null or NaN lon gives no point: the node keeps a null gpb, and
-    a center way or relation fails with no reason."""
+    """Points are packed where the element already crosses into Python
+    (the node serializer, the way shape kernel, the relation kernel): raw
+    IEEE 754 bits as ``struct.pack`` writes them (``geom.point``), -0.0,
+    NaN, subnormal and infinite values included, and serialized from those
+    bytes (``to_geojson_geometry``). Node, center-way and center-relation
+    points alike; a null lat packs as NaN. A null or NaN lon gives no
+    point: the node keeps a null gpb, and a center way or relation fails
+    with no reason. The plan stays deterministic, so the optimizer still
+    pushes filters through its projections."""
     from osm2geojson_spark import json2shapes
 
     ok = [(-0.0, -0.0), (0.0, -0.0), (1e-300, -1e-300), (180.0, -180.0),
-          (-180.0, 180.0), (-179.99999999, 90.0), (1.0, _NAN), (2.0, None)]
+          (-180.0, 180.0), (-179.99999999, 90.0), (1.0, _NAN), (2.0, None),
+          (5e-324, -2.5e-310), (1.7976931348623157e308, -float("inf"))]
     elements = _point_elements(ok, 1000)
     shapes = json2shapes(spark, {"elements": elements})
     assert len(shapes) == len(elements)
@@ -192,6 +197,7 @@ def test_point_edge_values_pack_and_serialize_as_struct_pack(spark):
             separators=(",", ":"),
         )
     features, _ = build_features(spark, normalize_elements(spark, elements))
+    assert features._jdf.queryExecution().analyzed().deterministic()
     got = {r["seq"]: r["line"] for r in feature_json_lines(features).collect()}
     assert got == want
 
