@@ -2089,26 +2089,6 @@ GROUP BY t.doc_id
 """
 
 
-_BM25_TERMS = ["spark", "window", "merge"]
-
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-10 (operators/retrieval.py::bm25_topk): fixed-query
-    corpus scoring with per-term tf as codegen array filters — no inverted
-    index, no explode, one 1-row stats broadcast, TakeOrderedAndProject
-    top-k.  The oracle twin folds the identical float64 constants."""
-    from osm2geojson_spark.operators import retrieval as RET
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return RET.bm25_topk(docs, _BM25_TERMS, k=10)
-
-
-def _bm25_sql() -> str:
-    from osm2geojson_spark.operators.retrieval import bm25_topk_sql
-
-    return bm25_topk_sql("documents", H.tokens_sql("text"), _BM25_TERMS, k=10)
-
-
 def _jaccard_sql(docs_select: str, tau: float) -> str:
     return f"""
 WITH docs AS ({docs_select}),
@@ -2180,72 +2160,6 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = SIM.cosine_topk_bruteforce(queries, emb, k=5)
     return res.select("qid", "rank", "vec_id")
-
-
-def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X184 (similarity.silhouette_scores): silhouette clustering
-    quality of the labeled embedding sample (vec_id < 150) — quantized
-    exact pairwise squared-L2 sums, pinned IEEE mean/ratio assembly,
-    deterministic (mean, label) min-by. Quadratic by definition, so it
-    runs on a sample; within the sample one broadcast self-join + a
-    combinable rollup."""
-    from osm2geojson_spark.operators.similarity import silhouette_scores
-
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    return silhouette_scores(emb)
-
-
-def _silhouette_sql() -> str:
-    from osm2geojson_spark.operators.similarity import silhouette_scores_sql
-
-    return silhouette_scores_sql(
-        "SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings"
-        " WHERE vec_id < 150",
-        dim=64,
-    )
-
-
-def q_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X180 (retrieval.mmr_rerank): maximal marginal relevance
-    re-ranking — the diversity-aware post-ANN selection. Queries are
-    vec_id < 3, candidates the vec_id % 3 == qid slice of vec_id in
-    [3, 120); relevance and redundancy are quantized integer dots
-    (floor(a·b·1e6 + 0.5) per term), so the 5-step greedy trace is
-    engine-exact and the twin unrolls it as chained CTEs. Per-query
-    Arrow-batch greedy; nothing global shuffles."""
-    from osm2geojson_spark.operators.retrieval import mmr_rerank
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qvec")
-    )
-    c = emb.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 120)).select(
-        (F.col("vec_id") % 3).alias("qid"),
-        F.col("vec_id").alias("doc_id"),
-        F.col("v").alias("vec"),
-    )
-    return mmr_rerank(q, c, k=5)
-
-
-def _mmr_sql() -> str:
-    from osm2geojson_spark.operators.retrieval import mmr_rerank_sql
-
-    return mmr_rerank_sql(
-        "SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings"
-        " WHERE vec_id < 3",
-        "SELECT vec_id % 3 AS qid, vec_id AS doc_id,"
-        " embedding::DOUBLE[] AS v FROM embeddings"
-        " WHERE vec_id >= 3 AND vec_id < 120",
-        k=5,
-        dim=64,
-    )
 
 
 _ANN_SQL = """
@@ -7750,100 +7664,6 @@ def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HILLSHADE_SQL = "\nWITH img AS (\n  SELECT p_partkey AS i FROM part WHERE p_partkey < 360 AND p_partkey % 3 = 0\n), pxi AS (\n  SELECT i, xs.x AS x, ys.y AS y\n  FROM img, (SELECT unnest(range(1, 7)) AS x) xs,\n       (SELECT unnest(range(1, 7)) AS y) ys\n), g AS (\n  SELECT i, CAST((((((x + 1) * 3 + (y + -1) * 7 + i * 13) % 251) + 2 * (((x + 1) * 3 + (y + 0) * 7 + i * 13) % 251) + (((x + 1) * 3 + (y + 1) * 7 + i * 13) % 251)) - ((((x + -1) * 3 + (y + -1) * 7 + i * 13) % 251) + 2 * (((x + -1) * 3 + (y + 0) * 7 + i * 13) % 251) + (((x + -1) * 3 + (y + 1) * 7 + i * 13) % 251))) AS BIGINT) AS gx8, CAST((((((x + -1) * 3 + (y + 1) * 7 + i * 13) % 251) + 2 * (((x + 0) * 3 + (y + 1) * 7 + i * 13) % 251) + (((x + 1) * 3 + (y + 1) * 7 + i * 13) % 251)) - ((((x + -1) * 3 + (y + -1) * 7 + i * 13) % 251) + 2 * (((x + 0) * 3 + (y + -1) * 7 + i * 13) % 251) + (((x + 1) * 3 + (y + -1) * 7 + i * 13) % 251))) AS BIGINT) AS gy8\n  FROM pxi\n), s AS (\n  SELECT i, gx8, gy8,\n         greatest(0.0,\n           (0.7071067811865476 + 0.7071067811865475 * (0.7071067811865477 * (gx8 / 128.0) + -0.7071067811865474 * (gy8 / 128.0)))\n           / sqrt(1.0 + (gx8 / 128.0) * (gx8 / 128.0) + (gy8 / 128.0) * (gy8 / 128.0))\n         ) AS shade\n  FROM g\n)\nSELECT printf('img%012d', i) AS image_id,\n       CAST(count(*) AS BIGINT) AS n_interior,\n       CAST(sum(abs(gx8)) AS BIGINT) AS sum_abs_gx8,\n       CAST(sum(abs(gy8)) AS BIGINT) AS sum_abs_gy8,\n       CAST(sum(CAST(round(shade * 1e6) AS BIGINT)) AS BIGINT)\n         AS sum_shade_micro,\n       CAST(sum(CASE WHEN round(shade * 1e6) > 0 THEN 1 ELSE 0 END) AS BIGINT)\n         AS n_lit\nFROM s GROUP BY i\n"
 
 
-def q_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LABEL-NOISE MINING (similarity.label_noise_scores): per-vector
-    count of k=10 nearest cosine neighbors (self excluded, (cos DESC,
-    id ASC) pinned order) carrying a different label — the confident-
-    learning triage signal over the labeled embeddings table. The
-    oracle replays the ranked cross join and the integer disagreement
-    count."""
-    from osm2geojson_spark.operators.similarity import label_noise_scores
-
-    # brute oracle shape (docstring: run on validation samples; the scale
-    # path swaps in LSH/IVF candidates) — cap the sample so the fixture
-    # stays O(640k) pairs at any sf
-    emb = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 800)
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias(
-                "embedding"
-            ),
-            F.col("label").cast("long").alias("label"),
-        )
-    )
-    return label_noise_scores(emb, k=10)
-
-
-_LABEL_NOISE_SQL = """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v, CAST(label AS BIGINT) AS label
-  FROM embeddings WHERE vec_id < 800
-), d AS (
-  SELECT q.vec_id AS qid, q.label AS qlab, t.vec_id AS tid, t.label AS tlab,
-         list_dot_product(q.v, t.v)
-           / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(t.v, t.v)))
-           AS cos
-  FROM e q JOIN e t ON q.vec_id != t.vec_id
-), r AS (
-  SELECT qid, qlab, tlab,
-         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, tid ASC) AS rank
-  FROM d
-)
-SELECT qid AS vec_id, qlab AS label,
-       CAST(sum(CASE WHEN tlab != qlab THEN 1 ELSE 0 END) AS BIGINT) AS n_diff,
-       CAST(count(*) AS BIGINT) AS k_eff
-FROM r WHERE rank <= 10 GROUP BY qid, qlab
-"""
-
-
-def q_centroid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CLASS-CENTROID MARGIN (similarity.centroid_margins): each
-    vector's cosine to its own class centroid minus its best other-class
-    centroid — the cheap first-pass embedding quality score. Centroids
-    are combinable (label, dim) mean rollups broadcast back; the oracle
-    rebuilds them with the same per-dim mean and replays the rounded
-    cosine assembly."""
-    from osm2geojson_spark.operators.similarity import centroid_margins
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-        F.col("label").cast("long").alias("label"),
-    )
-    return centroid_margins(emb)
-
-
-_CENTROID_MARGIN_SQL = """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v, CAST(label AS BIGINT) AS label
-  FROM embeddings
-), dims AS (
-  SELECT label AS clab, t.d AS d, sum(v[t.d + 1]) AS s, count(*) AS n
-  FROM e, (SELECT unnest(range(64)) AS d) t
-  GROUP BY label, t.d
-), cent AS (
-  SELECT clab, list(s / n ORDER BY d) AS c FROM dims GROUP BY clab
-), scored AS (
-  SELECT e.vec_id, e.label, cent.clab,
-         list_dot_product(e.v, cent.c)
-           / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cent.c, cent.c)))
-           AS cos
-  FROM e CROSS JOIN cent
-), own AS (
-  SELECT vec_id, label, round(cos, 6) + 0.0 AS own_cos
-  FROM scored WHERE label = clab
-), other AS (
-  SELECT vec_id, round(max(cos), 6) + 0.0 AS other_cos
-  FROM scored WHERE label != clab GROUP BY vec_id
-)
-SELECT own.vec_id, own.label, own.own_cos, other.other_cos,
-       round(own.own_cos - other.other_cos, 6) + 0.0 AS margin
-FROM own JOIN other ON other.vec_id = own.vec_id
-"""
-
-
 def q_mosaic_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WINDOWED TILE-STORE READ (multimodal.mosaic_crop): extract global
     region [5,37) x [9,30) from the 6x6 mosaic of 8x8 mixed rawz/png
@@ -7945,56 +7765,6 @@ SELECT doc_id, CAST(chunk_seq AS BIGINT) AS chunk_seq,
        CAST(min(pos) AS BIGINT) AS start,
        CAST(count(*) AS BIGINT) AS chunk_chars
 FROM seq GROUP BY doc_id, chunk_seq
-"""
-
-
-def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ZIPF'S-LAW FIT (functions/text.zipf_fit): slope of the corpus
-    token frequency-rank log-log line over the documents table — the
-    corpus-health signal of a training-data pipeline. Quantized-OLS
-    exactness (gravity_fit's scheme); deterministic (count DESC, token
-    ASC) ranking; the oracle replays the identical tokenization, rank
-    window and double assembly."""
-    from osm2geojson_spark.functions.text import zipf_fit
-
-    return zipf_fit(_t(spark, sf_dir, "documents"))
-
-
-def _zipf_fit_sql() -> str:
-    from osm2geojson_spark.functions.text import ZIPF_SCALE
-    from osm2geojson_spark.functions.text import normalize_sql as _nsql
-
-    S = float(ZIPF_SCALE)
-    return f"""
-WITH toks AS (
-  SELECT unnest(string_split({_nsql('text')}, ' ')) AS tok FROM documents
-), counts AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS n
-  FROM toks WHERE tok != '' GROUP BY tok
-), ranked AS (
-  SELECT n,
-         CAST(row_number() OVER (ORDER BY n DESC, tok ASC) AS BIGINT) AS rank
-  FROM counts
-), q AS (
-  SELECT n,
-         CAST(round(ln(CAST(rank AS DOUBLE)) * {S!r}) AS BIGINT) AS qx,
-         CAST(round(ln(CAST(n AS DOUBLE)) * {S!r}) AS BIGINT) AS qy
-  FROM ranked
-), s AS (
-  SELECT CAST(count(*) AS BIGINT) AS vocab,
-         CAST(sum(n) AS BIGINT) AS total_tokens,
-         CAST(sum(qx) AS BIGINT) AS sx_q, CAST(sum(qy) AS BIGINT) AS sy_q,
-         CAST(sum(qx * qx) AS BIGINT) AS sxx_q,
-         CAST(sum(qx * qy) AS BIGINT) AS sxy_q
-  FROM q
-)
-SELECT vocab, total_tokens, sx_q, sy_q, sxx_q, sxy_q,
-       round((CAST(vocab AS DOUBLE) * CAST(sxy_q AS DOUBLE)
-              - CAST(sx_q AS DOUBLE) * CAST(sy_q AS DOUBLE))
-             / (CAST(vocab AS DOUBLE) * CAST(sxx_q AS DOUBLE)
-                - CAST(sx_q AS DOUBLE) * CAST(sx_q AS DOUBLE)), 6) + 0.0
-         AS zipf_slope
-FROM s
 """
 
 
@@ -8708,44 +8478,6 @@ def _delaunay_sql() -> str:
     )
 
 
-def q_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X202 (retrieval.maxsim_topk): ColBERT late-interaction retrieval
-    over the embeddings table grouped into multi-vector bags — 8 token
-    vectors per id (qid/doc_id = vec_id // 8): queries vec_id < 16,
-    corpus vec_id in [16, 496).  MaxSim score = sum over query tokens
-    of the max quantized doc-token dot; top-5 per query.  Quantized
-    per-term dots make the trace engine-exact."""
-    from osm2geojson_spark.operators.retrieval import maxsim_topk
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    q = emb.filter(F.col("vec_id") < 16).select(
-        (F.col("vec_id") / 8).cast("long").alias("qid"),
-        (F.col("vec_id") % 8).alias("qtok"),
-        F.col("v").alias("qvec"),
-    )
-    d = emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 496)).select(
-        (F.col("vec_id") / 8).cast("long").alias("doc_id"),
-        F.col("v").alias("vec"),
-    )
-    return maxsim_topk(d, q, k=5)
-
-
-def _maxsim_sql() -> str:
-    from osm2geojson_spark.operators.retrieval import maxsim_topk_sql
-
-    return maxsim_topk_sql(
-        "SELECT vec_id // 8 AS doc_id, embedding::DOUBLE[] AS v"
-        " FROM embeddings WHERE vec_id >= 16 AND vec_id < 496",
-        "SELECT vec_id // 8 AS qid, vec_id % 8 AS qtok,"
-        " embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 16",
-        k=5,
-        dim=64,
-    )
-
-
 def q_dither(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X200 (multimodal.ordered_dither): Bayer 4x4 ordered-dithering
     census over 300 mixed-size (8/16/24 px) mixed-format (rawz/png)
@@ -9014,30 +8746,6 @@ FROM (SELECT {cell} AS cell_id, count(*) AS cnt FROM customer GROUP BY 1)
     return join_counts_sql(marks, res=4)
 
 
-def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X193 (similarity.hard_negatives): contrastive hard-negative
-    mining — per sampled anchor, the top-5 highest quantized-inner-
-    product embeddings with a DIFFERENT label (broadcast corpus, Arrow
-    GEMM-shaped scoring; exact integer dots and ranking)."""
-    from osm2geojson_spark.operators.similarity import hard_negatives
-
-    emb = _t(spark, sf_dir, "embeddings")
-    anchors = emb.filter(F.col("vec_id") % 5 == 0)
-    return hard_negatives(anchors, emb, k=5)
-
-
-def _hard_negatives_sql() -> str:
-    from osm2geojson_spark.operators.similarity import hard_negatives_sql
-
-    return hard_negatives_sql(
-        "SELECT vec_id, label, embedding FROM embeddings"
-        " WHERE vec_id % 5 = 0",
-        "SELECT vec_id, label, embedding FROM embeddings",
-        k=5,
-        dim=64,
-    )
-
-
 def q_scan_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X190 (spatial_stats.scan_stat): Kulldorff spatial scan statistic
     (Poisson) over the customer point grid — cases are a deterministic
@@ -9078,100 +8786,6 @@ SELECT {cell} AS cell_id,
 FROM customer GROUP BY 1
 """
     return scan_stat_sql(hist, res=4, k_max=2, top=5)
-
-
-def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X181 (functions/text.pmi_cooc): PMI collocation mining over the
-    documents corpus — adjacent normalized-token pairs (canonical
-    unordered), log-free monotone PMI as the exact-int-backed pinned
-    ratio c_xy·N_tok²/(N_pairs·u_x·u_y), min support 3. One per-doc
-    window + two combinable rollups + broadcast marginal joins."""
-    from osm2geojson_spark.functions.text import pmi_cooc
-
-    return pmi_cooc(_t(spark, sf_dir, "documents"), min_count=3)
-
-
-def _pmi_sql() -> str:
-    from osm2geojson_spark.functions.text import pmi_cooc_sql
-
-    return pmi_cooc_sql("SELECT doc_id, text FROM documents", min_count=3)
-
-
-def q_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X170 (retrieval.ranking_metrics): NDCG@10 + reciprocal rank per
-    query over a 40-query retrieval fixture — orders ranked by a
-    Knuth-hash score inside each o_custkey%40 query, graded relevance
-    from the order key. The position discounts 1/log2(pos+1) and
-    reciprocals 1/pos are quantized once driver-side and inlined into
-    BOTH plans, so no engine ever computes a log."""
-    from osm2geojson_spark.operators.retrieval import ranking_metrics
-
-    o = _t(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    base = o.select(
-        (F.col("o_custkey") % 40).alias("query_id"),
-        ((k * F.lit(2654435761)) % 1000003).alias("_score"),
-        k.alias("_k"),
-        F.when(k % 3 == 0, (k / 3).cast("long") % 4)
-        .otherwise(F.lit(0))
-        .alias("rel"),
-    )
-    ranked = base.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("_score").asc(), F.col("_k").asc()
-            )
-        ),
-    )
-    return ranking_metrics(ranked, k=10)
-
-
-def _ranking_eval_sql() -> str:
-    from osm2geojson_spark.operators.retrieval import ranking_metrics_weights
-
-    w_disc, w_rr = ranking_metrics_weights(10)
-    disc = " ".join(f"WHEN {p} THEN {w}" for p, w in w_disc.items())
-    rr = " ".join(f"WHEN {p} THEN {w}" for p, w in w_rr.items())
-    return f"""
-WITH base AS (
-  SELECT o_custkey % 40 AS q,
-         (o_orderkey * 2654435761) % 1000003 AS score,
-         o_orderkey AS k,
-         CASE WHEN o_orderkey % 3 = 0 THEN (o_orderkey // 3) % 4
-              ELSE 0 END AS rel
-  FROM orders
-), ranked AS (
-  SELECT q, rel,
-         row_number() OVER (PARTITION BY q ORDER BY score, k) AS pos
-  FROM base
-), topk AS (
-  SELECT * FROM ranked WHERE pos <= 10
-), ideal AS (
-  SELECT q, rel, pos,
-         row_number() OVER (PARTITION BY q ORDER BY rel DESC, pos) AS ipos
-  FROM topk
-), terms AS (
-  SELECT q, pos, rel,
-         (CASE rel WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 3
-                   WHEN 3 THEN 7 END)
-           * (CASE pos {disc} END) AS dcg_term,
-         (CASE rel WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 3
-                   WHEN 3 THEN 7 END)
-           * (CASE ipos {disc} END) AS idcg_term,
-         CASE WHEN rel >= 2 THEN pos END AS hit
-  FROM ideal
-)
-SELECT q AS query_id, CAST(count(*) AS INTEGER) AS n_ranked,
-       CAST(sum(dcg_term) AS BIGINT) AS dcg_q,
-       CAST(sum(idcg_term) AS BIGINT) AS idcg_q,
-       CASE WHEN sum(idcg_term) > 0
-            THEN CAST(sum(dcg_term) AS DOUBLE) / sum(idcg_term)
-            ELSE 0.0 END AS ndcg,
-       CAST(coalesce(min(hit), 0) AS INTEGER) AS first_rel_pos,
-       CAST(coalesce(CASE min(hit) {rr} END, 0) AS BIGINT) AS rr_q
-FROM terms GROUP BY q
-"""
 
 
 def q_ssim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10004,45 +9618,6 @@ FROM ns LEFT JOIN nv ON nv.obs_id = ns.obs_id AND nv.ray = ns.ray
 """
 
 
-def q_text_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X154 (functions/text.text_nll): per-document NLL under the
-    corpus-trained character-bigram LM — the CCNet/Gopher-style cheap
-    perplexity quality gate, trained and scored in one job. Bigram
-    terms are quantized to micro-nats from exact integer counts before
-    the order-free per-doc sum (track_nll's scheme); the oracle replays
-    the identical bigram explosion, counts, and float assembly."""
-    from osm2geojson_spark.functions.text import text_nll
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return text_nll(docs)
-
-
-_TEXT_NLL_SQL = """
-WITH bg AS (
-  SELECT doc_id, substr(text, CAST(i AS INTEGER), 2) AS bg
-  FROM documents, unnest(range(1, length(text))) AS t(i)
-), mat AS (
-  SELECT bg, CAST(count(*) AS BIGINT) AS n_bg FROM bg GROUP BY bg
-), tot AS (
-  SELECT substr(bg, 1, 1) AS c1, CAST(sum(n_bg) AS BIGINT) AS n_c1
-  FROM mat GROUP BY 1
-), model AS (
-  SELECT bg, CAST(round((ln(CAST(n_bg AS DOUBLE)) - ln(CAST(n_c1 AS DOUBLE)))
-                        * 1e6) AS BIGINT) AS t
-  FROM mat JOIN tot ON substr(mat.bg, 1, 1) = tot.c1
-), agg AS (
-  SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         CAST(-sum(model.t) AS BIGINT) AS nll_micro
-  FROM bg JOIN model ON model.bg = bg.bg
-  GROUP BY bg.doc_id
-)
-SELECT doc_id, n_bigrams, nll_micro,
-       round(CAST(nll_micro AS DOUBLE) / CAST(n_bigrams AS DOUBLE) / 1e6, 6)
-         + 0.0 AS avg_nll
-FROM agg
-"""
-
-
 def q_geary_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X152 (spatial_stats.gearys_c): global Geary's C of customer-point
     counts over the occupied-cell rook lattice at res 4 — Moran's I's
@@ -10207,72 +9782,6 @@ def _winnow_sql() -> str:
 
     return winnow_fingerprints_sql(
         "SELECT doc_id, text FROM documents", id_col="doc_id", text_col="text"
-    )
-
-
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X239 (text.bpe_encode): BPE tokenization applied — the corpus
-    trains its own 8-round merge table, then every document is charged
-    the token count of its words under the merged vocabulary (broadcast
-    vocab join + one rollup; corpus scanned exactly twice). The
-    fertility ratio is the token-budget gate."""
-    from osm2geojson_spark.functions.text import bpe_encode
-
-    return bpe_encode(_t(spark, sf_dir, "documents"), merges=8)
-
-
-def _bpe_encode_sql() -> str:
-    from osm2geojson_spark.functions.text import bpe_encode_sql
-
-    return bpe_encode_sql("SELECT doc_id, text FROM documents", merges=8)
-
-
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X238 (text.bpe_train): BPE tokenizer-merge training over the
-    document corpus — 8 rounds of most-frequent-adjacent-pair merges on
-    the word-frequency table (corpus scanned once; rounds run on the
-    vocabulary), leftmost-non-overlapping rewrites via the
-    pipe-delimited replace identity; the returned merge list is the
-    trained tokenizer."""
-    from osm2geojson_spark.functions.text import bpe_train
-
-    return bpe_train(_t(spark, sf_dir, "documents"), merges=8)
-
-
-def _bpe_train_sql() -> str:
-    from osm2geojson_spark.functions.text import bpe_train_sql
-
-    return bpe_train_sql("SELECT doc_id, text FROM documents", merges=8)
-
-
-def q_compress_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X237 (text.compress_cost): corpus-trained dyadic Shannon
-    compressibility per document (bits and bits-per-token) — the
-    gzip-ratio-style boilerplate/quality gate with an exact integer
-    trace; same enriched corpus as keyword_extract so code lengths
-    span the full range."""
-    from osm2geojson_spark.functions.text import compress_cost
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat_ws(
-            " ",
-            F.col("text"),
-            F.col("source"),
-            F.col("lang"),
-            F.concat(F.lit("u"), F.col("doc_id").cast("string")),
-        ).alias("text"),
-    )
-    return compress_cost(docs)
-
-
-def _compress_cost_sql() -> str:
-    from osm2geojson_spark.functions.text import compress_cost_sql
-
-    return compress_cost_sql(
-        "SELECT doc_id,"
-        " text || ' ' || source || ' ' || lang || ' u' || CAST(doc_id AS VARCHAR)"
-        " AS text FROM documents"
     )
 
 
@@ -10689,26 +10198,6 @@ FROM (
     return MM2.dog_keypoints_sql(px, thresh=400)
 
 
-def q_pca_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X233 (similarity.pca_top_eigvec): dominant principal direction of
-    the embedding corpus — power iteration in exact bigint/HUGEINT
-    fixed-point on the quantized Gram matrix; corpus-sized work is the
-    gram GEMM rollup, the O(d^2) iteration is driver-side tiny-model
-    math, twin unrolls identical rounds."""
-    from osm2geojson_spark.operators.similarity import pca_top_eigvec
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return pca_top_eigvec(emb, "embedding", dim=_EMB_DIM, iters=12)
-
-
-def _pca_top_sql() -> str:
-    from osm2geojson_spark.operators.similarity import pca_top_eigvec_sql
-
-    return pca_top_eigvec_sql(
-        "SELECT vec_id, embedding FROM embeddings", dim=_EMB_DIM, iters=12
-    )
-
-
 def q_alpha_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X231 (geometry.alpha_shape_edges): alpha-shape boundary edges of
     the four Delaunay tile groups (same fixture as q_delaunay) at
@@ -10734,38 +10223,6 @@ def _alpha_shape_sql() -> str:
         " (c_custkey * 2246822519 + 7) % 1013 AS y"
         " FROM customer WHERE c_custkey < 160",
         alpha2=40_000,
-    )
-
-
-def q_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X229 (text.tfidf_topk): per-document top-5 TF-IDF keywords with
-    the dyadic (floor-log2) idf — exact int64 scores, bit-identical
-    ranking cross-engine. The fixture enriches each document with its
-    source, lang and a unique marker token so document frequencies span
-    1..N and the idf actually discriminates."""
-    from osm2geojson_spark.functions.text import tfidf_topk
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat_ws(
-            " ",
-            F.col("text"),
-            F.col("source"),
-            F.col("lang"),
-            F.concat(F.lit("u"), F.col("doc_id").cast("string")),
-        ).alias("text"),
-    )
-    return tfidf_topk(docs, k=5)
-
-
-def _keyword_extract_sql() -> str:
-    from osm2geojson_spark.functions.text import tfidf_topk_sql
-
-    return tfidf_topk_sql(
-        "SELECT doc_id,"
-        " text || ' ' || source || ' ' || lang || ' u' || CAST(doc_id AS VARCHAR)"
-        " AS text FROM documents",
-        k=5,
     )
 
 
@@ -10801,101 +10258,6 @@ def _bearing_stats_sql() -> str:
     return bearing_resultant_sql(_TRAJ_PINGS_CTE)
 
 
-def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X272 (functions.text.pii_scan): PII census over the documents
-    corpus with deterministically injected emails / dotted-quad IPs /
-    international phone numbers (residue-class injection so clean docs
-    stay clean) — exact match counts in the Java-regex ∩ RE2 dialect."""
-    from osm2geojson_spark.functions.text import pii_scan
-
-    d = F.col("doc_id")
-    injected = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(
-            d % 3 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" mail u"),
-                d.cast("string"),
-                F.lit("@ex"),
-                (d % 7).cast("string"),
-                F.lit(".com"),
-            ),
-        )
-        .when(
-            d % 5 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" ip 10."),
-                (d % 256).cast("string"),
-                F.lit(".0."),
-                (d % 250).cast("string"),
-                F.lit(" end"),
-            ),
-        )
-        .when(
-            d % 7 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" call +1415"),
-                (F.lit(1000000) + d % 1000000).cast("string"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return pii_scan(injected)
-
-
-def _pii_scan_sql() -> str:
-    from osm2geojson_spark.functions.text import pii_scan_sql
-
-    return pii_scan_sql(
-        "SELECT doc_id,"
-        " CASE WHEN doc_id % 3 = 0 THEN text || ' mail u'"
-        "   || CAST(doc_id AS VARCHAR) || '@ex'"
-        "   || CAST(doc_id % 7 AS VARCHAR) || '.com'"
-        " WHEN doc_id % 5 = 0 THEN text || ' ip 10.'"
-        "   || CAST(doc_id % 256 AS VARCHAR) || '.0.'"
-        "   || CAST(doc_id % 250 AS VARCHAR) || ' end'"
-        " WHEN doc_id % 7 = 0 THEN text || ' call +1415'"
-        "   || CAST(1000000 + doc_id % 1000000 AS VARCHAR)"
-        " ELSE text END AS text FROM documents"
-    )
-
-
-def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X273 (similarity.knn_classify): leave-one-out kNN label
-    prediction (k=10 cosine neighbors, majority vote, (votes DESC,
-    label ASC) argmax) over the capped labeled-embedding sample — the
-    LOO accuracy probe; oracle replays the ranked join + vote."""
-    from osm2geojson_spark.operators.similarity import knn_classify
-
-    emb = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 800)
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias(
-                "embedding"
-            ),
-            F.col("label").cast("long").alias("label"),
-        )
-    )
-    return knn_classify(emb, k=10)
-
-
-def _knn_classify_sql() -> str:
-    from osm2geojson_spark.operators.similarity import knn_classify_sql
-
-    return knn_classify_sql(
-        "SELECT vec_id, embedding::DOUBLE[] AS v,"
-        " CAST(label AS BIGINT) AS label"
-        " FROM embeddings WHERE vec_id < 800",
-        k=10,
-    )
-
-
 def q_cell_buffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X276 (cells.cell_buffer): k=2 Chebyshev grid buffer of the
     nation rectangles at res 6 — covering → k_ring dilation → distinct
@@ -10926,53 +10288,6 @@ def _cell_buffer_sql() -> str:
         " FROM nation",
         res=6,
         k=2,
-    )
-
-
-def q_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X278 (functions.text.url_canonicalize): URL canonicalization +
-    group dedup over synthesized crawl URLs (case/port/utm/trailing-
-    slash variants of the same logical page collide by construction) —
-    deterministic string algebra, min-id representative kept."""
-    from osm2geojson_spark.functions.text import url_canonicalize
-
-    d = F.col("doc_id")
-    urls = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.when(d % 4 == 0, F.lit("HTTP://Site")).otherwise(
-                F.lit("http://site")
-            ),
-            (d % 7).cast("string"),
-            F.lit(".example"),
-            F.when(d % 5 == 0, F.lit(":80")).otherwise(F.lit("")),
-            F.lit("/page/"),
-            (d % 13).cast("string"),
-            F.when(d % 3 == 0, F.lit("/")).otherwise(F.lit("")),
-            F.when(d % 2 == 0, F.lit("?utm_source=tw&b=2&a=1")).otherwise(
-                F.lit("?a=1&b=2")
-            ),
-            F.when(d % 6 == 0, F.lit("#top")).otherwise(F.lit("")),
-        ).alias("url"),
-    )
-    return url_canonicalize(urls)
-
-
-def _url_canon_sql() -> str:
-    from osm2geojson_spark.functions.text import url_canonicalize_sql
-
-    return url_canonicalize_sql(
-        "SELECT doc_id,"
-        " (CASE WHEN doc_id % 4 = 0 THEN 'HTTP://Site'"
-        "       ELSE 'http://site' END)"
-        " || CAST(doc_id % 7 AS VARCHAR) || '.example'"
-        " || (CASE WHEN doc_id % 5 = 0 THEN ':80' ELSE '' END)"
-        " || '/page/' || CAST(doc_id % 13 AS VARCHAR)"
-        " || (CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END)"
-        " || (CASE WHEN doc_id % 2 = 0 THEN '?utm_source=tw&b=2&a=1'"
-        "          ELSE '?a=1&b=2' END)"
-        " || (CASE WHEN doc_id % 6 = 0 THEN '#top' ELSE '' END) AS url"
-        " FROM documents"
     )
 
 
@@ -11227,51 +10542,6 @@ FROM (
     return psnr_gate_sql(px, factor=10_000)
 
 
-def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X292 (retrieval.rrf_fuse): hybrid-search reciprocal rank fusion —
-    per lang "query", system A ranks documents by (n_chars DESC, doc_id)
-    and system B by a hash order, both truncated to depth 20; RRF merges
-    with integer 1e6 DIV (60+rank) credits, top-10 pinned."""
-    from pyspark.sql.window import Window as _W
-
-    from osm2geojson_spark.operators.retrieval import rrf_fuse
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    wa = _W.partitionBy("lang").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-    a = docs.select(
-        F.col("lang").alias("qid"),
-        F.col("doc_id").alias("doc"),
-        F.row_number().over(wa).alias("rank"),
-    ).filter(F.col("rank") <= 20)
-    hb = (F.col("doc_id") * 2654435761) % 1000000007
-    wb = _W.partitionBy("lang").orderBy(hb.asc(), F.col("doc_id"))
-    b = docs.select(
-        F.col("lang").alias("qid"),
-        F.col("doc_id").alias("doc"),
-        F.row_number().over(wb).alias("rank"),
-    ).filter(F.col("rank") <= 20)
-    return rrf_fuse(a.unionByName(b), k=10)
-
-
-def _rrf_fusion_sql() -> str:
-    from osm2geojson_spark.operators.retrieval import rrf_fuse_sql
-
-    rankings = (
-        "SELECT qid, doc, rank FROM ("
-        "SELECT lang AS qid, doc_id AS doc,"
-        " row_number() OVER (PARTITION BY lang"
-        "   ORDER BY n_chars DESC, doc_id) AS rank FROM documents) a"
-        " WHERE rank <= 20"
-        " UNION ALL "
-        "SELECT qid, doc, rank FROM ("
-        "SELECT lang AS qid, doc_id AS doc,"
-        " row_number() OVER (PARTITION BY lang"
-        "   ORDER BY (doc_id * 2654435761) % 1000000007 ASC, doc_id) AS rank"
-        " FROM documents) b WHERE rank <= 20"
-    )
-    return rrf_fuse_sql(rankings, k=10)
-
-
 def q_knox(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X293 (spatial_stats.knox_test): Knox space-time interaction over a
     deterministic incident set (every 5th event; planar coords hashed
@@ -11325,32 +10595,6 @@ def _median_center_sql() -> str:
         " (s_suppkey * 59) % 1000 AS y FROM supplier"
     )
     return median_center_sql(pts, rounds=4)
-
-
-def q_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X295 (similarity.perceptron_train): batch perceptron linear probe
-    on the embeddings table (y = +1 for labels 0-4, -1 for 5-9), four
-    synchronous integer rounds — final weight vector + last-round
-    misclassified count, bit-equal to the unrolled twin."""
-    from osm2geojson_spark.operators.similarity import perceptron_train
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        F.when(F.col("label") < 5, 1).otherwise(-1).cast("long").alias("y"),
-    )
-    return perceptron_train(emb, rounds=4)
-
-
-def _perceptron_sql() -> str:
-    from osm2geojson_spark.operators.similarity import perceptron_train_sql
-
-    emb = (
-        "SELECT vec_id AS id,"
-        " CASE WHEN label < 5 THEN 1 ELSE -1 END AS y, embedding"
-        " FROM embeddings"
-    )
-    return perceptron_train_sql(emb, rounds=4)
 
 
 _UNSHARP_PX = """
@@ -11528,24 +10772,6 @@ def _quadrat_sql() -> str:
     return quadrat_test_sql(pts, g=8, extent=400)
 
 
-def q_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X311 (retrieval.rocchio_expand): pseudo-relevance-feedback query
-    expansion over the BM25 top-10 for the standing query terms —
-    integer Rocchio weights, top-10 expansion terms pinned."""
-    from osm2geojson_spark.operators.retrieval import rocchio_expand
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return rocchio_expand(docs, _BM25_TERMS, k=10, m=10)
-
-
-def _rocchio_sql() -> str:
-    from osm2geojson_spark.operators.retrieval import rocchio_expand_sql
-
-    return rocchio_expand_sql(
-        "documents", H.tokens_sql("text"), _BM25_TERMS, k=10, m=10
-    )
-
-
 def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X313 (matching.stable_matching): synchronous Gale-Shapley over a
     blocked customer→supplier preference table ((c+s)%7 block, hash
@@ -11656,24 +10882,6 @@ def _fs_linkage_sql() -> str:
     return fs_link_scores_sql(pairs, ["same_nat", "same_band", "same_res"])
 
 
-def q_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X319 (functions.text.rake_phrases): RAKE keyphrase mining over
-    every 3rd document — stopword-delimited candidate phrases, exact
-    integer deg/freq word scores, corpus top-15 pinned."""
-    from osm2geojson_spark.functions.text import rake_phrases
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
-    return rake_phrases(docs, top_m=15)
-
-
-def _rake_sql() -> str:
-    from osm2geojson_spark.functions.text import rake_phrases_sql
-
-    return rake_phrases_sql(
-        "SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0", top_m=15
-    )
-
-
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X320 (sampling.poisson_bootstrap_ci): one-pass Poisson-bootstrap
     90% CIs for per-event-type mean cents — 32 deterministic hash-
@@ -11743,24 +10951,6 @@ def _novelty_sql() -> str:
     )
 
 
-def q_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X332 (functions.text.lexicon_sentiment): lexicon tone gate over
-    every 5th document — broadcast weight table, exact integer score,
-    pos/neg/neutral verdicts."""
-    from osm2geojson_spark.functions.text import lexicon_sentiment
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    return lexicon_sentiment(docs)
-
-
-def _sentiment_sql() -> str:
-    from osm2geojson_spark.functions.text import lexicon_sentiment_sql
-
-    return lexicon_sentiment_sql(
-        "SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0"
-    )
-
-
 def q_fuzzy2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X335 (dedup.lev2_join): depth-2 FastSS fuzzy join over
     suffix-diversified part names (every 11th part) — complete
@@ -11789,16 +10979,16 @@ def _fuzzy2_join_sql() -> str:
 
 # Round-5 rotation (VERDICT r4 ask #1): the registry is FROZEN — no new queries
 # this round — and the driver's 50-slot correctness window is pointed at the 50
-# OLDEST names never recorded in CORRECTNESS_r01–r04 (the LLM-pipeline core:
-# ANN/PQ, bm25, asof/interval joins, trajectory, multimodal).  The base dict
+# OLDEST names never recorded in CORRECTNESS_r01–r04 (ANN/PQ, asof/interval
+# joins, trajectory, multimodal).  The base dict
 # below keeps its historical newest-first order; this list is promoted to the
 # front at call time so CORRECTNESS_r05 clears verification backlog.  Since the
-# graph family's deletion it names 46 queries; the window's last 4 slots take
-# the first 4 base names.
+# graph, text-analysis and retrieval deletions it names 45 queries; the
+# window's last 5 slots take the first 5 base names.
 _PROMOTE_R5 = [
     "interval_join", "asof_join", "mobility", "od_flows", "stay_points",
     "spatial_window", "domain_cap", "pack_sequences", "doc_chunking",
-    "stratified_sample", "bm25_topk", "ann_cosine_ivfpq_res", "ann_cosine_ivfpq",
+    "stratified_sample", "ann_cosine_ivfpq_res", "ann_cosine_ivfpq",
     "scrub_apply", "ann_pq_scan", "ann_cosine_pq", "embedding_coreset",
     "ann_cosine_ivf", "zonal_median", "zonal_stats", "vectorize_tiles",
     "caption_alignment", "crossmodal_dedup", "image_pipeline", "image_similarity",
@@ -11822,15 +11012,12 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- round-4 continuation: newest first (never driver-recorded)
         "fuzzy2_join": q_fuzzy2_join,
-        "sentiment": q_sentiment,
         "novelty": q_novelty,
         "convex_layers": q_convex_layers,
         "bootstrap_ci": q_bootstrap_ci,
-        "rake": q_rake,
         "fs_linkage": q_fs_linkage,
         "cube_metrics": q_cube_metrics,
         "stable_matching": q_stable_matching,
-        "rocchio": q_rocchio,
         "quadrat": q_quadrat,
         "undistort": q_undistort,
         "lcs_similarity": q_lcs_similarity,
@@ -11838,10 +11025,8 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "phonetic_dedup": q_phonetic_dedup,
         "bilateral": q_bilateral,
         "unsharp": q_unsharp,
-        "perceptron": q_perceptron,
         "median_center": q_median_center,
         "knox": q_knox,
-        "rrf_fusion": q_rrf_fusion,
         "psnr_gate": q_psnr_gate,
         "cost_distance": q_cost_distance,
         "kll_quantiles": q_kll_quantiles,
@@ -11849,10 +11034,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tfidf_cosine": q_tfidf_cosine,
         "boilerplate": q_boilerplate,
         "keyframes": q_keyframes,
-        "url_canon": q_url_canon,
         "cell_buffer": q_cell_buffer,
-        "knn_classify": q_knn_classify,
-        "pii_scan": q_pii_scan,
         "bearing_stats": q_bearing_stats,
         "f2_sketch": q_f2_sketch,
         "canonical_pick": q_canonical_pick,
@@ -11865,14 +11047,9 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "flow_accum": q_flow_accum,
         "ring_validity": q_ring_validity,
         "gray_world": q_gray_world,
-        "bpe_encode": q_bpe_encode,
-        "bpe_train": q_bpe_train,
-        "compress_cost": q_compress_cost,
         "home_anchors": q_home_anchors,
         "dog_keypoints": q_dog_keypoints,
-        "pca_top": q_pca_top,
         "alpha_shape": q_alpha_shape,
-        "keyword_extract": q_keyword_extract,
         "winnow": q_winnow,
         "color_quantize": q_color_quantize,
         "anchor_assign": q_anchor_assign,
@@ -11884,24 +11061,18 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "coverage_select": q_coverage_select,
         "brief_match": q_brief_match,
         "delaunay": q_delaunay,
-        "maxsim": q_maxsim,
         "dither": q_dither,
         "mask_iou": q_mask_iou,
         "fast_corners": q_fast_corners,
         "lbp": q_lbp,
         "join_counts": q_join_counts,
-        "hard_negatives": q_hard_negatives,
         "scan_stat": q_scan_stat,
         "sd_ellipse": q_sd_ellipse,
         "hough": q_hough,
         "gaussian_blur": q_gaussian_blur,
         "min_bbox": q_min_bbox,
-        "mmr": q_mmr,
-        "pmi": q_pmi,
-        "silhouette": q_silhouette,
         "decluster": q_decluster,
         "canny_nms": q_canny,
-        "ranking_eval": q_ranking_eval,
         "ssim": q_ssim,
         "morph_openclose": q_morph_openclose,
         "motion_field": q_motion_field,
@@ -11914,7 +11085,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "harris": q_harris,
         "segment_intersect": q_segment_intersect,
         "viewshed": q_viewshed,
-        "text_nll": q_text_nll,
         "geary_c": q_geary_c,
         "integral_image": q_integral_image,
         "rle_mask": q_rle_mask,
@@ -11929,12 +11099,9 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dct_phash": q_dct_phash,
         "embedding_clusters": q_embedding_clusters,
         "hillshade": q_hillshade,
-        "label_noise": q_label_noise,
-        "centroid_margin": q_centroid_margin,
         "mosaic_crop": q_mosaic_crop,
         "cdc_chunks_arrow": q_cdc_chunks_arrow,
         "cdc_chunks": q_cdc_chunks,
-        "zipf_fit": q_zipf_fit,
         "gravity_fit": q_gravity_fit,
         "quadtree_plan": q_quadtree_plan,
         "track_nll": q_track_nll,
@@ -12019,7 +11186,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scrub_apply": q_scrub_apply,
         "ann_cosine_ivfpq": q_ann_cosine_ivfpq,
         "ann_cosine_ivfpq_res": q_ann_cosine_ivfpq_res,
-        "bm25_topk": q_bm25_topk,
         "stratified_sample": q_stratified_sample,
         "doc_chunking": q_doc_chunking,
         "pack_sequences": q_pack_sequences,
@@ -12101,15 +11267,12 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     return {
         "fuzzy2_join": _fuzzy2_join_sql(),
-        "sentiment": _sentiment_sql(),
         "novelty": _novelty_sql(),
         "convex_layers": _convex_layers_sql(),
         "bootstrap_ci": _bootstrap_ci_sql(),
-        "rake": _rake_sql(),
         "fs_linkage": _fs_linkage_sql(),
         "cube_metrics": _CUBE_SQL,
         "stable_matching": _stable_matching_sql(),
-        "rocchio": _rocchio_sql(),
         "quadrat": _quadrat_sql(),
         "undistort": _undistort_sql(),
         "lcs_similarity": _lcs_similarity_sql(),
@@ -12117,10 +11280,8 @@ def oracle_sql() -> dict[str, str]:
         "phonetic_dedup": _phonetic_dedup_sql(),
         "bilateral": _bilateral_sql(),
         "unsharp": _unsharp_sql(),
-        "perceptron": _perceptron_sql(),
         "median_center": _median_center_sql(),
         "knox": _knox_sql(),
-        "rrf_fusion": _rrf_fusion_sql(),
         "psnr_gate": _psnr_gate_sql(),
         "cost_distance": _cost_distance_sql(),
         "kll_quantiles": _kll_quantiles_sql(),
@@ -12128,10 +11289,7 @@ def oracle_sql() -> dict[str, str]:
         "tfidf_cosine": _tfidf_cosine_sql(),
         "boilerplate": _boilerplate_sql(),
         "keyframes": _keyframes_sql(),
-        "url_canon": _url_canon_sql(),
         "cell_buffer": _cell_buffer_sql(),
-        "knn_classify": _knn_classify_sql(),
-        "pii_scan": _pii_scan_sql(),
         "bearing_stats": _bearing_stats_sql(),
         "f2_sketch": _f2_sketch_sql(),
         "canonical_pick": _canonical_pick_sql(),
@@ -12144,14 +11302,9 @@ def oracle_sql() -> dict[str, str]:
         "flow_accum": _flow_accum_sql(),
         "ring_validity": _ring_validity_sql(),
         "gray_world": _gray_world_sql(),
-        "bpe_encode": _bpe_encode_sql(),
-        "bpe_train": _bpe_train_sql(),
-        "compress_cost": _compress_cost_sql(),
         "home_anchors": _home_anchors_sql(),
         "dog_keypoints": _dog_keypoints_sql(),
-        "pca_top": _pca_top_sql(),
         "alpha_shape": _alpha_shape_sql(),
-        "keyword_extract": _keyword_extract_sql(),
         "winnow": _winnow_sql(),
         "color_quantize": _color_quantize_sql(),
         "anchor_assign": _anchor_assign_sql(),
@@ -12163,24 +11316,18 @@ def oracle_sql() -> dict[str, str]:
         "coverage_select": _coverage_select_sql(),
         "brief_match": _brief_match_sql(),
         "delaunay": _delaunay_sql(),
-        "maxsim": _maxsim_sql(),
         "dither": _dither_sql(),
         "mask_iou": _mask_iou_sql(),
         "fast_corners": _fast_corners_sql(),
         "lbp": _lbp_sql(),
         "join_counts": _join_counts_sql(),
-        "hard_negatives": _hard_negatives_sql(),
         "scan_stat": _scan_stat_sql(),
         "sd_ellipse": _sd_ellipse_sql(),
         "hough": _hough_sql(),
         "gaussian_blur": _gaussian_blur_sql(),
         "min_bbox": _min_bbox_sql(),
-        "mmr": _mmr_sql(),
-        "pmi": _pmi_sql(),
-        "silhouette": _silhouette_sql(),
         "decluster": _decluster_sql(),
         "canny_nms": _canny_sql(),
-        "ranking_eval": _ranking_eval_sql(),
         "ssim": _SSIM_SQL,
         "morph_openclose": _MORPH_OPENCLOSE_SQL,
         "motion_field": _MOTION_FIELD_SQL,
@@ -12193,7 +11340,6 @@ def oracle_sql() -> dict[str, str]:
         "harris": _HARRIS_SQL,
         "segment_intersect": _SEGMENT_INTERSECT_SQL,
         "viewshed": _VIEWSHED_SQL,
-        "text_nll": _TEXT_NLL_SQL,
         "geary_c": _geary_c_sql(),
         "integral_image": _integral_image_sql(),
         "rle_mask": _RLE_MASK_SQL,
@@ -12208,12 +11354,9 @@ def oracle_sql() -> dict[str, str]:
         "dct_phash": _dct_phash_sql(),
         "embedding_clusters": _EMB_CLUSTERS_SQL,
         "hillshade": _HILLSHADE_SQL,
-        "label_noise": _LABEL_NOISE_SQL,
-        "centroid_margin": _CENTROID_MARGIN_SQL,
         "mosaic_crop": _mosaic_crop_sql(),
         "cdc_chunks_arrow": _cdc_chunks_sql(),
         "cdc_chunks": _cdc_chunks_sql(),
-        "zipf_fit": _zipf_fit_sql(),
         "gravity_fit": _gravity_fit_sql(),
         "quadtree_plan": _quadtree_plan_sql(),
         "track_nll": _track_nll_sql(),
@@ -12351,7 +11494,6 @@ def oracle_sql() -> dict[str, str]:
         "scrub_apply": _scrub_apply_sql(),
         "ann_cosine_ivfpq": _ann_ivfpq_sql(),
         "ann_cosine_ivfpq_res": _ann_ivfpq_res_sql(),
-        "bm25_topk": _bm25_sql(),
         "text_analysis": _TEXT_SQL,
         "quality_topk": _QUALITY_TOPK_SQL,
         "stratified_sample": _stratified_sample_sql(),

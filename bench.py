@@ -67,11 +67,9 @@ BENCH_QUERIES = [
     "track_nll",
     "quadtree_plan",
     "gravity_fit",
-    "zipf_fit",
     "cdc_chunks",
     "cdc_chunks_arrow",
     "mosaic_crop",
-    "label_noise",
     "hillshade",
     "embedding_clusters",
     "dct_phash",
@@ -85,12 +83,10 @@ BENCH_QUERIES = [
     "morphology",
     "rle_mask",
     "integral_image",
-    "centroid_margin",
     "hilbert_layout",
     "geohash_layout",
     "morans_i",
     "geary_c",
-    "text_nll",
     "viewshed",
     "segment_intersect",
     "harris",
@@ -103,7 +99,6 @@ BENCH_QUERIES = [
     "motion_field",
     "morph_openclose",
     "ssim",
-    "ranking_eval",
     "hotspots",
     "focal_stats",
     "lisa",
@@ -198,19 +193,14 @@ BENCH_QUERIES = [
     "hough",
     "gaussian_blur",
     "min_bbox",
-    "mmr",
-    "pmi",
-    "silhouette",
     "decluster",
     "canny_nms",
     "scan_stat",
-    "hard_negatives",
     "join_counts",
     "lbp",
     "fast_corners",
     "mask_iou",
     "dither",
-    "maxsim",
     "delaunay",
     "brief_match",
     "coverage_select",
@@ -222,14 +212,9 @@ BENCH_QUERIES = [
     "anchor_assign",
     "color_quantize",
     "winnow",
-    "keyword_extract",
     "alpha_shape",
-    "pca_top",
     "dog_keypoints",
     "home_anchors",
-    "compress_cost",
-    "bpe_train",
-    "bpe_encode",
     "gray_world",
     "ring_validity",
     "flow_accum",
@@ -242,10 +227,7 @@ BENCH_QUERIES = [
     "canonical_pick",
     "f2_sketch",
     "bearing_stats",
-    "pii_scan",
-    "knn_classify",
     "cell_buffer",
-    "url_canon",
     "keyframes",
     "boilerplate",
     "tfidf_cosine",
@@ -253,10 +235,8 @@ BENCH_QUERIES = [
     "kll_quantiles",
     "cost_distance",
     "psnr_gate",
-    "rrf_fusion",
     "knox",
     "median_center",
-    "perceptron",
     "unsharp",
     "bilateral",
     "phonetic_dedup",
@@ -264,15 +244,12 @@ BENCH_QUERIES = [
     "lcs_similarity",
     "undistort",
     "quadrat",
-    "rocchio",
     "stable_matching",
     "cube_metrics",
     "fs_linkage",
-    "rake",
     "bootstrap_ci",
     "convex_layers",
     "novelty",
-    "sentiment",
     "fuzzy2_join",
 ]
 

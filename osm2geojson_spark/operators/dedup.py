@@ -1073,9 +1073,8 @@ def tfidf_cosine_pairs(
     production near-dup/plagiarism pipelines actually rank by.
 
     Integer weighting: tf is the exact gram multiplicity, idf the
-    DYADIC ⌊log2(N/df)⌋ (= length(bin(N div df)) − 1, the
-    keyword_extract scheme — bin() agrees cross-engine, no log
-    anywhere), w = tf·idf exact int64. Grams with df > N/2 get idf 0
+    DYADIC ⌊log2(N/df)⌋ (= length(bin(N div df)) − 1 — bin() agrees
+    cross-engine, no log anywhere), w = tf·idf exact int64. Grams with df > N/2 get idf 0
     and drop out of weights AND candidates — the max_df heavy-shingle
     prune falls out of the weighting for free, and consistently (the
     norm excludes them too, so the cosine is exactly the cosine of

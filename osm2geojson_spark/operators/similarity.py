@@ -47,7 +47,6 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-from ..sources.local import local_frame
 
 RH_BITS = 16  # bits (hyperplanes) per band
 ANN_BANDS = 4  # bands probed by cosine_topk_lsh (hamming-1 multiprobe)
@@ -903,181 +902,6 @@ def _guard_gemm_collect(df: DataFrame, what: str, max_rows: int) -> None:
         )
 
 
-def label_noise_scores(
-    emb: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    method: str = "gemm",
-    max_rows: int = GEMM_COLLECT_CAP,
-) -> DataFrame:
-    """LABEL-NOISE MINING over a labeled embedding table (the confident-
-    learning / deep-kNN signal of training-data curation): for each
-    vector, how many of its k nearest neighbors (cosine, self excluded)
-    carry a DIFFERENT label. High disagreement = likely mislabeled or
-    boundary sample; the standard triage queue before relabeling.
-
-    Deterministic: neighbors ranked (cos DESC, id ASC); the score
-    ``n_diff`` is an exact integer over that pinned neighbor set.
-    Returns (id, label, n_diff, k_eff) — k_eff < k only when the corpus
-    has fewer than k+1 rows.
-
-    Scale: this exact form is the brute O(n^2) oracle shape — run it on
-    validation samples. The GEMM path counts the corpus first and
-    RAISES past ``max_rows`` (default GEMM_COLLECT_CAP) rather than
-    collect an unbounded table to the driver. At corpus scale swap the
-    candidate generator for the banded-LSH / IVF paths in this module
-    (same ranking + scoring tail); candidates-then-exact-verify is the
-    house ANN pattern."""
-    if method == "relational":
-        q = emb.select(
-            F.col(id_col).alias("_qid"),
-            F.col(vec_col).alias("_qvec"),
-            F.col(label_col).alias("_qlab"),
-        )
-        t = emb.select(
-            F.col(id_col).alias("_tid"),
-            F.col(vec_col).alias("_tvec"),
-            F.col(label_col).alias("_tlab"),
-        )
-        cand = (
-            q.crossJoin(t)
-            .filter(F.col("_qid") != F.col("_tid"))
-            .withColumn("cos", cosine_col(F.col("_qvec"), F.col("_tvec")))
-        )
-        wnd = Window.partitionBy("_qid").orderBy(
-            F.col("cos").desc(), F.col("_tid").asc()
-        )
-        topk = cand.withColumn("rank", F.row_number().over(wnd)).filter(
-            F.col("rank") <= k
-        )
-        return topk.groupBy("_qid").agg(
-            F.first("_qlab").alias(label_col),
-            F.sum((F.col("_tlab") != F.col("_qlab")).cast("long"))
-            .cast("long")
-            .alias("n_diff"),
-            F.count(F.lit(1)).cast("long").alias("k_eff"),
-        ).select(F.col("_qid").alias(id_col), label_col, "n_diff", "k_eff")
-
-    # default GEMM path: the (validation-sized) corpus is broadcast as one
-    # NumPy matrix and every query batch scores against it with a single
-    # matrix multiply — the relational form's array-HOF cosine is
-    # interpreted per element (no codegen for higher-order functions) and
-    # measured ~10x slower at 800x800; both paths are pinned equal in
-    # tests. Neighbor order stays (cos DESC, id ASC).
-    _guard_gemm_collect(emb, "label_noise_scores", max_rows)
-    rows = emb.select(id_col, vec_col, label_col).collect()
-    rows.sort(key=lambda r: r[0])
-    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    labels = np.asarray([r[2] for r in rows], dtype=np.int64)
-    C = np.asarray([r[1] for r in rows], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1), 1e-300)[:, None]
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((ids, labels, Cn))
-
-    def fn(it):
-        b_ids, b_labels, b_Cn = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            qid = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
-            qlab = pdf.iloc[:, 2].to_numpy(dtype=np.int64)
-            Q = np.asarray(list(pdf.iloc[:, 1]), dtype=np.float64)
-            Qn = Q / np.maximum(np.linalg.norm(Q, axis=1), 1e-300)[:, None]
-            S = Qn @ b_Cn.T
-            out = []
-            for r in range(len(qid)):
-                srow = S[r].copy()
-                srow[b_ids == qid[r]] = -np.inf  # self out
-                order = np.lexsort((b_ids, -srow))[:k]
-                order = order[np.isfinite(srow[order])]
-                nd = int((b_labels[order] != qlab[r]).sum())
-                out.append((int(qid[r]), int(qlab[r]), nd, len(order)))
-            yield pd.DataFrame(
-                out, columns=[id_col, label_col, "n_diff", "k_eff"]
-            )
-
-    return emb.select(id_col, vec_col, label_col).mapInPandas(
-        fn,
-        schema=f"{id_col} long, {label_col} long, n_diff long, k_eff long",
-    )
-
-
-def centroid_margins(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """CLASS-CENTROID MARGIN — each vector's cosine to its own class
-    centroid vs its best other-class centroid (margin = own - best
-    other): the cheap embedding-space quality score (negative margin =
-    lives closer to another class; the first-pass filter before the
-    kNN label-noise pass, at a fraction of its cost).
-
-    Centroids are UNNORMALIZED per-class means in double, computed as a
-    COMBINABLE (label, dim) rollup over the dim-exploded vectors (map-
-    side partial sums — never a collect_list of vectors), re-assembled
-    into arrays and broadcast back as a tiny table; every per-row score
-    is then pure JVM column math. Cosines are rounded to 6 decimals
-    (house float rule) and the margin is their difference.
-
-    Note the per-dim mean is sum/count in DOUBLE with the partial-sum
-    order unpinned — centroid coordinates are stable to ~1 ulp, and the
-    6-decimal rounding absorbs it (same contract as this module's other
-    float scores).
-
-    Scale: one (label, dim) rollup over the corpus (|classes| x dim rows
-    out), one broadcast join, no shuffle of vectors."""
-    dims = (
-        emb.select(
-            F.col(label_col).alias("_clab"),
-            F.posexplode(F.col(vec_col)).alias("_d", "_x"),
-        )
-        .groupBy("_clab", "_d")
-        .agg(
-            F.sum(F.col("_x").cast("double")).alias("_s"),
-            F.count(F.lit(1)).cast("long").alias("_n"),
-        )
-    )
-    sums = (
-        dims.groupBy("_clab")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("_d", (F.col("_s") / F.col("_n").cast("double")).alias("_m")))
-            ).alias("_dm")
-        )
-        .select(
-            "_clab", F.transform("_dm", lambda s: s["_m"]).alias("_cent")
-        )
-    )
-    scored = (
-        emb.select(
-            F.col(id_col).alias("_id"),
-            F.col(label_col).alias("_lab"),
-            F.col(vec_col).alias("_v"),
-        )
-        .crossJoin(F.broadcast(sums))
-        .withColumn("cos", cosine_col(F.col("_v"), F.col("_cent")))
-    )
-    own = scored.filter(F.col("_lab") == F.col("_clab")).select(
-        "_id", "_lab", F.round("cos", 6).alias("own_cos")
-    )
-    other = (
-        scored.filter(F.col("_lab") != F.col("_clab"))
-        .groupBy("_id")
-        .agg(F.round(F.max("cos"), 6).alias("other_cos"))
-    )
-    return own.join(other, "_id").select(
-        F.col("_id").alias(id_col),
-        F.col("_lab").alias(label_col),
-        "own_cos",
-        "other_cos",
-        F.round(F.col("own_cos") - F.col("other_cos"), 6).alias("margin"),
-    )
-
-
 def gemm_knn_edges(
     emb: DataFrame,
     k: int,
@@ -1088,8 +912,7 @@ def gemm_knn_edges(
     """(qid, tid, rank) — exact cosine kNN edges of one embedding set
     (self excluded), scored by the broadcast-GEMM pattern: the
     validation-sized corpus rides to executors as one NumPy matrix and
-    each Arrow batch does a single matrix multiply (label_noise_scores'
-    fast path, factored for graph builders). Neighbor order pinned
+    each Arrow batch does a single matrix multiply. Neighbor order pinned
     (cos DESC, id ASC). Counts first and raises past ``max_rows`` —
     compose knn_graph / the ann_* candidate paths at corpus scale."""
     _guard_gemm_collect(emb, "gemm_knn_edges", max_rows)
@@ -1163,623 +986,3 @@ def mutual_knn_clusters(
     ).select(F.col("doc_id").alias(id_col), "cluster_id")
 
 
-SIL_Q = 1_000_000  # silhouette distance quantization per term
-
-
-def silhouette_scores(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-    label_col: str = "label",
-) -> DataFrame:
-    """(vec_id, label, a_mean, b_mean, b_label, silhouette) — SILHOUETTE
-    clustering quality (Rousseeuw 1987) per point: a = mean intra-cluster
-    distance (self excluded), b = min over other clusters of the mean
-    distance, s = (b − a)/max(a, b). THE standard internal validation
-    for the k-means/embedding-cluster operators in this repo.
-
-    Exactness: pairwise distances are the quantized squared L2
-    Σ_j floor((x_j − y_j)²·1e6 + 0.5) — order-free int64 — so per-
-    cluster (sum, count) pairs are exact; the means and the final s are
-    a pinned-order IEEE double assembly (divide, subtract, divide),
-    identical cross-engine. min-by is (mean, label) — deterministic.
-    Singleton clusters get silhouette 0 with NULL a_mean (sklearn's
-    convention).
-
-    Scale: silhouette is quadratic by definition — run it on a SAMPLE
-    (the universal practice; sampling ops live in operators/sampling).
-    Within the sample the pair distances are one self-join (broadcast
-    the sample) + a combinable (i, other-label) rollup; nothing touches
-    the full corpus."""
-    a = emb.select(
-        F.col(id_col).alias("i"),
-        F.col(label_col).alias("li"),
-        F.col(vec_col).alias("vi"),
-    )
-    b = emb.select(
-        F.col(id_col).alias("j"),
-        F.col(label_col).alias("lj"),
-        F.col(vec_col).alias("vj"),
-    )
-    dist_q = F.aggregate(
-        F.zip_with(
-            "vi",
-            "vj",
-            lambda x, y: F.floor(
-                (x - y) * (x - y) * F.lit(float(SIL_Q)) + F.lit(0.5)
-            ).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, t: acc + t,
-    )
-    pairs = (
-        a.join(F.broadcast(b), F.col("i") != F.col("j"))
-        .withColumn("_d", dist_q)
-        .groupBy("i", "li", "lj")
-        .agg(
-            F.sum("_d").cast("long").alias("s"),
-            F.count(F.lit(1)).cast("long").alias("c"),
-        )
-    )
-    own = pairs.filter(F.col("li") == F.col("lj")).select(
-        "i",
-        (F.col("s").cast("double") / F.col("c").cast("double")).alias(
-            "a_mean"
-        ),
-    )
-    other = (
-        pairs.filter(F.col("li") != F.col("lj"))
-        .withColumn(
-            "_m", F.col("s").cast("double") / F.col("c").cast("double")
-        )
-        .groupBy("i", "li")
-        .agg(F.min(F.struct(F.col("_m"), F.col("lj"))).alias("mb"))
-        .select(
-            "i",
-            F.col("li").alias("label"),
-            F.col("mb._m").alias("b_mean"),
-            F.col("mb.lj").alias("b_label"),
-        )
-    )
-    joined = other.join(own, "i", "left")
-    s = (F.col("b_mean") - F.col("a_mean")) / F.greatest(
-        F.col("a_mean"), F.col("b_mean")
-    )
-    return joined.select(
-        F.col("i").alias(id_col),
-        "label",
-        "a_mean",
-        "b_mean",
-        "b_label",
-        F.when(F.col("a_mean").isNull(), F.lit(0.0)).otherwise(s).alias(
-            "silhouette"
-        ),
-    )
-
-
-def silhouette_scores_sql(
-    emb_cte: str,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-    label_col: str = "label",
-    dim: int = 64,
-) -> str:
-    """DuckDB twin of silhouette_scores — identical quantized distance,
-    identical pinned double assembly and (mean, label) min-by."""
-    return f"""
-WITH e AS ({emb_cte}),
-pairs AS (
-  SELECT a.{id_col} AS i, a.{label_col} AS li, b.{label_col} AS lj,
-    CAST(sum(CAST(floor((a.{vec_col}[j] - b.{vec_col}[j])
-         * (a.{vec_col}[j] - b.{vec_col}[j]) * {SIL_Q} + 0.5) AS BIGINT))
-         AS BIGINT) AS s,
-    CAST(count(*) // {dim} AS BIGINT) AS c
-  FROM e a JOIN e b ON a.{id_col} != b.{id_col},
-       unnest(generate_series(1, {dim})) t(j)
-  GROUP BY 1, 2, 3
-),
-own AS (
-  SELECT i, CAST(s AS DOUBLE) / CAST(c AS DOUBLE) AS a_mean
-  FROM pairs WHERE li = lj
-),
-other AS (
-  SELECT i, li AS label,
-         CAST(s AS DOUBLE) / CAST(c AS DOUBLE) AS m, lj
-  FROM pairs WHERE li != lj
-),
-best AS (
-  SELECT i, label, m AS b_mean, lj AS b_label
-  FROM other
-  QUALIFY row_number() OVER (PARTITION BY i ORDER BY m, lj) = 1
-)
-SELECT best.i AS {id_col}, best.label, own.a_mean, best.b_mean,
-       best.b_label,
-       CASE WHEN own.a_mean IS NULL THEN 0.0
-            ELSE (best.b_mean - own.a_mean)
-                 / greatest(own.a_mean, best.b_mean)
-       END AS silhouette
-FROM best LEFT JOIN own ON own.i = best.i
-"""
-
-
-def hard_negatives(
-    anchors: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    max_rows: int = GEMM_COLLECT_CAP,
-) -> DataFrame:
-    """(qid, qlabel, tid, tlabel, rank, dot_q) — HARD-NEGATIVE MINING
-    for contrastive training: per anchor, the top-k highest-similarity
-    candidates with a DIFFERENT label. The standard training-data move
-    (SimCLR/CLIP fine-tuning, retrieval distillation): random negatives
-    are too easy; the near-misses carry the gradient signal.
-
-    Similarity is the raw inner product — THE contrastive score when
-    embeddings are L2-normalized upstream — quantized per term as
-    floor(a_j·b_j·1e6 + 0.5) and summed in int64, so the score, the
-    (dot_q DESC, tid ASC) ranking, and the top-k cut are exact and
-    engine-independent (same scheme as silhouette/MMR).
-
-    Scale: the candidate corpus rides to executors as one broadcast
-    NumPy matrix (validation/queue-sized, the standard in-batch+queue
-    mining regime — MoCo's queue is 65k rows); each Arrow batch of
-    anchors scores per-anchor against the whole queue with a vectorized
-    elementwise-quantize + row sum, never a Spark-side pairwise join.
-    Counts first and raises past ``max_rows``. Corpus-scale mining
-    composes upstream: ANN-restrict candidates first (ann_*
-    operators), then exact-rescore here."""
-    _guard_gemm_collect(corpus, "hard_negatives", max_rows)
-    rows = corpus.select(id_col, label_col, vec_col).collect()
-    rows.sort(key=lambda r: r[0])
-    c_ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    c_lab = np.asarray([r[1] for r in rows], dtype=np.int64)
-    C = np.asarray([r[2] for r in rows], dtype=np.float64)
-    bc = anchors.sparkSession.sparkContext.broadcast((c_ids, c_lab, C))
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_ids, b_lab, b_C = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            out = []
-            for qid, qlab, vec in zip(
-                pdf[id_col].to_numpy(dtype=np.int64),
-                pdf[label_col].to_numpy(dtype=np.int64),
-                pdf[vec_col],
-            ):
-                q = np.asarray(vec, dtype=np.float64)
-                dots = (
-                    np.floor(q[None, :] * b_C * 1e6 + 0.5)
-                    .sum(axis=1)
-                    .astype(np.int64)
-                )
-                mask = b_lab != qlab
-                cand = np.nonzero(mask)[0]
-                order = cand[np.lexsort((b_ids[cand], -dots[cand]))[:k]]
-                out.extend(
-                    (
-                        int(qid),
-                        int(qlab),
-                        int(b_ids[j]),
-                        int(b_lab[j]),
-                        rk + 1,
-                        int(dots[j]),
-                    )
-                    for rk, j in enumerate(order)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["qid", "qlabel", "tid", "tlabel", "rank", "dot_q"],
-            )
-
-    return anchors.select(id_col, label_col, vec_col).mapInPandas(
-        fn,
-        schema=(
-            "qid long, qlabel long, tid long, tlabel long,"
-            " rank long, dot_q long"
-        ),
-    )
-
-
-def hard_negatives_sql(
-    anchors_cte: str,
-    corpus_cte: str,
-    k: int = 5,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> str:
-    """DuckDB twin of hard_negatives — identical per-term quantized
-    dot, different-label mask, and (dot_q DESC, tid ASC) top-k."""
-    i, v, l = id_col, vec_col, label_col
-    return f"""
-WITH a AS ({anchors_cte}),
-c AS ({corpus_cte}),
-pairs AS (
-  SELECT a.{i} AS qid, a.{l} AS qlabel, c.{i} AS tid, c.{l} AS tlabel,
-         CAST(sum(CAST(floor(
-           CAST(a.{v}[j] AS DOUBLE) * CAST(c.{v}[j] AS DOUBLE) * 1e6 + 0.5
-         ) AS BIGINT)) AS BIGINT) AS dot_q
-  FROM a JOIN c ON a.{l} != c.{l},
-       unnest(generate_series(1, {dim})) t(j)
-  GROUP BY 1, 2, 3, 4
-)
-SELECT CAST(qid AS BIGINT) AS qid, CAST(qlabel AS BIGINT) AS qlabel,
-       CAST(tid AS BIGINT) AS tid, CAST(tlabel AS BIGINT) AS tlabel,
-       CAST(row_number() OVER (
-         PARTITION BY qid ORDER BY dot_q DESC, tid
-       ) AS BIGINT) AS rank,
-       dot_q
-FROM pairs
-QUALIFY rank <= {k}
-"""
-
-
-PCA_V_SCALE = 1 << 20  # fixed-point scale of the power-iteration vector
-
-
-def pca_top_eigvec(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    iters: int = 12,
-    scale: int = GRAM_SCALE,
-) -> DataFrame:
-    """(i, v_q, lam) — the TOP PRINCIPAL DIRECTION of the embedding
-    corpus's second moment by POWER ITERATION on the exact quantized
-    Gram matrix (the PCA-whitening / dominant-axis primitive: energy
-    concentration, anisotropy checks, the first step of spectral
-    embedding-table diagnostics).
-
-    Deterministic and engine-exact by construction: the iterate is a
-    fixed-point integer vector (scale 2^20) starting at all-ones; each
-    round computes w = G v in EXACT integer arithmetic (Python bigint /
-    HUGEINT — cells reach ~1e21, past int64 by design) and renormalizes
-    sign-aware,
-
-        v'[i] = sign(w[i]) * ( |w[i]| * 2^20 div max|w| ),
-
-    (truncating division on NONNEGATIVE operands — floor == truncate in
-    both engines, the usual negative-division trap avoided). After
-    ``iters`` rounds the sign is pinned by flipping so the coordinate of
-    max |v| (ties: lowest i) is positive. lam is the Rayleigh quotient
-    (v^T G v) / (v^T v S^2)·... reported as the one IEEE division of two
-    exact integers, rescaled to raw-coordinate units by 1/scale^2.
-    Whatever ``iters`` rounds produce IS the contract — no convergence
-    epsilon, no RNG.
-
-    Scale: the corpus-sized work is gram_matrix (one int64 GEMM per
-    Arrow batch, combinable rollup); the d(d+1)/2 cells collect once to
-    the driver where the O(d^2 iters) bigint iteration is trivial —
-    the same tiny-model locality as ivf_train / markov_attribution."""
-    cells = gram_matrix(emb, vec_col, dim=dim, scale=scale).collect()
-    G = [[0] * dim for _ in range(dim)]
-    for r in cells:
-        G[r["i"]][r["j"]] = r["g_q"]
-        G[r["j"]][r["i"]] = r["g_q"]
-    S = PCA_V_SCALE
-    v = [S] * dim
-    for _ in range(int(iters)):
-        w = [sum(G[i][j] * v[j] for j in range(dim)) for i in range(dim)]
-        m = max(abs(x) for x in w)
-        if m == 0:
-            break
-        v = [
-            (1 if x >= 0 else -1) * ((abs(x) * S) // m)
-            for x in w
-        ]
-    pivot = max(range(dim), key=lambda i: (abs(v[i]), -i))
-    if v[pivot] < 0:
-        v = [-x for x in v]
-    num = sum(v[i] * G[i][j] * v[j] for i in range(dim) for j in range(dim))
-    den = sum(x * x for x in v) * scale * scale
-    lam = float(num) / float(den) if den else 0.0
-    spark = emb.sparkSession
-    return local_frame(
-        spark, [(i, v[i], lam) for i in range(dim)], "i int, v_q long, lam double"
-    )
-
-
-def pca_top_eigvec_sql(
-    rows_cte: str,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    iters: int = 12,
-    scale: int = GRAM_SCALE,
-) -> str:
-    """DuckDB twin of pca_top_eigvec — gram twin as a materialized CTE
-    expanded to the full symmetric matrix, then the power rounds
-    UNROLLED (HUGEINT matvec + the identical sign-aware truncating
-    renormalization), the same pivot sign flip and Rayleigh division."""
-    S = PCA_V_SCALE
-    parts = [
-        f"""pca_g AS MATERIALIZED ({gram_matrix_sql(rows_cte, vec_col, scale)}),
-pca_full AS MATERIALIZED (
-  SELECT i, j, CAST(g_q AS HUGEINT) AS g FROM pca_g
-  UNION ALL
-  SELECT j, i, CAST(g_q AS HUGEINT) AS g FROM pca_g WHERE i <> j
-),
-pca_v0 AS MATERIALIZED (
-  SELECT unnest(range(0, {int(dim)})) AS i, CAST({S} AS HUGEINT) AS v
-)"""
-    ]
-    for t in range(1, int(iters) + 1):
-        prev = f"pca_v{t - 1}"
-        parts.append(
-            f"""pca_w{t} AS MATERIALIZED (
-  SELECT g.i, CAST(sum(g.g * v.v) AS HUGEINT) AS w
-  FROM pca_full g JOIN {prev} v ON v.i = g.j GROUP BY 1
-),
-pca_v{t} AS MATERIALIZED (
-  SELECT w.i,
-         CAST(CASE WHEN w.w >= 0 THEN (abs(w.w) * {S}) // m.m
-              ELSE -((abs(w.w) * {S}) // m.m) END AS HUGEINT) AS v
-  FROM pca_w{t} w, (SELECT max(abs(w)) AS m FROM pca_w{t}) m
-)"""
-        )
-    last = f"pca_v{int(iters)}"
-    return f"""
-WITH {','.join(parts)},
-pca_sgn AS (
-  SELECT CASE WHEN v < 0 THEN -1 ELSE 1 END AS s
-  FROM {last} ORDER BY abs(v) DESC, i ASC LIMIT 1
-),
-pca_fin AS (
-  SELECT l.i, CAST(l.v * g.s AS HUGEINT) AS v
-  FROM {last} l, pca_sgn g
-),
-pca_num AS (
-  SELECT CAST(sum(a.v * f.g * b.v) AS HUGEINT) AS num
-  FROM pca_full f JOIN pca_fin a ON a.i = f.i JOIN pca_fin b ON b.i = f.j
-),
-pca_den AS (
-  SELECT CAST(sum(v * v) AS HUGEINT) * {int(scale)} * {int(scale)} AS den
-  FROM pca_fin
-)
-SELECT CAST(f.i AS INTEGER) AS i, CAST(f.v AS BIGINT) AS v_q,
-       CASE WHEN d.den = 0 THEN 0.0
-            ELSE CAST(n.num AS DOUBLE) / CAST(d.den AS DOUBLE) END AS lam
-FROM pca_fin f, pca_num n, pca_den d
-"""
-
-
-def knn_classify(
-    emb: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """(vec_id, label, pred, votes, k_eff, correct) — LEAVE-ONE-OUT
-    kNN CLASSIFICATION over a labeled embedding table: predict each
-    vector's label by majority vote of its k nearest cosine neighbors
-    (self excluded), and report agreement with the stored label. The
-    standard embedding-quality probe (LOO-kNN accuracy) and the
-    workhorse label-propagation baseline for weakly-labeled corpora —
-    label_noise_scores' sibling that commits to a prediction instead
-    of a disagreement count.
-
-    Composition: gemm_knn_edges (broadcast-GEMM exact cosine top-k,
-    (cos DESC, id ASC) pinned neighbor order) → join neighbor labels →
-    per-(vector, label) vote counts → argmax pinned by (votes DESC,
-    label ASC). Every step past the scored edges is exact integer
-    algebra, so the oracle replays the identical ranked join + vote.
-
-    Scale: the validation-sized corpus broadcasts (this is a
-    quality-probe operator — run it on the eval sample, not the 100 TB
-    corpus); votes/argmax are two combinable groupBys on k·n edge
-    rows. Swap gemm edges for IVF/LSH candidates to classify at
-    corpus scale with recall < 1."""
-    edges = gemm_knn_edges(emb, k, id_col=id_col, vec_col=vec_col)
-    labels = emb.select(
-        F.col(id_col).alias("_id"), F.col(label_col).cast("long").alias("_lab")
-    )
-    votes = (
-        edges.join(F.broadcast(labels), edges["tid"] == labels["_id"])
-        .groupBy(F.col("qid"), F.col("_lab").alias("tlab"))
-        .agg(F.count(F.lit(1)).alias("votes"))
-    )
-    pick = (
-        votes.groupBy("qid")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("votes"), (-F.col("tlab")).alias("neg"),
-                    F.col("tlab").alias("pred"),
-                )
-            ).alias("top"),
-            F.sum("votes").alias("k_eff"),
-        )
-        .select(
-            "qid",
-            F.col("top.pred").alias("pred"),
-            F.col("top.votes").alias("votes"),
-            F.col("k_eff"),
-        )
-    )
-    return (
-        pick.join(F.broadcast(labels), pick["qid"] == labels["_id"])
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("_lab").alias("label"),
-            "pred",
-            "votes",
-            "k_eff",
-            (F.col("pred") == F.col("_lab")).alias("correct"),
-        )
-    )
-
-
-def knn_classify_sql(emb_cte: str, k: int = 10) -> str:
-    """DuckDB twin of knn_classify — ranked cosine cross join, identical
-    vote counts and (votes DESC, label ASC) argmax.
-    ``emb_cte`` -> (vec_id, v DOUBLE[], label)."""
-    return f"""
-WITH kc_e AS ({emb_cte}),
-kc_d AS (
-  SELECT q.vec_id AS qid, q.label AS qlab, t.vec_id AS tid,
-         t.label AS tlab,
-         list_dot_product(q.v, t.v)
-           / (sqrt(list_dot_product(q.v, q.v))
-              * sqrt(list_dot_product(t.v, t.v))) AS cos
-  FROM kc_e q JOIN kc_e t ON q.vec_id != t.vec_id
-),
-kc_r AS (
-  SELECT qid, qlab, tlab,
-         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, tid ASC)
-           AS rank
-  FROM kc_d
-),
-kc_votes AS (
-  SELECT qid, qlab, tlab, CAST(count(*) AS BIGINT) AS votes
-  FROM kc_r WHERE rank <= {k} GROUP BY 1, 2, 3
-),
-kc_pick AS (
-  SELECT qid, qlab, tlab AS pred, votes,
-         CAST(sum(votes) OVER (PARTITION BY qid) AS BIGINT) AS k_eff,
-         row_number() OVER (PARTITION BY qid ORDER BY votes DESC, tlab ASC)
-           AS pr
-  FROM kc_votes
-)
-SELECT qid AS vec_id, qlab AS label, pred, votes, k_eff,
-       pred = qlab AS correct
-FROM kc_pick WHERE pr = 1
-"""
-
-
-PERC_Q = 1000  # fixed-point feature quantization for perceptron
-
-
-def perceptron_train(
-    emb: DataFrame,
-    rounds: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    y_col: str = "y",
-) -> DataFrame:
-    """(j, w, mis) — BATCH PERCEPTRON training on an embedding table
-    (Rosenblatt update, synchronous/"pocket-style" batch variant): all
-    misclassified rows vote at once each round,
-
-        w ← w + Σ_{i: yᵢ·(w·qᵢ + b) ≤ 0} yᵢ·qᵢ
-
-    over features quantized to int64 (q = floor(x·1000 + 0.5), the
-    gram-matrix scheme) — so every round is a pure integer function of
-    the input set: order-free sums, no learning-rate float, bit-equal
-    to the unrolled SQL twin. Rows are (feature index j, final weight
-    w, final-round misclassified count mis); j = -1 is the bias (its
-    feature is the constant PERC_Q). The linear-probe primitive for
-    embedding-space data filtering (e.g. quality-classifier bootstrap
-    on CLIP/text features) without leaving the warehouse.
-
-    ``y`` must be ±1. Scale: features posexplode ONCE into (id, j, q)
-    and checkpoint; each round is one broadcast of the (d+1)-row weight
-    vector + two combinable rollups (margins per id, then update per
-    j) — the corpus never reshuffles. Overflow: |w_j| ≤ rounds·n·Q and
-    margins ≤ d·|w|·Q — keep rounds·n·d·Q² < 2^63 (10^9 rows × 64 dims
-    at Q=1000 needs per-shard training or a smaller Q)."""
-    q = F.expr(
-        f"CAST(floor(CAST(e AS DOUBLE) * {PERC_Q} + 0.5) AS BIGINT)"
-    )
-    feats = (
-        emb.select(
-            F.col(id_col).alias("id"),
-            F.col(y_col).cast("long").alias("y"),
-            F.posexplode(F.col(vec_col)).alias("j", "e"),
-        )
-        .select("id", "y", F.col("j").cast("long").alias("j"), q.alias("q"))
-        .unionByName(
-            emb.select(
-                F.col(id_col).alias("id"),
-                F.col(y_col).cast("long").alias("y"),
-                F.lit(-1).cast("long").alias("j"),
-                F.lit(PERC_Q).cast("long").alias("q"),
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-    w = feats.select("j").distinct().select(
-        "j", F.lit(0).cast("long").alias("w")
-    )
-    mis = None
-    for _ in range(rounds):
-        m = (
-            feats.join(F.broadcast(w), "j")
-            .groupBy("id")
-            .agg(
-                F.first("y").alias("y"),
-                F.sum(F.col("w") * F.col("q")).alias("margin"),
-            )
-            .select(
-                "id", ((F.col("y") * F.col("margin")) <= 0).alias("_bad")
-            )
-        )
-        upd = (
-            feats.join(m, "id")
-            .filter(F.col("_bad"))
-            .groupBy("j")
-            .agg(F.sum(F.col("y") * F.col("q")).cast("long").alias("dw"))
-        )
-        mis = m.agg(F.sum(F.col("_bad").cast("long")).cast("long").alias("mis"))
-        w = (
-            w.join(upd, "j", "left")
-            .select(
-                "j",
-                (F.col("w") + F.coalesce(F.col("dw"), F.lit(0)))
-                .cast("long")
-                .alias("w"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return w.crossJoin(F.broadcast(mis)).select("j", "w", "mis")
-
-
-def perceptron_train_sql(emb_cte: str, rounds: int = 4) -> str:
-    """DuckDB twin of perceptron_train — identical quantization and
-    unrolled synchronous rounds. ``emb_cte`` -> (id, y, embedding)."""
-    parts = [
-        f"""pc_f AS MATERIALIZED (
-  SELECT id, CAST(y AS BIGINT) AS y, CAST(i AS BIGINT) AS j,
-         CAST(floor(CAST(v[i + 1] AS DOUBLE) * {PERC_Q} + 0.5) AS BIGINT) AS q
-  FROM (
-    SELECT id, y, unnest(range(0, len(embedding))) AS i, embedding AS v
-    FROM ({emb_cte})
-  )
-  UNION ALL
-  SELECT id, CAST(y AS BIGINT), CAST(-1 AS BIGINT), CAST({PERC_Q} AS BIGINT)
-  FROM ({emb_cte})
-),
-pc_w0 AS MATERIALIZED (
-  SELECT DISTINCT j, CAST(0 AS BIGINT) AS w FROM pc_f
-)"""
-    ]
-    for i in range(1, rounds + 1):
-        parts.append(
-            f"""pc_m{i} AS MATERIALIZED (
-  SELECT f.id, MIN(f.y) AS y,
-         (MIN(f.y) * SUM(w.w * f.q)) <= 0 AS _bad
-  FROM pc_f f JOIN pc_w{i - 1} w USING (j)
-  GROUP BY 1
-),
-pc_w{i} AS MATERIALIZED (
-  SELECT w.j,
-         CAST(w.w + COALESCE(u.dw, 0) AS BIGINT) AS w
-  FROM pc_w{i - 1} w
-  LEFT JOIN (
-    SELECT f.j, CAST(SUM(f.y * f.q) AS BIGINT) AS dw
-    FROM pc_f f JOIN pc_m{i} m USING (id)
-    WHERE m._bad GROUP BY 1
-  ) u ON u.j = w.j
-)"""
-        )
-    body = ",\n".join(parts)
-    return f"""WITH {body}
-SELECT w.j, w.w,
-       (SELECT CAST(SUM(CASE WHEN _bad THEN 1 ELSE 0 END) AS BIGINT)
-        FROM pc_m{rounds}) AS mis
-FROM pc_w{rounds} w
-"""

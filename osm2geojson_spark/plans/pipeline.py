@@ -77,9 +77,10 @@ _POINT_FEATURE_T = T.StructType(
 @pandas_udf(_POINT_FEATURE_T)
 def _point_feature_udf(lon: pd.Series, lat: pd.Series, props: pd.Series) -> pd.DataFrame:
     """The node branch's serializer, which also packs the point: a node
-    crosses into Python once. No line for a node without a point."""
+    crosses into Python once. Nodes without a lon never reach it (they
+    fail as ``no_lon``)."""
     gpbs = [point_gpb(x, y) for x, y in zip(lon, lat)]
-    lines = [None if g is None else geom.feature_json(g, p) for g, p in zip(gpbs, props)]
+    lines = [geom.feature_json(g, p) for g, p in zip(gpbs, props)]
     return pd.DataFrame({"gpb": gpbs, "line": lines})
 
 
@@ -165,9 +166,12 @@ def _build_plan(
     # nodes and ways cross into Python in the serializer, after their anti
     # join (a node's serializer also packs its point); relations in their
     # kernel, which also serializes; the way shape kernel sits below the
-    # ways cache
+    # ways cache. A node without a lon has no point (``point_gpb``): it
+    # fails in the JVM and never enters the serializer.
+    nodes = _drop_used(frames.nodes)
+    no_lon = "lon IS NULL OR isnan(lon)"
     node_feats = (
-        _drop_used(frames.nodes)
+        nodes.filter(f"NOT ({no_lon})")
         .selectExpr(
             "doc_id",
             "seq",
@@ -195,6 +199,9 @@ def _build_plan(
         "doc_id", "seq", "'relation' AS etype", "rel_id AS id", "gpb", "props", "reason", "line"
     )
 
+    node_failures = nodes.filter(no_lon).selectExpr(
+        "doc_id", "seq", "'node' AS etype", "id", "'no_lon' AS reason"
+    )
     other_failures = frames.others.selectExpr(
         "doc_id", "seq", "type AS etype", "id", "'unsupported_type' AS reason"
     )
@@ -203,6 +210,7 @@ def _build_plan(
         way_feats.filter("gpb IS NULL")
         .select(failure_cols)
         .unionByName(rel_feats.filter("gpb IS NULL").select(failure_cols))
+        .unionByName(node_failures)
         .unionByName(other_failures)
     )
 

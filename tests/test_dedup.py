@@ -900,134 +900,6 @@ def test_duplicate_clusters_shortcut_contracts_chains(spark):
     }
 
 
-def test_zipf_fit_matches_brute_ols(spark):
-    """zipf_fit == a Python replay (tokenize, rank, quantized OLS) on a
-    skewed corpus; a perfectly flat (uniform-frequency) vocabulary fits
-    slope 0."""
-    import math
-    from collections import Counter
-
-    from osm2geojson_spark.functions.text import ZIPF_SCALE, zipf_fit
-
-    docs = [
-        (1, "the the the the cat sat on the mat"),
-        (2, "the cat and the dog. The end!"),
-        (3, "a b c the cat"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = zipf_fit(df).collect()[0]
-
-    cnt = Counter()
-    for _, t in docs:
-        import re
-
-        norm = re.sub(" +", " ", re.sub(r"[^a-z0-9 ]", "", t.lower())).strip()
-        cnt.update(w for w in norm.split(" ") if w)
-    ranked = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-    qs = [
-        (
-            round(math.log(r + 1) * ZIPF_SCALE),
-            round(math.log(n) * ZIPF_SCALE),
-        )
-        for r, (_, n) in enumerate(ranked)
-    ]
-    v = len(qs)
-    sx = sum(a for a, _ in qs)
-    sy = sum(b for _, b in qs)
-    sxx = sum(a * a for a, _ in qs)
-    sxy = sum(a * b for a, b in qs)
-    assert (got["vocab"], got["total_tokens"]) == (v, sum(cnt.values()))
-    assert (got["sx_q"], got["sy_q"], got["sxx_q"], got["sxy_q"]) == (
-        sx,
-        sy,
-        sxx,
-        sxy,
-    )
-    slope = (v * sxy - sx * sy) / (v * sxx - sx * sx)
-    assert abs(got["zipf_slope"] - slope) < 1e-5
-    assert got["zipf_slope"] < -0.3  # skewed corpus decays
-
-    flat = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
-    )
-    assert zipf_fit(flat).collect()[0]["zipf_slope"] == 0.0
-
-
-def test_label_noise_and_centroid_margin_match_numpy(spark):
-    """Both embedding-quality scores == NumPy replays on two separated
-    gaussian clusters; a vector given the WRONG label maxes the kNN
-    disagreement and goes margin-negative."""
-    import numpy as np
-
-    from osm2geojson_spark.operators.similarity import (
-        centroid_margins,
-        label_noise_scores,
-    )
-
-    rng = np.random.default_rng(9)
-    a = rng.normal((5, 0, 0), 0.3, (20, 3))
-    b = rng.normal((0, 5, 0), 0.3, (20, 3))
-    vecs = np.concatenate([a, b])
-    labels = [0] * 20 + [1] * 20
-    labels[3] = 1  # planted label noise inside cluster A
-    rows = [
-        (i, [float(x) for x in vecs[i]], labels[i]) for i in range(len(vecs))
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label long"
-    )
-
-    k = 5
-    got_noise = {r["vec_id"]: r for r in label_noise_scores(df, k=k).collect()}
-    norms = np.linalg.norm(vecs, axis=1)
-    cos = (vecs @ vecs.T) / np.outer(norms, norms)
-    for i in range(len(vecs)):
-        order = sorted(
-            (j for j in range(len(vecs)) if j != i),
-            key=lambda j: (-cos[i, j], j),
-        )[:k]
-        n_diff = sum(labels[j] != labels[i] for j in order)
-        assert (got_noise[i]["n_diff"], got_noise[i]["k_eff"]) == (n_diff, k), i
-    assert got_noise[3]["n_diff"] == k  # the planted noise is fully flagged
-
-    got_m = {r["vec_id"]: r for r in centroid_margins(df).collect()}
-    cents = {
-        c: vecs[[i for i in range(len(vecs)) if labels[i] == c]].mean(axis=0)
-        for c in (0, 1)
-    }
-    for i in range(len(vecs)):
-        own = cents[labels[i]]
-        oth = cents[1 - labels[i]]
-        oc = round(float(vecs[i] @ own / (norms[i] * np.linalg.norm(own))), 6)
-        xc = round(float(vecs[i] @ oth / (norms[i] * np.linalg.norm(oth))), 6)
-        r = got_m[i]
-        assert abs(r["own_cos"] - oc) < 2e-6 and abs(r["other_cos"] - xc) < 2e-6, i
-        assert abs(r["margin"] - round(oc - xc, 6)) < 4e-6
-    assert got_m[3]["margin"] < 0  # mislabeled: nearer the other centroid
-    clean_margins = [got_m[i]["margin"] for i in range(40) if i != 3]
-    assert min(clean_margins) > 0
-
-
-def test_label_noise_gemm_equals_relational(spark):
-    """The default GEMM path and the relational path of
-    label_noise_scores return identical rows."""
-    import numpy as np
-
-    from osm2geojson_spark.operators.similarity import label_noise_scores
-
-    rng = np.random.default_rng(17)
-    vecs = rng.normal(0, 1, (60, 8))
-    rows = [
-        (i, [float(x) for x in vecs[i]], int(i % 4)) for i in range(len(vecs))
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label long"
-    )
-    g = sorted(map(tuple, label_noise_scores(df, k=7).collect()))
-    r = sorted(map(tuple, label_noise_scores(df, k=7, method="relational").collect()))
-    assert g == r and len(g) == 60
-
-
 def test_mutual_knn_clusters_matches_brute(spark):
     """mutual_knn_clusters == a Python replay (rank, mutual filter,
     union-find) on three separated gaussian blobs plus one outlier —
@@ -1089,224 +961,6 @@ def test_mutual_knn_clusters_matches_brute(spark):
     assert any(
         sum(1 for c in got.values() if c == cid) >= 3 for cid in set(got.values())
     )
-
-
-def test_pmi_cooc_matches_dict_replay_and_twin(spark):
-    """pmi_cooc == a dict replay of normalized adjacent-pair counting,
-    collocations score above function-word pairs, twin bit-identical."""
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    from osm2geojson_spark.functions.text import pmi_cooc, pmi_cooc_sql
-
-    docs = [
-        (0, "New York is big. The new museum of York?"),
-        (1, "the cat and the dog and the cat"),
-        (2, "New York, New York -- so good they named it twice"),
-        (3, "a b a b a b a b"),
-        (4, ""),
-        (5, "the quick fox the lazy dog the old cat"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r["tok1"], r["tok2"]): r
-        for r in pmi_cooc(df, min_count=2).collect()
-    }
-
-    def norm_tokens(s):
-        s = re.sub(r"[^a-z0-9 ]", "", s.lower())
-        s = re.sub(r" +", " ", s).strip()
-        return [t for t in s.split(" ") if t]
-
-    uni, pc = Counter(), Counter()
-    n_tok = n_pairs = 0
-    for _, txt in docs:
-        ts = norm_tokens(txt)
-        uni.update(ts)
-        n_tok += len(ts)
-        for a, b in zip(ts, ts[1:]):
-            pc[(min(a, b), max(a, b))] += 1
-            n_pairs += 1
-    want_keys = {k for k, c in pc.items() if c >= 2}
-    assert set(got) == want_keys
-    for k in want_keys:
-        r = got[k]
-        assert (r["c_xy"], r["u_x"], r["u_y"]) == (pc[k], uni[k[0]], uni[k[1]])
-        assert (r["n_pairs"], r["n_tokens"]) == (n_pairs, n_tok)
-        want_ratio = (pc[k] * n_tok * n_tok) / (n_pairs * uni[k[0]] * uni[k[1]])
-        assert abs(r["pmi_ratio"] - want_ratio) < 1e-9
-    # collocation beats function-word pair
-    assert got[("new", "york")]["pmi_ratio"] > got[("and", "the")]["pmi_ratio"]
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO d VALUES (?, ?)", docs)
-    twin = {
-        (r[0], r[1]): r[2:]
-        for r in duck.sql(
-            pmi_cooc_sql("SELECT doc_id, text FROM d", min_count=2)
-        ).fetchall()
-    }
-    assert twin == {
-        k: (r["c_xy"], r["u_x"], r["u_y"], r["n_pairs"], r["n_tokens"],
-            r["pmi_ratio"])
-        for k, r in got.items()
-    }
-
-
-def test_silhouette_matches_replay_and_twin(spark):
-    """silhouette_scores == a dict replay with the same quantized
-    distance; well-separated blobs score near 1, a planted misassigned
-    point scores negative; twin bit-identical; singleton -> 0."""
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.similarity import (
-        SIL_Q,
-        silhouette_scores,
-        silhouette_scores_sql,
-    )
-
-    rng = np.random.default_rng(41)
-    dim = 8
-    rows = []
-    centers = {0: 0.0, 1: 10.0, 2: -10.0}
-    vid = 0
-    for lab, c in centers.items():
-        for _ in range(8):
-            v = (rng.normal(size=dim) * 0.3 + c).tolist()
-            rows.append((vid, lab, [float(x) for x in v]))
-            vid += 1
-    # misassigned point: sits at blob 1 but labeled 0
-    rows.append((vid, 0, [10.0] * dim)); vid += 1
-    # singleton cluster
-    rows.append((vid, 9, [50.0] * dim)); vid += 1
-
-    df = spark.createDataFrame(rows, "vec_id long, label int, vec array<double>")
-    got = {r["vec_id"]: r for r in silhouette_scores(df).collect()}
-
-    def dq(a, b):
-        return int(
-            sum(
-                np.floor((x - y) * (x - y) * SIL_Q + 0.5)
-                for x, y in zip(a, b)
-            )
-        )
-
-    for i, li, vi in rows:
-        sums = {}
-        for j, lj, vj in rows:
-            if i == j:
-                continue
-            s, c = sums.get(lj, (0, 0))
-            sums[lj] = (s + dq(vi, vj), c + 1)
-        others = {
-            lj: (s / c, lj) for lj, (s, c) in sums.items() if lj != li
-        }
-        b_mean, b_label = min((m, l) for l, (m, l2) in others.items())
-        if li in sums:
-            a_mean = sums[li][0] / sums[li][1]
-            want_s = (b_mean - a_mean) / max(a_mean, b_mean)
-        else:
-            a_mean, want_s = None, 0.0
-        r = got[i]
-        assert r["b_label"] == b_label and r["b_mean"] == b_mean, i
-        assert r["a_mean"] == a_mean and r["silhouette"] == want_s, i
-
-    # qualitative: blob points high, misassigned negative, singleton 0
-    assert all(got[i]["silhouette"] > 0.8 for i in range(24))
-    assert got[24]["silhouette"] < -0.8
-    assert got[25]["silhouette"] == 0.0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE et (vec_id BIGINT, label INT, vec DOUBLE[])")
-    duck.executemany("INSERT INTO et VALUES (?, ?, ?)", rows)
-    twin = {
-        r[0]: r[1:]
-        for r in duck.sql(
-            silhouette_scores_sql("SELECT * FROM et", dim=dim)
-        ).fetchall()
-    }
-    assert twin == {
-        i: tuple(
-            r[c]
-            for c in ("label", "a_mean", "b_mean", "b_label", "silhouette")
-        )
-        for i, r in got.items()
-    }
-
-
-def test_hard_negatives_brute_and_twin(spark):
-    """hard_negatives == a NumPy brute replay with the same quantized
-    dot; DuckDB twin tuple-identical."""
-    import math
-    import random
-
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.similarity import (
-        hard_negatives,
-        hard_negatives_sql,
-    )
-
-    rng = random.Random(3)
-    dim, n = 8, 60
-    rows = []
-    for i in range(n):
-        lab = i % 4
-        # label-clustered directions + noise so near-misses exist
-        base = [math.cos(lab + j) for j in range(dim)]
-        vec = [b + rng.uniform(-0.3, 0.3) for b in base]
-        rows.append((i, lab, vec))
-    df = spark.createDataFrame(rows, "vec_id long, label long, embedding array<double>")
-    anchors = df.filter("vec_id % 3 = 0")
-    got = hard_negatives(anchors, df, k=4).collect()
-
-    ids = np.array([r[0] for r in rows])
-    labs = np.array([r[1] for r in rows])
-    C = np.array([r[2] for r in rows], dtype=np.float64)
-    want = []
-    for qid in sorted(r[0] for r in rows if r[0] % 3 == 0):
-        q = C[ids == qid][0]
-        qlab = int(labs[ids == qid][0])
-        dots = np.floor(q[None, :] * C * 1e6 + 0.5).sum(axis=1).astype(np.int64)
-        cand = [
-            (int(-dots[j]), int(ids[j]))
-            for j in range(n)
-            if labs[j] != qlab
-        ]
-        cand.sort()
-        for rk, (nd, tid) in enumerate(cand[:4], 1):
-            want.append(
-                (qid, qlab, tid, int(labs[ids == tid][0]), rk, -nd)
-            )
-    got_t = sorted(
-        (r["qid"], r["qlabel"], r["tid"], r["tlabel"], r["rank"], r["dot_q"])
-        for r in got
-    )
-    assert got_t == sorted(want)
-    # every mined negative has a different label
-    assert all(r["qlabel"] != r["tlabel"] for r in got)
-
-    duck = duckdb.connect()
-    duck.execute(
-        "CREATE TABLE e (vec_id BIGINT, label BIGINT, embedding DOUBLE[])"
-    )
-    duck.executemany("INSERT INTO e VALUES (?, ?, ?)", rows)
-    twin = sorted(
-        duck.sql(
-            hard_negatives_sql(
-                "SELECT * FROM e WHERE vec_id % 3 = 0",
-                "SELECT * FROM e",
-                k=4,
-                dim=dim,
-            )
-        ).fetchall()
-    )
-    assert twin == got_t
 
 
 # ------------------------------------------------------------- winnowing
@@ -1371,259 +1025,6 @@ def test_winnow_short_doc_empty(spark):
     assert DD.winnow_fingerprints(df).count() == 0
 
 
-def test_tfidf_topk_brute_and_twin(spark):
-    """Dict-replay brute of the dyadic TF-IDF top-k on a corpus with a
-    ubiquitous term (idf 0), mid-frequency terms, and per-doc unique
-    markers (max idf), plus the DuckDB twin byte-for-byte."""
-    import math
-
-    import duckdb
-
-    from osm2geojson_spark.functions.text import tfidf_topk, tfidf_topk_sql
-
-    corpus = [
-        (0, "the cat sat on the mat uniq0 uniq0 uniq0"),
-        (1, "the dog sat watching cats uniq1"),
-        (2, "the the the market crashed uniq2 cats"),
-        (3, "market rally and the cat uniq3"),
-        (4, "quiet afternoon uniq4 market"),
-        (5, "the cat The CAT, the!"),  # normalization folds case/punct
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    got = [
-        (r["doc_id"], r["rank"], r["tok"], r["tf"], r["df"],
-         r["idf_log2"], r["score"])
-        for r in tfidf_topk(df, k=3).collect()
-    ]
-
-    # brute replay
-    toks = {
-        d: [t for t in
-            "".join(c if c.isalnum() or c == " " else "" for c in s.lower())
-            .split() if t]
-        for d, s in corpus
-    }
-    tf = {}
-    for d, ts in toks.items():
-        for t in ts:
-            tf[(d, t)] = tf.get((d, t), 0) + 1
-    dfreq = {}
-    for (d, t) in tf:
-        dfreq[t] = dfreq.get(t, 0) + 1
-    n = len({d for d, _ in tf})
-    want = []
-    for d in toks:
-        rows = []
-        for t in {t for dd, t in tf if dd == d}:
-            idf = (n // dfreq[t]).bit_length() - 1
-            rows.append((t, tf[(d, t)], dfreq[t], idf, tf[(d, t)] * idf))
-        rows.sort(key=lambda r: (-r[4], -r[1], r[0]))
-        for i, r in enumerate(rows[:3]):
-            want.append((d, i + 1, *r))
-    assert sorted(got) == sorted(want)
-    # ubiquitous term 'the' (in all 6 docs) must have idf 0
-    assert all(r[5] == 0 for r in got if r[2] == "the")
-    # unique markers get the max idf floor(log2(6)) == 2
-    assert any(r[2] == "uniq0" and r[5] == 2 for r in got)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE docs6 (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO docs6 VALUES (?, ?)", corpus)
-    twin = duck.sql(
-        tfidf_topk_sql("SELECT * FROM docs6", k=3)
-    ).fetchall()
-    assert sorted(tuple(r) for r in twin) == sorted(got)
-
-
-def test_pca_top_eigvec_matches_numpy_and_twin(spark):
-    """On a corpus with a planted dominant axis the fixed-point power
-    iterate must align with NumPy's top eigenvector of the quantized
-    Gram matrix (|cos| > 0.9999) and the Rayleigh lam must sit between
-    the float eigenvalue bounds; DuckDB twin byte-for-byte."""
-    import duckdb
-    import numpy as np
-
-    from osm2geojson_spark.operators.similarity import (
-        GRAM_SCALE,
-        pca_top_eigvec,
-        pca_top_eigvec_sql,
-    )
-
-    rng = np.random.default_rng(3)
-    dim, n = 8, 300
-    axis = rng.normal(size=dim)
-    axis /= np.linalg.norm(axis)
-    V = (
-        rng.normal(size=(n, 1)) * axis[None, :] * 3.0
-        + rng.normal(size=(n, dim)) * 0.3
-    )
-    rows = [(i, [float(x) for x in V[i]]) for i in range(n)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = sorted(
-        (r["i"], r["v_q"], r["lam"])
-        for r in pca_top_eigvec(df, dim=dim, iters=12).collect()
-    )
-    v = np.array([g[1] for g in got], dtype=np.float64)
-
-    Q = np.floor(V * GRAM_SCALE + 0.5)
-    G = Q.T @ Q
-    evals, evecs = np.linalg.eigh(G)
-    top = evecs[:, -1]
-    cos = abs(v @ top) / (np.linalg.norm(v) * np.linalg.norm(top))
-    assert cos > 0.9999, cos
-    lam = got[0][2]
-    # Rayleigh quotient of any unit vector is <= lambda_max (rescaled)
-    lam_max = evals[-1] / GRAM_SCALE**2
-    assert 0 < lam <= lam_max * (1 + 1e-12)
-    assert lam > 0.99 * lam_max  # converged close to the top
-    # sign pin: the max-|coordinate| is positive
-    assert v[int(np.argmax(np.abs(v)))] > 0
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE pemb (vec_id BIGINT, embedding DOUBLE[])")
-    duck.executemany("INSERT INTO pemb VALUES (?, ?)", rows)
-    twin = sorted(
-        tuple(r)
-        for r in duck.sql(
-            pca_top_eigvec_sql("SELECT * FROM pemb", dim=dim, iters=12)
-        ).fetchall()
-    )
-    assert twin == got
-
-
-def test_compress_cost_replay_and_boilerplate_gate(spark):
-    """Dict replay of the dyadic Shannon costs (exact ceil-log2 checked
-    against a Python loop), the Kraft inequality over the trained code,
-    and the designed property: a boilerplate doc (all corpus-dominant
-    tokens) scores strictly fewer bits/token than a rare-token doc."""
-    import duckdb
-
-    from osm2geojson_spark.functions.text import (
-        compress_cost,
-        compress_cost_sql,
-    )
-
-    corpus = [(0, "the " * 40 + "cat"), (1, "the the the the cat cat dog"),
-              (2, "zebra quark axolotl"), (3, "the dog")]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["bits"], r["bpt_micro"])
-        for r in compress_cost(df).collect()
-    }
-
-    toks = {d: s.split() for d, s in corpus}
-    cnt = {}
-    for ts in toks.values():
-        for t in ts:
-            cnt[t] = cnt.get(t, 0) + 1
-    N = sum(cnt.values())
-
-    def L(c):
-        out = 0
-        while (1 << out) * c < N:
-            out += 1
-        return out
-
-    # Kraft: sum over DISTINCT tokens of 2^-L <= 1
-    assert sum(2 ** -L(c) for c in cnt.values()) <= 1.0 + 1e-12
-    for d, ts in toks.items():
-        bits = sum(L(cnt[t]) for t in ts)
-        assert got[d] == (len(ts), bits, bits * 1_000_000 // len(ts)), d
-    assert got[0][2] < got[2][2]  # boilerplate < rare-dense
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE ccd (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO ccd VALUES (?,?)", corpus)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(compress_cost_sql("SELECT * FROM ccd")).fetchall()
-    }
-    assert twin == got
-
-
-def test_bpe_train_sennrich_example_and_overlap(spark):
-    """The classic low/lower corpus must produce the textbook merges
-    (lo, low, ew, new); an 'aaaa' word exercises leftmost-non-overlap
-    (freq-4 'aaaa' contributes 3 overlapping (a,a) counts, then merges
-    to (aa, aa)); DuckDB twin byte-for-byte."""
-    import duckdb
-
-    from osm2geojson_spark.functions.text import bpe_train, bpe_train_sql
-
-    corpus = [(0, "low lower lowest low low"), (1, "new newer newest new")]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    got = sorted(tuple(r) for r in bpe_train(df, merges=4).collect())
-    assert got == [
-        (1, "l", "o", "lo", 5),
-        (2, "lo", "w", "low", 5),
-        (3, "e", "w", "ew", 4),
-        (4, "n", "ew", "new", 4),
-    ]
-
-    # overlap semantics: 'aaaa' x3 -> (a,a) counted 9 (3 overlapping
-    # occurrences x freq 3); after merging, word is (aa)(aa) so round 2
-    # merges (aa, aa) with count 3 -- NOT (a, aa)
-    ov = spark.createDataFrame(
-        [(0, "aaaa aaaa aaaa b")], "doc_id long, text string"
-    )
-    got_ov = sorted(tuple(r) for r in bpe_train(ov, merges=2).collect())
-    assert got_ov == [
-        (1, "a", "a", "aa", 9),
-        (2, "aa", "aa", "aaaa", 3),
-    ]
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE bped (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO bped VALUES (?,?)", corpus)
-    twin = sorted(
-        tuple(r)
-        for r in duck.sql(bpe_train_sql("SELECT * FROM bped", merges=4)).fetchall()
-    )
-    assert twin == got
-    duck.execute("DELETE FROM bped")
-    duck.execute("INSERT INTO bped VALUES (0, 'aaaa aaaa aaaa b')")
-    twin_ov = sorted(
-        tuple(r)
-        for r in duck.sql(bpe_train_sql("SELECT * FROM bped", merges=2)).fetchall()
-    )
-    assert twin_ov == got_ov
-
-
-def test_bpe_encode_replay_and_fertility(spark):
-    """Scalar replay: train merges by hand on the low/new corpus, apply
-    leftmost-non-overlapping, and check per-doc token accounting; the
-    all-merged word ('low' after rounds 1-2) must count 1 token; twin
-    byte-for-byte."""
-    import duckdb
-
-    from osm2geojson_spark.functions.text import bpe_encode, bpe_encode_sql
-
-    corpus = [(0, "low lower lowest low low"), (1, "new newer newest new")]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_tokens"], r["ratio_micro"])
-        for r in bpe_encode(df, merges=4).collect()
-    }
-    # merges: lo, low, ew, new (pinned by test_bpe_train_...).
-    # tokenizations: low->1; lower->low,e,r=3; lowest->low,e,s,t=4;
-    # new->1; newer->new,e,r=3; newest->new,e,s,t=4
-    d0_tokens = 1 + 3 + 4 + 1 + 1  # low lower lowest low low
-    d1_tokens = 1 + 3 + 4 + 1
-    d0_chars = 3 + 5 + 6 + 3 + 3
-    d1_chars = 3 + 5 + 6 + 3
-    assert got[0] == (5, d0_chars, d0_tokens, d0_tokens * 1_000_000 // d0_chars)
-    assert got[1] == (4, d1_chars, d1_tokens, d1_tokens * 1_000_000 // d1_chars)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE bpee (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO bpee VALUES (?,?)", corpus)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(bpe_encode_sql("SELECT * FROM bpee", merges=4)).fetchall()
-    }
-    assert twin == got
-
-
 def test_canonical_pick_keeps_best_and_accounts_drops(spark):
     """Designed clusters: quality argmax wins, quality ties go to the
     smallest id, singletons keep themselves with zero drops; twin
@@ -1659,160 +1060,6 @@ def test_canonical_pick_keeps_best_and_accounts_drops(spark):
         ).fetchall()
     }
     assert twin == got
-
-
-def test_pii_scan_counts_edges_and_twin(spark):
-    """Hand-counted fixtures: multiple matches, boundary cases the \\b
-    guards (no match inside longer digit runs), clean text; DuckDB twin
-    identical on every row."""
-    import duckdb
-
-    from osm2geojson_spark.functions.text import pii_scan, pii_scan_sql
-
-    rows = [
-        (1, "reach me at a.b+c@ex.com or ops@sub.ex.org thanks"),
-        (2, "server 10.0.0.1 and 192.168.255.254 are up"),
-        (3, "call +4915112345678 now"),
-        (4, "no pii here, just 1.2 version and one@two"),  # @ without TLD
-        (5, "x12345678901234567890.1.2.3 not an ip"),  # \b blocks prefix
-        (6, "mixed: a@b.io on 8.8.8.8 dial +1234567"),
-        (7, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in pii_scan(df).collect()}
-
-    want = {
-        1: (2, 0, 0),
-        2: (0, 2, 0),
-        3: (0, 0, 1),
-        4: (0, 0, 0),
-        5: (0, 0, 0),
-        6: (1, 1, 1),
-        7: (0, 0, 0),
-    }
-    for k, (e, i, p) in want.items():
-        r = got[k]
-        assert (r["n_email"], r["n_ipv4"], r["n_phone"]) == (e, i, p), k
-        assert r["pii_total"] == e + i + p
-        assert r["has_pii"] == (e + i + p > 0)
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE pii (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO pii VALUES (?, ?)", rows)
-    twin = {
-        r[0]: r
-        for r in duck.sql(pii_scan_sql("SELECT * FROM pii")).fetchall()
-    }
-    for k, r in got.items():
-        assert twin[k] == (
-            k, r["n_email"], r["n_ipv4"], r["n_phone"], r["pii_total"], r["has_pii"],
-        )
-
-
-def test_knn_classify_numpy_brute_and_planted_clusters(spark):
-    """NumPy brute-force LOO-kNN vote replay on deterministic vectors;
-    two well-separated planted clusters classify perfectly; a deliberate
-    mislabel is voted down (correct == False)."""
-    import numpy as np
-
-    from osm2geojson_spark.operators.similarity import knn_classify
-
-    rng_free = []
-    # cluster 0 around (1, 0, 0...), cluster 1 around (0, 1, 0...)
-    dim = 8
-    for i in range(20):
-        v = [0.0] * dim
-        v[0] = 1.0
-        v[2 + (i % 3)] = 0.05 * ((i * 7) % 5)
-        rng_free.append((i, v, 0))
-    for i in range(20, 40):
-        v = [0.0] * dim
-        v[1] = 1.0
-        v[2 + (i % 3)] = 0.05 * ((i * 11) % 5)
-        rng_free.append((i, v, 1))
-    # mislabeled point deep in cluster 0
-    v = [0.0] * dim
-    v[0] = 1.0
-    v[3] = 0.02
-    rng_free.append((40, v, 1))
-
-    df = spark.createDataFrame(
-        rng_free, "vec_id long, embedding array<double>, label long"
-    )
-    k = 7
-    got = {r["vec_id"]: r.asDict() for r in knn_classify(df, k=k).collect()}
-
-    ids = np.array([r[0] for r in rng_free])
-    M = np.array([r[1] for r in rng_free], dtype=np.float64)
-    labs = np.array([r[2] for r in rng_free])
-    Mn = M / np.linalg.norm(M, axis=1)[:, None]
-    S = Mn @ Mn.T
-    for qi, qid in enumerate(ids):
-        s = S[qi].copy()
-        s[qi] = -np.inf
-        order = np.lexsort((ids, -s))[:k]
-        vote = {}
-        for j in order:
-            vote[labs[j]] = vote.get(labs[j], 0) + 1
-        pred = min(vote, key=lambda l: (-vote[l], l))
-        r = got[qid]
-        assert r["pred"] == pred, qid
-        assert r["votes"] == vote[pred]
-        assert r["k_eff"] == k
-        assert r["correct"] == (pred == labs[qi])
-    # planted structure: everything correct except the mislabel
-    assert not got[40]["correct"] and got[40]["pred"] == 0
-    assert all(got[i]["correct"] for i in range(40))
-
-
-def test_url_canonicalize_variants_and_twin(spark):
-    """Known-variant URLs collapse to one canonical group (case, :80,
-    fragment, utm params, param order, trailing slash); distinct pages
-    stay distinct; root slash survives; twin byte-identical."""
-    import duckdb
-
-    from osm2geojson_spark.functions.text import (
-        url_canonicalize,
-        url_canonicalize_sql,
-    )
-
-    rows = [
-        (1, "HTTP://Example.COM:80/path/?utm_source=x&b=2&a=1#frag"),
-        (2, "http://example.com/path?a=1&b=2"),
-        (3, "https://Sub.Ex.org:443/"),
-        (4, "https://sub.ex.org/"),
-        (5, "http://example.com"),
-        (6, "http://example.com/?utm_campaign=z"),
-        (7, "http://example.com/a/b/c?z=9&y=8"),
-        (8, "http://example.com/path?b=2&a=1&utm_medium=m"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    got = {r["doc_id"]: r.asDict() for r in url_canonicalize(df).collect()}
-
-    assert (
-        got[1]["canon_url"]
-        == got[2]["canon_url"]
-        == got[8]["canon_url"]
-        == "http://example.com/path?a=1&b=2"
-    )
-    assert got[1]["grp_n"] == 3 and got[1]["keep"] and not got[2]["keep"]
-    assert got[3]["canon_url"] == got[4]["canon_url"] == "https://sub.ex.org/"
-    assert got[5]["canon_url"] == "http://example.com"
-    assert got[6]["canon_url"] == "http://example.com/"
-    assert got[7]["canon_url"] == "http://example.com/a/b/c?y=8&z=9"
-    assert all(got[i]["grp_n"] == 1 for i in (5, 6, 7))
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE urls (doc_id BIGINT, url VARCHAR)")
-    duck.executemany("INSERT INTO urls VALUES (?, ?)", rows)
-    twin = {
-        r[0]: r
-        for r in duck.sql(
-            url_canonicalize_sql("SELECT * FROM urls")
-        ).fetchall()
-    }
-    for k, r in got.items():
-        assert twin[k] == (k, r["canon_url"], r["grp_n"], r["keep"])
 
 
 def test_boilerplate_lines_share_gate_and_twin(spark):
@@ -2026,65 +1273,6 @@ def test_containment_pairs_quote_case_and_twin(spark):
         )
 
 
-def test_perceptron_scalar_replay_and_twin(spark):
-    """Batch perceptron vs a NumPy-free scalar replay; separable data
-    converges to zero misclassifications."""
-    import duckdb
-    import math
-
-    from osm2geojson_spark.operators.similarity import (
-        PERC_Q,
-        perceptron_train,
-        perceptron_train_sql,
-    )
-
-    # 2-D separable: y = sign(x0 - x1), margin ~0.4
-    rows = [
-        (0, [0.9, 0.1], 1), (1, [0.8, 0.3], 1), (2, [0.7, 0.2], 1),
-        (3, [0.1, 0.9], -1), (4, [0.2, 0.6], -1), (5, [0.3, 0.8], -1),
-    ]
-
-    def brute(rounds):
-        feats = {
-            i: [int(math.floor(v * PERC_Q + 0.5)) for v in vec] + [PERC_Q]
-            for i, vec, _ in rows
-        }
-        ys = {i: y for i, _, y in rows}
-        w = [0, 0, 0]
-        mis = None
-        for _ in range(rounds):
-            bad = [
-                i
-                for i in feats
-                if ys[i] * sum(wj * qj for wj, qj in zip(w, feats[i])) <= 0
-            ]
-            mis = len(bad)
-            for j in range(3):
-                w[j] += sum(ys[i] * feats[i][j] for i in bad)
-        return w, mis
-
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, y long")
-    got = {r["j"]: (r["w"], r["mis"]) for r in perceptron_train(df, rounds=4).collect()}
-    w, mis = brute(4)
-    assert got == {0: (w[0], mis), 1: (w[1], mis), -1: (w[2], mis)}
-    assert mis == 0  # separable -> converged
-    # the learned boundary has positive weight on x0, negative on x1
-    assert got[0][0] > 0 > got[1][0]
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE pct (id BIGINT, y BIGINT, embedding FLOAT[])")
-    duck.executemany(
-        "INSERT INTO pct VALUES (?, ?, ?)", [(i, y, vec) for i, vec, y in rows]
-    )
-    twin = {
-        r[0]: (r[1], r[2])
-        for r in duck.sql(
-            perceptron_train_sql("SELECT id, y, embedding FROM pct", rounds=4)
-        ).fetchall()
-    }
-    assert twin == got
-
-
 def test_soundex_classic_vectors_and_blocks(spark):
     """soundex_expr reproduces the NARA test vectors (incl. the h/w
     transparency and vowel-break rules) and equals the SQL twin."""
@@ -2204,79 +1392,6 @@ def test_lcs_block_similarity_brute_and_twin(spark):
     assert twin == got
 
 
-def test_rake_phrases_scalar_replay(spark):
-    """RAKE vs a scalar replay on the classic-style fixture; multiword
-    phrases outrank their member single words."""
-    import collections
-    import duckdb
-    import re
-
-    from osm2geojson_spark.functions.text import (
-        RAKE_STOPWORDS,
-        rake_phrases,
-        rake_phrases_sql,
-    )
-
-    docs = [
-        (1, "deep learning models are trained on large text corpora"),
-        (2, "large text corpora and deep learning pipelines"),
-        (3, "the quick brown fox is quick"),
-    ]
-
-    def brute(top_m=10):
-        stops = set(RAKE_STOPWORDS)
-        phrases = []  # (doc, phrase)
-        for did, text in docs:
-            words = re.sub("[^a-z0-9 ]", " ", text.lower()).split()
-            cur = []
-            for w in words + ["|"]:
-                if w in stops or w == "|":
-                    if cur:
-                        phrases.append((did, " ".join(cur)))
-                    cur = []
-                else:
-                    cur.append(w)
-        deg = collections.Counter()
-        freq = collections.Counter()
-        for _, p in phrases:
-            ws = p.split()
-            for w in ws:
-                deg[w] += len(ws)
-                freq[w] += 1
-        occ = collections.Counter(p for _, p in phrases)
-        ndocs = collections.defaultdict(set)
-        for d, p in phrases:
-            ndocs[p].add(d)
-        rows = []
-        for p in occ:
-            # per POSITION (explode keeps duplicate words in a phrase)
-            sc = sum(1_000_000 * deg[w] // freq[w] for w in p.split())
-            rows.append((p, len(ndocs[p]), occ[p], sc))
-        rows.sort(key=lambda r: (-r[3], r[0]))
-        return {r[0]: r[1:] for r in rows[:top_m]}
-
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r["phrase"]: (r["n_docs"], r["n_occur"], r["score_micro"])
-        for r in rake_phrases(df, top_m=10).collect()
-    }
-    assert got == brute()
-    # multiword phrase beats its members' singletons
-    assert "large text corpora" in got
-    assert got["large text corpora"][0] == 2
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE rkd (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO rkd VALUES (?, ?)", docs)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            rake_phrases_sql("SELECT doc_id, text FROM rkd", top_m=10)
-        ).fetchall()
-    }
-    assert twin == got
-
-
 def test_novelty_scores_brute_and_duplicate_collapse(spark):
     """Novelty vs scalar replay; an exact duplicate pair scores 0,
     a unique doc scores near 1e6."""
@@ -2336,55 +1451,6 @@ def test_novelty_scores_brute_and_duplicate_collapse(spark):
     assert twin == got
 
 
-def test_lexicon_sentiment_brute_and_verdicts(spark):
-    import collections
-    import duckdb
-
-    from osm2geojson_spark.functions.text import (
-        SENTIMENT_LEXICON,
-        lexicon_sentiment,
-        lexicon_sentiment_sql,
-    )
-
-    docs = [
-        (1, "fast clean good build"),
-        (2, "slow broken dirty mess"),
-        (3, "plain words only here"),
-        (4, "fast but slow"),  # 2 - 2 = 0 -> neutral
-    ]
-
-    def brute():
-        out = {}
-        for d, t in docs:
-            toks = t.lower().split()
-            sc = sum(SENTIMENT_LEXICON.get(w, 0) for w in toks)
-            npos = sum(1 for w in toks if SENTIMENT_LEXICON.get(w, 0) > 0)
-            nneg = sum(1 for w in toks if SENTIMENT_LEXICON.get(w, 0) < 0)
-            v = "pos" if sc > 0 else ("neg" if sc < 0 else "neutral")
-            out[d] = (len(toks), npos, nneg, sc, v)
-        return out
-
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["n_pos"], r["n_neg"], r["score"], r["verdict"])
-        for r in lexicon_sentiment(df).collect()
-    }
-    assert got == brute()
-    assert got[1][4] == "pos" and got[2][4] == "neg"
-    assert got[3][4] == "neutral" and got[4][4] == "neutral"
-
-    duck = duckdb.connect()
-    duck.execute("CREATE TABLE lxd (doc_id BIGINT, text VARCHAR)")
-    duck.executemany("INSERT INTO lxd VALUES (?, ?)", docs)
-    twin = {
-        r[0]: tuple(r[1:])
-        for r in duck.sql(
-            lexicon_sentiment_sql("SELECT doc_id, text FROM lxd")
-        ).fetchall()
-    }
-    assert twin == got
-
-
 def test_lev2_join_complete_vs_brute(spark):
     """Depth-2 FastSS candidates are COMPLETE: results equal the brute
     all-pairs lev<=2 set, including pure-insertion*2 and mixed edits."""
@@ -2439,16 +1505,12 @@ def test_lev2_join_complete_vs_brute(spark):
 
 
 def test_gemm_collect_paths_guarded(spark):
-    """The driver-collect GEMM helpers count first and raise with
+    """The driver-collect GEMM kNN counts first and raises with
     ANN-compose guidance past max_rows instead of collecting an
     unbounded corpus to the driver."""
     import pytest
 
-    from osm2geojson_spark.operators.similarity import (
-        gemm_knn_edges,
-        hard_negatives,
-        label_noise_scores,
-    )
+    from osm2geojson_spark.operators.similarity import gemm_knn_edges
 
     emb = spark.range(10).selectExpr(
         "id AS vec_id",
@@ -2456,13 +1518,8 @@ def test_gemm_collect_paths_guarded(spark):
         "CAST(id % 2 AS BIGINT) AS label",
     )
     with pytest.raises(ValueError, match="ann_"):
-        label_noise_scores(emb, k=3, max_rows=5)
-    with pytest.raises(ValueError, match="ann_"):
         gemm_knn_edges(emb, k=3, max_rows=5)
-    with pytest.raises(ValueError, match="ann_"):
-        hard_negatives(emb, emb, k=3, max_rows=5)
-    # within the cap the paths still run
-    assert label_noise_scores(emb, k=3, max_rows=10).count() == 10
+    # within the cap the path still runs
     assert gemm_knn_edges(emb, k=2, max_rows=10).count() == 20
 
 
@@ -2588,49 +1645,3 @@ def test_snm_pairs_matches_brute_window_scan(spark):
         snm_pairs_sql("SELECT * FROM sn", "id", "s", window, max_lev)
     ).fetchall())
     assert twin == got
-
-
-def test_text_nll_matches_brute_bigram_lm(spark):
-    """text_nll == a from-scratch Python char-bigram LM on a tiny corpus;
-    repetitive text scores lower avg_nll than erratic text."""
-    import math
-    from collections import Counter
-
-    from osm2geojson_spark.functions.text import text_nll
-
-    docs = [
-        (1, "abababababab"),
-        (2, "aabbaabbaabb"),
-        (3, "the cat sat on the mat"),
-        (4, "x"),           # too short: no bigram, must drop
-        (5, "zq"),          # rare transition
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in text_nll(df).collect()}
-
-    bigrams = []
-    per_doc = {}
-    for did, t in docs:
-        bs = [t[i : i + 2] for i in range(len(t) - 1)]
-        per_doc[did] = bs
-        bigrams.extend(bs)
-    n_bg = Counter(bigrams)
-    n_c1 = Counter()
-    for bg, c in n_bg.items():
-        n_c1[bg[0]] += c
-    for did, bs in per_doc.items():
-        if not bs:
-            assert did not in got
-            continue
-        terms = [
-            int(round((math.log(n_bg[b]) - math.log(n_c1[b[0]])) * 1e6))
-            for b in bs
-        ]
-        r = got[did]
-        assert r["n_bigrams"] == len(bs)
-        assert r["nll_micro"] == -sum(terms)
-        assert abs(r["avg_nll"] - round(-sum(terms) / len(bs) / 1e6, 6)) < 1e-9
-    # the perfectly periodic doc is the most predictable
-    assert got[1]["avg_nll"] <= got[3]["avg_nll"]
-    # a corpus-unique transition is certain under the self-trained model
-    assert got[5]["avg_nll"] == 0.0

@@ -173,7 +173,7 @@ def test_point_edge_values_pack_and_serialize_as_struct_pack(spark):
     NaN, subnormal and infinite values included, and serialized from those
     bytes (``to_geojson_geometry``). Node, center-way and center-relation
     points alike; a null lat packs as NaN. A null or NaN lon gives no
-    point: the node keeps a null gpb, and a center way or relation fails
+    point: the node fails as ``no_lon``, and a center way or relation fails
     with no reason. The plan stays deterministic, so the optimizer still
     pushes filters through its projections."""
     from osm2geojson_spark import json2shapes
@@ -203,9 +203,31 @@ def test_point_edge_values_pack_and_serialize_as_struct_pack(spark):
 
     bad = [(_NAN, 1.0), (None, 1.0)]
     elements = _point_elements(bad, 2000)
-    shapes = json2shapes(spark, {"elements": elements})
-    assert [(g, p["id"]) for g, p in shapes] == [(None, 2000), (None, 2010)]
+    assert json2shapes(spark, {"elements": elements}) == []
     _, failures = build_features(spark, normalize_elements(spark, elements))
     assert sorted((r["id"], r["reason"]) for r in failures.collect()) == [
-        (2001, None), (2002, None)
+        (2000, "no_lon"), (2001, None), (2002, None), (2010, "no_lon")
     ]
+
+
+def test_node_without_lon_fails_by_name(spark):
+    """A node whose lon is null or NaN has no point: it is no Feature, it
+    is a ``no_lon`` failure, and strict mode raises with that reason. The
+    valid node next to it still converts."""
+    from osm2geojson_spark import ConversionError, json2geojson
+
+    data = {"elements": [
+        {"type": "node", "id": 1, "lon": None, "lat": 1.0},
+        {"type": "node", "id": 2, "lon": 3.0, "lat": 4.0},
+        {"type": "node", "id": 3, "lon": _NAN, "lat": 1.0},
+    ]}
+    got = json2geojson(spark, data)["features"]
+    assert [(f["properties"]["id"], f["geometry"]) for f in got] == [
+        (2, {"type": "Point", "coordinates": [3.0, 4.0]})
+    ]
+    _, failures = build_features(spark, normalize_elements(spark, data["elements"]))
+    assert sorted((r["etype"], r["id"], r["reason"]) for r in failures.collect()) == [
+        ("node", 1, "no_lon"), ("node", 3, "no_lon")
+    ]
+    with pytest.raises(ConversionError, match=r"element 1: no_lon"):
+        json2geojson(spark, data, raise_on_failure=True)

@@ -87,10 +87,10 @@ def main() -> None:
     n_drv = sum(1 for r in rows if r[2] != "—")
     print(
         f"Auto-generated by tools/survey_accounting.py — {len(rows)} registered"
-        " queries, all mission scope (reference parity + north-rule geospatial"
-        f" + LLM-pipeline brief); {n_drv} have ≥1 green driver-recorded"
-        " round, the rest carry judge-r4 sweep + local-ledger provenance"
-        " (CORRECTNESS_LOCAL.json).\n"
+        " queries, each in scope by BASELINE.json's north rule (spatial join"
+        " and tiling over image + caption rows) or by reference parity;"
+        f" {n_drv} have ≥1 green driver-recorded round, the rest carry"
+        " judge-r4 sweep + local-ledger provenance (CORRECTNESS_LOCAL.json).\n"
     )
     print("| query | module | driver rounds | local ledger |")
     print("|---|---|---|---|")
