@@ -3746,7 +3746,7 @@ cell AS (
   JOIN cell d ON d.gx = c.gx AND d.gy = c.gy + 1
 )
 SELECT CAST(k % 6 AS INTEGER) AS tile_x, CAST(k // 6 AS INTEGER) AS tile_y,
-       sum(gr) AS grad_sum, count(*) AS n_valid
+       CAST(sum(gr) AS BIGINT) AS grad_sum, CAST(count(*) AS BIGINT) AS n_valid
 FROM g GROUP BY 1, 2
 """
 

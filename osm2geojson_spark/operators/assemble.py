@@ -3,13 +3,14 @@
 The distributed re-expression of the reference's conversion pipeline
 (/root/reference/osm2geojson/main.py:136-788):
 
-* way node-chains   : ``posexplode(nodes)`` -> left join against every
-  node row -> ``groupBy(doc_id, seq)`` ordered collect, keeping the last
-  node row of each position (the refs_index's last occurrence wins) -> flat
-  ``array<double>`` coordinates [lon0, lat0, lon1, lat1, ...], the one
-  coordinate format from here to the shape kernels. It shuffles for the
-  join (unless the node table broadcasts) and for the group, and nowhere
-  else: no node index is aggregated first.
+* way node-chains   : ``posexplode_outer(nodes)`` -> left join against
+  every node row -> ``groupBy(doc_id, seq)`` ordered collect, keeping the
+  last node row of each position (the refs_index's last occurrence wins) ->
+  flat ``array<double>`` coordinates [lon0, lat0, lon1, lat1, ...], the one
+  coordinate format from here to the shape kernels. The group carries the
+  way's own columns, so no join brings the way rows back. It shuffles for
+  the join (unless the node table broadcasts) and for the group, and
+  nowhere else: no node index is aggregated first.
   (reference: hash refs_index build and probe loop, main.py:228-229,
   288-302)
 * classification    : pure column expressions (functions/classify.py).
@@ -75,13 +76,14 @@ _WAY_SHAPE_T = T.StructType(
 @pandas_udf(_WAY_SHAPE_T)
 def way_gpb_udf(coords: pd.Series, is_poly: pd.Series, branch: pd.Series) -> pd.DataFrame:
     """A way's shape from its flat coordinates. A ``'center'`` way's
-    coordinates are its center, and its shape is that point (None, with no
-    reason, when the center's lon is NaN)."""
+    coordinates are its center, and its shape is that point (None, failing
+    as ``no_lon``, when the center's lon is NaN)."""
     gpbs, reasons = [], []
     for flat, poly, kind in zip(coords, is_poly, branch):
         if kind == "center":
-            gpbs.append(point_gpb(flat[0], flat[1]))
-            reasons.append(None)
+            gpb = point_gpb(flat[0], flat[1])
+            gpbs.append(gpb)
+            reasons.append(None if gpb is not None else "no_lon")
             continue
         if flat is None:
             gpbs.append(None)
@@ -299,9 +301,10 @@ def _dispatch_row(g: dict):
     both geometry paths — two separate grouped() paths executed the whole
     member-resolution subtree twice per action. A relation with a center
     arrives as its sentinel row alone and its shape is that point (None,
-    with no reason, when the center's lon is NaN)."""
+    failing as ``no_lon``, when the center's lon is NaN)."""
     if g["has_center"][0]:
-        return point_gpb(g["center_lon"][0], g["center_lat"][0]), None
+        gpb = point_gpb(g["center_lon"][0], g["center_lat"][0])
+        return gpb, None if gpb is not None else "no_lon"
     v = g["is_poly"][0]
     poly = bool(v) if v is not None and v == v else False  # null/NaN -> line
     return (_multipolygon_row if poly else _multiline_row)(g)
@@ -405,8 +408,8 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     """All top-level ways -> coords + classification + shape.
 
     Columns: seq, id, branch, coords(array<double>; a center way's center),
-    closed, is_poly, gpb, reason, used_node_refs(array<long>), nodes, tags,
-    meta...
+    closed, is_poly, gpb, reason, used_node_refs(array<long>; empty unless
+    the way resolves node refs), nodes, tags, meta...
     """
     w = frames.ways.withColumn(
         "branch",
@@ -420,44 +423,51 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
 
     # --- node-ref resolution (the refs_index probe as a left join) -------
     # keyed by (doc_id, seq), not id: two ways that share an id each resolve
-    # their own node list, as the reference converts every element on its own
-    need = w.filter("branch = 'nodes'").selectExpr(
-        "doc_id", "seq", "posexplode(nodes) AS (pos, node_ref)"
+    # their own node list, as the reference converts every element on its
+    # own. Every way row explodes (a way without node refs into one row with
+    # a null pos), and the aggregation that collects the resolved nodes also
+    # carries the way's own columns, so no join brings the way rows back.
+    way_cols = [c for c in w.columns if c not in ("doc_id", "seq")]
+    need = w.selectExpr(
+        "doc_id",
+        "seq",
+        f"struct({', '.join(f'`{c}`' for c in way_cols)}) AS way",
+        "posexplode_outer(CASE WHEN branch = 'nodes' THEN nodes END) AS (pos, node_ref)",
     )
     nodes = frames.nodes.selectExpr("doc_id", "id AS node_ref", "seq AS nseq", "lon", "lat")
     # every node row sharing the ref's id joins; sort_array orders each
     # position's candidates by node seq, and keeping the last one is the
     # last-occurrence-wins index of build_refs_index (dict overwrite) without
     # an aggregation of its own over the node table
-    resolved = (
+    w = (
         need.join(nodes, ["doc_id", "node_ref"], "left")
         .groupBy("doc_id", "seq")
-        .agg(F.expr("sort_array(collect_list(struct(pos, nseq, node_ref, lon, lat))) AS pts"))
+        .agg(
+            F.expr("any_value(way) AS way"),
+            F.expr(
+                "sort_array(collect_list(CASE WHEN pos IS NOT NULL"
+                " THEN struct(pos, nseq, node_ref, lon, lat) END)) AS pts"
+            ),
+        )
         .selectExpr(
             "doc_id",
             "seq",
+            "way.*",
             "filter(pts, (p, i) -> coalesce(try_element_at(pts, i + 2).pos != p.pos, true))"
             " AS pts",
         )
-        .selectExpr(
-            "doc_id",
-            "seq",
-            "pts",
-            "try_element_at(filter(pts, p -> p.lon IS NULL), 1).pos AS first_miss",
-        )
+        .selectExpr("*", "try_element_at(filter(pts, p -> p.lon IS NULL), 1).pos AS first_miss")
         # nodes before the first missing ref are marked used even when the
         # way fails (main.py:288-302 marks during iteration)
         .selectExpr(
-            "doc_id",
-            "seq",
-            "first_miss",
+            "*",
             "transform(filter(pts, p -> p.lon IS NOT NULL"
             " AND (first_miss IS NULL OR p.pos < first_miss)), p -> p.node_ref)"
             " AS used_node_refs",
             f"CASE WHEN first_miss IS NULL THEN {_coords_sql('pts')} END AS resolved_coords",
         )
+        .drop("pts")
     )
-    w = w.join(resolved, ["doc_id", "seq"], "left")
 
     # coordinates, and the ring-closure test for the classifier: inline
     # geometry first, then refs (main.py:399-404)
@@ -488,8 +498,7 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
         {
             "gpb": F.col("_shape.gpb"),
             "reason": F.expr(
-                "CASE WHEN branch = 'center' THEN CAST(NULL AS STRING)"
-                " WHEN branch = 'none' THEN 'no_source'"
+                "CASE WHEN branch = 'none' THEN 'no_source'"
                 " WHEN first_miss IS NOT NULL THEN 'node_missing'"
                 " ELSE _shape.reason END"
             ),

@@ -14,7 +14,6 @@ Operators:
 * dhash_features   — perceptual difference hash (64-bit), the image-dedup key
 * augment_images   — deterministic augmentation (flips, rot90, center crop)
 * tile_pyramid     — raster pyramid rollup (quadrant stitch + 2x2 avg pool)
-* frame_sample     — stub for video frame sampling (schema + plumbing only)
 
 Arrow batch sizing note: callers tune
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` so bytes-batches stay
@@ -421,19 +420,6 @@ def dhash_features(images: DataFrame, hash_w: int = 8, hash_h: int = 8) -> DataF
     return images.select("image_id", "bytes", "fmt").mapInPandas(
         fn, schema="image_id string, dhash long"
     )
-
-
-def frame_sample(videos: DataFrame, every_n: int = 30) -> DataFrame:
-    """STUB: video frame sampling. The plumbing (schema, batch iteration) is
-    real; the codec hook raises NotImplementedError in this container."""
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples(index=False):
-                imagecodec.decode_external(bytes(r.bytes), getattr(r, "fmt", "h264"))
-            yield pd.DataFrame({"video_id": [], "frame_idx": [], "bytes": []})
-
-    return videos.mapInPandas(fn, schema="video_id string, frame_idx int, bytes binary")
 
 
 _AUG_OPS = ("hflip", "vflip", "rot90", "crop_cc")

@@ -16,6 +16,11 @@ reference's in-place ``ref["used"] = id`` mutation (main.py:293,318-320,529,609)
 
 The dedup filter itself is a left **anti join on id only** (not (type, id)) —
 faithfully reproducing the reference's cross-type-collision behavior.
+The used set is one ``localCheckpoint`` (its plan runs inside
+``build_features``, and with ``materialize="cache"`` fills the ways cache);
+the node, way and relation branches each anti join against it. The way
+and relation branches share one broadcast of it; the node branch builds its
+own when the optimizer can substitute a constant ``doc_id`` into its key.
 
 Python crossings, per element class: a node crosses once (the serializer,
 after the anti join, which also packs its point), a way twice (the shape
@@ -25,10 +30,11 @@ task entering a Python evaluator pays a fixed cost of the order of 100 ms
 on a small box, rows or not, so the plan keeps evaluators few.
 
 The distributed sink (``write_geojson_lines``) persists the serialized
-lines before its ``repartitionByRange``: the range partitioner's sample job,
-its skew re-sample job and the shuffle map stage each evaluate the child,
-and without the cache each would re-run the relation kernel and the
-serializers.
+lines before its ``repartitionByRange`` and runs four jobs: the range
+partitioner's sample job (which fills the cache, so it runs the relation
+kernel and the serializers), its skew re-sample job, the shuffle map stage
+and the write. Without the cache each of the first three would re-run the
+kernel and the serializers.
 """
 
 from __future__ import annotations

@@ -75,23 +75,21 @@ def test_build_features_plan_shape(spark):
     the way branch's pushed-down ``gpb IS NOT NULL`` filter; the node
     serializer packs the points and relations serialize in their kernel,
     7 -> 5.
-    MapInPandas: the relation kernel. Exchanges: both sides of the node
-    branch's anti join, the way branch's element side (its used side
-    reuses the node branch's), the relation branch's used side (the
-    kernel output is already partitioned; its anti join also keys on the
-    kernel's doc_id, so it cannot reuse the exchange keyed on the id
-    alone), way node resolution's group (its node join broadcasts here)
-    and the relation repartition. The member lookup join broadcasts: its
-    build side carries only the join keys and the way coordinates, which
-    keeps the optimizer's size estimate of it (10.48 MB, from the way
-    shape evaluator's estimate) under the 10 MiB broadcast threshold."""
+    MapInPandas: the relation kernel. Exchanges: way node resolution's
+    group, once for the way branch and reused under the relation member
+    lookup, and the relation repartition, 7 -> 3. The group carries the
+    way's own columns, so no join re-keys the way rows by ``seq``. Every
+    other join broadcasts: the three used-refs anti joins, the node lookup
+    and the member lookup. No join between the way rows and their resolved
+    nodes multiplies the optimizer's size estimates any more, so the build
+    sides stay under the 10 MiB broadcast threshold."""
     frames = synthetic_osm_frames(spark, 50)
     features, _ = build_features(spark, frames, materialize=None)
     plan = feature_json_lines(features)._jdf.queryExecution().executedPlan()
     names = _plan_node_names(plan)
     assert names.count("ArrowEvalPython") == 5
     assert names.count("MapInPandas") == 1
-    assert names.count("Exchange") + names.count("reuses:Exchange") == 7
+    assert names.count("Exchange") + names.count("reuses:Exchange") == 3
 
 
 def test_cached_conversion_plan_python_evaluators(spark):
@@ -110,6 +108,39 @@ def test_cached_conversion_plan_python_evaluators(spark):
         spark.catalog.clearCache()
     assert "InMemoryTableScan" in names
     assert names.count("ArrowEvalPython") + names.count("MapInPandas") <= 4
+
+
+# Generated classes a repeat of the scale path may compile at the suite's
+# settings. The cache is 4 LRU segments of 25 entries, and its keys hash
+# with the class loader, so which segment overflows changes from one JVM to
+# the next: this plan read 0, 0 and 26 (one segment over by one entry), the
+# plan that also joined the resolved nodes back to the way rows 82 and 55.
+REPEAT_CONVERSION_COMPILES = 40
+
+
+def test_repeat_conversion_fits_the_codegen_cache(spark, tmp_path):
+    """The scale path (``build_features(materialize="cache")`` then
+    ``write_geojson_lines``) run twice back to back: the second run finds
+    its generated classes in Spark's codegen cache (100 entries by default,
+    keyed by class loader too) instead of compiling them again."""
+    from osm2geojson_spark.plans.pipeline import write_geojson_lines
+
+    metrics = getattr(
+        spark._jvm.org.apache.spark.metrics.source, "CodegenMetrics$"
+    ).__getattr__("MODULE$")
+
+    def convert(out):
+        spark.catalog.clearCache()
+        features, _ = build_features(spark, synthetic_osm_frames(spark, 50), materialize="cache")
+        write_geojson_lines(features, str(tmp_path / out))
+
+    convert("first")
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    convert("second")
+    compiles = metrics.METRIC_COMPILATION_TIME().getCount() - before
+    spark.catalog.clearCache()
+    print("repeat conversion compiles", compiles)
+    assert compiles <= REPEAT_CONVERSION_COMPILES
 
 
 def test_normalized_frames_are_local_relations(spark):
@@ -173,8 +204,8 @@ def test_point_edge_values_pack_and_serialize_as_struct_pack(spark):
     NaN, subnormal and infinite values included, and serialized from those
     bytes (``to_geojson_geometry``). Node, center-way and center-relation
     points alike; a null lat packs as NaN. A null or NaN lon gives no
-    point: the node fails as ``no_lon``, and a center way or relation fails
-    with no reason. The plan stays deterministic, so the optimizer still
+    point: the node, the center way and the center relation all fail as
+    ``no_lon``, so strict mode raises for each of them. The plan stays deterministic, so the optimizer still
     pushes filters through its projections."""
     from osm2geojson_spark import json2shapes
 
@@ -206,8 +237,14 @@ def test_point_edge_values_pack_and_serialize_as_struct_pack(spark):
     assert json2shapes(spark, {"elements": elements}) == []
     _, failures = build_features(spark, normalize_elements(spark, elements))
     assert sorted((r["id"], r["reason"]) for r in failures.collect()) == [
-        (2000, "no_lon"), (2001, None), (2002, None), (2010, "no_lon")
+        (2000, "no_lon"), (2001, "no_lon"), (2002, "no_lon"), (2010, "no_lon")
     ]
+    from osm2geojson_spark import ConversionError, json2geojson
+
+    valid = {"type": "node", "id": 9, "lon": 3.0, "lat": 4.0}
+    for el in elements[1:3]:
+        with pytest.raises(ConversionError, match=rf"element {el['id']}: no_lon"):
+            json2geojson(spark, {"elements": [el, valid]}, raise_on_failure=True)
 
 
 def test_node_without_lon_fails_by_name(spark):
