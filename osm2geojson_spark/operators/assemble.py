@@ -8,9 +8,10 @@ The distributed re-expression of the reference's conversion pipeline
   last node row of each position (the refs_index's last occurrence wins) ->
   flat ``array<double>`` coordinates [lon0, lat0, lon1, lat1, ...], the one
   coordinate format from here to the shape kernels. The group carries the
-  way's own columns, so no join brings the way rows back. It shuffles for
-  the join (unless the node table broadcasts) and for the group, and
-  nowhere else: no node index is aggregated first.
+  way's own columns (on the first exploded row of each way only), so no
+  join brings the way rows back. It shuffles for the join (unless the node
+  table broadcasts) and for the group, and nowhere else: no node index is
+  aggregated first.
   (reference: hash refs_index build and probe loop, main.py:228-229,
   288-302)
 * classification    : pure column expressions (functions/classify.py).
@@ -427,69 +428,72 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
     # own. Every way row explodes (a way without node refs into one row with
     # a null pos), and the aggregation that collects the resolved nodes also
     # carries the way's own columns, so no join brings the way rows back.
+    # Only the first row of a way carries them: the rows that go through the
+    # node join stay (doc_id, seq, pos, node_ref) plus one copy of the way.
     way_cols = [c for c in w.columns if c not in ("doc_id", "seq")]
     need = w.selectExpr(
+        "*", "posexplode_outer(CASE WHEN branch = 'nodes' THEN nodes END) AS (pos, node_ref)"
+    ).selectExpr(
         "doc_id",
         "seq",
-        f"struct({', '.join(f'`{c}`' for c in way_cols)}) AS way",
-        "posexplode_outer(CASE WHEN branch = 'nodes' THEN nodes END) AS (pos, node_ref)",
+        "pos",
+        "node_ref",
+        "CASE WHEN coalesce(pos, 0) = 0"
+        f" THEN struct({', '.join(f'`{c}`' for c in way_cols)}) END AS way",
     )
     nodes = frames.nodes.selectExpr("doc_id", "id AS node_ref", "seq AS nseq", "lon", "lat")
     # every node row sharing the ref's id joins; sort_array orders each
     # position's candidates by node seq, and keeping the last one is the
     # last-occurrence-wins index of build_refs_index (dict overwrite) without
-    # an aggregation of its own over the node table
+    # an aggregation of its own over the node table. The one ordered collect
+    # also holds the way: its first element (position 0, or the way's one
+    # row with a null pos) carries it.
+    last = "p.pos IS NOT NULL AND coalesce(try_element_at(pts, i + 2).pos != p.pos, true)"
     w = (
         need.join(nodes, ["doc_id", "node_ref"], "left")
         .groupBy("doc_id", "seq")
-        .agg(
-            F.expr("any_value(way) AS way"),
-            F.expr(
-                "sort_array(collect_list(CASE WHEN pos IS NOT NULL"
-                " THEN struct(pos, nseq, node_ref, lon, lat) END)) AS pts"
-            ),
-        )
+        .agg(F.expr("sort_array(collect_list(struct(pos, nseq, node_ref, lon, lat, way))) AS pts"))
+        .selectExpr("doc_id", "seq", "pts[0].way AS way", "pts")
         .selectExpr(
             "doc_id",
             "seq",
             "way.*",
-            "filter(pts, (p, i) -> coalesce(try_element_at(pts, i + 2).pos != p.pos, true))"
-            " AS pts",
+            f"filter(pts, (p, i) -> {last}) AS pts",
+            f"try_element_at(filter(pts, (p, i) -> p.lon IS NULL AND {last}), 1).pos"
+            " AS first_miss",
         )
-        .selectExpr("*", "try_element_at(filter(pts, p -> p.lon IS NULL), 1).pos AS first_miss")
-        # nodes before the first missing ref are marked used even when the
-        # way fails (main.py:288-302 marks during iteration)
-        .selectExpr(
-            "*",
-            "transform(filter(pts, p -> p.lon IS NOT NULL"
-            " AND (first_miss IS NULL OR p.pos < first_miss)), p -> p.node_ref)"
-            " AS used_node_refs",
-            f"CASE WHEN first_miss IS NULL THEN {_coords_sql('pts')} END AS resolved_coords",
-        )
-        .drop("pts")
     )
 
     # coordinates, and the ring-closure test for the classifier: inline
-    # geometry first, then refs (main.py:399-404)
+    # geometry first, then refs (main.py:399-404). One resolved node per
+    # position from here, so pts[i].pos = i, and the nodes before the first
+    # missing ref are marked used even when the way fails (main.py:288-302
+    # marks during iteration)
+    closed = (
+        "CASE WHEN geometry IS NOT NULL AND size(geometry) > 0"
+        " THEN try_element_at(geometry, 1).lon = try_element_at(geometry, -1).lon"
+        " AND try_element_at(geometry, 1).lat = try_element_at(geometry, -1).lat"
+        " WHEN nodes IS NOT NULL AND size(nodes) > 0"
+        " THEN try_element_at(nodes, 1) = try_element_at(nodes, -1) END"
+    )
+    # one projection: the classifier reads the closure test as an expression
+    # of its own, not the ``closed`` column beside it
     w = w.withColumns(
         {
+            "used_node_refs": F.expr(
+                "transform(slice(pts, 1, coalesce(first_miss, size(pts))), p -> p.node_ref)"
+            ),
             "coords": F.expr(
                 "CASE WHEN branch = 'center' THEN array(center.lon, center.lat)"
                 f" WHEN branch = 'geom' THEN {_coords_sql('geometry')}"
-                " WHEN branch = 'nodes' THEN resolved_coords END"
+                f" WHEN branch = 'nodes' AND first_miss IS NULL THEN {_coords_sql('pts')} END"
             ),
-            "closed": F.expr(
-                "CASE WHEN geometry IS NOT NULL AND size(geometry) > 0"
-                " THEN try_element_at(geometry, 1).lon = try_element_at(geometry, -1).lon"
-                " AND try_element_at(geometry, 1).lat = try_element_at(geometry, -1).lat"
-                " WHEN nodes IS NOT NULL AND size(nodes) > 0"
-                " THEN try_element_at(nodes, 1) = try_element_at(nodes, -1) END"
+            "closed": F.expr(closed),
+            "is_poly": polygon_flag_column(
+                F.col("tags"), F.expr(closed), area_keys, polygon_features
             ),
         }
-    )
-    w = w.withColumn(
-        "is_poly", polygon_flag_column(F.col("tags"), F.col("closed"), area_keys, polygon_features)
-    )
+    ).drop("pts")
 
     w = w.withColumn(
         "_shape", way_gpb_udf(F.col("coords"), F.col("is_poly"), F.col("branch"))
@@ -503,33 +507,50 @@ def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -
                 " ELSE _shape.reason END"
             ),
         }
-    ).drop("_shape", "resolved_coords")
+    ).drop("_shape")
 
 
 def _member_rows(
     frames: ElementFrames, ways_resolved: DataFrame, rels_flagged: DataFrame
 ) -> DataFrame:
-    """Explode relation members into leaf rows and resolve every leaf with
-    one lookup join. Leaves are the direct members (pos1 = -1) and the
+    """Explode relation members into leaf rows and resolve every way leaf
+    with one lookup join. Leaves are the direct members (pos1 = -1) and the
     members of depth-1 nested relations (pos1 >= 0; multiline path). Output
     one row per leaf member, keyed by the relation's ``seq`` and carrying
     its ``is_poly`` flag: (doc_id, seq, rel_id, is_poly, pos0, pos1, mtype,
-    ref, role, coords, nested_bad).
+    ref, role, coords, nested_bad, props, has_center, center_lon,
+    center_lat). Each relation also gets its sentinel row (pos0 = pos1 =
+    -1, no member), which alone carries the relation's properties JSON and
+    its center; a relation with a center has no other row.
     """
-    mem = (
-        rels_flagged.filter("center IS NULL")
-        .selectExpr("doc_id", "seq", "id AS rel_id", "is_poly", "explode(members) AS m")
-        .selectExpr(
-            "doc_id", "seq", "rel_id", "is_poly", "m.pos AS pos0", "-1 AS pos1",
-            "m.mtype AS mtype", "m.ref AS ref", "m.role AS role", "m.geometry AS mgeom",
-        )
+    mem = rels_flagged.selectExpr(
+        "doc_id",
+        "seq",
+        "id AS rel_id",
+        "is_poly",
+        "center",
+        f"{props_json_sql('relation', include_nodes=False)} AS props",
+        "explode(concat(array(NULL), CASE WHEN center IS NULL"
+        " THEN coalesce(members, array()) ELSE array() END)) AS m",
+    ).selectExpr(
+        "doc_id", "seq", "rel_id", "is_poly", "CASE WHEN m IS NULL THEN -1 ELSE m.pos END AS pos0",
+        "-1 AS pos1", "m.mtype AS mtype", "m.ref AS ref", "m.role AS role", "m.geometry AS mgeom",
+        "CASE WHEN m IS NULL THEN props END AS props",
+        "CASE WHEN m IS NULL THEN center IS NOT NULL END AS has_center",
+        "CASE WHEN m IS NULL THEN center.lon END AS center_lon",
+        "CASE WHEN m IS NULL THEN center.lat END AS center_lat",
     )
 
     # nested relation members (depth 1): the referenced relation's members
-    # under the outer member's position and role (main.py:526-532)
+    # under the outer member's position and role (main.py:526-532). Only
+    # the multiline path reads them, so a multipolygon's relation members
+    # are not expanded. A relation id found under a nested relation is a
+    # depth-2 member, which aborts the relation (reference KeyError at
+    # main.py:529 for id-less nested rel dicts).
     rel_index = frames.relations.selectExpr("doc_id", "id AS ref", "members AS nested_members")
+    rel_ids = frames.relations.selectExpr("doc_id AS r_doc", "id AS r_ref")
     nested = (
-        mem.filter("mtype = 'relation'")
+        mem.filter("NOT is_poly AND mtype = 'relation'")
         .join(rel_index, ["doc_id", "ref"], "inner")
         .selectExpr(
             "doc_id", "seq", "rel_id", "is_poly", "pos0", "role",
@@ -539,35 +560,25 @@ def _member_rows(
             "doc_id", "seq", "rel_id", "is_poly", "pos0", "nm.pos AS pos1",
             "nm.mtype AS mtype", "nm.ref AS ref", "role", "nm.geometry AS mgeom",
         )
+        .join(rel_ids, F.expr("mtype = 'relation' AND doc_id = r_doc AND ref = r_ref"), "left")
+        .selectExpr("*", "r_ref IS NOT NULL AS nested_bad")
+        .drop("r_doc", "r_ref")
     )
 
-    # one lookup keyed by member type: ``l_rel`` is false for a way and true
-    # for a relation, and a node member's key is null, so it matches
-    # nothing. A way resolves to its own shape coordinates, closed once per
-    # way when it classifies as polygon (main.py:334-336). A relation id
-    # found under a nested relation is a depth-2 member, which aborts the
-    # relation (reference KeyError at main.py:529 for id-less nested rel
-    # dicts). The lookup carries no column the join does not need: it is
-    # the build side of a broadcast at small inputs.
+    # one lookup of the way members: a way resolves to its own shape
+    # coordinates, closed once per way when it classifies as polygon
+    # (main.py:334-336). The lookup carries no column the join does not
+    # need: it is the build side of a broadcast at small inputs.
     lookup = ways_resolved.select(
         F.expr("doc_id AS l_doc"),
         F.expr("id AS l_ref"),
-        F.expr("false AS l_rel"),
         close_coords_expr(
             F.expr("CASE WHEN gpb IS NOT NULL AND branch != 'center' THEN coords END"),
             F.col("is_poly"),
         ).alias("way_coords"),
-    ).unionByName(
-        frames.relations.selectExpr("doc_id AS l_doc", "id AS l_ref", "true AS l_rel"),
-        allowMissingColumns=True,
     )
-    leaves = mem.unionByName(nested).join(
-        lookup,
-        F.expr(
-            "doc_id = l_doc AND ref = l_ref"
-            " AND CASE mtype WHEN 'way' THEN false WHEN 'relation' THEN true END = l_rel"
-        ),
-        "left",
+    leaves = mem.unionByName(nested, allowMissingColumns=True).join(
+        lookup, F.expr("mtype = 'way' AND doc_id = l_doc AND ref = l_ref"), "left"
     )
     inline = "(mgeom IS NOT NULL AND size(mgeom) > 0)"
     return leaves.selectExpr(
@@ -582,7 +593,11 @@ def _member_rows(
         "role",
         f"CASE WHEN mtype = 'way' THEN CASE WHEN {inline} THEN {_coords_sql('mgeom')}"
         " ELSE way_coords END END AS coords",
-        "pos1 >= 0 AND coalesce(l_rel, false) AS nested_bad",
+        "coalesce(nested_bad, false) AS nested_bad",
+        "props",
+        "has_center",
+        "center_lon",
+        "center_lat",
     )
 
 
@@ -620,46 +635,29 @@ def assemble_relations(
     # only, of which it consumes the ways (main.py:596-607). Both path
     # filters are applied as ONE disjunction so a single repartition + sort
     # + kernel pass serves both (per-group dispatch on is_poly).
-    kept_members = members.filter(
-        "(is_poly AND pos1 < 0) OR (NOT is_poly AND (mtype = 'way' OR nested_bad))"
-    )
-
+    #
+    # Every relation's sentinel row (pos0 = -1) is kept, and rides along
+    # into its kernel path: a group that arrives sentinel-only (empty/None
+    # members, or every member row filtered out) is failed as "no_members"
+    # INSIDE the kernel. This replaces a left-anti join against the kernel
+    # OUTPUT, which made the whole member-resolution + Python-kernel subtree
+    # execute twice per action (once for results, once to find the missing
+    # relations). The sentinel comes out of the same explode as the members,
+    # so the relations are read once for both.
+    #
     # mtype is a filter-only column — the kernel never reads it, so it is
     # dropped BEFORE the repartition (a string column on every member row
     # is pure shuffle + Arrow weight)
     cols = [
         "doc_id", "seq", "rel_id", "pos0", "pos1", "ref", "role", "coords",
-        "nested_bad", "is_poly",
+        "nested_bad", "is_poly", "props", "has_center", "center_lon", "center_lat",
     ]
-
-    # one sentinel row per relation rides along into its kernel path: a
-    # group that arrives sentinel-only (empty/None members, or every member
-    # row filtered out) is failed as "no_members" INSIDE the kernel. This
-    # replaces a left-anti join against the kernel OUTPUT, which made the
-    # whole member-resolution + Python-kernel subtree execute twice per
-    # action (once for results, once to find the missing relations). The
-    # sentinel also carries what only the relation row has: its properties
-    # JSON (built in the JVM) and its center; member rows leave those
-    # columns null.
-    sentinels = rels_flagged.selectExpr(
-        "doc_id",
-        "seq",
-        "id AS rel_id",
-        "-1 AS pos0",
-        "-1 AS pos1",
-        "CAST(NULL AS BIGINT) AS ref",
-        "CAST(NULL AS STRING) AS role",
-        "CAST(NULL AS ARRAY<DOUBLE>) AS coords",
-        "false AS nested_bad",
-        "is_poly",
-        f"{props_json_sql('relation', include_nodes=False)} AS props",
-        "center IS NOT NULL AS has_center",
-        "center.lon AS center_lon",
-        "center.lat AS center_lat",
-    )
     return (
-        kept_members.select(cols)
-        .unionByName(sentinels, allowMissingColumns=True)
+        members.filter(
+            "pos0 < 0 OR (is_poly AND pos1 < 0)"
+            " OR (NOT is_poly AND (mtype = 'way' OR nested_bad))"
+        )
+        .select(cols)
         .repartition("doc_id", "seq")
         .sortWithinPartitions("doc_id", "seq", "pos0", "pos1")
         .mapInPandas(batched_rel_kernel(_dispatch_row), schema=_REL_OUT_SCHEMA)

@@ -18,16 +18,18 @@ The dedup filter itself is a left **anti join on id only** (not (type, id)) —
 faithfully reproducing the reference's cross-type-collision behavior.
 The used set is one ``localCheckpoint`` (its plan runs inside
 ``build_features``, and with ``materialize="cache"`` fills the ways cache);
-the node, way and relation branches each anti join against it. The way
-and relation branches share one broadcast of it; the node branch builds its
-own when the optimizer can substitute a constant ``doc_id`` into its key.
+the node, way and relation branches each anti join against it, keyed by
+one ``(doc_id, id)`` struct, so all three share one build side (one
+broadcast at small inputs) even where a branch's ``doc_id`` is a constant.
 
 Python crossings, per element class: a node crosses once (the serializer,
 after the anti join, which also packs its point), a way twice (the shape
 kernel below the ways cache, the serializer after the anti join), a
-relation once (its kernel emits the serialized line with the shape). Each
-task entering a Python evaluator pays a fixed cost of the order of 100 ms
-on a small box, rows or not, so the plan keeps evaluators few.
+relation once (its kernel emits the serialized line with the shape). The
+node and way branches share one serializer, a ``mapInArrow`` over their
+union. Each task entering a Python evaluator pays a fixed cost of the
+order of 100 ms on a small box, rows or not, and every evaluator adds
+generated classes, so the plan keeps evaluators few.
 
 The distributed sink (``write_geojson_lines``) persists the serialized
 lines before its ``repartitionByRange`` and runs four jobs: the range
@@ -41,11 +43,9 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..functions import geom
 from ..functions.classify import polygon_flag_column
@@ -63,31 +63,34 @@ class ConversionError(RuntimeError):
     """strict-mode (raise_on_failure) conversion failure."""
 
 
-@pandas_udf(T.StringType())
-def _feature_line_udf(gpb, props):
-    """The Arrow-batched serializer of the way branch (GPB geometry decode +
-    props passthrough are per-row ragged work, so this is the sanctioned
-    Python path)."""
-    return pd.Series([geom.feature_json(g, p) for g, p in zip(gpb, props)])
-
-
-def _with_line(df: DataFrame) -> DataFrame:
-    return df.withColumn("line", _feature_line_udf(F.col("gpb"), F.col("props")))
-
-
-_POINT_FEATURE_T = T.StructType(
-    [T.StructField("gpb", T.BinaryType()), T.StructField("line", T.StringType())]
+_FEATURE_SCHEMA = (
+    "doc_id string, seq bigint, etype string, id bigint, gpb binary, props string, line string"
 )
 
 
-@pandas_udf(_POINT_FEATURE_T)
-def _point_feature_udf(lon: pd.Series, lat: pd.Series, props: pd.Series) -> pd.DataFrame:
-    """The node branch's serializer, which also packs the point: a node
-    crosses into Python once. Nodes without a lon never reach it (they
-    fail as ``no_lon``)."""
-    gpbs = [point_gpb(x, y) for x, y in zip(lon, lat)]
-    lines = [geom.feature_json(g, p) for g, p in zip(gpbs, props)]
-    return pd.DataFrame({"gpb": gpbs, "line": lines})
+def _serialize_batches(batches):
+    """mapInArrow body of the node and way serializer (GPB decode and props
+    passthrough are per-row ragged work, so this is the sanctioned Python
+    path). A way row arrives with its shape; a node row arrives without
+    one, and its point is packed here from its lon and lat: a node crosses
+    into Python once. Nodes without a lon never reach it (they fail as
+    ``no_lon``)."""
+    for b in batches:
+        gpbs = [
+            point_gpb(x, y) if g is None else g
+            for g, x, y in zip(
+                b.column("gpb").to_pylist(),
+                b.column("lon").to_pylist(),
+                b.column("lat").to_pylist(),
+            )
+        ]
+        props = b.column("props")
+        lines = [geom.feature_json(g, p) for g, p in zip(gpbs, props.to_pylist())]
+        yield pa.RecordBatch.from_arrays(
+            [b.column(c) for c in ("doc_id", "seq", "etype", "id")]
+            + [pa.array(gpbs, b.column("gpb").type), props, pa.array(lines, props.type)],
+            names=["doc_id", "seq", "etype", "id", "gpb", "props", "line"],
+        )
 
 
 def build_features(
@@ -160,35 +163,37 @@ def _build_plan(
         else None
     )
 
+    # keyed by one (doc, id) struct, not by two columns: where a branch's
+    # doc_id is a constant (one document), the optimizer would substitute
+    # it and key that branch's build side by the id alone, so the branches
+    # could not share one broadcast of the used set. A used row never has a
+    # null id, so the struct key matches exactly the pairs the two column
+    # keys would.
     def _drop_used(df: DataFrame) -> DataFrame:
         if used is None:
             return df
         return df.join(
             used,
-            (df["id"] == used["used_id"]) & (df["doc_id"] == used["used_doc"]),
+            F.expr("struct(doc_id, id)") == F.expr("struct(used_doc, used_id)"),
             "left_anti",
         )
 
-    # nodes and ways cross into Python in the serializer, after their anti
-    # join (a node's serializer also packs its point); relations in their
-    # kernel, which also serializes; the way shape kernel sits below the
-    # ways cache. A node without a lon has no point (``point_gpb``): it
-    # fails in the JVM and never enters the serializer.
+    # nodes and ways cross into Python in one serializer, after their anti
+    # joins (it also packs a node's point); relations in their kernel, which
+    # also serializes; the way shape kernel sits below the ways cache. A
+    # node without a lon has no point (``point_gpb``): it fails in the JVM
+    # and never enters the serializer.
     nodes = _drop_used(frames.nodes)
     no_lon = "lon IS NULL OR isnan(lon)"
-    node_feats = (
-        nodes.filter(f"NOT ({no_lon})")
-        .selectExpr(
-            "doc_id",
-            "seq",
-            "'node' AS etype",
-            "id",
-            "lon",
-            "lat",
-            f"{props_json_sql('node', include_nodes=False)} AS props",
-        )
-        .withColumn("_f", _point_feature_udf(F.col("lon"), F.col("lat"), F.col("props")))
-        .selectExpr("doc_id", "seq", "etype", "id", "_f.gpb AS gpb", "props", "_f.line AS line")
+    node_rows = nodes.filter(f"NOT ({no_lon})").selectExpr(
+        "doc_id",
+        "seq",
+        "'node' AS etype",
+        "id",
+        "CAST(NULL AS BINARY) AS gpb",
+        f"{props_json_sql('node', include_nodes=False)} AS props",
+        "lon",
+        "lat",
     )
 
     way_feats = ways.selectExpr(
@@ -199,6 +204,16 @@ def _build_plan(
         "gpb",
         f"{props_json_sql('way', include_nodes=True)} AS props",
         "reason",
+    )
+    way_rows = _drop_used(way_feats.filter("gpb IS NOT NULL")).selectExpr(
+        "doc_id",
+        "seq",
+        "etype",
+        "id",
+        "gpb",
+        "props",
+        "CAST(NULL AS DOUBLE) AS lon",
+        "CAST(NULL AS DOUBLE) AS lat",
     )
 
     rel_feats = rel_shapes.selectExpr(
@@ -220,9 +235,13 @@ def _build_plan(
         .unionByName(other_failures)
     )
 
-    features = node_feats.unionByName(
-        _with_line(_drop_used(way_feats.filter("gpb IS NOT NULL").drop("reason")))
-    ).unionByName(_drop_used(rel_feats.filter("gpb IS NOT NULL").drop("reason")))
+    # one Python evaluator serializes the union of both branches: a map over
+    # batches is not pushed below a union, as a projection would be
+    features = (
+        node_rows.unionByName(way_rows)
+        .mapInArrow(_serialize_batches, _FEATURE_SCHEMA)
+        .unionByName(_drop_used(rel_feats.filter("gpb IS NOT NULL").drop("reason")))
+    )
 
     return features, failures, ways, rels_flagged
 
@@ -235,7 +254,7 @@ def used_ref_ids(
     """DataFrame with one column ``used_id`` — the consumption-edge
     projection replacing the reference's side-effecting used marks."""
     used_nodes = ways_resolved.selectExpr(
-        "doc_id AS used_doc", "explode(coalesce(used_node_refs, array())) AS used_id"
+        "doc_id AS used_doc", "explode(used_node_refs) AS used_id"
     )
 
     mem = rels_flagged.filter("center IS NULL").selectExpr(
