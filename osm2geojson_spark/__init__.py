@@ -39,9 +39,9 @@ __version__ = "0.1.0"
 def json2shapes(spark, data, **kw):
     """Like json2geojson but returns the shapes instead of the GeoJSON
     document: [(gpb_bytes, properties_dict)] (engine analog of
-    main.py:89-101). The engine still serializes each node and relation
-    Feature in the same Python pass that builds its shape; only the lines
-    go unused here."""
+    main.py:89-101). The engine still serializes each Feature in the same
+    Python pass that packs a node's point and builds a relation's shape;
+    only the lines go unused here."""
     if isinstance(data, str):
         data = json.loads(data)
     from .sources.normalize import normalize_elements

@@ -20,12 +20,15 @@ The distributed re-expression of the reference's conversion pipeline
   two relations sharing an id each convert from their own members, and
   processed many-relations-per-Arrow-batch via ``mapInPandas``
   (``batched_rel_kernel``; per-group ``applyInPandas`` costs ~ms of
-  machinery per group). The kernel also serializes each relation's
-  Feature, so a relation crosses into Python once.
+  machinery per group).
   (reference: main.py:498-788)
+* feature kernel    : the same pass (``serialize_features``) takes the
+  nodes and ways that survive the used-refs anti join as groups of one
+  row, next to the relations, and serializes every Feature: a node and a
+  relation cross into Python once, a way twice (its shape kernel too).
 * points            : packed (``point_gpb``) where the element already
-  crosses into Python: the node serializer, the way shape kernel, the
-  relation kernel; never in an evaluator of their own.
+  crosses into Python: the way shape kernel (a center way), the feature
+  kernel (a node, a center relation); never in an evaluator of their own.
 * used-refs dedup   : a literal left **anti join** on ``id`` — id-only key,
   reproducing the reference's cross-type-collision quirk (main.py:168-180).
 
@@ -118,18 +121,27 @@ def way_gpb_udf(coords: pd.Series, is_poly: pd.Series, branch: pd.Series) -> pd.
 
 
 # --------------------------------------------------------------------------
-# relation kernels (batched mapInPandas over (doc_id, seq) groups)
+# feature kernel (batched mapInPandas over (doc_id, seq) groups)
 
-_REL_OUT_SCHEMA = T.StructType(
+_FEATURE_OUT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
         T.StructField("seq", T.LongType()),
-        T.StructField("rel_id", T.LongType()),
+        T.StructField("etype", T.StringType()),
+        T.StructField("id", T.LongType()),
         T.StructField("gpb", T.BinaryType()),
         T.StructField("props", T.StringType()),
         T.StructField("reason", T.StringType()),
         T.StructField("line", T.StringType()),
     ]
+)
+
+# the kernel's input: one group per element, keyed by (doc_id, seq). A
+# relation's group is its sentinel row (pos0 = -1) and its member rows; a
+# node or a way is a group of one row, shaped like a sentinel.
+KERNEL_COLUMNS = (
+    "doc_id", "seq", "etype", "id", "pos0", "pos1", "role", "ref", "coords",
+    "nested_bad", "is_poly", "props", "gpb", "is_point", "lon", "lat",
 )
 
 
@@ -296,61 +308,85 @@ def _multiline_row(g: dict):
     return gpb, None
 
 
-def _dispatch_row(g: dict):
+def _dispatch_row(g):
     """Per-group dispatch (R18) INSIDE the kernel: every group carries its
     relation's is_poly flag, so one repartition + sort + Arrow pass serves
     both geometry paths — two separate grouped() paths executed the whole
-    member-resolution subtree twice per action. A relation with a center
-    arrives as its sentinel row alone and its shape is that point (None,
-    failing as ``no_lon``, when the center's lon is NaN)."""
-    if g["has_center"][0]:
-        gpb = point_gpb(g["center_lon"][0], g["center_lat"][0])
+    member-resolution subtree twice per action. A way arrives with its
+    shape, packed by the way shape kernel. A node, and a relation with a
+    center, arrive as one row whose shape is the point (lon, lat) (None,
+    failing as ``no_lon``, when the lon is NaN)."""
+    gpb = g["gpb"][0]
+    if gpb is not None:
+        return gpb, None
+    if g["is_point"][0]:
+        gpb = point_gpb(g["lon"][0], g["lat"][0])
         return gpb, None if gpb is not None else "no_lon"
     v = g["is_poly"][0]
     poly = bool(v) if v is not None and v == v else False  # null/NaN -> line
     return (_multipolygon_row if poly else _multiline_row)(g)
 
 
+class _Group:
+    """One group's rows of a batch's column arrays, sliced per column read:
+    a node or a way reads at most four of the columns, a relation about
+    ten."""
+
+    __slots__ = ("g", "s", "e")
+
+    def __init__(self, g: dict, s: int, e: int):
+        self.g, self.s, self.e = g, s, e
+
+    def __getitem__(self, c: str):
+        return self.g[c][self.s : self.e]
+
+
 def batched_rel_kernel(row_fn):
-    """mapInPandas wrapper that processes MANY relations per Arrow batch.
+    """mapInPandas wrapper that converts and serializes MANY elements per
+    Arrow batch: every feature of a conversion, in one Python pass.
 
     ``applyInPandas`` costs ~ms per group (a Python call + a 1-row DataFrame
-    each) — ruinous at millions of small relations. Instead the member rows
-    arrive hash-partitioned by (doc_id, seq) and sorted within partitions,
-    so each group is contiguous; a group possibly split across two Arrow
-    batches is carried over in ``buf`` and flushed at partition end.
+    each) — ruinous at millions of small relations. Instead the rows
+    (``KERNEL_COLUMNS``) arrive hash-partitioned by (doc_id, seq) and sorted
+    within partitions, so each group is contiguous; a group possibly split
+    across two Arrow batches is carried over in ``buf`` and flushed at
+    partition end. ``seq`` is the element's position in its document, so
+    the groups of different element types never share a key.
 
-    Each group starts with its relation's sentinel row (pos0 = -1 sorts
-    before every member), which carries the properties JSON; the kernel
-    emits the serialized Feature line next to the shape, so a relation
-    crosses into Python once."""
+    Each group starts with its sentinel row (pos0 = -1 sorts before every
+    member), which carries the properties JSON; a node or a way is that row
+    alone. The kernel emits the serialized Feature line next to the shape,
+    so a node and a relation cross into Python once, and a way twice (its
+    shape kernel, then this pass)."""
 
-    COLS = (
-        "doc_id", "seq", "rel_id", "pos0", "pos1", "role", "ref", "coords",
-        "nested_bad", "is_poly", "props", "has_center", "center_lon", "center_lat",
-    )
     def fn(it):
         buf = None  # carried tail group: dict of numpy arrays
-        out = {c: [] for c in _REL_OUT_SCHEMA.fieldNames()}
+        out = {c: [] for c in _FEATURE_OUT_SCHEMA.fieldNames()}
 
         def emit(g, s, e):
-            sub = {c: g[c][s:e] for c in COLS}
-            gpb, reason = row_fn(sub)
+            gpb, reason = row_fn(_Group(g, s, e))
             props = g["props"][s]
             out["doc_id"].append(g["doc_id"][s])
             out["seq"].append(int(g["seq"][s]))
-            out["rel_id"].append(int(g["rel_id"][s]))
+            out["etype"].append(g["etype"][s])
+            out["id"].append(int(g["id"][s]))
             out["gpb"].append(gpb)
             out["props"].append(props)
             out["reason"].append(reason)
             out["line"].append(None if gpb is None else geom.feature_json(gpb, props))
 
+        def flush():
+            df = pd.DataFrame(out)
+            for c in out.values():
+                c.clear()
+            return df
+
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            g = {c: pdf[c].to_numpy() for c in COLS}
+            g = {c: pdf[c].to_numpy() for c in KERNEL_COLUMNS}
             if buf is not None:
-                g = {c: np.concatenate([buf[c], g[c]]) for c in COLS}
+                g = {c: np.concatenate([buf[c], g[c]]) for c in KERNEL_COLUMNS}
                 buf = None
             # doc_id comparisons on object arrays of Python strings are the
             # slow path in numpy — factorize to int codes once per span (C
@@ -362,8 +398,7 @@ def batched_rel_kernel(row_fn):
             if split == 0:  # whole batch is one group — may continue
                 buf = g
                 continue
-            head = {c: g[c][:split] for c in COLS}
-            buf = {c: g[c][split:] for c in COLS}
+            buf = {c: g[c][split:] for c in KERNEL_COLUMNS}
             # composite run detection over (doc_id, seq)
             n = split
             change = np.empty(n, dtype=bool)
@@ -372,10 +407,11 @@ def batched_rel_kernel(row_fn):
             starts = np.flatnonzero(change)
             ends = np.append(starts[1:], n)
             for s, e in zip(starts, ends):
-                emit(head, s, e)
+                emit(g, s, e)
+            yield flush()
         if buf is not None and len(buf["doc_id"]) > 0:
             emit(buf, 0, len(buf["doc_id"]))
-        yield pd.DataFrame(out)
+            yield flush()
 
     return fn
 
@@ -517,28 +553,29 @@ def _member_rows(
     with one lookup join. Leaves are the direct members (pos1 = -1) and the
     members of depth-1 nested relations (pos1 >= 0; multiline path). Output
     one row per leaf member, keyed by the relation's ``seq`` and carrying
-    its ``is_poly`` flag: (doc_id, seq, rel_id, is_poly, pos0, pos1, mtype,
-    ref, role, coords, nested_bad, props, has_center, center_lon,
-    center_lat). Each relation also gets its sentinel row (pos0 = pos1 =
-    -1, no member), which alone carries the relation's properties JSON and
-    its center; a relation with a center has no other row.
+    its id and ``is_poly`` flag: (doc_id, seq, etype, id, is_poly, pos0,
+    pos1, mtype, ref, role, coords, nested_bad, props, gpb, is_point, lon,
+    lat). Each relation also gets its sentinel row (pos0 = pos1 = -1, no
+    member), which alone carries the relation's properties JSON and its
+    center (``is_point``, ``lon``, ``lat``); a relation with a center has no
+    other row. ``gpb`` is null: a relation's shape is built in its kernel.
     """
     mem = rels_flagged.selectExpr(
         "doc_id",
         "seq",
-        "id AS rel_id",
+        "id",
         "is_poly",
         "center",
         f"{props_json_sql('relation', include_nodes=False)} AS props",
         "explode(concat(array(NULL), CASE WHEN center IS NULL"
         " THEN coalesce(members, array()) ELSE array() END)) AS m",
     ).selectExpr(
-        "doc_id", "seq", "rel_id", "is_poly", "CASE WHEN m IS NULL THEN -1 ELSE m.pos END AS pos0",
+        "doc_id", "seq", "id", "is_poly", "CASE WHEN m IS NULL THEN -1 ELSE m.pos END AS pos0",
         "-1 AS pos1", "m.mtype AS mtype", "m.ref AS ref", "m.role AS role", "m.geometry AS mgeom",
         "CASE WHEN m IS NULL THEN props END AS props",
-        "CASE WHEN m IS NULL THEN center IS NOT NULL END AS has_center",
-        "CASE WHEN m IS NULL THEN center.lon END AS center_lon",
-        "CASE WHEN m IS NULL THEN center.lat END AS center_lat",
+        "CASE WHEN m IS NULL THEN center IS NOT NULL END AS is_point",
+        "CASE WHEN m IS NULL THEN center.lon END AS lon",
+        "CASE WHEN m IS NULL THEN center.lat END AS lat",
     )
 
     # nested relation members (depth 1): the referenced relation's members
@@ -553,11 +590,11 @@ def _member_rows(
         mem.filter("NOT is_poly AND mtype = 'relation'")
         .join(rel_index, ["doc_id", "ref"], "inner")
         .selectExpr(
-            "doc_id", "seq", "rel_id", "is_poly", "pos0", "role",
+            "doc_id", "seq", "id", "is_poly", "pos0", "role",
             "explode(nested_members) AS nm",
         )
         .selectExpr(
-            "doc_id", "seq", "rel_id", "is_poly", "pos0", "nm.pos AS pos1",
+            "doc_id", "seq", "id", "is_poly", "pos0", "nm.pos AS pos1",
             "nm.mtype AS mtype", "nm.ref AS ref", "role", "nm.geometry AS mgeom",
         )
         .join(rel_ids, F.expr("mtype = 'relation' AND doc_id = r_doc AND ref = r_ref"), "left")
@@ -584,7 +621,8 @@ def _member_rows(
     return leaves.selectExpr(
         "doc_id",
         "seq",
-        "rel_id",
+        "CASE WHEN pos0 < 0 THEN 'relation' END AS etype",
+        "id",
         "is_poly",
         "pos0",
         "pos1",
@@ -595,9 +633,10 @@ def _member_rows(
         " ELSE way_coords END END AS coords",
         "coalesce(nested_bad, false) AS nested_bad",
         "props",
-        "has_center",
-        "center_lon",
-        "center_lat",
+        "CAST(NULL AS BINARY) AS gpb",
+        "is_point",
+        "lon",
+        "lat",
     )
 
 
@@ -617,17 +656,15 @@ def close_coords_expr(coords: Column, needs_close: Column) -> Column:
     return F.when(open_ring, F.concat(coords, first_pt)).otherwise(coords)
 
 
-def assemble_relations(
+def relation_kernel_rows(
     frames: ElementFrames,
     ways_resolved: DataFrame,
     rels_flagged: DataFrame,
 ) -> DataFrame:
-    """Relation features from one grouped Arrow kernel pass: (doc_id, seq,
-    rel_id, gpb, props, reason, line), one row per relation element, keyed
-    by its ``seq`` so relations that share an id keep their own members.
-    ``line`` is the serialized GeoJSON Feature (null when ``gpb`` is). A
-    relation with a center keeps its point and has no member rows.
-    ``rels_flagged``: frames.relations + precomputed ``is_poly`` column."""
+    """Every relation's input rows to the feature kernel (``KERNEL_COLUMNS``,
+    the relation's ``id`` in ``id``): its sentinel row and the member rows
+    its geometry path reads. ``rels_flagged``: frames.relations +
+    precomputed ``is_poly`` column."""
     members = _member_rows(frames, ways_resolved, rels_flagged)
 
     # multiline path: way members, direct or flattened from a nested
@@ -648,17 +685,36 @@ def assemble_relations(
     # mtype is a filter-only column — the kernel never reads it, so it is
     # dropped BEFORE the repartition (a string column on every member row
     # is pure shuffle + Arrow weight)
-    cols = [
-        "doc_id", "seq", "rel_id", "pos0", "pos1", "ref", "role", "coords",
-        "nested_bad", "is_poly", "props", "has_center", "center_lon", "center_lat",
-    ]
+    return members.filter(
+        "pos0 < 0 OR (is_poly AND pos1 < 0)"
+        " OR (NOT is_poly AND (mtype = 'way' OR nested_bad))"
+    ).select(*KERNEL_COLUMNS)
+
+
+def serialize_features(rows: DataFrame) -> DataFrame:
+    """The feature kernel: ``KERNEL_COLUMNS`` rows -> (doc_id, seq, etype,
+    id, gpb, props, reason, line), one row per element group. ``line`` is
+    the serialized GeoJSON Feature (null when ``gpb`` is). One repartition
+    by (doc_id, seq), one sort and one Python pass, whichever element
+    types the rows hold."""
     return (
-        members.filter(
-            "pos0 < 0 OR (is_poly AND pos1 < 0)"
-            " OR (NOT is_poly AND (mtype = 'way' OR nested_bad))"
-        )
-        .select(cols)
-        .repartition("doc_id", "seq")
+        rows.repartition("doc_id", "seq")
         .sortWithinPartitions("doc_id", "seq", "pos0", "pos1")
-        .mapInPandas(batched_rel_kernel(_dispatch_row), schema=_REL_OUT_SCHEMA)
+        .mapInPandas(batched_rel_kernel(_dispatch_row), schema=_FEATURE_OUT_SCHEMA)
     )
+
+
+def assemble_relations(
+    frames: ElementFrames,
+    ways_resolved: DataFrame,
+    rels_flagged: DataFrame,
+) -> DataFrame:
+    """Relation features from one grouped Arrow kernel pass: (doc_id, seq,
+    rel_id, gpb, props, reason, line), one row per relation element, keyed
+    by its ``seq`` so relations that share an id keep their own members.
+    ``line`` is the serialized GeoJSON Feature (null when ``gpb`` is). A
+    relation with a center keeps its point and has no member rows.
+    ``rels_flagged``: frames.relations + precomputed ``is_poly`` column."""
+    return serialize_features(
+        relation_kernel_rows(frames, ways_resolved, rels_flagged)
+    ).selectExpr("doc_id", "seq", "id AS rel_id", "gpb", "props", "reason", "line")

@@ -1,8 +1,8 @@
 """End-to-end conversion plan: elements -> GeoJSON features.
 
-Query lifecycle (SURVEY §3): normalize -> resolve ways (join) -> assemble
-relations (grouped Arrow kernels) -> used-refs anti join -> ordered feature
-emission. This is the Spark re-expression of the reference's
+Query lifecycle (SURVEY §3): normalize -> resolve ways (join) -> used-refs
+anti join -> assemble relations and serialize every feature (one grouped
+Arrow kernel) -> ordered feature emission. This is the Spark re-expression of the reference's
 ``_json2shapes``/``_json2geojson`` (/root/reference/osm2geojson/main.py:118-180).
 
 Used-ref marking is a *projection of consumption edges* instead of the
@@ -22,75 +22,43 @@ the node, way and relation branches each anti join against it, keyed by
 one ``(doc_id, id)`` struct, so all three share one build side (one
 broadcast at small inputs) even where a branch's ``doc_id`` is a constant.
 
-Python crossings, per element class: a node crosses once (the serializer,
-after the anti join, which also packs its point), a way twice (the shape
-kernel below the ways cache, the serializer after the anti join), a
-relation once (its kernel emits the serialized line with the shape). The
-node and way branches share one serializer, a ``mapInArrow`` over their
-union. Each task entering a Python evaluator pays a fixed cost of the
-order of 100 ms on a small box, rows or not, and every evaluator adds
-generated classes, so the plan keeps evaluators few.
+Python crossings, per element class: a node and a relation cross once, a
+way twice (the shape kernel below the ways cache, then the feature
+kernel). The feature kernel (``serialize_features``) runs after the anti
+joins: the surviving nodes and ways join the relation rows in its input
+exchange as groups of one row each, and it packs a node's point, builds a
+relation's shape and serializes every Feature in one Python pass. Each
+task entering a Python evaluator pays a fixed 150-300 ms on a 4-core box,
+rows or not: for every task PySpark's worker calls
+``importlib.invalidate_caches()``, which re-reads the zip directories of
+the ``zipimporter``s on the worker's path (pyspark.zip's subpackages and
+the Spark jar). Every evaluator also adds generated classes, so the plan
+keeps evaluators, and the tasks that run them, few.
 
 The distributed sink (``write_geojson_lines``) persists the serialized
 lines before its ``repartitionByRange`` and runs four jobs: the range
-partitioner's sample job (which fills the cache, so it runs the relation
-kernel and the serializers), its skew re-sample job, the shuffle map stage
-and the write. Without the cache each of the first three would re-run the
-kernel and the serializers.
+partitioner's sample job (which fills the cache, so it runs the feature
+kernel), its skew re-sample job, the shuffle map stage and the write.
+Without the cache each of the first three would re-run the kernel.
 """
 
 from __future__ import annotations
 
 import json
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import geom
+from ..errors import ConversionError
 from ..functions.classify import polygon_flag_column
 from ..operators.assemble import (
-    assemble_relations,
-    point_gpb,
     props_json_sql,
+    relation_kernel_rows,
     resolve_ways,
+    serialize_features,
 )
 from ..sources.normalize import ElementFrames, normalize_documents, normalize_elements
 from ..sources import xml_source
-
-
-class ConversionError(RuntimeError):
-    """strict-mode (raise_on_failure) conversion failure."""
-
-
-_FEATURE_SCHEMA = (
-    "doc_id string, seq bigint, etype string, id bigint, gpb binary, props string, line string"
-)
-
-
-def _serialize_batches(batches):
-    """mapInArrow body of the node and way serializer (GPB decode and props
-    passthrough are per-row ragged work, so this is the sanctioned Python
-    path). A way row arrives with its shape; a node row arrives without
-    one, and its point is packed here from its lon and lat: a node crosses
-    into Python once. Nodes without a lon never reach it (they fail as
-    ``no_lon``)."""
-    for b in batches:
-        gpbs = [
-            point_gpb(x, y) if g is None else g
-            for g, x, y in zip(
-                b.column("gpb").to_pylist(),
-                b.column("lon").to_pylist(),
-                b.column("lat").to_pylist(),
-            )
-        ]
-        props = b.column("props")
-        lines = [geom.feature_json(g, p) for g, p in zip(gpbs, props.to_pylist())]
-        yield pa.RecordBatch.from_arrays(
-            [b.column(c) for c in ("doc_id", "seq", "etype", "id")]
-            + [pa.array(gpbs, b.column("gpb").type), props, pa.array(lines, props.type)],
-            names=["doc_id", "seq", "etype", "id", "gpb", "props", "line"],
-        )
 
 
 def build_features(
@@ -147,7 +115,6 @@ def _build_plan(
     )
     if materialize == "localCheckpoint":
         rels_flagged = rels_flagged.localCheckpoint(eager=False)
-    rel_shapes = assemble_relations(frames, ways, rels_flagged)
 
     # the used-refs anti-join distributes over the feature union — applying
     # it per branch lets the node branch (the largest element class) filter
@@ -178,11 +145,14 @@ def _build_plan(
             "left_anti",
         )
 
-    # nodes and ways cross into Python in one serializer, after their anti
-    # joins (it also packs a node's point); relations in their kernel, which
-    # also serializes; the way shape kernel sits below the ways cache. A
-    # node without a lon has no point (``point_gpb``): it fails in the JVM
-    # and never enters the serializer.
+    # every element that survives its anti join enters the feature kernel:
+    # a node as a group of one row whose point the kernel packs from
+    # lon/lat (as a center relation's), a way as a group of one row with the
+    # shape its shape kernel packed below the ways cache, a relation as its
+    # sentinel and member rows. So the node and way partitions left empty by
+    # the anti joins start no Python task. A node without a lon has no point
+    # (``point_gpb``): it fails in the JVM and never enters the kernel.
+    # Missing kernel columns are typed nulls.
     nodes = _drop_used(frames.nodes)
     no_lon = "lon IS NULL OR isnan(lon)"
     node_rows = nodes.filter(f"NOT ({no_lon})").selectExpr(
@@ -190,8 +160,10 @@ def _build_plan(
         "seq",
         "'node' AS etype",
         "id",
-        "CAST(NULL AS BINARY) AS gpb",
+        "-1 AS pos0",
+        "-1 AS pos1",
         f"{props_json_sql('node', include_nodes=False)} AS props",
+        "true AS is_point",
         "lon",
         "lat",
     )
@@ -206,19 +178,9 @@ def _build_plan(
         "reason",
     )
     way_rows = _drop_used(way_feats.filter("gpb IS NOT NULL")).selectExpr(
-        "doc_id",
-        "seq",
-        "etype",
-        "id",
-        "gpb",
-        "props",
-        "CAST(NULL AS DOUBLE) AS lon",
-        "CAST(NULL AS DOUBLE) AS lat",
+        "doc_id", "seq", "etype", "id", "-1 AS pos0", "-1 AS pos1", "props", "gpb"
     )
-
-    rel_feats = rel_shapes.selectExpr(
-        "doc_id", "seq", "'relation' AS etype", "rel_id AS id", "gpb", "props", "reason", "line"
-    )
+    rel_rows = relation_kernel_rows(frames, ways, rels_flagged)
 
     node_failures = nodes.filter(no_lon).selectExpr(
         "doc_id", "seq", "'node' AS etype", "id", "'no_lon' AS reason"
@@ -226,21 +188,26 @@ def _build_plan(
     other_failures = frames.others.selectExpr(
         "doc_id", "seq", "type AS etype", "id", "'unsupported_type' AS reason"
     )
+    # relation failures come from a kernel over the relation rows alone:
+    # the features' kernel has no used relations, and its nodes and ways
+    # never fail
     failure_cols = ["doc_id", "seq", "etype", "id", "reason"]
     failures = (
         way_feats.filter("gpb IS NULL")
         .select(failure_cols)
-        .unionByName(rel_feats.filter("gpb IS NULL").select(failure_cols))
+        .unionByName(serialize_features(rel_rows).filter("gpb IS NULL").select(failure_cols))
         .unionByName(node_failures)
         .unionByName(other_failures)
     )
 
-    # one Python evaluator serializes the union of both branches: a map over
-    # batches is not pushed below a union, as a projection would be
     features = (
-        node_rows.unionByName(way_rows)
-        .mapInArrow(_serialize_batches, _FEATURE_SCHEMA)
-        .unionByName(_drop_used(rel_feats.filter("gpb IS NOT NULL").drop("reason")))
+        serialize_features(
+            _drop_used(rel_rows).unionByName(node_rows, allowMissingColumns=True).unionByName(
+                way_rows, allowMissingColumns=True
+            )
+        )
+        .filter("gpb IS NOT NULL")
+        .drop("reason")
     )
 
     return features, failures, ways, rels_flagged
@@ -293,10 +260,9 @@ def feature_json_lines(features: DataFrame) -> DataFrame:
     serialization the reference performs driver-side in one json.dump
     (main.py:118-133, __main__.py:115-135).
 
-    The lines are built inside ``build_features``' branches, so selecting
-    them adds no Python pass: a conversion crosses into Python once per
-    element class (the node serializer, the way serializer, the relation
-    kernel) plus the way shape kernel. Everything around them stays a
+    The lines are built inside ``build_features``' feature kernel, so
+    selecting them adds no Python pass: a conversion crosses into Python in
+    that kernel and in the way shape kernel. Everything around them stays a
     DataFrame, so the sink scales with executors instead of driver memory."""
     return features.select("doc_id", "seq", "line")
 
@@ -320,9 +286,8 @@ def write_geojson_lines(
     The serialized lines are persisted before the range exchange: its
     partitioner samples the child in one job, re-samples skewed partitions
     in another, and the shuffle map stage reads it a third time, so an
-    unpersisted child would run the relation kernel and the serializers
-    three times. The cache is released in ``finally``, also
-    when the write fails."""
+    unpersisted child would run the feature kernel three times. The cache
+    is released in ``finally``, also when the write fails."""
     lines = feature_json_lines(features).persist()
     try:
         if num_files:
@@ -343,13 +308,16 @@ def write_geojson_lines(
 def read_geojson_lines(spark: SparkSession, path: str) -> dict[str, list[dict]]:
     """Driver-side reader for ``write_geojson_lines`` output (tests /
     small corpora): {doc_id: [feature, ...]} with per-doc part files
-    replayed in filename order."""
+    replayed in filename order. Spark percent-escapes a partition value's
+    path characters (``:`` as ``%3A``, ``%`` as ``%25``); they are
+    unescaped here."""
     import glob
     import os
+    from urllib.parse import unquote
 
     out: dict[str, list[dict]] = {}
     for doc_dir in sorted(glob.glob(os.path.join(path, "doc_id=*"))):
-        doc_id = os.path.basename(doc_dir).split("=", 1)[1]
+        doc_id = unquote(os.path.basename(doc_dir).split("=", 1)[1])
         feats: list[dict] = []
         for part in sorted(glob.glob(os.path.join(doc_dir, "part-*"))):
             with open(part, encoding="utf-8") as fh:

@@ -7,15 +7,15 @@ OSM 0.6 schema: ids/versions/changesets/uids are ints, coordinates floats,
 everything else strings.
 
 Ingestion is small-data by design (OSM extracts are MBs; the trillion-row
-payload table arrives as Parquet/Iceberg, not XML). For distributed bulk
-ingestion ``xml_files_to_elements`` maps this same parser over a DataFrame of
-whole XML documents with ``mapInPandas`` so each file parses on an executor.
+payload table arrives as Parquet/Iceberg, not XML): a document parses on
+the driver.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
 from xml.etree import ElementTree
+
+from ..errors import ConversionError
 
 _META_INT = {"version", "changeset", "uid"}
 
@@ -144,12 +144,12 @@ def _parse_count(el: ElementTree.Element) -> dict:
     return item
 
 
-def parse(xml_str: str) -> dict | None:
-    """OSM XML string -> Overpass JSON document dict (or None if the root
-    element is not <osm>)."""
+def parse(xml_str: str) -> dict:
+    """OSM XML string -> Overpass JSON document dict. A root element other
+    than <osm> raises ``ConversionError`` naming it."""
     root = ElementTree.fromstring(xml_str)
     if root.tag != "osm":
-        return None
+        raise ConversionError(f"Not an OSM XML document: root element <{root.tag}>, expected <osm>")
 
     elements: list[dict] = []
     version = 0.6

@@ -10,7 +10,9 @@ from __future__ import annotations
 import json
 import os
 
-from osm2geojson_spark import cli
+import pytest
+
+from osm2geojson_spark import ConversionError, cli, xml2geojson
 
 from .conftest import DATA_DIR, read_json
 
@@ -78,3 +80,20 @@ def test_rulebook_overrides(spark, tmp_path):
     rc = cli.main([src, out, "-f"])
     assert rc == 0
     assert json.load(open(out))["features"][0]["geometry"]["type"] == "LineString"
+
+
+_GPX = '<gpx version="1.1"><trk/></gpx>'
+
+
+def test_non_osm_root_fails_naming_the_root(spark, tmp_path, capsys):
+    """XML whose root is not <osm> fails with a ConversionError that names
+    the root, and the CLI exits 1 with that message in its driver mode and
+    in its distributed (.jsonl) mode."""
+    with pytest.raises(ConversionError, match="<gpx>"):
+        xml2geojson(spark, _GPX)
+    src = str(tmp_path / "track.xml")
+    open(src, "w").write(_GPX)
+    for out in ("track.geojson", "track.jsonl"):
+        rc = cli.main([src, str(tmp_path / out)])
+        assert rc == 1
+        assert "root element <gpx>" in capsys.readouterr().err

@@ -70,7 +70,13 @@ import json
 import pytest
 
 from osm2geojson_spark import convert_documents, xml2geojson, ConversionError
+from osm2geojson_spark.plans.pipeline import (
+    build_features,
+    read_geojson_lines,
+    write_geojson_lines,
+)
 from osm2geojson_spark.sources import xml_source
+from osm2geojson_spark.sources.normalize import normalize_documents
 from tests.conftest import read_data, read_json
 
 XML_CASES = ["empty", "node", "way", "relation", "map", "issue-4", "barrier-wall"]
@@ -205,19 +211,8 @@ def test_issue_54(converted):
     _assert_issue_54(converted)
 
 
-def test_goldens_invariant_at_7_partitions_with_aqe(spark):
-    """Shuffle partition count and AQE must not change any output: the
-    whole golden set, converted again at 7 shuffle partitions with AQE on,
-    still matches byte-exactly (issue-35 semantically)."""
-    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    saved = {k: spark.conf.get(k) for k in keys}
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try:
-        out = _convert_all(spark)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+def _assert_all_goldens(out):
+    """Every golden fixture, byte-exactly (issue-35 semantically)."""
     for name in XML_CASES:
         assert out[f"xml:{name}"] == read_json(f"{name}.geojson")["features"], name
     for name in JSON_CASES:
@@ -226,6 +221,67 @@ def test_goldens_invariant_at_7_partitions_with_aqe(spark):
     assert out["json:issue-9-all"] == read_json("issue-9-all.geojson")["features"]
     _assert_issue_35(out)
     _assert_issue_54(out)
+
+
+_AT_7_WITH_AQE = {"spark.sql.shuffle.partitions": "7", "spark.sql.adaptive.enabled": "true"}
+
+
+def _with_conf(spark, conf, fn):
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        return fn()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_goldens_invariant_at_7_partitions_with_aqe(spark):
+    """Shuffle partition count and AQE must not change any output: the
+    whole golden set, converted again at 7 shuffle partitions with AQE on,
+    still matches byte-exactly (issue-35 semantically)."""
+    _assert_all_goldens(_with_conf(spark, _AT_7_WITH_AQE, lambda: _convert_all(spark)))
+
+
+def _convert_all_through_sink(spark, root):
+    """The golden set through the scale path: ``build_features`` with the
+    ways cached, the distributed GeoJSON-lines sink, then its reader.
+    Documents without features write no directory."""
+    docs = _all_docs()
+    unfiltered_docs = {"json:issue-9-all": docs.pop("json:issue-9-all")}
+    out = {}
+    for name, batch, filter_used_refs in (
+        ("filtered", docs, True),
+        ("unfiltered", unfiltered_docs, False),
+    ):
+        spark.catalog.clearCache()
+        features, _ = build_features(
+            spark,
+            normalize_documents(spark, batch),
+            filter_used_refs=filter_used_refs,
+            materialize="cache",
+        )
+        path = str(root / name)
+        write_geojson_lines(features, path)
+        written = read_geojson_lines(spark, path)
+        out.update({doc_id: written.get(doc_id, []) for doc_id in batch})
+    spark.catalog.clearCache()
+    return out
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [{}, _AT_7_WITH_AQE],
+    ids=["1-partition", "7-partitions-aqe"],
+)
+def test_goldens_through_the_scale_path(spark, tmp_path, conf):
+    """The scale path carries every surviving node, way and relation
+    through the feature kernel and the range-partitioned sink; its files
+    replay every golden fixture exactly."""
+    _assert_all_goldens(
+        _with_conf(spark, conf, lambda: _convert_all_through_sink(spark, tmp_path))
+    )
 
 
 def test_strict_mode_raises_on_map(spark):

@@ -72,33 +72,34 @@ def test_build_features_plan_shape(spark):
     """Python crossings and shuffles of the unmaterialized conversion plan.
     ArrowEvalPython: the way shape kernel, twice under the way branch
     (once more for its pushed-down ``gpb IS NOT NULL`` filter) and once
-    under the relation member lookup, 5 -> 3: the node and way serializers
-    are one ``mapInArrow`` now. MapInArrow: that serializer, once over the
-    union of the node and way branches.
-    MapInPandas: the relation kernel. Exchanges: way node resolution's
-    group, once for the way branch and reused under the relation member
-    lookup, and the relation repartition. The group carries the way's own
-    columns, so no join re-keys the way rows by ``seq``. Every other join
-    broadcasts: the three used-refs anti joins, the node lookup and the
-    member lookup. No join between the way rows and their resolved nodes
-    multiplies the optimizer's size estimates, so the build sides stay
-    under the 10 MiB broadcast threshold."""
+    under the relation member lookup. MapInArrow: none, 1 -> 0: the nodes
+    and ways that survive their anti joins serialize in the feature kernel.
+    MapInPandas: the feature kernel, once over the union of the node, way
+    and relation rows. Exchanges: way node resolution's group, once for
+    the way branch and reused under the relation member lookup, and the
+    feature kernel's repartition, which the node and way rows join. The
+    group carries the way's own columns, so no join re-keys the way rows
+    by ``seq``. Every other join broadcasts: the three used-refs anti
+    joins, the node lookup and the member lookup. No join between the way
+    rows and their resolved nodes multiplies the optimizer's size
+    estimates, so the build sides stay under the 10 MiB broadcast
+    threshold."""
     frames = synthetic_osm_frames(spark, 50)
     features, _ = build_features(spark, frames, materialize=None)
     plan = feature_json_lines(features)._jdf.queryExecution().executedPlan()
     names = _plan_node_names(plan)
     assert names.count("ArrowEvalPython") == 3
-    assert names.count("MapInArrow") == 1
+    assert names.count("MapInArrow") == 0
     assert names.count("MapInPandas") == 1
     assert names.count("Exchange") + names.count("reuses:Exchange") == 3
 
 
 def test_cached_conversion_plan_python_evaluators(spark):
     """The plan the scale path runs (``materialize="cache"``, then the
-    sink's lines) has at most three Python evaluators, counted under the
-    cached ways too: the node and way serializer, the relation kernel
-    (which serializes its own lines) and the way shape kernel below the
-    cache."""
+    sink's lines) has at most two Python evaluators, counted under the
+    cached ways too: the feature kernel, which converts and serializes
+    every node, way and relation that survives the anti joins, and the
+    way shape kernel below the cache."""
     spark.catalog.clearCache()
     frames = synthetic_osm_frames(spark, 50)
     features, _ = build_features(spark, frames, materialize="cache")
@@ -109,18 +110,19 @@ def test_cached_conversion_plan_python_evaluators(spark):
         spark.catalog.clearCache()
     assert "InMemoryTableScan" in names
     evaluators = ("ArrowEvalPython", "MapInPandas", "MapInArrow")
-    assert sum(names.count(e) for e in evaluators) <= 3
+    assert sum(names.count(e) for e in evaluators) <= 2
 
 
 # Generated classes one run of the scale path compiles into an emptied
-# codegen cache at the suite's settings: 63, where the plan that resolved
+# codegen cache at the suite's settings: 62, where the plan that resolved
 # way nodes with a join back to the way rows, serialized nodes and ways in
-# two evaluators and built two used-set broadcasts compiled 108. The cache
-# holds 100 entries in 4 LRU segments of 25, and its keys hash with the
-# class loader, so a plan close to 100 fits in some JVMs and not in
-# others. The slack above 63 covers a class evicted and compiled again
-# within the run.
-CONVERSION_CODEGEN_ENTRIES = 66
+# two evaluators and built two used-set broadcasts compiled 108, and the
+# plan that serialized nodes and ways in a ``mapInArrow`` of their own
+# compiled 63. The cache holds 100 entries in 4 LRU segments of 25, and
+# its keys hash with the class loader, so a plan close to 100 fits in some
+# JVMs and not in others. The slack above 62 covers a class evicted and
+# compiled again within the run.
+CONVERSION_CODEGEN_ENTRIES = 65
 
 
 def _codegen_cache(spark):

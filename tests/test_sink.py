@@ -1,8 +1,9 @@
 """Distributed GeoJSON-lines sink (plans/pipeline.write_geojson_lines):
 S10's scale path. The reference serializes driver-side in one json.dump
-(main.py:118-133); the engine serializes executor-side through a
-vectorized pandas UDF and df.write.text — these tests pin that both
-sinks produce the identical feature stream."""
+(main.py:118-133); the engine serializes executor-side in the
+conversion's feature kernel (a ``mapInPandas`` pass) and writes with
+df.write.text — these tests pin that both sinks produce the identical
+feature stream."""
 
 from __future__ import annotations
 
