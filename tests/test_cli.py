@@ -91,9 +91,9 @@ def test_non_osm_root_fails_naming_the_root(spark, tmp_path, capsys):
     in its distributed (.jsonl) mode."""
     with pytest.raises(ConversionError, match="<gpx>"):
         xml2geojson(spark, _GPX)
-    src = str(tmp_path / "track.xml")
-    open(src, "w").write(_GPX)
+    src = tmp_path / "track.xml"
+    src.write_text(_GPX)
     for out in ("track.geojson", "track.jsonl"):
-        rc = cli.main([src, str(tmp_path / out)])
+        rc = cli.main([str(src), str(tmp_path / out)])
         assert rc == 1
         assert "root element <gpx>" in capsys.readouterr().err
