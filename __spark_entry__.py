@@ -881,7 +881,7 @@ _HAUS_NF, _HAUS_NV = 120, 48  # pairs x vertices per line
 def q_hausdorff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete symmetric Hausdorff distance per matched geometry pair
     (operators/geometry.hausdorff_distance) over integer staircase
-    polylines — shape similarity for trajectory dedup. The SQUARED
+    polylines — shape similarity for dedup. The SQUARED
     distance is an exact integer, and the oracle brute-forces the same
     max-min over exploded vertices in SQL (min per vertex, max per side,
     greatest of the two directed values) — no geometric closed form
@@ -4210,105 +4210,6 @@ _TRAJ_PINGS_CTE = """
 """
 
 
-def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trajectory stay-point detection (operators/trajectory.stay_points):
-    maximal same-cell ping runs per user lasting >= 1 hour — the Li-et-al
-    stay walk re-expressed as the lag-mismatch run-length window so a
-    10^12-ping corpus needs ONE sort per user partition. Every decision is
-    integer/timestamp-exact (cell runs, epoch-second durations), so the
-    oracle replays the identical lag/sum/rollup algebra."""
-    from osm2geojson_spark.operators.trajectory import stay_points
-
-    return stay_points(
-        _traj_pings(spark, sf_dir), res=6, min_duration_s=3600
-    ).select("user_id", "stay_seq", "cell_id", "n_pings", "dur_s")
-
-
-def _stays_sql(select: str) -> str:
-    from osm2geojson_spark.operators import cells as CEL
-
-    cell = CEL.cell_id_sql("lon", "lat", 6)
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), cells_t AS (
-  SELECT user_id, ts, {cell} AS cell_id FROM pings
-), runs AS (
-  SELECT user_id, ts, cell_id,
-    CASE WHEN lag(cell_id) OVER w IS NULL OR lag(cell_id) OVER w != cell_id
-         THEN 1 ELSE 0 END AS nw
-  FROM cells_t WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), r2 AS (
-  SELECT user_id, ts, cell_id,
-    sum(nw) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS run
-  FROM runs
-), stays AS (
-  SELECT user_id, run, cell_id, CAST(count(*) AS BIGINT) AS n_pings,
-         min(ts) AS t0,
-         CAST(floor(epoch(max(ts))) AS BIGINT)
-           - CAST(floor(epoch(min(ts))) AS BIGINT) AS dur_s
-  FROM r2 GROUP BY 1, 2, 3
-  HAVING CAST(floor(epoch(max(ts))) AS BIGINT)
-           - CAST(floor(epoch(min(ts))) AS BIGINT) >= 3600
-), seq AS (
-  SELECT user_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY t0) AS INTEGER)
-           AS stay_seq,
-         cell_id, n_pings, dur_s
-  FROM stays
-)
-{select}
-"""
-
-
-def q_od_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Origin-destination matrix (trajectory.od_flows): consecutive stays
-    per user become directed trips, rolled up over all users — one lead()
-    window over the stay sequence plus a combiner rollup."""
-    from osm2geojson_spark.operators.trajectory import od_flows, stay_points
-
-    stays = stay_points(_traj_pings(spark, sf_dir), res=6, min_duration_s=3600)
-    return od_flows(stays)
-
-
-def _od_flows_sql() -> str:
-    return _stays_sql(
-        """SELECT from_cell, to_cell, CAST(count(*) AS BIGINT) AS n_trips
-FROM (
-  SELECT cell_id AS from_cell,
-         lead(cell_id) OVER (PARTITION BY user_id ORDER BY stay_seq) AS to_cell
-  FROM seq
-) WHERE to_cell IS NOT NULL GROUP BY 1, 2"""
-    )
-
-
-def q_mobility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user mobility features over the detected stays
-    (trajectory.mobility_features): visit counts, distinct cells, and
-    radius of gyration in cell units — the scaled-integer gyration
-    numerator is exact int64, and rog is one sqrt + one divide per user
-    (identically ordered in SQL)."""
-    from osm2geojson_spark.operators.trajectory import mobility_features, stay_points
-
-    stays = stay_points(_traj_pings(spark, sf_dir), res=6, min_duration_s=3600)
-    return mobility_features(stays)
-
-
-def _mobility_sql() -> str:
-    xs, rs = 1 << 29, 1 << 58
-    return _stays_sql(
-        f"""SELECT user_id, CAST(count(*) AS BIGINT) AS n_stays,
-       CAST(count(DISTINCT cell_id) AS BIGINT) AS n_cells,
-       CAST(count(*) * sum(x * x) - sum(x) * sum(x)
-            + count(*) * sum(y * y) - sum(y) * sum(y) AS BIGINT) AS gyr_num,
-       round(sqrt(CAST(count(*) * sum(x * x) - sum(x) * sum(x)
-                       + count(*) * sum(y * y) - sum(y) * sum(y) AS DOUBLE))
-             / CAST(count(*) AS DOUBLE), 6) AS rog_cells
-FROM (SELECT user_id, cell_id,
-             (cell_id % {rs}) // {xs} AS x, cell_id % {xs} AS y FROM seq)
-GROUP BY user_id"""
-    )
-
-
 def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-hour aggregation over the events stream table (batch form of
     the streaming windowed agg; wall-clock fields so the result is
@@ -4951,186 +4852,6 @@ FROM pc GROUP BY 1, 2
 """
 
 
-def q_resample_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X54 (trajectory.resample_tracks): per-user trajectory resampling
-    onto the 6-hour epoch grid by exact linear interpolation — integer-
-    microsecond tick indices (div, never float) and an interpolation
-    fraction dividing two exact int64 deltas, so both engines run the
-    identical IEEE sequence. One per-user window + an output-bounded
-    explode; no joins."""
-    from osm2geojson_spark.operators.trajectory import resample_tracks
-
-    out = resample_tracks(_traj_pings(spark, sf_dir), interval_s=6 * 3600)
-    return out.select("user_id", "tick", "lon", "lat")
-
-
-def _resample_tracks_sql() -> str:
-    dt = 6 * 3600 * 1_000_000
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), p AS (
-  SELECT user_id, ts, epoch_us(ts) AS t, lon, lat FROM pings
-), seg AS (
-  SELECT user_id, t, lon, lat,
-         lead(t) OVER w AS t1, lead(lon) OVER w AS lon1, lead(lat) OVER w AS lat1
-  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), ticks AS (
-  SELECT user_id, t, t1, lon, lat, lon1, lat1,
-         unnest(range((t + {dt - 1}) // {dt}, (t1 + {dt - 1}) // {dt})) AS tick
-  FROM seg WHERE t1 IS NOT NULL
-)
-SELECT user_id, CAST(tick AS BIGINT) AS tick,
-       lon + CAST(tick * {dt} - t AS DOUBLE) / CAST(t1 - t AS DOUBLE) * (lon1 - lon) AS lon,
-       lat + CAST(tick * {dt} - t AS DOUBLE) / CAST(t1 - t AS DOUBLE) * (lat1 - lat) AS lat
-FROM ticks
-"""
-
-
-def q_colocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X55 (trajectory.colocation_pairs): co-traveler detection — distinct
-    users resampled onto the shared 6-hour tick grid, paired when they
-    occupy the same res-3 cell at the same tick, counted exactly. The
-    (tick, cell) equi-join bounds candidates by instantaneous cell
-    occupancy; the oracle replays resample + cell + self-join verbatim."""
-    from osm2geojson_spark.operators.trajectory import colocation_pairs
-
-    return colocation_pairs(
-        _traj_pings(spark, sf_dir), interval_s=6 * 3600, res=3
-    )
-
-
-def _colocation_sql() -> str:
-    from osm2geojson_spark.operators import cells as CEL
-
-    dt = 6 * 3600 * 1_000_000
-    cell = CEL.cell_id_sql("lon", "lat", 3)
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), p AS (
-  SELECT user_id, ts, epoch_us(ts) AS t, lon, lat FROM pings
-), seg AS (
-  SELECT user_id, t, lon, lat,
-         lead(t) OVER w AS t1, lead(lon) OVER w AS lon1, lead(lat) OVER w AS lat1
-  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), ticks AS (
-  SELECT user_id, t, t1, lon, lat, lon1, lat1,
-         unnest(range((t + {dt - 1}) // {dt}, (t1 + {dt - 1}) // {dt})) AS tick
-  FROM seg WHERE t1 IS NOT NULL
-), sampled AS (
-  SELECT user_id, tick, {cell} AS cell_id
-  FROM (
-    SELECT user_id, tick,
-           lon + CAST(tick * {dt} - t AS DOUBLE) / CAST(t1 - t AS DOUBLE) * (lon1 - lon) AS lon,
-           lat + CAST(tick * {dt} - t AS DOUBLE) / CAST(t1 - t AS DOUBLE) * (lat1 - lat) AS lat
-    FROM ticks
-  ) q
-)
-SELECT a.user_id AS user_a, b.user_id AS user_b,
-       CAST(COUNT(*) AS BIGINT) AS n_ticks
-FROM sampled a JOIN sampled b
-  ON a.tick = b.tick AND a.cell_id = b.cell_id AND a.user_id < b.user_id
-GROUP BY 1, 2
-"""
-
-
-def q_convoys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X77 (trajectory.convoy_episodes): convoy detection — maximal runs
-    of CONSECUTIVE shared-cell ticks per pair (the flock/convoy refinement
-    of colocation: co-presence must be unbroken in time, cells may change
-    tick to tick). Same (tick, cell) candidate bound as colocation plus one
-    pair-keyed islands window; tick arithmetic is all-int64 so the oracle
-    replays resample + join + gaps-and-islands verbatim."""
-    from osm2geojson_spark.operators.trajectory import convoy_episodes
-
-    return convoy_episodes(
-        _traj_pings(spark, sf_dir), interval_s=6 * 3600, res=3, min_len=2
-    )
-
-
-def _convoys_sql() -> str:
-    from osm2geojson_spark.operators import cells as CEL
-
-    dt = 6 * 3600 * 1_000_000
-    cell = CEL.cell_id_sql("lon", "lat", 3)
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), p AS (
-  SELECT user_id, ts, epoch_us(ts) AS t, lon, lat FROM pings
-), seg AS (
-  SELECT user_id, t, lon, lat,
-         lead(t) OVER w AS t1, lead(lon) OVER w AS lon1, lead(lat) OVER w AS lat1
-  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), ticks AS (
-  SELECT user_id, t, t1, lon, lat, lon1, lat1,
-         unnest(range((t + {dt - 1}) // {dt}, (t1 + {dt - 1}) // {dt})) AS tick
-  FROM seg WHERE t1 IS NOT NULL
-), sampled AS (
-  SELECT user_id, tick, {cell} AS cell_id
-  FROM (
-    SELECT user_id, tick,
-           lon + CAST(tick * {dt} - t AS DOUBLE) / CAST(t1 - t AS DOUBLE) * (lon1 - lon) AS lon,
-           lat + CAST(tick * {dt} - t AS DOUBLE) / CAST(t1 - t AS DOUBLE) * (lat1 - lat) AS lat
-    FROM ticks
-  ) q
-), m AS (
-  SELECT a.user_id AS user_a, b.user_id AS user_b, a.tick
-  FROM sampled a JOIN sampled b
-    ON a.tick = b.tick AND a.cell_id = b.cell_id AND a.user_id < b.user_id
-), runs AS (
-  SELECT user_a, user_b, tick,
-         tick - row_number() OVER (PARTITION BY user_a, user_b ORDER BY tick)
-           AS grp
-  FROM m
-)
-SELECT user_a, user_b,
-       CAST(min(tick) AS BIGINT) AS start_tick,
-       CAST(max(tick) AS BIGINT) AS end_tick,
-       CAST(count(*) AS BIGINT) AS n_ticks
-FROM runs GROUP BY user_a, user_b, grp
-HAVING count(*) >= 2
-"""
-
-
-def q_location_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X86 (trajectory.location_entropy): per-user Shannon entropy of the
-    cell-visit distribution — the mobility-predictability feature. The
-    LOF-style quantization keeps the cross-cell sum exact int64 (s_q);
-    only three identically-ordered float ops assemble the nats value.
-    Two combiner rollups; the oracle replays count -> quantized term ->
-    integer sum -> the same float assembly."""
-    from osm2geojson_spark.operators.trajectory import location_entropy
-
-    return location_entropy(_traj_pings(spark, sf_dir), res=6)
-
-
-def _location_entropy_sql() -> str:
-    from osm2geojson_spark.operators import cells as CEL
-
-    cell = CEL.cell_id_sql("lon", "lat", 6)
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), cnt AS (
-  SELECT user_id, {cell} AS cell_id, count(*) AS c
-  FROM pings GROUP BY 1, 2
-), t AS (
-  SELECT user_id, c,
-         CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)) * 1e6)
-              AS BIGINT) AS tq
-  FROM cnt
-), agg AS (
-  SELECT user_id, CAST(sum(c) AS BIGINT) AS n_pings,
-         CAST(count(*) AS BIGINT) AS n_cells,
-         CAST(sum(tq) AS BIGINT) AS s_q
-  FROM t GROUP BY 1
-)
-SELECT user_id, n_pings, n_cells, s_q,
-       round(ln(CAST(n_pings AS DOUBLE))
-             - (CAST(s_q AS DOUBLE) / 1e6) / CAST(n_pings AS DOUBLE), 6)
-         + 0.0 AS entropy
-FROM agg
-"""
-
-
 def q_kanon_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X85 (cells.kanon_cells): k-anonymity spatial publishing — every
     customer point assigned the finest cell in [res 2, res 6] whose
@@ -5156,70 +4877,6 @@ def _kanon_cells_sql() -> str:
         f" {SYN.lat_sql('c_custkey')} AS lat FROM customer"
     )
     return kanon_cells_sql(cte, 5, 2, 6)
-
-
-def q_covisitation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X84 (trajectory.covisitation): place-association matrix — PMI-scored
-    cell pairs co-visited by the same user, from the stay-point visit set
-    (support >= 2, deterministic 64-cells-per-user skew cap). Counts are
-    exact int64; pmi is one log over an exact integer ratio. The oracle
-    replays stays -> distinct visits -> hash-rank cap -> pair/marginal
-    counts -> the identical log expression."""
-    from osm2geojson_spark.operators.trajectory import covisitation, stay_points
-
-    stays = stay_points(_traj_pings(spark, sf_dir), res=6, min_duration_s=3600)
-    return covisitation(stays, min_support=2, max_cells_per_user=64)
-
-
-def _covisitation_sql() -> str:
-    from osm2geojson_spark.operators import cells as CEL
-    from osm2geojson_spark.operators.sampling import sample_hash_sql
-
-    cell = CEL.cell_id_sql("lon", "lat", 6)
-    h = sample_hash_sql("cell_id")
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), cells_t AS (
-  SELECT user_id, ts, {cell} AS cell_id FROM pings
-), runs AS (
-  SELECT user_id, ts, cell_id,
-    CASE WHEN lag(cell_id) OVER w IS NULL OR lag(cell_id) OVER w != cell_id
-         THEN 1 ELSE 0 END AS nw
-  FROM cells_t WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), r2 AS (
-  SELECT user_id, ts, cell_id,
-    sum(nw) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS run
-  FROM runs
-), stays AS (
-  SELECT user_id, run, cell_id
-  FROM r2 GROUP BY 1, 2, 3
-  HAVING CAST(floor(epoch(max(ts))) AS BIGINT)
-           - CAST(floor(epoch(min(ts))) AS BIGINT) >= 3600
-), visits0 AS (
-  SELECT DISTINCT user_id, cell_id FROM stays
-), capped AS (
-  SELECT user_id, cell_id FROM (
-    SELECT user_id, cell_id,
-           row_number() OVER (PARTITION BY user_id ORDER BY {h}, cell_id)
-             AS rk
-    FROM visits0
-  ) q WHERE rk <= 64
-), nu AS (SELECT count(DISTINCT user_id) AS n FROM capped
-), cn AS (
-  SELECT cell_id, count(*) AS n FROM capped GROUP BY 1
-), pairs AS (
-  SELECT a.cell_id AS cell_a, b.cell_id AS cell_b, count(*) AS n_ab
-  FROM capped a JOIN capped b
-    ON a.user_id = b.user_id AND a.cell_id < b.cell_id
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)
-SELECT cell_a, cell_b, CAST(n_ab AS BIGINT) AS n_ab,
-       round(ln(CAST(nu.n * n_ab AS DOUBLE)
-                / CAST(na.n * nb.n AS DOUBLE)), 6) + 0.0 AS pmi
-FROM pairs, nu
-JOIN cn na ON na.cell_id = cell_a
-JOIN cn nb ON nb.cell_id = cell_b
-"""
 
 
 def q_decayed_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5261,136 +4918,6 @@ SELECT cell_id,
        CAST(count(*) AS BIGINT) AS n_events,
        CAST(min(age) AS BIGINT) AS newest_age
 FROM g GROUP BY 1
-"""
-
-
-def q_track_bearing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X83 (trajectory.track_bearing): course-over-ground + turn angle per
-    leg of every user trajectory — one ordered window, trig in the
-    identical operation order as the SQL twin (haversine precedent), and
-    CASE-guarded single-add normalizations (no fmod round-trips, which
-    are not IEEE no-ops). 6-decimal rounding on both engines."""
-    from osm2geojson_spark.operators.trajectory import track_bearing
-
-    out = track_bearing(_traj_pings(spark, sf_dir))
-    return out.select(
-        "user_id",
-        F.col("ts").cast("timestamp").cast("long").alias("t_s"),
-        "bearing_deg",
-        "turn_deg",
-    )
-
-
-def _track_bearing_sql() -> str:
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), legs AS (
-  SELECT user_id, ts, lon, lat,
-         lead(lon) OVER w AS lon1, lead(lat) OVER w AS lat1
-  FROM pings WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), b AS (
-  SELECT user_id, ts,
-         degrees(atan2(
-           sin(radians(lon1 - lon)) * cos(radians(lat1)),
-           cos(radians(lat)) * sin(radians(lat1))
-             - sin(radians(lat)) * cos(radians(lat1)) * cos(radians(lon1 - lon))
-         )) AS raw
-  FROM legs WHERE lon1 IS NOT NULL
-), nb AS (
-  SELECT user_id, ts,
-         CASE WHEN raw < 0 THEN raw + 360.0 ELSE raw END AS bearing
-  FROM b
-), t AS (
-  SELECT user_id, ts, bearing,
-         bearing - lag(bearing)
-           OVER (PARTITION BY user_id ORDER BY ts) AS d
-  FROM nb
-)
-SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t_s,
-       round(bearing, 6) + 0.0 AS bearing_deg,
-       round(CASE WHEN d > 180 THEN d - 360.0
-                  WHEN d <= -180 THEN d + 360.0
-                  ELSE d END, 6) + 0.0 AS turn_deg
-FROM t
-"""
-
-
-def q_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X74 (trajectory.trips): trip chaining — one row per inter-stay trip
-    with depart/arrive epochs, exact travel seconds, and the straight-line
-    cell-center haversine distance; the row-level od_flows (which is its
-    rollup). One lead() window over stays; the oracle replays the stay
-    construction + the identical center/haversine arithmetic."""
-    from osm2geojson_spark.operators.trajectory import stay_points, trips
-
-    stays = stay_points(_traj_pings(spark, sf_dir), res=6, min_duration_s=3600)
-    out = trips(stays)
-    return out.select(
-        "user_id",
-        "trip_seq",
-        "from_cell",
-        "to_cell",
-        F.col("depart_ts").cast("timestamp").cast("long").alias("depart_s"),
-        F.col("arrive_ts").cast("timestamp").cast("long").alias("arrive_s"),
-        "travel_s",
-        "dist_m",
-    )
-
-
-def _trips_sql() -> str:
-    from osm2geojson_spark.operators import cells as CEL
-    from osm2geojson_spark.operators.knn import haversine_sql
-
-    cell = CEL.cell_id_sql("lon", "lat", 6)
-
-    def ctr(c):
-        x = f"((({c}) % {1 << 58}) // {1 << 29})"
-        y = f"(({c}) % {1 << 29})"
-        return (
-            f"(({x} + 0.5) / 64.0) * 360.0 - 180.0",
-            f"(({y} + 0.5) / 64.0) * 180.0 - 90.0",
-        )
-
-    flon, flat = ctr("from_cell")
-    tlon, tlat = ctr("to_cell")
-    hav = haversine_sql(f"({flon})", f"({flat})", f"({tlon})", f"({tlat})")
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), cells_t AS (
-  SELECT user_id, ts, {cell} AS cell_id FROM pings
-), runs AS (
-  SELECT user_id, ts, cell_id,
-    CASE WHEN lag(cell_id) OVER w IS NULL OR lag(cell_id) OVER w != cell_id
-         THEN 1 ELSE 0 END AS nw
-  FROM cells_t WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), r2 AS (
-  SELECT user_id, ts, cell_id,
-    sum(nw) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS run
-  FROM runs
-), stays AS (
-  SELECT user_id, run, cell_id, min(ts) AS t0, max(ts) AS t1
-  FROM r2 GROUP BY 1, 2, 3
-  HAVING CAST(floor(epoch(max(ts))) AS BIGINT)
-           - CAST(floor(epoch(min(ts))) AS BIGINT) >= 3600
-), seq AS (
-  SELECT user_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY t0) AS BIGINT)
-           AS stay_seq,
-         cell_id, t0, t1
-  FROM stays
-), tr AS (
-  SELECT user_id, stay_seq AS trip_seq, cell_id AS from_cell,
-         lead(cell_id) OVER w2 AS to_cell,
-         t1 AS depart_ts, lead(t0) OVER w2 AS arrive_ts
-  FROM seq WINDOW w2 AS (PARTITION BY user_id ORDER BY stay_seq)
-)
-SELECT user_id, trip_seq, from_cell, to_cell,
-       CAST(floor(epoch(depart_ts)) AS BIGINT) AS depart_s,
-       CAST(floor(epoch(arrive_ts)) AS BIGINT) AS arrive_s,
-       CAST(floor(epoch(arrive_ts)) AS BIGINT)
-         - CAST(floor(epoch(depart_ts)) AS BIGINT) AS travel_s,
-       {hav} AS dist_m
-FROM tr WHERE to_cell IS NOT NULL
 """
 
 
@@ -5455,125 +4982,6 @@ FROM snl s JOIN lrd l ON l.pp = s.id
 """
 
 
-def q_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X72 (trajectory.dtw_distances): DTW trajectory similarity for
-    the 500 strongest co-location candidate pairs over 6-hour resampled
-    tracks — the co-movement verification stage. Sequential O(n*m) DP per
-    pair (like NMS), grouped applyInPandas, candidates pre-gated so the
-    quadratic term is per-pair only. Full value oracle since round 5:
-    _dtw_sql unrolls the identical anti-diagonal wavefront as a DuckDB
-    recursive CTE (glibc trig on both sides → bit-equal dp); also
-    pinned by brute-force pytest parity
-    (tests/test_trajectory.py::test_dtw_distances_matches_brute)."""
-    from osm2geojson_spark.operators.trajectory import (
-        colocation_pairs,
-        dtw_distances,
-        resample_tracks,
-    )
-
-    pings = _traj_pings(spark, sf_dir)
-    tracks = resample_tracks(pings, interval_s=6 * 3600)
-    # verify the 500 STRONGEST candidates (deterministic total order) —
-    # the realistic shape: DTW confirms top co-location hits, it does not
-    # re-score every weak pair (57k pairs x 116-tick DP at sf0.1 otherwise)
-    pairs = (
-        colocation_pairs(pings, interval_s=6 * 3600, res=3, resampled=tracks)
-        .orderBy(F.desc("n_ticks"), "user_a", "user_b")
-        .limit(500)
-    )
-    return dtw_distances(tracks, pairs.select("user_a", "user_b"))
-
-
-def _dtw_sql() -> str:
-    """Full VALUE oracle for q_dtw (round-5: was the one rows-only
-    registry entry): the anti-diagonal DTW wavefront as a DuckDB
-    recursive CTE. Each rec row carries cell (i, d-i)'s dp (``cur``)
-    AND cell (i, d-1-i)'s (``prv``), so diagonal d+1 needs only the
-    d rows: left = cur(i), up = cur(i-1), diag = prv(i-1) — single
-    recursive reference, pure equi-join via the {0,1} delta table.
-    Bit-exactness: sin/cos/sqrt and DuckDB's asin are all glibc calls
-    bit-identical to the kernel (which uses math.asin, not np.arcsin,
-    for exactly this reason); the DP then performs the identical
-    min/+ sequence, so dtw_m matches to the last bit."""
-    from osm2geojson_spark.operators import cells as CEL
-    from osm2geojson_spark.operators.knn import EARTH_RADIUS_M
-
-    dt = 6 * 3600 * 1_000_000
-    cell = CEL.cell_id_sql("lon", "lat", 3)
-    return f"""
-WITH RECURSIVE pings AS ({_TRAJ_PINGS_CTE}
-), p AS (
-  SELECT user_id, ts, epoch_us(ts) AS t, lon, lat FROM pings
-), seg AS (
-  SELECT user_id, t, lon, lat,
-         lead(t) OVER w AS t1, lead(lon) OVER w AS lon1, lead(lat) OVER w AS lat1
-  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), tickrows AS (
-  SELECT user_id, t, t1, lon, lat, lon1, lat1,
-         unnest(range((t + {dt - 1}) // {dt}, (t1 + {dt - 1}) // {dt})) AS tick
-  FROM seg WHERE t1 IS NOT NULL
-), trk AS MATERIALIZED (
-  SELECT user_id, tick, lon, lat,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY tick)
-              AS BIGINT) - 1 AS pos
-  FROM (
-    SELECT user_id, tick,
-           lon + CAST(tick * {dt} - t AS DOUBLE) / CAST(t1 - t AS DOUBLE) * (lon1 - lon) AS lon,
-           lat + CAST(tick * {dt} - t AS DOUBLE) / CAST(t1 - t AS DOUBLE) * (lat1 - lat) AS lat
-    FROM tickrows
-  ) q
-), sampled AS (
-  SELECT user_id, tick, {cell} AS cell_id FROM trk
-), prs AS MATERIALIZED (
-  SELECT a.user_id AS ua, b.user_id AS ub
-  FROM sampled a JOIN sampled b
-    ON a.tick = b.tick AND a.cell_id = b.cell_id AND a.user_id < b.user_id
-  GROUP BY 1, 2
-  ORDER BY COUNT(*) DESC, ua, ub LIMIT 500
-), prlen AS (
-  SELECT pr.ua, pr.ub, na.cnt AS n, nb.cnt AS m
-  FROM prs pr
-  JOIN (SELECT user_id, COUNT(*) AS cnt FROM trk GROUP BY 1) na
-    ON na.user_id = pr.ua
-  JOIN (SELECT user_id, COUNT(*) AS cnt FROM trk GROUP BY 1) nb
-    ON nb.user_id = pr.ub
-), cost AS MATERIALIZED (
-  SELECT ua, ub, i, j, i + j AS d,
-         2.0 * {EARTH_RADIUS_M} * asin(sqrt(least(1.0,
-             sdlat * sdlat + (cla1 * cla2) * (sdlon * sdlon)))) AS c
-  FROM (
-    SELECT pr.ua, pr.ub, ta.pos AS i, tb.pos AS j,
-           sin((radians(tb.lat) - radians(ta.lat)) / 2) AS sdlat,
-           sin((radians(tb.lon) - radians(ta.lon)) / 2) AS sdlon,
-           cos(radians(ta.lat)) AS cla1, cos(radians(tb.lat)) AS cla2
-    FROM prs pr
-    JOIN trk ta ON ta.user_id = pr.ua
-    JOIN trk tb ON tb.user_id = pr.ub
-  ) z
-), dd(delta) AS (SELECT * FROM (VALUES (CAST(0 AS BIGINT)), (CAST(1 AS BIGINT)))
-), rec AS (
-  SELECT ua, ub, CAST(0 AS BIGINT) AS d, CAST(0 AS BIGINT) AS i,
-         c AS cur, CAST(NULL AS DOUBLE) AS prv
-  FROM cost WHERE i = 0 AND j = 0
-  UNION ALL
-  SELECT c.ua, c.ub, c.d, c.i,
-         c.c + MIN(CASE WHEN dd.delta = 0 THEN w.cur
-                        ELSE least(w.cur, w.prv) END) AS cur,
-         MIN(CASE WHEN dd.delta = 0 THEN w.cur END) AS prv
-  FROM rec w
-  CROSS JOIN dd
-  JOIN cost c ON c.ua = w.ua AND c.ub = w.ub
-             AND c.d = w.d + 1 AND c.i = w.i + dd.delta
-  GROUP BY c.ua, c.ub, c.d, c.i, c.c
-)
-SELECT r.ua AS user_a, r.ub AS user_b, r.cur AS dtw_m,
-       pl.n AS n_a, pl.m AS n_b
-FROM rec r
-JOIN prlen pl ON pl.ua = r.ua AND pl.ub = r.ub
-WHERE r.i = pl.n - 1 AND r.d = pl.n + pl.m - 2
-"""
-
-
 def q_spatial_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X71 (knn.knn_outliers): k-distance spatial outlier gate — each of
     200 customer points flagged when even its 3rd-nearest neighbor is
@@ -5613,97 +5021,6 @@ WITH p AS (
 )
 SELECT id, dist AS k_dist, dist > 2000000.0 AS is_outlier
 FROM r WHERE rn = 3
-"""
-
-
-def q_geofence_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X70 (streaming.ops.streaming_geofence_events, batch form): the
-    geofence ALERT STREAM — enter at the first inside ping, exit stamped
-    with the last inside ping once an outside ping arrives; a visit still
-    open at end of history has no exit (exactly a paused live stream).
-    The streaming form is pytest-pinned stream == batch across micro-batch
-    boundaries; this batch twin gets the full SQL oracle (visit edges +
-    an exists-later-ping gate for exits)."""
-    from osm2geojson_spark.streaming.ops import streaming_geofence_events
-
-    fences = [
-        (int(r["fence_id"]), r["x0"], r["y0"], r["x1"], r["y1"])
-        for r in _geofences(spark, sf_dir).collect()
-    ]
-    out = streaming_geofence_events(_traj_pings(spark, sf_dir), fences)
-    return out.select(
-        "user_id",
-        "fence_id",
-        "event",
-        F.col("ts").cast("timestamp").cast("long").alias("ts_s"),
-    )
-
-
-def _geofence_events_sql() -> str:
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), fences AS ({_GEOFENCES_CTE}
-), sq AS (
-  SELECT user_id, ts, lon, lat,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts) AS seq,
-         max(ts) OVER (PARTITION BY user_id) AS last_ts
-  FROM pings
-), inside AS (
-  SELECT s.user_id, f.fence_id, s.seq, s.ts, s.last_ts
-  FROM sq s JOIN fences f
-    ON s.lon >= f.x0 AND s.lon <= f.x1 AND s.lat >= f.y0 AND s.lat <= f.y1
-), runs AS (
-  SELECT user_id, fence_id, seq, ts, last_ts,
-         seq - row_number() OVER (PARTITION BY user_id, fence_id ORDER BY seq) AS grp
-  FROM inside
-), visits AS (
-  SELECT user_id, fence_id, min(ts) AS enter_ts, max(ts) AS exit_ts,
-         max(last_ts) AS last_ts
-  FROM runs GROUP BY user_id, fence_id, grp
-)
-SELECT user_id, fence_id, 'enter' AS event,
-       CAST(floor(epoch(enter_ts)) AS BIGINT) AS ts_s
-FROM visits
-UNION ALL
-SELECT user_id, fence_id, 'exit' AS event,
-       CAST(floor(epoch(exit_ts)) AS BIGINT) AS ts_s
-FROM visits WHERE exit_ts < last_ts
-"""
-
-
-def q_cell_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X69 (trajectory.cell_transitions): ping-level Markov transition
-    matrix at res 5 with same-cell runs collapsed — the
-    next-location-model training target (od_flows is the stay-gated
-    sibling). Shared per-entity sort, lag/lead projections, one
-    combinable (from, to) rollup; the oracle replays the identical
-    collapse + lead algebra."""
-    from osm2geojson_spark.operators.trajectory import cell_transitions
-
-    return cell_transitions(_traj_pings(spark, sf_dir), res=5)
-
-
-def _cell_transitions_sql() -> str:
-    from osm2geojson_spark.operators import cells as CEL
-
-    cell = CEL.cell_id_sql("lon", "lat", 5)
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), seq AS (
-  SELECT user_id, ts, lon, lat, {cell} AS cell_id FROM pings
-), marked AS (
-  SELECT user_id, ts, lon, lat, cell_id,
-         lag(cell_id) OVER w AS prev
-  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY ts, lon, lat)
-), collapsed AS (
-  SELECT user_id, ts, lon, lat, cell_id FROM marked
-  WHERE prev IS NULL OR prev != cell_id
-), trans AS (
-  SELECT cell_id AS from_cell, lead(cell_id) OVER w2 AS to_cell
-  FROM collapsed WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, lon, lat)
-)
-SELECT from_cell, to_cell, CAST(count(*) AS BIGINT) AS n
-FROM trans WHERE to_cell IS NOT NULL GROUP BY 1, 2
 """
 
 
@@ -5841,53 +5158,6 @@ SELECT f.fid, z.fence_id,
 FROM foot f JOIN fences z
   ON greatest(f.x0, z.x0) <= least(f.x1, z.x1)
  AND greatest(f.y0, z.y0) <= least(f.y1, z.y1)
-"""
-
-
-def q_track_speed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X64 (trajectory.track_speed): per-ping implied speed + GPS-glitch
-    flag (inbound speed > 30 m/s) over the drifting user tracks — the
-    standard teleport pre-filter. One per-entity sort (shared with the
-    whole trajectory family), everything else projection; deterministic
-    (ts, lon, lat) ordering so duplicate timestamps cannot flap. The
-    oracle replays the identical lag/haversine/divide sequence."""
-    from osm2geojson_spark.operators.trajectory import track_speed
-
-    out = track_speed(_traj_pings(spark, sf_dir), vmax_ms=30.0)
-    return out.select(
-        "user_id",
-        F.col("ts").cast("timestamp").cast("long").alias("ts_s"),
-        "lon",
-        "lat",
-        "dt_us",
-        "dist_m",
-        "speed_ms",
-        "is_glitch",
-    )
-
-
-def _track_speed_sql() -> str:
-    from osm2geojson_spark.operators.knn import haversine_sql
-
-    hav = haversine_sql("lon0", "lat0", "lon", "lat")
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), p AS (
-  SELECT user_id, ts, epoch_us(ts) AS t, lon, lat FROM pings
-), s AS (
-  SELECT user_id, ts, t, lon, lat,
-         lag(t) OVER w AS t0, lag(lon) OVER w AS lon0, lag(lat) OVER w AS lat0
-  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY t, lon, lat)
-)
-SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, lon, lat,
-       CAST(t - t0 AS BIGINT) AS dt_us,
-       CASE WHEN t0 IS NOT NULL THEN {hav} END AS dist_m,
-       CASE WHEN t0 IS NOT NULL AND t - t0 > 0
-            THEN {hav} / (CAST(t - t0 AS DOUBLE) / 1000000.0) END AS speed_ms,
-       COALESCE(CASE WHEN t0 IS NOT NULL AND t - t0 > 0
-            THEN {hav} / (CAST(t - t0 AS DOUBLE) / 1000000.0) END > 30.0,
-            false) AS is_glitch
-FROM s
 """
 
 
@@ -6554,63 +5824,6 @@ _GEOFENCES_CTE = """
          CAST(((n_nationkey * 31) % 150) - 80
               + 10 + (n_nationkey % 4) * 10 AS DOUBLE) AS y1
   FROM nation
-"""
-
-
-def q_geofence_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X57 (trajectory.geofence_visits): geofence enter/exit detection —
-    each user's drifting track against 25 fence boxes; one row per visit
-    (maximal run of consecutive pings inside a fence) with enter/exit
-    epochs, ping count, and duration. Candidates via a broadcast (cell ->
-    fence) covering table at res 4 with the exact bbox gate after — never
-    a pings x fences nested loop; runs via gaps-and-islands over inside
-    rows only. The oracle brute-forces containment and replays the
-    identical seq/row_number algebra."""
-    from osm2geojson_spark.operators.trajectory import geofence_visits
-
-    out = geofence_visits(
-        _traj_pings(spark, sf_dir), _geofences(spark, sf_dir), res=4
-    )
-    return out.select(
-        "user_id",
-        "fence_id",
-        "visit_seq",
-        F.col("enter_ts").cast("timestamp").cast("long").alias("enter_s"),
-        F.col("exit_ts").cast("timestamp").cast("long").alias("exit_s"),
-        "n_pings",
-        "dur_s",
-    )
-
-
-def _geofence_visits_sql() -> str:
-    return f"""
-WITH pings AS ({_TRAJ_PINGS_CTE}
-), fences AS ({_GEOFENCES_CTE}
-), sq AS (
-  SELECT user_id, ts, lon, lat,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts) AS seq
-  FROM pings
-), inside AS (
-  SELECT s.user_id, f.fence_id, s.seq, s.ts
-  FROM sq s JOIN fences f
-    ON s.lon >= f.x0 AND s.lon <= f.x1 AND s.lat >= f.y0 AND s.lat <= f.y1
-), runs AS (
-  SELECT user_id, fence_id, seq, ts,
-         seq - row_number() OVER (PARTITION BY user_id, fence_id ORDER BY seq) AS grp
-  FROM inside
-), visits AS (
-  SELECT user_id, fence_id, min(ts) AS enter_ts, max(ts) AS exit_ts,
-         CAST(count(*) AS BIGINT) AS n_pings
-  FROM runs GROUP BY user_id, fence_id, grp
-)
-SELECT user_id, fence_id,
-       CAST(row_number() OVER (PARTITION BY user_id, fence_id ORDER BY enter_ts) AS BIGINT) AS visit_seq,
-       CAST(floor(epoch(enter_ts)) AS BIGINT) AS enter_s,
-       CAST(floor(epoch(exit_ts)) AS BIGINT) AS exit_s,
-       n_pings,
-       CAST(floor(epoch(exit_ts)) AS BIGINT)
-         - CAST(floor(epoch(enter_ts)) AS BIGINT) AS dur_s
-FROM visits
 """
 
 
@@ -7372,7 +6585,7 @@ FROM ranked WHERE rn = 1
 def q_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IMAGE ENTROPY (multimodal.image_entropy): per-tile Shannon
     entropy of the intensity histogram, micro-quantized terms before the
-    order-free sum (location_entropy's scheme). The oracle rebuilds the
+    order-free sum. The oracle rebuilds the
     histogram from the pixel formula and replays the identical float
     assembly."""
     from osm2geojson_spark.operators.multimodal import image_entropy
@@ -7768,78 +6981,6 @@ FROM seq GROUP BY doc_id, chunk_seq
 """
 
 
-def q_gravity_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GRAVITY-MODEL CALIBRATION (spatial_stats.gravity_fit): distance-
-    decay exponent of the stay-derived OD matrix at res 6, fit by log-OLS
-    with per-pair terms quantized to 1e-5 before the order-free integer
-    sufficient-statistic sums; beta / ln_k are a short identically-
-    ordered double assembly the oracle replays exactly."""
-    from osm2geojson_spark.operators.spatial_stats import gravity_fit
-    from osm2geojson_spark.operators.trajectory import od_flows, stay_points
-
-    stays = stay_points(_traj_pings(spark, sf_dir), res=6, min_duration_s=3600)
-    return gravity_fit(od_flows(stays), res=6)
-
-
-def _gravity_fit_sql() -> str:
-    from osm2geojson_spark.operators.knn import haversine_sql
-    from osm2geojson_spark.operators.spatial_stats import GRAVITY_SCALE
-
-    n = float(1 << 6)
-    half_lon, half_lat = 180.0 / n, 90.0 / n
-    xo = f"((f.from_cell % {1 << 58}) // {1 << 29})"
-    yo = f"(f.from_cell % {1 << 29})"
-    xd = f"((f.to_cell % {1 << 58}) // {1 << 29})"
-    yd = f"(f.to_cell % {1 << 29})"
-    lon_o = f"({xo} / {n!r} * 360.0 - 180.0 + {half_lon!r})"
-    lat_o = f"({yo} / {n!r} * 180.0 - 90.0 + {half_lat!r})"
-    lon_d = f"({xd} / {n!r} * 360.0 - 180.0 + {half_lon!r})"
-    lat_d = f"({yd} / {n!r} * 180.0 - 90.0 + {half_lat!r})"
-    hav = haversine_sql(lon_o, lat_o, lon_d, lat_d)
-    S = float(GRAVITY_SCALE)
-    return _stays_sql(f"""
-, trips AS (
-  SELECT user_id, cell_id AS from_cell, lead(cell_id) OVER wt AS to_cell
-  FROM seq WINDOW wt AS (PARTITION BY user_id ORDER BY stay_seq)
-), flows AS (
-  SELECT from_cell, to_cell, CAST(count(*) AS BIGINT) AS n_trips
-  FROM trips WHERE to_cell IS NOT NULL GROUP BY 1, 2
-), mo AS (
-  SELECT from_cell, CAST(sum(n_trips) AS BIGINT) AS m_o FROM flows GROUP BY 1
-), md AS (
-  SELECT to_cell, CAST(sum(n_trips) AS BIGINT) AS m_d FROM flows GROUP BY 1
-), pairs AS (
-  SELECT CAST(round(ln({hav}) * {S!r}) AS BIGINT) AS qx,
-         CAST(round((ln(CAST(f.n_trips AS DOUBLE)) - ln(CAST(mo.m_o AS DOUBLE))
-                     - ln(CAST(md.m_d AS DOUBLE))) * {S!r}) AS BIGINT) AS qy
-  FROM flows f
-  JOIN mo ON mo.from_cell = f.from_cell
-  JOIN md ON md.to_cell = f.to_cell
-  WHERE f.from_cell != f.to_cell
-), s AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(sum(qx) AS BIGINT) AS sx_q, CAST(sum(qy) AS BIGINT) AS sy_q,
-         CAST(sum(qx * qx) AS BIGINT) AS sxx_q,
-         CAST(sum(qx * qy) AS BIGINT) AS sxy_q
-  FROM pairs
-)
-SELECT n_pairs, sx_q, sy_q, sxx_q, sxy_q,
-       round(-((CAST(n_pairs AS DOUBLE) * CAST(sxy_q AS DOUBLE)
-                - CAST(sx_q AS DOUBLE) * CAST(sy_q AS DOUBLE))
-               / (CAST(n_pairs AS DOUBLE) * CAST(sxx_q AS DOUBLE)
-                  - CAST(sx_q AS DOUBLE) * CAST(sx_q AS DOUBLE))), 6) + 0.0
-         AS beta,
-       round((CAST(sy_q AS DOUBLE)
-              - ((CAST(n_pairs AS DOUBLE) * CAST(sxy_q AS DOUBLE)
-                  - CAST(sx_q AS DOUBLE) * CAST(sy_q AS DOUBLE))
-                 / (CAST(n_pairs AS DOUBLE) * CAST(sxx_q AS DOUBLE)
-                    - CAST(sx_q AS DOUBLE) * CAST(sx_q AS DOUBLE)))
-                * CAST(sx_q AS DOUBLE))
-             / CAST(n_pairs AS DOUBLE) / {S!r}, 6) + 0.0 AS ln_k
-FROM s
-""")
-
-
 def q_quadtree_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUADTREE COMPRESSION PLAN (multimodal.quadtree_plan): variance-
     pruned adaptive tiling of the 8x8 synthetic tiles at tau=300 — per
@@ -7896,79 +7037,6 @@ SELECT printf('img%012d', l0.i) AS image_id,
        CAST(l2.n_px AS BIGINT) AS leaves_l3,
        CAST(l0.n + l1.n + l2.n + l2.n_px AS BIGINT) AS n_leaves
 FROM l0 JOIN l1 ON l1.i = l0.i JOIN l2 ON l2.i = l0.i
-"""
-
-
-def q_track_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRAJECTORY ANOMALY NLL (trajectory.track_nll): per-user negative
-    log-likelihood under the corpus-trained Markov cell model at res 5 —
-    train + broadcast + score in one job. Per-step terms are quantized
-    to micro-nats from exact integer counts before the order-free sum
-    (location_entropy's scheme); the oracle replays the identical
-    collapse, counts, and float assembly."""
-    from osm2geojson_spark.operators.trajectory import track_nll
-
-    # NOT _traj_pings: that fixture gives every user a deterministic
-    # private path (p = 1 on every edge, NLL identically 0). Here users
-    # share 8 latitude bands and drift at user-dependent rates
-    # (3..15 deg/day vs an 11.25 deg res-5 cell), so a band's pooled
-    # model mixes to-cells and probabilities are non-trivial.
-    step = F.lit(3) + (F.col("user_id") % 5) * F.lit(3)
-    pings = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        (((F.col("user_id") * 37 + F.dayofyear("ts") * step) % 360) - 180 + 0.5)
-        .cast("double")
-        .alias("lon"),
-        (((F.col("user_id") % 8) * 11) - 44 + 0.5).cast("double").alias("lat"),
-    )
-    return track_nll(pings, res=5)
-
-
-def _track_nll_sql() -> str:
-    from osm2geojson_spark.operators import cells as CEL
-
-    cell = CEL.cell_id_sql("lon", "lat", 5)
-    return f"""
-WITH pings AS (
-  SELECT user_id, ts,
-         CAST(((user_id * 37 + dayofyear(ts) * (3 + (user_id % 5) * 3)) % 360)
-              - 180 + 0.5 AS DOUBLE) AS lon,
-         CAST(((user_id % 8) * 11) - 44 + 0.5 AS DOUBLE) AS lat
-  FROM events
-), seq AS (
-  SELECT user_id, ts, lon, lat, {cell} AS cell_id FROM pings
-), marked AS (
-  SELECT user_id, ts, lon, lat, cell_id, lag(cell_id) OVER w AS prev
-  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY ts, lon, lat)
-), collapsed AS (
-  SELECT user_id, ts, lon, lat, cell_id FROM marked
-  WHERE prev IS NULL OR prev != cell_id
-), edges AS (
-  SELECT user_id, cell_id AS from_cell, lead(cell_id) OVER w2 AS to_cell
-  FROM collapsed WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, lon, lat)
-), e AS (
-  SELECT * FROM edges WHERE to_cell IS NOT NULL
-), mat AS (
-  SELECT from_cell, to_cell, CAST(count(*) AS BIGINT) AS n_ft
-  FROM e GROUP BY 1, 2
-), tot AS (
-  SELECT from_cell, CAST(sum(n_ft) AS BIGINT) AS n_f FROM mat GROUP BY 1
-), model AS (
-  SELECT m.from_cell, m.to_cell,
-         CAST(round((ln(CAST(n_ft AS DOUBLE)) - ln(CAST(n_f AS DOUBLE))) * 1e6)
-              AS BIGINT) AS t
-  FROM mat m JOIN tot USING (from_cell)
-), agg AS (
-  SELECT e.user_id, CAST(count(*) AS BIGINT) AS n_steps,
-         CAST(-sum(model.t) AS BIGINT) AS nll_micro
-  FROM e JOIN model ON model.from_cell = e.from_cell AND model.to_cell = e.to_cell
-  GROUP BY e.user_id
-)
-SELECT user_id, n_steps, nll_micro,
-       round(CAST(nll_micro AS DOUBLE) / CAST(n_steps AS DOUBLE) / 1e6, 6) + 0.0
-         AS avg_nll
-FROM agg
 """
 
 
@@ -8167,42 +7235,6 @@ def _anchor_assign_sql() -> str:
         " (p_partkey * 13) % 40 + 10 + p_partkey % 9 AS x1,"
         " (p_partkey * 29) % 40 + 10 + p_partkey % 7 AS y1"
         " FROM part WHERE p_partkey < 30"
-    )
-
-
-def q_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X218 (trajectory.viterbi_smooth): Viterbi stay/move smoothing of
-    50 12-step observation tracks — each has a stay regime (low bins),
-    a move regime (high bins), and one planted glitch per regime that
-    the DP must absorb (25 < 2 switches = 60). Exact integer costs,
-    min-(cost, mask) tie rule; the twin enumerates all 2^12 trellis
-    paths per user (oracle-only) and replays the min."""
-    from osm2geojson_spark.operators.trajectory import viterbi_smooth
-
-    k = F.col("p_partkey")
-    u = F.floor(k / 12).cast("long")
-    i = (k % 12).cast("long")
-    base = F.when(i < 6, F.lit(0)).otherwise(F.lit(2))
-    obs = (
-        F.when(i == u % 6, F.lit(2))
-        .when(i == 6 + u % 6, F.lit(0))
-        .otherwise(base)
-    )
-    rows = _t(spark, sf_dir, "part").filter(k < 600).select(
-        u.alias("user_id"), i.alias("idx"), obs.alias("obs")
-    )
-    return viterbi_smooth(rows)
-
-
-def _viterbi_sql() -> str:
-    from osm2geojson_spark.operators.trajectory import viterbi_smooth_sql
-
-    return viterbi_smooth_sql(
-        "SELECT p_partkey // 12 AS user_id, p_partkey % 12 AS idx,"
-        " CASE WHEN p_partkey % 12 = (p_partkey // 12) % 6 THEN 2"
-        "      WHEN p_partkey % 12 = 6 + (p_partkey // 12) % 6 THEN 0"
-        "      WHEN p_partkey % 12 < 6 THEN 0 ELSE 2 END AS obs"
-        " FROM part WHERE p_partkey < 600"
     )
 
 
@@ -9314,72 +8346,6 @@ WHERE f.down_x IS NULL
 """
 
 
-def q_frechet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X160 (trajectory.frechet_sq): discrete Frechet distance (squared
-    planar integer) for 5 candidate pairs over 6 deterministic part-keyed
-    tracks. Unlike dtw (rows-only), this DP has a FULL oracle: the
-    reachability characterization — min threshold t among the pair's
-    d^2 values such that the end cell is reachable through cells with
-    d^2 <= t — replayed as a recursive CTE."""
-    from osm2geojson_spark.operators.trajectory import frechet_sq
-
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 60)
-    k = F.col("p_partkey")
-    u = k % 6
-    tick = F.floor(k / 6).cast("long")
-    tracks = part.select(
-        u.alias("user_id"),
-        tick.alias("tick"),
-        (tick * 3 + (u * 7 + tick * tick) % 5).cast("long").alias("x"),
-        (tick * 2 + (k * k) % 11).cast("long").alias("y"),
-    ).filter(F.col("tick") < 8 + F.col("user_id") % 3)
-    pairs = spark.createDataFrame(
-        [(0, 1), (2, 3), (4, 5), (1, 2), (0, 5)], "user_a long, user_b long"
-    )
-    return frechet_sq(tracks, pairs)
-
-
-_FRECHET_SQL = """
-WITH RECURSIVE pts AS (
-  SELECT p_partkey % 6 AS u, p_partkey // 6 AS tick,
-         (p_partkey // 6) * 3 + ((p_partkey % 6) * 7
-            + (p_partkey // 6) * (p_partkey // 6)) % 5 AS x,
-         (p_partkey // 6) * 2 + (p_partkey * p_partkey) % 11 AS y
-  FROM part
-  WHERE p_partkey < 60 AND p_partkey // 6 < 8 + (p_partkey % 6) % 3
-), rk AS (
-  SELECT u, x, y, row_number() OVER (PARTITION BY u ORDER BY tick) - 1 AS i
-  FROM pts
-), prs AS (
-  SELECT * FROM (VALUES (0, 1), (2, 3), (4, 5), (1, 2), (0, 5)) p(ua, ub)
-), d AS (
-  SELECT ua, ub, a.i AS i, b.i AS j,
-         (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS c
-  FROM prs JOIN rk a ON a.u = prs.ua JOIN rk b ON b.u = prs.ub
-), dims AS (
-  SELECT ua, ub, max(i) AS ni, max(j) AS nj FROM d GROUP BY ua, ub
-), thr AS (SELECT DISTINCT ua, ub, c AS t FROM d),
-reach AS (
-  SELECT d.ua, d.ub, thr.t, d.i, d.j
-  FROM d JOIN thr ON thr.ua = d.ua AND thr.ub = d.ub
-  WHERE d.i = 0 AND d.j = 0 AND d.c <= thr.t
-  UNION
-  SELECT r.ua, r.ub, r.t, d.i, d.j
-  FROM reach r JOIN d ON d.ua = r.ua AND d.ub = r.ub
-   AND ((d.i = r.i + 1 AND d.j = r.j) OR (d.i = r.i AND d.j = r.j + 1)
-        OR (d.i = r.i + 1 AND d.j = r.j + 1))
-  WHERE d.c <= r.t
-)
-SELECT r.ua AS user_a, r.ub AS user_b,
-       CAST(dims.ni + 1 AS BIGINT) AS n_a, CAST(dims.nj + 1 AS BIGINT) AS n_b,
-       CAST(min(r.t) AS BIGINT) AS frechet_sq
-FROM reach r
-JOIN dims ON dims.ua = r.ua AND dims.ub = r.ub
-WHERE r.i = dims.ni AND r.j = dims.nj
-GROUP BY r.ua, r.ub, dims.ni, dims.nj
-"""
-
-
 def q_flow_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X158 (geostat.flow_direction): D8 steepest-descent routing +
     drainage in-degree over the shared 32x32 DEM — slope comparison via
@@ -9782,33 +8748,6 @@ def _winnow_sql() -> str:
 
     return winnow_fingerprints_sql(
         "SELECT doc_id, text FROM documents", id_col="doc_id", text_col="text"
-    )
-
-
-def q_home_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X236 (trajectory.home_work_anchors): home/work anchor cells per
-    user over the drifting ping fixture on the integer degree grid —
-    night-window argmax vs work-window argmax as MAX(struct) rollups
-    (no windows, two combinable shuffles total), integer share gate."""
-    from osm2geojson_spark.operators.trajectory import home_work_anchors
-
-    pings = _traj_pings(spark, sf_dir).select(
-        "user_id",
-        "ts",
-        (
-            (F.floor(F.col("lon")) + 180) * 1000 + F.floor(F.col("lat")) + 90
-        ).cast("long").alias("cell_id"),
-    )
-    return home_work_anchors(pings)
-
-
-def _home_anchors_sql() -> str:
-    from osm2geojson_spark.operators.trajectory import home_work_anchors_sql
-
-    return home_work_anchors_sql(
-        f"""SELECT user_id, ts,
-        CAST((floor(lon) + 180) * 1000 + floor(lat) + 90 AS BIGINT) AS cell_id
-        FROM ({_TRAJ_PINGS_CTE})"""
     )
 
 
@@ -10240,22 +9179,6 @@ def _f2_sketch_sql() -> str:
     from osm2geojson_spark.operators.sketch import ams_f2_sql
 
     return ams_f2_sql("SELECT o_custkey FROM orders", "o_custkey")
-
-
-def q_bearing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X270 (trajectory.bearing_resultant): circular mean-resultant
-    statistics of per-user step headings over the drift trajectory —
-    quantized unit vectors (pinned per-row IEEE sqrt/divide/round),
-    exact int64 (sx, sy) mean-direction pair, ⌊R/n⌋ concentration."""
-    from osm2geojson_spark.operators.trajectory import bearing_resultant
-
-    return bearing_resultant(_traj_pings(spark, sf_dir))
-
-
-def _bearing_stats_sql() -> str:
-    from osm2geojson_spark.operators.trajectory import bearing_resultant_sql
-
-    return bearing_resultant_sql(_TRAJ_PINGS_CTE)
 
 
 def q_cell_buffer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10980,13 +9903,13 @@ def _fuzzy2_join_sql() -> str:
 # Round-5 rotation (VERDICT r4 ask #1): the registry is FROZEN — no new queries
 # this round — and the driver's 50-slot correctness window is pointed at the 50
 # OLDEST names never recorded in CORRECTNESS_r01–r04 (ANN/PQ, asof/interval
-# joins, trajectory, multimodal).  The base dict
+# joins, multimodal).  The base dict
 # below keeps its historical newest-first order; this list is promoted to the
 # front at call time so CORRECTNESS_r05 clears verification backlog.  Since the
-# graph, text-analysis and retrieval deletions it names 45 queries; the
-# window's last 5 slots take the first 5 base names.
+# graph, text-analysis, retrieval and trajectory deletions it names 38 queries;
+# the window's last 12 slots take the first 12 base names.
 _PROMOTE_R5 = [
-    "interval_join", "asof_join", "mobility", "od_flows", "stay_points",
+    "interval_join", "asof_join",
     "spatial_window", "domain_cap", "pack_sequences", "doc_chunking",
     "stratified_sample", "ann_cosine_ivfpq_res", "ann_cosine_ivfpq",
     "scrub_apply", "ann_pq_scan", "ann_cosine_pq", "embedding_coreset",
@@ -10994,9 +9917,8 @@ _PROMOTE_R5 = [
     "caption_alignment", "crossmodal_dedup", "image_pipeline", "image_similarity",
     "image_sharpness", "knn_graph", "halo_gradient", "dbscan",
     "vectorize_stitched", "dedup_semantic", "rasterize", "box_iou",
-    "map_match", "semivariogram", "idw", "resample_tracks", "colocation",
-    "geofence_visits", "kde", "st_join",
-    "patch_extract", "adaptive_bins", "track_speed", "bbox_join",
+    "map_match", "semivariogram", "idw", "kde", "st_join",
+    "patch_extract", "adaptive_bins", "bbox_join",
     "hist_equalize",
 ]
 
@@ -11035,7 +9957,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate": q_boilerplate,
         "keyframes": q_keyframes,
         "cell_buffer": q_cell_buffer,
-        "bearing_stats": q_bearing_stats,
         "f2_sketch": q_f2_sketch,
         "canonical_pick": q_canonical_pick,
         "l_diversity": q_l_diversity,
@@ -11047,13 +9968,11 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "flow_accum": q_flow_accum,
         "ring_validity": q_ring_validity,
         "gray_world": q_gray_world,
-        "home_anchors": q_home_anchors,
         "dog_keypoints": q_dog_keypoints,
         "alpha_shape": q_alpha_shape,
         "winnow": q_winnow,
         "color_quantize": q_color_quantize,
         "anchor_assign": q_anchor_assign,
-        "viterbi": q_viterbi,
         "demosaic": q_demosaic,
         "stream_topk": q_stream_topk,
         "iou_track": q_iou_track,
@@ -11080,7 +9999,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_distinct": q_hll_distinct,
         "mutual_info": q_mutual_information,
         "watershed": q_watershed,
-        "frechet": q_frechet,
         "flow_dir": q_flow_dir,
         "harris": q_harris,
         "segment_intersect": q_segment_intersect,
@@ -11102,9 +10020,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mosaic_crop": q_mosaic_crop,
         "cdc_chunks_arrow": q_cdc_chunks_arrow,
         "cdc_chunks": q_cdc_chunks,
-        "gravity_fit": q_gravity_fit,
         "quadtree_plan": q_quadtree_plan,
-        "track_nll": q_track_nll,
         "dirty_pyramid": q_dirty_pyramid,
         "compaction_plan": q_compaction_plan,
         "isolines": q_isolines,
@@ -11132,33 +10048,21 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_moments": q_image_moments,
         "ripleys_k": q_ripleys_k,
         "clark_evans": q_clark_evans,
-        "location_entropy": q_location_entropy,
         "kanon_cells": q_kanon_cells,
-        "covisitation": q_covisitation,
         "decayed_heatmap": q_decayed_heatmap,
-        "track_bearing": q_track_bearing,
         "voronoi": q_voronoi,
         "quadkey_layout": q_quadkey_layout,
         "sobel_edges": q_sobel_edges,
         "emerging_hotspots": q_emerging_hotspots,
-        "convoys": q_convoys,
-        "trips": q_trips,
         "lof": q_lof,
-        "dtw": q_dtw,
         "spatial_outliers": q_spatial_outliers,
-        "geofence_events": q_geofence_events,
-        "cell_transitions": q_cell_transitions,
         "reverse_geocode": q_reverse_geocode,
         "hist_equalize": q_hist_equalize,
         "bbox_join": q_bbox_join,
-        "track_speed": q_track_speed,
         "adaptive_bins": q_adaptive_bins,
         "patch_extract": q_patch_extract,
         "st_join": q_st_join,
         "kde": q_kde,
-        "geofence_visits": q_geofence_visits,
-        "colocation": q_colocation,
-        "resample_tracks": q_resample_tracks,
         "idw": q_idw,
         "semivariogram": q_semivariogram,
         "map_match": q_map_match,
@@ -11191,9 +10095,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": q_pack_sequences,
         "domain_cap": q_domain_cap,
         "spatial_window": q_spatial_window,
-        "stay_points": q_stay_points,
-        "od_flows": q_od_flows,
-        "mobility": q_mobility,
         "asof_join": q_asof_join,
         "interval_join": q_interval_join,
         # --- recorded in r1/r2 but absent from r3
@@ -11290,7 +10191,6 @@ def oracle_sql() -> dict[str, str]:
         "boilerplate": _boilerplate_sql(),
         "keyframes": _keyframes_sql(),
         "cell_buffer": _cell_buffer_sql(),
-        "bearing_stats": _bearing_stats_sql(),
         "f2_sketch": _f2_sketch_sql(),
         "canonical_pick": _canonical_pick_sql(),
         "l_diversity": _l_diversity_sql(),
@@ -11302,13 +10202,11 @@ def oracle_sql() -> dict[str, str]:
         "flow_accum": _flow_accum_sql(),
         "ring_validity": _ring_validity_sql(),
         "gray_world": _gray_world_sql(),
-        "home_anchors": _home_anchors_sql(),
         "dog_keypoints": _dog_keypoints_sql(),
         "alpha_shape": _alpha_shape_sql(),
         "winnow": _winnow_sql(),
         "color_quantize": _color_quantize_sql(),
         "anchor_assign": _anchor_assign_sql(),
-        "viterbi": _viterbi_sql(),
         "demosaic": _demosaic_sql(),
         "stream_topk": _stream_topk_sql(),
         "iou_track": _iou_track_sql(),
@@ -11335,7 +10233,6 @@ def oracle_sql() -> dict[str, str]:
         "hll_distinct": _hll_distinct_sql(),
         "mutual_info": _MUTUAL_INFO_SQL,
         "watershed": _WATERSHED_SQL,
-        "frechet": _FRECHET_SQL,
         "flow_dir": _FLOW_DIR_SQL,
         "harris": _HARRIS_SQL,
         "segment_intersect": _SEGMENT_INTERSECT_SQL,
@@ -11357,9 +10254,7 @@ def oracle_sql() -> dict[str, str]:
         "mosaic_crop": _mosaic_crop_sql(),
         "cdc_chunks_arrow": _cdc_chunks_sql(),
         "cdc_chunks": _cdc_chunks_sql(),
-        "gravity_fit": _gravity_fit_sql(),
         "quadtree_plan": _quadtree_plan_sql(),
-        "track_nll": _track_nll_sql(),
         "dirty_pyramid": _dirty_pyramid_sql(),
         "compaction_plan": _compaction_plan_sql(),
         "isolines": _isolines_sql(),
@@ -11387,29 +10282,20 @@ def oracle_sql() -> dict[str, str]:
         "image_moments": _image_moments_sql(),
         "ripleys_k": _ripleys_k_sql(),
         "clark_evans": _clark_evans_sql(),
-        "trips": _trips_sql(),
         "lof": _lof_sql(),
         "spatial_outliers": _spatial_outliers_sql(),
-        "geofence_events": _geofence_events_sql(),
-        "cell_transitions": _cell_transitions_sql(),
         "reverse_geocode": _reverse_geocode_sql(),
         "hist_equalize": _HIST_EQUALIZE_SQL,
         "bbox_join": _bbox_join_sql(),
-        "track_speed": _track_speed_sql(),
         "adaptive_bins": _adaptive_bins_sql(),
         "patch_extract": _PATCH_EXTRACT_SQL,
         "st_join": _st_join_sql(),
         "kde": _kde_sql(),
-        "geofence_visits": _geofence_visits_sql(),
         "idw": _idw_sql(),
         "semivariogram": _semivariogram_sql(),
         "map_match": _map_match_sql(),
         "box_iou": _box_iou_sql(),
         "rasterize": _rasterize_sql(),
-        "resample_tracks": _resample_tracks_sql(),
-        "dtw": _dtw_sql(),
-        "colocation": _colocation_sql(),
-        "convoys": _convoys_sql(),
         "dedup_semantic": _dedup_semantic_sql(),
         "vectorize_stitched": _VECTORIZE_STITCHED_SQL,
         "dbscan": _dbscan_sql(),
@@ -11443,10 +10329,7 @@ def oracle_sql() -> dict[str, str]:
         "sobel_edges": _sobel_edges_sql(),
         "voronoi": _voronoi_sql(),
         "decayed_heatmap": _decayed_heatmap_sql(),
-        "covisitation": _covisitation_sql(),
         "kanon_cells": _kanon_cells_sql(),
-        "location_entropy": _location_entropy_sql(),
-        "track_bearing": _track_bearing_sql(),
         "quadkey_layout": _quadkey_layout_sql(),
         "focal_stats": _focal_stats_sql(),
         "lisa": _lisa_sql(),
@@ -11502,9 +10385,6 @@ def oracle_sql() -> dict[str, str]:
         "domain_cap": _domain_cap_sql(),
         "events_window": _EVENTS_SQL,
         "spatial_window": _spatial_window_sql(),
-        "stay_points": _stays_sql("SELECT user_id, stay_seq, cell_id, n_pings, dur_s FROM seq"),
-        "od_flows": _od_flows_sql(),
-        "mobility": _mobility_sql(),
         "sessionize": _SESSIONIZE_SQL,
         "user_stats": _USER_STATS_SQL,
         "asof_join": _ASOF_JOIN_SQL,

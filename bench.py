@@ -64,9 +64,7 @@ BENCH_QUERIES = [
     "isolines",
     "compaction_plan",
     "dirty_pyramid",
-    "track_nll",
     "quadtree_plan",
-    "gravity_fit",
     "cdc_chunks",
     "cdc_chunks_arrow",
     "mosaic_crop",
@@ -91,7 +89,6 @@ BENCH_QUERIES = [
     "segment_intersect",
     "harris",
     "flow_dir",
-    "frechet",
     "watershed",
     "mutual_info",
     "hll_distinct",
@@ -128,9 +125,6 @@ BENCH_QUERIES = [
     "doc_chunking",
     "events_window",
     "spatial_window",
-    "stay_points",
-    "od_flows",
-    "mobility",
     "pricing_summary",
     "top_customers",
     "idw",
@@ -138,33 +132,21 @@ BENCH_QUERIES = [
     "map_match",
     "box_iou",
     "rasterize",
-    "resample_tracks",
-    "colocation",
-    "geofence_visits",
     "kde",
     "st_join",
     "patch_extract",
     "adaptive_bins",
-    "track_speed",
     "bbox_join",
     "hist_equalize",
     "reverse_geocode",
-    "cell_transitions",
-    "geofence_events",
     "spatial_outliers",
     "lof",
-    "dtw",
-    "trips",
-    "convoys",
     "emerging_hotspots",
     "sobel_edges",
     "voronoi",
     "quadkey_layout",
     "decayed_heatmap",
-    "track_bearing",
-    "covisitation",
     "kanon_cells",
-    "location_entropy",
     "ripleys_k",
     "clark_evans",
     "otsu",
@@ -208,13 +190,11 @@ BENCH_QUERIES = [
     "iou_track",
     "stream_topk",
     "demosaic",
-    "viterbi",
     "anchor_assign",
     "color_quantize",
     "winnow",
     "alpha_shape",
     "dog_keypoints",
-    "home_anchors",
     "gray_world",
     "ring_validity",
     "flow_accum",
@@ -226,7 +206,6 @@ BENCH_QUERIES = [
     "l_diversity",
     "canonical_pick",
     "f2_sketch",
-    "bearing_stats",
     "cell_buffer",
     "keyframes",
     "boilerplate",

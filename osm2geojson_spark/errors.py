@@ -3,7 +3,8 @@
 from __future__ import annotations
 
 
-class ConversionError(RuntimeError):
+class ConversionError(ValueError, RuntimeError):
     """An input that cannot be converted: a document whose root is not
-    ``<osm>``, or, in strict mode (``raise_on_failure``), an element that
-    fails to convert."""
+    ``<osm>``, a node, way or relation without an ``id``, or, in strict
+    mode (``raise_on_failure``), an element that fails to convert. It is
+    a ``ValueError`` (bad input) and, as before, a ``RuntimeError``."""

@@ -1361,9 +1361,8 @@ def lcs_block_similarity(
 
     The DP runs ONCE PER DISTINCT VALUE PAIR (wa < wb within a block),
     never per row pair — the value-dedup that makes quadratic string
-    kernels feasible at corpus scale (the same trick dtw uses for
-    candidate capping). Inside the Arrow batch the classic LCS table
-    fills row-vectorized in NumPy; the twin enumerates DP states
+    kernels feasible at corpus scale. Inside the Arrow batch the classic
+    LCS table fills row-vectorized in NumPy; the twin enumerates DP states
     (i, j, matched) in a recursive CTE and takes max(matched) — an
     independent formulation of the same recurrence.
 

@@ -309,7 +309,7 @@ def hausdorff_distance(
     df: DataFrame, gpb_a: str = "gpb_a", gpb_b: str = "gpb_b"
 ) -> DataFrame:
     """Discrete symmetric Hausdorff distance between the vertex sets of two
-    geometries per row (trajectory/shape similarity; the reference's users
+    geometries per row (shape similarity; the reference's users
     reach it through shapely's ``hausdorff_distance``). Appends
     ``hausdorff_sq`` = max(max_a min_b d2(a,b), max_b min_a d2(a,b)) — the
     SQUARED distance, exact in float64 for integer coordinates (no sqrt).
@@ -545,12 +545,12 @@ def geodesic_area(
     continent-sized ring by whole percents; this is the sphere-true
     counterpart of kernels.signed_area.
 
-    Float discipline (the engine's quantized-term-sum pattern, cf.
-    location_entropy/IDW): each E is computed in one fixed expression
-    tree — sin/cos/atan2 parity holds across engines just as for
-    haversine — then quantized to int64 steradian steps of ``quantum``
-    BEFORE summing, so the rollup is an order-free integer sum; the only
-    post-aggregation float ops are the two of the km^2 assembly.
+    Float discipline (the engine's quantized-term-sum pattern, cf. IDW):
+    each E is computed in one fixed expression tree — sin/cos/atan2
+    parity holds across engines just as for haversine — then quantized
+    to int64 steradian steps of ``quantum`` BEFORE summing, so the rollup
+    is an order-free integer sum; the only post-aggregation float ops are
+    the two of the km^2 assembly.
     ``sr_q`` (the signed quantized steradian sum) is exact int64;
     ``area_km2 = round(abs(sr_q) * quantum * R_km^2, 6)``.
 

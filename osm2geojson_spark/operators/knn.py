@@ -252,10 +252,10 @@ def knn_graph(
 ) -> DataFrame:
     """(id, nbr_id, dist_m, rank) — the k-nearest-neighbor GRAPH of one
     point set: every point paired with its k nearest OTHER points. The
-    all-pairs building block of kNN-graph dedup, trajectory densification
-    and manifold methods, built as a self knn_join at k+1 (self is always
-    a candidate at distance 0) with the self edge dropped and ranks
-    recomputed over the same deterministic (dist_m, nbr_id) order.
+    all-pairs building block of kNN-graph dedup and manifold methods,
+    built as a self knn_join at k+1 (self is always a candidate at
+    distance 0) with the self edge dropped and ranks recomputed over the
+    same deterministic (dist_m, nbr_id) order.
 
     Scale shape is knn_join's: ring-round candidate generation on the cell
     grid — the corpus is both sides, so the join is cell-local and the

@@ -274,7 +274,7 @@ def fs_link_scores(
     (default 9/10). Every weight is quantized to round(ln(·)·1e6)
     int64 from exact integer count ratios — ln arguments are
     identical integers cross-engine, so scores are order-free sums
-    (track_nll's micro-nat scheme). band: 'link' above
+    (micro-nat units). band: 'link' above
     ``upper_micro``, 'non' below ``lower_micro``, else 'possible'
     (clerical-review tier).
 

@@ -2128,7 +2128,7 @@ def image_entropy(images: DataFrame) -> DataFrame:
     training-crop selection and dud-image filtering (uniform gray -> 0;
     saturated noise -> ln 256).
 
-    location_entropy's exactness scheme applied per image: with c_v the
+    The quantized-term-sum exactness scheme, per image: with c_v the
     count of pixels at value v and n total,
 
         H = ln(n) - (sum_v c_v * ln(c_v)) / n

@@ -576,7 +576,7 @@ def spatiotemporal_join(
     ``radius_m`` meters (haversine) AND within ``max_dt_s`` seconds —
     the contact/encounter join (epidemiology exposure pairs, AIS vessel
     rendezvous, photo-burst grouping) where co-location alone is not
-    enough and exact tick alignment (colocation_pairs) is too strict.
+    enough and exact tick alignment is too strict.
 
     Both inputs: (id, lon, lat, ts). Output (lid, rid, dist_m, dt_us) with
     dt_us = right ts - left ts in microseconds (signed, exact int64).
@@ -761,11 +761,11 @@ def smallest_containing_box(
     Returns (pid, box_id, area) with area in deg^2 (the comparison key —
     products of the corner doubles, identical in the SQL twin).
 
-    Plan: broadcast (cell -> box) covering candidates + exact bbox gate
-    (the geofence_visits candidate scheme), then ONE per-point min-struct
-    aggregation — no window sort, no second shuffle: min over the
-    (area, box_id, ...) struct is associative and map-side combinable,
-    which beats a row_number window at 10^12 points."""
+    Plan: broadcast (cell -> box) covering candidates + exact bbox gate,
+    then ONE per-point min-struct aggregation — no window sort, no second
+    shuffle: min over the (area, box_id, ...) struct is associative and
+    map-side combinable, which beats a row_number window at 10^12
+    points."""
     pts = points.select(
         F.col(pid),
         F.col(lon_col).alias("_plon"),

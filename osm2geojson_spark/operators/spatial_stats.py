@@ -671,105 +671,6 @@ def emerging_hotspots(
     )
 
 
-GRAVITY_SCALE = 100_000  # fixed-point quantization of the log terms
-
-
-def gravity_fit(
-    flows: DataFrame,
-    res: int,
-    from_col: str = "from_cell",
-    to_col: str = "to_cell",
-    n_col: str = "n_trips",
-) -> DataFrame:
-    """GRAVITY-MODEL CALIBRATION over an origin-destination matrix — fit
-    the distance-decay exponent of T_ij = k * m_i * m_j / d_ij^beta by
-    ordinary least squares in log space (the canonical spatial-
-    interaction model of mobility/trade analytics; beta ~ 2 is the
-    classic "gravity" regime):
-
-        y_ij = ln T_ij - ln m_i - ln m_j,   x_ij = ln d_ij
-        beta = -slope(y ~ x),   ln k = intercept
-
-    with m_i total outflow of the origin, m_j total inflow of the
-    destination (derived from the matrix itself) and d_ij the haversine
-    distance between cell centers at ``res``. Self-flows (d = 0) are
-    excluded.
-
-    Exactness (location_entropy's scheme): each pair's x and y are
-    quantized FIRST — qx = round(x * 1e5), qy = round(y * 1e5), int64
-    from exact integer counts — so the five OLS sufficient statistics
-    (n, Sx, Sy, Sxx, Sxy) are order-free integer sums and hash-stable;
-    beta / ln_k are a short identically-ordered double assembly over
-    them (products run in doubles — n * Sxy overflows int64 at corpus
-    scale but is exact enough in double for a 6-decimal fit).
-
-    Returns ONE row: (n_pairs, sx_q, sy_q, sxx_q, sxy_q, beta, ln_k).
-
-    Scale: two combinable mass rollups broadcast back onto the matrix
-    (|cells|-sized), one combinable global aggregate. The OD matrix is
-    |cells|^2-bounded — metadata-scale next to the ping corpus."""
-    from .knn import haversine_col
-
-    n_grid = float(1 << res)
-    half_lon = 180.0 / n_grid
-    half_lat = 90.0 / n_grid
-
-    def center(cell_col):
-        x, y = cells.cell_xy(F.col(cell_col))
-        lon = x.cast("double") / F.lit(n_grid) * F.lit(360.0) - F.lit(
-            180.0
-        ) + F.lit(half_lon)
-        lat = y.cast("double") / F.lit(n_grid) * F.lit(180.0) - F.lit(
-            90.0
-        ) + F.lit(half_lat)
-        return lon, lat
-
-    m_o = flows.groupBy(from_col).agg(F.sum(n_col).cast("long").alias("m_o"))
-    m_d = flows.groupBy(to_col).agg(F.sum(n_col).cast("long").alias("m_d"))
-    f = (
-        flows.filter(F.col(from_col) != F.col(to_col))
-        .join(F.broadcast(m_o), from_col)
-        .join(F.broadcast(m_d), to_col)
-    )
-    lon_o, lat_o = center(from_col)
-    lon_d, lat_d = center(to_col)
-    d = haversine_col(lon_o, lat_o, lon_d, lat_d)
-    x_t = F.log(d)
-    y_t = (
-        F.log(F.col(n_col).cast("double"))
-        - F.log(F.col("m_o").cast("double"))
-        - F.log(F.col("m_d").cast("double"))
-    )
-    qx = F.round(x_t * F.lit(float(GRAVITY_SCALE))).cast("long")
-    qy = F.round(y_t * F.lit(float(GRAVITY_SCALE))).cast("long")
-    agg = f.select(qx.alias("qx"), qy.alias("qy")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum("qx").cast("long").alias("sx_q"),
-        F.sum("qy").cast("long").alias("sy_q"),
-        F.sum(F.col("qx") * F.col("qx")).cast("long").alias("sxx_q"),
-        F.sum(F.col("qx") * F.col("qy")).cast("long").alias("sxy_q"),
-    )
-    nd = F.col("n_pairs").cast("double")
-    sx = F.col("sx_q").cast("double")
-    sy = F.col("sy_q").cast("double")
-    sxx = F.col("sxx_q").cast("double")
-    sxy = F.col("sxy_q").cast("double")
-    slope = (nd * sxy - sx * sy) / (nd * sxx - sx * sx)
-    ln_k = (sy - slope * sx) / nd / F.lit(float(GRAVITY_SCALE))
-    # < 2 pairs (or zero x-variance: all pairs at one distance) has no
-    # defined fit — NULL beta/ln_k instead of a NaN from 0/0
-    fit_ok = (F.col("n_pairs") >= 2) & (nd * sxx - sx * sx != F.lit(0.0))
-    return agg.select(
-        "n_pairs",
-        F.coalesce(F.col("sx_q"), F.lit(0)).alias("sx_q"),
-        F.coalesce(F.col("sy_q"), F.lit(0)).alias("sy_q"),
-        F.coalesce(F.col("sxx_q"), F.lit(0)).alias("sxx_q"),
-        F.coalesce(F.col("sxy_q"), F.lit(0)).alias("sxy_q"),
-        F.when(fit_ok, F.round(-slope, 6) + F.lit(0.0)).alias("beta"),
-        F.when(fit_ok, F.round(ln_k, 6) + F.lit(0.0)).alias("ln_k"),
-    )
-
-
 def gearys_c(
     cell_counts: DataFrame,
     res: int,

@@ -22,6 +22,7 @@ from collections import namedtuple
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..errors import ConversionError
 from .local import local_frame
 
 ElementFrames = namedtuple(
@@ -148,6 +149,17 @@ def _bounds(d: dict | None):
     return (d["minlat"], d["minlon"], d["maxlat"], d["maxlon"])
 
 
+def _element_id(el: dict, t: str, doc_id: str, seq: int):
+    """A node, way or relation is keyed by its id in every join downstream,
+    so one without an id fails here, named by its type and position."""
+    eid = el.get("id")
+    if eid is None:
+        raise ConversionError(
+            f"Element without an id: {t} at seq {seq} of document {doc_id!r}"
+        )
+    return eid
+
+
 def _member_row(pos: int, m: dict) -> tuple:
     return (
         pos,
@@ -180,7 +192,7 @@ def normalize_documents(
                     (
                         doc_id,
                         seq,
-                        el["id"],
+                        _element_id(el, t, doc_id, seq),
                         None if lon is None else float(lon),
                         None if lat is None else float(lat),
                         _tags_list(el),
@@ -192,7 +204,7 @@ def normalize_documents(
                     (
                         doc_id,
                         seq,
-                        el["id"],
+                        _element_id(el, t, doc_id, seq),
                         el.get("nodes"),
                         _geom_list(el.get("geometry")),
                         _coord(el.get("center")),
@@ -209,7 +221,7 @@ def normalize_documents(
                     (
                         doc_id,
                         seq,
-                        el["id"],
+                        _element_id(el, t, doc_id, seq),
                         members,
                         _coord(el.get("center")),
                         _bounds(el.get("bounds")),

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from ..operators import cells
 from ..sources import synthetic as SYN
-from ..sources.local import local_frame
 
 EVENTS_DDL = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -278,160 +277,6 @@ def running_user_stats(
             if state_timeout_ms is not None
             else GroupStateTimeout.NoTimeout
         ),
-    )
-
-
-def streaming_geofence_events(
-    pings: DataFrame,
-    fences: list[tuple[int, float, float, float, float]],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """LIVE GEOFENCE ALERTS — the streaming form of
-    ``trajectory.geofence_visits``: per entity, emit ``enter`` the moment
-    a ping lands inside a fence the entity was outside of, and ``exit``
-    when a ping arrives OUTSIDE a fence it was inside — stamped with the
-    LAST inside ping's timestamp (identical to the batch operator's
-    exit_ts, so stream events == batch visit edges on the same data;
-    visits still open when the stream pauses have no exit yet — exactly
-    right for a live system).
-
-    ``fences``: a small in-memory list (fence_id, x0, y0, x1, y1) with
-    closed containment — the fence dim ships inside the function closure
-    (broadcast-equivalent). State per entity = {fence_id: last_inside_ts}
-    as a JSON string: bounded by the fence count, immune to struct-type
-    state quirks, and NoTimeout so availableNow catch-up terminates
-    (see running_user_stats). Requires per-entity event-time order across
-    micro-batches (file/Kafka sources partitioned by time), the standard
-    contract for transition detection; within a batch rows are sorted.
-
-    Returns (user, fence_id, event, ts). On batch input it degrades to
-    the same walk over the whole history (the test oracle)."""
-    import json
-
-    import numpy as np
-    import pandas as pd
-
-    fx = np.array([[f[1], f[2], f[3], f[4]] for f in fences], dtype=np.float64)
-    fids = [int(f[0]) for f in fences]
-    out_schema = f"{user_col} long, fence_id long, event string, ts timestamp"
-
-    def walk(uid, pdf, inside):
-        """Event-ordered transition walk; mutates ``inside``; returns rows.
-
-        Fully vectorized per (entity, batch): one containment matrix, one
-        shifted-compare for enters/exits, one maximum.accumulate for the
-        last-inside row each exit must stamp — no per-ping Python loop
-        (the row walk was the suite's 3rd-slowest query at 100k pings)."""
-        rows = []
-        pdf = pdf.sort_values(ts_col)
-        n = len(pdf)
-        nf = len(fids)
-        if n == 0:
-            return rows
-        tss = list(pdf[ts_col])
-        if nf:
-            lons = pdf[lon_col].to_numpy()
-            lats = pdf[lat_col].to_numpy()
-            m = (
-                (lons[:, None] >= fx[None, :, 0])
-                & (lons[:, None] <= fx[None, :, 2])
-                & (lats[:, None] >= fx[None, :, 1])
-                & (lats[:, None] <= fx[None, :, 3])
-            )
-        else:
-            m = np.zeros((n, 0), dtype=bool)
-        seed = np.array(
-            [str(f) in inside for f in fids], dtype=bool
-        ).reshape(1, nf)
-        m_prev = np.vstack([seed, m[:-1]])
-        # last inside row STRICTLY BEFORE each row (-1 = only the carried
-        # state, if any, was inside)
-        idx = np.where(m, np.arange(n)[:, None], -1)
-        acc_prev = np.vstack(
-            [np.full((1, nf), -1, dtype=np.int64), np.maximum.accumulate(idx, axis=0)[:-1]]
-        )
-        for i, j in zip(*np.nonzero(m & ~m_prev)):
-            rows.append((uid, fids[j], "enter", tss[i]))
-        for i, j in zip(*np.nonzero(~m & m_prev)):
-            k = acc_prev[i, j]
-            ts = tss[k] if k >= 0 else inside[str(fids[j])]
-            rows.append((uid, fids[j], "exit", ts))
-        # carry: fences inside at the final row, stamped with their last
-        # inside row's ts (their dict ts if this batch never saw them in)
-        new_inside = {}
-        if n and nf:
-            last_idx = np.maximum.accumulate(idx, axis=0)[-1]
-            for j in np.nonzero(m[-1])[0]:
-                new_inside[str(fids[j])] = tss[last_idx[j]]
-        inside.clear()
-        inside.update(new_inside)
-        return rows
-
-    if not pings.isStreaming:
-        # the batch twin is fully relational — geofence_visits (the
-        # windowed gaps-and-islands operator) plus the edge derivation:
-        # enter at every visit's first inside ping; exit at its last
-        # inside ping WHEN a later ping exists (a visit reaching the end
-        # of history is still open, exactly like a paused stream). A
-        # grouped applyInPandas walk gives the same answer but pays
-        # ~3 ms/entity group overhead — ruinous at 10^6 entities.
-        from ..operators.trajectory import geofence_visits
-
-        spark = pings.sparkSession
-        fdf = local_frame(
-            spark,
-            [(int(f[0]), float(f[1]), float(f[2]), float(f[3]), float(f[4])) for f in fences],
-            "fence_id long, x0 double, y0 double, x1 double, y1 double",
-        )
-        visits = geofence_visits(
-            pings, fdf, res=4, user_col=user_col, ts_col=ts_col,
-            lon_col=lon_col, lat_col=lat_col,
-        )
-        last = pings.groupBy(user_col).agg(F.max(ts_col).alias("_last_ts"))
-        v = visits.join(last, user_col)
-        enters = v.select(
-            user_col, "fence_id", F.lit("enter").alias("event"),
-            F.col("enter_ts").alias(ts_col),
-        )
-        exits = v.filter(F.col("exit_ts") < F.col("_last_ts")).select(
-            user_col, "fence_id", F.lit("exit").alias("event"),
-            F.col("exit_ts").alias(ts_col),
-        )
-        return enters.unionByName(exits)
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        inside = json.loads(state.get[0]) if state.exists else {}
-        out = []
-        for pdf in pdfs:
-            # timestamps arrive as pandas Timestamps; keep them as-is
-            out.extend(walk(int(key[0]), pdf, inside))
-        state.update((json.dumps({k: str(v) for k, v in inside.items()}),))
-        # state round-trips ts as strings; rehydrate on the next batch
-        yield pd.DataFrame(out, columns=[user_col, "fence_id", "event", ts_col])
-
-    # JSON state stores last-inside ts as strings; walk() compares nothing,
-    # only re-emits them — convert back to Timestamp lazily at emit time
-    def update_wrapped(key, pdfs, state: GroupState):
-        for pdf in update(key, pdfs, state):
-            if len(pdf):
-                pdf[ts_col] = pd.to_datetime(pdf[ts_col])
-            yield pdf
-
-    return (
-        pings.select(user_col, ts_col, lon_col, lat_col)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            update_wrapped,
-            outputStructType=out_schema,
-            stateStructType="inside string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
     )
 
 

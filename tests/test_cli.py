@@ -97,3 +97,23 @@ def test_non_osm_root_fails_naming_the_root(spark, tmp_path, capsys):
         rc = cli.main([str(src), str(tmp_path / out)])
         assert rc == 1
         assert "root element <gpx>" in capsys.readouterr().err
+
+
+def test_element_without_id_fails_naming_the_element(spark, tmp_path, capsys):
+    """A node, way or relation whose id is missing or null fails with a
+    ConversionError naming its type and position, and the CLI exits 1 with
+    that message in its driver mode and in its distributed (.jsonl) mode."""
+    cases = [
+        ({"type": "node", "lon": 1, "lat": 2}, "node at seq 1"),
+        ({"type": "way", "id": None, "nodes": [1]}, "way at seq 1"),
+        ({"type": "relation", "members": []}, "relation at seq 1"),
+    ]
+    good = {"type": "node", "id": 1, "lon": 0, "lat": 0}
+    for i, (bad, where) in enumerate(cases):
+        src = tmp_path / f"bad{i}.json"
+        src.write_text(json.dumps({"elements": [good, bad]}))
+        for out in (f"bad{i}.geojson", f"bad{i}.jsonl"):
+            rc = cli.main([str(src), str(tmp_path / out)])
+            assert rc == 1
+            err = capsys.readouterr().err
+            assert f"Element without an id: {where} of document '_'" in err

@@ -5,7 +5,10 @@ Python eval node."""
 
 from __future__ import annotations
 
+import ast
+import collections
 import os
+import pathlib
 
 import pytest
 
@@ -190,3 +193,65 @@ def test_registry_oracles_and_bench_list_agree():
     names = set(E.queries())
     assert names == set(E.oracle_sql())
     assert set(bench.BENCH_QUERIES) <= names
+
+
+# Top-level names that only a caller outside the repo names: the job runner
+# calls the driver contract's ``entry(spark)`` by name.
+_EXTERNAL_NAMES = {("__spark_entry__.py", "entry")}
+
+
+def _names_used(stmt) -> set[str]:
+    out = set()
+    for n in ast.walk(stmt):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+            out.add(n.value)
+    return out
+
+
+def _defined(stmt) -> list[str]:
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, ast.Assign):
+        return [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+    if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+        return [stmt.target.id]
+    return []
+
+
+def test_every_top_level_definition_is_named_elsewhere():
+    """No dead code: every top-level function, class and assignment of the
+    package and of ``__spark_entry__.py`` is named (called, imported,
+    referenced or spelled as a string) by some other top-level statement in
+    a .py file of the repo — a deletion must take its only-used-by helpers
+    with it."""
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [
+        p for p in root.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(root).parts)
+    ]
+    users: collections.Counter = collections.Counter()
+    defs = []
+    for path in files:
+        rel = path.relative_to(root)
+        in_scope = rel.parts[0] == "osm2geojson_spark" or str(rel) == "__spark_entry__.py"
+        for stmt in ast.parse(path.read_text()).body:
+            used = _names_used(stmt)
+            users.update(used)
+            if in_scope:
+                defs.extend(
+                    (str(rel), name, name in used)
+                    for name in _defined(stmt)
+                    if not (name.startswith("__") and name.endswith("__"))
+                )
+    unused = sorted(
+        (rel, name) for rel, name, self_use in defs
+        if users[name] - self_use == 0 and (rel, name) not in _EXTERNAL_NAMES
+    )
+    assert defs
+    assert unused == []

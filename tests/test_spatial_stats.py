@@ -527,86 +527,6 @@ def test_st_dbscan_splits_time_bursts_and_matches_brute(spark):
     assert plain[0] == plain[10]
 
 
-def test_gravity_fit_replay_and_decay_direction(spark):
-    """gravity_fit == a Python replay of the quantized OLS on the same
-    matrix, and a steep-decay matrix fits a larger beta than a flat one."""
-    import math
-
-    from osm2geojson_spark.operators.cells import pack_cell_py
-    from osm2geojson_spark.operators.knn import EARTH_RADIUS_M
-    from osm2geojson_spark.operators.spatial_stats import (
-        GRAVITY_SCALE,
-        gravity_fit,
-    )
-
-    res = 6
-    n_grid = 1 << res
-    # cells along the equator row (y = n/2) at a few x offsets
-    xs = [10, 13, 17, 24, 33]
-    cs = [pack_cell_py(res, x, n_grid // 2) for x in xs]
-
-    def center(x):
-        return x / float(n_grid) * 360.0 - 180.0 + 180.0 / n_grid
-
-    center_lat = (n_grid // 2) / float(n_grid) * 180.0 - 90.0 + 90.0 / n_grid
-
-    def hav(lon1, lon2):
-        rl = math.radians(center_lat)
-        h = math.cos(rl) * math.cos(rl) * math.sin(
-            math.radians(lon2 - lon1) / 2.0
-        ) ** 2
-        return 2.0 * EARTH_RADIUS_M * math.asin(min(1.0, math.sqrt(h)))
-
-    def fit(flow_fn):
-        rows = []
-        for a in range(len(cs)):
-            for b in range(len(cs)):
-                if a == b:
-                    continue
-                d = hav(center(xs[a]), center(xs[b]))
-                rows.append((cs[a], cs[b], flow_fn(d)))
-        df = spark.createDataFrame(
-            rows, "from_cell long, to_cell long, n_trips long"
-        )
-        got = gravity_fit(df, res=res).collect()[0]
-        # brute replay
-        m_o, m_d = {}, {}
-        for f, t, n in rows:
-            m_o[f] = m_o.get(f, 0) + n
-            m_d[t] = m_d.get(t, 0) + n
-        import numpy as _np
-
-        qs = []
-        for a in range(len(cs)):
-            for b in range(len(cs)):
-                if a == b:
-                    continue
-                f, t, n = cs[a], cs[b], None
-                n = [r[2] for r in rows if r[0] == f and r[1] == t][0]
-                d = hav(center(xs[a]), center(xs[b]))
-                qx = round(math.log(d) * GRAVITY_SCALE)
-                qy = round(
-                    (math.log(n) - math.log(m_o[f]) - math.log(m_d[t]))
-                    * GRAVITY_SCALE
-                )
-                qs.append((qx, qy))
-        n_p = len(qs)
-        sx = sum(q[0] for q in qs)
-        sy = sum(q[1] for q in qs)
-        sxx = sum(q[0] * q[0] for q in qs)
-        sxy = sum(q[0] * q[1] for q in qs)
-        assert (got["n_pairs"], got["sx_q"], got["sy_q"]) == (n_p, sx, sy)
-        assert (got["sxx_q"], got["sxy_q"]) == (sxx, sxy)
-        slope = (n_p * sxy - sx * sy) / (n_p * sxx - sx * sx)
-        assert abs(got["beta"] - (-slope)) < 1e-5
-        return got["beta"]
-
-    steep = fit(lambda d: max(1, round(1e16 / d**2)))
-    flat = fit(lambda d: 500)
-    assert steep > flat + 0.5
-    assert abs(flat) < 0.3  # no decay signal in a constant matrix
-
-
 # ---------------------------------------------------------------- Geary's C
 
 

@@ -246,82 +246,6 @@ def test_windowed_heatmap_stream_equals_batch(spark, events_dir):
     assert sorted((k + (v,)) for k, v in agg.items()) == want_px
 
 
-def test_streaming_geofence_events_stream_equals_batch(spark, tmp_path):
-    """Stateful geofence alerts: enter/exit transitions across MICRO-BATCH
-    boundaries (maxFilesPerTrigger=1) equal the batch walk and a brute
-    Python walk over the full history; open visits emit no exit."""
-    import numpy as np
-
-    d = str(tmp_path / "geo_stream")
-    fences = [(1, 0.0, 0.0, 10.0, 10.0), (2, 5.0, 5.0, 30.0, 30.0)]
-    rng = np.random.default_rng(17)
-    rows = []
-    t = 1_700_000_000
-    for i in range(240):
-        u = int(i % 4)
-        rows.append((u, t, float(rng.uniform(-5, 35)), float(rng.uniform(-5, 35))))
-        t += 60
-    pings = spark.createDataFrame(
-        rows, "user_id long, tsec long, lon double, lat double"
-    ).selectExpr("user_id", "timestamp_seconds(tsec) AS ts", "lon", "lat")
-    # three time-ordered files = three micro-batches, state carried across
-    pings.filter(F.col("ts") < F.timestamp_seconds(F.lit(t - 160 * 60))).coalesce(
-        1
-    ).write.parquet(os.path.join(d, "p1"))
-    pings.filter(
-        (F.col("ts") >= F.timestamp_seconds(F.lit(t - 160 * 60)))
-        & (F.col("ts") < F.timestamp_seconds(F.lit(t - 80 * 60)))
-    ).coalesce(1).write.parquet(os.path.join(d, "p2"))
-    pings.filter(
-        F.col("ts") >= F.timestamp_seconds(F.lit(t - 80 * 60))
-    ).coalesce(1).write.parquet(os.path.join(d, "p3"))
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("user_id long, ts timestamp, lon double, lat double")
-        .option("maxFilesPerTrigger", "1")
-        .load(os.path.join(d, "p*"))
-    )
-    got = S.run_to_memory(
-        S.streaming_geofence_events(stream, fences), "geo_events", mode="append"
-    )
-    cols = ["user_id", "fence_id", "event", "ts"]
-    got_rows = _rows(got, cols)
-    want_batch = _rows(S.streaming_geofence_events(pings, fences), cols)
-    assert got_rows == want_batch
-
-    # brute Python walk
-    brute = []
-    by_u = {}
-    for u, tsec, lon, lat in rows:
-        by_u.setdefault(u, []).append((tsec, lon, lat))
-    for u, seq in by_u.items():
-        inside = {}
-        for tsec, lon, lat in sorted(seq):
-            now = {
-                fid
-                for fid, x0, y0, x1, y1 in fences
-                if x0 <= lon <= x1 and y0 <= lat <= y1
-            }
-            for fid in sorted(now):
-                if fid not in inside:
-                    brute.append((u, fid, "enter", tsec))
-                inside[fid] = tsec
-            for fid in [f for f in inside if f not in now]:
-                brute.append((u, fid, "exit", inside[fid]))
-                del inside[fid]
-    want_brute = sorted(
-        (u, fid, ev, ts)
-        for u, fid, ev, ts in brute
-    )
-    got_norm = sorted(
-        (r[0], r[1], r[2], int(r[3].timestamp())) for r in got_rows
-    )
-    assert got_norm == want_brute
-    evs = {e for _, _, e, _ in want_brute}
-    assert evs == {"enter", "exit"} and len(want_brute) > 40
-
-
 def test_streaming_cusum_stream_equals_batch(spark, tmp_path):
     """Stateful CUSUM: alarms across micro-batch boundaries (state = the
     carried statistic) equal the batch window operator AND the textbook
