@@ -3002,91 +3002,6 @@ def _synth_images(spark: SparkSession, sf_dir: str, limit: int, step: int = 1):
     )
 
 
-def q_hough(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X176 (multimodal.hough_lines): Hough line detection over 300
-    mixed rawz/png images — edge pixels vote in the quantized
-    (theta, rho) accumulator (fixed-point trig table inlined into both
-    plans, power-of-two rho bins so the twin's floor division is exact),
-    top-3 cells per image with >= 8 votes. Voting is in-batch NumPy;
-    only the tiny accumulator rows shuffle for the per-image window."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    imgs = _synth_images(spark, sf_dir, 300)
-    return MM2.hough_lines(imgs, edge_thresh=200, min_votes=8, k=3)
-
-
-def _hough_sql() -> str:
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    px = """
-SELECT printf('img%012d', i) AS image_id, (p % w) AS x, (p // w) AS y,
-       ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v
-FROM (
-  SELECT i, w, unnest(range(0, w * w)) AS p
-  FROM (SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-        FROM part WHERE p_partkey < 300)
-)
-"""
-    return MM2.hough_lines_sql(px, edge_thresh=200, min_votes=8, k=3)
-
-
-def q_canny(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X188 (multimodal.canny_nms_stats): Canny-style non-maximum
-    suppression + double threshold over the Sobel gradient on 300 mixed
-    rawz/png images — integer tan(22.5°) sector gates (no atan), ties
-    keep, exact int64 counts; the twin recomputes gradients and sector
-    neighbors via coordinate self-joins. Scan-shaped Arrow pass."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    imgs = _synth_images(spark, sf_dir, 300)
-    return MM2.canny_nms_stats(imgs, lo=192, hi=512)
-
-
-def _canny_sql() -> str:
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    px = """
-SELECT printf('img%012d', i) AS image_id, w, w AS h,
-       (p % w) AS x, (p // w) AS y,
-       ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v
-FROM (
-  SELECT i, w, unnest(range(0, w * w)) AS p
-  FROM (SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-        FROM part WHERE p_partkey < 300)
-)
-"""
-    return MM2.canny_nms_stats_sql(px, lo=192, hi=512)
-
-
-def q_gaussian_blur(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X178 (multimodal.gaussian_blur_stats): 5x5 binomial blur over 300
-    mixed rawz/png images as integer-exact per-image statistics — the
-    separable [1,4,6,4,1]⊗[1,4,6,4,1] kernel applied in two in-batch
-    NumPy passes; the twin recomputes all 25 neighbor terms from the
-    pixel formula via a shifted self-join. Scan-shaped, pixels never
-    shuffle."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    imgs = _synth_images(spark, sf_dir, 300)
-    return MM2.gaussian_blur_stats(imgs, edge_thresh=200)
-
-
-def _gaussian_blur_sql() -> str:
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    px = """
-SELECT printf('img%012d', i) AS image_id, w, w AS h,
-       (p % w) AS x, (p // w) AS y,
-       ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v
-FROM (
-  SELECT i, w, unnest(range(0, w * w)) AS p
-  FROM (SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-        FROM part WHERE p_partkey < 300)
-)
-"""
-    return MM2.gaussian_blur_stats_sql(px, edge_thresh=200)
-
-
 def q_patch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X62 (multimodal.extract_patches): ViT-style patchification — 300
     mixed rawz/png images cut into non-overlapping 8x8 patches, one row
@@ -3147,53 +3062,6 @@ SELECT printf('img%012d', i) AS image_id,
        CAST(sum(v) AS BIGINT) AS px_sum,
        CAST(min(v) AS BIGINT) AS px_min, CAST(max(v) AS BIGINT) AS px_max
 FROM v GROUP BY i
-"""
-
-
-def q_sobel_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X79 (multimodal.sobel_stats): integer-exact Sobel gradient energy +
-    edge density per image over 300 mixed rawz/png images — the
-    texture/edge quality gate. One scan-shaped mapInPandas (NumPy stencil,
-    pixels never shuffle); the oracle recomputes every 3x3 neighborhood
-    from the deterministic pixel formula in pure SQL, so a single
-    misrouted pixel in either codec breaks the hash."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    imgs = _synth_images(spark, sf_dir, 300)
-    return MM2.sobel_stats(imgs, threshold=256)
-
-
-def _sobel_edges_sql() -> str:
-    def v(dx: int, dy: int) -> str:
-        return f"((x + {dx}) * 3 + (y + {dy}) * 7 + i * 13) % 251"
-
-    gx = (
-        f"({v(1, -1)}) + 2 * ({v(1, 0)}) + ({v(1, 1)})"
-        f" - ({v(-1, -1)}) - 2 * ({v(-1, 0)}) - ({v(-1, 1)})"
-    )
-    gy = (
-        f"({v(-1, 1)}) + 2 * ({v(0, 1)}) + ({v(1, 1)})"
-        f" - ({v(-1, -1)}) - 2 * ({v(0, -1)}) - ({v(1, -1)})"
-    )
-    return f"""
-WITH img AS (
-  SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-  FROM part WHERE p_partkey < 300
-), px AS (
-  SELECT i, w, unnest(range(0, w * w)) AS p FROM img
-), inner_px AS (
-  SELECT i, w, (p % w) AS x, (p // w) AS y FROM px
-  WHERE (p % w) >= 1 AND (p % w) <= w - 2
-    AND (p // w) >= 1 AND (p // w) <= w - 2
-), g AS (
-  SELECT i, w, abs({gx}) + abs({gy}) AS g FROM inner_px
-)
-SELECT printf('img%012d', i) AS image_id,
-       CAST(sum(g) AS BIGINT) AS grad_l1,
-       CAST(sum(CASE WHEN g >= 256 THEN 1 ELSE 0 END) AS BIGINT)
-         AS edge_count,
-       CAST((w - 2) * (w - 2) AS BIGINT) AS interior_count
-FROM g GROUP BY i, w
 """
 
 
@@ -5064,55 +4932,6 @@ SELECT pid, fence_id, area FROM (
 """
 
 
-def q_hist_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X67 (multimodal.equalize_images): per-image histogram equalization
-    over 300 mixed rawz/png images — integer transfer function
-    ((cdf - cdf_min) * 255) // (n - cdf_min), so every output pixel is
-    engine-exact and the per-image stats hash-match an oracle that
-    replays the pixel formula + a RANGE-frame window cdf in pure SQL.
-    One mapInPandas (256-bin bincount + LUT gather — never a pixel
-    sort), scan-shaped."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    imgs = _synth_images(spark, sf_dir, 300)
-    return MM2.equalize_images(imgs, with_bytes=False)
-
-
-_HIST_EQUALIZE_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-  FROM part WHERE p_partkey < 300
-), px AS (
-  SELECT i, w, unnest(range(0, w * w)) AS p FROM img
-), v AS (
-  SELECT i, w, ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v FROM px
-), cdf AS (
-  SELECT i, w, v,
-         count(*) OVER (PARTITION BY i ORDER BY v
-                        RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cdf,
-         min(v) OVER (PARTITION BY i) AS vmin,
-         CAST(w AS BIGINT) * w AS n
-  FROM v
-), cm AS (
-  SELECT i, w, v, cdf, n,
-         sum(CASE WHEN v = vmin THEN 1 ELSE 0 END) OVER (PARTITION BY i)
-           AS cdf_min
-  FROM cdf
-), eq AS (
-  SELECT i, w,
-         CASE WHEN n = cdf_min THEN 0
-              ELSE ((cdf - cdf_min) * 255) // (n - cdf_min) END AS e
-  FROM cm
-)
-SELECT printf('img%012d', i) AS image_id,
-       CAST(w AS INTEGER) AS w, CAST(w AS INTEGER) AS h,
-       CAST(sum(e) AS BIGINT) AS px_sum,
-       CAST(min(e) AS BIGINT) AS px_min, CAST(max(e) AS BIGINT) AS px_max
-FROM eq GROUP BY i, w
-"""
-
-
 def q_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X65 (spatial_join.bbox_intersect_join): image-footprint x AOI
     rectangle-intersection join — supplier scene footprints (0.5-4 deg)
@@ -5461,51 +5280,6 @@ def _bloom_semijoin_sql() -> str:
     )
 
 
-_WARP_COEFFS = (247, -66, 1280, 66, 247, -512)  # ~15-degree rotation
-
-
-def q_warp_affine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X108 (multimodal.warp_affine): integer fixed-point nearest-
-    neighbor affine warp (~15-degree rotation with negative intermediate
-    sums) over 250 mixed rawz/png images — the geometric-augmentation /
-    registration stage. The position map is pure integer floor
-    arithmetic (arithmetic shift in the kernel, explicit floor in the
-    twin), so canvas stats + in-bounds counts hash-match a pure-SQL
-    recomputation of every pixel's source."""
-    imgs = _synth_images(spark, sf_dir, 250)
-    return MM.warp_affine(imgs, _WARP_COEFFS)
-
-
-def _warp_affine_sql() -> str:
-    a, b, c, d, e, f = _WARP_COEFFS
-    sx = f"CAST(floor(({a} * x + {b} * y + {c}) / 256.0) AS BIGINT)"
-    sy = f"CAST(floor(({d} * x + {e} * y + {f}) / 256.0) AS BIGINT)"
-    return f"""
-WITH img AS (
-  SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-  FROM part WHERE p_partkey < 250
-), px AS (
-  SELECT i, w, unnest(range(0, w * w)) AS p FROM img
-), src AS (
-  SELECT i, w, {sx} AS sx, {sy} AS sy
-  FROM (SELECT i, w, (p % w) AS x, (p // w) AS y FROM px) xy
-), val AS (
-  SELECT i, w,
-         CASE WHEN sx >= 0 AND sx < w AND sy >= 0 AND sy < w
-              THEN (sx * 3 + sy * 7 + i * 13) % 251 ELSE 0 END AS v,
-         CASE WHEN sx >= 0 AND sx < w AND sy >= 0 AND sy < w
-              THEN 1 ELSE 0 END AS inb
-  FROM src
-)
-SELECT printf('img%012d', i) AS image_id,
-       CAST(w AS INTEGER) AS w, CAST(w AS INTEGER) AS h,
-       CAST(sum(v) AS BIGINT) AS px_sum,
-       CAST(min(v) AS BIGINT) AS px_min, CAST(max(v) AS BIGINT) AS px_max,
-       CAST(sum(inb) AS BIGINT) AS inb_count
-FROM val GROUP BY i, w
-"""
-
-
 _OCT_XY = [
     (1.0, 0.0), (0.7071067811865476, 0.7071067811865476),
     (0.0, 1.0), (-0.7071067811865476, 0.7071067811865476),
@@ -5568,95 +5342,6 @@ def _geodesic_area_sql() -> str:
     from osm2geojson_spark.operators import geometry as GM
 
     return GM.geodesic_area_sql(_POLY_VERTICES_SQL)
-
-
-def q_distance_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X104 (multimodal.distance_transform_rows): exact L1 distance
-    transform over 80 mixed rawz/png images, one output row per pixel
-    row — the proximity field under morphological gates (dilate-by-r =
-    threshold on dt). The engine runs the separable two-pass chamfer
-    (exact for L1, pure int64); the oracle brute-forces min over mask
-    pixels per pixel from the deterministic pixel formula — independent
-    algorithms, field-level agreement."""
-    imgs = _synth_images(spark, sf_dir, 80)
-    return MM.distance_transform_rows(imgs, threshold=128)
-
-
-_DISTANCE_TRANSFORM_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-  FROM part WHERE p_partkey < 80
-), px AS (
-  SELECT i, w, unnest(range(0, w * w)) AS p FROM img
-), v AS (
-  SELECT i, w, (p % w) AS x, (p // w) AS y,
-         ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v
-  FROM px
-), m AS (
-  SELECT i, x AS qx, y AS qy FROM v WHERE v >= 128
-), dt AS (
-  SELECT v.i, v.w, v.x, v.y,
-         coalesce(min(abs(v.x - m.qx) + abs(v.y - m.qy)), 2 * v.w) AS dt
-  FROM v LEFT JOIN m ON m.i = v.i
-  GROUP BY v.i, v.w, v.x, v.y
-), mc AS (
-  SELECT i, y, sum(CASE WHEN v >= 128 THEN 1 ELSE 0 END) AS mcnt
-  FROM v GROUP BY i, y
-)
-SELECT printf('img%012d', dt.i) AS image_id, CAST(dt.y AS INTEGER) AS y,
-       CAST(sum(dt.dt) AS BIGINT) AS row_dt_sum,
-       CAST(max(dt.dt) AS BIGINT) AS row_dt_max,
-       CAST(min(mc.mcnt) AS BIGINT) AS row_mask_count
-FROM dt JOIN mc ON mc.i = dt.i AND mc.y = dt.y
-GROUP BY dt.i, dt.y
-"""
-
-
-def q_hog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X105 (multimodal.hog_features): 8-bin magnitude-weighted gradient-
-    orientation histograms (HOG-lite) over 300 mixed rawz/png images —
-    the structure descriptor for blur gates and orientation-signature
-    blocking. Octant code = two sign tests + one comparison (no atan2,
-    no float); the oracle recomputes every central difference from the
-    pixel formula in pure SQL, all 8 bins emitted per image."""
-    imgs = _synth_images(spark, sf_dir, 300)
-    return MM.hog_features(imgs)
-
-
-def _hog_sql() -> str:
-    def v(dx: int, dy: int) -> str:
-        return f"(((x + {dx}) * 3 + (y + {dy}) * 7 + i * 13) % 251)"
-
-    gx = f"({v(1, 0)} - {v(-1, 0)})"
-    gy = f"({v(0, 1)} - {v(0, -1)})"
-    return f"""
-WITH img AS (
-  SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-  FROM part WHERE p_partkey < 300
-), px AS (
-  SELECT i, w, unnest(range(0, w * w)) AS p FROM img
-), inner_px AS (
-  SELECT i, w, (p % w) AS x, (p // w) AS y FROM px
-  WHERE (p % w) >= 1 AND (p % w) <= w - 2
-    AND (p // w) >= 1 AND (p // w) <= w - 2
-), g AS (
-  SELECT i,
-         4 * (CASE WHEN {gy} < 0 THEN 1 ELSE 0 END)
-         + 2 * (CASE WHEN {gx} < 0 THEN 1 ELSE 0 END)
-         + (CASE WHEN abs({gy}) > abs({gx}) THEN 1 ELSE 0 END) AS b,
-         abs({gx}) + abs({gy}) AS wgt
-  FROM inner_px
-), spine AS (
-  SELECT i, unnest(range(0, 8)) AS bin FROM img
-), agg AS (
-  SELECT i, b, sum(wgt) AS mag_sum, count(*) AS n_px FROM g GROUP BY i, b
-)
-SELECT printf('img%012d', spine.i) AS image_id,
-       CAST(spine.bin AS INTEGER) AS bin,
-       CAST(coalesce(agg.mag_sum, 0) AS BIGINT) AS mag_sum,
-       CAST(coalesce(agg.n_px, 0) AS BIGINT) AS n_px
-FROM spine LEFT JOIN agg ON agg.i = spine.i AND agg.b = spine.bin
-"""
 
 
 def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5923,40 +5608,6 @@ FROM agg
 """
 
 
-def q_median_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X98 (multimodal.median_filter_stats): 3x3 median denoise over 300
-    mixed rawz/png 8x8 images — each interior pixel the exact 5th order
-    statistic of its 9 int neighbors (no float anywhere), stats over the
-    filtered interior. The oracle rebuilds every neighborhood from the
-    deterministic pixel formula and takes quantile_disc 0.5."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.median_filter_stats(_synth_images(spark, sf_dir, 900, step=3))
-
-
-_MEDIAN_FILTER_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i FROM part WHERE p_partkey < 900 AND p_partkey % 3 = 0
-), px AS (
-  SELECT i, unnest(range(0, 36)) AS p FROM img
-), ctr AS (
-  SELECT i, (p % 6) + 1 AS x, (p // 6) + 1 AS y FROM px
-), nb AS (
-  SELECT i, x, y,
-         ((x + (dd % 3) - 1) * 3 + (y + (dd // 3) - 1) * 7 + i * 13) % 251
-           AS v
-  FROM (SELECT i, x, y, unnest(range(0, 9)) AS dd FROM ctr) q
-), med AS (
-  SELECT i, x, y, quantile_disc(v, 0.5) AS m FROM nb GROUP BY i, x, y
-)
-SELECT printf('img%012d', i) AS image_id, 6 AS w, 6 AS h,
-       CAST(sum(m) AS BIGINT) AS px_sum,
-       CAST(min(m) AS BIGINT) AS px_min,
-       CAST(max(m) AS BIGINT) AS px_max
-FROM med GROUP BY i
-"""
-
-
 def q_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X96 (sketch.theta_distinct): Theta-sampling distinct-count sketch —
     distinct customers per order priority estimated from the hash-gated
@@ -6047,52 +5698,6 @@ bl AS (
 )
 SELECT p.k AS id, coalesce(mem.is_core, FALSE) AS is_core, mem.cluster_id
 FROM p LEFT JOIN mem ON p.k = mem.v
-"""
-
-
-def q_glcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X94 (multimodal.glcm_features): Haralick GLCM texture features at
-    offset (1, 0) over 300 mixed rawz/png 8x8 images — co-occurrence
-    counts of 16-level quantized pixel pairs, contrast/dissimilarity/
-    energy exact int64 and homogeneity as a fixed-point integer weight
-    table (no float anywhere). The oracle rebuilds the pair counts from
-    the deterministic pixel formula."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.glcm_features(
-        _synth_images(spark, sf_dir, 900, step=3), levels=16, dx=1, dy=0
-    )
-
-
-def _glcm_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import GLCM_HOMOG_SCALE
-
-    w_case = "CASE " + " ".join(
-        f"WHEN d = {d} THEN {round(GLCM_HOMOG_SCALE / (1 + d))}"
-        for d in range(16)
-    ) + " END"
-    return f"""
-WITH img AS (
-  SELECT p_partkey AS i FROM part WHERE p_partkey < 900 AND p_partkey % 3 = 0
-), px AS (
-  SELECT i, unnest(range(0, 64)) AS p FROM img
-), pair AS (
-  SELECT i,
-    (((p % 8) * 3 + (p // 8) * 7 + i * 13) % 251) // 16 AS qa,
-    (((p % 8 + 1) * 3 + (p // 8) * 7 + i * 13) % 251) // 16 AS qb
-  FROM px WHERE p % 8 < 7
-), cnt AS (
-  SELECT i, qa, qb, CAST(count(*) AS BIGINT) AS n FROM pair GROUP BY 1, 2, 3
-), feat AS (
-  SELECT i, n, abs(qa - qb) AS d FROM cnt
-)
-SELECT printf('img%012d', i) AS image_id,
-       CAST(sum(n) AS BIGINT) AS n_pairs,
-       CAST(sum(n * d * d) AS BIGINT) AS contrast,
-       CAST(sum(n * d) AS BIGINT) AS dissim,
-       CAST(sum(n * n) AS BIGINT) AS energy,
-       CAST(sum(n * ({w_case})) AS BIGINT) AS homog_q
-FROM feat GROUP BY i
 """
 
 
@@ -6247,196 +5852,6 @@ FROM pts GROUP BY f
 """
 
 
-def q_otsu(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X89 (multimodal.otsu_threshold): per-image Otsu binarization
-    threshold over 300 mixed rawz/png 8x8 images — exact int64 histogram
-    cumulatives, engine-stable double score, smallest-t tie-break. The
-    oracle rebuilds the 255-candidate scan from the deterministic pixel
-    formula and replays the identical argmax."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.otsu_threshold(_synth_images(spark, sf_dir, 900, step=3))
-
-
-def _otsu_sql() -> str:
-    return """
-WITH img AS (
-  SELECT p_partkey AS i FROM part WHERE p_partkey < 900 AND p_partkey % 3 = 0
-), px AS (
-  SELECT i, unnest(range(0, 64)) AS p FROM img
-), v AS (
-  SELECT i, ((p % 8) * 3 + (p // 8) * 7 + i * 13) % 251 AS v FROM px
-), hist AS (
-  SELECT i, v, count(*) AS c FROM v GROUP BY i, v
-), tot AS (
-  SELECT i, CAST(sum(c) AS BIGINT) AS n, CAST(sum(v * c) AS BIGINT) AS s_all
-  FROM hist GROUP BY i
-), spine AS (
-  SELECT i, unnest(range(0, 255)) AS t FROM img
-), cum AS (
-  SELECT spine.i, spine.t,
-         CAST(coalesce(sum(h.c), 0) AS BIGINT) AS w0,
-         CAST(coalesce(sum(h.v * h.c), 0) AS BIGINT) AS s0
-  FROM spine LEFT JOIN hist h ON h.i = spine.i AND h.v <= spine.t
-  GROUP BY spine.i, spine.t
-), scored AS (
-  SELECT cum.i, t, w0, tot.n - w0 AS w1,
-         s0 * (tot.n - w0) - (tot.s_all - s0) * w0 AS num
-  FROM cum JOIN tot ON tot.i = cum.i
-  WHERE w0 > 0 AND w0 < tot.n
-), ranked AS (
-  SELECT i, t, w0, w1,
-         CAST(num AS DOUBLE) * CAST(num AS DOUBLE)
-           / CAST(w0 * w1 AS DOUBLE) AS score,
-         row_number() OVER (
-           PARTITION BY i
-           ORDER BY CAST(num AS DOUBLE) * CAST(num AS DOUBLE)
-                      / CAST(w0 * w1 AS DOUBLE) DESC, t ASC
-         ) AS rk
-  FROM scored
-)
-SELECT printf('img%012d', i) AS image_id, CAST(t AS INTEGER) AS threshold,
-       round(score, 6) + 0.0 AS score, w0 AS n_bg, w1 AS n_fg
-FROM ranked WHERE rk = 1
-"""
-
-
-def q_image_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X90 (multimodal.image_moments): raw + central moments, centroid and
-    principal orientation over 300 mixed-SIZE (8/16/24) mixed-format
-    images — six exact int64 raw moments pin every pixel's (x, y)
-    routing; cx/cy/theta replay the identical float assembly. The oracle
-    recomputes the sums from the deterministic pixel formula with
-    per-image width w = 8 * (1 + i % 3)."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.image_moments(_synth_images(spark, sf_dir, 300, step=1))
-
-
-def _image_moments_sql() -> str:
-    return """
-WITH img AS (
-  SELECT i, 8 * (1 + i % 3) AS w FROM (
-    SELECT p_partkey AS i FROM part WHERE p_partkey < 300
-  ) q
-), px AS (
-  SELECT i, w, unnest(range(0, w * w)) AS p FROM img
-), v AS (
-  SELECT i, p % w AS x, p // w AS y,
-         ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v
-  FROM px
-), m AS (
-  SELECT i,
-         CAST(sum(v) AS BIGINT) AS m00,
-         CAST(sum(x * v) AS BIGINT) AS m10,
-         CAST(sum(y * v) AS BIGINT) AS m01,
-         CAST(sum(x * x * v) AS BIGINT) AS m20,
-         CAST(sum(x * y * v) AS BIGINT) AS m11,
-         CAST(sum(y * y * v) AS BIGINT) AS m02
-  FROM v GROUP BY i
-), d AS (
-  SELECT *, CAST(m10 AS DOUBLE) / CAST(m00 AS DOUBLE) AS cx,
-            CAST(m01 AS DOUBLE) / CAST(m00 AS DOUBLE) AS cy
-  FROM m
-)
-SELECT printf('img%012d', i) AS image_id, m00, m10, m01, m20, m11, m02,
-       round(cx, 6) + 0.0 AS cx, round(cy, 6) + 0.0 AS cy,
-       round(0.5 * atan2(
-         2.0 * (CAST(m11 AS DOUBLE) - CAST(m10 AS DOUBLE) * cy),
-         (CAST(m20 AS DOUBLE) - CAST(m10 AS DOUBLE) * cx)
-           - (CAST(m02 AS DOUBLE) - CAST(m01 AS DOUBLE) * cy)
-       ), 6) + 0.0 AS theta
-FROM d
-"""
-
-
-def q_hist_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HISTOGRAM MATCHING (multimodal.histogram_match): remap each
-    source tile's distribution onto an independent reference tile with
-    the exact cross-multiplied CDF LUT (no floats, sizes may differ).
-    The oracle rebuilds both histograms from the pixel formula, windows
-    the CDFs over the 0..255 spine, and takes min-u per source value."""
-    from osm2geojson_spark.operators.multimodal import histogram_match
-
-    k = F.col("s_suppkey")
-    ia = ((F.lit(17) * k) % 251).cast("int")
-    ib = ((F.lit(29) * k + 5) % 251).cast("int")
-    w8 = F.lit(8).cast("int")
-    pairs = _t(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("pair_id"),
-        SYN._encode_image_fmt_udf(ia, w8, w8, F.lit("rawz")).alias("bytes_a"),
-        F.lit("rawz").alias("fmt_a"),
-        SYN._encode_image_fmt_udf(ib, w8, w8, F.lit("rawz")).alias("bytes_b"),
-        F.lit("rawz").alias("fmt_b"),
-    )
-    return histogram_match(pairs)
-
-
-_HIST_MATCH_SQL = """
-WITH s AS (
-  SELECT s_suppkey AS pid,
-         (17 * s_suppkey) % 251 AS ia,
-         (29 * s_suppkey + 5) % 251 AS ib
-  FROM supplier
-), px AS (
-  SELECT s.pid,
-         ((p % 8) * 3 + (p // 8) * 7 + s.ia * 13) % 251 AS va,
-         ((p % 8) * 3 + (p // 8) * 7 + s.ib * 13) % 251 AS vb
-  FROM s, (SELECT unnest(range(0, 64)) AS p)
-), spine AS (
-  SELECT s.pid, t.v
-  FROM s, (SELECT unnest(range(0, 256)) AS v) t
-), ha AS (
-  SELECT spine.pid, spine.v,
-         CAST(COALESCE(c.n, 0) AS BIGINT) AS c
-  FROM spine LEFT JOIN (
-    SELECT pid, va AS v, count(*) AS n FROM px GROUP BY pid, va
-  ) c ON c.pid = spine.pid AND c.v = spine.v
-), hb AS (
-  SELECT spine.pid, spine.v,
-         CAST(COALESCE(c.n, 0) AS BIGINT) AS c
-  FROM spine LEFT JOIN (
-    SELECT pid, vb AS v, count(*) AS n FROM px GROUP BY pid, vb
-  ) c ON c.pid = spine.pid AND c.v = spine.v
-), cdfa AS (
-  SELECT pid, v, c,
-         CAST(sum(c) OVER (PARTITION BY pid ORDER BY v) AS BIGINT) AS cdf
-  FROM ha
-), cdfb AS (
-  SELECT pid, v,
-         CAST(sum(c) OVER (PARTITION BY pid ORDER BY v) AS BIGINT) AS cdf
-  FROM hb
-), lut AS (
-  SELECT a.pid, a.v, a.c AS ca,
-         CAST(min(b.v) AS BIGINT) AS u
-  FROM cdfa a JOIN cdfb b
-    ON b.pid = a.pid AND b.cdf * 64 >= a.cdf * 64
-  WHERE a.c > 0
-  GROUP BY a.pid, a.v, a.c
-)
-SELECT pid AS pair_id,
-       CAST(sum(u * (v + 1)) AS BIGINT) AS lut_checksum,
-       CAST(sum(ca * u) AS BIGINT) AS out_sum,
-       CAST(min(u) AS BIGINT) AS out_min,
-       CAST(max(u) AS BIGINT) AS out_max
-FROM lut GROUP BY pid
-"""
-
-
-def q_min_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MIN VERTICAL SEAM (multimodal.min_seam): seam-carving DP over the
-    8x8 tiles' interior energy grid — all-integer energies and dp, so
-    the cost is engine-exact. The oracle UNROLLS the 6-row DP as chained
-    CTEs with inline formula energies (generated, no recursion)."""
-    from osm2geojson_spark.operators.multimodal import min_seam
-
-    imgs = _synth_images(spark, sf_dir, 360, step=3)  # all 8x8
-    return min_seam(imgs)
-
-
-_MIN_SEAM_SQL = "\nWITH img AS (\n  SELECT p_partkey AS i FROM part WHERE p_partkey < 360 AND p_partkey % 3 = 0\n), g AS (\n  SELECT i, xs.x AS x, ys.y AS y\n  FROM img, (SELECT unnest(range(1, 7)) AS x) xs,\n       (SELECT unnest(range(1, 7)) AS y) ys\n), en AS (\n  SELECT i, x - 1 AS x, y - 1 AS y, CAST((abs((((x + 1) * 3 + (y + 0) * 7 + i * 13) % 251) - (((x + -1) * 3 + (y + 0) * 7 + i * 13) % 251)) + abs((((x + 0) * 3 + (y + 1) * 7 + i * 13) % 251) - (((x + 0) * 3 + (y + -1) * 7 + i * 13) % 251))) AS BIGINT) AS e FROM g\n), d0 AS (\n  SELECT i, x, e AS dp FROM en WHERE y = 0\n), d1 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d0 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d0 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d0 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 1\n), d2 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d1 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d1 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d1 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 2\n), d3 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d2 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d2 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d2 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 3\n), d4 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d3 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d3 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d3 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 4\n), d5 AS (\n  SELECT e.i, e.x, e.e + least(\n           COALESCE(pl.dp, 1099511627776),\n           pc.dp,\n           COALESCE(pr.dp, 1099511627776)) AS dp\n  FROM en e\n  JOIN d4 pc ON pc.i = e.i AND pc.x = e.x\n  LEFT JOIN d4 pl ON pl.i = e.i AND pl.x = e.x - 1\n  LEFT JOIN d4 pr ON pr.i = e.i AND pr.x = e.x + 1\n  WHERE e.y = 5\n), best AS (\n  SELECT i, dp, x,\n         row_number() OVER (PARTITION BY i ORDER BY dp ASC, x ASC) AS rn\n  FROM d5\n), et AS (\n  SELECT i, CAST(sum(e) AS BIGINT) AS energy_total FROM en GROUP BY i\n)\nSELECT printf('img%012d', best.i) AS image_id,\n       CAST(best.dp AS BIGINT) AS seam_cost,\n       CAST(best.x AS BIGINT) AS seam_end_x,\n       et.energy_total\nFROM best JOIN et ON et.i = best.i\nWHERE best.rn = 1\n"
-
-
 def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WATER-FILLING TOKEN BUDGET (sampling.token_budget_fill): mix-plan
     allocation of a 200k-token budget over hash-sized domains — common
@@ -6505,114 +5920,6 @@ SELECT domain, tokens,
        END AS alloc,
        CASE WHEN 200000 >= total THEN FALSE ELSE tokens > tau END AS capped
 FROM ranked
-"""
-
-
-def q_block_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLOCK MOTION (multimodal.block_motion): SAD block matching over
-    synthetic frame pairs where frame B is an EXACT translation of frame
-    A — the formula's phase algebra encodes a spatial shift (inv(13) mod
-    251 = 58: phase_b = phase_a - 58*(3*dx+7*dy) mod 251), so the true
-    offset scores SAD 0 and the matcher must recover it. The oracle
-    enumerates the 25 candidate offsets with inline formula pixels and
-    replays the (sad/overlap, dy, dx) ranking."""
-    from osm2geojson_spark.operators.multimodal import block_motion
-
-    k = F.col("s_suppkey")
-    dx = (k % 5 - 2).cast("int")
-    dy = (F.floor(k / 5) % 5 - 2).cast("int")
-    ia = ((F.lit(17) * k) % 251).cast("int")
-    shift = (F.lit(3) * dx + F.lit(7) * dy).cast("int")
-    ib = F.pmod(ia - F.lit(58) * shift, F.lit(251)).cast("int")
-    sup = _t(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("pair_id"),
-        ia.alias("_ia"),
-        ib.alias("_ib"),
-    )
-    w8 = F.lit(8).cast("int")
-    pairs = sup.select(
-        "pair_id",
-        SYN._encode_image_fmt_udf(F.col("_ia"), w8, w8, F.lit("rawz")).alias(
-            "bytes_a"
-        ),
-        F.lit("rawz").alias("fmt_a"),
-        SYN._encode_image_fmt_udf(F.col("_ib"), w8, w8, F.lit("rawz")).alias(
-            "bytes_b"
-        ),
-        F.lit("rawz").alias("fmt_b"),
-    )
-    return block_motion(pairs, search=2)
-
-
-_BLOCK_MOTION_SQL = """
-WITH s AS (
-  SELECT s_suppkey AS pair_id,
-         (17 * s_suppkey) % 251 AS ia,
-         ((((17 * s_suppkey) % 251)
-           - 58 * (3 * (s_suppkey % 5 - 2)
-                   + 7 * ((s_suppkey // 5) % 5 - 2))) % 251 + 251) % 251 AS ib
-  FROM supplier
-), offs AS (
-  SELECT ox.dx, oy.dy
-  FROM (SELECT unnest(range(-2, 3)) AS dx) ox,
-       (SELECT unnest(range(-2, 3)) AS dy) oy
-), cand AS (
-  SELECT s.pair_id, o.dx, o.dy,
-         CAST(sum(abs(
-           ((g.x * 3 + g.y * 7 + s.ia * 13) % 251)
-           - (((g.x + o.dx) * 3 + (g.y + o.dy) * 7 + s.ib * 13) % 251)
-         )) AS BIGINT) AS sad,
-         CAST(count(*) AS BIGINT) AS n
-  FROM s, offs o,
-       (SELECT xs.x, ys.y
-        FROM (SELECT unnest(range(0, 8)) AS x) xs,
-             (SELECT unnest(range(0, 8)) AS y) ys) g
-  WHERE g.x + o.dx >= 0 AND g.x + o.dx < 8
-    AND g.y + o.dy >= 0 AND g.y + o.dy < 8
-  GROUP BY s.pair_id, o.dx, o.dy
-), ranked AS (
-  SELECT pair_id, dx, dy, sad, n,
-         row_number() OVER (PARTITION BY pair_id
-                            ORDER BY CAST(sad AS DOUBLE) / n, dy, dx) AS rn
-  FROM cand
-)
-SELECT pair_id, CAST(dx AS BIGINT) AS best_dx, CAST(dy AS BIGINT) AS best_dy,
-       sad AS best_sad, n AS overlap_px
-FROM ranked WHERE rn = 1
-"""
-
-
-def q_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE ENTROPY (multimodal.image_entropy): per-tile Shannon
-    entropy of the intensity histogram, micro-quantized terms before the
-    order-free sum. The oracle rebuilds the
-    histogram from the pixel formula and replays the identical float
-    assembly."""
-    from osm2geojson_spark.operators.multimodal import image_entropy
-
-    imgs = _synth_images(spark, sf_dir, 360, step=3)  # all 8x8
-    return image_entropy(imgs)
-
-
-_IMAGE_ENTROPY_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i FROM part WHERE p_partkey < 360 AND p_partkey % 3 = 0
-), px AS (
-  SELECT i, ((p % 8) * 3 + (p // 8) * 7 + i * 13) % 251 AS v
-  FROM (SELECT i, unnest(range(0, 64)) AS p FROM img)
-), hist AS (
-  SELECT i, v, CAST(count(*) AS BIGINT) AS c FROM px GROUP BY i, v
-), agg AS (
-  SELECT i, CAST(sum(c) AS BIGINT) AS n_px,
-         CAST(count(*) AS BIGINT) AS n_values,
-         CAST(sum(CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)) * 1e6)
-                       AS BIGINT)) AS BIGINT) AS s_q
-  FROM hist GROUP BY i
-)
-SELECT printf('img%012d', i) AS image_id, n_px, n_values, s_q,
-       round(ln(CAST(n_px AS DOUBLE)) - (s_q / 1e6) / n_px, 6) + 0.0
-         AS entropy
-FROM agg
 """
 
 
@@ -7134,78 +6441,6 @@ FROM c GROUP BY part_key, bin_id
 """
 
 
-def q_morphology(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X149 (multimodal.morphology_stats): 3x3 erosion / dilation /
-    morphological gradient over 300 mixed rawz/png 8x8 images — min and
-    max of 9 integer neighbors are pure order statistics, so interior
-    stats are engine-exact. Oracle replays the deterministic pixel
-    formula with min()/max() aggregates over the 9-shift neighborhood
-    (same shape as the median-filter twin)."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.morphology_stats(_synth_images(spark, sf_dir, 900, step=3))
-
-
-_INTEGRAL_BOXES = [
-    (0, 0, 3, 3),   # NW quadrant
-    (4, 0, 7, 3),   # NE
-    (0, 4, 3, 7),   # SW
-    (4, 4, 7, 7),   # SE
-    (2, 2, 5, 5),   # center crop
-    (0, 0, 7, 7),   # full frame
-    (3, 1, 20, 6),  # clipped on the right edge
-]
-
-
-def q_color_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X224 (multimodal.median_cut_palette): depth-2 median-cut
-    palettes over 30 synthetic 16x16 RGB pixel tables (three coprime
-    channel formulas) — widest-channel lower-median cuts, count-
-    selected, no floats; twin unrolls both cut rounds."""
-    from osm2geojson_spark.operators.multimodal import median_cut_palette
-
-    k = F.col("p_partkey")
-    imgs = _t(spark, sf_dir, "part").filter(k < 30).select(
-        F.format_string("img%012d", k).alias("image_id"),
-        k.alias("_i"),
-    )
-    px = imgs.select(
-        "image_id",
-        "_i",
-        F.explode(F.sequence(F.lit(0), F.lit(255))).alias("p"),
-    ).select(
-        "image_id",
-        ((F.col("p") % 16) * 3 + (F.col("p") / 16).cast("long") * 7
-         + F.col("_i") * 13).alias("_a"),
-        ((F.col("p") % 16) * 5 + (F.col("p") / 16).cast("long") * 11
-         + F.col("_i") * 17).alias("_b"),
-        ((F.col("p") % 16) * 7 + (F.col("p") / 16).cast("long") * 3
-         + F.col("_i") * 19).alias("_c"),
-    ).select(
-        "image_id",
-        (F.col("_a") % 251).alias("r"),
-        (F.col("_b") % 241).alias("g"),
-        (F.col("_c") % 239).alias("b"),
-    )
-    return median_cut_palette(px)
-
-
-def _color_quantize_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import median_cut_palette_sql
-
-    px = """
-SELECT printf('img%012d', i) AS image_id,
-       ((p % 16) * 3 + (p // 16) * 7 + i * 13) % 251 AS r,
-       ((p % 16) * 5 + (p // 16) * 11 + i * 17) % 241 AS g,
-       ((p % 16) * 7 + (p // 16) * 3 + i * 19) % 239 AS b
-FROM (
-  SELECT i, unnest(range(0, 256)) AS p
-  FROM (SELECT p_partkey AS i FROM part WHERE p_partkey < 30)
-)
-"""
-    return median_cut_palette_sql(px)
-
-
 def q_anchor_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X222 (boxes.anchor_assign): detector-training anchor labeling —
     10 images x 3 hash-placed GT boxes against a 4x4 stride-16 anchor
@@ -7236,31 +6471,6 @@ def _anchor_assign_sql() -> str:
         " (p_partkey * 29) % 40 + 10 + p_partkey % 7 AS y1"
         " FROM part WHERE p_partkey < 30"
     )
-
-
-def q_demosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X216 (multimodal.demosaic_stats): bilinear RGGB demosaic over
-    300 mixed rawz/png mosaics — 4x fixed-point exact channels, the
-    position-weighted checksum pins every pixel/branch; twin replays
-    the CASE rules via one tagged-offset neighbor join."""
-    from osm2geojson_spark.operators.multimodal import demosaic_stats
-
-    return demosaic_stats(_synth_images(spark, sf_dir, 300))
-
-
-def _demosaic_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import demosaic_stats_sql
-
-    px = """
-SELECT printf('img%012d', i) AS image_id, (p % w) AS x, (p // w) AS y,
-       ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v, w, w AS h
-FROM (
-  SELECT i, w, unnest(range(0, w * w)) AS p
-  FROM (SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-        FROM part WHERE p_partkey < 300)
-)
-"""
-    return demosaic_stats_sql(px)
 
 
 def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7376,31 +6586,6 @@ FROM part WHERE p_partkey < 10
     return iou_track_sql(dets, iou_threshold=0.3)
 
 
-def q_haar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X210 (multimodal.haar_energy): 2-level unnormalized Haar (the
-    lossless S-transform) subband energies over 300 mixed rawz/png
-    images — exact int64 signed block sums and energies; the twin
-    regroups the pixel formula through the same two lifting rounds."""
-    from osm2geojson_spark.operators.multimodal import haar_energy
-
-    return haar_energy(_synth_images(spark, sf_dir, 300))
-
-
-def _haar_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import haar_energy_sql
-
-    px = """
-SELECT printf('img%012d', i) AS image_id, (p % w) AS x, (p // w) AS y,
-       ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v
-FROM (
-  SELECT i, w, unnest(range(0, w * w)) AS p
-  FROM (SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-        FROM part WHERE p_partkey < 300)
-)
-"""
-    return haar_energy_sql(px)
-
-
 def q_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X206 (sampling.coverage_select): greedy max-coverage curation —
     pick 6 documents (doc_id < 150) maximizing marginal new-vocabulary
@@ -7418,68 +6603,6 @@ def _coverage_select_sql() -> str:
     return coverage_select_sql(
         "SELECT doc_id, text FROM documents WHERE doc_id < 150", k=6
     )
-
-
-def q_brief_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X204 (multimodal.brief_match): BRIEF 63-bit binary descriptors +
-    Hamming matching over frame pairs where B is an exact translation
-    of A (phase algebra: ib = ia + 58*(3*dx+7*dy) mod 251, inv(13) mod
-    251 = 58), mixed 16/24 px frames — every interior-A keypoint gets
-    its best-Hamming B keypoint, ties (my, mx) ascending; all integer,
-    twin replays bits from the pixel formula + the offsets VALUES."""
-    from osm2geojson_spark.operators.multimodal import brief_match
-
-    k = F.col("s_suppkey")
-    dx = (k % 5 - 2).cast("int")
-    dy = (F.floor(k / 5) % 5 - 2).cast("int")
-    ia = ((F.lit(17) * k) % 251).cast("int")
-    ib = F.pmod(ia + F.lit(58) * (F.lit(3) * dx + F.lit(7) * dy), F.lit(251)).cast(
-        "int"
-    )
-    w = (F.lit(16) + F.lit(8) * (k % 2)).cast("int")
-    sup = _t(spark, sf_dir, "supplier").filter(k < 25).select(
-        k.alias("pair_id"), ia.alias("_ia"), ib.alias("_ib"), w.alias("_w")
-    )
-    pairs = sup.select(
-        "pair_id",
-        SYN._encode_image_fmt_udf(
-            F.col("_ia"), F.col("_w"), F.col("_w"), F.lit("rawz")
-        ).alias("bytes_a"),
-        F.lit("rawz").alias("fmt_a"),
-        SYN._encode_image_fmt_udf(
-            F.col("_ib"), F.col("_w"), F.col("_w"), F.lit("rawz")
-        ).alias("bytes_b"),
-        F.lit("rawz").alias("fmt_b"),
-    )
-    return brief_match(pairs)
-
-
-def _brief_match_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import brief_match_sql
-
-    base = """
-SELECT s_suppkey AS k,
-       (17 * s_suppkey) % 251 AS ia,
-       (((17 * s_suppkey) % 251
-         + 58 * (3 * (s_suppkey % 5 - 2)
-                 + 7 * ((s_suppkey // 5) % 5 - 2))) % 251 + 251) % 251 AS ib,
-       16 + 8 * (s_suppkey % 2) AS w
-FROM supplier WHERE s_suppkey < 25
-"""
-    px = f"""
-SELECT k AS pair_id, side, p % w AS x, p // w AS y,
-       (3 * (p % w) + 7 * (p // w) + 13 * i) % 251 AS v
-FROM (
-  SELECT k, w, 'a' AS side, ia AS i FROM ({base})
-  UNION ALL
-  SELECT k, w, 'b' AS side, ib AS i FROM ({base})
-), unnest(range(0, w * w)) t(p)
-"""
-    dims = f"""
-SELECT k AS pair_id, side, w, w AS h
-FROM ({base}), (SELECT 'a' AS side UNION ALL SELECT 'b' AS side)
-"""
-    return brief_match_sql(px, dims)
 
 
 def q_delaunay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7508,47 +6631,6 @@ def _delaunay_sql() -> str:
         " (c_custkey * 2246822519 + 7) % 1013 AS y"
         " FROM customer WHERE c_custkey < 160"
     )
-
-
-def q_dither(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X200 (multimodal.ordered_dither): Bayer 4x4 ordered-dithering
-    census over 300 mixed-size (8/16/24 px) mixed-format (rawz/png)
-    images — exact-integer threshold v >= 16*M[y%4][x%4] + 8, 16
-    per-phase (n_px, ones) rows per image. The oracle replays every
-    pixel from the deterministic formula and joins the same matrix as
-    VALUES, so a codec or threshold bug in either engine breaks the
-    hash."""
-    from osm2geojson_spark.operators.multimodal import ordered_dither
-
-    return ordered_dither(_synth_images(spark, sf_dir, 300))
-
-
-def _dither_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import bayer4_values_sql
-
-    return f"""
-WITH img AS (
-  SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-  FROM part WHERE p_partkey < 300
-), px AS (
-  SELECT i,
-         (xs.x * 3 + ys.y * 7 + i * 13) % 251 AS v,
-         (ys.y % 4) * 4 + (xs.x % 4) AS phase,
-         ys.y % 4 AS my, xs.x % 4 AS mx
-  FROM img,
-       (SELECT unnest(range(0, 24)) AS x) xs,
-       (SELECT unnest(range(0, 24)) AS y) ys
-  WHERE xs.x < img.w AND ys.y < img.w
-)
-SELECT printf('img%012d', i) AS image_id,
-       CAST(phase AS BIGINT) AS phase,
-       CAST(count(*) AS BIGINT) AS n_px,
-       CAST(sum(CASE WHEN v >= 16 * bayer.m + 8 THEN 1 ELSE 0 END)
-            AS BIGINT) AS ones
-FROM px JOIN {bayer4_values_sql()}
-  ON bayer.my = px.my AND bayer.mx = px.mx
-GROUP BY 1, 2
-"""
 
 
 def q_mask_iou(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7591,150 +6673,6 @@ SELECT CAST(i % 10 AS VARCHAR) AS grp,
 FROM m GROUP BY i, g
 """
     return mask_iou_sql(runs)
-
-
-def q_fast_corners(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X197 (multimodal.fast_corners): FAST-9 keypoint detection over
-    300 block-pattern images (4-px bright/dark tiles + a bounded <t
-    texture term, so every detection comes from real 2-D corner
-    geometry — the plain ramp's straight level sets can never light 9
-    contiguous ring pixels) — 16-pixel Bresenham ring, >= 9 contiguous
-    brighter/darker test via the bitmask-doubling trick. Pure integer;
-    the oracle rebuilds the ring masks from the same block formula and
-    replays the identical 16-shift OR."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    @pandas_udf("binary")
-    def enc_blocks(i: pd.Series, w: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from osm2geojson_spark.functions import imagecodec as IC
-
-        out = []
-        for ii, ww in zip(i, w):
-            ii, ww = int(ii), int(ww)
-            y, x = np.mgrid[0:ww, 0:ww]
-            px = (
-                np.where((x // 4 + y // 4 + ii) % 3 == 0, 200, 0)
-                + (x + 2 * y + ii) % 17
-            ).astype(np.uint8)
-            out.append(IC.encode_rawz(px))
-        return pd.Series(out)
-
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 300)
-    w = (F.lit(8) * (F.lit(1) + F.col("p_partkey") % 3)).cast("int")
-    imgs = part.select(
-        F.format_string("img%012d", F.col("p_partkey")).alias("image_id"),
-        F.col("p_partkey").alias("_i"),
-        w.alias("w"),
-        w.alias("h"),
-        F.lit("rawz").alias("fmt"),
-    ).withColumn("bytes", enc_blocks(F.col("_i"), F.col("w")))
-    return MM2.fast_corners(imgs, t=20)
-
-
-def _fast_corners_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import FAST_RING
-
-    t = 20
-
-    def v(dx: int, dy: int) -> str:
-        return (
-            f"(CASE WHEN ((x + {dx}) // 4 + (y + {dy}) // 4 + i) % 3 = 0"
-            f" THEN 200 ELSE 0 END"
-            f" + ((x + {dx}) + 2 * (y + {dy}) + i) % 17)"
-        )
-
-    bm = " + ".join(
-        f"(CASE WHEN ({v(dx, dy)}) > ({v(0, 0)}) + {t}"
-        f" THEN {1 << k} ELSE 0 END)"
-        for k, (dx, dy) in enumerate(FAST_RING)
-    )
-    dm = " + ".join(
-        f"(CASE WHEN ({v(dx, dy)}) < ({v(0, 0)}) - {t}"
-        f" THEN {1 << k} ELSE 0 END)"
-        for k, (dx, dy) in enumerate(FAST_RING)
-    )
-    b_run = " OR ".join(
-        f"(((bm * 65537) >> {s}) & 511) = 511" for s in range(16)
-    )
-    d_run = " OR ".join(
-        f"(((dm * 65537) >> {s}) & 511) = 511" for s in range(16)
-    )
-    return f"""
-WITH img AS (
-  SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-  FROM part WHERE p_partkey < 300
-), px AS (
-  SELECT i, w, unnest(range(0, w * w)) AS p FROM img
-), inner_px AS (
-  SELECT i, w, (p % w) AS x, (p // w) AS y FROM px
-  WHERE (p % w) >= 3 AND (p % w) <= w - 4
-    AND (p // w) >= 3 AND (p // w) <= w - 4
-), masks AS (
-  SELECT i, x, y,
-         CAST(({bm}) AS BIGINT) AS bm,
-         CAST(({dm}) AS BIGINT) AS dm
-  FROM inner_px
-), flags AS (
-  SELECT i, x, y,
-         CASE WHEN {b_run} THEN 1 ELSE 0 END AS bright,
-         CASE WHEN {d_run} THEN 1 ELSE 0 END AS dark
-  FROM masks
-)
-SELECT printf('img%012d', i) AS image_id,
-       CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
-       CAST(bright AS BIGINT) AS bright, CAST(dark AS BIGINT) AS dark
-FROM flags WHERE bright = 1 OR dark = 1
-"""
-
-
-def q_lbp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X196 (multimodal.lbp_histogram): uniform local-binary-pattern
-    texture histograms over 300 mixed rawz/png images — 8-bit clockwise
-    neighbor codes folded through the Ojala uniform LUT into 10 bins.
-    Pure integer comparisons; the oracle recomputes every neighbor from
-    the deterministic pixel formula and joins the identical LUT as
-    VALUES, so one misrouted pixel breaks the hash."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    imgs = _synth_images(spark, sf_dir, 300)
-    return MM2.lbp_histogram(imgs)
-
-
-def _lbp_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import (
-        LBP_OFFSETS,
-        lbp_uniform_bin,
-    )
-
-    def v(dx: int, dy: int) -> str:
-        return f"((x + {dx}) * 3 + (y + {dy}) * 7 + i * 13) % 251"
-
-    code = " + ".join(
-        f"(CASE WHEN ({v(dx, dy)}) >= ({v(0, 0)}) THEN {1 << k} ELSE 0 END)"
-        for k, (dx, dy) in enumerate(LBP_OFFSETS)
-    )
-    lut = ", ".join(f"({c}, {lbp_uniform_bin(c)})" for c in range(256))
-    return f"""
-WITH img AS (
-  SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-  FROM part WHERE p_partkey < 300
-), px AS (
-  SELECT i, w, unnest(range(0, w * w)) AS p FROM img
-), inner_px AS (
-  SELECT i, w, (p % w) AS x, (p // w) AS y FROM px
-  WHERE (p % w) >= 1 AND (p % w) <= w - 2
-    AND (p // w) >= 1 AND (p // w) <= w - 2
-), codes AS (
-  SELECT i, ({code}) AS code FROM inner_px
-), lut(code, bin) AS (VALUES {lut})
-SELECT printf('img%012d', i) AS image_id,
-       CAST(lut.bin AS BIGINT) AS bin,
-       CAST(count(*) AS BIGINT) AS cnt
-FROM codes JOIN lut USING (code)
-GROUP BY 1, 2
-"""
 
 
 def q_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7820,381 +6758,6 @@ FROM customer GROUP BY 1
     return scan_stat_sql(hist, res=4, k_max=2, top=5)
 
 
-def q_ssim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X169 (multimodal.ssim_pairs): windowed SSIM over 120 image pairs
-    of 16x16 synthetic images (mixed rawz/png) — every 3rd pair is
-    identical (mssim exactly 1.0), the rest pair different formula
-    seeds. Per-tile SSIM is assembled from six integer sufficient stats
-    with denominators cleared by 400*n^2 (C1 = 2601/400, C2 = 23409/400
-    exact), micro-quantized, and summed order-free; the oracle rebuilds
-    the window sums from the pixel formula and replays the identical
-    double assembly."""
-    from osm2geojson_spark.operators.multimodal import ssim_pairs
-
-    k = F.col("p_partkey")
-    w16 = F.lit(16).cast("int")
-    seed_b = (
-        F.when(k % 3 == 0, k)
-        .when(k % 3 == 1, k + 1)
-        .otherwise(k * 2 + 9)
-        .cast("int")
-    )
-    fmt_a = F.when(k % 7 == 0, F.lit("png")).otherwise(F.lit("rawz"))
-    pairs = (
-        _t(spark, sf_dir, "part")
-        .filter((k < 240) & (k % 2 == 0))
-        .select(
-            k.alias("pair_id"),
-            SYN._encode_image_fmt_udf(k.cast("int"), w16, w16, fmt_a).alias(
-                "bytes_a"
-            ),
-            fmt_a.alias("fmt_a"),
-            SYN._encode_image_fmt_udf(
-                seed_b, w16, w16, F.lit("rawz")
-            ).alias("bytes_b"),
-            F.lit("rawz").alias("fmt_b"),
-        )
-    )
-    return ssim_pairs(pairs, window=8)
-
-
-_SSIM_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i,
-         CASE WHEN p_partkey % 3 = 0 THEN p_partkey
-              WHEN p_partkey % 3 = 1 THEN p_partkey + 1
-              ELSE p_partkey * 2 + 9 END AS sb
-  FROM part WHERE p_partkey < 240 AND p_partkey % 2 = 0
-), g AS (
-  SELECT unnest(range(0, 16)) AS c
-), px AS (
-  SELECT i, gx.c // 8 AS wx, gy.c // 8 AS wy,
-         (gx.c * 3 + gy.c * 7 + i * 13) % 251 AS va,
-         (gx.c * 3 + gy.c * 7 + sb * 13) % 251 AS vb
-  FROM img, g gx, g gy
-), tiles AS (
-  SELECT i, wx, wy,
-         CAST(sum(va) AS BIGINT) AS sa, CAST(sum(vb) AS BIGINT) AS sb,
-         CAST(sum(va * va) AS BIGINT) AS saa,
-         CAST(sum(vb * vb) AS BIGINT) AS sbb,
-         CAST(sum(va * vb) AS BIGINT) AS sab
-  FROM px GROUP BY i, wx, wy
-), scored AS (
-  SELECT i,
-         CAST(round(
-           (CAST(800 * sa * sb + 2601 * 4096 AS DOUBLE)
-            / (400 * (sa * sa + sb * sb) + 2601 * 4096))
-           * (CAST(800 * (64 * sab - sa * sb) + 23409 * 4096 AS DOUBLE)
-              / (400 * (64 * (saa + sbb) - sa * sa - sb * sb)
-                 + 23409 * 4096))
-           * 1e6) AS BIGINT) AS q
-  FROM tiles
-)
-SELECT i AS pair_id, CAST(count(*) AS INTEGER) AS n_win,
-       sum(q) AS ssim_q_sum, min(q) AS ssim_q_min,
-       CAST(sum(q) AS DOUBLE) / (1e6 * count(*)) AS mssim
-FROM scored GROUP BY i
-"""
-
-
-def q_morph_openclose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X168 (multimodal.morphology_openclose): 3x3 greyscale erosion/dilation/
-    opening/closing/gradient over 120 synthetic 16x16 images (mixed
-    rawz/png wire formats) — per-image integer pixel sums plus
-    position-weighted checksums. The oracle replays the clipped-border
-    min/max stencils as two levels of neighbor self-joins over the
-    unnested pixel grid."""
-    from osm2geojson_spark.operators.multimodal import morphology_openclose
-
-    k = F.col("p_partkey")
-    w16 = F.lit(16).cast("int")
-    images = (
-        _t(spark, sf_dir, "part")
-        .filter((k < 240) & (k % 2 == 0))
-        .select(
-            k.alias("image_id"),
-            SYN._encode_image_fmt_udf(
-                k.cast("int"),
-                w16,
-                w16,
-                F.when(k % 7 == 0, F.lit("png")).otherwise(F.lit("rawz")),
-            ).alias("bytes"),
-            F.when(k % 7 == 0, F.lit("png")).otherwise(F.lit("rawz")).alias(
-                "fmt"
-            ),
-        )
-    )
-    return morphology_openclose(images)
-
-
-_MORPH_OPENCLOSE_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i FROM part
-  WHERE p_partkey < 240 AND p_partkey % 2 = 0
-), g AS (
-  SELECT unnest(range(0, 16)) AS c
-), px AS (
-  SELECT i, gx.c AS x, gy.c AS y,
-         (gx.c * 3 + gy.c * 7 + i * 13) % 251 AS v
-  FROM img, g gx, g gy
-), ero AS (
-  SELECT p.i, p.x, p.y, min(q.v) AS v
-  FROM px p JOIN px q
-    ON q.i = p.i AND q.x BETWEEN p.x - 1 AND p.x + 1
-   AND q.y BETWEEN p.y - 1 AND p.y + 1
-  GROUP BY p.i, p.x, p.y
-), dil AS (
-  SELECT p.i, p.x, p.y, max(q.v) AS v
-  FROM px p JOIN px q
-    ON q.i = p.i AND q.x BETWEEN p.x - 1 AND p.x + 1
-   AND q.y BETWEEN p.y - 1 AND p.y + 1
-  GROUP BY p.i, p.x, p.y
-), opn AS (
-  SELECT p.i, p.x, p.y, max(q.v) AS v
-  FROM ero p JOIN ero q
-    ON q.i = p.i AND q.x BETWEEN p.x - 1 AND p.x + 1
-   AND q.y BETWEEN p.y - 1 AND p.y + 1
-  GROUP BY p.i, p.x, p.y
-), cls AS (
-  SELECT p.i, p.x, p.y, min(q.v) AS v
-  FROM dil p JOIN dil q
-    ON q.i = p.i AND q.x BETWEEN p.x - 1 AND p.x + 1
-   AND q.y BETWEEN p.y - 1 AND p.y + 1
-  GROUP BY p.i, p.x, p.y
-)
-SELECT e.i AS image_id,
-       CAST(sum(e.v) AS BIGINT) AS ero_sum,
-       CAST(sum(d.v) AS BIGINT) AS dil_sum,
-       CAST(sum(o.v) AS BIGINT) AS open_sum,
-       CAST(sum(c.v) AS BIGINT) AS close_sum,
-       CAST(sum(d.v - e.v) AS BIGINT) AS grad_sum,
-       CAST(sum(e.v * (1 + e.x + 16 * e.y)) AS BIGINT) AS ero_chk,
-       CAST(sum(o.v * (1 + o.x + 16 * o.y)) AS BIGINT) AS open_chk
-FROM ero e
-JOIN dil d ON d.i = e.i AND d.x = e.x AND d.y = e.y
-JOIN opn o ON o.i = e.i AND o.x = e.x AND o.y = e.y
-JOIN cls c ON c.i = e.i AND c.x = e.x AND c.y = e.y
-GROUP BY e.i
-"""
-
-
-def q_motion_field(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X167 (multimodal.motion_field): per-tile block-matching motion field
-    over 120 frame pairs of 20x20 quadratic-pattern frames — pairs with
-    i % 5 != 0 have frame B = frame A shifted by a planted (sx, sy) in
-    [-1, 1]^2 (SAD exactly 0 at the feasible argmin), the rest pair two
-    unrelated patterns. The SAD argmin is pure int64; the oracle replays
-    the pixel formula and the (sad, dv, du) tournament via NOT EXISTS."""
-    from osm2geojson_spark.operators.multimodal import motion_field
-
-    @pandas_udf("binary")
-    def enc_frame(
-        seed: pd.Series, sx: pd.Series, sy: pd.Series
-    ) -> pd.Series:
-        import numpy as np
-
-        from osm2geojson_spark.functions import imagecodec as IC
-
-        out = []
-        for s, ox, oy in zip(seed, sx, sy):
-            y, x = np.mgrid[0:20, 0:20]
-            u = x + 2 + int(ox)
-            v = y + 2 + int(oy)
-            px = (
-                (3 * u * u + 7 * v * v + 5 * u * v + 11 * u + 2 * v
-                 + 13 * int(s)) % 251
-            ).astype(np.uint8)
-            out.append(IC.encode_rawz(px))
-        return pd.Series(out)
-
-    k = F.col("p_partkey")
-    zero = F.lit(0).cast("long")
-    unrelated = k % 5 == 0
-    seed_b = F.when(unrelated, k * 2 + 7).otherwise(k)
-    sx = F.when(unrelated, zero).otherwise(k % 3 - 1)
-    sy = F.when(unrelated, zero).otherwise((k / 3).cast("long") % 3 - 1)
-    pairs = (
-        _t(spark, sf_dir, "part")
-        .filter((k < 240) & (k % 2 == 0))
-        .select(
-            k.alias("pair_id"),
-            enc_frame(k, zero, zero).alias("bytes_a"),
-            F.lit("rawz").alias("fmt_a"),
-            enc_frame(seed_b, sx, sy).alias("bytes_b"),
-            F.lit("rawz").alias("fmt_b"),
-        )
-    )
-    return motion_field(pairs, block=8, radius=2)
-
-
-_MOTION_FIELD_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i,
-         CASE WHEN p_partkey % 5 = 0 THEN 2 * p_partkey + 7
-              ELSE p_partkey END AS seed_b,
-         CASE WHEN p_partkey % 5 = 0 THEN 0
-              ELSE (p_partkey % 3) - 1 END AS sx,
-         CASE WHEN p_partkey % 5 = 0 THEN 0
-              ELSE ((p_partkey // 3) % 3) - 1 END AS sy
-  FROM part WHERE p_partkey < 240 AND p_partkey % 2 = 0
-), bgrid AS (
-  SELECT unnest([0, 8]) AS b
-), offs AS (
-  SELECT unnest(range(-2, 3)) AS o
-), px AS (
-  SELECT unnest(range(0, 8)) AS p
-), ppx AS (
-  SELECT m.i, m.seed_b,
-         gx.b AS bx, gy.b AS by, ou.o AS du, ov.o AS dv,
-         gx.b + qx.p + 2 AS ua, gy.b + qy.p + 2 AS va,
-         gx.b + ou.o + qx.p + 2 + m.sx AS ub,
-         gy.b + ov.o + qy.p + 2 + m.sy AS vb
-  FROM img m, bgrid gx, bgrid gy, offs ou, offs ov, px qx, px qy
-  WHERE gx.b + ou.o >= 0 AND gx.b + ou.o + 8 <= 20
-    AND gy.b + ov.o >= 0 AND gy.b + ov.o + 8 <= 20
-), cand AS (
-  SELECT i, bx, by, du, dv,
-         CAST(sum(abs(
-           ((3*ua*ua + 7*va*va + 5*ua*va + 11*ua + 2*va + 13*i) % 251)
-           - ((3*ub*ub + 7*vb*vb + 5*ub*vb + 11*ub + 2*vb + 13*seed_b) % 251)
-         )) AS BIGINT) AS sad
-  FROM ppx GROUP BY i, bx, by, du, dv
-), best AS (
-  SELECT c1.* FROM cand c1
-  WHERE NOT EXISTS (
-    SELECT 1 FROM cand c2
-    WHERE c2.i = c1.i AND c2.bx = c1.bx AND c2.by = c1.by
-      AND NOT (c2.du = c1.du AND c2.dv = c1.dv)
-      AND (c2.sad < c1.sad
-           OR (c2.sad = c1.sad
-               AND (c2.dv < c1.dv
-                    OR (c2.dv = c1.dv AND c2.du < c1.du))))
-  )
-)
-SELECT i AS pair_id, CAST(bx AS INTEGER) AS bx, CAST(by AS INTEGER) AS by,
-       CAST(du AS INTEGER) AS du, CAST(dv AS INTEGER) AS dv, sad
-FROM best
-"""
-
-
-def q_template_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X166 (multimodal.template_match): exact-NCC template localization
-    over 120 image/template pairs — every 4th pair's template is a crop
-    of its own image (planted argmax at (4,4), NCC exactly 1.0), the
-    rest crop a DIFFERENT image's field. The argmax is float-free
-    (sign rules + cross-multiplied integer comparison); the oracle
-    replays it as a NOT-EXISTS tournament with HUGEINT cross products
-    and the identical (y, x) tie order."""
-    from osm2geojson_spark.operators.multimodal import template_match
-
-    @pandas_udf("binary")
-    def enc_tpl(j: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from osm2geojson_spark.functions import imagecodec as IC
-
-        out = []
-        for jj in j:
-            y, x = np.mgrid[0:8, 0:8]
-            px = (((x + 4) * 3 + (y + 4) * 7 + int(jj) * 13) % 251).astype(
-                np.uint8
-            )
-            out.append(IC.encode_rawz(px))
-        return pd.Series(out)
-
-    k = F.col("p_partkey")
-    w16 = F.lit(16).cast("int")
-    jt = F.when(k % 4 == 0, k).otherwise(k + 5).cast("int")
-    pairs = (
-        _t(spark, sf_dir, "part")
-        .filter((k < 240) & (k % 2 == 0))
-        .select(
-            k.alias("pair_id"),
-            SYN._encode_image_fmt_udf(
-                k.cast("int"),
-                w16,
-                w16,
-                F.when(k % 7 == 0, F.lit("png")).otherwise(F.lit("rawz")),
-            ).alias("bytes_img"),
-            F.when(k % 7 == 0, F.lit("png")).otherwise(F.lit("rawz")).alias(
-                "fmt_img"
-            ),
-            enc_tpl(jt).alias("bytes_tpl"),
-            F.lit("rawz").alias("fmt_tpl"),
-        )
-    )
-    return template_match(pairs)
-
-
-_TEMPLATE_MATCH_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i,
-         CASE WHEN p_partkey % 4 = 0 THEN p_partkey
-              ELSE p_partkey + 5 END AS jt
-  FROM part WHERE p_partkey < 240 AND p_partkey % 2 = 0
-), tgrid AS (
-  SELECT unnest(range(0, 8)) AS tx
-), tpx AS (
-  SELECT i, jt, gx.tx, gy.tx AS ty,
-         ((gx.tx + 4) * 3 + (gy.tx + 4) * 7 + jt * 13) % 251 AS tv
-  FROM img, tgrid gx, tgrid gy
-), tstats AS (
-  SELECT i, CAST(sum(tv) AS BIGINT) AS s_t,
-         CAST(sum(tv * tv) AS BIGINT) AS s_tt
-  FROM tpx GROUP BY i
-), offs AS (
-  SELECT unnest(range(0, 9)) AS o
-), cand AS (
-  SELECT t.i, ou.o AS u, ov.o AS v,
-         CAST(64 * sum(((ou.o + t.tx) * 3 + (ov.o + t.ty) * 7 + t.i * 13)
-                       % 251 * t.tv) AS BIGINT)
-           - CAST(sum(((ou.o + t.tx) * 3 + (ov.o + t.ty) * 7 + t.i * 13)
-                      % 251) AS BIGINT) * ts.s_t AS num,
-         CAST(64 * sum((((ou.o + t.tx) * 3 + (ov.o + t.ty) * 7 + t.i * 13)
-                        % 251) * (((ou.o + t.tx) * 3 + (ov.o + t.ty) * 7
-                                   + t.i * 13) % 251)) AS BIGINT)
-           - CAST(sum(((ou.o + t.tx) * 3 + (ov.o + t.ty) * 7 + t.i * 13)
-                      % 251) AS BIGINT)
-             * CAST(sum(((ou.o + t.tx) * 3 + (ov.o + t.ty) * 7 + t.i * 13)
-                        % 251) AS BIGINT) AS den_w,
-         64 * ts.s_tt - ts.s_t * ts.s_t AS den_t
-  FROM tpx t JOIN tstats ts ON ts.i = t.i, offs ou, offs ov
-  GROUP BY t.i, ou.o, ov.o, ts.s_t, ts.s_tt
-), ok AS (
-  SELECT * FROM cand WHERE den_w > 0 AND den_t > 0
-), best AS (
-  SELECT c1.* FROM ok c1
-  WHERE NOT EXISTS (
-    SELECT 1 FROM ok c2
-    WHERE c2.i = c1.i AND NOT (c2.u = c1.u AND c2.v = c1.v)
-      AND (
-        (CASE WHEN c2.num > 0 THEN 1 WHEN c2.num < 0 THEN -1 ELSE 0 END)
-        > (CASE WHEN c1.num > 0 THEN 1 WHEN c1.num < 0 THEN -1 ELSE 0 END)
-        OR (
-          (CASE WHEN c2.num > 0 THEN 1 WHEN c2.num < 0 THEN -1 ELSE 0 END)
-          = (CASE WHEN c1.num > 0 THEN 1 WHEN c1.num < 0 THEN -1 ELSE 0 END)
-          AND (
-            CASE WHEN c2.num >= 0
-                 THEN CAST(c2.num AS HUGEINT) * c2.num * c1.den_w
-                      > CAST(c1.num AS HUGEINT) * c1.num * c2.den_w
-                 ELSE CAST(c2.num AS HUGEINT) * c2.num * c1.den_w
-                      < CAST(c1.num AS HUGEINT) * c1.num * c2.den_w END
-            OR (CAST(c2.num AS HUGEINT) * c2.num * c1.den_w
-                = CAST(c1.num AS HUGEINT) * c1.num * c2.den_w
-                AND (c2.v < c1.v OR (c2.v = c1.v AND c2.u < c1.u)))
-          )
-        )
-      )
-  )
-)
-SELECT i AS pair_id, CAST(u AS INTEGER) AS best_x, CAST(v AS INTEGER) AS best_y,
-       num, den_w, den_t,
-       round(CAST(num AS DOUBLE) / sqrt(CAST(den_w * den_t AS DOUBLE)), 6)
-         + 0.0 AS ncc
-FROM best
-"""
-
-
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X165 (sketch.hll_distinct): HyperLogLog distinct customers per
     order priority — fixed 256-register state per group (theta_distinct's
@@ -8217,83 +6780,6 @@ def _hll_distinct_sql() -> str:
         "o_custkey",
         p=8,
     )
-
-
-def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MUTUAL INFORMATION (multimodal.mutual_information): the
-    registration / cross-modal alignment metric over 120 image pairs
-    whose B side uses a DIFFERENT linear pixel field mod 97 — so the
-    joint 256x256 histogram is genuinely non-degenerate (neither a
-    bijection of A nor independent). All three entropy sums are emitted
-    micro-quantized int64 (image_entropy's scheme) and the oracle
-    rebuilds both pixel formulas inline and replays the identical float
-    assembly for ``mi``."""
-    from osm2geojson_spark.operators.multimodal import mutual_information
-
-    @pandas_udf("binary")
-    def enc_b(i: pd.Series) -> pd.Series:
-        from osm2geojson_spark.functions import imagecodec as IC
-
-        import numpy as np
-
-        out = []
-        for idx in i:
-            y, x = np.mgrid[0:16, 0:16]
-            px = ((x * 5 + y * 2 + int(idx) * 11) % 97).astype(np.uint8)
-            out.append(IC.encode_rawz(px))
-        return pd.Series(out)
-
-    k = F.col("p_partkey")
-    w16 = F.lit(16).cast("int")
-    pairs = (
-        _t(spark, sf_dir, "part")
-        .filter((k < 240) & (k % 2 == 0))
-        .select(
-            k.alias("pair_id"),
-            SYN._encode_image_fmt_udf(
-                k.cast("int"),
-                w16,
-                w16,
-                F.when(k % 7 == 0, F.lit("png")).otherwise(F.lit("rawz")),
-            ).alias("bytes_a"),
-            F.when(k % 7 == 0, F.lit("png")).otherwise(F.lit("rawz")).alias(
-                "fmt_a"
-            ),
-            enc_b(k).alias("bytes_b"),
-            F.lit("rawz").alias("fmt_b"),
-        )
-    )
-    return mutual_information(pairs)
-
-
-_MUTUAL_INFO_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i FROM part WHERE p_partkey < 240 AND p_partkey % 2 = 0
-), px AS (
-  SELECT i,
-         ((p % 16) * 3 + (p // 16) * 7 + i * 13) % 251 AS a,
-         ((p % 16) * 5 + (p // 16) * 2 + i * 11) % 97 AS b
-  FROM (SELECT i, unnest(range(0, 256)) AS p FROM img)
-), ha AS (
-  SELECT i, CAST(sum(CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))
-                                * 1e6) AS BIGINT)) AS BIGINT) AS sa_q
-  FROM (SELECT i, a, count(*) AS c FROM px GROUP BY i, a) GROUP BY i
-), hb AS (
-  SELECT i, CAST(sum(CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))
-                                * 1e6) AS BIGINT)) AS BIGINT) AS sb_q
-  FROM (SELECT i, b, count(*) AS c FROM px GROUP BY i, b) GROUP BY i
-), hab AS (
-  SELECT i, CAST(count(*) AS BIGINT) AS n_joint,
-         CAST(sum(CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))
-                             * 1e6) AS BIGINT)) AS BIGINT) AS sab_q
-  FROM (SELECT i, a, b, count(*) AS c FROM px GROUP BY i, a, b) GROUP BY i
-)
-SELECT ha.i AS pair_id, CAST(256 AS BIGINT) AS n_px, hab.n_joint,
-       ha.sa_q, hb.sb_q, hab.sab_q,
-       round(ln(256.0) + ((hab.sab_q - ha.sa_q - hb.sb_q) / 1e6) / 256,
-             6) + 0.0 AS mi
-FROM ha JOIN hb ON ha.i = hb.i JOIN hab ON ha.i = hab.i
-"""
 
 
 def q_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8391,56 +6877,6 @@ SELECT flow.x, flow.y, CAST(flow.z AS BIGINT) AS z,
        CAST(flow.dir AS INTEGER) AS dir, flow.down_x, flow.down_y,
        COALESCE(indeg.indeg, 0) AS indeg
 FROM flow LEFT JOIN indeg ON indeg.x = flow.x AND indeg.y = flow.y
-"""
-
-
-def q_harris(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X157 (multimodal.harris_corners): integer-exact Harris corner
-    response (k = 1/16, R = 16*det - trace^2) over 300 mixed rawz/png
-    8x8 images — central-difference gradients, 3x3 structure-tensor
-    sums, argmax with min(y*w+x) tie-break. The oracle recomputes every
-    gradient neighborhood inline from the deterministic pixel formula
-    in pure integer SQL."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.harris_corners(_synth_images(spark, sf_dir, 900, step=3))
-
-
-_HARRIS_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i FROM part WHERE p_partkey < 900 AND p_partkey % 3 = 0
-), ctr AS (
-  SELECT i, (p % 4) + 2 AS x, (p // 4) + 2 AS y
-  FROM (SELECT i, unnest(range(0, 16)) AS p FROM img) q
-), gsum AS (
-  SELECT i, x, y,
-         sum(gx * gx) AS sxx, sum(gy * gy) AS syy, sum(gx * gy) AS sxy
-  FROM (
-    SELECT i, x, y,
-           (((x + dd % 3) * 3 + (y + dd // 3 - 1) * 7 + i * 13) % 251
-            - ((x + dd % 3 - 2) * 3 + (y + dd // 3 - 1) * 7 + i * 13) % 251)
-             AS gx,
-           (((x + dd % 3 - 1) * 3 + (y + dd // 3) * 7 + i * 13) % 251
-            - ((x + dd % 3 - 1) * 3 + (y + dd // 3 - 2) * 7 + i * 13) % 251)
-             AS gy
-    FROM (SELECT i, x, y, unnest(range(0, 9)) AS dd FROM ctr) q
-  ) g GROUP BY i, x, y
-), resp AS (
-  SELECT i, x, y,
-         16 * (sxx * syy - sxy * sxy) - (sxx + syy) * (sxx + syy) AS r
-  FROM gsum
-), agg AS (
-  SELECT i, CAST(count(*) FILTER (WHERE r > 0) AS BIGINT) AS n_pos,
-         CAST(sum(r) AS BIGINT) AS r_sum, CAST(max(r) AS BIGINT) AS r_max
-  FROM resp GROUP BY i
-), arg AS (
-  SELECT resp.i, min(y * 8 + x) AS pos
-  FROM resp JOIN agg ON agg.i = resp.i AND resp.r = agg.r_max
-  GROUP BY resp.i
-)
-SELECT printf('img%012d', agg.i) AS image_id, n_pos, r_sum, r_max,
-       CAST(pos % 8 AS INTEGER) AS x_max, CAST(pos // 8 AS INTEGER) AS y_max
-FROM agg JOIN arg ON arg.i = agg.i
 """
 
 
@@ -8639,44 +7075,6 @@ FROM edge, dn
 """
 
 
-def q_integral_image(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X151 (multimodal.integral_box_sums): summed-area-table box
-    queries — 7 rects (quadrants, center crop, full frame, one
-    edge-clipped) over 300 mixed rawz/png 8x8 images, each answered in
-    O(1) from 4 SAT corners. The oracle sums the deterministic pixel
-    formula over each rect directly, so any corner-arithmetic or
-    clipping bug in the SAT breaks the hash."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.integral_box_sums(
-        _synth_images(spark, sf_dir, 900, step=3), _INTEGRAL_BOXES
-    )
-
-
-def _integral_image_sql() -> str:
-    parts = []
-    for bid, (x0, y0, x1, y1) in enumerate(_INTEGRAL_BOXES):
-        parts.append(
-            f"SELECT {bid} AS box_id, {x0} AS x0, {y0} AS y0,"
-            f" {x1} AS x1, {y1} AS y1"
-        )
-    boxes = " UNION ALL ".join(parts)
-    return f"""
-WITH img AS (
-  SELECT p_partkey AS i FROM part WHERE p_partkey < 900 AND p_partkey % 3 = 0
-), px AS (
-  SELECT i, (p % 8) AS x, (p // 8) AS y,
-         ((p % 8) * 3 + (p // 8) * 7 + i * 13) % 251 AS v
-  FROM (SELECT i, unnest(range(0, 64)) AS p FROM img) q
-), boxes AS ({boxes})
-SELECT printf('img%012d', i) AS image_id, CAST(box_id AS INTEGER) AS box_id,
-       CAST(sum(v) AS BIGINT) AS box_sum
-FROM px JOIN boxes
-  ON x >= x0 AND x <= least(x1, 7) AND y >= y0 AND y <= least(y1, 7)
-GROUP BY i, box_id
-"""
-
-
 def q_rle_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X150 (multimodal.rle_mask): COCO-style run-length encoding of the
     binary mask (pixel >= 128) of 300 mixed rawz/png 8x8 images, one row
@@ -8703,29 +7101,6 @@ SELECT printf('img%012d', i) AS image_id,
        CAST(min(p) AS BIGINT) AS start_pos,
        CAST(count(*) AS BIGINT) AS run_len
 FROM m GROUP BY i, grp
-"""
-
-
-_MORPHOLOGY_SQL = """
-WITH img AS (
-  SELECT p_partkey AS i FROM part WHERE p_partkey < 900 AND p_partkey % 3 = 0
-), ctr AS (
-  SELECT i, (p % 6) + 1 AS x, (p // 6) + 1 AS y
-  FROM (SELECT i, unnest(range(0, 36)) AS p FROM img) q
-), nb AS (
-  SELECT i, x, y,
-         ((x + (dd % 3) - 1) * 3 + (y + (dd // 3) - 1) * 7 + i * 13) % 251
-           AS v
-  FROM (SELECT i, x, y, unnest(range(0, 9)) AS dd FROM ctr) q
-), mm AS (
-  SELECT i, x, y, min(v) AS e, max(v) AS d FROM nb GROUP BY i, x, y
-)
-SELECT printf('img%012d', i) AS image_id, 6 AS w, 6 AS h,
-       CAST(sum(e) AS BIGINT) AS erode_sum,
-       CAST(sum(d) AS BIGINT) AS dilate_sum,
-       CAST(sum(d - e) AS BIGINT) AS grad_sum,
-       CAST(max(d - e) AS BIGINT) AS grad_max
-FROM mm GROUP BY i
 """
 
 
@@ -8807,63 +7182,6 @@ def _l_diversity_sql() -> str:
         k_min=5,
         l_min=2,
     )
-
-
-def q_shot_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X255 (multimodal.shot_detect): histogram-differencing shot cuts
-    over 30 synthetic 12-frame clips (8x8 rawz frames with slow
-    per-frame drift and a planted scene change at frame 4 + clip % 5)
-    — the cut must fire exactly at the planted boundary."""
-    from osm2geojson_spark.functions import imagecodec as IC
-    from osm2geojson_spark.operators.multimodal import shot_detect
-
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 30).select(
-        F.col("p_partkey").alias("_c")
-    )
-
-    def gen(it):
-        import numpy as np
-
-        for pdf in it:
-            rows = []
-            for c in pdf["_c"]:
-                c = int(c)
-                cut = 4 + c % 5
-                for f in range(12):
-                    seg = 1 if f >= cut else 0
-                    x = np.arange(8)
-                    px = (
-                        (x[None, :] * 3 + x[:, None] * 7 + c * 13 + f
-                         + seg * 31) % 251
-                    ).astype(np.uint8)
-                    rows.append(
-                        (f"clip{c:06d}", f, "rawz", IC.encode_rawz(px))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "frame_idx", "fmt", "bytes"]
-            )
-
-    frames = part.mapInPandas(
-        gen,
-        schema="clip_id string, frame_idx long, fmt string, bytes binary",
-    )
-    return shot_detect(frames, thresh=40)
-
-
-def _shot_detect_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import shot_detect_sql
-
-    px = """
-SELECT printf('clip%06d', c) AS clip_id, f AS frame_idx,
-       ((p % 8) * 3 + (p // 8) * 7 + c * 13 + f
-        + (CASE WHEN f >= 4 + c % 5 THEN 31 ELSE 0 END)) % 251 AS v
-FROM (
-  SELECT p_partkey AS c, ff.f, pp.p
-  FROM part, unnest(range(0, 12)) ff(f), unnest(range(0, 64)) pp(p)
-  WHERE p_partkey < 30
-)
-"""
-    return shot_detect_sql(px, thresh=40)
 
 
 def q_str_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9066,77 +7384,6 @@ FROM (
     )
 
 
-def q_gray_world(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X241 (multimodal.gray_world_stats): gray-world white balance
-    census over 30 synthetic 16x16 RGB pixel tables (the color_quantize
-    fixture) — integer channel-mean rescale with clamp accounting; one
-    window sum + one rollup, no join."""
-    from osm2geojson_spark.operators.multimodal import gray_world_stats
-
-    k = F.col("p_partkey")
-    imgs = _t(spark, sf_dir, "part").filter(k < 30).select(
-        F.format_string("img%012d", k).alias("image_id"),
-        k.alias("_i"),
-    )
-    px = imgs.select(
-        "image_id",
-        "_i",
-        F.explode(F.sequence(F.lit(0), F.lit(255))).alias("p"),
-    ).select(
-        "image_id",
-        (((F.col("p") % 16) * 3 + (F.col("p") / 16).cast("long") * 7
-          + F.col("_i") * 13) % 251).alias("r"),
-        (((F.col("p") % 16) * 5 + (F.col("p") / 16).cast("long") * 11
-          + F.col("_i") * 17) % 241).alias("g"),
-        (((F.col("p") % 16) * 7 + (F.col("p") / 16).cast("long") * 3
-          + F.col("_i") * 19) % 239).alias("b"),
-    )
-    return gray_world_stats(px)
-
-
-def _gray_world_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import gray_world_stats_sql
-
-    px = """
-SELECT printf('img%012d', i) AS image_id,
-       ((p % 16) * 3 + (p // 16) * 7 + i * 13) % 251 AS r,
-       ((p % 16) * 5 + (p // 16) * 11 + i * 17) % 241 AS g,
-       ((p % 16) * 7 + (p // 16) * 3 + i * 19) % 239 AS b
-FROM (
-  SELECT p_partkey AS i, unnest(range(0, 256)) AS p
-  FROM part WHERE p_partkey < 30
-)
-"""
-    return gray_world_stats_sql(px)
-
-
-def q_dog_keypoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X234 (multimodal.dog_keypoints): single-octave
-    difference-of-Gaussians blob detection (the SIFT front end) over
-    300 mixed rawz/png images — zero-sum combined 5x5 integer kernel,
-    strict 8-neighbor |D| maxima, threshold 400. Sparse keypoint rows
-    out; pixels never shuffle."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.dog_keypoints(_synth_images(spark, sf_dir, 900, step=3))
-
-
-def _dog_keypoints_sql() -> str:
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    px = """
-SELECT printf('img%012d', i) AS image_id, w, w AS h,
-       (p % w) AS x, (p // w) AS y,
-       ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v
-FROM (
-  SELECT i, w, unnest(range(0, w * w)) AS p
-  FROM (SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-        FROM part WHERE p_partkey < 900 AND p_partkey % 3 = 0)
-)
-"""
-    return MM2.dog_keypoints_sql(px, thresh=400)
-
-
 def q_alpha_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X231 (geometry.alpha_shape_edges): alpha-shape boundary edges of
     the four Delaunay tile groups (same fixture as q_delaunay) at
@@ -9212,64 +7459,6 @@ def _cell_buffer_sql() -> str:
         res=6,
         k=2,
     )
-
-
-def q_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X279 (multimodal.keyframe_select): per-shot keyframe selection
-    over the planted-cut clip corpus (the q_shot_detect fixture) —
-    shots from histogram-diff cuts, winner = exact integer L1 gradient
-    sharpness pinned by (sharp DESC, frame ASC)."""
-    from osm2geojson_spark.functions import imagecodec as IC
-    from osm2geojson_spark.operators.multimodal import keyframe_select
-
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 30).select(
-        F.col("p_partkey").alias("_c")
-    )
-
-    def gen(it):
-        import numpy as np
-
-        for pdf in it:
-            rows = []
-            for c in pdf["_c"]:
-                c = int(c)
-                cut = 4 + c % 5
-                for f in range(12):
-                    seg = 1 if f >= cut else 0
-                    x = np.arange(8)
-                    px = (
-                        (x[None, :] * 3 + x[:, None] * 7 + c * 13 + f
-                         + seg * 31) % 251
-                    ).astype(np.uint8)
-                    rows.append(
-                        (f"clip{c:06d}", f, "rawz", IC.encode_rawz(px))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "frame_idx", "fmt", "bytes"]
-            )
-
-    frames = part.mapInPandas(
-        gen,
-        schema="clip_id string, frame_idx long, fmt string, bytes binary",
-    )
-    return keyframe_select(frames, thresh=40)
-
-
-def _keyframes_sql() -> str:
-    from osm2geojson_spark.operators.multimodal import keyframe_select_sql
-
-    px = """
-SELECT printf('clip%06d', c) AS clip_id, f AS frame_idx,
-       (p // 8) AS y, (p % 8) AS x,
-       ((p % 8) * 3 + (p // 8) * 7 + c * 13 + f
-        + (CASE WHEN f >= 4 + c % 5 THEN 31 ELSE 0 END)) % 251 AS v
-FROM (
-  SELECT p_partkey AS c, ff.f, pp.p
-  FROM part, unnest(range(0, 12)) ff(f), unnest(range(0, 64)) pp(p)
-  WHERE p_partkey < 30
-)
-"""
-    return keyframe_select_sql(px, thresh=40)
 
 
 def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9520,49 +7709,6 @@ def _median_center_sql() -> str:
     return median_center_sql(pts, rounds=4)
 
 
-_UNSHARP_PX = """
-SELECT printf('img%012d', i) AS image_id, w, w AS h,
-       (p % w) AS x, (p // w) AS y,
-       ((p % w) * 3 + (p // w) * 7 + i * 13) % 251 AS v
-FROM (
-  SELECT i, w, unnest(range(0, w * w)) AS p
-  FROM (SELECT p_partkey AS i, 8 * (1 + p_partkey % 3) AS w
-        FROM part WHERE p_partkey < 300)
-)
-"""
-
-
-def q_unsharp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X296 (multimodal.unsharp_stats): amount-1 unsharp masking over
-    300 mixed rawz/png images — clamp((512v − conv5x5) >> 8), integer
-    halo/clip census; floor-exact on negatives in both engines."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.unsharp_stats(_synth_images(spark, sf_dir, 300))
-
-
-def _unsharp_sql() -> str:
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.unsharp_stats_sql(_UNSHARP_PX)
-
-
-def q_bilateral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X297 (multimodal.bilateral_stats): edge-preserving bilateral
-    filter over 300 mixed rawz/png images — 3x3 binomial spatial ×
-    precomputed integer range LUT, Σ(w·v) DIV Σw; both engines share
-    the LUT constants so no transcendental runs anywhere."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.bilateral_stats(_synth_images(spark, sf_dir, 300))
-
-
-def _bilateral_sql() -> str:
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.bilateral_stats_sql(_UNSHARP_PX)
-
-
 def q_phonetic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X298 (dedup.phonetic_blocks): Soundex blocking over every word of
     part names and document texts — same-sounding spellings grouped as
@@ -9650,21 +7796,6 @@ def _lcs_similarity_sql() -> str:
         " string_split(p_name, ' ')[1] AS w FROM part"
     )
     return lcs_block_similarity_sql(rows)
-
-
-def q_undistort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X308 (multimodal.undistort_stats): barrel lens undistortion over
-    300 mixed rawz/png images — integer radial model, floor-pinned NN
-    inverse mapping, out-of-bounds census."""
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.undistort_stats(_synth_images(spark, sf_dir, 300))
-
-
-def _undistort_sql() -> str:
-    from osm2geojson_spark.operators import multimodal as MM2
-
-    return MM2.undistort_stats_sql(_UNSHARP_PX)
 
 
 def q_quadrat(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9906,8 +8037,8 @@ def _fuzzy2_join_sql() -> str:
 # joins, multimodal).  The base dict
 # below keeps its historical newest-first order; this list is promoted to the
 # front at call time so CORRECTNESS_r05 clears verification backlog.  Since the
-# graph, text-analysis, retrieval and trajectory deletions it names 38 queries;
-# the window's last 12 slots take the first 12 base names.
+# graph, text-analysis, retrieval, trajectory and image-filter deletions it
+# names 37 queries; the window's last 13 slots take the first 13 base names.
 _PROMOTE_R5 = [
     "interval_join", "asof_join",
     "spatial_window", "domain_cap", "pack_sequences", "doc_chunking",
@@ -9919,7 +8050,6 @@ _PROMOTE_R5 = [
     "vectorize_stitched", "dedup_semantic", "rasterize", "box_iou",
     "map_match", "semivariogram", "idw", "kde", "st_join",
     "patch_extract", "adaptive_bins", "bbox_join",
-    "hist_equalize",
 ]
 
 
@@ -9941,12 +8071,9 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cube_metrics": q_cube_metrics,
         "stable_matching": q_stable_matching,
         "quadrat": q_quadrat,
-        "undistort": q_undistort,
         "lcs_similarity": q_lcs_similarity,
         "huff_model": q_huff_model,
         "phonetic_dedup": q_phonetic_dedup,
-        "bilateral": q_bilateral,
-        "unsharp": q_unsharp,
         "median_center": q_median_center,
         "knox": q_knox,
         "psnr_gate": q_psnr_gate,
@@ -9955,63 +8082,37 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "containment": q_containment,
         "tfidf_cosine": q_tfidf_cosine,
         "boilerplate": q_boilerplate,
-        "keyframes": q_keyframes,
         "cell_buffer": q_cell_buffer,
         "f2_sketch": q_f2_sketch,
         "canonical_pick": q_canonical_pick,
         "l_diversity": q_l_diversity,
-        "shot_detect": q_shot_detect,
         "str_partition": q_str_partition,
         "hilbert_ranges": q_hilbert_ranges,
         "k_centers": q_k_centers,
         "focal_majority": q_focal_majority,
         "flow_accum": q_flow_accum,
         "ring_validity": q_ring_validity,
-        "gray_world": q_gray_world,
-        "dog_keypoints": q_dog_keypoints,
         "alpha_shape": q_alpha_shape,
         "winnow": q_winnow,
-        "color_quantize": q_color_quantize,
         "anchor_assign": q_anchor_assign,
-        "demosaic": q_demosaic,
         "stream_topk": q_stream_topk,
         "iou_track": q_iou_track,
-        "haar_energy": q_haar,
         "coverage_select": q_coverage_select,
-        "brief_match": q_brief_match,
         "delaunay": q_delaunay,
-        "dither": q_dither,
         "mask_iou": q_mask_iou,
-        "fast_corners": q_fast_corners,
-        "lbp": q_lbp,
         "join_counts": q_join_counts,
         "scan_stat": q_scan_stat,
         "sd_ellipse": q_sd_ellipse,
-        "hough": q_hough,
-        "gaussian_blur": q_gaussian_blur,
         "min_bbox": q_min_bbox,
         "decluster": q_decluster,
-        "canny_nms": q_canny,
-        "ssim": q_ssim,
-        "morph_openclose": q_morph_openclose,
-        "motion_field": q_motion_field,
-        "template_match": q_template_match,
         "hll_distinct": q_hll_distinct,
-        "mutual_info": q_mutual_information,
         "watershed": q_watershed,
         "flow_dir": q_flow_dir,
-        "harris": q_harris,
         "segment_intersect": q_segment_intersect,
         "viewshed": q_viewshed,
         "geary_c": q_geary_c,
-        "integral_image": q_integral_image,
         "rle_mask": q_rle_mask,
-        "morphology": q_morphology,
-        "hist_match": q_hist_match,
-        "min_seam": q_min_seam,
         "token_budget": q_token_budget,
-        "block_motion": q_block_motion,
-        "image_entropy": q_image_entropy,
         "polylabel": q_polylabel,
         "centroid": q_centroid,
         "dct_phash": q_dct_phash,
@@ -10032,32 +8133,23 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cms_join_card": q_cms_join_card,
         "fuzzy_join": q_fuzzy_join,
         "bloom_semijoin": q_bloom_semijoin,
-        "warp_affine": q_warp_affine,
         "geodesic_area": q_geodesic_area,
-        "distance_transform": q_distance_transform,
-        "hog": q_hog,
         "cms_topk": q_cms_topk,
         "pps_sample": q_pps_sample,
-        "median_filter": q_median_filter,
         "theta_distinct": q_theta_distinct,
         "st_dbscan": q_st_dbscan,
-        "glcm": q_glcm,
         "hexbin": q_hexbin,
         "chaikin": q_chaikin,
-        "otsu": q_otsu,
-        "image_moments": q_image_moments,
         "ripleys_k": q_ripleys_k,
         "clark_evans": q_clark_evans,
         "kanon_cells": q_kanon_cells,
         "decayed_heatmap": q_decayed_heatmap,
         "voronoi": q_voronoi,
         "quadkey_layout": q_quadkey_layout,
-        "sobel_edges": q_sobel_edges,
         "emerging_hotspots": q_emerging_hotspots,
         "lof": q_lof,
         "spatial_outliers": q_spatial_outliers,
         "reverse_geocode": q_reverse_geocode,
-        "hist_equalize": q_hist_equalize,
         "bbox_join": q_bbox_join,
         "adaptive_bins": q_adaptive_bins,
         "patch_extract": q_patch_extract,
@@ -10175,12 +8267,9 @@ def oracle_sql() -> dict[str, str]:
         "cube_metrics": _CUBE_SQL,
         "stable_matching": _stable_matching_sql(),
         "quadrat": _quadrat_sql(),
-        "undistort": _undistort_sql(),
         "lcs_similarity": _lcs_similarity_sql(),
         "huff_model": _huff_model_sql(),
         "phonetic_dedup": _phonetic_dedup_sql(),
-        "bilateral": _bilateral_sql(),
-        "unsharp": _unsharp_sql(),
         "median_center": _median_center_sql(),
         "knox": _knox_sql(),
         "psnr_gate": _psnr_gate_sql(),
@@ -10189,63 +8278,37 @@ def oracle_sql() -> dict[str, str]:
         "containment": _containment_sql(),
         "tfidf_cosine": _tfidf_cosine_sql(),
         "boilerplate": _boilerplate_sql(),
-        "keyframes": _keyframes_sql(),
         "cell_buffer": _cell_buffer_sql(),
         "f2_sketch": _f2_sketch_sql(),
         "canonical_pick": _canonical_pick_sql(),
         "l_diversity": _l_diversity_sql(),
-        "shot_detect": _shot_detect_sql(),
         "str_partition": _str_partition_sql(),
         "hilbert_ranges": _hilbert_ranges_sql(),
         "k_centers": _k_centers_sql(),
         "focal_majority": _focal_majority_sql(),
         "flow_accum": _flow_accum_sql(),
         "ring_validity": _ring_validity_sql(),
-        "gray_world": _gray_world_sql(),
-        "dog_keypoints": _dog_keypoints_sql(),
         "alpha_shape": _alpha_shape_sql(),
         "winnow": _winnow_sql(),
-        "color_quantize": _color_quantize_sql(),
         "anchor_assign": _anchor_assign_sql(),
-        "demosaic": _demosaic_sql(),
         "stream_topk": _stream_topk_sql(),
         "iou_track": _iou_track_sql(),
-        "haar_energy": _haar_sql(),
         "coverage_select": _coverage_select_sql(),
-        "brief_match": _brief_match_sql(),
         "delaunay": _delaunay_sql(),
-        "dither": _dither_sql(),
         "mask_iou": _mask_iou_sql(),
-        "fast_corners": _fast_corners_sql(),
-        "lbp": _lbp_sql(),
         "join_counts": _join_counts_sql(),
         "scan_stat": _scan_stat_sql(),
         "sd_ellipse": _sd_ellipse_sql(),
-        "hough": _hough_sql(),
-        "gaussian_blur": _gaussian_blur_sql(),
         "min_bbox": _min_bbox_sql(),
         "decluster": _decluster_sql(),
-        "canny_nms": _canny_sql(),
-        "ssim": _SSIM_SQL,
-        "morph_openclose": _MORPH_OPENCLOSE_SQL,
-        "motion_field": _MOTION_FIELD_SQL,
-        "template_match": _TEMPLATE_MATCH_SQL,
         "hll_distinct": _hll_distinct_sql(),
-        "mutual_info": _MUTUAL_INFO_SQL,
         "watershed": _WATERSHED_SQL,
         "flow_dir": _FLOW_DIR_SQL,
-        "harris": _HARRIS_SQL,
         "segment_intersect": _SEGMENT_INTERSECT_SQL,
         "viewshed": _VIEWSHED_SQL,
         "geary_c": _geary_c_sql(),
-        "integral_image": _integral_image_sql(),
         "rle_mask": _RLE_MASK_SQL,
-        "morphology": _MORPHOLOGY_SQL,
-        "hist_match": _HIST_MATCH_SQL,
-        "min_seam": _MIN_SEAM_SQL,
         "token_budget": _TOKEN_BUDGET_SQL,
-        "block_motion": _BLOCK_MOTION_SQL,
-        "image_entropy": _IMAGE_ENTROPY_SQL,
         "polylabel": _POLYLABEL_SQL,
         "centroid": _CENTROID_SQL,
         "dct_phash": _dct_phash_sql(),
@@ -10266,26 +8329,18 @@ def oracle_sql() -> dict[str, str]:
         "cms_join_card": _cms_join_card_sql(),
         "fuzzy_join": _fuzzy_join_sql(),
         "bloom_semijoin": _bloom_semijoin_sql(),
-        "warp_affine": _warp_affine_sql(),
         "geodesic_area": _geodesic_area_sql(),
-        "distance_transform": _DISTANCE_TRANSFORM_SQL,
-        "hog": _hog_sql(),
         "cms_topk": _cms_topk_sql(),
         "pps_sample": _pps_sample_sql(),
-        "median_filter": _MEDIAN_FILTER_SQL,
         "theta_distinct": _theta_distinct_sql(),
         "st_dbscan": _st_dbscan_sql(),
-        "glcm": _glcm_sql(),
         "hexbin": _hexbin_sql(),
         "chaikin": _CHAIKIN_SQL,
-        "otsu": _otsu_sql(),
-        "image_moments": _image_moments_sql(),
         "ripleys_k": _ripleys_k_sql(),
         "clark_evans": _clark_evans_sql(),
         "lof": _lof_sql(),
         "spatial_outliers": _spatial_outliers_sql(),
         "reverse_geocode": _reverse_geocode_sql(),
-        "hist_equalize": _HIST_EQUALIZE_SQL,
         "bbox_join": _bbox_join_sql(),
         "adaptive_bins": _adaptive_bins_sql(),
         "patch_extract": _PATCH_EXTRACT_SQL,
@@ -10326,7 +8381,6 @@ def oracle_sql() -> dict[str, str]:
         "morans_i": _morans_i_sql(),
         "hotspots": _hotspots_sql(),
         "emerging_hotspots": _emerging_hotspots_sql(),
-        "sobel_edges": _sobel_edges_sql(),
         "voronoi": _voronoi_sql(),
         "decayed_heatmap": _decayed_heatmap_sql(),
         "kanon_cells": _kanon_cells_sql(),

@@ -73,29 +73,17 @@ BENCH_QUERIES = [
     "dct_phash",
     "centroid",
     "polylabel",
-    "image_entropy",
-    "block_motion",
     "token_budget",
-    "min_seam",
-    "hist_match",
-    "morphology",
     "rle_mask",
-    "integral_image",
     "hilbert_layout",
     "geohash_layout",
     "morans_i",
     "geary_c",
     "viewshed",
     "segment_intersect",
-    "harris",
     "flow_dir",
     "watershed",
-    "mutual_info",
     "hll_distinct",
-    "template_match",
-    "motion_field",
-    "morph_openclose",
-    "ssim",
     "hotspots",
     "focal_stats",
     "lisa",
@@ -137,33 +125,24 @@ BENCH_QUERIES = [
     "patch_extract",
     "adaptive_bins",
     "bbox_join",
-    "hist_equalize",
     "reverse_geocode",
     "spatial_outliers",
     "lof",
     "emerging_hotspots",
-    "sobel_edges",
     "voronoi",
     "quadkey_layout",
     "decayed_heatmap",
     "kanon_cells",
     "ripleys_k",
     "clark_evans",
-    "otsu",
-    "image_moments",
     "chaikin",
     "hexbin",
-    "glcm",
     "st_dbscan",
     "theta_distinct",
-    "median_filter",
     "cms_topk",
     "pps_sample",
-    "distance_transform",
-    "hog",
     "geodesic_area",
     "bloom_semijoin",
-    "warp_affine",
     "cms_join_card",
     "fuzzy_join",
     "gram_matrix",
@@ -172,42 +151,28 @@ BENCH_QUERIES = [
     "cusum_stream",
     "resize_bilinear",
     "sd_ellipse",
-    "hough",
-    "gaussian_blur",
     "min_bbox",
     "decluster",
-    "canny_nms",
     "scan_stat",
     "join_counts",
-    "lbp",
-    "fast_corners",
     "mask_iou",
-    "dither",
     "delaunay",
-    "brief_match",
     "coverage_select",
-    "haar_energy",
     "iou_track",
     "stream_topk",
-    "demosaic",
     "anchor_assign",
-    "color_quantize",
     "winnow",
     "alpha_shape",
-    "dog_keypoints",
-    "gray_world",
     "ring_validity",
     "flow_accum",
     "focal_majority",
     "k_centers",
     "hilbert_ranges",
     "str_partition",
-    "shot_detect",
     "l_diversity",
     "canonical_pick",
     "f2_sketch",
     "cell_buffer",
-    "keyframes",
     "boilerplate",
     "tfidf_cosine",
     "containment",
@@ -216,12 +181,9 @@ BENCH_QUERIES = [
     "psnr_gate",
     "knox",
     "median_center",
-    "unsharp",
-    "bilateral",
     "phonetic_dedup",
     "huff_model",
     "lcs_similarity",
-    "undistort",
     "quadrat",
     "stable_matching",
     "cube_metrics",

@@ -151,11 +151,17 @@ def _bounds(d: dict | None):
 
 def _element_id(el: dict, t: str, doc_id: str, seq: int):
     """A node, way or relation is keyed by its id in every join downstream,
-    so one without an id fails here, named by its type and position."""
+    so one without an id, or whose id is not a 64-bit integer, fails here,
+    named by its type and position."""
     eid = el.get("id")
     if eid is None:
         raise ConversionError(
             f"Element without an id: {t} at seq {seq} of document {doc_id!r}"
+        )
+    if type(eid) is not int or not -(1 << 63) <= eid < 1 << 63:
+        raise ConversionError(
+            f"Element id {eid!r} is not a 64-bit integer: {t} at seq {seq}"
+            f" of document {doc_id!r}"
         )
     return eid
 

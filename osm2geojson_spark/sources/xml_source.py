@@ -144,9 +144,19 @@ def _parse_count(el: ElementTree.Element) -> dict:
     return item
 
 
+_ELEMENT_PARSERS = {
+    "node": _parse_node,
+    "way": _parse_way,
+    "relation": _parse_relation,
+    "count": _parse_count,
+}
+
+
 def parse(xml_str: str) -> dict:
     """OSM XML string -> Overpass JSON document dict. A root element other
-    than <osm> raises ``ConversionError`` naming it."""
+    than <osm> raises ``ConversionError`` naming it; so does an element with
+    a number that does not parse (an id of ``"x"``), naming its tag and its
+    position ``seq`` in the element list."""
     root = ElementTree.fromstring(xml_str)
     if root.tag != "osm":
         raise ConversionError(f"Not an OSM XML document: root element <{root.tag}>, expected <osm>")
@@ -160,14 +170,14 @@ def parse(xml_str: str) -> dict:
     timestamp_osm_base = None
 
     for child in root:
-        if child.tag == "node":
-            elements.append(_parse_node(child))
-        elif child.tag == "way":
-            elements.append(_parse_way(child))
-        elif child.tag == "relation":
-            elements.append(_parse_relation(child))
-        elif child.tag == "count":
-            elements.append(_parse_count(child))
+        parser = _ELEMENT_PARSERS.get(child.tag)
+        if parser is not None:
+            try:
+                elements.append(parser(child))
+            except ValueError as exc:
+                raise ConversionError(
+                    f"Malformed <{child.tag}> at seq {len(elements)}: {exc}"
+                ) from exc
         elif child.tag == "meta" and "osm_base" in child.attrib:
             timestamp_osm_base = child.attrib["osm_base"]
         elif child.tag == "note":

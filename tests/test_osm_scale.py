@@ -9,9 +9,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from osm2geojson_spark import ConversionError
 from osm2geojson_spark.functions import geom as GEO
 from osm2geojson_spark.functions import kernels as K
 from osm2geojson_spark.plans.pipeline import build_features, feature_json_lines
+from osm2geojson_spark.sources import xml_source
 from osm2geojson_spark.sources.normalize import normalize_elements
 from osm2geojson_spark.sources.synthetic import synthetic_osm_frames
 
@@ -183,15 +185,19 @@ def test_normalized_frames_are_local_relations(spark):
 
 
 def test_normalize_rejects_bad_input_naming_the_field(spark):
-    """A null id and a string id fail on the driver with a named field."""
+    """A null id and an id that is not a 64-bit integer fail on the driver,
+    naming the field, the element's type and its seq; in XML, a number that
+    does not parse names the tag and its seq."""
     with pytest.raises(ValueError, match=r"\bid\b"):
         normalize_elements(
             spark, [{"type": "node", "id": None, "lon": 1.0, "lat": 2.0}]
         )
-    with pytest.raises((TypeError, ValueError)):
-        normalize_elements(
-            spark, [{"type": "node", "id": "x", "lon": 1.0, "lat": 2.0}]
-        )
+    ok = {"type": "node", "id": 1, "lon": 1.0, "lat": 2.0}
+    for t, eid in (("node", "x"), ("way", True), ("relation", 1 << 63), ("way", 2.0)):
+        with pytest.raises(ConversionError, match=rf"\bid\b.*: {t} at seq 1 of"):
+            normalize_elements(spark, [ok, {"type": t, "id": eid}])
+    with pytest.raises(ConversionError, match=r"<node> at seq 1: .*'x'"):
+        xml_source.parse('<osm><node id="1" lat="0" lon="0"/><node id="x" lat="0" lon="0"/></osm>')
 
 
 _NAN = float("nan")
@@ -254,7 +260,7 @@ def test_point_edge_values_pack_and_serialize_as_struct_pack(spark):
     assert sorted((r["id"], r["reason"]) for r in failures.collect()) == [
         (2000, "no_lon"), (2001, "no_lon"), (2002, "no_lon"), (2010, "no_lon")
     ]
-    from osm2geojson_spark import ConversionError, json2geojson
+    from osm2geojson_spark import json2geojson
 
     valid = {"type": "node", "id": 9, "lon": 3.0, "lat": 4.0}
     for el in elements[1:3]:
@@ -266,7 +272,7 @@ def test_node_without_lon_fails_by_name(spark):
     """A node whose lon is null or NaN has no point: it is no Feature, it
     is a ``no_lon`` failure, and strict mode raises with that reason. The
     valid node next to it still converts."""
-    from osm2geojson_spark import ConversionError, json2geojson
+    from osm2geojson_spark import json2geojson
 
     data = {"elements": [
         {"type": "node", "id": 1, "lon": None, "lat": 1.0},

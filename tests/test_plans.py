@@ -195,6 +195,20 @@ def test_registry_oracles_and_bench_list_agree():
     assert set(bench.BENCH_QUERIES) <= names
 
 
+def test_oracle_ledger_names_exactly_the_registry():
+    """The oracle ledger (``CORRECTNESS_LOCAL.json``, rewritten by
+    ``tools/check_oracles.py``) has one entry per registered query and no
+    entry for a deleted one, and its summary counts the registry."""
+    import json
+
+    ledger = json.loads(
+        (pathlib.Path(__file__).resolve().parent.parent / "CORRECTNESS_LOCAL.json").read_text()
+    )
+    summary = ledger.pop("_summary")
+    assert set(ledger) == set(E.queries())
+    assert summary["registry_size"] == len(E.queries())
+
+
 # Top-level names that only a caller outside the repo names: the job runner
 # calls the driver contract's ``entry(spark)`` by name.
 _EXTERNAL_NAMES = {("__spark_entry__.py", "entry")}
